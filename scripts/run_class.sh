@@ -1,6 +1,8 @@
 #!/bin/bash
-# Dev-only: run a compiled graft class directly (faster than sbt runMain).
-# Usage: scripts/run_class.sh graft.Verify /root/testdata/sf0.001 /tmp/verify_out
+# Run a compiled graft class directly (faster than sbt runMain):
+#   scripts/run_class.sh graft.Verify <sfDir> <outDir> [queryRegex]
+#   scripts/run_class.sh graft.Dev <plan|time|profile|oracle> <sfDir> <query...>
+#   scripts/run_class.sh graft.Bench   (inputs from SPARK_GRAFT_SF_DIR)
 set -e
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*:$(ls -d ~/.sbt/boot/scala-2.13*/lib 2>/dev/null | head -1)/*"

@@ -26,11 +26,15 @@ object Bench {
     * ~32/8 higher than at 32 cores (round-10: q322 1.50->19.16 s,
     * 12.8x, rc=1 with unchanged code). Scale the allowed growth by
     * baselineCpus/cpus so a low-core driver run doesn't fail the gate
-    * on arithmetic rather than on a regression.
+    * on arithmetic rather than on a regression. The factor is capped at
+    * [[MaxRelaxation]] so a low SPARK_GRAFT_CPUS cannot switch the gate
+    * off (at 1 core an uncapped 32x would allow 256x growth on 10x data).
     */
   def effectiveMaxGrowth(maxGrowth: Double, cpus: Int, baselineCpus: Int = 32): Double =
     if (cpus >= baselineCpus || cpus <= 0) maxGrowth
-    else maxGrowth * baselineCpus.toDouble / cpus
+    else maxGrowth * math.min(baselineCpus.toDouble / cpus, MaxRelaxation)
+
+  val MaxRelaxation = 4.0
 
   /** One timed pass over `qs`: per-query wall seconds, with failures
     * recorded as -1.0 and returned by name. The q363 lesson: a silent
@@ -121,14 +125,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.envCpus
+    val spark = LocalSession(cpus)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     // Warmup pass (JIT + codegen-cache + parquet-footer warm) is timed
     // too: it's pessimistic for the min, so it can only help — a free
@@ -173,8 +171,7 @@ object Bench {
         // low-core driver scaling run would otherwise rc=1 on compute-
         // bound queries with unchanged code (round-10 q322, 12.8x @ 8c).
         val maxGrowth = effectiveMaxGrowth(
-          sys.env.getOrElse("SPARK_GRAFT_MAX_GROWTH", "8.0").toDouble,
-          scala.util.Try(cpus.toInt).getOrElse(32))
+          sys.env.getOrElse("SPARK_GRAFT_MAX_GROWTH", "8.0").toDouble, cpus)
         val bad = growthViolations(results, r1, maxGrowth)
         val scalars = s""","sf1_total":${fmt(t1)},"sf1_growth":${fmt(growth)}"""
         (s"""$scalars,"sf1_queries":${json(r1)}""", scalars, bad, f1)

@@ -59,13 +59,7 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "/root/repo/target/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCpus)
     scale(spark, src, dst, copies)
     spark.stop()
   }

@@ -1,29 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{Agg, Tafra}
-import graft.sources.CsvSource
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §2/§7.
+/** Driver contract (SURVEY.md §2/§7): every implemented operator is one
+  * [[Query]] in a family registry under `graft.queries`, and the two
+  * maps below are views of those registries.
   *
-  * Determinism rules for the DuckDB-oracle compare (driver sorts columns
-  * by name, then hashes values; row order is canonicalized):
-  *  - money/quantity sums go through DECIMAL (order-independent), cast
-  *    to double only at the end;
-  *  - derived doubles (means, ratios) use the IDENTICAL expression shape
-  *    on both sides so IEEE arithmetic agrees bit-for-bit;
-  *  - window ranks cast to INT on the oracle side (DuckDB emits BIGINT);
-  *  - timestamps only appear truncated (year/date_trunc) because the
-  *    events table is ns-precision and Spark is µs.
+  * A query lives in the family of the operator module its build calls;
+  * one that only uses `Tafra` and plain DataFrame/SQL operators is in
+  * `FrameQueries` (`Events.readBatch` is a table read, not a streaming
+  * call). When a build calls several modules, the first family
+  * in this order wins: stream, tx, graph, dedup, similarity, eval,
+  * stats, sketch, series, text, multimodal, joins.
   */
 object SparkEntry {
-
-  private def t(spark: SparkSession, dir: String, name: String): Tafra =
-    Tafra.readParquet(spark, s"$dir/$name.parquet")
 
   /** Side-channel /tmp paths are derived from the input dir so runs at
     * different scale factors (the sf0.1/sf1 bench vs the sf0.01
@@ -38,11963 +30,25 @@ object SparkEntry {
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
 
-  private def sidePath(base: String, dir: String): String =
-    s"/tmp/${base}_${sfTag(dir)}"
-
-  /** Exact money arithmetic: sums over DECIMAL are order-independent
-    * and match the DuckDB oracle bit-for-bit (doubles would drift with
-    * shuffle order).
-    */
-  private def dec(c: Column): Column = c.cast("decimal(18,4)")
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_groupby_agg")(spark, "/root/testdata/sf0.001")
 
-  /** Shared ANSI SQL for q19 — the exact string runs on BOTH engines
-    * (spark.sql over temp views; DuckDB over parquet views).
+  /** Every query by name; fails on a duplicate name. */
+  private lazy val registry: Map[String, Query] = Query.byName(
+    FrameQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
+      GraphQueries.all ++ TxQueries.all ++ StreamQueries.all ++
+      StatsQueries.all ++ SketchQueries.all ++ EvalQueries.all ++
+      SeriesQueries.all ++ TextQueries.all ++ MultimodalQueries.all ++
+      JoinQueries.all)
+
+  /** Each query's Spark build, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.build }
+
+  /** Each query's DuckDB oracle SQL, by name: ANSI SQL over the same
+    * parquet tables, with `__SFTAG__` standing for [[sfTag]].
     */
-  private val q19Sql: String =
-    """SELECT r_name, n_name, COUNT(c_custkey) AS n_cust,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-       FROM customer
-       JOIN nation ON c_nationkey = n_nationkey
-       JOIN region ON n_regionkey = r_regionkey
-       GROUP BY r_name, n_name"""
-
-  /** q194's term list — one source of truth for the Spark census and
-    * the SQL oracle's VALUES list (substring semantics, lowercase).
-    */
-  private val BlocklistTerms: Seq[String] =
-    Seq("spark", "vector", "window dup", "slow batch", "agg")
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // §2#1 group_by (tafra/group.py:215) — TPC-H Q1-style pricing summary.
-    "q01_groupby_agg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      li.update("l_quantity_d", dec(col("l_quantity")))
-        .update("revenue_d", dec(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))))
-        .groupBy(
-          Seq("l_returnflag", "l_linestatus"),
-          Seq(Agg("sum_qty_d", "sum", "l_quantity_d"),
-              Agg("sum_revenue_d", "sum", "revenue_d"),
-              Agg("n_rows", "count", "l_orderkey"),
-              Agg("n_orders", "count_distinct", "l_orderkey")))
-        .update("sum_qty", col("sum_qty_d").cast("double"))
-        .update("sum_revenue", col("sum_revenue_d").cast("double"))
-        .delete(Seq("sum_qty_d", "sum_revenue_d"))
-        .sort(Seq(col("l_returnflag"), col("l_linestatus"))).df
-    }),
-
-    // §2#2 transform (group.py:277) — group agg broadcast back to rows via
-    // Window.partitionBy: ONE shuffle, no join-back.
-    "q02_transform" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(Seq("l_orderkey", "l_linenumber", "l_quantity"))
-        .update("l_quantity_d", dec(col("l_quantity")))
-        .transform(Seq("l_orderkey"),
-          Seq(Agg("order_qty_d", "sum", "l_quantity_d"),
-              Agg("n_lines", "count", "l_linenumber")))
-        .update("order_qty", col("order_qty_d").cast("double"))
-        .update("qty_share", col("l_quantity") / col("order_qty"))
-        .delete(Seq("l_quantity_d", "order_qty_d")).df
-    }),
-
-    // §2#3 iterate_by (group.py:342) — per-group iteration INSIDE the
-    // executors (flatMapGroups), never a driver loop.
-    "q03_iterate_by" -> ((s, dir) => {
-      val out = StructType(Seq(
-        StructField("l_orderkey", LongType),
-        StructField("n_lines", LongType),
-        StructField("max_qty", DoubleType)))
-      t(s, dir, "lineitem")
-        .select(Seq("l_orderkey", "l_quantity"))
-        .iterateBy(Seq("l_orderkey"))(out) { (key, rows) =>
-          var n = 0L; var mx = Double.NegativeInfinity
-          rows.foreach { r => n += 1; val q = r.getDouble(1); if (q > mx) mx = q }
-          Iterator.single(Row(key.getLong(0), n, mx))
-        }.df
-    }),
-
-    // §2#4 inner_join (group.py:421) — equi join; small dim broadcast.
-    "q04_inner_join" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .innerJoin(t(s, dir, "customer"), Seq(("o_custkey", "c_custkey", "==")),
-          select = Seq("o_orderkey", "o_custkey", "o_totalprice", "c_name", "c_mktsegment"),
-          broadcastRight = true).df
-    }),
-
-    // §2#5 left_join (group.py:512).
-    "q05_left_join" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .select(Seq("c_custkey", "c_name"))
-        .leftJoin(t(s, dir, "orders"), Seq(("c_custkey", "o_custkey", "==")),
-          select = Seq("c_custkey", "c_name", "o_orderkey", "o_totalprice")).df
-    }),
-
-    // §2#4 theta ops — equi key extracted by Catalyst for the hash join,
-    // the `>` residual stays in the join condition.
-    "q06_theta_join" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .innerJoin(t(s, dir, "part"),
-          Seq(("l_partkey", "p_partkey", "=="), ("l_extendedprice", "p_retailprice", ">")),
-          select = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice",
-                       "p_retailprice", "p_brand"),
-          broadcastRight = true).df
-    }),
-
-    // §2#6 cross_join (group.py:604) — broadcast nested loop on small side.
-    "q07_cross_join" -> ((s, dir) => {
-      t(s, dir, "region")
-        .crossJoin(t(s, dir, "nation"), select = Seq("r_name", "n_nationkey", "n_name")).df
-    }),
-
-    // §2#7 union (group.py:56) — schema-validated UNION ALL.
-    "q08_union" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(Seq("o_orderkey", "o_orderstatus", "o_totalprice"))
-      val f = o.filter(col("o_orderstatus") === "F").update("tag", lit("closed"))
-      val open = o.filter(col("o_orderstatus") === "O").update("tag", lit("open"))
-      f.union(open).df
-    }),
-
-    // §2#8-10 select / rename / delete (base.py:1354,1560,1602).
-    "q09_select_rename" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .select(Seq("c_custkey", "c_name", "c_acctbal", "c_mktsegment"))
-        .rename(Map("c_custkey" -> "cust_id", "c_name" -> "name"))
-        .delete(Seq("c_mktsegment")).df
-    }),
-
-    // §2#11-12 filter / sort / head (base.py:310-497,1380) — head takes a
-    // total order (orderkey,linenumber unique) to be deterministic at scale.
-    "q10_filter_sort_head" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(Seq("l_orderkey", "l_linenumber", "l_quantity", "l_discount"))
-        .filter(col("l_quantity") > 45 && col("l_discount") < 0.05)
-        .head(100, Seq(col("l_orderkey"), col("l_linenumber"))).df
-    }),
-
-    // §2#13 coalesce (base.py:1675).
-    "q11_coalesce" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .select(Seq("c_custkey", "c_acctbal"))
-        .update("bal_pos", when(col("c_acctbal") > 0, col("c_acctbal")))
-        .coalesceCol("bal_pos", Seq(lit(0.0)))
-        .delete(Seq("c_acctbal")).df
-    }),
-
-    // §2#14-15 update / update_dtypes (base.py:1449,1512) — FLOOR before the
-    // int cast: Spark truncates double→int, DuckDB rounds, floor agrees.
-    "q12_update_cast" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(Seq("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate"))
-        .update("qty_int", floor(col("l_quantity")).cast("int"))
-        .update("ship_year", year(col("l_shipdate")))
-        .updateDtypes(Map("l_linenumber" -> "bigint"))
-        .delete(Seq("l_quantity", "l_shipdate")).df
-    }),
-
-    // §2#16 unique groups (group.py:154).
-    "q13_distinct" -> ((s, dir) => {
-      t(s, dir, "customer").select(Seq("c_mktsegment", "c_nationkey")).distinct().df
-    }),
-
-    // §2#17 agg breadth (group.py:171) — mean/var/std derived from exact
-    // DECIMAL sums with the identical double expression on both engines
-    // (float aggs straight over doubles are shuffle-order-dependent).
-    "q14_agg_breadth" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .update("qd", dec(col("l_quantity")))
-        .update("qd2", dec(dec(col("l_quantity")) * dec(col("l_quantity"))))
-        .groupBy(Seq("l_returnflag"),
-          Seq(Agg("min_qty", "min", "l_quantity"),
-              Agg("max_qty", "max", "l_quantity"),
-              Agg("n", "count", "l_orderkey"),
-              Agg("n_supp", "count_distinct", "l_suppkey"),
-              Agg("sq", "sum", "qd"),
-              Agg("sq2", "sum", "qd2")))
-        .update("mean_qty", col("sq").cast("double") / col("n"))
-        .update("var_qty",
-          (col("sq2").cast("double") - col("sq").cast("double") * col("sq").cast("double") / col("n"))
-            / (col("n") - 1))
-        .update("std_qty", sqrt(col("var_qty")))
-        .delete(Seq("sq", "sq2")).df
-    }),
-
-    // §2#18 iter_fn group enumeration (group.py:208) → rank windows.
-    // Order (o_totalprice DESC, o_orderkey) is tie-free → deterministic.
-    "q15_rank_window" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .select(Seq("o_custkey", "o_orderkey", "o_totalprice"))
-        .update("rn", row_number().over(w))
-        .update("rk", rank().over(w))
-        .update("drk", dense_rank().over(w))
-        .filter(col("rn") <= 3).df
-    }),
-
-    // §2#19 row/tuple map (base.py:1229) — typed per-row map, codegen'd
-    // Encoders; arithmetic mirrors the oracle's IEEE shape.
-    "q16_typed_map" -> ((s, dir) => {
-      val out = StructType(Seq(
-        StructField("l_orderkey", LongType),
-        StructField("gross", DoubleType),
-        StructField("tax_band", StringType)))
-      t(s, dir, "lineitem")
-        .select(Seq("l_orderkey", "l_extendedprice", "l_tax"))
-        .rowMap(out) { r =>
-          val price = r.getDouble(1); val tax = r.getDouble(2)
-          Row(r.getLong(0), price * (1 + tax), if (tax > 0.05) "high" else "low")
-        }.df
-    }),
-
-    // §2#20 expression surface — CASE WHEN / string / date functions, all
-    // inside whole-stage codegen.
-    "q17_expressions" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .select(Seq("o_orderkey", "o_orderstatus", "o_orderpriority", "o_orderdate", "o_custkey"))
-        .update("status_desc",
-          when(col("o_orderstatus") === "F", "fulfilled")
-            .when(col("o_orderstatus") === "O", "open")
-            .otherwise("pending"))
-        .update("cust_tag", concat(upper(substring(col("o_orderpriority"), 1, 1)),
-          lit("_"), col("o_custkey").cast("string")))
-        .update("od_year", year(col("o_orderdate")))
-        .update("od_month", month(col("o_orderdate")))
-        .update("priority_num", substring(col("o_orderpriority"), 1, 1).cast("int"))
-        .update("prio_len", length(col("o_orderpriority")))
-        .delete(Seq("o_orderstatus", "o_orderpriority", "o_orderdate", "o_custkey")).df
-    }),
-
-    // §2#21 read_csv (csvreader.py) — parquet→csv→CsvSource round trip with
-    // distributed schema inference.
-    "q18_read_csv" -> ((s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_nation_${dir.hashCode.toHexString}"
-      t(s, dir, "nation").toCsv(tmp)
-      CsvSource.read(s, tmp).df
-    }),
-
-    // §2#23 read_sql (base.py:979) — spark.sql over registered temp views;
-    // the SAME SQL string is the oracle.
-    "q19_sql" -> ((s, dir) => {
-      Seq("customer", "nation", "region").foreach(n => t(s, dir, n).df.createOrReplaceTempView(n))
-      s.sql(q19Sql)
-    }),
-
-    // §2#27 streaming windowed agg — readStream → tumbling window →
-    // memory sink; oracle is the equivalent batch SQL.
-    "q20_stream_window" -> ((s, dir) =>
-      streaming.Events.hourlyByType(s, s"$dir/events.parquet")),
-
-    // §2#28 sessionization via flatMapGroupsWithState (30 min gap);
-    // oracle is the batch lag/cumsum SQL over µs-truncated times.
-    "q21_sessionize" -> ((s, dir) =>
-      streaming.Events.sessionize(s, s"$dir/events.parquet")),
-
-    // §2#29 exact dedup.
-    "q22_dedup_exact" -> ((s, dir) =>
-      operators.Dedup.exact(t(s, dir, "documents").df)),
-
-    // §2#29-streaming: dropDuplicates over a doubled stream — the
-    // streaming face of exact dedup (state-backed, watermark-boundable).
-    "q38_stream_dedup" -> ((s, dir) =>
-      streaming.Events.streamDedup(s, s"$dir/events.parquet")),
-
-    // §2#30 MinHash+LSH near-dup (top-100 candidate pairs).
-    "q23_dedup_minhash" -> ((s, dir) =>
-      operators.Dedup.minhash(t(s, dir, "documents").df)),
-
-    // §2#31 SimHash near-dup (top-100 pairs by Hamming distance).
-    "q24_dedup_simhash" -> ((s, dir) =>
-      operators.Dedup.simhash(t(s, dir, "documents").df)),
-
-    // §2#32 n-gram Jaccard near-dup over rare trigrams (oracle-mirrored).
-    "q25_dedup_ngram" -> ((s, dir) =>
-      operators.Dedup.ngramJaccard(t(s, dir, "documents").df)),
-
-    // §2#33 embedding-cosine near-dup via hyperplane LSH buckets.
-    "q26_dedup_embedding" -> ((s, dir) =>
-      operators.Dedup.embedding(t(s, dir, "embeddings").df)),
-
-    // §2#34 ANN brute-force top-k (ranks only: cosine VALUES are engine-
-    // internal float sums; RANKS are stable and oracle-checked).
-    "q27_ann_bruteforce" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8))
-        .select("query_id", "neighbor_id", "rank")
-    }),
-
-    // §2#35 ANN scale path: LSH-bucketed candidates + exact rerank,
-    // with MULTI-PROBE (own bucket + single-bit flips) — the recall fix
-    // for neighbors just across one hyperplane.
-    "q28_ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.lshTopK(emb, emb.filter(col("vec_id") < 8), probeHamming = 1)
-    }),
-
-    // §2#1/#4 composed at TPC-H Q5 shape: fact → broadcast dims chain →
-    // decimal-exact revenue per supplier nation (exercises `supplier`).
-    "q37_supplier_revenue" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .update("rev_d", dec(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))))
-        .innerJoin(t(s, dir, "supplier"), Seq(("l_suppkey", "s_suppkey", "==")),
-          broadcastRight = true)
-        .innerJoin(t(s, dir, "nation"), Seq(("s_nationkey", "n_nationkey", "==")),
-          broadcastRight = true)
-        .groupBy(Seq("n_name"),
-          Seq(Agg("sum_rev_d", "sum", "rev_d"),
-              Agg("n_supp", "count_distinct", "s_suppkey")))
-        .update("sum_rev", col("sum_rev_d").cast("double"))
-        .delete(Seq("sum_rev_d")).df
-    }),
-
-    // §2#35b IVF ANN: md5-seeded coarse quantizer (lloydSteps=0 → the
-    // centroids ARE the seed vectors: exactly reproducible from the
-    // table, so DuckDB rebuilds the identical quantizer and the FULL
-    // pipeline is hash-verified; Lloyd refinement stays a quality knob).
-    "q36_ann_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 8), lloydSteps = 0)
-    }),
-
-    // §2#36 language ID (stopword-count heuristic, deterministic argmax).
-    "q29_text_langid" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      val scored = T.langMarkers.foldLeft(
-        t(s, dir, "documents").df.select(col("doc_id"), col("lang"), T.tokens(col("text")).as("w"))) {
-        case (d, (lang, markers)) => d.withColumn(s"s_$lang", T.markerCount(col("w"), markers))
-      }
-      scored
-        .withColumn("pred_lang", T.argmaxLang(T.langMarkers.map { case (l, _) => col(s"s_$l") }))
-        .withColumn("is_match", col("pred_lang") === col("lang"))
-        .drop("w")
-    }),
-
-    // §2#37 quality scoring: length/word/punct/stopword-ratio features.
-    "q30_text_quality" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      t(s, dir, "documents").df
-        .select(col("doc_id"), col("text"), T.tokens(col("text")).as("w"))
-        .withColumn("n_chars_m", length(col("text")))
-        .withColumn("n_words", size(col("w")))
-        .withColumn("avg_word_len", length(col("text")).cast("double") / col("n_words"))
-        .withColumn("n_punct", regexp_count(col("text"), lit("[.!?,;:]")))
-        .withColumn("stop_cnt", T.markerCount(col("w"), Seq("the", "a")))
-        .withColumn("stop_ratio", col("stop_cnt").cast("double") / col("n_words"))
-        .withColumn("quality_score",
-          when(col("n_words") >= 20 && col("stop_ratio") < 0.3, lit(1.0))
-            .when(col("n_words") >= 5, lit(0.5)).otherwise(lit(0.0)))
-        .drop("text", "w")
-    }),
-
-    // §2#38 token counting: whitespace + BPE-ish regex + bytes/4 estimate.
-    "q31_text_tokens" -> ((s, dir) => {
-      t(s, dir, "documents").df
-        .select(col("doc_id"),
-          size(split(trim(col("text")), "\\s+")).as("ws_tokens"),
-          regexp_count(lower(col("text")), lit("[a-z0-9]+|[^a-z0-9\\s]")).as("re_tokens"),
-          ceil(length(col("text")) / lit(4.0)).cast("int").as("bpe_est"))
-    }),
-
-    // §2#39 document fingerprint: rolling polynomial hash over tokens.
-    "q32_text_fingerprint" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      t(s, dir, "documents").df
-        .select(col("doc_id"), T.tokens(col("text")).as("w"))
-        .select(col("doc_id"), size(col("w")).as("n_tokens"), T.fingerprint(col("w")).as("fp"))
-    }),
-
-    // §2#40 multimodal binary columns: text bytes → REAL grayscale PNG
-    // (javax.imageio) → batched mapPartitions decode → metadata; the
-    // oracle predicts dims because the codec is lossless.
-    "q33_multimodal" -> ((s, dir) => {
-      operators.Multimodal.decodeImageFeatures(
-          operators.Multimodal.withImagePayload(t(s, dir, "documents").df))
-        .select("doc_id", "n_bytes", "width", "height")
-    }),
-
-    // §2#41 salted equi-join (SURVEY §5 skew path): identical result set
-    // to the plain join, hot keys spread over 16 reducers.
-    "q34_skew_join" -> ((s, dir) => {
-      operators.SkewJoin.saltedEquiJoin(
-        t(s, dir, "lineitem").select(Seq("l_orderkey", "l_linenumber", "l_quantity")).df,
-        t(s, dir, "orders").select(Seq("o_orderkey", "o_totalprice")).df,
-        "l_orderkey", "o_orderkey")
-    }),
-
-    // §2#30b near-dup clustering: candidate pairs → connected
-    // components (min-label propagation, driver loop = iteration
-    // control only) → the keep/drop groups a dedup pipeline acts on.
-    // Oracle: DuckDB recursive CTE over the same q25 pair list.
-    "q41_dedup_components" -> ((s, dir) =>
-      operators.Dedup.components(
-        operators.Dedup.ngramJaccard(t(s, dir, "documents").df))),
-
-    // §2#28c Spark-native session windows: the declarative counterpart
-    // of q21's custom-state sessionization (same groupBy works on a
-    // watermarked stream). Split boundary is >= gap (Spark's exclusive
-    // window end), mirrored in the oracle.
-    "q42_session_window" -> ((s, dir) => {
-      streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("sw.start").as("session_start"),
-          col("sw.end").as("session_end"), col("n_events"))
-    }),
-
-    // §2#26b parse_object_dtypes: all-string frame → one try_cast stats
-    // pass → numeric columns recover their types; prose stays string.
-    "q39_parse_dtypes" -> ((s, dir) => {
-      val n = t(s, dir, "nation")
-      n.updateDtypes(n.columns.map(_ -> "string").toMap)
-        .parseObjectDtypes().df
-    }),
-
-    // §2#43 bucketed co-located join: both fact slices bucketed on the
-    // join key at write time → the join itself needs NO exchange (plan
-    // asserted in PlanSpec); result identical to the plain join.
-    "q40_bucketed_join" -> ((s, dir) => {
-      val tmp = System.getProperty("java.io.tmpdir")
-      t(s, dir, "lineitem").select(Seq("l_orderkey", "l_linenumber", "l_quantity"))
-        .writeBucketed("graft_li_bkt", Seq("l_orderkey"), 8, Seq("l_orderkey"),
-          Some(s"$tmp/graft_bkt_li_${dir.hashCode.toHexString}"))
-      t(s, dir, "orders").select(Seq("o_orderkey", "o_totalprice"))
-        .writeBucketed("graft_ord_bkt", Seq("o_orderkey"), 8, Seq("o_orderkey"),
-          Some(s"$tmp/graft_bkt_ord_${dir.hashCode.toHexString}"))
-      Tafra.readTable(s, "graft_li_bkt")
-        .innerJoin(Tafra.readTable(s, "graft_ord_bkt"),
-          Seq(("l_orderkey", "o_orderkey", "=="))).df
-    }),
-
-    // §2#47 PII scrubbing: URL/email/IPv4 redaction as a codegen'd
-    // regexp_replace chain (map-only, no shuffle). The corpus is
-    // synthetic word salad, so PII is planted deterministically from
-    // doc_id on BOTH engines — the oracle genuinely checks the
-    // redaction, not a no-op.
-    "q43_pii_scrub" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      t(s, dir, "documents").df
-        .select(col("doc_id"),
-          concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
-            lit("@mail.example.com or 10.20."), pmod(col("doc_id"), lit(250L)).cast("string"),
-            lit(".7 call +1 555-"),
-            lpad(pmod(col("doc_id"), lit(1000L)).cast("string"), 3, "0"),
-            lit("-"), lpad(pmod(col("doc_id"), lit(10000L)).cast("string"), 4, "0"),
-            lit(" v6 fe80::"), lower(hex(pmod(col("doc_id"), lit(65536L)))),
-            lit(" see https://ex.com/d/"), col("doc_id").cast("string"), lit(" end")).as("dirty"))
-        .select(col("doc_id"), T.scrubPii(col("dirty")).as("clean"))
-    }),
-
-    // §2#48 repetition signals (Gopher-style quality filters): top-word
-    // mass, distinct-token ratio, top-bigram mass per document. Postings
-    // are rebalanced on doc_id once; both groupBys and the final join
-    // cluster on doc_id so no further shuffle is required.
-    "q44_text_repetition" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      // pinned partition count: a bare repartition(col) is an
-      // AQE-coalescible shuffle that collapses back to few partitions on
-      // small byte sizes, starving the CPU-heavy tokenize/explode stage
-      val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      // tokens pre-exchange: materialized through the shuffle so the
-      // bigram lambda reads an O(1) attribute, not a re-split per element
-      val toks = t(s, dir, "documents").df
-        .select(col("doc_id"), T.tokens(col("text")).as("w"))
-        .repartition(nPart, col("doc_id"))
-      val uni = toks.select(col("doc_id"), explode(col("w")).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id").agg(max("c").as("top_word"), sum("c").as("n_tok"),
-          count(lit(1)).as("n_distinct"))
-      val bi = toks.filter(size(col("w")) >= 2)
-        .select(col("doc_id"), explode(T.wordNGrams(col("w"), 2)).as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id").agg(max("c").as("top_bigram"), sum("c").as("n_bi"))
-      uni.join(bi, "doc_id")
-        .select(col("doc_id"),
-          (col("top_word").cast("double") / col("n_tok")).as("top_word_mass"),
-          (col("n_distinct").cast("double") / col("n_tok")).as("distinct_ratio"),
-          (col("top_bigram").cast("double") / col("n_bi")).as("top_bigram_mass"))
-    }),
-
-    // §2#46 sequence packing: concat-and-chunk context-window layout;
-    // per-shard prefix sum (one window), shards pack independently.
-    "q45_pack_sequences" -> ((s, dir) =>
-      operators.Packing.packSequences(t(s, dir, "documents").df)),
-
-    // §2#49 train/val/test split by content hash: md5-prefix ranges, so
-    // the assignment is engine-portable and survives re-sharding (no
-    // eval contamination on re-ingest). Map-only, no shuffle.
-    "q46_split_hash" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .splitByHash(Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), Seq("doc_id"))
-        .df.select("doc_id", "split")),
-
-    // §2#50 band join: clicks paired with same-user purchases within
-    // ±30 min. Bucketed equi-join on (user, time-bucket) — a hot user's
-    // rows spread across reducers by time — with the exact band as the
-    // residual filter.
-    "q47_band_join" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("tus"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tus").as("click_us"), col("value").as("click_value"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("tus").as("buy_us"), col("value").as("buy_value"))
-      operators.RangeJoin.bandJoin(clicks, buys, Seq("user_id"),
-          "click_us", "buy_us", 30L * 60 * 1000 * 1000)
-        .select(col("user_id"),
-          timestamp_micros(col("click_us")).as("click_ts"), col("click_value"),
-          timestamp_micros(col("buy_us")).as("buy_ts"), col("buy_value"))
-    }),
-
-    // §2#28d stream-stream join: same pairing as a watermarked
-    // two-stream join (purchase in [click, click+30min]); state bounded
-    // by watermark + band horizon on both sides.
-    "q48_stream_join" -> ((s, dir) =>
-      streaming.Events.streamClickPurchaseJoin(s, s"$dir/events.parquet")),
-
-    // §2#51 deterministic domain mixing: per-source keep fractions
-    // selected by content hash (not RNG) — stable across runs,
-    // partitionings, and engines; sources outside the mixture drop.
-    "q49_mix_sources" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .sampleHashBy("source",
-          Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.1),
-          Seq("doc_id"))
-        .df.select("doc_id", "source")),
-
-    // §2#42 as-of join (union+window, no range-join pair blowup): each
-    // click matched to the user's latest purchase at-or-before it.
-    "q35_asof_join" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"), col("value").as("click_value"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("buy_ts"), col("value").as("buy_value"))
-      operators.AsofJoin.asofJoin(clicks, buys,
-        "user_id", "click_ts", "buy_ts", Seq("buy_ts", "buy_value"))
-    }),
-
-    // §2#40b REAL WAV audio modality: text bytes as 8-bit PCM samples in
-    // a WAV container (javax.sound.sampled), batched decode back to
-    // sample count / rate / duration / RMS — all oracle-predicted from
-    // the text because PCM is lossless.
-    "q50_audio" -> ((s, dir) =>
-      operators.Multimodal.decodeAudioFeatures(
-        operators.Multimodal.withAudioPayload(t(s, dir, "documents").df))),
-
-    // §2#45 reproducible sampling: md5-prefix membership (seed-prefixed,
-    // NUL-separated keys) — same content-addressed contract as q46/q49,
-    // auditable from SQL.
-    "q51_sample_hash" -> ((s, dir) =>
-      t(s, dir, "documents").sampleHash(0.25, Seq("doc_id"))
-        .df.select("doc_id", "source")),
-
-    // §2#50b LEFT band join: clicks keep a row (null purchase columns)
-    // when no same-user purchase lands within ±30 min.
-    "q52_band_left" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("tus"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tus").as("click_us"), col("value").as("click_value"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("tus").as("buy_us"), col("value").as("buy_value"))
-      operators.RangeJoin.bandJoin(clicks, buys, Seq("user_id"),
-          "click_us", "buy_us", 30L * 60 * 1000 * 1000, how = "left")
-        .select(col("user_id"),
-          timestamp_micros(col("click_us")).as("click_ts"), col("click_value"),
-          timestamp_micros(col("buy_us")).as("buy_ts"), col("buy_value"))
-    }),
-
-    // §2#40c video-container modality: index header over REAL PNG
-    // frames; every 2nd frame is sought via the index and decoded
-    // (unsampled frames are never parsed) — demux, stride sampling,
-    // and per-frame codec work are genuine, and the oracle predicts
-    // frame counts, dims, and pixel statistics from the text.
-    "q54_video" -> ((s, dir) =>
-      operators.Multimodal.decodeVideoFeatures(
-        operators.Multimodal.withVideoPayload(t(s, dir, "documents").df))),
-
-    // §2#42b as-of join with tolerance: matches older than 10 minutes
-    // are nulled (pandas merge_asof tolerance semantics).
-    "q53_asof_tolerance" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"), col("value").as("click_value"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("buy_ts"), col("value").as("buy_value"))
-      operators.AsofJoin.asofJoin(clicks, buys,
-        "user_id", "click_ts", "buy_ts", Seq("buy_ts", "buy_value"),
-        tolerance = Some(expr("INTERVAL '10' MINUTE")))
-    }),
-
-    // §2#30c chunk-level exact dedup: drop every 10-token aligned chunk
-    // seen earlier in the corpus (min doc_id, then position), rebuild
-    // each document from its surviving chunks.
-    "q55_chunk_dedup" -> ((s, dir) =>
-      operators.Dedup.chunkDedup(t(s, dir, "documents").df, chunkTokens = 10)),
-
-    // §2#30d benchmark decontamination: train docs (doc_id % 10 != 0)
-    // flagged by 8-gram overlap with the eval split (doc_id % 10 == 0).
-    "q56_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      operators.Dedup.decontaminate(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0), n = 8)
-    }),
-
-    // §2#30e incremental batch-vs-corpus dedup: the batch (doc_id % 5
-    // == 0) checked against the standing corpus (rest) on the
-    // token-set key, bloom-prefiltered, exact-confirmed.
-    "q57_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      operators.Dedup.dedupAgainst(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 =!= 0))
-    }),
-
-    // §2#33b semantic corpus dedup: the end-to-end keep/drop decision
-    // over the embedding table (bucketed pairs ≥ minCos → components →
-    // keep component minima). The synthetic embeddings have no planted
-    // high-cosine twins, so the graded threshold sits inside the real
-    // cosine range to exercise the cluster path.
-    "q58_semantic_dedup" -> ((s, dir) =>
-      operators.Dedup.semanticDedup(t(s, dir, "embeddings").df, minCos = 0.4)
-        .select("vec_id", "keep")),
-
-    // §2#37b HTML → text extraction (WET-extraction pass): script/style
-    // blocks dropped, tags stripped, entities decoded, whitespace
-    // collapsed — map-only regex chain run verbatim as the oracle. The
-    // corpus is plain words, so the page wrapper is planted
-    // deterministically from doc_id on BOTH engines (q43's pattern):
-    // the oracle genuinely checks the extraction, not a no-op.
-    "q59_text_extract" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      t(s, dir, "documents").df
-        .select(col("doc_id"),
-          concat(lit("<html><head><script>var x = "), col("doc_id").cast("string"),
-            lit(";\nload();</script><style>p { color: red }</style></head><body><h1>Doc &amp; entry</h1><p>"),
-            col("text"),
-            lit("</p><a href=\"/d/"), col("doc_id").cast("string"),
-            lit("\">1 &lt; 2&nbsp;link</a></body></html>")).as("page"))
-        .select(col("doc_id"), T.extractHtmlText(col("page")).as("clean"))
-    }),
-
-    // §2#45b quality-weighted sampling: per-document keep probability =
-    // the q30 quality score (1.0 always kept, 0.5 sampled in half, 0.0
-    // dropped), selected by content hash — deterministic soft filtering.
-    "q60_quality_sample" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      t(s, dir, "documents")
-        .update("w", T.tokens(col("text")))
-        .update("n_words", size(col("w")))
-        .update("stop_ratio",
-          T.markerCount(col("w"), Seq("the", "a")).cast("double") / col("n_words"))
-        .update("quality_score",
-          when(col("n_words") >= 20 && col("stop_ratio") < 0.3, lit(1.0))
-            .when(col("n_words") >= 5, lit(0.5)).otherwise(lit(0.0)))
-        .sampleHashWeighted("quality_score", Seq("doc_id"))
-        .select(Seq("doc_id", "quality_score")).df
-    }),
-
-    // §2#21b JSONL round trip: documents written as JSON-Lines (the
-    // corpus interchange format) and read back with an EXPLICIT schema
-    // (production form — inference would re-scan the data); the oracle
-    // is the original table, so the round trip must be lossless.
-    "q61_jsonl" -> ((s, dir) => {
-      val tmp = System.getProperty("java.io.tmpdir")
-      // pid + sanitized dir: stable within a process (re-runs overwrite
-      // their own path) but never shared across concurrent harness
-      // processes or aliased across different data dirs
-      val path = s"$tmp/graft_jsonl_${ProcessHandle.current.pid}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      t(s, dir, "documents").select(Seq("doc_id", "text", "lang", "source")).toJsonl(path)
-      Tafra.readJsonl(s, path,
-          Some(StructType.fromDDL("doc_id bigint, text string, lang string, source string")))
-        .select(Seq("doc_id", "text", "lang", "source")).df
-    }),
-
-    // §2#46b MATERIALIZED packing: the actual context-window contents —
-    // ordered span concatenation with cross-window spill cuts — per
-    // (shard, chunk); what a trainer's loader consumes (q45 emits only
-    // the assignment). capacity=200 at this corpus' document lengths
-    // forces frequent spills, so the cut path is exercised everywhere.
-    "q62_pack_emit" -> ((s, dir) =>
-      operators.Packing.packChunks(t(s, dir, "documents").df, capacity = 200, nShards = 8)),
-
-    // §2#38b tokenizer-faithful token counting: a real merges-table BPE
-    // (self-learned from Bpe.SeedText, pasted constant) beside the
-    // whitespace estimate. The oracle replays the identical rank-by-rank
-    // merge loop as a recursive CTE, so the counts are hash-verified
-    // end to end. Sampled (doc_id % 100) — the oracle's recursion is
-    // per-word-type and the sample keeps it square with DuckDB.
-    "q63_bpe_tokens" -> ((s, dir) =>
-      functions.Bpe.bpeCount(t(s, dir, "documents").df.filter(col("doc_id") % 100 === 0))),
-
-    // §2#42b hot-key as-of: the (key, time-bucket)-partitioned variant
-    // with boundary carry-in — same semantics as q35, window tasks
-    // bounded per bucket instead of per key. µs-long times (the ns
-    // trap), 1-hour buckets.
-    "q64_asof_bucketed" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("cus"), col("value").as("click_value"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("bus"), col("value").as("buy_value"))
-      operators.AsofJoin.asofJoinBucketed(clicks, buys,
-        "user_id", "cus", "bus", Seq("bus", "buy_value"), bucketWidth = 3600L * 1000000L)
-    }),
-
-    // §2#37c CCNet-style perplexity filter: every document scored by
-    // negative mean bigram log-likelihood under an add-k LM trained on
-    // the doc_id % 10 == 0 seed split. Log terms decimal-quantized
-    // before the sum so both engines aggregate exactly.
-    "q65_lm_perplexity" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      functions.NgramLm.perplexity(docs, docs.filter(col("doc_id") % 10 === 0))
-    }),
-
-    // §2#37j Stupid Backoff trigram scoring (Brants et al. EMNLP'07):
-    // the MapReduce-native LM — raw counts, fixed α=0.4 backoff, add-1
-    // unigram floor — scoring every doc against the doc_id % 10 == 0
-    // seed split; the trigram-context sibling of q65's bigram filter.
-    "q232_stupid_backoff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      functions.NgramLm.stupidBackoff(docs, docs.filter(col("doc_id") % 10 === 0))
-    }),
-
-    // §2#30f duplicated-span removal (Lee et al. exact-substring pass,
-    // overlapping 8-token windows): re-seen spans cut token-exact,
-    // first occurrence kept, docs rebuilt from surviving tokens.
-    "q66_span_dedup" -> ((s, dir) =>
-      operators.Dedup.spanDedup(t(s, dir, "documents").df, k = 8)),
-
-    // §2#37d per-doc top-5 TF-IDF terms: decimal-exact scoring (idf
-    // quantized per term, score = tf × idf stays decimal) so ranking
-    // ties break identically in both engines.
-    "q67_tfidf_terms" -> ((s, dir) =>
-      functions.TermStats.tfidfTopTerms(t(s, dir, "documents").df, m = 5)),
-
-    // §2#35b int8 scalar quantization of the embedding corpus: per-dim
-    // min/max affine codes, rounded before the int cast so both
-    // engines cast the same integral double. Exploded scalar rows.
-    "q68_embed_quantize" -> ((s, dir) =>
-      operators.Similarity.scalarQuantize(
-        Tafra.readParquet(s, s"$dir/embeddings.parquet").df)),
-
-    // §2#35c product quantization: m=8 subspaces × 16 sub-centroids
-    // (md5-seeded, oracle-reproducible), nearest-L2 codes.
-    "q69_embed_pq" -> ((s, dir) =>
-      operators.Similarity.pqEncode(
-        Tafra.readParquet(s, s"$dir/embeddings.parquet").df)),
-
-    // §2#35d PQ-ADC search: compressed-domain top-k over the q69 codes
-    // (corpus floats never read at query time); LUT decimal-quantized.
-    "q70_pq_adc" -> ((s, dir) => {
-      val vecs = Tafra.readParquet(s, s"$dir/embeddings.parquet").df
-      operators.Similarity.pqTopK(vecs, vecs.filter(col("vec_id") < 8))
-    }),
-
-    // §2#52 corpus stats report: per-source + grand-total doc counts,
-    // char totals, and EXACT length percentiles in ONE rollup pass
-    // (partial-agg; percentile state = distinct-value map, not rows).
-    "q71_corpus_stats" -> ((s, dir) =>
-      functions.Profile.stats(t(s, dir, "documents").df, "source", "n_chars")),
-
-    // §2#53 sliding time-range window: per-user trailing-5-minute
-    // event count and value sum as of every event — one RANGE-frame
-    // window, no self-join pair blowup. µs-long times (the ns trap).
-    "q72_rolling_window" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.trailing(ev, "user_id", "tus", 300L * 1000000L, "value")
-        .select("event_id", "user_id", "tus", "n_win", "sum_win")
-    }),
-
-    // §2#54 cluster-balanced diversity sampling: embed → IVF cells →
-    // content-hash quota per cell; dense modes can't dominate the
-    // subset, and kept sets nest as the quota grows.
-    "q73_diverse_sample" -> ((s, dir) =>
-      operators.Similarity.diverseSample(
-        Tafra.readParquet(s, s"$dir/embeddings.parquet").df, quota = 20)),
-
-    // §2#55 per-doc trigram novelty: fraction of a document's distinct
-    // n-grams unique to it in the corpus — df==1 attribution rides the
-    // gram agg as min(doc_id), so no postings-vs-df join ever runs.
-    "q74_novelty" -> ((s, dir) =>
-      functions.TermStats.noveltyScore(t(s, dir, "documents").df)),
-
-    // §2#56 adaptive per-source quality gate: each source thresholds
-    // against its own p25 stopword ratio — per-domain cutoffs instead
-    // of one global gate; threshold table broadcast under a size gate.
-    "q75_adaptive_filter" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      val scored = t(s, dir, "documents").df
-        .select(col("doc_id"), col("source"), T.tokens(col("text")).as("w"))
-        .withColumn("stop_ratio",
-          T.markerCount(col("w"), Seq("the", "a")).cast("double") / size(col("w")))
-        .drop("w")
-      functions.Profile.adaptiveFilter(scored, "source", "stop_ratio", 0.25)
-        .select(col("doc_id"), col("source"), col("stop_ratio"),
-          col("thr").cast("double").as("thr"))
-    }),
-
-    // §2#57 per-label centroids: dim decimal sums in ONE partial agg —
-    // the corpus never explodes before the shuffle; means divide as
-    // double after the exact decimal aggregation.
-    "q76_label_centroids" -> ((s, dir) =>
-      operators.Similarity.labelCentroids(
-        Tafra.readParquet(s, s"$dir/embeddings.parquet").df)),
-
-    // §2#27b sliding streaming windows: 1-hour hopping every 15 min —
-    // each event in exactly 4 windows, expanded map-side before the
-    // same partial-agg shuffle as tumbling.
-    "q77_stream_sliding" -> ((s, dir) =>
-      streaming.Events.slidingByType(s, s"$dir/events.parquet")),
-
-    // §2#58 token-budget mixing: fractions DERIVED from per-source
-    // token totals (min(1, budget/total)) — the "N tokens of web, M of
-    // code" mixture spec; src0's oversized budget exercises the cap.
-    "q78_token_budget_mix" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .update("n_tok", size(split(trim(col("text")), "\\s+")))
-        .mixToBudget("source", "n_tok",
-          Map("src0" -> 100000L, "src1" -> 1000L, "src2" -> 500L, "src3" -> 100L),
-          Seq("doc_id"))
-        .select(Seq("doc_id", "source", "n_tok", "keep_frac")).df),
-
-    // §2#59 text normalization (pre-dedup canonicalizer): NFC unifies
-    // byte-distinct spellings, controls strip, whitespace collapses.
-    // The corpus is clean ASCII, so decomposed accents / a control
-    // char / tab-space mess are planted (q43's pattern) — the oracle
-    // genuinely checks the normalization, not a no-op.
-    "q79_text_normalize" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      t(s, dir, "documents").df
-        .select(col("doc_id"),
-          concat(col("text"),
-            lit(" cafe\u0301 nai\u0308ve\u0007  x \t y "),
-            col("doc_id").cast("string")).as("dirty"))
-        .select(col("doc_id"), T.normalizeText(col("dirty")).as("clean"))
-    }),
-
-    // §2#30g cross-source 8-gram overlap matrix: the symmetric
-    // inter-source duplication census (decontaminate's all-pairs form).
-    "q80_source_overlap" -> ((s, dir) =>
-      operators.Dedup.sourceOverlapMatrix(t(s, dir, "documents").df)),
-
-    // §2#37e top-100 bigram collocations by PMI: multi-word-expression
-    // mining for tokenizer vocab / phrase-aware keys; ln operand is one
-    // fixed-association double of exact longs, decimal-quantized.
-    "q81_pmi_collocations" -> ((s, dir) =>
-      functions.TermStats.pmiCollocations(t(s, dir, "documents").df)),
-
-    // §2#42c FORWARD as-of: each click matched to the user's NEXT
-    // purchase at-or-after it — backward machinery on negated times.
-    "q82_asof_forward" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("cus"), col("value").as("click_value"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("bus"), col("value").as("buy_value"))
-      operators.AsofJoin.asofJoinForward(clicks, buys,
-        "user_id", "cus", "bus", Seq("bus", "buy_value"))
-    }),
-
-    // §2#60 wide pivot: per-priority totals by order status. Explicit
-    // pivot values — the discovery variant hides a distinct+collect
-    // pass over the pivot column. Catalyst rewrites to per-value
-    // conditional aggs: ONE partial-agg shuffle, same shape as the
-    // oracle's CASE WHEN form.
-    "q83_pivot" -> ((s, dir) => {
-      val wide = t(s, dir, "orders")
-        .update("price_d", dec(col("o_totalprice")))
-        .pivot(Seq("o_orderpriority"), "o_orderstatus", Seq("F", "O", "P"),
-          Agg("total", "sum", "price_d"))
-        .df.toDF("o_orderpriority", "total_f", "total_o", "total_p")
-      wide.select(col("o_orderpriority"),
-        col("total_f").cast("double").as("total_f"),
-        col("total_o").cast("double").as("total_o"),
-        col("total_p").cast("double").as("total_p"))
-    }),
-
-    // §2#30h blocked edit-distance entity resolution: the distinct
-    // part-name catalog plus planted single-char typo variants (cut
-    // position content-derived from the entity id, mirrored in SQL);
-    // segment-pigeonhole blocking + threshold levenshtein verify.
-    "q84_fuzzy_pairs" -> ((s, dir) => {
-      val ent = t(s, dir, "part").df
-        .select(col("p_name").as("s"), col("p_partkey"))
-        .groupBy("s").agg(min("p_partkey").as("id"))
-      val l = length(col("s"))
-      val cut = pmod(col("id"), l.cast("long")).cast("int")
-      val variants = ent.filter(col("id") % 2 === 0)
-        .select((col("id") + 1000000L).as("id"),
-          concat(col("s").substr(lit(1), cut), lit("q"),
-                 col("s").substr(cut + lit(2), l)).as("s"))
-      val corpus = ent.select("id", "s").unionByName(variants)
-      operators.Dedup.editDistancePairs(corpus, "id", "s", maxDist = 2, maxBlock = 100)
-    }),
-
-    // §2#39b winnowing (MOSS) fingerprints: rightmost-min of each
-    // 4-window over 4-gram hashes, selected map-side via packed-long
-    // array_min. Tokens materialize ACROSS the pinned rebalance: the
-    // exchange makes `w` a real array column, so the gram lambda's
-    // element_at hits O(1) attribute data instead of re-splitting the
-    // text per reference (HOFs are interpreted — no CSE), and the
-    // CPU-heavy selection stage gets full parallelism off a
-    // single-row-group scan.
-    "q85_winnow" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      t(s, dir, "documents").df
-        .select(col("doc_id"), T.tokens(col("text")).as("w"))
-        .repartition(nPart, col("doc_id"))
-        .select(col("doc_id"), explode(T.winnow(col("w"), 4, 4)).as("packed"))
-        .select(col("doc_id"),
-          shiftright(col("packed"), 20).as("fp"),
-          (lit(1048575) - col("packed").bitwiseAND(lit(1048575L))).cast("int").as("pos"))
-    }),
-
-    // §2#53b resample: per-user 6-hour grid with as-of forward fill —
-    // irregular events → regular series. Grid anchored by exact
-    // integer pmod arithmetic; fill reuses the one-shuffle asof.
-    "q86_resample" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.resample(ev, "user_id", "tus", 21600000000L, Seq("tus", "value"))
-        .withColumnsRenamed(Map("tus" -> "last_ts", "value" -> "last_value"))
-    }),
-
-    // §2#28e stream-static broadcast enrich: live events against a
-    // precomputed per-user profile, daily windowed anomaly counts.
-    "q87_stream_enrich" -> ((s, dir) =>
-      streaming.Events.streamEnrichAnomalies(s, s"$dir/events.parquet")),
-
-    // §2#34b kNN majority-vote classification over the embeddings:
-    // top-10 cosine neighbors vote, ties to the smaller label.
-    "q88_knn_classify" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      val queries = emb.filter(col("vec_id") < 8)
-      operators.Similarity.knnClassify(emb, queries)
-        .join(queries.select(col("vec_id").as("query_id"),
-          col("label").as("true_label")), Seq("query_id"))
-        .withColumn("correct", col("pred_label") === col("true_label"))
-    }),
-
-    // §2#37f sparse TF-IDF all-pairs cosine: lexical near-dup pairs
-    // from the df-pruned inverted index (term-at-a-time dot products,
-    // decimal-exact weights — no embedding model needed).
-    "q89_tfidf_pairs" -> ((s, dir) =>
-      functions.TermStats.tfidfSimilarPairs(t(s, dir, "documents").df)),
-
-    // §2#4b semi/anti joins: per-segment counts of customers with no
-    // orders (NOT EXISTS) and with >=1 finished order (EXISTS) — the
-    // relational filter joins, no fan-out, no widening.
-    "q90_semi_anti" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val orders = t(s, dir, "orders")
-      val none = cust.antiJoin(orders, Seq(("c_custkey", "o_custkey", "==")))
-        .df.groupBy("c_mktsegment").agg(count(lit(1)).as("n_no_orders"))
-      val withF = cust.semiJoin(orders.filter(col("o_orderstatus") === "F"),
-          Seq(("c_custkey", "o_custkey", "==")))
-        .df.groupBy("c_mktsegment").agg(count(lit(1)).as("n_with_f"))
-      none.join(withF, Seq("c_mktsegment"), "full")
-        .select(col("c_mktsegment"),
-          coalesce(col("n_no_orders"), lit(0L)).as("n_no_orders"),
-          coalesce(col("n_with_f"), lit(0L)).as("n_with_f"))
-    }),
-
-    // §2#56b per-domain percentile-rank (cume_dist) normalization via
-    // the value-histogram window — never a per-row group window.
-    "q91_percentile_rank" -> ((s, dir) =>
-      functions.Profile.percentileRank(
-        t(s, dir, "documents").select(Seq("doc_id", "source", "n_chars")).df,
-        "source", "n_chars")),
-
-    // §2#43b z-order (Morton) clustering key over (partkey, suppkey):
-    // the multi-dimensional layout key min/max-pruned scans want.
-    "q92_zorder" -> ((s, dir) =>
-      t(s, dir, "lineitem").df
-        .select(col("l_orderkey"), col("l_linenumber"),
-          functions.Layout.zorderKey(col("l_partkey"), col("l_suppkey")).as("zkey"))),
-
-    // §2#32b PPJoin prefix-filtered Jaccard >= 4/5 over 3-gram shingle
-    // sets: EXACT recall (no df-cap loss) from a (1-t)-sized index;
-    // integer threshold arithmetic, no float boundary.
-    "q93_jaccard_prefix" -> ((s, dir) =>
-      operators.Dedup.jaccardPrefixJoin(t(s, dir, "documents").df)),
-
-    // §2#46c sliding-window chunking (the RAG/embedding chunker):
-    // 20-token windows, stride 15, tail shortened — map-only.
-    "q94_sliding_chunks" -> ((s, dir) =>
-      operators.Packing.slidingChunks(t(s, dir, "documents").df)),
-
-    // §2#45c fixed-count per-stratum hash sample: exactly 10 docs per
-    // source, content-addressed, nested as k grows.
-    "q95_stratified_topk" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .sampleTopKByHash(10, Seq("source"), Seq("doc_id"))
-        .select(Seq("doc_id", "source")).df),
-
-    // §2#52b one-pass Pearson correlation matrix (decimal-exact sums,
-    // engine-identical double formula) over lineitem numerics.
-    "q96_corr_matrix" -> ((s, dir) =>
-      functions.Profile.corrMatrix(t(s, dir, "lineitem").df,
-        Seq("l_quantity", "l_extendedprice", "l_discount"))),
-
-    // §2#30i PageRank (3 rounds, damping 17/20) over the cos>=0.4
-    // embedding-similarity graph: exemplar/centrality scoring via
-    // join + decimal-quantized partial-agg rounds.
-    "q97_pagerank" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.4)
-      operators.Graph.pageRank(pairs, "vec_a", "vec_b")
-    }),
-
-    // §2#53c ordered funnel view → click → purchase: per-step entry
-    // times chained by user-keyed joins, no per-user sort.
-    "q98_funnel" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("event_type"))
-      operators.Behavior.funnel(ev, Seq("view", "click", "purchase"))
-    }),
-
-    // §2#53d retention cohorts by first active day; exact integer day
-    // arithmetic; (user, day) deduped before anything aggregates.
-    "q99_retention" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"))
-      operators.Behavior.retention(ev)
-    }),
-
-    // §2#45d weighted sampling without replacement (A-ES exponential
-    // keys from content-addressed uniforms): 5 per source, selection
-    // probability scaling with n_chars.
-    "q100_weighted_topk" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .sampleWeightedTopK(5, Seq("source"), "n_chars", Seq("doc_id"))
-        .select(Seq("doc_id", "source", "n_chars")).df),
-
-    // §2#53e time-weighted average: each observation weighted by how
-    // long it stayed current — the correct mean for irregular samples.
-    "q101_twap" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.twap(ev, "user_id", "tus", "value", "event_id")
-    }),
-
-    // §2#53f interval merging: 10-minute activity windows per event,
-    // fused into islands — per-user busy time and island counts.
-    "q102_interval_merge" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("s0"))
-        .withColumn("e0", col("s0") + 600000000L)
-      operators.Rolling.mergeIntervals(ev, "user_id", "s0", "e0")
-    }),
-
-    // §2#27c streaming trending: incrementally-maintained hourly
-    // counts, top-3 per hour ranked per emission (foreachBatch shape).
-    "q103_stream_trending" -> ((s, dir) =>
-      streaming.Events.trendingByHour(s, s"$dir/events.parquet")),
-
-    // §2#52c CUBE: all four grouping combinations in one pass,
-    // grouping() flags disambiguating real NULLs from subtotal rows.
-    "q104_cube" -> ((s, dir) =>
-      t(s, dir, "orders").df
-        .cube(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(grouping(col("o_orderpriority")).cast("int").as("g_pri"),
-             grouping(col("o_orderstatus")).cast("int").as("g_st"),
-             count(lit(1)).as("n"),
-             sum(dec(col("o_totalprice"))).cast("double").as("total"))),
-
-    // §2#52d robust outliers: |v − group median| > 3·MAD, all-decimal
-    // deviation arithmetic — no float boundary anywhere.
-    "q105_mad_outliers" -> ((s, dir) =>
-      functions.Profile.madOutliers(
-        t(s, dir, "documents").select(Seq("doc_id", "source", "n_chars")).df,
-        "source", "n_chars")),
-
-    // §2#53g market-basket lift over per-user event-type sets:
-    // support / confidence / lift per type pair.
-    "q106_basket_lift" -> ((s, dir) =>
-      operators.Behavior.basketLift(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select("user_id", "event_type"),
-        "user_id", "event_type")),
-
-    // §2#52e behavioral diversity: Shannon entropy of each user's
-    // event-type distribution (decimal-quantized p·ln p terms).
-    "q107_label_entropy" -> ((s, dir) =>
-      functions.Profile.labelEntropy(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select("user_id", "event_type"),
-        "user_id", "event_type")),
-
-    // §2#20b semi-structured extraction: JSON payload fields pulled
-    // with get_json_object (codegen'd path expression — no UDF, no
-    // full from_json schema materialization for one field), then a
-    // plain relational aggregation over the extracted values.
-    "q108_json_extract" -> ((s, dir) =>
-      streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("int").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-             sum(col("k").cast("long")).as("k_sum"),
-             count(when(col("k") > 50, 1)).as("n_high"))),
-
-    // §2#60 count-min heavy hitters: 4×1024 md5-cell sketch over the
-    // event user stream, point estimates (min over rows — upper bound)
-    // for every distinct key joined with exact counts, top 20. The
-    // sketch is the fixed-size mergeable artifact; estimate joins
-    // BROADCAST it.
-    "q109_cms_topk" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id").cast("string").as("user_id"))
-      val sketch = functions.Sketches.cmsBuild(ev, "user_id")
-      val exact = ev.groupBy("user_id").agg(count(lit(1)).as("exact"))
-      functions.Sketches.cmsEstimate(sketch, exact.select("user_id"), "user_id")
-        .join(exact, Seq("user_id"))
-        .orderBy(col("est").desc, col("user_id")).limit(20)
-        .select("user_id", "est", "exact")
-    }),
-
-    // §2#61 HyperLogLog distinct (p=10, md5 registers): integer-exact
-    // register sum (Z scaled by 2^33 — every term a BIGINT), one
-    // double division at the end in an oracle-mirrored expression
-    // shape; exact distinct alongside for the error audit.
-    "q110_hll_distinct" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val regs = functions.Sketches.hllRegisters(ev, "user_id", 10)
-      functions.Sketches.hllEstimate(regs, 10)
-        .crossJoin(ev.agg(countDistinct("user_id").as("exact_distinct")))
-    }),
-
-    // §2#62 CDC merge: a deterministic change feed derived from
-    // lineitem (latest l_linenumber wins per order; ~1/7 of keys
-    // delete, the rest update status+price) applied onto the orders
-    // snapshot — winner-per-key window over the FEED only, one
-    // full-outer equi-join against the untouched base.
-    "q111_cdc_upsert" -> ((s, dir) => {
-      val base = t(s, dir, "orders")
-        .select(Seq("o_orderkey", "o_orderstatus", "o_totalprice")).df
-      val changes = t(s, dir, "lineitem").df.select(
-        col("l_orderkey").as("o_orderkey"),
-        col("l_linenumber").cast("long").as("seq"),
-        when(pmod(functions.Hashing.md5Long32(
-          concat(lit("op"), col("l_orderkey"), lit(":"), col("l_linenumber"))), lit(7)) === 0,
-          lit("D")).otherwise(lit("U")).as("op"),
-        lit("R").as("o_orderstatus"),
-        col("l_extendedprice").as("o_totalprice"))
-      // l_linenumber repeats within an order in this corpus, so the
-      // price column completes the total order the apply needs
-      operators.Upsert.applyChanges(base, changes, "o_orderkey", "seq", "op",
-        tieCols = Seq("o_totalprice"))
-    }),
-
-    // §2#64 analytic window sweep: the remaining rank/offset/
-    // distribution window functions over one shared (key, order) spec —
-    // one sort, one pass, no joins.
-    "q113_window_suite" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-      t(s, dir, "orders").select(Seq("o_custkey", "o_orderkey", "o_totalprice")).df
-        .withColumn("rn", row_number().over(w))
-        .withColumn("prev_price", lag("o_totalprice", 1).over(w))
-        .withColumn("next_price", lead("o_totalprice", 1).over(w))
-        .withColumn("first_price", first("o_totalprice").over(w))
-        .withColumn("tile", ntile(4).over(w))
-        .withColumn("cd", cume_dist().over(w))
-        .withColumn("pr", percent_rank().over(w))
-    }),
-
-    // §2#30j exact triangle counts over the cos>=0.4 similarity graph:
-    // (degree, id) edge orientation — wedge fan-out bounded by
-    // sqrt(2|E|) per vertex on ANY degree distribution, each triangle
-    // closes exactly one oriented wedge.
-    "q114_triangles" -> ((s, dir) => {
-      // 0.1 (vs pagerank's 0.4): this synthetic embedding space has no
-      // cos>=0.4 triangles at any sf — 0.1 yields a real triangle set
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.1)
-      operators.Graph.triangleCounts(pairs, "vec_a", "vec_b")
-    }),
-
-    // §2#65 SCD2 history build: the per-user event_type change log
-    // compressed to validity periods (valid_to stitched by lead over
-    // the PERIOD rows, null = current) — micro-second longs out, so no
-    // timestamp formatting is in the hash.
-    "q115_scd2" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("event_type"))
-      operators.Rolling.scd2(ev, "user_id", "tus", "event_type",
-          tieCols = Seq("event_id"))
-        .select(col("user_id"), col("value").as("status"),
-          col("valid_from").as("from_us"), col("valid_to").as("to_us"),
-          col("n_rows"), col("period_seq"))
-    }),
-
-    // §2#61b per-group HLL: distinct users per event type from one
-    // grouped register table (|groups|·2^p rows max) — the segment-
-    // cardinality report without shuffling every (group, key) pair;
-    // exact countDistinct alongside for the error audit.
-    "q116_hll_by_group" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val regs = functions.Sketches.hllRegistersBy(ev, Seq("event_type"), "user_id", 10)
-      functions.Sketches.hllEstimateBy(regs, Seq("event_type"), 10)
-        .join(ev.groupBy("event_type")
-          .agg(countDistinct("user_id").as("exact_distinct")), Seq("event_type"))
-    }),
-
-    // §2#60b streaming sketch build: the CMS aggregation over the
-    // event STREAM — state is the fixed-size sketch itself, and the
-    // final snapshot hash-matches the batch build (commutative cells),
-    // so the identical oracle verifies the streaming path.
-    "q117_stream_sketch" -> ((s, dir) =>
-      streaming.Events.streamCmsSketch(s, s"$dir/events.parquet")),
-
-    // §2#50b point-in-interval join: lineitems shipped inside their
-    // order's 120-day fulfillment window — intervals bucket-split to
-    // 32-day cells, points keep one cell, plain hash equi-join + exact
-    // BETWEEN residual.
-    "q118_interval_join" -> ((s, dir) => {
-      val usDay = 86400000000L
-      // dates ship as TIMESTAMP_NTZ; the cast reads them in the session
-      // tz, pinned UTC everywhere (the Events.normTs contract)
-      val pts = t(s, dir, "lineitem").df.select(
-        col("l_orderkey"), col("l_linenumber"),
-        expr(s"unix_micros(cast(l_shipdate as timestamp)) div $usDay").as("ship_day"))
-      val ivs = t(s, dir, "orders").df.select(
-        col("o_orderkey").as("l_orderkey"),
-        expr(s"unix_micros(cast(o_orderdate as timestamp)) div $usDay").as("d0"))
-        .withColumn("d1", col("d0") + 120)
-      operators.RangeJoin.intervalJoin(pts, ivs, Seq("l_orderkey"),
-        "ship_day", "d0", "d1", bucket = 32L)
-    }),
-
-    // §2#53h first-order Markov transitions: (from → to) step counts
-    // and row-normalized probabilities over per-user event sequences.
-    "q119_transitions" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("event_type"))
-      operators.Behavior.transitions(ev, "user_id", "tus", "event_type",
-        tieCols = Seq("event_id"))
-    }),
-
-    // §2#53v Markov removal-effect attribution: journeys → transition
-    // chain → per-channel counterfactual absorption drop, normalized
-    // into conversion-value shares. 16 value-iteration rounds on the
-    // scenario-keyed model frame; the oracle unrolls every round.
-    "q234_removal_effect" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"),
-          col("event_type"), col("value"))
-      operators.Behavior.removalEffect(ev, "user_id", "tus", "event_type",
-        "purchase", "value", tieCols = Seq("event_id"), rounds = 16)
-    }),
-
-    // §2#52y ROC AUC per group via the exact rank-sum identity — the
-    // per-group, [0,1]-normalized form of q215's U statistic; one
-    // histogram partial agg + a group-partitioned cumulative window.
-    "q235_grouped_auc" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("value"),
-          (pmod(col("user_id"), lit(2)) === 1).as("label"))
-      functions.Eval.groupedAuc(ev, "event_type", "label", "value", unitScale = 100L)
-    }),
-
-    // §2#52z Jensen–Shannon drift: finite on one-side-empty bins (the
-    // PSI drop / KL blow-up case), bounded by ln 2 — the psi plan
-    // shape exactly (bin cells + broadcast totals + one-row agg).
-    "q236_js_divergence" -> ((s, dir) =>
-      functions.Eval.jsDivergence(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"),
-        "event_type", "click", "purchase", "value", binWidth = 10.0)),
-
-    // §2#52aa pairwise mutual information (feature redundancy /
-    // leakage audit): all column pairs from ONE corpus pass —
-    // per-row pair-cell explode (k(k−1)/2 structs, k fixed), one
-    // partial agg to category-pair cells, marginals as aggs OVER the
-    // cells joined back.
-    "q237_mi_matrix" -> ((s, dir) => {
-      val o = t(s, dir, "orders").df.select(
-        col("o_orderstatus"), col("o_orderpriority"),
-        year(col("o_orderdate")).cast("string").as("o_year"))
-      functions.Eval.miMatrix(o, Seq("o_orderstatus", "o_orderpriority", "o_year"))
-    }),
-
-    // §2#61f KMV bottom-k distinct sketch: two shard states (split by
-    // event parity) merged, then estimated — the mergeable-state
-    // merge≡direct contract (the oracle computes directly over the
-    // union; equality IS the split-invariance proof, the q227 rule).
-    "q238_kmv_distinct" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("user_id"), col("event_id"))
-      val sA = functions.Sketches.kmvState(
-        ev.filter(col("event_id") % 2 === 0), Seq("event_type"), "user_id")
-      val sB = functions.Sketches.kmvState(
-        ev.filter(col("event_id") % 2 === 1), Seq("event_type"), "user_id")
-      val m = functions.Sketches.mergeKmvStates(Seq(sA, sB), Seq("event_type"))
-      functions.Sketches.kmvEstimate(m, Seq("event_type"))
-    }),
-
-    // §2#52ab cumulative gain/lift table: deciles of the (score desc,
-    // id) total order via the two-level q144 global-ordinal
-    // decomposition — never a global row window; the final cumulative
-    // window runs over 10 bucket rows.
-    "q239_lift_table" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("value"),
-          (pmod(col("user_id"), lit(2)) === 1).as("label"))
-      functions.Eval.liftTable(ev, "label", "value", "event_id",
-        nBuckets = 10, unitScale = 100L, bucketWidth = 5000L)
-    }),
-
-    // §2#30o modularity of a community labeling over the co-purchase
-    // graph (parts sharing an order, a<b, distinct; community =
-    // partkey mod 8) — grades what labelProp/components propose;
-    // everything edge-list-sized, exact integer aggs, one mirrored
-    // double evaluation per community.
-    "q240_modularity" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").df.select(col("l_orderkey"), col("l_partkey"))
-      // pair generation from per-order item ARRAYS, not a self-join:
-      // one hash shuffle to (order, sorted item set), then the C(n,2)
-      // combinations explode MAP-SIDE (bounded by the ≤13-line order
-      // contract) — a sort-merge self-join pays two corpus sorts for
-      // the same rows. a<b canonical by the sort.
-      val pairs = li.groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("it"))
-        .select(explode(flatten(transform(col("it"), (x, i) =>
-          transform(slice(col("it"), i + 2, size(col("it"))),
-            y => struct(x.as("pa"), y.as("pb")))))).as("pr"))
-        .select(col("pr.pa"), col("pr.pb"))
-      // no .distinct() here: modularity canonicalizes + distincts once
-      val labels = li.select(col("l_partkey").as("node")).distinct()
-        .withColumn("community", pmod(col("node"), lit(8)))
-      operators.Graph.modularity(pairs, "pa", "pb", labels)
-    }),
-
-    // §2#30p content-defined chunk dedup: boundaries where the
-    // trailing 16-gram's md5 ends in '0' — the insertion-robust form
-    // of q55's fixed grid; map-side boundary HOFs, the same two
-    // corpus shuffles (min-struct first-occurrence + per-doc rebuild).
-    "q241_cdc_chunks" -> ((s, dir) =>
-      operators.Dedup.cdcChunkDedup(t(s, dir, "documents").df, w = 16)),
-
-    // §2#53w frequent 3-itemsets by map-side basket enumeration:
-    // C(w,3) combinations explode in the map stage (bounded basket
-    // width, loud refusal above), zero corpus self-joins — the triple
-    // extension of q106's pair lift.
-    "q243_frequent_triples" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(concat_ws("|", col("user_id"),
-          to_date(col("ts")).cast("string")).as("basket"), col("event_type"))
-      operators.Behavior.frequentTriples(ev, "basket", "event_type", minCount = 2L)
-    }),
-
-    // §2#61g KMV set operations: per-day click vs purchase user sets —
-    // Jaccard read directly off the k-min union sample (the estimator
-    // HLL inclusion–exclusion can't give); states, never corpora.
-    "q244_kmv_setops" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(to_date(col("ts")).as("day"), col("event_type"), col("user_id"))
-      val sa = functions.Sketches.kmvState(
-        ev.filter(col("event_type") === "click"), Seq("day"), "user_id")
-      val sb = functions.Sketches.kmvState(
-        ev.filter(col("event_type") === "purchase"), Seq("day"), "user_id")
-      functions.Sketches.kmvSetEstimates(sa, sb, Seq("day"))
-    }),
-
-    // §2#61f streaming KMV build: per-batch states folded via
-    // mergeKmvStates (foreachBatch, history never rescanned) — final
-    // state bit-identical to the direct build across ANY micro-batch
-    // boundaries; estimates read off it exactly like q238.
-    "q245_stream_kmv" -> ((s, dir) =>
-      functions.Sketches.kmvEstimate(
-        streaming.Events.streamKmv(s, s"$dir/events.parquet"), Seq("event_type"))),
-
-    // §2#60f CDF probes on the quantile state: "what share of values
-    // sit at or below x" read off the standing dyadic bins — the
-    // inverse of q227's quantileOf; probe bins computed with the
-    // state's own arithmetic, constant-folded.
-    "q255_quantile_cdf" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("value"))
-      val st = functions.Sketches.quantileState(ev, Seq("event_type"), "value")
-      functions.Sketches.cdfOf(st, Seq("event_type"), Seq(25.0, 50.0, 100.0))
-    }),
-
-    // §2#60g (r7) per-hour streaming quantile states: one dyadic bin
-    // table per event-time hour (watermarked append in production —
-    // sealed windows emit finalized states, spec-asserted; complete
-    // mode here for the oracle), read out as the live per-hour
-    // p50/p99 — "latency percentiles per hour, forever, in constant
-    // per-window memory".
-    "q257_stream_quantile_hourly" -> ((s, dir) => {
-      val st = streaming.Events.streamQuantileHourly(s, s"$dir/events.parquet")
-      val p50 = functions.Sketches.quantileOf(st, Seq("hour_start"), 1, 2)
-        .select(col("hour_start"), col("n"), col("q_est").as("p50"))
-      val p99 = functions.Sketches.quantileOf(st, Seq("hour_start"), 99, 100)
-        .select(col("hour_start"), col("q_est").as("p99"))
-      p50.join(p99, Seq("hour_start"))
-    }),
-
-    // §2#61h (r7) per-hour streaming KMV: one bottom-k hash array per
-    // event-time hour via the foreachBatch fold with explicit
-    // watermark sealing (bottom-k is not a bounded native streaming
-    // agg; state = open-windows × k hashes) — distinct-per-hour WITH
-    // downstream set-op support; estimates read off the states.
-    "q258_stream_kmv_hourly" -> ((s, dir) =>
-      functions.Sketches.kmvEstimate(
-        streaming.Events.streamKmvHourly(s, s"$dir/events.parquet").drop("sealed"),
-        Seq("hour_start"))),
-
-    // §2#53ab (r7) classical additive seasonal decomposition of the
-    // hourly value series: y = trend (24h centered MA) + seasonal
-    // (hour-of-day mean detrended deviation) + residual — corpus
-    // collapses to hourly cells in one partial agg; every window after
-    // that is calendar-scaled (the §5 metadata exemption).
-    "q261_seasonal_decompose" -> ((s, dir) =>
-      operators.Rolling.seasonalDecompose(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"), "ts", "value")),
-
-    // §2#35o (r7) NDCG@k: the log-discount retrieval metric beside
-    // recall@k (q192) and AP@k (q253) — discount weights are shared
-    // integer nano-unit literals, so DCG/IDCG are exact longs and
-    // neither engine evaluates a logarithm.
-    "q262_ndcg" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.ndcgAtK(emb, emb.filter(col("vec_id") % 50 === 0), k = 10)
-    }),
-
-    // §2#52ag (r7) multi-class classification report: confusion-table
-    // marginals → per-class precision/recall/F1 + one overall row with
-    // macro averages, accuracy, and Cohen's κ. Predictions synthesized
-    // with a systematic event_id%7 confusion toward 'click' so every
-    // cell type (diagonal, off-diagonal, imbalance) is exercised.
-    "q263_classification_report" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type").as("actual"),
-          when(col("event_id") % 7 === 0, lit("click"))
-            .otherwise(col("event_type")).as("predicted"))
-      functions.Eval.classificationReport(ev, "actual", "predicted")
-    }),
-
-    // §2#52ah (r7) one-way ANOVA F across event types — the k-group
-    // mean screen (one F replaces k(k−1)/2 pairwise Welch tests);
-    // decimal moment sums, mirrored double F.
-    "q264_anova" -> ((s, dir) =>
-      functions.Profile.anovaF(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"), "event_type", "value")),
-
-    // §2#52ai (r7) Kruskal–Wallis H across event types — the rank-
-    // based k-group screen for heavy-tailed metrics; half-unit integer
-    // ranks over the joint value histogram, tie-corrected.
-    "q265_kruskal" -> ((s, dir) =>
-      functions.Profile.kruskalWallis(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"), "event_type", "value")),
-
-    // §2#52aj (r7) Brown–Forsythe Levene: variance-equality across
-    // event types (the ANOVA assumption check and a spread-drift
-    // signal) — ANOVA on |v − group median|, medians by exact
-    // inverse-ECDF rank selection.
-    "q266_levene" -> ((s, dir) =>
-      functions.Profile.levene(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"), "event_type", "value")),
-
-    // §2#30r (r7) personalized PageRank from a seed set over the
-    // cos>=0.4 similarity graph (q97's edges): seed-relative relevance
-    // for corpus expansion — sparse rank frame grows with the reached
-    // frontier, teleport only to seeds.
-    "q267_ppr" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      val pairs = operators.Dedup.embeddingPairs(emb).filter(col("cos") >= 0.1)
-      operators.Graph.personalizedPageRank(pairs, "vec_a", "vec_b",
-        emb.filter(col("vec_id") % 2 === 0).select(col("vec_id")))
-    }),
-
-    // §2#30s (r7) degree assortativity over the same similarity graph:
-    // do hubs link to hubs? — one scalar from exact degree sums over
-    // the directed edge list.
-    "q268_assortativity" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.1)
-      operators.Graph.assortativity(pairs, "vec_a", "vec_b")
-    }),
-
-    // §2#53ac (r7) Pettitt change-point over the daily mean-value
-    // series: rank-based single-shift detector — the series is the
-    // collapsed per-day table (calendar-scale, §5 exemption), means
-    // are exact-integer divisions rounded 1e-6 on both engines.
-    "q269_pettitt" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      val daily = ev.groupBy("day")
-        .agg(round(sum(col("_vq").cast("decimal(38,0)")).cast("double")
-          / count(lit(1)).cast("double") / 1e6, 6).as("day_mean"))
-      functions.Profile.pettitt(daily, "day", "day_mean")
-    }),
-
-    // §2#52ak (r7) Cramér's V association matrix over the q237
-    // categorical triple — χ² normalized to [0,1] per pair so
-    // associations are comparable across level counts; empty cells
-    // folded in closed form.
-    "q270_cramers_v" -> ((s, dir) =>
-      functions.Eval.cramersV(
-        t(s, dir, "orders").df.select(col("o_orderstatus"), col("o_orderpriority"),
-          year(col("o_orderdate")).as("o_year")),
-        Seq("o_orderstatus", "o_orderpriority", "o_year"))),
-
-    // §2#52al (r7) declarative constraint audit (the Deequ shape):
-    // completeness / key uniqueness / bounds / enum domain in ONE
-    // shared agg pass + referential integrity as one anti-join count —
-    // the assertion layer over the descriptive profile family.
-    "q271_quality_audit" -> ((s, dir) => {
-      import functions.Quality._
-      audit(t(s, dir, "orders").df, Seq(
-        Completeness("o_custkey"),
-        Uniqueness("o_orderkey"),
-        MinBound("o_totalprice", 0.0),
-        MaxBound("o_totalprice", 1000000.0),
-        NonNegative("o_totalprice"),
-        InSet("o_orderstatus", Seq("F", "O", "P")),
-        ForeignKey("o_custkey", t(s, dir, "customer").df, "c_custkey")))
-    }),
-
-    // §2#62p (r7) manifest data-skipping: per-file min/max recorded in
-    // the TxTable transaction log at commit (the Delta shape), range
-    // reads prune FILES from the manifest alone — the gated query
-    // proves the pruned read returns exactly the full snapshot's
-    // filtered rows; the spec proves files were actually skipped.
-    "q272_tx_skipping" -> ((s, dir) => {
-      val table = sidePath("graft_txk", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .repartitionByRange(8, col("o_orderkey"))
-      sources.TxTable.commit(ord, table, statsCols = Seq("o_orderkey"))
-      def summarize(df: org.apache.spark.sql.DataFrame, tag: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(tag).as("section"), col("n_rows"), col("sum_price"))
-      summarize(sources.TxTable.readWhere(s, table, "o_orderkey", 1000.0, 3000.0), "pruned")
-        .unionByName(summarize(sources.TxTable.read(s, table)
-          .filter(col("o_orderkey").between(1000, 3000)), "snapshot"))
-    }),
-
-    // §2#52am (r7) PR-AUC per group: the imbalance-honest companion to
-    // q235's ROC AUC — tie-aware step interpolation over the same
-    // (group, score)-histogram state, exact cumulative counts.
-    "q273_pr_auc" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), (pmod(col("user_id"), lit(2)) === 1).as("label"),
-          col("value"))
-      functions.Eval.groupedPrAuc(ev, "event_type", "label", "value", unitScale = 100L)
-    }),
-
-    // §2#30u (r7) Jaccard link prediction over the cos>=0.1 similarity
-    // graph: the degree-penalized companion to q200's RA — cn from the
-    // hub-capped wedge enumeration, union from full degrees, one
-    // division.
-    "q274_jaccard_links" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.1)
-      operators.Graph.jaccardLinkPrediction(pairs, "vec_a", "vec_b")
-    }),
-
-    // §2#52an (r7) Welch's heteroscedastic ANOVA across event types:
-    // the k-group mean screen without q264's equal-variance assumption
-    // — run it when q266's Levene rejects.
-    "q275_welch_anova" -> ((s, dir) =>
-      functions.Profile.welchAnova(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"), "event_type", "value")),
-
-    // §2#52ao (r7) Murphy decomposition of the binned Brier score over
-    // the q242 calibration bins: reliability (recalibration can fix) −
-    // resolution (it can't add) + irreducible uncertainty.
-    "q276_brier" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((col("value") / 500.0).as("pred"),
-          (pmod(col("user_id"), lit(2)) === 1).as("label"))
-      functions.Eval.brierDecomposition(ev, "label", "pred", nBins = 10)
-    }),
-
-    // §2#60h (r7) per-hour streaming CMS: the frequency member of the
-    // per-window sealed-emission family (HLL q152 / quantile q257 /
-    // KMV q258) — read out as per-hour point estimates for a fixed
-    // probe key set (min over depth rows, the classic CM upper bound).
-    "q277_stream_cms_hourly" -> ((s, dir) => {
-      val sk = streaming.Events.streamCmsHourly(s, s"$dir/events.parquet")
-      val probes = s.createDataFrame(Seq(Tuple1("1"), Tuple1("2"), Tuple1("3")))
-        .toDF("k")
-      val pc = probes.select(col("k"), posexplode(array((0 until 4).map(j =>
-        functions.Sketches.cmsCell(col("k"), j, 1024)): _*)).as(Seq("j", "cell")))
-      val skr = sk.select(col("hour_start").as("_h"), col("j").as("_j"),
-        col("cell").as("_cell"), col("cnt"))
-      sk.select(col("hour_start")).distinct()
-        .crossJoin(pc)
-        .join(skr, col("_h") === col("hour_start")
-          && col("_j") === col("j") && col("_cell") === col("cell"), "left")
-        .groupBy(col("hour_start"), col("k").as("user_id"))
-        .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))
-    }),
-
-    // §2#53ad (r7) Nelson–Aalen cumulative hazard on q249's
-    // time-to-conversion observations: the rate-space dual of the
-    // Kaplan–Meier curve — hazard ratios read directly off H(t).
-    "q278_hazard" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("event_type"))
-      val perUser = ev.groupBy("user_id").agg(
-        min(col("tus")).as("_t0"),
-        min(when(col("event_type") === "purchase", col("tus"))).as("_tc"),
-        max(col("tus")).as("_tm"))
-      val obs = perUser.select(
-        concat(lit("c"), pmod(col("user_id"), lit(3)).cast("string")).as("cohort"),
-        expr("(coalesce(_tc, _tm) - _t0) div 86400000000").as("dur_days"),
-        col("_tc").isNotNull.cast("int").as("converted"))
-      operators.Behavior.hazardCurve(obs, "cohort", "dur_days", "converted")
-    }),
-
-    // §2#38d (r7) vocabulary coverage curve: share of running text the
-    // top-k term types cover, at a probe ladder — the BPE/vocab budget
-    // read-out beside q174's Zipf slope; windows over the vocabulary
-    // table only.
-    "q279_vocab_coverage" -> ((s, dir) =>
-      functions.TermStats.vocabCoverage(t(s, dir, "documents").df)),
-
-    // §2#62q (r7) z-order + manifest skipping composed: the q92 layout
-    // committed through TxTable with BOTH dims' stats, then range
-    // reads on EITHER dim prune files from the transaction log —
-    // multi-dimensional data skipping, the full OPTIMIZE story.
-    "q280_tx_zorder_skip" -> ((s, dir) => {
-      val table = sidePath("graft_txz", dir)
-      sources.TxTable.drop(s, table)
-      val li = t(s, dir, "lineitem").df
-        .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
-      sources.TxTable.commit(
-        functions.Layout.zorderLayout(li, "l_orderkey", "l_partkey", 16),
-        table, statsCols = Seq("l_orderkey", "l_partkey"))
-      def summarize(df: org.apache.spark.sql.DataFrame, tag: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("l_quantity"))).cast("double").as("sum_qty"))
-          .select(lit(tag).as("section"), col("n_rows"), col("sum_qty"))
-      summarize(sources.TxTable.readWhere(s, table, "l_orderkey", 1000.0, 3000.0), "by_okey")
-        .unionByName(
-          summarize(sources.TxTable.readWhere(s, table, "l_partkey", 10.0, 60.0), "by_pkey"))
-    }),
-
-    // §2#53ae (r7) log-rank test across q249's conversion cohorts: the
-    // hypothesis-test read-out of the survival family — per-cohort
-    // observed vs expected deaths under the pooled-hazard null, with
-    // the k-sample chi-square approximation on the overall row.
-    "q281_log_rank" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("event_type"))
-      val perUser = ev.groupBy("user_id").agg(
-        min(col("tus")).as("_t0"),
-        min(when(col("event_type") === "purchase", col("tus"))).as("_tc"),
-        max(col("tus")).as("_tm"))
-      val obs = perUser.select(
-        concat(lit("c"), pmod(col("user_id"), lit(3)).cast("string")).as("cohort"),
-        expr("(coalesce(_tc, _tm) - _t0) div 86400000000").as("dur_days"),
-        col("_tc").isNotNull.cast("int").as("converted"))
-      operators.Behavior.logRank(obs, "cohort", "dur_days", "converted")
-    }),
-
-    // §2#52ap (r7) grouped multiclass MCC: the chance-corrected model-
-    // comparison scalar per segment — three synthetic "models" with
-    // DIFFERENT confusion rates (event_id mod 5/6/7 flipped to
-    // 'click') so the ranking itself is exercised, not just the value.
-    "q282_mcc" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(concat(lit("m"), pmod(col("user_id"), lit(3)).cast("string")).as("model"),
-          col("event_type").as("actual"),
-          when(pmod(col("event_id"), lit(5) + pmod(col("user_id"), lit(3))) === 0,
-            lit("click")).otherwise(col("event_type")).as("predicted"))
-      functions.Eval.mccByGroup(ev, "model", "actual", "predicted")
-    }),
-
-    // §2#53af (r7) forecast-accuracy scorecard: the naive lag-1
-    // forecast on each event type's daily mean series scored with
-    // MAPE/sMAPE/RMSE/MASE (seasonal-naive denominator, season=7) —
-    // the baseline every forecasting pipeline must publish first.
-    "q283_forecast_metrics" -> ((s, dir) =>
-      operators.Rolling.forecastAccuracy(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"),
-        "event_type", "ts", "value", season = 7)),
-
-    // §2#52aq (r7) supplier-concentration profile per nation: HHI /
-    // effective supplier count / top share over exact-cent revenue —
-    // the dependence audit dual to q155's Gini.
-    "q284_concentration" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").df
-      val sup = t(s, dir, "supplier").df
-      val rev = li.join(sup, col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_nationkey"), col("l_suppkey"),
-          (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
-      functions.Profile.concentration(rev, "s_nationkey", "l_suppkey", "rev")
-    }),
-
-    // §2#60i (r7) AMS F₂ sketch: 9 signed md5-family counters whose
-    // squared median estimates Σf_k² (self-join size / skew) — built
-    // in one partial agg, merged by addition, verified against the
-    // exact F₂ in the same result row.
-    "q285_ams_f2" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val est = functions.Sketches.amsF2Estimate(
-        functions.Sketches.amsF2Sketch(ev, "user_id", reps = 9))
-      val exact = ev.groupBy("user_id").agg(count(lit(1)).as("_c"))
-        .agg(sum((col("_c").cast("decimal(19,0)") * col("_c")).cast("decimal(38,0)"))
-          .as("_f2"))
-      est.crossJoin(exact)
-        .select(col("reps"), col("f2_est"),
-          col("_f2").cast("double").as("f2_exact"),
-          round(abs(col("f2_est") / col("_f2").cast("double") - lit(1.0)), 9)
-            .as("rel_err"))
-    }),
-
-    // §2#45f (r7) class-balanced downsampling: every language keeps
-    // exactly the minority language's count, lowest-content-hash rows
-    // first — verified by per-class size AND an order-free md5
-    // checksum of the kept ids (the exact selection, not just its
-    // cardinality).
-    "q286_balanced_sample" -> ((s, dir) => {
-      val bal = t(s, dir, "documents").balancedByClass(Seq("lang"), Seq("doc_id")).df
-      bal.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"),
-          sum(conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("long").cast("decimal(38,0)")).cast("string").as("id_digest"))
-    }),
-
-    // §2#53ag (r7) RFM segmentation of the customer base from orders:
-    // recency/frequency/monetary each scored 1–5 against exact global
-    // quintiles, collapsed to the ≤125-cell segment table.
-    "q287_rfm" -> ((s, dir) =>
-      operators.Behavior.rfmSegments(
-        t(s, dir, "orders").df, "o_custkey", "o_orderdate", "o_totalprice")),
-
-    // §2#30v (r7) HITS hubs & authorities over the bipartite
-    // customer→part purchase graph (2 alternating L1-normalized
-    // rounds, unrolled in the oracle): good buyers vs anchor products
-    // — the mutually-recursive centrality PageRank can't express.
-    "q288_hits" -> ((s, dir) => {
-      val edges = t(s, dir, "lineitem").df
-        .join(t(s, dir, "orders").df, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_partkey").as("part"))
-      operators.Graph.hits(edges, "cust", "part", iters = 2)
-    }),
-
-    // §2#62r (r7) copy-on-write row-level DELETE through TxTable: four
-    // range-bucketed single-file commits (manifest stats per file),
-    // then a delete whose range stats-prunes to ONE candidate file —
-    // the other three carry forward untouched (zero write
-    // amplification), CDC reads the version as remove+add of the
-    // rewritten subset only. Sections audit the final snapshot, the
-    // prune counts, and the CDC churn.
-    "q289_tx_delete" -> ((s, dir) => {
-      val table = sidePath("graft_txdel", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      val m = ord.agg(max(col("o_orderkey"))).head().getLong(0)
-      val width = (m + 3) / 4
-      // one distributed write for the 4-bucket history (commitSlices:
-      // identical per-version files/stats, minus 3 scan+write jobs)
-      sources.TxTable.commitSlices(ord, table,
-        expr(s"(o_orderkey - 1) div ${width}L"), 4,
-        statsCols = Seq("o_orderkey"))
-      val lo = 1.0
-      val hi = (width / 2).toDouble
-      val (v, nRewritten, nCarried) =
-        sources.TxTable.deleteWhere(s, table, "o_orderkey", lo, hi,
-          statsCols = Seq("o_orderkey"))
-      def summarize(df: org.apache.spark.sql.DataFrame, section: String, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(section).as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val snap = summarize(sources.TxTable.readVersion(s, table, v), "snapshot", "after_delete")
-      val files = s.createDataFrame(Seq(
-          ("files", "rewritten", nRewritten.toLong),
-          ("files", "carried", nCarried.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      val cdc = sources.TxTable.changes(s, table, v - 1, v)
-        .groupBy(concat(col("_change"), lit("@"), col("_version")).as("label"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("cdc").as("section"), col("label"), col("n_rows"), col("sum_price"))
-      snap.unionByName(files).unionByName(cdc)
-    }),
-
-    // §2#62s (r7) exactly-once idempotent commits (the Delta
-    // txnAppId/txnVersion contract): three event batches committed
-    // with (app, batch) markers, batch 0 REDELIVERED in between — the
-    // replay must be a no-op (version count stays 3, the duplicate
-    // reports not-applied, and the final table sums every event ONCE;
-    // a double apply fails the data row's hash).
-    "q290_tx_idempotent" -> ((s, dir) => {
-      val table = sidePath("graft_txid", dir)
-      sources.TxTable.drop(s, table)
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("value"))
-      def batch(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
-      val (v1, _) = sources.TxTable.commitIdempotent(batch(0), table, "ingest", 0L)
-      sources.TxTable.commitIdempotent(batch(1), table, "ingest", 1L)
-      val (vr, ar) = sources.TxTable.commitIdempotent(batch(0), table, "ingest", 0L)
-      sources.TxTable.commitIdempotent(batch(2), table, "ingest", 2L)
-      val tbl = sources.TxTable.read(s, table)
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum(floor(col("value") * 1000000L + lit(0.5)).cast("long")
-            .cast("decimal(38,0)")).cast("double") / 1e6, 6).as("metric"))
-        .select(lit("table").as("section"), lit("all").as("label"),
-          col("n_rows"), col("metric"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "n_versions", sources.TxTable.currentVersion(s, table).toLong),
-          ("meta", "replay_applied", if (ar) 1L else 0L),
-          ("meta", "replay_version", vr.toLong),
-          ("meta", "first_version", v1.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("metric", lit(null).cast("double"))
-      tbl.unionByName(meta)
-    }),
-
-    // §2#30w (r7) Hill tail-index of the similarity graph's degree
-    // distribution (top-50 order statistics): the "how heavy is the
-    // hub tail" scalar behind every bucketed-decomposition decision
-    // (SURVEY §5), beside q259's absolute hot-key probe.
-    "q291_degree_tail" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.1)
-      operators.Graph.degreeTailAlpha(pairs, "vec_a", "vec_b", k = 50)
-    }),
-
-    // §2#27d (r7) exactly-once streaming sink into a TxTable: the
-    // stream runs TWICE with a fresh checkpoint each time (the
-    // checkpoint-lost crash, every batch redelivered) — the table must
-    // hold each event ONCE and exactly one version per real batch; a
-    // naive append sink doubles both and fails the hash.
-    "q293_stream_tx_sink" -> ((s, dir) => {
-      val table = sidePath("graft_txsink", dir)
-      sources.TxTable.drop(s, table)
-      val tbl = streaming.Events.streamIntoTx(
-        s, s"$dir/events.parquet", table, "sink", runs = 2)
-      val agg = tbl.agg(count(lit(1)).as("n_rows"),
-          round(sum(floor(col("value") * 1000000L + lit(0.5)).cast("long")
-            .cast("decimal(38,0)")).cast("double") / 1e6, 6).as("metric"))
-        .select(lit("table").as("section"), lit("all").as("label"),
-          col("n_rows"), col("metric"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "n_versions", sources.TxTable.currentVersion(s, table).toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("metric", lit(null).cast("double"))
-      agg.unionByName(meta)
-    }),
-
-    // §2#62t (r7) additive schema evolution: v1 commits the old
-    // 2-column shape, v2 evolves in o_year, v3 plain-appends the
-    // evolved shape (the post-evolution gate now compares against the
-    // UNION schema); the final snapshot reads with mergeSchema, so
-    // pre-evolution rows surface o_year as NULL — counted via
-    // count(o_year) — while v1 time travel still reads the old shape.
-    "q294_tx_evolve" -> ((s, dir) => {
-      val table = sidePath("graft_txev", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_totalprice")), table)
-      sources.TxTable.commitEvolve(ord.filter(col("o_orderpriority") === "2-HIGH")
-        .select(col("o_orderkey"), col("o_totalprice"),
-          year(col("o_orderdate")).as("o_year")), table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "3-MEDIUM")
-        .select(col("o_orderkey"), col("o_totalprice"),
-          year(col("o_orderdate")).as("o_year")), table)
-      val v3 = sources.TxTable.readVersion(s, table, 3)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"),
-          count(col("o_year")).as("n_year"),
-          sum(col("o_year").cast("decimal(19,0)")).cast("double").as("sum_year"))
-        .select(lit("v3").as("section"), lit("all").as("label"), col("n_rows"),
-          col("sum_price"), col("n_year"), col("sum_year"))
-      val v1 = sources.TxTable.readVersion(s, table, 1)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("v1").as("section"), lit("all").as("label"), col("n_rows"),
-          col("sum_price"), lit(null).cast("long").as("n_year"),
-          lit(null).cast("double").as("sum_year"))
-      v3.unionByName(v1)
-    }),
-
-    // §2#30x (r7) multi-source BFS over the cos>=0.1 similarity graph
-    // (seeds = vec_id%50): hop-distance histogram to depth 3 — the
-    // neighborhood-expansion read beside q267's weighted PPR relevance.
-    "q295_bfs" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      val pairs = operators.Dedup.embeddingPairs(emb).filter(col("cos") >= 0.1)
-      operators.Graph.bfsDistances(pairs, "vec_a", "vec_b",
-          emb.filter(col("vec_id") % 50 === 0).select(col("vec_id")), maxDepth = 3)
-        .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-    }),
-
-    // §2#52as (r7) pairwise effect sizes across event types: Cohen's d
-    // + Cliff's delta for all 10 pairs — the magnitude read-out behind
-    // q264/q265's "differs" verdicts.
-    "q296_effect_sizes" -> ((s, dir) =>
-      functions.Eval.effectSizes(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"),
-        "event_type", "value")),
-
-    // §2#53ah (r7) time-bounded funnel: q98's ordered steps with a 6h
-    // conversion window per hop — the dashboard semantics (greedy
-    // earliest-entry), cutting conversions that took days.
-    "q300_funnel_windowed" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("event_type"))
-      operators.Behavior.funnelWindowed(ev, Seq("view", "click", "purchase"),
-        withinUs = 21600000000L)
-    }),
-
-    // §2#53ai (r7) Mann–Kendall monotonic-trend test on the daily mean
-    // series — the significance companion to q204's Theil–Sen slope
-    // (same collapsed-series contract + in-plan quadratic refusal).
-    "q301_mann_kendall" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      val daily = ev.groupBy("day")
-        .agg(round(sum(col("_vq").cast("decimal(38,0)")).cast("double")
-          / count(lit(1)).cast("double") / 1e6, 6).as("day_mean"))
-      functions.Profile.mannKendall(daily, "day", "day_mean")
-    }),
-
-    // §2#62u (r7) incremental OPTIMIZE: one well-sized commit + three
-    // micro-batch-sized appends, then compactSmall rewrites ONLY the
-    // three small files (the big one carries by reference) — the
-    // nightly-OPTIMIZE-after-streaming-ingest story; content and the
-    // version/file accounting both gated.
-    "q302_tx_compact_small" -> ((s, dir) => {
-      val table = sidePath("graft_txcs", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      // slice 0 = the big remainder batch, slices 1-3 = the small
-      // mod-keyed batches; one distributed write builds all 4 versions
-      sources.TxTable.commitSlices(ord, table,
-        when(pmod(col("o_orderkey"), lit(1500)).isin(1, 2, 3),
-          pmod(col("o_orderkey"), lit(1500))).otherwise(lit(0)), 4,
-        statsCols = Seq("o_orderkey"))
-      val (v, nRw, nCar) = sources.TxTable.compactSmall(s, table,
-        minBytes = 4096, statsCols = Seq("o_orderkey"))
-      val content = sources.TxTable.readVersion(s, table, v)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("content").as("section"), lit("after").as("label"),
-          col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "rewritten", nRw.toLong),
-          ("meta", "carried", nCar.toLong),
-          ("meta", "n_versions", v.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      content.unionByName(meta)
-    }),
-
-    // §2#52at (r7) Durbin–Watson on per-type daily-mean OLS residuals
-    // — "is what the q156 trend fit left behind still structured?";
-    // the regression post-check beside q132's raw ACF.
-    "q303_durbin_watson" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"),
-          (unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      val daily = ev.groupBy("event_type", "day")
-        .agg(round(sum(col("_vq").cast("decimal(38,0)")).cast("double")
-          / count(lit(1)).cast("double") / 1e6, 6).as("day_mean"))
-      functions.Profile.durbinWatson(daily, "event_type", "day", "day_mean")
-    }),
-
-    // §2#44b (r7) JSON key profile: the schema-inference census over
-    // the undeclared part of the schema (events.props) — per key,
-    // fill rate / numeric share / distinct count, the "which keys
-    // deserve real columns" read before any parse_object_dtypes-style
-    // promotion.
-    "q304_props_profile" -> ((s, dir) =>
-      functions.Quality.jsonKeyProfile(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"), "props")),
-
-    // §2#1b (r7) ISO-Monday weekly rollup: date_trunc('week') is the
-    // one calendar bucketing both engines define identically (Monday
-    // start) — the time-dimension parity check every cross-engine
-    // report depends on.
-    "q305_weekly_rollup" -> ((s, dir) =>
-      t(s, dir, "orders").df
-        .groupBy(date_trunc("week", col("o_orderdate")).cast("date").as("week_start"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(dec(col("o_totalprice"))).cast("double").as("revenue"))),
-
-    // §2#62v (r8) streaming CDC SOURCE over a TxTable — the inverse of
-    // q293's exactly-once sink, the Delta streaming-source shape:
-    // offsets ARE committed versions; the stream-replayed change rows
-    // must equal the batch changes(0, head) section-for-section, and
-    // the per-version commit times ride along strictly increasing.
-    "q306_tx_changes_stream" -> ((s, dir) => {
-      val table = sidePath("graft_txcdcs", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      def part(p: String) = ord.filter(col("o_orderpriority") === p)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(part("1-URGENT"), table)
-      sources.TxTable.commit(part("2-HIGH"), table)
-      sources.TxTable.commit(part("5-LOW"), table, op = "overwrite")
-      val streamed = sources.TxChangesStream.replayAll(s, table)
-      def summarize(df: org.apache.spark.sql.DataFrame, section: String) =
-        df.groupBy(concat(col("_change"), lit("@"), col("_version")).as("label"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(section).as("section"), col("label"), col("n_rows"), col("sum_price"))
-      val batch = sources.TxTable.changes(s, table, 0, 3)
-      val wv = org.apache.spark.sql.expressions.Window.orderBy(col("_version"))
-      val msOk = streamed.select(col("_version"), col("_commit_ms")).distinct()
-        .withColumn("_prev", lag(col("_commit_ms"), 1).over(wv))
-        .agg(min(when(col("_prev").isNull || col("_commit_ms") > col("_prev"), 1L)
-          .otherwise(0L)).as("n_rows"))
-        .select(lit("meta").as("section"), lit("ms_monotonic").as("label"),
-          col("n_rows"), lit(null).cast("double").as("sum_price"))
-      summarize(streamed, "stream").unionByName(summarize(batch, "batch"))
-        .unionByName(msOk)
-    }),
-
-    // §2#35q (r8) IVF-PQ — the FAISS IVFADC composition of q36's
-    // coarse quantizer, q69's PQ codes, and q70's ADC scan: queries
-    // ADC-scan ONLY their nprobe probed cells' codes. Full pipeline
-    // (seeds, cells, codes, LUT, probe-restricted sum) hash-verified.
-    "q307_ivf_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 8))
-    }),
-
-    // §2#35r (r8) IVF-PQ recall@k vs exact cosine top-k at nprobe <
-    // ncells — the stacked-approximation audit (cell pruning + PQ
-    // distortion) run before committing a 100-TB IVFADC build.
-    "q308_ivfpq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.ivfPqRecall(emb, emb.filter(col("vec_id") < 8))
-    }),
-
-    // §2#30y (r8) weighted PageRank over the cos>=0.4 similarity graph
-    // (q97's edges, now with their cosines as weights): rank flows
-    // proportional to similarity — the exemplar ranker that doesn't
-    // flatten a 0.97-cosine edge to a 0.41 one.
-    "q309_weighted_pagerank" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.4)
-      operators.Graph.pageRankWeighted(pairs, "vec_a", "vec_b", "cos")
-    }),
-
-    // §2#30z (r8) weighted personalized PageRank (q267's seeds, q309's
-    // weight-proportional spread): seed-relative relevance respecting
-    // similarity scores — the corpus-expansion ranker.
-    "q310_weighted_ppr" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      val pairs = operators.Dedup.embeddingPairs(emb).filter(col("cos") >= 0.1)
-      operators.Graph.personalizedPageRankWeighted(pairs, "vec_a", "vec_b", "cos",
-        emb.filter(col("vec_id") % 2 === 0).select(col("vec_id")))
-    }),
-
-    // §2#28f (r8) hot-key-safe batch sessionization: the q64
-    // bucket+carry decomposition applied to q137's gaps-and-islands —
-    // per-(key, bucket) windows with one carried prev-timestamp and a
-    // bucket-level start cumsum, result ≡ the plain per-key sort
-    // (THIS gate proves it: same oracle SQL as q137).
-    "q311_sessions_bucketed" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"))
-      operators.Behavior.sessionizeBatchBucketed(ev, "user_id", "tus",
-        gapUs = 1800000000L, bucketWidth = 3600000000L, tieCols = Seq("event_id"))
-    }),
-
-    // §2#62w (r8) constraint-gated commit (Delta CHECK constraints /
-    // WAP): the declared Quality audit runs BEFORE publish; a clean
-    // frame commits and its verdicts report, a violating frame refuses
-    // with the head untouched (spec-side).
-    "q313_tx_constraints" -> ((s, dir) => {
-      val table = sidePath("graft_txchk", dir)
-      sources.TxTable.drop(s, table)
-      val urgent = t(s, dir, "orders").df
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      def checks = Seq[functions.Quality.Check](
-        functions.Quality.Completeness("o_orderkey"),
-        functions.Quality.Uniqueness("o_orderkey"),
-        functions.Quality.NonNegative("o_totalprice"))
-      sources.TxTable.commitChecked(urgent, table, checks)
-      val snap = sources.TxTable.read(s, table)
-      val agg = snap.agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("table").as("section"), lit("all").as("label"),
-          col("n_rows"), col("sum_price"))
-      val verdicts = functions.Quality.audit(snap, checks)
-        .select(lit("check").as("section"),
-          concat(col("check"), lit("@"), col("column")).as("label"),
-          when(col("passed"), 1L).otherwise(0L).as("n_rows"),
-          lit(null).cast("double").as("sum_price"))
-      agg.unionByName(verdicts)
-    }),
-
-    // §2#30ab (r8) Louvain local-move rounds over the cos>=0.4
-    // similarity graph: the quality-driven community refiner between
-    // q167's frequency votes and q240's modularity grade — gain argmax
-    // in exact integer arithmetic, 2 synchronous sweeps.
-    "q314_louvain" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.4)
-      operators.Graph.louvainMove(pairs, "vec_a", "vec_b", rounds = 2)
-    }),
-
-    // §2#54b (r8) greedy k-center coreset (farthest-first traversal):
-    // the coverage-guaranteed diversity subset beside q73's per-cell
-    // quotas — per round one map-only min-dist update + a TakeOrdered
-    // argmax; the 8 picks and their selection radii are the output.
-    "q315_kcenter_coreset" -> ((s, dir) =>
-      operators.Similarity.kCenterCoreset(t(s, dir, "embeddings").df, k = 8)),
-
-    // §2#62x (r8) bloom-filter file skipping (the Delta bloom index):
-    // the point-lookup complement of q272's min/max stats — the table
-    // is deliberately hash-scattered on the key, so every file's range
-    // spans the domain and ONLY membership prunes; a present key reads
-    // its files (no false negatives), an absent key prunes on bloom
-    // bits alone. Per-file blooms and both probes are recomputed
-    // independently by the oracle from the data files (filename=true).
-    "q316_tx_bloom_skip" -> ((s, dir) => {
-      val table = sidePath("graft_txbloom", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .repartition(8, col("o_orderkey")) // unclustered: range stats useless
-      sources.TxTable.commit(ord, table, bloomCols = Seq("o_orderkey"))
-      def probe(tag: String, key: String) = {
-        val kept = sources.TxTable.prunedFilesByKey(s, table, 1, "o_orderkey", key)
-        sources.TxTable.readWhereKey(s, table, "o_orderkey", key)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(tag).as("label"), lit(kept.size.toLong).as("n_files_kept"),
-            col("n_rows"), col("sum_price"))
-      }
-      probe("present", "1").unionByName(probe("absent", "-7"))
-    }),
-
-    // §2#62y (r8) the full incremental pipeline composed end-to-end:
-    // CDC SOURCE (q306) → transform → exactly-once SINK (q293) via
-    // TxChangesStream.pipeTo — continuous materialization of a
-    // downstream table at batch cost. Run 1 streams 3 versions (one
-    // per micro-batch, throttled); run 2 resumes the checkpoint (no
-    // new commits → 0 batches); run 3 LOSES the checkpoint entirely
-    // and replays everything — commitIdempotent turns every
-    // re-delivery into a no-op (applied=0, version count unchanged).
-    "q318_tx_pipeline" -> ((s, dir) => {
-      val src = sidePath("graft_txpipe_src", dir)
-      val dst = sidePath("graft_txpipe_dst", dir)
-      sources.TxTable.drop(s, src); sources.TxTable.drop(s, dst)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      def part(p: String) = ord.filter(col("o_orderpriority") === p)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(part("1-URGENT"), src)
-      sources.TxTable.commit(part("2-HIGH"), src)
-      sources.TxTable.commit(part("3-MEDIUM"), src)
-      def mkCkpt() = java.nio.file.Files.createTempDirectory("graft_pipe_ckpt_").toString
-      val tf: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        b => b.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_totalprice"))
-      val ck = mkCkpt()
-      val n1 = sources.TxChangesStream.pipeTo(s, src, dst, "pipe", tf, ck,
-        maxVersionsPerTrigger = Some(1))
-      val n2 = sources.TxChangesStream.pipeTo(s, src, dst, "pipe", tf, ck)
-      val n3 = sources.TxChangesStream.pipeTo(s, src, dst, "pipe", tf, mkCkpt(),
-        maxVersionsPerTrigger = Some(1))
-      val tbl = sources.TxTable.read(s, dst)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("table").as("section"), lit("all").as("label"),
-          col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "n_versions", sources.TxTable.currentVersion(s, dst).toLong),
-          ("meta", "run1_applied", n1),
-          ("meta", "run2_applied", n2),
-          ("meta", "run3_applied", n3)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      tbl.unionByName(meta)
-    }),
-
-    // §2#62z (r8) RESTORE — zero-copy rollback (Delta RESTORE TO
-    // VERSION): the restored head REFERENCES version 2's files (no
-    // data read or written — zero_copy audits file-list identity);
-    // the bad v3 stays time-travelable; CDC reads the restore as a
-    // full snapshot replace.
-    "q321_tx_restore" -> ((s, dir) => {
-      val table = sidePath("graft_txres", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      def part(p: String) = ord.filter(col("o_orderpriority") === p)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(part("1-URGENT"), table)
-      sources.TxTable.commit(part("2-HIGH"), table)
-      sources.TxTable.commit(part("5-LOW"), table, op = "overwrite") // the bad write
-      val rv = sources.TxTable.restore(s, table, 2)
-      def summarize(df: org.apache.spark.sql.DataFrame, section: String, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(section).as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val now = summarize(sources.TxTable.read(s, table), "table", "restored")
-      val v3 = summarize(sources.TxTable.readVersion(s, table, 3), "table", "pre_restore")
-      val cdc = sources.TxTable.changes(s, table, 3, 4)
-        .groupBy(concat(col("_change"), lit("@"), col("_version")).as("label"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("cdc").as("section"), col("label"), col("n_rows"), col("sum_price"))
-      val zeroCopy = sources.TxTable.filesOf(s, table, rv).toSet ==
-        sources.TxTable.filesOf(s, table, 2).toSet
-      val meta = s.createDataFrame(Seq(
-          ("meta", "n_versions", sources.TxTable.currentVersion(s, table).toLong),
-          ("meta", "restored_version", rv.toLong),
-          ("meta", "zero_copy", if (zeroCopy) 1L else 0L)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      now.unionByName(v3).unionByName(cdc).unionByName(meta)
-    }),
-
-    // §2#30ac (r8) incremental-dedup LOOKUP: the query side of q312's
-    // maintained band index — "which existing documents does this
-    // batch duplicate", one (band, bandval) equi-join against the
-    // committed index, never a corpus re-sign.
-    "q322_dedup_index_lookup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      val table = sidePath("graft_dedupidx2", dir)
-      sources.TxTable.drop(s, table)
-      sources.TxTable.commit(
-        operators.Dedup.minhashBandIndex(docs.filter(col("doc_id") % 5 =!= 0)), table)
-      operators.Dedup.indexLookupPairs(
-          sources.TxTable.read(s, table), docs.filter(col("doc_id") % 5 === 0))
-        .filter(col("est_sim") >= 0.25)
-    }),
-
-    // §2#60j (r8) streaming AMS F₂ build: the second-moment member
-    // completing the streaming sketch family — ~72 bytes of operator
-    // state at any cardinality; final snapshot ≡ the batch sketch,
-    // audited against the exact F₂ (q285's oracle verbatim).
-    "q323_stream_ams" -> ((s, dir) => {
-      val est = functions.Sketches.amsF2Estimate(
-        streaming.Events.streamAmsSketch(s, s"$dir/events.parquet"))
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val exact = ev.groupBy("user_id").agg(count(lit(1)).as("_c"))
-        .agg(sum((col("_c").cast("decimal(19,0)") * col("_c")).cast("decimal(38,0)"))
-          .as("_f2"))
-      est.crossJoin(exact)
-        .select(col("reps"), col("f2_est"),
-          col("_f2").cast("double").as("f2_exact"),
-          round(abs(col("f2_est") / col("_f2").cast("double") - lit(1.0)), 9)
-            .as("rel_err"))
-    }),
-
-    // §2#62m (r9) MERGE-ON-READ delete: the tombstone-sidecar DELETE —
-    // zero data files rewritten at delete time (the manifest carries
-    // v1's files verbatim; an auditor checks `files v2 == files v1`),
-    // reads anti-join the (file, key) sidecar, and OPTIMIZE folds the
-    // tombstones into fresh files. The oracle reconstructs the MoR
-    // view with the same anti-join over the raw sidecar parquet.
-    "q324_tx_mor_delete" -> ((s, dir) => {
-      val table = sidePath("graft_txmor", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(ord.repartitionByRange(4, col("o_orderkey")), table,
-        statsCols = Seq("o_orderkey"))
-      val files1 = sources.TxTable.filesOf(s, table, 1)
-      val (v2, nDel) = sources.TxTable.deleteWhereMor(
-        s, table, "o_orderkey", 1.0, 500.0, "o_orderkey")
-      val nTombFiles = sources.TxTable.tombEntriesOf(s, table, v2).size
-      val zeroRewrite = sources.TxTable.filesOf(s, table, v2) == files1
-      val v3 = sources.TxTable.compact(s, table)
-      val tombsAfter = sources.TxTable.tombEntriesOf(s, table, v3).size
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "zero_rewrite", if (zeroRewrite) 1L else 0L),
-          ("meta", "n_deleted", nDel),
-          ("meta", "n_tomb_files", nTombFiles.toLong),
-          ("meta", "tombs_after_compact", tombsAfter.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readVersion(s, table, 1), "v1_full")
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v2), "v2_mor"))
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v3), "v3_compacted"))
-        .unionByName(meta)
-    }),
-
-    // §2#65b (r9) metadata-only RENAME/DROP via column mapping: the
-    // physical column name is frozen at first write (old AND
-    // post-rename appends store `o_totalprice`), rename/drop rewrite
-    // only the manifest's (logical→physical) map — zero data IO at any
-    // table size — and every read path projects through the map. The
-    // oracle reads the raw physical files and applies the same alias.
-    "q325_tx_rename_evolve" -> ((s, dir) => {
-      val table = sidePath("graft_txmap", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "1-URGENT"),
-        table, statsCols = Seq("o_orderkey"))
-      sources.TxTable.renameColumn(s, table, "o_totalprice", "price") // v2, zero IO
-      sources.TxTable.commit( // v3: the gate enforces the MAPPED shape
-        ord.filter(col("o_orderpriority") === "2-HIGH")
-          .select(col("o_orderkey"), col("o_totalprice").as("price"),
-            col("o_orderpriority")),
-        table, statsCols = Seq("o_orderkey"))
-      sources.TxTable.dropColumn(s, table, "o_orderpriority") // v4, zero IO
-      val zeroIo = sources.TxTable.filesOf(s, table, 2) ==
-        sources.TxTable.filesOf(s, table, 1) &&
-        sources.TxTable.filesOf(s, table, 4) == sources.TxTable.filesOf(s, table, 3)
-      val cur = sources.TxTable.read(s, table)
-      def agg(df: org.apache.spark.sql.DataFrame, label: String, c: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col(c))).cast("double").as("sum_val"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_val"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "zero_io", if (zeroIo) 1L else 0L),
-          ("meta", "n_cols_now", cur.columns.length.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_val", lit(null).cast("double"))
-      agg(cur, "current", "price")
-        .unionByName(agg(sources.TxTable.readVersion(s, table, 1), "v1", "o_totalprice"))
-        .unionByName(agg(sources.TxTable.readWhere(s, table, "o_orderkey", 100.0, 2000.0),
-          "pruned", "price"))
-        .unionByName(meta)
-    }),
-
-    // §2#28g (r9) AvailableNow backfill over the CDC source: drain a
-    // 5-commit history in ⌈5/2⌉ rate-limited micro-batches, then stop
-    // cleanly (the scheduled-catch-up shape — commits landing during
-    // the run wait for the next run). The oracle replays each append's
-    // delta from its manifest-named files and pins the batch count.
-    "q326_tx_backfill" -> ((s, dir) => {
-      val table = sidePath("graft_txan", dir)
-      val ckpt = sidePath("graft_txan_ckpt", dir)
-      sources.TxTable.drop(s, table)
-      sources.TxTable.drop(s, ckpt) // fresh checkpoint: a rerun re-backfills
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      // 5 priority-keyed versions from one distributed write; slice ids
-      // follow the priority prefix digit so version order is unchanged
-      sources.TxTable.commitSlices(ord, table,
-        substring(col("o_orderpriority"), 1, 1).cast("int") - 1, 5,
-        payloadCols = Seq("o_orderkey", "o_totalprice"))
-      val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Double)]()
-      val nBatches = sources.TxChangesStream.runAvailableNow(s, table, ckpt,
-        (b, _) => {
-          b.groupBy(col("_version"))
-            .agg(count(lit(1)).as("n"),
-              sum(dec(col("o_totalprice"))).cast("double").as("sp"))
-            .collect()
-            .foreach(r => acc.add((r.getInt(0), r.getLong(1), r.getDouble(2))))
-          ()
-        },
-        maxVersionsPerTrigger = Some(2))
-      import scala.jdk.CollectionConverters._
-      import s.implicits._
-      val perVersion = acc.asScala.toSeq.toDF("version", "n_rows", "sum_price")
-      perVersion.unionByName(
-        Seq((0, nBatches, Option.empty[Double])).toDF("version", "n_rows", "sum_price"))
-    }),
-
-    // §2#62ab (r9) CDC stream ACROSS a merge-on-read delete: the
-    // tx-changes source replays a mordelete version as exactly the
-    // tombstoned rows (touching only the files the sidecar references),
-    // and a later re-append of deleted keys streams normally — the
-    // per-file tombstone scope holds in the stream too. Closes the
-    // MoR-delete ↔ streaming-source seam end-to-end.
-    "q327_tx_stream_mor" -> ((s, dir) => {
-      val table = sidePath("graft_txsm", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(ord.repartitionByRange(4, col("o_orderkey")), table,
-        statsCols = Seq("o_orderkey"))
-      sources.TxTable.deleteWhereMor(s, table, "o_orderkey", 1.0, 300.0, "o_orderkey")
-      sources.TxTable.commit(ord.filter(col("o_orderkey") <= 100), table,
-        statsCols = Seq("o_orderkey"))
-      sources.TxChangesStream.replayAll(s, table)
-        .groupBy(col("_change").as("change"), col("_version").as("version"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-    }),
-
-    // §2#62ac (r9) value-set file skipping: per-file DISTINCT-value
-    // sets recorded at commit — EXACT categorical pruning (the Hive
-    // partition-pruning effect without physical partitioning): a
-    // per-category read touches the category's files, not the
-    // snapshot. The oracle recomputes the kept-file count from the
-    // data itself (every file's cardinality is under the cap, so
-    // manifest-kept == files-actually-containing).
-    "q328_tx_value_skip" -> ((s, dir) => {
-      val table = sidePath("graft_txvs", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.commit(ord.repartition(5, col("o_orderpriority")), table,
-        setCols = Seq("o_orderpriority"))
-      val probe = "3-MEDIUM"
-      val kept = sources.TxTable.prunedFilesByValue(s, table, 1, "o_orderpriority", probe)
-      val total = sources.TxTable.filesOf(s, table, 1)
-      val rows = sources.TxTable.readWhereValue(s, table, "o_orderpriority", probe)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("rows").as("section"), col("n_rows"), col("sum_price"))
-      val absent = sources.TxTable.readWhereValue(s, table, "o_orderpriority", "9-NONE")
-        .agg(count(lit(1)).as("n_rows"))
-        .select(lit("absent").as("section"), col("n_rows"),
-          lit(null).cast("double").as("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("kept_files", kept.size.toLong),
-          ("total_files", total.size.toLong)))
-        .toDF("section", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      rows.unionByName(absent).unionByName(meta)
-    }),
-
-    // §2#62ad (r9) streaming MIRROR with delete propagation: pipeTo's
-    // missing half — the downstream table tracks the upstream exactly,
-    // inserts AND row deletions, at delta cost (deletes tombstone via
-    // the bloom-accelerated key-set MoR path; versions apply in order
-    // under per-version txn markers, so crash replay never
-    // re-tombstones re-inserted keys). The oracle computes BOTH
-    // sections from the SOURCE's raw files — if mirroring diverged,
-    // the Spark-side dst section would hash-mismatch.
-    "q329_tx_mirror" -> ((s, dir) => {
-      val src = sidePath("graft_txmis", dir)
-      val dst = sidePath("graft_txmid", dir)
-      val ckpt = sidePath("graft_txmi_ckpt", dir)
-      sources.TxTable.drop(s, src); sources.TxTable.drop(s, dst)
-      sources.TxTable.drop(s, ckpt) // fresh checkpoint: a rerun re-mirrors
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      def part(p: String) = ord.filter(col("o_orderpriority") === p)
-      sources.TxTable.commit(part("1-URGENT"), src, statsCols = Seq("o_orderkey")) // v1
-      sources.TxTable.commit(part("2-HIGH"), src)                                  // v2
-      sources.TxTable.deleteWhereMor(s, src, "o_orderkey", 1.0, 400.0, "o_orderkey") // v3
-      sources.TxTable.commit(part("5-LOW"), src)                                   // v4
-      // no trigger rate limit: the per-version loop inside the mirror
-      // already applies versions in order, so one micro-batch drains
-      // the whole backfill (the spec covers the rate-limited shape)
-      sources.TxChangesStream.pipeToMirror(s, src, dst, "o_orderkey",
-        "graft_q329", ckpt, bloomCols = Seq("o_orderkey"))
-      def side(tb: String, label: String) =
-        sources.TxTable.read(s, tb)
-          .groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(label).as("side"), col("o_orderpriority"),
-            col("n_rows"), col("sum_price"))
-      side(src, "src").unionByName(side(dst, "dst"))
-    }),
-
-    // §2#62ae (r10) PARTITIONED TxTable layout: hive-style
-    // data/<col>=<val>/ files with the partition column recorded in
-    // the manifest — a per-partition read selects the partition's
-    // files from the manifest alone (true partition pruning, the
-    // physical complement of q328's value-set skipping), and the
-    // partition column re-derives from the path on read. The oracle
-    // recomputes both sections from the raw layout via DuckDB's
-    // hive_partitioning.
-    "q330_tx_partitioned" -> ((s, dir) => {
-      val table = sidePath("graft_txpt", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.commit(ord, table, statsCols = Seq("o_orderkey"),
-        partitionBy = Some("o_orderpriority"))
-      val probe = "3-MEDIUM"
-      val total = sources.TxTable.filesOf(s, table, 1)
-      val mine = total.filter(_.startsWith(s"data/o_orderpriority=$probe/"))
-      val rows = sources.TxTable.readPartition(s, table, probe)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("rows").as("section"), col("n_rows"), col("sum_price"))
-      val absent = sources.TxTable.readPartition(s, table, "9-NONE")
-        .agg(count(lit(1)).as("n_rows"))
-        .select(lit("absent").as("section"), col("n_rows"),
-          lit(null).cast("double").as("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("kept_files", mine.size.toLong),
-          ("total_files", total.size.toLong)))
-        .toDF("section", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      rows.unionByName(absent).unionByName(meta)
-    }),
-
-    // §2#62af (r10) positional deletion vectors: the (file, row
-    // ordinal) merge-on-read delete — schema-independent (no key
-    // column) and ordinal-cheap on the read side; zero data files
-    // rewritten; OPTIMIZE folds the vectors. The oracle recomputes the
-    // anti-join from the raw files via DuckDB's file_row_number, so a
-    // single mis-recorded ordinal hash-fails.
-    "q331_tx_pos_delete" -> ((s, dir) => {
-      val table = sidePath("graft_txpd", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(ord.repartitionByRange(4, col("o_orderkey")), table,
-        statsCols = Seq("o_orderkey"))
-      val files1 = sources.TxTable.filesOf(s, table, 1)
-      val (v2, nDel) = sources.TxTable.deleteWherePos(s, table, "o_orderkey", 1.0, 500.0)
-      val nVecFiles = sources.TxTable.posDeletesOf(s, table, v2).size
-      val zeroRewrite = sources.TxTable.filesOf(s, table, v2) == files1
-      val v3 = sources.TxTable.compact(s, table)
-      val vecsAfter = sources.TxTable.posDeletesOf(s, table, v3).size
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "zero_rewrite", if (zeroRewrite) 1L else 0L),
-          ("meta", "n_deleted", nDel),
-          ("meta", "n_vec_files", nVecFiles.toLong),
-          ("meta", "vecs_after_compact", vecsAfter.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readVersion(s, table, 1), "v1_full")
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v2), "v2_pos"))
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v3), "v3_compacted"))
-        .unionByName(meta)
-    }),
-
-    // §2#62ah (r10) copy-on-write row-level UPDATE: rewrite ONLY the
-    // stats-pruned candidate files with the assignment applied to
-    // matching rows, carry the rest by reference; CDC surfaces the
-    // churn as delete-of-candidates + insert-of-rewrites (the Iceberg
-    // CoW-update rule). The oracle recomputes the candidate set from
-    // per-file min/max over the raw v1 files — one mis-pruned file
-    // hash-fails the cdc section; the updated values go through exact
-    // DECIMAL multiplication on both engines.
-    "q332_tx_update" -> ((s, dir) => {
-      val table = sidePath("graft_txup", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(ord.repartitionByRange(4, col("o_orderkey")), table,
-        statsCols = Seq("o_orderkey"))
-      val bump = (dec(col("o_totalprice")) *
-        lit(new java.math.BigDecimal("1.1"))).cast("double")
-      val (v2, nTouched, nCarried) = sources.TxTable.updateWhere(s, table,
-        "o_orderkey", 1.0, 500.0, Map("o_totalprice" -> bump),
-        statsCols = Seq("o_orderkey"))
-      def summarize(df: DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val cdc = sources.TxTable.changes(s, table, 1, v2)
-        .groupBy(col("_change").as("label"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("cdc").as("section"), col("label"), col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "n_touched", nTouched.toLong),
-          ("meta", "n_carried", nCarried.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readVersion(s, table, 1), "v1_full")
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v2), "v2_updated"))
-        .unionByName(cdc).unionByName(meta)
-    }),
-
-    // §2#62ai (r10) HIDDEN bucket partitioning (Iceberg transform
-    // partitioning): the layout column derives from md5(o_orderkey) —
-    // never stored, never in the logical schema — and a point lookup
-    // prunes to the ONE bucket the probe key's transform lands in,
-    // from the manifest file list alone. The md5 transform is
-    // engine-portable, so the oracle recomputes the probe's bucket and
-    // the per-bucket file census from the raw hive layout.
-    "q333_tx_bucket" -> ((s, dir) => {
-      val table = sidePath("graft_txbk", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(ord.repartition(2, col("o_orderkey")), table,
-        partitionBy = Some("_gpt-bucket16-o_orderkey"))
-      val rows = sources.TxTable.readHiddenPoint(s, table, "137")
-        .filter(col("o_orderkey") === 137L)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("rows").as("section"), col("n_rows"), col("sum_price"))
-      val bucket = sources.TxTable.hiddenValueOf("_gpt-bucket16-o_orderkey", "137")
-      val total = sources.TxTable.filesOf(s, table, 1)
-      val mine = total.filter(_.startsWith(s"data/_gpt-bucket16-o_orderkey=$bucket/"))
-      val meta = s.createDataFrame(Seq(
-          ("kept_files", mine.size.toLong),
-          ("total_files", total.size.toLong)))
-        .toDF("section", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      rows.unionByName(meta)
-    }),
-
-    // §2#62aj (r10) HIDDEN day(ts) partitioning + partition-range
-    // read: the daily-ingest layout every event table wants — the
-    // transform column (yyyy-MM-dd of ts) derives at commit, a
-    // time-range read plans exactly the in-range partitions' files
-    // from the manifest (dir values sort lexicographically), and the
-    // logical schema never shows the layout. The oracle recomputes
-    // both the range aggregate and the file census from the raw hive
-    // layout via DuckDB's hive_partitioning.
-    "q334_tx_day_partition" -> ((s, dir) => {
-      val table = sidePath("graft_txdy", dir)
-      sources.TxTable.drop(s, table)
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      sources.TxTable.commit(ev.repartition(2), table,
-        partitionBy = Some("_gpt-day-ts"))
-      val rows = sources.TxTable.readPartitionRange(s, table, "2024-01-05", "2024-01-07")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("value"))).cast("double").as("sum_value"))
-        .select(lit("rows").as("section"), col("event_type"),
-          col("n_rows"), col("sum_value"))
-      val total = sources.TxTable.filesOf(s, table, 1)
-      val mine = total.filter { rel =>
-        val seg = rel.stripPrefix("data/_gpt-day-ts=").takeWhile(_ != '/')
-        rel.startsWith("data/_gpt-day-ts=") && seg >= "2024-01-05" && seg <= "2024-01-07"
-      }
-      val meta = s.createDataFrame(Seq(
-          ("kept_files", mine.size.toLong),
-          ("total_files", total.size.toLong)))
-        .toDF("section", "n_rows")
-        .withColumn("event_type", lit(null).cast("string"))
-        .withColumn("sum_value", lit(null).cast("double"))
-        .select("section", "event_type", "n_rows", "sum_value")
-      rows.unionByName(meta)
-    }),
-
-    // §2#62ak (r10) write-audit-publish: the staged batch lands its
-    // data files ONCE, stays invisible to every read, gets audited
-    // over the WRITTEN files, and publishes as a metadata-only append
-    // (zero data IO after the verdict); a failed audit abandons the
-    // stage with the table head never having moved. The oracle
-    // recomputes both snapshots from the raw v1 + staged-name globs.
-    "q335_tx_wap" -> ((s, dir) => {
-      val table = sidePath("graft_txwa", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(ord.filter(col("o_orderkey") % 2 === 0), table)
-      sources.TxTable.stageWap(
-        ord.filter(col("o_orderkey") % 2 === 1).repartition(2), table, "good")
-      val preRows = sources.TxTable.read(s, table).count() // staged invisible
-      // audit the WRITTEN files; clean → publish (metadata-only)
-      val nBadKeys = sources.TxTable.readWap(s, table, "good")
-        .filter(col("o_orderkey").isNull).count()
-      val v2 = if (nBadKeys == 0L)
-        sources.TxTable.publishWap(s, table, "good", statsCols = Seq("o_orderkey"))
-        else -1
-      // a second stage whose audit FAILS is abandoned; head untouched
-      sources.TxTable.stageWap(
-        ord.limit(5).select(lit(null).cast("long").as("o_orderkey"),
-          col("o_totalprice")).repartition(1), table, "bad")
-      val badNulls = sources.TxTable.readWap(s, table, "bad")
-        .filter(col("o_orderkey").isNull).count()
-      val abandoned = if (badNulls > 0L)
-        sources.TxTable.abandonWap(s, table, "bad").size else 0
-      def summarize(df: DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "pre_publish_rows", preRows),
-          ("meta", "published_version", v2.toLong),
-          ("meta", "bad_abandoned_files", abandoned.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readVersion(s, table, 1), "v1_base")
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v2), "v2_published"))
-        .unionByName(meta)
-    }),
-
-    // §2#37m (r10) Gopher quality rules (Rae et al. 2021, Appendix A):
-    // the published heuristic battery — word-count bounds, mean word
-    // length bounds, stop-word floor, max-repeated-word ceiling —
-    // each surfaced as its own flag plus the conjunction, because a
-    // data audit tunes rules individually before gating on `pass`.
-    // Exact integer features; the two ratio rules divide exact ints in
-    // a mirrored token order.
-    "q336_gopher_rules" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      val d0 = t(s, dir, "documents").df
-        .select(col("doc_id"), T.tokens(col("text")).as("w"))
-      val base = d0
-        .withColumn("n_words", size(col("w")))
-        .withColumn("mean_word_len",
-          aggregate(col("w"), lit(0L), (acc, x) => acc + length(x)).cast("double")
-            / col("n_words").cast("double"))
-        .withColumn("stop_cnt", T.markerCount(col("w"), Seq("the", "a", "of", "and", "to")))
-      val top = d0.select(col("doc_id"), explode(col("w")).as("t"))
-        .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id").agg(max("c").as("top_cnt"))
-      base.join(top, Seq("doc_id"))
-        .select(col("doc_id"), col("n_words"),
-          (col("n_words") >= 30 && col("n_words") <= 500).as("ok_words"),
-          (col("mean_word_len") >= 3.0 && col("mean_word_len") <= 10.0).as("ok_word_len"),
-          (col("stop_cnt") >= 2).as("ok_stop"),
-          (col("top_cnt").cast("double") / col("n_words").cast("double") <= 0.2)
-            .as("ok_repeat"))
-        .withColumn("pass",
-          col("ok_words") && col("ok_word_len") && col("ok_stop") && col("ok_repeat"))
-    }),
-
-    // §2#37n (r10) interpolated Kneser–Ney bigram scoring (Kneser &
-    // Ney'95 / Chen & Goodman'98): absolute discount D=0.75 with the
-    // discount mass re-spent on CONTINUATION probabilities — the
-    // smoothing KenLM/SRILM default to, next to q65's add-k and
-    // q232's Stupid Backoff. Seed split = doc_id % 10 == 0.
-    "q337_kneser_ney" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      functions.NgramLm.kneserNey(docs, docs.filter(col("doc_id") % 10 === 0))
-    }),
-
-    // §2#35s (r10) embedding isotropy diagnostics (Ethayarajh'19): per
-    // label, the mean pairwise cosine of unit vectors WITHOUT pairwise
-    // work (‖Σu‖² − Σ‖u‖² identity) plus the mean raw norm — the two
-    // drift signals retrieval monitoring watches for anisotropy
-    // collapse. Shuffle volume is labels × dim.
-    "q338_embed_isotropy" -> ((s, dir) =>
-      functions.VectorFunctions.isotropyByGroup(
-        t(s, dir, "embeddings").df, "label", "embedding", "vec_id")),
-
-    // §2#53aj (r10) Ljung–Box white-noise test per user (lags 1..3):
-    // the portmanteau companion to q132's per-lag ACF — one χ²(m)
-    // statistic per series instead of m separate cutoffs; exact
-    // n²-scaled integer sums, one mirrored double assembly.
-    "q339_ljung_box" -> ((s, dir) =>
-      operators.Rolling.ljungBox(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select(col("user_id"), unix_micros(col("ts")).as("tus"),
-            col("value"), col("event_id")),
-        "user_id", "tus", "value", "event_id", maxLag = 3)),
-
-    // §2#52ax (r10) Cronbach's α over the day × event-type panel of
-    // daily value totals: do the k event-type series track one
-    // underlying activity level — the metric-panel reliability gate;
-    // zero-filled cells, exact n²-scaled variance integers.
-    "q340_cronbach_alpha" -> ((s, dir) =>
-      functions.Eval.cronbachAlpha(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-            col("event_type"), col("value")),
-        "day", "event_type", "value")),
-
-    // §2#52ay (r10) information-gain feature screen: how many nats of
-    // event-type uncertainty hour-of-day and the value bucket each
-    // remove — the mutual-information ranking feature selection starts
-    // from, with the H(label)/H(label|feature) decomposition reported.
-    "q341_info_gain" -> ((s, dir) =>
-      functions.Eval.infoGain(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select(col("event_type"),
-            ((unix_micros(col("ts")) / lit(3600000000L)).cast("long") % 24)
-              .as("hour_of_day"),
-            floor(col("value") / lit(50.0)).cast("long").as("value_bin")),
-        "event_type", Seq("hour_of_day", "value_bin"))),
-
-    // §2#52az (r10) Fleiss' κ inter-rater agreement: each day's first
-    // 10 events (by time) act as 10 raters assigning the day to an
-    // event-type category — κ near 0 = the "ratings" are noise; the
-    // multi-annotator label-quality gate. Fixed-n design: days with
-    // fewer than 10 events drop.
-    "q342_fleiss_kappa" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          col("event_type"), unix_micros(col("ts")).as("tus"), col("event_id"))
-      val first10 = ev.withColumn("rn", row_number().over(
-          Window.partitionBy("day").orderBy(col("tus"), col("event_id"))))
-        .filter(col("rn") <= 10)
-      functions.Eval.fleissKappa(first10, "day", "event_type", 10)
-    }),
-
-    // §2#28h (r10) stream-stream LEFT OUTER join: q48's click→purchase
-    // pairing, plus the abandoned-cart rows — an unmatched click emits
-    // its null-padded row only once the watermark CLOSES its match
-    // window, which is why outer stream joins require both watermarks
-    // and a two-sided time bound. The oracle mirrors the eviction
-    // boundary: unmatched clicks surface only when the final watermark
-    // (max ts − 1h) passed click_ts + 30min.
-    "q343_stream_join_outer" -> ((s, dir) =>
-      streaming.Events.streamClickPurchaseJoin(s, s"$dir/events.parquet",
-        how = "leftOuter")),
-
-    // §2#62ap (r10) SHALLOW CLONE: a metadata-only table copy (dst's
-    // v1 borrows src's files by absolute path — zero data IO at any
-    // size), after which the two tables evolve independently: an
-    // append to the clone is invisible to the source and vice versa,
-    // and the clone pins the snapshot it was taken from. Carried
-    // skipping stats keep pruning across the table boundary: the
-    // range read's kept-file count is recomputed by the oracle from
-    // per-file min/max over BOTH tables' raw files.
-    "q344_tx_clone" -> ((s, dir) => {
-      val src = sidePath("graft_txcl_src", dir)
-      val dst = sidePath("graft_txcl_dst", dir)
-      sources.TxTable.drop(s, src)
-      sources.TxTable.drop(s, dst)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(
-        ord.filter(col("o_orderkey") % 2 === 0).repartitionByRange(2, col("o_orderkey")),
-        src, statsCols = Seq("o_orderkey"))
-      sources.TxTable.cloneShallow(s, src, dst)
-      val borrowed = sources.TxTable.filesOf(s, dst, 1).count(_.startsWith("/"))
-      // the fork: clone gains the %4==1 slice, source the %4==3 slice
-      val v2 = sources.TxTable.commit(
-        ord.filter(col("o_orderkey") % 4 === 1).coalesce(1), dst,
-        statsCols = Seq("o_orderkey"))
-      sources.TxTable.commit(
-        ord.filter(col("o_orderkey") % 4 === 3).coalesce(1), src,
-        statsCols = Seq("o_orderkey"))
-      val owned = sources.TxTable.filesOf(s, dst, v2).count(!_.startsWith("/"))
-      val kept = sources.TxTable.prunedFiles(s, dst, v2, "o_orderkey", 1.0, 300.0)
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "borrowed_files", borrowed.toLong),
-          ("meta", "owned_files", owned.toLong),
-          ("meta", "kept_files", kept.size.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.read(s, dst), "clone")
-        .unionByName(summarize(sources.TxTable.read(s, src), "source"))
-        .unionByName(summarize(
-          sources.TxTable.readWhere(s, dst, "o_orderkey", 1.0, 300.0), "clone_range"))
-        .unionByName(meta)
-    }),
-
-    // §2#62aq (r10) metadata-only COUNT(*): per-file row counts are
-    // recorded in the manifest at commit (`countRows`, Delta's
-    // numRecords) and each positional-deletion-vector pair decrements
-    // exactly one row — so COUNT(*) GROUP BY partition answers from
-    // the MANIFEST alone, zero data-file IO. The gate runs the
-    // metadata count AND the full scan and both sections must
-    // hash-equal the oracle's logical counts — a single mis-recorded
-    // footer count or mis-attributed vector pair fails.
-    "q345_tx_meta_count" -> ((s, dir) => {
-      val table = sidePath("graft_txmc", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.commit(ord, table, statsCols = Seq("o_orderkey"),
-        partitionBy = Some("o_orderpriority"), countRows = true)
-      sources.TxTable.deleteWherePos(s, table, "o_orderkey", 1.0, 400.0)
-      val metaRows = sources.TxTable.metaCountByPartition(s, table)
-      val total = sources.TxTable.metaCount(s, table)
-      val meta = s.createDataFrame(
-          metaRows.map { case (p, n) => ("meta", p, n) } :+
-          (("meta", "*", total)))
-        .toDF("section", "o_orderpriority", "n_rows")
-      val scan = sources.TxTable.read(s, table)
-        .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n_rows"))
-        .select(lit("scan").as("section"), col("o_orderpriority"), col("n_rows"))
-      meta.unionByName(scan)
-    }),
-
-    // §2#62ar (r10) unique-key-enforced append (INSERT ... ON CONFLICT
-    // DO NOTHING): only batch keys absent from the table land; the
-    // existence probe is manifest-bloom-pruned and reads the KEY
-    // COLUMN of candidate files only. A fully-duplicate batch is a
-    // NO-OP — no version published (the inserted counts and the
-    // version equality are gated alongside the content).
-    "q346_tx_append_unique" -> ((s, dir) => {
-      val table = sidePath("graft_txau", dir)
-      sources.TxTable.drop(s, table)
-      val docs = t(s, dir, "documents").df
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      sources.TxTable.commit(
-        docs.filter(col("doc_id") % 3 === 0).repartition(2), table,
-        bloomCols = Seq("doc_id"), countRows = true)
-      val b1 = docs.filter(col("doc_id") % 3 === 1 || col("doc_id") % 6 === 0)
-      val (v2, n1) = sources.TxTable.appendUnique(b1, table, "doc_id",
-        bloomCols = Seq("doc_id"), countRows = true)
-      val (v3, n2) = sources.TxTable.appendUnique(
-        docs.filter(col("doc_id") % 6 === 0), table, "doc_id")
-      val content = sources.TxTable.read(s, table)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars")).cast("double").as("sum_chars"))
-        .select(lit("content").as("section"), col("source").as("label"),
-          col("n_rows"), col("sum_chars"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "inserted_b1", n1),
-          ("meta", "inserted_b2", n2),
-          ("meta", "noop_kept_version", if (v3 == v2) 1L else 0L),
-          ("meta", "meta_count", sources.TxTable.metaCount(s, table))))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_chars", lit(null).cast("double"))
-      content.unionByName(meta)
-    }),
-
-    // §2#53ap (r10) Page–Hinkley drift detection on the per-type daily
-    // mean series — q176 CUSUM's self-calibrating sibling: no target
-    // mean parameter, each point tests against the series' own running
-    // mean; integer-exact PH statistic (deviations re-quantize before
-    // the prefix sum).
-    "q347_page_hinkley" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          col("event_type"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      val daily = ev.groupBy("day", "event_type")
-        .agg(round(sum(col("_vq").cast("decimal(38,0)")).cast("double")
-          / count(lit(1)).cast("double") / 1e6, 6).as("day_mean"))
-      operators.Rolling.pageHinkley(daily, "event_type", "day", "day_mean",
-          delta = 0.001, lambda = 0.05)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"),
-          sum(when(col("is_drift"), 1L).otherwise(0L)).as("n_drift"),
-          round(max(col("ph")).cast("double") / 1e6, 6).as("max_ph"))
-    }),
-
-    // §2#36b (r10) multinomial Naive Bayes language classifier —
-    // counts-only training (two partial aggs, the one exactly-
-    // distributable classifier fit), integer-quantized log-prob
-    // scoring so the argmax is engine-exact; 80/20 hash split, output
-    // = the test confusion matrix.
-    "q348_naive_bayes" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      functions.NaiveBayes.trainScoreConfusion(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "lang", "text", "doc_id")
-    }),
-
-    // §2#52bd (r10) quantile normalization across event types — every
-    // type's value distribution maps onto the shared per-bin reference
-    // (the cross-source score-calibration step before mixing); output
-    // is the (type, bin) mapping table.
-    "q349_quantile_norm" -> ((s, dir) =>
-      functions.Profile.quantileNormalize(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select(col("event_type"), col("value"), col("event_id")),
-        "event_type", "value", "event_id", bins = 20)),
-
-    // §2#52be (r10) McNemar's paired test: per user, "clicked" vs
-    // "purchased" as the paired binary outcomes — only discordant
-    // users carry signal; continuity-corrected χ².
-    "q350_mcnemar" -> ((s, dir) => {
-      val per = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "click", 1L).otherwise(0L)).as("a"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("b"))
-      functions.Eval.mcnemar(per, "a", "b")
-    }),
-
-    // §2#52bf (r10) IPW average treatment effect: urgent-priority
-    // orders as "treatment", order value as outcome, market segment as
-    // the propensity stratum — positivity-violating strata excluded
-    // loudly, per-row weighted contributions integer-quantized.
-    "q351_ipw_ate" -> ((s, dir) => {
-      val j = t(s, dir, "orders").df
-        .join(t(s, dir, "customer").df,
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment").as("seg"),
-          col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("treated"),
-          col("o_totalprice"))
-      functions.Eval.ipwAte(j, "seg", "treated", "o_totalprice")
-    }),
-
-    // §2#52bg (r10) approximate-randomization permutation test for the
-    // click-vs-view mean-value difference: 100 content-addressed
-    // md5 relabelings expand map-side (the q248 bootstrap shape),
-    // p = (1 + #extreme)/(B + 1).
-    "q352_permutation_test" -> ((s, dir) =>
-      functions.Eval.permutationTestDiff(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select(col("event_type"), col("value"), col("event_id")),
-        "event_type", "value", "click", "view", "event_id", reps = 100)),
-
-    // §2#52bh (r10) OLS influence diagnostics on the daily-mean trend:
-    // leverage, residual, and Cook's distance per day — "which days
-    // drive the fitted trend"; exact integer moments, top-15 triage
-    // list with deterministic tie order.
-    "q353_ols_influence" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      val daily = ev.groupBy("day")
-        .agg(round(sum(col("_vq").cast("decimal(38,0)")).cast("double")
-          / count(lit(1)).cast("double") / 1e6, 6).as("day_mean"))
-      functions.Profile.olsInfluence(daily, "day", "day_mean", "day", topK = 15)
-    }),
-
-    // §2#52bi (r10) partial correlation on lineitem: quantity ↔
-    // extended price with the discount's linear effect removed (and
-    // each other rotation) — the confounder screen beside q96's raw
-    // correlation matrix; exact integer moments.
-    "q354_partial_corr" -> ((s, dir) =>
-      functions.Profile.partialCorr(t(s, dir, "lineitem").df,
-        "l_quantity", "l_extendedprice", "l_discount")),
-
-    // §2#52bj (r10) homogeneity / completeness / V-measure of the
-    // source partition against the language truth — the symmetric
-    // entropy scorecard a single information-gain number hides.
-    "q355_v_measure" -> ((s, dir) =>
-      functions.Eval.vMeasure(t(s, dir, "documents").df, "lang", "source")),
-
-    // §2#37m (r10) query-likelihood retrieval with Dirichlet smoothing
-    // over the same query as q161's BM25 — the language-modeling
-    // ranker where ABSENT query terms still contribute collection-
-    // smoothed mass; DECIMAL-quantized per-term contributions.
-    "q356_ql_dirichlet" -> ((s, dir) =>
-      functions.TermStats.qlDirichletRank(t(s, dir, "documents").df,
-        Seq("join", "hash", "scan"), mu = 2000.0, topK = 10)),
-
-    // §2#52bk (r10) Kendall τ-b between the click and view daily
-    // means — tie-corrected rank concordance of two metrics, robust to
-    // any monotone transform; bounded-series contract (daily cells),
-    // exact integer pair counts.
-    "q357_kendall_tau" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .filter(col("event_type").isin("click", "view"))
-        .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          col("event_type"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      def m(t: String) = {
-        val cnt = sum(when(col("event_type") === t, 1L).otherwise(0L))
-        when(cnt > 0L, round(
-          sum(when(col("event_type") === t, col("_vq")).otherwise(0L)
-            .cast("decimal(38,0)")).cast("double") / cnt.cast("double") / 1e6, 6))
-      }
-      val daily = ev.groupBy("day")
-        .agg(m("click").as("click_mean"), m("view").as("view_mean"))
-        .filter(col("click_mean").isNotNull && col("view_mean").isNotNull)
-      functions.Profile.kendallTauB(daily, "day", "click_mean", "view_mean")
-    }),
-
-    // §2#52bl (r10) Cochran's Q across the click/view/purchase
-    // per-user flags — k paired binary treatments on the same blocks,
-    // McNemar's k-way generalization; all-integer cells.
-    "q358_cochran_q" -> ((s, dir) => {
-      val per = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "click", 1L).otherwise(0L)).as("t_click"),
-          max(when(col("event_type") === "view", 1L).otherwise(0L)).as("t_view"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("t_purchase"))
-      functions.Eval.cochranQ(per, Seq("t_click", "t_view", "t_purchase"))
-    }),
-
-    // §2#52bm (r10) quadratic-weighted Cohen's κ between two ordinal
-    // document quality raters (char-length band vs token-count band) —
-    // the two-rater ordinal agreement gate; integer weights and cells.
-    "q359_cohen_kappa" -> ((s, dir) => {
-      val toks = functions.TextFunctions.tokens(col("text"))
-      val rated = t(s, dir, "documents").df
-        .select(least(floor(length(col("text")) / 400L), lit(4L)).as("rater_a"),
-          least(floor(size(toks).cast("long") / 80L), lit(4L)).as("rater_b"))
-      functions.Eval.cohenKappaWeighted(rated, "rater_a", "rater_b")
-    }),
-
-    // §2#35t (r10) rank-biased overlap between the BM25 and
-    // QL-Dirichlet top-10 runs for the same query — the top-weighted
-    // ranking-similarity read-out over non-conjoint lists.
-    "q360_rbo" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      val terms = Seq("join", "hash", "scan")
-      operators.Similarity.rboOverlap(
-        functions.TermStats.bm25Rank(docs, terms, topK = 10),
-        functions.TermStats.qlDirichletRank(docs, terms, mu = 2000.0, topK = 10),
-        "doc_id", "rank", p = 0.9, depth = 10)
-    }),
-
-    // §2#53aq (r10) sup-Chow structural-break scan on the daily mean
-    // series — localizes WHEN the trend changed (Pettitt/PH say that
-    // it did); every candidate split scored from one prefix-moment
-    // window pass, argmax via TakeOrdered.
-    "q361_sup_chow" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      val daily = ev.groupBy("day")
-        .agg(round(sum(col("_vq").cast("decimal(38,0)")).cast("double")
-          / count(lit(1)).cast("double") / 1e6, 6).as("day_mean"))
-      functions.Profile.supChow(daily, "day", "day_mean", margin = 5)
-    }),
-
-    // §2#37n (r10) Good–Turing frequency re-estimation over the
-    // corpus vocabulary — smoothed r*, per-r probabilities, and the
-    // r=0 unseen-mass row; count-of-counts cells, LGT log-log fit.
-    "q362_good_turing" -> ((s, dir) =>
-      functions.TermStats.goodTuring(t(s, dir, "documents").df, topR = 15)),
-
-    // §2#62aj (r10) tags + branches + fast-forward (Iceberg refs):
-    // a tag pins a version immutably, a branch forks an independent
-    // commit line via shallow clone (zero data IO), and fast-forward
-    // publishes the branch snapshot back onto an unmoved main as one
-    // metadata commit with every stat/bloom/count carried.
-    "q363_tx_refs" -> ((s, dir) => {
-      val table = sidePath("graft_txrf", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(
-        ord.filter(col("o_orderkey") % 3 === 0).coalesce(1), table,
-        statsCols = Seq("o_orderkey"))
-      sources.TxTable.commit(
-        ord.filter(col("o_orderkey") % 3 === 1).coalesce(1), table,
-        statsCols = Seq("o_orderkey"))
-      sources.TxTable.createTag(s, table, "release", 1)
-      sources.TxTable.createBranch(s, table, "dev")
-      sources.TxTable.commit(
-        ord.filter(col("o_orderkey") % 3 === 2).coalesce(1),
-        sources.TxTable.branchPath(s, table, "dev"),
-        statsCols = Seq("o_orderkey"))
-      val ff = sources.TxTable.fastForward(s, table, "dev")
-      val borrowed = sources.TxTable.filesOf(s, table, ff).count(_.startsWith("/"))
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "ff_version", ff.toLong),
-          ("meta", "branch_base", sources.TxTable.refOf(s, table, "dev")._2.toLong),
-          ("meta", "n_refs", sources.TxTable.refsOf(s, table).size.toLong),
-          ("meta", "borrowed_files", borrowed.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.read(s, table), "main")
-        .unionByName(summarize(sources.TxTable.readRef(s, table, "release"), "tag"))
-        .unionByName(summarize(sources.TxTable.readRef(s, table, "dev"), "branch"))
-        .unionByName(meta)
-    }),
-
-    // §2#62ak (r10) ref-protected version expiry: a tag deep in
-    // history pins its manifest chain — expireVersions removes
-    // nothing on the tagged table, everything below the cut on the
-    // untagged twin, and the tag still reads bit-identically after.
-    "q364_tx_ref_expire" -> ((s, dir) => {
-      val tagged = sidePath("graft_txre_t", dir)
-      val plain = sidePath("graft_txre_p", dir)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      for (tb <- Seq(tagged, plain)) {
-        sources.TxTable.drop(s, tb)
-        // one distributed write for the 13-version history (was 13
-        // sequential scan+write jobs per table — commitSlices keeps the
-        // per-version files/stats identical)
-        sources.TxTable.commitSlices(ord, tb, col("o_orderkey") % 13, 13,
-          statsCols = Seq("o_orderkey"))
-      }
-      sources.TxTable.createTag(s, tagged, "r3", 3)
-      val (expT, _) = sources.TxTable.expireVersions(s, tagged, keepLast = 2)
-      val (expP, _) = sources.TxTable.expireVersions(s, plain, keepLast = 2)
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "n_expired_tagged", expT.size.toLong),
-          ("meta", "n_expired_plain", expP.size.toLong),
-          ("meta", "tag_version",
-            sources.TxTable.refOf(s, tagged, "r3")._2.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readRef(s, tagged, "r3"), "tag_v3")
-        .unionByName(summarize(sources.TxTable.read(s, tagged), "tagged_head"))
-        .unionByName(summarize(sources.TxTable.read(s, plain), "plain_head"))
-        .unionByName(meta)
-    }),
-
-    // §2#52bn (r10) reliability diagram + ECE: fractional-part
-    // confidence vs the user-parity label over events — per-bin
-    // conf/acc/gap cells plus the weighted-ECE total row.
-    "q365_calibration" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((col("value") - floor(col("value"))).as("conf"),
-          (pmod(col("user_id"), lit(2)) === 1).as("label"))
-      functions.Eval.calibrationError(ev, "conf", "label", bins = 10)
-    }),
-
-    // §2#52bo (r10) per-segment odds/risk ratios with the Woolf
-    // ln-domain interval: urgent-priority exposure vs high-value
-    // outcome across market segments — exact 2x2 integer cells.
-    "q366_odds_risk" -> ((s, dir) => {
-      val j = t(s, dir, "orders").df
-        .join(t(s, dir, "customer").df, col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment").as("seg"),
-          col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("exposed"),
-          (col("o_totalprice") > 150000.0).as("outcome"))
-      functions.Eval.oddsRiskBySegment(j, "seg", "exposed", "outcome")
-    }),
-
-    // §2#38e (r10) Heaps' law vocabulary-growth fit: V(n) = K·n^beta
-    // sampled at 10 doc-id checkpoints via conditional sums (no global
-    // window, no fan-out), OLS on the log-log cells.
-    "q367_heaps_law" -> ((s, dir) =>
-      functions.TermStats.heapsLaw(t(s, dir, "documents").df, points = 10)),
-
-    // §2#52bp (r10) Krippendorff's α (nominal): within-(user, day)
-    // event-type consistency — the any-m inter-rater coefficient;
-    // single-rating units drop (the missing-data contract),
-    // per-unit disagreement terms DECIMAL-quantized pre-sum.
-    "q368_krippendorff" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(concat_ws(":", col("user_id"),
-          (unix_micros(col("ts")) / lit(86400000000L)).cast("long")).as("unit"),
-          col("event_type"))
-      functions.Eval.krippendorffAlpha(ev, "unit", "event_type")
-    }),
-
-    // §2#62al (r10) atomic partition overwrite (replaceWhere): the
-    // URGENT partition's files are replaced by a filtered rewrite in
-    // ONE commit while every other partition carries by reference —
-    // per-partition content plus carry accounting must both match.
-    "q369_tx_replace_where" -> ((s, dir) => {
-      val table = sidePath("graft_txrw", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.commit(ord, table, partitionBy = Some("o_orderpriority"))
-      val filesBefore = sources.TxTable.filesOf(s, table, 1)
-      val v2 = sources.TxTable.overwritePartition(s, table,
-        ord.filter(col("o_orderpriority") === "1-URGENT" &&
-          col("o_orderkey") % 2 === 0).coalesce(1), "1-URGENT")
-      val carried = sources.TxTable.filesOf(s, table, v2)
-        .count(f => filesBefore.contains(f))
-      val content = sources.TxTable.read(s, table)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("part").as("section"), col("o_orderpriority").as("label"),
-          col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "version", v2.toLong),
-          ("meta", "carried_files", carried.toLong),
-          ("meta", "files_before", filesBefore.size.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      content.unionByName(meta)
-    }),
-
-    // §2#62am (r10) null-count file skipping: per-file null counts
-    // recorded at commit prune IS NULL reads to the null-bearing
-    // files and IS NOT NULL reads past all-null files — the
-    // completeness-audit read path.
-    "q370_tx_null_skip" -> ((s, dir) => {
-      val table = sidePath("graft_txns", dir)
-      sources.TxTable.drop(s, table)
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"),
-        when(col("o_orderkey") % 7 === 0, lit(null).cast("double"))
-          .otherwise(col("o_totalprice")).as("price"))
-      sources.TxTable.commit(ord.filter(col("o_orderkey") % 7 =!= 0).coalesce(1),
-        table, nullCols = Seq("price"), countRows = true)
-      sources.TxTable.commit(
-        ord.filter(col("o_orderkey") % 7 === 0).coalesce(1),
-        table, nullCols = Seq("price"), countRows = true)
-      val v = sources.TxTable.currentVersion(s, table)
-      val keptNull = sources.TxTable.prunedFilesByNull(s, table, v, "price", true)
-      val keptVal = sources.TxTable.prunedFilesByNull(s, table, v, "price", false)
-      val nulls = sources.TxTable.readWhereNull(s, table, "price", true)
-        .agg(count(lit(1)).as("n_rows"))
-        .select(lit("read").as("section"), lit("is_null").as("label"),
-          col("n_rows"), lit(null).cast("double").as("sum_price"))
-      val vals = sources.TxTable.readWhereNull(s, table, "price", false)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("price"))).cast("double").as("sum_price"))
-        .select(lit("read").as("section"), lit("not_null").as("label"),
-          col("n_rows"), col("sum_price"))
-      val meta = s.createDataFrame(Seq(
-          ("meta", "files_total",
-            sources.TxTable.filesOf(s, table, v).size.toLong),
-          ("meta", "kept_is_null", keptNull.size.toLong),
-          ("meta", "kept_not_null", keptVal.size.toLong)))
-        .toDF("section", "label", "n_rows")
-        .withColumn("sum_price", lit(null).cast("double"))
-      nulls.unionByName(vals).unionByName(meta)
-    }),
-
-    // §2#35u (r10) MMR diversified selection: top-15 cosine pool for
-    // query 0, greedy 5-pick at lambda = 7/10 — relevance with
-    // diversity; all scores exact integers (1e-9-quantized cosines,
-    // rational lambda), so no float compare can flip a pick.
-    "q371_mmr" -> ((s, dir) =>
-      operators.Similarity.mmrSelect(t(s, dir, "embeddings").df, 0L,
-        poolK = 15, selectK = 5)),
-
-    // §2#30ad (r10) k-truss of the similarity graph: every surviving
-    // edge sits on >= k-2 triangles — edge-level cohesion where
-    // q142's k-core is node-level; support peel to a fixpoint.
-    "q372_ktruss" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.1)
-      operators.Graph.kTruss(pairs, "vec_a", "vec_b", k = 4)
-    }),
-
-    // §2#53ar (r10) Schuster periodogram of the hourly mean series:
-    // spectral power at candidate periods (6..48 h) from ONE
-    // conditional-sum pass — finds the period seasonalDecompose
-    // needs as an input; libm cos/sin pinned at 1e-9 per factor.
-    "q373_periodogram" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((unix_micros(col("ts")) / lit(3600000000L)).cast("long").as("hr"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      val hourly = ev.groupBy("hr")
-        .agg(round(sum(col("_vq").cast("decimal(38,0)")).cast("double")
-          / count(lit(1)).cast("double") / 1e6, 6).as("hour_mean"))
-      operators.Rolling.periodogram(hourly, "hr", "hour_mean",
-        Seq(6, 8, 12, 24, 36, 48))
-    }),
-
-    // §2#53as (r10) Wald SPRT per event type: is the value>500 rate
-    // above 0.5 — sequential early stopping at the first boundary
-    // crossing; integer LLR (quantized per-observation increments),
-    // peek-proof boundaries.
-    "q374_sprt" -> ((s, dir) =>
-      operators.Rolling.sprtBernoulli(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select(col("event_type"), col("event_id"),
-            (col("value") > 500.0).as("hit")),
-        "event_type", "event_id", "hit", p0 = 0.5, p1 = 0.55)),
-
-    // §2#52bq (r10) Dunn's post-hoc pairwise rank z after q265's
-    // Kruskal-Wallis: WHICH event types differ; exact half-unit
-    // integer ranks, Bonferroni m reported.
-    "q375_dunn" -> ((s, dir) =>
-      functions.Profile.dunnTest(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select(col("event_type"), col("value")),
-        "event_type", "value")),
-
-    // §2#52br (r10) Bland-Altman agreement between each user's mean
-    // click value and mean view value — bias, SD, 95% limits of
-    // agreement, and the pairs outside them.
-    "q376_bland_altman" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .filter(col("event_type").isin("click", "view"))
-        .select(col("user_id"), col("event_type"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      def m(t: String) = {
-        val cnt = sum(when(col("event_type") === t, 1L).otherwise(0L))
-        when(cnt > 0L, round(
-          sum(when(col("event_type") === t, col("_vq")).otherwise(0L)
-            .cast("decimal(38,0)")).cast("double") / cnt.cast("double") / 1e6, 6))
-      }
-      val per = ev.groupBy("user_id")
-        .agg(m("click").as("a"), m("view").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull)
-      functions.Profile.blandAltman(per, "a", "b")
-    }),
-
-    // §2#52bs (r10) Sobel mediation on lineitem: does the discount
-    // act on extended price THROUGH quantity — indirect a·b with its
-    // z, direct c'; one pass of exact DECIMAL moments.
-    "q377_sobel" -> ((s, dir) =>
-      functions.Profile.sobelMediation(t(s, dir, "lineitem").df,
-        "l_discount", "l_quantity", "l_extendedprice")),
-
-    // §2#52av (r8) Cochran–Armitage trend: is the purchase RATE
-    // monotone across the hour-of-day ordinal — the ordered companion
-    // to q146's anywhere-different chi-square; exact integer sums, one
-    // mirrored double z.
-    "q319_cochran_armitage" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(((unix_micros(col("ts")) / lit(3600000000L)).cast("long") % 24).as("hr"),
-          (col("event_type") === "purchase").cast("long").as("is_purchase"))
-      functions.Eval.cochranArmitage(ev, "hr", "is_purchase")
-    }),
-
-    // §2#52aw (r8) Bartlett variance-equality test across event types —
-    // the parametric, sharper sibling of q266's robust Levene; ln-of-
-    // variance terms DECIMAL-quantized pre-sum, zero-variance cells
-    // refuse to a NULL verdict.
-    "q320_bartlett" -> ((s, dir) =>
-      functions.Eval.bartlett(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"),
-        "event_type", "value")),
-
-    // §2#52au (r8) Friedman rank test on the day × event-type daily-
-    // mean table: "did any event type's level shift, CONTROLLING for
-    // the day" — the within-block companion to q265's global Kruskal
-    // ranks; complete blocks only, half-unit ranks per day.
-    "q317_friedman" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("day"),
-          col("event_type"),
-          floor(col("value") * 1000000L + lit(0.5)).cast("long").as("_vq"))
-      val daily = ev.groupBy("day", "event_type")
-        .agg(round(sum(col("_vq").cast("decimal(38,0)")).cast("double")
-          / count(lit(1)).cast("double") / 1e6, 6).as("day_mean"))
-      functions.Profile.friedman(daily, "day", "event_type", "day_mean")
-    }),
-
-    // §2#30aa (r8) incremental dedup-index maintenance over the
-    // lakehouse: the MinHash band index persists as a TxTable; a new
-    // batch contributes ONLY its own band rows (I) and takedowns
-    // retract theirs (D) through mergeInto — the incrementally-
-    // maintained index must hash-equal a from-scratch rebuild (both
-    // sections against ONE oracle-expected table).
-    "q312_dedup_index_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      val table = sidePath("graft_dedupidx", dir)
-      sources.TxTable.drop(s, table)
-      val key = concat_ws("#", col("doc_id"), col("band"))
-      // ONE signing pass: bandedMinhash is strictly per-doc (shingle →
-      // hash → per-doc min → bands), so a doc_id filter commutes with
-      // it — sign the corpus once and slice the base/batch/rebuild
-      // views from the checkpointed band rows, instead of signing 80%
-      // + 20% + 90% of the corpus separately (1.9× the per-byte
-      // MD5/shingle work, this query's dominant cost). Row sets are
-      // identical by the per-doc property; the checkpoint is index-
-      // sized (docs × bands), the q348 localCheckpoint pattern.
-      val sig = operators.Dedup.minhashBandIndex(docs).withColumn("key", key)
-        .select("key", "doc_id", "band", "bandval")
-        .localCheckpoint()
-      // v1: index of the base corpus
-      val idx1 = sig.filter(col("doc_id") % 5 =!= 0)
-      sources.TxTable.commit(idx1, table)
-      // the CDC feed: new batch inserts + takedown deletes (the D rows
-      // re-derive from the COMMITTED index — batch-sized, no re-sign)
-      val ins = sig.filter(col("doc_id") % 5 === 0)
-        .withColumn("seq", lit(1L)).withColumn("op", lit("I"))
-      val dels = sources.TxTable.read(s, table)
-        .filter(col("doc_id") % 10 === 1)
-        .withColumn("seq", lit(1L)).withColumn("op", lit("D"))
-      sources.TxTable.mergeInto(s, table, ins.unionByName(dels),
-        "key", "seq", "op")
-      val inc = sources.TxTable.read(s, table)
-      val rebuild = sig.filter(col("doc_id") % 10 =!= 1)
-      def summarize(df: org.apache.spark.sql.DataFrame, section: String) =
-        df.groupBy(col("band").cast("int").as("band"))
-          .agg(count(lit(1)).as("n_docs"),
-            countDistinct(col("bandval")).as("n_vals"),
-            sum(((col("bandval") % 1000003L) + 1000003L) % 1000003L).as("checksum"))
-          .select(lit(section).as("section"), col("band"), col("n_docs"),
-            col("n_vals"), col("checksum"))
-      summarize(inc, "incremental").unionByName(summarize(rebuild, "rebuild"))
-    }),
-
-    // §2#37k (r7) Flesch reading ease + FK grade per language — the
-    // corpus-total readability dial beside the Gopher quality signals;
-    // ASCII-pinned alphabet, standard vowel-group syllable heuristic.
-    "q297_readability" -> ((s, dir) =>
-      functions.TextFunctions.readability(t(s, dir, "documents").df, "lang", "text")),
-
-    // §2#37l (r7) character-level Shannon entropy per language — the
-    // encoding-anomaly dial (mojibake / base64 blobs / template spam
-    // shift the char distribution); ≤95 cells per group by
-    // construction.
-    "q298_char_entropy" -> ((s, dir) =>
-      functions.TextFunctions.charEntropy(t(s, dir, "documents").df, "lang", "text")),
-
-    // §2#35p (r7) Matryoshka truncated-dim recall: how much neighbor
-    // membership survives searching on the first 16 of 64 components —
-    // the store-wide/search-narrow cost-cut measurement beside q192's
-    // IVF recall and q165's JL projection.
-    "q299_matryoshka_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.truncatedRecall(
-        emb, emb.filter(col("vec_id") < 8), dims = 16)
-    }),
-
-    // §2#52ar (r7) character error rate per language: Spark's native
-    // levenshtein between the ASCII-pinned reference text and a
-    // deterministic corruption (leet substitutions + tail truncation)
-    // — micro vs macro CER per language, the ASR/OCR eval shape on
-    // pipeline text transforms.
-    "q292_cer" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      val ref = substring(regexp_replace(lower(col("text")), "[^\\x20-\\x7e]", ""), 1, 200)
-      val prep = docs.select(col("lang"), ref.as("ref"),
-        substring(translate(ref, "aeio", "4310"), 1, 180).as("hyp"))
-      functions.Eval.charErrorRate(prep, "lang", "ref", "hyp")
-    }),
-
-    // §2#52af (r7) grouped two-proportion z-tests with
-    // Benjamini–Hochberg FDR control: "which event types shifted the
-    // value>50 share between user cohorts" asked across ALL types at
-    // once with the false-discovery share capped at 5% — one partial
-    // agg to |types| cells; the BH sort runs over the vocabulary-sized
-    // group table, quantized-integer thresholds.
-    "q260_fdr_bh" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"),
-          (pmod(col("user_id"), lit(2)) === 1).as("arm"),
-          (col("value") > 50.0).as("flag"))
-      functions.Eval.proportionTestBh(ev, "event_type", "arm", "flag")
-    }),
-
-    // §2#53aa (r7) hot-key probe: the selection guide for the per-key
-    // sequence-window family (transitions/sessions/paths/trailing) —
-    // one partial agg + single-row rollup answering "is any key
-    // corpus-scaled enough to need the bucketed decomposition"; run
-    // once per source, not per query.
-    "q259_hot_key_probe" -> ((s, dir) =>
-      operators.Behavior.hotKeyProbe(
-        streaming.Events.readBatch(s, s"$dir/events.parquet"), "user_id",
-        bucketThreshold = 1000L)),
-
-    // §2#62o (r7) the lakehouse write path composed end-to-end: MERGE
-    // INTO a transactional table. v1 = the urgent-orders snapshot; a
-    // CDC feed (U = key%3==0 price doubled, D = key%3==1, I = the
-    // 2-HIGH orders) applies via Upsert.applyChanges and the result
-    // commits through TxTable as an overwrite; then the commit is
-    // audited three independent ways — the pre-commit merge frame
-    // (oracle RECOMPUTES it from the v1 manifest glob + the same
-    // SQL-derived feed: a wrong merge fails here), the committed
-    // snapshot re-read (oracle re-reads the v2 glob: a wrong manifest
-    // fails here), and the CDC replay + snapshot diff between the
-    // manifests (delete-of-v1 + insert-of-v2; added/removed/changed/
-    // same counts). Each stage stays its own scale shape: the merge
-    // is one key-shuffled window+join, the commit data-plane one
-    // distributed write, the audits manifest-glob-sized.
-    "q256_tx_merge" -> ((s, dir) => {
-      val table = sidePath("graft_txm", dir) // dir-derived — mirrored via __SFTAG__ in the oracle SQL
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.drop(s, table)
-      val urgent = ord.filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(urgent, table)
-      // the CDC feed: ×2 keeps the update double-exact on both engines
-      val feed = urgent.filter(col("o_orderkey") % 3 === 0)
-          .select(col("o_orderkey"), (col("o_totalprice") * 2).as("o_totalprice"),
-            lit(1L).as("seq"), lit("U").as("op"))
-        .unionByName(urgent.filter(col("o_orderkey") % 3 === 1)
-          .select(col("o_orderkey"), col("o_totalprice"), lit(1L).as("seq"), lit("D").as("op")))
-        .unionByName(ord.filter(col("o_orderpriority") === "2-HIGH")
-          .select(col("o_orderkey"), col("o_totalprice"), lit(1L).as("seq"), lit("I").as("op")))
-      // the commit goes through the first-class MERGE API (r8 — its
-      // conflict-retry loop recomputes on a lost CAS); the `expect`
-      // row below recomputes applyChanges INDEPENDENTLY so the API's
-      // internal merge is still audited against a second path
-      val (v2, attempts) = sources.TxTable.mergeInto(
-        s, table, feed, "o_orderkey", "seq", "op")
-      require(v2 == 2 && attempts == 1,
-        s"unexpected merge outcome: v=$v2 attempts=$attempts")
-      val merged = operators.Upsert.applyChanges(
-        sources.TxTable.readVersion(s, table, 1), feed, "o_orderkey", "seq", "op")
-      def summarize(df: org.apache.spark.sql.DataFrame, section: String, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(section).as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val expect = summarize(merged, "merge", "expected")
-      val snap = summarize(sources.TxTable.readVersion(s, table, 2), "snapshot", "v2")
-      val cdc = sources.TxTable.changes(s, table, 1, 2)
-        .groupBy(concat(col("_change"), lit("@"), col("_version")).as("label"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("cdc").as("section"), col("label"), col("n_rows"), col("sum_price"))
-      val diff = operators.Upsert.diffSnapshots(
-          sources.TxTable.readVersion(s, table, 1),
-          sources.TxTable.readVersion(s, table, 2), "o_orderkey")
-        .groupBy(col("change").as("label"))
-        .agg(count(lit(1)).as("n_rows"))
-        .select(lit("diff").as("section"), col("label"), col("n_rows"),
-          lit(null).cast("double").as("sum_price"))
-      expect.unionByName(snap).unionByName(cdc).unionByName(diff)
-    }),
-
-    // §2#62n timestamp time travel: Delta's timestampAsOf over the
-    // manifest layer — commit times strictly monotonic by protocol, so
-    // "the table as of ts" resolves unambiguously; probes at v2's
-    // commit, just before v3's, and at v3's.
-    "q254_tx_timetravel" -> ((s, dir) => {
-      val table = sidePath("graft_txt", dir)
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.drop(s, table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "1-URGENT"), table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "2-HIGH"), table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "5-LOW"), table, "overwrite")
-      def probe(tag: String, tsMs: Long) =
-        sources.TxTable.readAsOf(s, table, tsMs)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(tag).as("probe"), col("n_rows"), col("sum_price"))
-      val t2 = sources.TxTable.commitMsOf(s, table, 2)
-      val t3 = sources.TxTable.commitMsOf(s, table, 3)
-      probe("at_v2", t2)
-        .unionByName(probe("before_v3", t3 - 1))
-        .unionByName(probe("at_v3", t3))
-    }),
-
-    // §2#62m incremental join-view maintenance: the delta rule
-    // Δ(A⋈B) = dA⋈(B∪dB) ∪ A⋈dB over insert-only batches — output
-    // scales with the deltas' fan-out, never the view; AQE broadcasts
-    // batch-sized deltas so neither base shuffles.
-    "q251_delta_join" -> ((s, dir) => {
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey").as("okey"), col("o_totalprice"))
-      val li = t(s, dir, "lineitem").df
-        .select(col("l_orderkey").as("okey"), col("l_quantity"), col("l_linenumber"))
-      operators.Upsert.deltaJoin(
-        ord.filter(col("okey") % 10 =!= 0), ord.filter(col("okey") % 10 === 0),
-        li.filter(col("okey") % 7 =!= 0), li.filter(col("okey") % 7 === 0),
-        Seq("okey"))
-    }),
-
-    // §2#53z hot-key-safe trailing windows: the q64 bucket+carry
-    // decomposition applied to q72's time-range frames — per-(key,
-    // bucket) windows with ghosted carry-in rows, result ≡ the plain
-    // per-key sort (THIS gate proves it: same oracle SQL as q72).
-    "q252_trailing_bucketed" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.trailingBucketed(ev, "user_id", "tus",
-          300L * 1000000L, "value", bucketWidth = 600L * 1000000L)
-        .select("event_id", "user_id", "tus", "n_win", "sum_win")
-    }),
-
-    // §2#35n average precision @ k: the rank-position-sensitive
-    // retrieval metric beside q192's recall — integer 2520/rank
-    // harmonic arithmetic keeps AP exact across engines.
-    "q253_ap_at_k" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.apAtK(emb, emb.filter(col("vec_id") % 50 === 0), k = 10)
-    }),
-
-    // §2#53x Kaplan-Meier time-to-conversion: per-user duration to
-    // first purchase (censored at last observation otherwise), cohort
-    // by user hash — the censoring-aware retention curve; exact log-
-    // survival out (callers exp for display).
-    "q249_survival" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("event_type"))
-      val perUser = ev.groupBy("user_id").agg(
-        min(col("tus")).as("_t0"),
-        min(when(col("event_type") === "purchase", col("tus"))).as("_tc"),
-        max(col("tus")).as("_tm"))
-      val obs = perUser.select(
-        concat(lit("c"), pmod(col("user_id"), lit(3)).cast("string")).as("cohort"),
-        expr("(coalesce(_tc, _tm) - _t0) div 86400000000").as("dur_days"),
-        col("_tc").isNotNull.cast("int").as("converted"))
-      operators.Behavior.survivalCurve(obs, "cohort", "dur_days", "converted")
-    }),
-
-    // §2#53y Markov entropy rate: H(next|state) over the q119
-    // transition counts — the sequence-predictability scalar (low =
-    // scripted/bot-like traffic, high = diverse organic behavior);
-    // exact counts, entropy-rule terms.
-    "q250_markov_entropy" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("event_type"))
-      val tr = operators.Behavior.transitions(ev, "user_id", "tus", "event_type",
-        tieCols = Seq("event_id"))
-      val tot = Window.partitionBy(col("from_type"))
-      val withN = tr.select(col("from_type"), col("to_type"), col("n"))
-        .withColumn("_tot", sum(col("n")).over(tot))
-        .crossJoin(broadcast(tr.agg(sum(col("n")).as("_N"))))
-      withN
-        .withColumn("_term",
-          ((col("n").cast("double") / col("_N").cast("double"))
-            * log(col("n").cast("double") / col("_tot").cast("double")))
-            .cast("decimal(20,9)"))
-        .agg(max(col("_N")).as("n_steps"),
-          countDistinct(col("from_type")).as("n_states"),
-          round(-sum(col("_term")).cast("double"), 6).as("entropy_nats"))
-    }),
-
-    // §2#30q local clustering coefficient: closed-wedge share per
-    // node over the embedding-similarity graph — separates genuine
-    // dup clusters (cc→1) from LSH-bucket hubs (cc→0); the q114
-    // triangle plan plus one degree left-join.
-    "q247_clustering_coeff" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.1)
-      operators.Graph.clusteringCoefficient(pairs, "vec_a", "vec_b")
-    }),
-
-    // §2#52ae Poisson bootstrap CI for per-type mean value: B=100
-    // content-addressed replicates, multiplicities from integer CDF
-    // thresholds, fan-out map-local collapsing to (group, replicate)
-    // cells — uncertainty at corpus scale without coordinated
-    // resampling. B is a knob (bootstrapCiMean(b=...)); the gate pins
-    // B=100 DELIBERATELY (r9 perf review): ~100 replicates is the
-    // floor for stable percentile tails at alpha=5%, the cost is pure
-    // map-side compute (no shuffle growth — embarrassingly parallel
-    // on a real cluster), and halving B to shave the local benchmark
-    // would trade statistical validity for nothing architectural.
-    "q248_bootstrap_ci" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("value"), col("event_id"))
-      functions.Eval.bootstrapCiMean(ev, "event_type", "value", "event_id")
-    }),
-
-    // §2#52ad isotonic (PAV) calibration: the optimal monotone
-    // score→probability map via the data-parallel minimax identity —
-    // pooled (group, x) cells, bounded pair join under the theilSen
-    // loud-refusal contract, two cell-sized windows.
-    "q246_isotonic" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), floor(col("value")).as("xb"),
-          (pmod(col("user_id"), lit(2)) === 1).cast("int").as("label"))
-      functions.Eval.isotonicFit(ev, "event_type", "xb", "label")
-    }),
-
-    // §2#52ac calibration (reliability) bins: conf-vs-acc per
-    // confidence decile — ONE partial agg to ≤10 cells; micro-unit
-    // DECIMAL sums make the mean confidence order-free.
-    "q242_calibration" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select((col("value") / 500.0).as("pred"),
-          (pmod(col("user_id"), lit(2)) === 1).as("label"))
-      functions.Eval.calibration(ev, "label", "pred", nBins = 10)
-    }),
-
-    // §2#62b snapshot diff: the q111 CDC apply audited against its own
-    // base — every order key classified added/removed/changed/same via
-    // one full-outer join on null-safe payload-struct equality.
-    // assumeUnique: o_orderkey is the base PK and the q111 winner
-    // window emits one row per key by construction; the guard
-    // aggregations are for unknown feeds (spec-tested).
-    "q120_snapshot_diff" -> ((s, dir) => {
-      val base = t(s, dir, "orders")
-        .select(Seq("o_orderkey", "o_orderstatus", "o_totalprice")).df
-      val next = queries("q111_cdc_upsert")(s, dir)
-      operators.Upsert.diffSnapshots(base, next, "o_orderkey",
-        keepSame = true, assumeUnique = true)
-    }),
-
-    // §2#52f sparse equi-width histogram: document length distribution
-    // per source in 200-char bins — one partial agg, bins map-side.
-    "q121_histogram" -> ((s, dir) =>
-      functions.Profile.histogram(t(s, dir, "documents").df,
-        "source", "n_chars", 200L)),
-
-    // §2#56c Pareto frontier: users not dominated on (event volume,
-    // behavioral diversity) — the multi-criteria selection curve,
-    // histogram-sized at every step after the per-user agg.
-    "q122_pareto" -> ((s, dir) => {
-      val perUser = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-             countDistinct("event_type").as("n_types"))
-      functions.Profile.paretoFront2(perUser, "n_events", "n_types")
-    }),
-
-    // §2#32c containment near-dup: common/min(na,nb) ≥ 1/2 over the
-    // same rare-trigram inverted index as q25 — catches a short doc
-    // embedded in a long one, which Jaccard structurally misses.
-    "q123_containment" -> ((s, dir) =>
-      operators.Dedup.containmentJoin(t(s, dir, "documents").df)),
-
-    // §2#53i linear-decay weighted moving average: trailing-10 smoother
-    // per user via the (k−rn)·S1 + S2 two-frame-sum decomposition —
-    // exact integer arithmetic end to end, one double division.
-    "q124_wma" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.wma(ev, "user_id", "tus", "value", "event_id", k = 10)
-    }),
-
-    // §2#52g GROUPING SETS: the arbitrary-combination form completing
-    // cube (q104) / rollup (q71) — (pri, status), (pri), and the grand
-    // total in ONE Expand + partial-agg pass.
-    "q125_grouping_sets" -> ((s, dir) =>
-      t(s, dir, "orders").df
-        .groupingSets(
-          Seq(Seq(col("o_orderpriority"), col("o_orderstatus")),
-              Seq(col("o_orderpriority")), Seq()),
-          col("o_orderpriority"), col("o_orderstatus"))
-        .agg(grouping(col("o_orderpriority")).cast("int").as("g_pri"),
-             grouping(col("o_orderstatus")).cast("int").as("g_st"),
-             count(lit(1)).as("n"),
-             sum(dec(col("o_totalprice"))).cast("double").as("total"))),
-
-    // §2#61c streaming HLL build: the register max-aggregation over the
-    // event stream — state IS the ≤1024-row register table at any key
-    // cardinality; the final snapshot matches the batch registers
-    // cell-for-cell under the same oracle.
-    "q126_stream_hll" -> ((s, dir) =>
-      streaming.Events.streamHllRegisters(s, s"$dir/events.parquet")),
-
-    // §2#40b image block-mean signature: real ImageIO decode → 4×4
-    // aHash-style perceptual key, bit decisions integer-exact so the
-    // oracle rebuilds every signature from the deterministic payload
-    // bytes; dup-group sizes ride a signature-keyed window (8-byte
-    // rows — pixels never shuffle).
-    "q127_image_sig" -> ((s, dir) => {
-      val sigs = operators.Multimodal.imageSignatures(
-        operators.Multimodal.withImagePayload(t(s, dir, "documents").df))
-      sigs.withColumn("n_same_sig", count(lit(1)).over(Window.partitionBy("sig")))
-    }),
-
-    // §2#30k sketched source-similarity matrix: per-source MinHash
-    // signatures (one partial-min shuffle), pairwise agreement as the
-    // Jaccard estimate between whole-source gram sets — the scale
-    // companion to q80's exact overlap census.
-    "q128_source_minhash" -> ((s, dir) =>
-      operators.Dedup.sourceMinhashMatrix(t(s, dir, "documents").df)),
-
-    // §2#8b wide→long reshape (melt): lineitem's four money/quantity
-    // metrics collapse to (metric, value) rows — one Expand node,
-    // map-only, no shuffle (the inverse of q83's pivot).
-    "q129_unpivot" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(Seq("l_orderkey", "l_linenumber", "l_quantity",
-          "l_extendedprice", "l_discount", "l_tax"))
-        .unpivot(Seq("l_orderkey", "l_linenumber"),
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-          "metric", "value").df),
-
-    // §2#7b SQL set operations: EXCEPT / INTERSECT (distinct) and
-    // their ALL (multiplicity) forms between the order-custkey multiset
-    // and its urgent-priority sub-multiset, each result rolled up per
-    // key so the four ops share one output schema. Spark plans these as
-    // hash aggregates / left-anti shapes — partial-agg shuffles on the
-    // row value, never a sort.
-    "q130_set_ops" -> ((s, dir) => {
-      val d1 = t(s, dir, "orders").df.select(col("o_custkey").as("custkey"))
-      val d2 = t(s, dir, "orders").df
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey").as("custkey"))
-      def roll(df: DataFrame, op: String): DataFrame =
-        df.groupBy("custkey").agg(count(lit(1)).as("n")).withColumn("op", lit(op))
-      roll(d1.intersect(d2), "intersect")
-        .unionByName(roll(d1.except(d2), "except"))
-        .unionByName(roll(d1.intersectAll(d2), "intersect_all"))
-        .unionByName(roll(d1.exceptAll(d2), "except_all"))
-        .select(col("op"), col("custkey"), col("n"))
-    }),
-
-    // §2#19b array/HOF sweep: per-order sorted quantity arrays pushed
-    // through the higher-order-function surface (aggregate, filter,
-    // zip_with+sequence, transform, slice, array_join) — one partial
-    // agg builds the arrays, everything after is map-side; scalars and
-    // strings out, so the oracle compares exactly.
-    "q131_array_suite" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").df
-        .select(col("l_orderkey"), col("l_quantity").cast("int").as("q"))
-      li.groupBy("l_orderkey").agg(sort_array(collect_list(col("q"))).as("qs"))
-        .select(col("l_orderkey"),
-          size(col("qs")).as("n_items"),
-          aggregate(col("qs"), lit(0L), (acc, x) => acc + x).as("total_qty"),
-          size(filter(col("qs"), _ > 25)).as("n_big"),
-          aggregate(zip_with(col("qs"), sequence(lit(1), size(col("qs"))),
-            (x, i) => x.cast("long") * i), lit(0L), (acc, x) => acc + x).as("wsum"),
-          array_join(transform(slice(col("qs"), 1, 3), _.cast("string")), ",").as("first3"))
-    }),
-
-    // §2#53j per-user lag-1/lag-2 autocorrelation of event values —
-    // one key-partitioned sort for every lag's lead, pairs exploded
-    // map-side, five decimal-exact Pearson sums in one partial agg.
-    "q132_autocorr" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.autocorr(ev, "user_id", "tus", "value", "event_id",
-        lags = Seq(1, 2))
-    }),
-
-    // §2#53k last-touch attribution: each purchase credited to the
-    // user's most recent non-purchase touch within 7 days (as-of join
-    // with tolerance), rolled up per channel; the no-touch row reports
-    // as channel NULL. Touches dedupe to one per (user, instant) first
-    // so timestamp ties cannot make credit nondeterministic.
-    "q133_attribution" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"),
-          col("event_type"), col("value"))
-      val conv = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("tus"), col("value"))
-      val touches = ev.filter(col("event_type") =!= "purchase")
-        .groupBy(col("user_id"), col("tus"))
-        .agg(max(col("event_type")).as("channel"))
-      operators.Behavior.lastTouchAttribution(conv, touches,
-        "user_id", "tus", "channel", "value", lookbackUs = 604800000000L)
-    }),
-
-    // §2#40c audio perceptual signature: real WAV decode → 16-block
-    // energy signature (integer-exact bit gates), dup groups counted
-    // over the 8-byte keys — waveforms never shuffle.
-    "q134_audio_sig" -> ((s, dir) => {
-      val sigs = operators.Multimodal.audioSignatures(
-        operators.Multimodal.withAudioPayload(t(s, dir, "documents").df))
-      sigs.withColumn("n_same_sig", count(lit(1)).over(Window.partitionBy("sig")))
-    }),
-
-    // §2#40d scene-change detection: every frame of the video container
-    // decoded, a cut whenever consecutive frames' mean luminance
-    // differs by more than 8 gray levels (rational threshold,
-    // cross-multiplied longs) — per-frame rows never leave the map.
-    "q135_scene_cuts" -> ((s, dir) =>
-      operators.Multimodal.videoSceneCuts(
-        operators.Multimodal.withVideoPayload(t(s, dir, "documents").df))),
-
-    // §2#42d nearest as-of join: each click matched to the closest
-    // purchase within ±1 h in either direction, ties to the earlier
-    // one — both directional carries from ONE exchange (two sorts).
-    // Purchases dedupe per (user, instant) for deterministic ties.
-    "q136_asof_nearest" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"),
-          col("event_type"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tus"), col("value").as("click_value"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("tus").as("btus"))
-        .agg(max(col("value")).as("buy_value"))
-      operators.AsofJoin.asofJoinNearest(clicks, buys, "user_id", "tus", "btus",
-        Seq("btus", "buy_value"), tolerance = Some(lit(3600000000L)))
-    }),
-
-    // §2#28e batch sessionization: the streaming sessionizer's (q21)
-    // reprocessable one-shot twin — 30-min inactivity gap, one
-    // key-partitioned sort shared by the gap flag and the running
-    // session counter.
-    "q137_batch_sessions" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"))
-      operators.Behavior.sessionizeBatch(ev, "user_id", "tus",
-        gapUs = 1800000000L, tieCols = Seq("event_id"))
-    }),
-
-    // §2#61d HLL set operations: click-users vs purchase-users from two
-    // register tables — |A|, |B|, |A∪B| (cellwise-max merge), |A∩B| by
-    // inclusion–exclusion; the sketch-artifact audit question answered
-    // without rescanning either side.
-    "q138_hll_setops" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-      val a = functions.Sketches.hllRegisters(
-        ev.filter(col("event_type") === "click"), "user_id")
-      val b = functions.Sketches.hllRegisters(
-        ev.filter(col("event_type") === "purchase"), "user_id")
-      functions.Sketches.hllSetEstimates(a, b)
-    }),
-
-    // §2#53l trailing-window anomaly flags: per user, is this value
-    // > 3σ from the trailing hour's OTHER observations? — the z-score
-    // gate cross-multiplied into pure decimal integer arithmetic
-    // (dev² > 9·var·n²-form), so no float ever decides a flag.
-    "q139_rolling_anomaly" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.anomalies(ev, "user_id", "tus", "value",
-          widthUs = 3600000000L, minObs = 5L, k = 3)
-        .withColumn("is_anomaly", col("is_anomaly").cast("int"))
-    }),
-
-    // §2#58b distribution-matching resample: rebalance three sources to
-    // a 50/30/20 marginal — the binding stratum keeps everything,
-    // others downsample by the content-hash threshold; keep_frac
-    // audits the realized fractions.
-    "q140_distribution_match" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .matchDistribution("source",
-          Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2), Seq("doc_id"))
-        .select(Seq("doc_id", "source", "keep_frac")).df),
-
-    // §2#52h two-sample KS drift: how far apart are the click and
-    // purchase value distributions, and where does the gap peak —
-    // CDFs over the distinct-value histogram, argmax a TakeOrdered.
-    "q141_ks_drift" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("value"))
-      functions.Profile.ksDistance(ev, "event_type", "click", "purchase", "value")
-    }),
-
-    // §2#30l k-core membership: the dense-cluster vs stringy-chain
-    // separator over the q114 similarity graph — iterative peel to an
-    // asserted fixpoint, each round edge-list-sized.
-    "q142_kcore" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.1)
-      operators.Graph.kCore(pairs, "vec_a", "vec_b", k = 2)
-    }),
-
-    // §2#52i PSI drift score between the click and purchase value
-    // distributions in width-25 bins — the whole-shape companion of
-    // q141's KS point statistic; empty-on-one-side bins report as
-    // dropped instead of smoothing.
-    "q143_psi" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("value"))
-      functions.Profile.psi(ev, "event_type", "click", "purchase", "value",
-        binWidth = 25.0)
-    }),
-
-    // §2#45e global ordinal assignment: contiguous ids in
-    // (l_orderkey, l_linenumber) order WITHOUT a single-task global
-    // window — order-aligned buckets + bucket-partitioned ranks + a
-    // histogram-sized offset table.
-    "q144_global_index" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .select(Seq("l_orderkey", "l_linenumber"))
-        .globalIndex("l_orderkey", Seq("l_linenumber"), bucketWidth = 1000L).df),
-
-    // §2#52j per-type winsorization: event values clamped into their
-    // own type's exact [p05, p95] band — every row kept, tails tamed;
-    // percentile interpolation is bit-identical across engines (q71).
-    "q145_winsorize" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("event_id"), col("value"))
-      functions.Profile.winsorize(ev, "event_type", "value")
-    }),
-
-    // §2#52k categorical drift: is the event-type mix independent of
-    // weekday-vs-weekend? χ² over the (cohort, type) contingency
-    // cells — label-vocabulary-sized everywhere after one partial agg.
-    "q146_chisq" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"),
-          when(expr("pmod(unix_micros(ts) div 86400000000, 7)") < 5, "weekday")
-            .otherwise("weekend").as("cohort"))
-      functions.Profile.chiSquare(ev, "cohort", "event_type")
-    }),
-
-    // §2#37g URL domain census: extract every http(s) host from the
-    // text (URLs planted deterministically from doc_id, like q43's PII)
-    // and report per-domain URL + document counts — the source-quality
-    // census behind domain allow/deny lists. RE2-compatible pattern
-    // runs verbatim as the oracle.
-    "q147_url_domains" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df.select(col("doc_id"),
-        concat(col("text"),
-          lit(" see http://site"), pmod(col("doc_id"), lit(20)),
-          lit(".example.com/page and https://cdn"), pmod(col("doc_id"), lit(7)),
-          lit(".example.org/x")).as("text"))
-      docs
-        .select(col("doc_id"),
-          explode(expr("regexp_extract_all(text, 'https?://([^/\\\\s]+)', 1)")).as("domain"))
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_urls"), countDistinct("doc_id").as("n_docs"))
-    }),
-
-    // §2#43c compaction plan: the q112 file listing grouped into
-    // ≈4 KiB merge batches by exclusive byte prefix-sum — the
-    // lakehouse OPTIMIZE planning half, engine-exact.
-    "q148_compaction_plan" -> ((s, dir) => {
-      val out = sidePath("graft_binsrc", dir) // dir-derived — mirrored via __SFTAG__ in the oracle SQL
-      sources.BinaryDir.materializeText(
-        t(s, dir, "documents").df.orderBy("doc_id").limit(64), out)
-      functions.Layout.compactionPlan(
-        sources.BinaryDir.ingest(s, out, "doc_*.txt"),
-        "file_name", "n_bytes", targetBytes = 4096L)
-    }),
-
-    // §2#4b null-safe equi-join (<=>): the NULL key buckets MATCH each
-    // other (IS NOT DISTINCT FROM), unlike `=` which drops them — the
-    // semantics gap every dedup-on-nullable-key pipeline hits.
-    "q149_nullsafe_join" -> ((s, dir) => {
-      val keyed = t(s, dir, "orders").df.select(
-        when(col("o_orderpriority") === "1-URGENT", lit(null).cast("string"))
-          .otherwise(col("o_orderpriority")).as("pri"),
-        col("o_totalprice"))
-      val a = keyed.groupBy("pri").agg(count(lit(1)).as("na"))
-      val b = keyed.filter(col("o_totalprice") > 150000)
-        .groupBy("pri").agg(count(lit(1)).as("nb"))
-      a.join(b, a("pri") <=> b("pri"), "left")
-        .select(a("pri").as("pri"), col("na"), col("nb"))
-    }),
-
-    // §2#52l k-anonymity / l-diversity audit: can a user be singled
-    // out from (event_type, weekday)? group sizes + distinct users per
-    // quasi-identifier cell with k=50 / l=5 violation flags.
-    "q150_k_anonymity" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("user_id"),
-          expr("pmod(unix_micros(ts) div 86400000000, 7)").as("dow"))
-      functions.Profile.kAnonymity(ev, Seq("event_type", "dow"), "user_id",
-        k = 50L, l = 5L)
-    }),
-
-    // §2#52m exact char-weighted median doc length per source: the
-    // value where HALF THE CHARACTERS live in shorter docs — giant
-    // docs move it, a million stubs don't; rational-threshold step
-    // contract, no float boundary.
-    "q151_weighted_median" -> ((s, dir) =>
-      functions.Profile.weightedPercentile(t(s, dir, "documents").df,
-        "source", "n_chars", "n_chars", pNum = 1L, pDen = 2L)),
-
-    // §2#61e per-hour streaming HLL: one register table per event-time
-    // hour — "distinct users per hour in constant per-window memory";
-    // complete mode here for the oracle, watermarked append in
-    // production (spec-asserted sealed-window emission).
-    "q152_stream_hll_hourly" -> ((s, dir) =>
-      streaming.Events.streamHllHourly(s, s"$dir/events.parquet")),
-
-    // §2#21c schema-evolution parquet read: an early-generation shard
-    // (doc_id, source) and a later one with a NEW lang column load as
-    // one frame via mergeSchema; early rows surface lang NULL.
-    "q153_schema_merge" -> ((s, dir) => {
-      val out = sidePath("graft_merge", dir) // dir-derived — mirrored via __SFTAG__ in the oracle SQL
-      val d = t(s, dir, "documents").df
-      d.filter(col("doc_id") % 2 === 0).select("doc_id", "source")
-        .write.mode("overwrite").parquet(out)
-      d.filter(col("doc_id") % 2 === 1).select("doc_id", "source", "lang")
-        .write.mode("append").parquet(out)
-      Tafra.readParquetMerged(s, out).df
-    }),
-
-    // §2#60c shuffle-free join-size probe: the AMS inner product of
-    // the orders and customer custkey sketches — min over hash rows is
-    // the tightest upper bound two CMS artifacts support, computed
-    // without touching either table.
-    "q154_join_size" -> ((s, dir) => {
-      val a = functions.Sketches.cmsBuild(
-        t(s, dir, "orders").df.select(col("o_custkey").as("k")), "k")
-      val b = functions.Sketches.cmsBuild(
-        t(s, dir, "customer").df.select(col("c_custkey").as("k")), "k")
-      functions.Sketches.cmsJoinSizeEstimate(a, b)
-        .select(col("j"), col("row_estimate").cast("long").as("row_estimate"),
-          col("est").cast("long").as("est"))
-    }),
-
-    // §2#52n contribution inequality: per-source Gini of document
-    // character mass — "is this source a few giants or many stubs" in
-    // one number; exact integer rank identity, one rank window.
-    "q155_gini" -> ((s, dir) =>
-      functions.Profile.gini(t(s, dir, "documents").df,
-        "source", "n_chars", "doc_id")),
-
-    // §2#52o per-flag OLS trend: does quantity predict price, per
-    // return flag — slope/intercept/r² from one six-sum partial agg
-    // (the corrMatrix sums, closed-form OLS), DECIMAL(38,0)-exact.
-    "q156_linreg" -> ((s, dir) =>
-      functions.Profile.linReg(t(s, dir, "lineitem").df,
-        "l_returnflag", "l_quantity", "l_extendedprice")),
-
-    // §2#52p Welch's t between two sources' doc-length distributions —
-    // the mean-level drift gate (KS = worst point, PSI = shape,
-    // χ² = categorical, t = mean); one both-cohort partial agg.
-    "q157_welch_t" -> ((s, dir) =>
-      functions.Profile.welchT(t(s, dir, "documents").df,
-        "source", "src1", "src2", "n_chars", unitScale = 1L)),
-
-    // §2#52q Benford first-digit audit of order totals (in exact
-    // cents): observed vs ln(1+1/d)/ln 10 — the fabricated-data smell
-    // test; leading digit by exact string arithmetic, never log10.
-    "q158_benford" -> ((s, dir) =>
-      functions.Profile.benford(
-        t(s, dir, "orders").df.select(
-          floor(col("o_totalprice") * 100 + 0.5).as("cents")), "cents")),
-
-    // §2#52r column completeness profile over derived nullable
-    // views of orders — n_null / n_distinct / fill_rate per column in
-    // ONE scan (the k distincts share one Expand pass).
-    "q159_null_profile" -> ((s, dir) =>
-      functions.Profile.nullProfile(
-        t(s, dir, "orders").df.select(
-          when(col("o_orderpriority") =!= "1-URGENT", col("o_orderpriority")).as("pri"),
-          when(col("o_orderstatus") === "F", col("o_orderstatus")).as("status_f"),
-          when(col("o_totalprice") > 200000, col("o_totalprice")).as("price_high")),
-        Seq("pri", "status_f", "price_high"))),
-
-    // §2#52s deterministic per-user modal event type: histogram partial
-    // agg + one distinct-value window, ties to the smallest value.
-    "q160_mode" -> ((s, dir) =>
-      functions.Profile.modeBy(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select("user_id", "event_type"),
-        "user_id", "event_type")),
-
-    // §2#37h BM25 ranked retrieval for a 3-term query: the reference
-    // lexical ranking (k1=3/2, b=3/4 dyadic rationals); postings filter
-    // to query terms map-side, df table broadcast, per-term
-    // contributions DECIMAL(20,9)-quantized pre-sum.
-    "q161_bm25" -> ((s, dir) =>
-      functions.TermStats.bm25Rank(t(s, dir, "documents").df,
-        Seq("join", "hash", "scan"), topK = 10)),
-
-    // §2#30m sorted-neighborhood (SNM) candidate pairs within 5
-    // positions of the normalized-prefix sort order — global ordinal
-    // via the two-level bucket decomposition (never a global window),
-    // neighbor pairing a block ±1 hash equi-join in rank space.
-    "q162_snm" -> ((s, dir) =>
-      operators.Dedup.sortedNeighborhood(
-        t(s, dir, "documents").df.select(col("doc_id"),
-          substring(lower(col("text")), 1, 16).as("sk")),
-        "sk", "doc_id", w = 5)),
-
-    // §2#53m sequence-gap detection: missing o_orderkey ranges per
-    // priority — within-bucket lead window + histogram-sized
-    // cross-bucket summary, never a per-key global sort.
-    "q163_gaps" -> ((s, dir) =>
-      operators.Rolling.gaps(
-        t(s, dir, "orders").df.select(col("o_orderpriority").as("pri"),
-          col("o_orderkey")),
-        "pri", "o_orderkey", bucketWidth = 64L)),
-
-    // §2#43d per-file min/max pruning audit over a freshly z-ordered
-    // layout: the proof that the q92 key clusters BOTH dimensions —
-    // per-file ranges near-disjoint in partkey and suppkey at once.
-    "q164_file_stats" -> ((s, dir) => {
-      val out = sidePath("graft_zorder", dir) // dir-derived — mirrored via __SFTAG__ in the oracle SQL
-      functions.Layout.zorderLayout(
-        t(s, dir, "lineitem").df.select("l_orderkey", "l_partkey", "l_suppkey"),
-        "l_partkey", "l_suppkey", nFiles = 8)
-        .write.mode("overwrite").parquet(out)
-      functions.Layout.fileStats(s, out, Seq("l_partkey", "l_suppkey"))
-    }),
-
-    // §2#35e signed random projection (JL/Rademacher) 64→16 dims with
-    // a cosine-preservation audit over consecutive pairs: projected
-    // cosine tracks the original (scale-free, so no 1/√k factor);
-    // native codegen'd kernel sharing the hyperplane sign matrix.
-    "q165_random_projection" -> ((s, dir) => {
-      val proj = t(s, dir, "embeddings").df.select(col("vec_id"), col("embedding"),
-        functions.VectorFunctions.randomProject(col("embedding"), 16, 64).as("proj"))
-      val a = proj.select(col("vec_id").as("id_a"),
-        col("embedding").as("ea"), col("proj").as("pa"))
-      val b = proj.select((col("vec_id") - 1).as("id_a"), col("vec_id").as("id_b"),
-        col("embedding").as("eb"), col("proj").as("pb"))
-      a.join(b, Seq("id_a"))
-        .withColumn("_co", functions.VectorFunctions.cosine(col("ea"), col("eb")))
-        .withColumn("_cp", functions.VectorFunctions.cosineHof(col("pa"), col("pb")))
-        .select(col("id_a"), col("id_b"),
-          round(col("_co"), 6).as("cos_orig"), round(col("_cp"), 6).as("cos_proj"),
-          round(abs(col("_co") - col("_cp")), 6).as("err"))
-    }),
-
-    // §2#25b order-insensitive corpus content digest: one mergeable
-    // (n_rows, Σ md5-word1, Σ md5-word2) attestation row over the
-    // audited columns — "did this snapshot change?" in one partial agg.
-    "q166_table_digest" -> ((s, dir) =>
-      t(s, dir, "lineitem").contentDigest(
-        Seq("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus")).df),
-
-    // §2#30n label-propagation communities over the similarity graph
-    // (deterministic sync LPA, 2 rounds, ties to smallest label) — the
-    // density-free community view components/kCore can't give.
-    "q167_label_prop" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.4)
-      operators.Graph.labelPropagation(pairs, "vec_a", "vec_b", iters = 2)
-    }),
-
-    // §2#40e decode-free PNG header metadata: signature + IHDR
-    // width/height/depth/color via pure Column byte arithmetic — the
-    // prune-before-decode pass; no ImageIO anywhere in this plan.
-    "q168_png_meta" -> ((s, dir) =>
-      operators.Multimodal.pngHeaderMeta(
-        operators.Multimodal.withImagePayload(t(s, dir, "documents").df))),
-
-    // §2#52t streaming PSI drift: per event-time hour, PSI of the
-    // hour's value histogram vs the corpus baseline — bounded
-    // (window × bin) stream state + the q143 per-emission arithmetic.
-    "q169_stream_psi" -> ((s, dir) =>
-      streaming.Events.streamPsiHourly(s, s"$dir/events.parquet")),
-
-    // §2#53n per-user inter-arrival cadence: count/min/max/exact-median
-    // gap micros off one (time, id)-ordered key window.
-    "q170_interarrival" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("event_id"))
-      operators.Behavior.interArrival(ev, "user_id", "tus", Seq("event_id"))
-    }),
-
-    // §2#52u equi-depth quantile binning: per-source quartile bucket
-    // per doc from ONE percentile-array agg joined back — never ntile
-    // (whose tie handling is row-order-dependent and whose window
-    // buffers a group per task).
-    "q171_quantile_bins" -> ((s, dir) =>
-      functions.Profile.quantileBins(
-        t(s, dir, "documents").select(Seq("doc_id", "source", "n_chars")).df,
-        "source", "n_chars", k = 4)),
-
-    // §2#40f decode-free WAV header metadata: RIFF/WAVE signature +
-    // fmt-chunk channels/rate/bits + data size via little-endian
-    // Column byte assembly — no AudioSystem in this plan.
-    "q172_wav_meta" -> ((s, dir) =>
-      operators.Multimodal.wavHeaderMeta(
-        operators.Multimodal.withAudioPayload(t(s, dir, "documents").df))),
-
-    // §2#53o top within-session event trigram paths: session islands +
-    // both lookaheads off ONE key sort; cross-session windows cut by
-    // comparing the session index lead.
-    "q173_top_paths" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"),
-          col("event_type"), col("event_id"))
-      operators.Behavior.topPaths(ev, "user_id", "tus", "event_type",
-        gapUs = 1800000000L, n = 3, topK = 20, tieCols = Seq("event_id"))
-    }),
-
-    // §2#37i Zipf rank-frequency fit: ln-ln OLS slope over the top-200
-    // terms — the corpus-health scalar (natural text ≈ −1); micro-unit
-    // quantized logs through the q156 six-sum regression.
-    "q174_zipf" -> ((s, dir) =>
-      functions.TermStats.zipfFit(t(s, dir, "documents").df, topN = 200)),
-
-    // §2#35f centroid-distance outliers: nearest-IVF-centroid cosine +
-    // DECIMAL(18,6) threshold flag — "belongs to no prototype"
-    // embedding anomaly scoring; map-only cell projection.
-    "q175_centroid_outliers" -> ((s, dir) =>
-      operators.Similarity.centroidOutliers(t(s, dir, "embeddings").df)),
-
-    // §2#53p CUSUM mean-shift scores per event type: Page's recurrence
-    // in its closed prefix form (cum − running extremum incl. the
-    // empty prefix) — one key sort, exact integer micro-units.
-    "q176_cusum" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.cusum(ev, "event_type", "tus", "value",
-        target = 50.0, h = 2000.0, tieCols = Seq("event_id"))
-        .select("event_id", "event_type", "tus", "cusum_hi", "cusum_lo", "is_shift")
-    }),
-
-    // §2#36b canonical URL normalization: scheme/host lowercase, www +
-    // default port + fragment + trailing slash stripped, tracking
-    // params dropped, survivors sorted — the URL-dedup key. Three
-    // planted mess-shapes per doc; map-only codegen'd chain; oracle
-    // PREDICTS the canonical form (matches the spec, not just itself).
-    "q177_canonical_url" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => T}
-      val urls = t(s, dir, "documents").df.select(col("doc_id"),
-        explode(array(
-          concat(lit("HTTP://WWW.Site"), pmod(col("doc_id"), lit(20)),
-            lit(".Example.COM:80/Page"), pmod(col("doc_id"), lit(5)),
-            lit("/?utm_source=x&b="), pmod(col("doc_id"), lit(3)), lit("&a=1#sec")),
-          concat(lit("https://CDN"), pmod(col("doc_id"), lit(7)),
-            lit(".example.org:443/x/y/")),
-          concat(lit("http://shop.example.net/p?z=9&a="), pmod(col("doc_id"), lit(2)),
-            lit("&fbclid=abc")))).as("url"))
-      urls.select(col("doc_id"), col("url"), T.canonicalUrl(col("url")).as("canon"))
-    }),
-
-    // §2#31b line-level boilerplate removal: lines in ≥ 1/2 of a
-    // source's docs (planted copyright/banner chrome) are stripped
-    // from every doc; content + the per-doc unique tail survive.
-    "q178_boilerplate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df.select(col("doc_id"), col("source"),
-        concat(col("text"), lit("\nCopyright Example Corp\nBanner "),
-          pmod(col("doc_id"), lit(2)), lit("\nunique tail "), col("doc_id")).as("text"))
-      operators.Dedup.stripBoilerplateLines(docs, 1, 2)
-    }),
-
-    // §2#50b golden-record consolidation: q84's fuzzy name pairs →
-    // components → one canonical row per cluster, each attribute
-    // resolved to most-frequent / tie-to-smallest independently.
-    "q179_golden_records" -> ((s, dir) => {
-      val base = t(s, dir, "part").df
-        .groupBy(col("p_name").as("s"))
-        .agg(min("p_partkey").as("id"), min("p_brand").as("brand"),
-          min("p_size").as("psize"))
-      val l = length(col("s"))
-      val cut = pmod(col("id"), l.cast("long")).cast("int")
-      val variants = base.filter(col("id") % 2 === 0)
-        .select((col("id") + 1000000L).as("id"),
-          concat(col("s").substr(lit(1), cut), lit("q"),
-                 col("s").substr(cut + lit(2), l)).as("s"),
-          col("brand"), (col("psize") + 1).as("psize"))
-      val corpus = base.select("id", "s", "brand", "psize").unionByName(variants)
-      val pairs = operators.Dedup.editDistancePairs(corpus, "id", "s",
-        maxDist = 2, maxBlock = 100)
-      operators.Dedup.goldenRecords(corpus, pairs, "id", "id_a", "id_b",
-        Seq("s", "brand", "psize"))
-    }),
-
-    // §2#30f fuzzy decontamination: q56's split, but MinHash signature
-    // agreement instead of exact n-gram hits — catches paraphrased
-    // leaks; eval side broadcast, integer band-count threshold.
-    "q180_decontaminate_fuzzy" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      operators.Dedup.decontaminateFuzzy(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0))
-    }),
-
-    // §2#30l quality-aware dedup keep: q41's components, winner =
-    // highest n_chars (tie smallest id) via one partial-agg argmax.
-    "q181_dedup_keep_best" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      operators.Dedup.dedupKeepBest(docs,
-        operators.Dedup.ngramJaccard(docs), "n_chars")
-    }),
-
-    // §2#45d temperature-smoothed mixing: √n source quotas (α=1/2,
-    // IEEE-exact), integer quota arithmetic, md5-ranked membership.
-    "q182_temperature_mix" -> ((s, dir) =>
-      t(s, dir, "documents").mixTemperature("source", 300L, Seq("doc_id"))
-        .select(Seq("doc_id", "source", "quota")).df),
-
-    // §2#35g label-conformity (mislabel) scoring: cosine to the OWN
-    // label's exact-sum centroid, broadcast centroids, map-only pass.
-    "q183_label_conformity" -> ((s, dir) =>
-      operators.Similarity.labelConformity(
-        t(s, dir, "embeddings").df)),
-
-    // §2#35h distributed PCA dominant component: exact quantized
-    // moment sums (one partial agg), driver power iteration (bounded
-    // model artifact), map-only mean-centered projection.
-    "q185_pca_project" -> ((s, dir) =>
-      operators.Similarity.principalComponent(
-        t(s, dir, "embeddings").df)),
-
-    // §2#52v streaming CUSUM monitor: three longs of state per key,
-    // per-event scores emitted once; exact match with the batch
-    // closed form, so q176's SQL is the oracle for the whole stream.
-    "q187_stream_cusum" -> ((s, dir) =>
-      streaming.Events.streamCusum(s, s"$dir/events.parquet")
-        .select("event_id", "event_type", "tus", "cusum_hi", "cusum_lo", "is_shift")),
-
-    // §2#40g decode-free GIF header metadata: GIF signature + LE
-    // logical-screen dims off real encoder output, pure Columns.
-    "q188_gif_meta" -> ((s, dir) =>
-      operators.Multimodal.gifHeaderMeta(
-        operators.Multimodal.withGifPayload(t(s, dir, "documents").df))),
-
-    // §2#52w m-estimate target encoding: smoothed per-category target
-    // means — two partial aggs, exact integer sums, broadcast prior.
-    "q189_target_encode" -> ((s, dir) =>
-      functions.Profile.targetEncode(
-        t(s, dir, "lineitem").select(Seq("l_suppkey", "l_quantity")).df,
-        "l_suppkey", "l_quantity", m = 10)),
-
-    // §2#52x out-of-fold target encoding: the leakage-free variant of
-    // q189 — fold f's encoding uses ONLY the other folds' statistics
-    // (prior included), all k leave-one-fold-out encoders from one
-    // corpus pass over the (cat, fold) state table.
-    "q233_target_encode_oof" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select("event_type", "user_id", "value")
-      val folded = new core.Tafra(ev).kfoldByHash(5, Seq("user_id")).df
-      functions.Profile.targetEncodeOof(folded, "event_type", "value", "fold", m = 10)
-    }),
-
-    // §2#35j one spherical k-means step: map-only nearest-seed
-    // assignment (centroids as plan literals) + ONE exact partial-agg
-    // centroid update — the IVF-build iteration as an operator.
-    "q190_kmeans_step" -> ((s, dir) =>
-      operators.Similarity.kmeansStep(t(s, dir, "embeddings").df)),
-
-    // §2#49b leakage-safe grouped split: the SAME hash split as q46
-    // keyed on user_id, so every event of a user lands in one split —
-    // the contract that stops cross-split user leakage.
-    "q191_grouped_split" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select("event_id", "user_id")
-      new core.Tafra(ev)
-        .splitByHash(Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), Seq("user_id"))
-        .df.select("event_id", "user_id", "split")
-    }),
-
-    // §2#35k ANN recall@k audit: IVF results intersected with the exact
-    // top-k per query — the metric that picks ncells/nprobe before a
-    // 100-TB index build; membership compare, no float boundary.
-    "q192_ann_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").df
-      operators.Similarity.recallAudit(emb, emb.filter(col("vec_id") < 8))
-    }),
-
-    // §2#35l one k-means|| oversampling round: keep-with-prob l·d²/cost
-    // via the content-addressed md5 coin — scalable seeding between the
-    // md5 seeds and the q190 Lloyd step; map-only score + ONE scalar
-    // agg broadcast back.
-    "q193_kmeanspp_round" -> ((s, dir) =>
-      operators.Similarity.kmeansOversample(t(s, dir, "embeddings").df)),
-
-    // §2#37c blocklist term census: per (doc, term) substring counts
-    // for a literal term list — one codegen'd projection, map-only.
-    "q194_blocklist" -> ((s, dir) =>
-      functions.TextFunctions.blocklistCensus(t(s, dir, "documents").df,
-        BlocklistTerms)),
-
-    // §2#62d mergeable aggregate states: per-batch partial aggregates
-    // folded WITHOUT rescanning history — the merged state must be
-    // bit-identical to a from-scratch aggregation (exact quantized
-    // sums), which is exactly what the oracle checks (it aggregates
-    // the full table directly).
-    "q196_state_merge" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select("event_id", "event_type", "value")
-      val base = operators.Upsert.aggState(
-        ev.filter(col("event_id") % 3 =!= 0), Seq("event_type"), "value")
-      val delta = operators.Upsert.aggState(
-        ev.filter(col("event_id") % 3 === 0), Seq("event_type"), "value")
-      operators.Upsert.mergeAggStates(Seq(base, delta), Seq("event_type"))
-        .select(col("event_type"), col("n"),
-          (col("sum_q").cast("double") / 1e6).as("sum_v"),
-          col("min_v"), col("max_v"))
-    }),
-
-    // §2#62e mergeable MOMENTS state: power sums in exact integer
-    // arithmetic (the distributed Welford replacement) — two disjoint
-    // batch states merged, then finalized to mean/var/std; the oracle
-    // computes the same statistics from scratch over the full table,
-    // so the merge path must be bit-identical to a one-pass agg.
-    "q197_moments_merge" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select("event_id", "event_type", "value")
-      val base = operators.Upsert.momentsState(
-        ev.filter(col("event_id") % 3 =!= 0), Seq("event_type"), "value")
-      val delta = operators.Upsert.momentsState(
-        ev.filter(col("event_id") % 3 === 0), Seq("event_type"), "value")
-      operators.Upsert.momentsOf(
-          operators.Upsert.mergeMomentsStates(Seq(base, delta), Seq("event_type")))
-        .select("event_type", "n", "mean_v", "var_v", "std_v")
-    }),
-
-    // §2#31c Fellegi–Sunter record linkage over SORTED-NEIGHBORHOOD
-    // candidates (n·w pairs — LINEAR at any scale; the blocked
-    // scorePairs form is quadratic per block and measured 15× on the
-    // 10× replica): integer log2 likelihood-ratio weights (name
-    // agreement at bounded edit distance 1: m=8/9,u=1/9 → ±3; acctbal
-    // within 50.00 in exact cents: m=4/5,u=1/5 → ±2), links at ≥ 1.
-    "q198_linkage" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").df
-      operators.Linkage.scoreNeighborPairs(
-        cust, "c_custkey", sortCol = "c_name",
-        valueCols = Seq("c_name", "c_acctbal"),
-        fields = Seq(
-          operators.Linkage.LinkField("c_name",
-            (a, b) => levenshtein(a, b, 1) >= 0, 3, -3),
-          operators.Linkage.LinkField("c_acctbal",
-            (a, b) => abs(floor(a.cast("double") * 100 + lit(0.5)).cast("long") -
-                          floor(b.cast("double") * 100 + lit(0.5)).cast("long")) <= 5000,
-            2, -2)),
-        minScore = 1, w = 10)
-    }),
-
-    // §2#53s dyadic-decay EWMA: exponential smoothing made engine-
-    // exact by pinning decay to 1/2 and truncating at w=16 lags — the
-    // answer to wma's "EWMA cannot be engine-exact" caveat.
-    "q199_ewma" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.ewmaDyadic(ev, "user_id", "tus", "value", "event_id")
-    }),
-
-    // §2#66b resource-allocation link prediction over the bucketed
-    // embedding-similarity graph: which near-dup edges are MISSING —
-    // common-neighbor enumeration with hub cap, exact integer shares.
-    "q200_ra_links" -> ((s, dir) => {
-      val pairs = operators.Dedup.embeddingPairs(t(s, dir, "embeddings").df)
-        .filter(col("cos") >= 0.1)
-      operators.Graph.raLinkPrediction(pairs, "vec_a", "vec_b")
-    }),
-
-    // §2#31d Jaro-Winkler name matching: the native codegen'd
-    // comparator (Spark has levenshtein only) over sorted-neighborhood
-    // candidates (n·w pairs, linear at scale — the blocked join form
-    // measured 14× on the 10× replica) — DuckDB's
-    // jaro_winkler_similarity is the oracle, so the expression
-    // semantics are pinned bit-for-bit to the standard.
-    "q201_jw_linkage" -> ((s, dir) => {
-      val c = t(s, dir, "customer").df
-      val cand = operators.Dedup.sortedNeighborhood(
-        c.select(col("c_custkey"), col("c_name").as("_sk")), "_sk", "c_custkey", w = 10)
-        .select(col("id_a").as("k_a"), col("id_b").as("k_b"))
-      val names = c.select(col("c_custkey"), col("c_name"))
-      cand
-        .join(names.select(col("c_custkey").as("k_a"), col("c_name").as("name_a")), Seq("k_a"))
-        .join(names.select(col("c_custkey").as("k_b"), col("c_name").as("name_b")), Seq("k_b"))
-        .withColumn("jw", round(
-          functions.TextFunctions.jaroWinkler(col("name_a"), col("name_b")), 9))
-        .filter(col("jw") >= 0.96)
-        .select("k_a", "k_b", "jw")
-    }),
-
-    // §2#4b bloom-filtered join: dim-key bloom prunes the fact side
-    // map-side BEFORE the shuffle — the explicit form of AQE's
-    // runtime row-level filter, guaranteed rather than heuristic.
-    "q202_bloom_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").df
-        .select("l_partkey", "l_quantity", "l_extendedprice")
-      val dim = t(s, dir, "part").df.filter(col("p_size") <= 2)
-        .select("p_partkey", "p_brand")
-      operators.BloomJoin.bloomFilteredJoin(
-          li.withColumnRenamed("l_partkey", "p_partkey"), dim, Seq("p_partkey"))
-        .groupBy("p_brand")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
-    }),
-
-    // §2#62f point-in-time (PIT) join: facts enriched with the
-    // dimension state AS OF each fact's own event time — scd2 builds
-    // the status periods from the profile-update stream (event_id%5),
-    // asofJoin attaches (status, period start) to every other event.
-    // The leakage-safe feature join: never reads a FUTURE dim state.
-    "q203_pit_join" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("tus"), col("event_type"))
-      val periods = operators.Rolling.scd2(
-          ev.filter(col("event_id") % 5 === 0),
-          "user_id", "tus", "event_type", tieCols = Seq("event_id"))
-        .select(col("user_id"), col("value").as("status"),
-          col("valid_from").as("from_us"))
-      val facts = ev.filter(col("event_id") % 5 =!= 0)
-        .select("user_id", "event_id", "tus")
-      operators.AsofJoin.asofJoin(facts, periods, "user_id", "tus", "from_us",
-        Seq("status", "from_us"))
-    }),
-
-    // §2#53t Theil-Sen robust trend: median of pairwise slopes per
-    // user — the OLS companion (q156) with a 29% breakdown point;
-    // exact integer slope quantization + lower-median rank selection.
-    "q204_theil_sen" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("value"))
-      functions.Profile.theilSen(ev, "user_id", "tus", "value")
-    }),
-
-    // §2#52p robust scaling: (v − median)/IQR per group, quartiles
-    // from one histogram walk (type-1 inverse ECDF, integer-decided) —
-    // the outlier-immune feature standardization.
-    "q205_robust_scale" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select("event_id", "event_type", "value")
-      functions.Profile.robustScale(ev, "event_type", "value")
-    }),
-
-    // §2#43d rendezvous (HRW) shard assignment: stateless consistent
-    // placement — the n→n+1 movement audit shows only ~1/(n+1) of
-    // keys move, the property mod-n sharding lacks.
-    "q206_rendezvous" -> ((s, dir) => {
-      val k = col("doc_id").cast("string")
-      t(s, dir, "documents").df.select(
-        col("doc_id"),
-        functions.Layout.rendezvousShard(k, 8).as("shard8"),
-        functions.Layout.rendezvousShard(k, 9).as("shard9"))
-        .withColumn("moved", col("shard8") =!= col("shard9"))
-    }),
-
-    // §2#50c interval-overlap join: concurrent-validity detection —
-    // per customer, pairs of 31-day order windows that overlap; each
-    // pair emitted exactly once via the overlap-start-cell rule, no
-    // dedup shuffle.
-    "q207_interval_overlap" -> ((s, dir) => {
-      val usDay = 86400000000L
-      def ivs(ka: String, sa: String, ea: String) =
-        t(s, dir, "orders").df.select(
-          col("o_custkey"), col("o_orderkey").as(ka),
-          expr(s"unix_micros(cast(o_orderdate as timestamp)) div $usDay").as(sa))
-          .withColumn(ea, col(sa) + 30)
-      operators.RangeJoin.intervalOverlapJoin(
-          ivs("key_a", "s_a", "e_a"), ivs("key_b", "s_b", "e_b"),
-          Seq("o_custkey"), "s_a", "e_a", "s_b", "e_b", bucket = 32L)
-        .filter(col("key_a") < col("key_b"))
-        .select(col("o_custkey"), col("key_a"), col("key_b"),
-          (least(col("e_a"), col("e_b")) - greatest(col("s_a"), col("s_b")) + 1)
-            .as("ov_days"))
-    }),
-
-    // §2#35j reciprocal-rank fusion: hybrid retrieval — BM25 lexical
-    // top-50 and embedding-cosine top-50 (query = vec 0) fused by
-    // exact integer 1e9 div (60+rank) sums; the score-free combiner
-    // for incommensurable retrievers.
-    "q208_rrf_fusion" -> ((s, dir) => {
-      val lex = functions.TermStats.bm25Rank(
-        t(s, dir, "documents").df, Seq("join", "hash", "scan"), topK = 50)
-        .select(col("doc_id"), col("rank"))
-      val emb = t(s, dir, "embeddings").df
-      val sem = operators.Similarity.bruteForceTopK(
-          emb, emb.filter(col("vec_id") === 0), k = 50)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      operators.Similarity.rrfFuse(Seq(lex, sem), "doc_id", "rank")
-    }),
-
-    // §2#45d Neyman-allocation stratified sample: budget ∝ N_h·σ_h
-    // (the survey-sampling optimum), largest-remainder apportionment
-    // entirely in integers, md5-rank selection within strata.
-    "q209_neyman" -> ((s, dir) =>
-      functions.Profile.neymanSample(
-        t(s, dir, "documents").df.select(col("source"), col("doc_id"),
-          size(functions.TextFunctions.tokens(col("text"))).cast("double").as("nt")),
-        "source", "nt", totalN = 120L, idCol = "doc_id")),
-
-    // §2#53u time-decay attribution: every lookback touch credited
-    // 2^(−half-lives) of the conversion — dyadic weights, exact
-    // integer normalization, completing last-touch (q133).
-    "q210_decay_attribution" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"),
-          col("event_type"), col("value"))
-      val conv = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("tus"), col("value"))
-      val touches = ev.filter(col("event_type") =!= "purchase")
-        .groupBy(col("user_id"), col("tus"))
-        .agg(max(col("event_type")).as("channel"))
-      operators.Behavior.timeDecayAttribution(conv, touches,
-        "user_id", "tus", "channel", "value",
-        lookbackUs = 604800000000L, halflifeUs = 86400000000L)
-    }),
-
-    // §2#21c ORC roundtrip: the Hive-ecosystem columnar format as a
-    // first-class sink/source (toOrc/readOrc) — the written stripes
-    // must read back to EXACTLY the parquet-derived oracle result.
-    "q211_orc" -> ((s, dir) => {
-      val out = sidePath("graft_orc_rt", dir) // dir-derived: concurrent SFs each round-trip their own stripes
-      new core.Tafra(t(s, dir, "lineitem").df
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")).toOrc(out)
-      core.Tafra.readOrc(s, out).df
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          max(col("l_orderkey")).as("max_key"))
-    }),
-
-    // §2#62g bitemporal as-of: the state known at tx time T about
-    // validity time V — two-axis time travel over the change feed
-    // (events as (key, valid=tus, tx=event_id, payload)).
-    "q212_bitemporal" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("valid_from"),
-          col("event_id").as("tx"), col("event_type").as("status"), col("value"))
-      val b = ev.agg(expr("max(tx) div 2").as("_tmax"),
-        (max(col("valid_from")) - lit(604800000000L)).as("_vmax"))
-      operators.Upsert.bitemporalAsOf(
-          ev.crossJoin(broadcast(b)), "user_id", "valid_from", "tx",
-          txAt = col("_tmax"), validAt = col("_vmax"))
-        .select("user_id", "valid_from", "tx", "status", "value")
-    }),
-
-    // §2#61c exact bitmap distinct: bucket-bitmap bit_or fold — the
-    // roaring-index trick; exact cardinality with a |ids|/64-word
-    // shuffle instead of count(distinct)'s Expand, zero error.
-    "q213_bitmap_distinct" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select("event_type", "user_id")
-      functions.Sketches.bitmapDistinct(ev, "event_type", "user_id")
-    }),
-
-    // §2#40b JPEG header metadata: REAL ImageIO baseline JFIF bytes,
-    // then a decode-free SEGMENT WALK (variable-length APP0/DQT/DHT
-    // run) to the SOF frame — pure Column arithmetic, no codec on the
-    // read path.
-    "q214_jpeg_meta" -> ((s, dir) =>
-      operators.Multimodal.jpegHeaderMeta(
-        operators.Multimodal.withJpegPayload(t(s, dir, "documents").df))),
-
-    // §2#52r Mann-Whitney U: the nonparametric drift test — rank
-    // arithmetic entirely in exact integer half-units, tie-corrected
-    // z from exact sums; survives the tails Welch's t assumes away.
-    "q215_mannwhitney" -> ((s, dir) =>
-      functions.Profile.mannWhitneyU(t(s, dir, "documents").df,
-        "source", "src1", "src2", "n_chars", unitScale = 1L)),
-
-    // §2#52s Spearman rank correlation: per event type, the monotone
-    // association between time and value — Pearson on exact
-    // tie-averaged half-unit ranks.
-    "q216_spearman" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), unix_micros(col("ts")).as("tus"), col("value"))
-      functions.Profile.spearman(ev, "event_type", "tus", "value",
-        unitScaleX = 1L, unitScaleY = 1000000L)
-    }),
-
-    // §2#62h streaming incremental state merge: each micro-batch
-    // aggregated once, folded into the standing state via foreachBatch
-    // + mergeAggStates — history never rescanned, bit-identical to a
-    // from-scratch agg (the oracle recomputes from scratch).
-    "q217_stream_state_merge" -> ((s, dir) =>
-      streaming.Events.streamAggState(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("n"),
-          (col("sum_q").cast("double") / 1e6).as("sum_v"),
-          col("min_v"), col("max_v"))),
-
-    // §2#52t referential-integrity audit: orphans and childless
-    // parents across the FK chain, each ONE anti-join partial count.
-    "q218_fk_audit" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").df.select(col("l_orderkey"))
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_custkey"))
-      val cust = t(s, dir, "customer").df.select(col("c_custkey"))
-      def cnt(df: DataFrame, rel: String) =
-        df.agg(count(lit(1)).as("n_violations")).select(lit(rel).as("relationship"), col("n_violations"))
-      cnt(li.join(ord.select(col("o_orderkey").as("l_orderkey")), Seq("l_orderkey"), "left_anti"),
-          "lineitem_orphans")
-        .unionByName(cnt(ord.join(cust.select(col("c_custkey").as("o_custkey")), Seq("o_custkey"), "left_anti"),
-          "order_orphans"))
-        .unionByName(cnt(ord.join(li.select(col("l_orderkey").as("o_orderkey")).distinct(), Seq("o_orderkey"), "left_anti"),
-          "childless_orders"))
-        .unionByName(cnt(cust.join(ord.select(col("o_custkey").as("c_custkey")).distinct(), Seq("c_custkey"), "left_anti"),
-          "childless_customers"))
-    }),
-
-    // §2#64b running distinct: cumulative unique users per type over
-    // time — first-occurrence flags (one window) summed by a second
-    // running window; exact, no state explosion.
-    "q219_running_distinct" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("event_type"), col("user_id"),
-          unix_micros(col("ts")).as("tus"))
-      val first = Window.partitionBy(col("event_type"), col("user_id"))
-        .orderBy(col("tus"), col("event_id"))
-      val run = Window.partitionBy(col("event_type"))
-        .orderBy(col("tus"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("_f", when(row_number().over(first) === 1, 1L).otherwise(0L))
-        .withColumn("cum_distinct", sum(col("_f")).over(run))
-        .select("event_id", "event_type", "tus", "cum_distinct")
-    }),
-
-    // §2#52u CUPED variance reduction: per-user experiment metric
-    // adjusted by the pre-period covariate, theta from exact integer
-    // sums — the A/B-test-duration halver; mean-preserving.
-    "q220_cuped" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("user_id"), unix_micros(col("ts")).as("tus"), col("value"))
-      val mid = ev.agg(expr("(min(tus) + max(tus)) div 2").as("_mid"))
-      val vq = floor(col("value") * 1e6 + lit(0.5)).cast("long")
-      val units = ev.crossJoin(broadcast(mid))
-        .groupBy("user_id")
-        .agg((sum(when(col("tus") < col("_mid"), vq).otherwise(0L)).cast("double") / 1e6).as("x"),
-             (sum(when(col("tus") >= col("_mid"), vq).otherwise(0L)).cast("double") / 1e6).as("y"))
-      functions.Profile.cuped(units, "user_id", "x", "y")
-    }),
-
-    // §2#52v trimmed mean: robust location from the same histogram
-    // walk as the cuts themselves — tails dropped from the estimate,
-    // unlike winsorize's clamp.
-    "q221_trimmed_mean" -> ((s, dir) =>
-      functions.Profile.trimmedMean(
-        streaming.Events.readBatch(s, s"$dir/events.parquet")
-          .select("event_type", "value"),
-        "event_type", "value")),
-
-    // §2#52w split-conformal prediction intervals: the finite-sample
-    // distribution-free uncertainty band — conformal-rank residual
-    // quantile on a calibration split, realized coverage on held-out;
-    // every decision an integer comparison (residuals scale through
-    // by n so the mean never floats).
-    "q222_conformal" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_type"), col("event_id"), col("value"))
-      functions.Profile.conformalInterval(ev, "event_type", "value",
-        calCol = col("event_id") % 2 === 0)
-    }),
-
-    // §2#49c leakage-safe k-fold: fold = md5(user) mod k, every event
-    // of a user in ONE fold — the cross-validation form of q191.
-    "q195_kfold" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select("event_id", "user_id")
-      new core.Tafra(ev).kfoldByHash(5, Seq("user_id"))
-        .df.select("event_id", "user_id", "fold")
-    }),
-
-    // §2#35i hard-negative mining: per anchor the k most-similar
-    // DIFFERENT-label vectors — labels carried through the bucket
-    // pipeline, no corpus join onto the pair list.
-    "q186_hard_negatives" -> ((s, dir) =>
-      operators.Similarity.hardNegatives(
-        t(s, dir, "embeddings").df)),
-
-    // §2#53q seasonal-baseline residual anomalies: per (type,
-    // hour-of-day) mean broadcast back; decision cross-multiplied in
-    // exact integers — the daily-rhythm-aware spike detector.
-    "q184_seasonal_anomaly" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("tus"), col("value"))
-      operators.Rolling.seasonalAnomaly(ev, "event_type", "tus", "value",
-        threshold = 25.0)
-        .select("event_id", "event_type", "hod", "base_mean", "is_anomaly")
-    }),
-
-    // §2#35m multi-round k-means trainer: the q190/q193 bricks driven
-    // to a full quantizer build — 3 exact-integer-centroid Lloyd
-    // rounds with per-round inertia (the convergence curve); the
-    // oracle replays every round as chained CTEs.
-    "q223_kmeans_train" -> ((s, dir) =>
-      operators.Similarity.kmeansTrain(t(s, dir, "embeddings").df,
-        ncells = 8, iters = 3, stopMoveU = -1L)
-        // gate boundary: DECIMAL stringifies differently across engines
-        .withColumn("inertia", col("inertia_q").cast("double")).drop("inertia_q")),
-
-    // §2#60e streaming quantile-state build: the q227 state maintained
-    // by the stream in complete mode (state = bin table, never keyed
-    // by value), read out as the live per-type p99.
-    "q228_stream_quantile" -> ((s, dir) => {
-      val st = streaming.Events.streamQuantileState(s, s"$dir/events.parquet")
-      functions.Sketches.quantileOf(st, Seq("event_type"), 99, 100)
-        .select(col("event_type"), col("n"), col("q_est").as("p99"))
-    }),
-
-    // §2#60d deterministic mergeable quantile state: two disjoint
-    // batch states merged, then p50/p90 rank-selected from the bin
-    // histogram — the "p99 across shards without rescanning" member
-    // of the mergeable-state family; the oracle computes the same
-    // dyadic bins directly over the full table (merge ≡ direct is the
-    // state contract, spec-asserted).
-    "q227_quantile_state" -> ((s, dir) => {
-      val ev = streaming.Events.readBatch(s, s"$dir/events.parquet")
-        .select(col("event_id"), col("event_type"), col("value"))
-      val sA = functions.Sketches.quantileState(
-        ev.filter(col("event_id") % 2 === 0), Seq("event_type"), "value")
-      val sB = functions.Sketches.quantileState(
-        ev.filter(col("event_id") % 2 === 1), Seq("event_type"), "value")
-      val m = functions.Sketches.mergeQuantileStates(Seq(sA, sB), Seq("event_type"))
-      val p50 = functions.Sketches.quantileOf(m, Seq("event_type"), 1, 2)
-        .select(col("event_type"), col("n"), col("q_est").as("p50"))
-      val p90 = functions.Sketches.quantileOf(m, Seq("event_type"), 9, 10)
-        .select(col("event_type"), col("q_est").as("p90"))
-      p50.join(p90, Seq("event_type"))
-    }),
-
-    // §2#58c DSIR importance weights: hashed-ngram importance
-    // resampling scores (target = src1 docs vs the whole corpus) —
-    // the domain-adaptation selection signal beside quality (q30),
-    // perplexity (q65), and novelty (q74); B-cell histograms, λ table
-    // broadcast, one scoring pass.
-    "q226_dsir" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").df
-      functions.NgramLm.dsirWeights(docs, docs.filter(col("source") === "src1"))
-    }),
-
-    // §2#38c distributed BPE merge training: the q63 encoder's missing
-    // trainer loop — 6 rounds of pair-count → argmax → merge over the
-    // corpus vocabulary (the Zipf collapse makes rounds vocab-priced);
-    // the oracle replays every round with recursive replace-to-fixpoint
-    // CTEs. Same %20 sampling rationale as q63's %100.
-    "q225_bpe_train" -> ((s, dir) =>
-      functions.Bpe.learnMergesDistributed(
-        t(s, dir, "documents").df.filter(col("doc_id") % 20 === 0), nMerges = 6)),
-
-    // §2#62i transactional snapshot layer: three commits (append,
-    // append, overwrite) then a time-travel read of EVERY version —
-    // the oracle re-reads each version's deterministic file set
-    // directly, proving manifest isolation (v2 = v1+v2 files, the
-    // overwrite's v3 = only its own).
-    "q224_tx_snapshot" -> ((s, dir) => {
-      val table = sidePath("graft_tx", dir) // dir-derived — mirrored via __SFTAG__ in the oracle SQL
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.drop(s, table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "1-URGENT"), table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "2-HIGH"), table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "5-LOW"), table, "overwrite")
-      (1 to 3).map { v =>
-        sources.TxTable.readVersion(s, table, v)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(v).as("version"), col("n_rows"), col("sum_price"))
-      }.reduce(_.unionByName(_))
-    }),
-
-    // §2#62j change-data read off the snapshot layer: append → compact
-    // → overwrite, then one CDC poll over the whole interval. The
-    // manifest diff makes the append step's inserts exactly its new
-    // files (consuming an hourly append reads hourly volume, never the
-    // table), the compact step silent (dataChange=false), and the
-    // overwrite a delete-of-prior + insert-of-new pair. Own side table
-    // (graft_txc): q224 builds graft_tx and the oracle reads both
-    // AFTER all queries ran — shared state would clobber.
-    "q229_tx_changes" -> ((s, dir) => {
-      val table = sidePath("graft_txc", dir) // dir-derived — mirrored via __SFTAG__ in the oracle SQL
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      sources.TxTable.drop(s, table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "1-URGENT"), table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "2-HIGH"), table)
-      sources.TxTable.compact(s, table)
-      sources.TxTable.commit(ord.filter(col("o_orderpriority") === "5-LOW"), table, "overwrite")
-      sources.TxTable.changes(s, table, 1, 4)
-        .groupBy(col("_version").as("version"), col("_change").as("change"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-    }),
-
-    // §2#62k OPTIMIZE commit: a fragmented append (8 files) compacted
-    // into a fresh content-preserving version; the gate itself proves
-    // preservation (identical n_rows/sum_price across versions) and
-    // the oracle counts files via read_parquet(filename=true) over the
-    // same manifest-named globs.
-    "q230_tx_compact" -> ((s, dir) => {
-      val table = sidePath("graft_txo", dir) // dir-derived — mirrored via __SFTAG__ in the oracle SQL
-      val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.drop(s, table)
-      sources.TxTable.commit(ord.repartition(8), table)
-      sources.TxTable.compact(s, table)
-      (1 to 2).map { v =>
-        sources.TxTable.readVersion(s, table, v)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(v).as("version"),
-            lit(sources.TxTable.opOf(s, table, v)).as("op"),
-            lit(sources.TxTable.filesOf(s, table, v).size).as("n_files"),
-            col("n_rows"), col("sum_price"))
-      }.reduce(_.unionByName(_))
-    }),
-
-    // §2#62l incremental aggregate maintenance: a persisted per-key
-    // state absorbs a CDC delta of inserts AND deletes without ever
-    // rescanning the corpus — n/sum_q subtract exactly (abelian),
-    // min/max fold over inserts only (sound bounds). The oracle mirrors
-    // the signed algebra; the exact-recompute equivalence for n/sum_q
-    // is spec-proven separately.
-    "q231_agg_delta" -> ((s, dir) => {
-      val ord = t(s, dir, "orders").df
-        .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-      val base = ord.filter(col("o_orderkey") % 10 =!= 0)
-      val delta = ord.filter(col("o_orderkey") % 10 === 0).withColumn("op", lit("I"))
-        .unionByName(base.filter(col("o_orderkey") % 10 === 3).withColumn("op", lit("D")))
-        .select(col("o_orderpriority"), col("o_totalprice"), col("op"))
-      val st = operators.Upsert.aggState(
-        base.select("o_orderpriority", "o_totalprice"), Seq("o_orderpriority"), "o_totalprice")
-      operators.Upsert.applyAggDelta(st, delta, Seq("o_orderpriority"), "o_totalprice", "op")
-        // exact-integer exit (the q101 ulp rule): micro-unit sum as LONG
-        .select(col("o_orderpriority"), col("n"), col("sum_q").cast("long").as("sum_q"),
-          col("min_v"), col("max_v"))
-    }),
-
-    // §2#63 binaryFile ingest: raw per-document files (materialized by
-    // a distributed foreachPartition writer — test stand-in for an
-    // object store) read back through Spark's binaryFile source and
-    // normalized to (file_name, n_bytes, content_md5); the DuckDB
-    // oracle re-reads the same files via read_blob.
-    "q112_binary_source" -> ((s, dir) => {
-      val out = sidePath("graft_binsrc", dir) // dir-derived — mirrored via __SFTAG__ in the oracle SQL
-      sources.BinaryDir.materializeText(
-        t(s, dir, "documents").df.orderBy("doc_id").limit(64), out)
-      sources.BinaryDir.ingest(s, out, "doc_*.txt")
-    })
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q374_sprt" ->
-      """WITH c AS (
-           SELECT CAST(floor(ln(0.55 / 0.5) * 1000000000 + 0.5) AS BIGINT) AS c1,
-             CAST(floor(ln((1.0 - 0.55) / (1.0 - 0.5)) * 1000000000 + 0.5)
-               AS BIGINT) AS c0,
-             CAST(floor(ln((1.0 - 0.05) / 0.05) * 1000000000 + 0.5)
-               AS BIGINT) AS up,
-             CAST(floor(ln(0.05 / (1.0 - 0.05)) * 1000000000 + 0.5)
-               AS BIGINT) AS lo),
-         e AS (
-           SELECT event_type AS key, event_id,
-             CASE WHEN value > 500.0 THEN 1 ELSE 0 END AS x
-           FROM events),
-         sc AS (
-           SELECT key, event_id,
-             ROW_NUMBER() OVER w AS t,
-             SUM(x) OVER w AS cx
-           FROM e WINDOW w AS (PARTITION BY key ORDER BY event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         ll AS (
-           SELECT key, t,
-             cx * (SELECT c1 FROM c) + (t - cx) * (SELECT c0 FROM c) AS llr
-           FROM sc),
-         hits AS (
-           SELECT key, t, llr,
-             CASE WHEN llr >= (SELECT up FROM c) THEN 'h1'
-                  WHEN llr <= (SELECT lo FROM c) THEN 'h0' END AS hit
-           FROM ll),
-         agg AS (
-           SELECT key, COUNT(*) AS n_total,
-             MIN(CASE WHEN hit IS NOT NULL THEN t END) AS nd
-           FROM hits GROUP BY 1)
-         SELECT agg.key, agg.n_total,
-           COALESCE(h.hit, 'continue') AS decision,
-           agg.nd AS n_at_decision,
-           round(CAST(h.llr AS DOUBLE) / 1e9, 9) AS llr_at_decision
-         FROM agg LEFT JOIN hits h ON h.key = agg.key AND h.t = agg.nd""",
-
-    "q375_dunn" ->
-      """WITH b AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v
-           FROM events),
-         hist AS (SELECT v, COUNT(*) AS t FROM b GROUP BY 1),
-         rk AS (
-           SELECT v, t,
-             SUM(t) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW) AS cum
-           FROM hist),
-         hr AS (SELECT v, 2 * (cum - t) + t + 1 AS hr2 FROM rk),
-         pg AS (
-           SELECT g, SUM(c) AS n,
-             SUM(CAST(c AS HUGEINT) * hr2) AS sr2
-           FROM (SELECT g, v, COUNT(*) AS c FROM b GROUP BY 1, 2) gv
-           JOIN hr ON gv.v = hr.v GROUP BY 1),
-         sc AS (
-           SELECT CAST(SUM(t) AS BIGINT) AS nn,
-             CAST(SUM(CAST(t AS HUGEINT) * t * t - t) AS DOUBLE) AS ties
-           FROM hist),
-         s2 AS (
-           SELECT CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1.0) / 12.0
-             - ties / (12.0 * (CAST(nn AS DOUBLE) - 1.0)) AS sig2
-           FROM sc),
-         kk AS (SELECT COUNT(*) AS k FROM pg)
-         SELECT a.g AS a, b2.g AS b,
-           CAST(a.n AS BIGINT) AS n_a, CAST(b2.n AS BIGINT) AS n_b,
-           CASE WHEN sig2 > 0.0 THEN round(
-             (CAST(a.sr2 AS DOUBLE) / (2.0 * CAST(a.n AS DOUBLE))
-              - CAST(b2.sr2 AS DOUBLE) / (2.0 * CAST(b2.n AS DOUBLE)))
-             / sqrt(sig2 * (1.0 / CAST(a.n AS DOUBLE)
-               + 1.0 / CAST(b2.n AS DOUBLE))), 9) END AS z,
-           CAST(k * (k - 1) // 2 AS BIGINT) AS m_comparisons
-         FROM pg a JOIN pg b2 ON a.g < b2.g, s2, kk""",
-
-    "q376_bland_altman" ->
-      """WITH e AS (
-           SELECT user_id, event_type,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events WHERE event_type IN ('click', 'view')),
-         per AS (
-           SELECT user_id,
-             CASE WHEN SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) > 0
-               THEN round(CAST(SUM(CASE WHEN event_type = 'click'
-                     THEN CAST(vq AS HUGEINT) ELSE 0 END) AS DOUBLE)
-                 / CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                     AS DOUBLE) / 1000000.0, 6) END AS a,
-             CASE WHEN SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) > 0
-               THEN round(CAST(SUM(CASE WHEN event_type = 'view'
-                     THEN CAST(vq AS HUGEINT) ELSE 0 END) AS DOUBLE)
-                 / CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                     AS DOUBLE) / 1000000.0, 6) END AS b
-           FROM e GROUP BY 1),
-         d AS (
-           SELECT CAST(floor(a * 1000000 + 0.5) AS BIGINT)
-             - CAST(floor(b * 1000000 + 0.5) AS BIGINT) AS dq
-           FROM per WHERE a IS NOT NULL AND b IS NOT NULL),
-         m AS (
-           SELECT COUNT(*) AS n, CAST(SUM(CAST(dq AS HUGEINT)) AS DOUBLE) AS s,
-             CAST(SUM(CAST(dq AS HUGEINT) * dq) AS DOUBLE) AS s2
-           FROM d),
-         st AS (
-           SELECT n, s / CAST(n AS DOUBLE) / 1000000.0 AS mean_d,
-             sqrt((s2 - s * s / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)
-               / 1000000.0 / 1000000.0) AS sd_d
-           FROM m)
-         SELECT CAST(n AS BIGINT) AS n,
-           round(mean_d, 9) + 0.0 AS mean_diff, round(sd_d, 9) + 0.0 AS sd_diff,
-           round(mean_d - 1.96 * sd_d, 9) + 0.0 AS loa_lo,
-           round(mean_d + 1.96 * sd_d, 9) + 0.0 AS loa_hi,
-           (SELECT COUNT(*) FROM d, st
-            WHERE CAST(dq AS DOUBLE) / 1000000.0 < mean_d - 1.96 * sd_d
-               OR CAST(dq AS DOUBLE) / 1000000.0 > mean_d + 1.96 * sd_d)
-             AS n_outside
-         FROM st""",
-
-    "q377_sobel" ->
-      """WITH q AS (
-           SELECT CAST(floor(CAST(l_discount AS DOUBLE) * 100 + 0.5) AS HUGEINT) AS x,
-             CAST(floor(CAST(l_quantity AS DOUBLE) * 100 + 0.5) AS HUGEINT) AS m,
-             CAST(floor(CAST(l_extendedprice AS DOUBLE) * 100 + 0.5) AS HUGEINT) AS y
-           FROM lineitem),
-         mm AS (
-           SELECT CAST(COUNT(*) AS DOUBLE) AS n, COUNT(*) AS nn,
-             CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(m) AS DOUBLE) AS sm,
-             CAST(SUM(y) AS DOUBLE) AS sy,
-             CAST(SUM(x * x) AS DOUBLE) AS sxx, CAST(SUM(m * m) AS DOUBLE) AS smm,
-             CAST(SUM(y * y) AS DOUBLE) AS syy,
-             CAST(SUM(x * m) AS DOUBLE) AS sxm, CAST(SUM(x * y) AS DOUBLE) AS sxy,
-             CAST(SUM(m * y) AS DOUBLE) AS smy
-           FROM q),
-         cen AS (
-           SELECT nn, n, sxx - sx * sx / n AS cxx, smm - sm * sm / n AS cmm,
-             syy - sy * sy / n AS cyy, sxm - sx * sm / n AS cxm,
-             sxy - sx * sy / n AS cxy, smy - sm * sy / n AS cmy
-           FROM mm),
-         fit AS (
-           SELECT nn, n, cyy, cxy, cmy, cxx,
-             cxm / cxx AS a_hat,
-             ((cmm - cxm * cxm / cxx) / (n - 2.0)) / cxx AS se_a2,
-             cxx * cmm - cxm * cxm AS det,
-             (cmm * cxy - cxm * cmy) / (cxx * cmm - cxm * cxm) AS c_prime,
-             (cxx * cmy - cxm * cxy) / (cxx * cmm - cxm * cxm) AS b_hat
-           FROM cen),
-         fit3 AS (
-           SELECT nn, a_hat, b_hat, c_prime, se_a2,
-             ((cyy - c_prime * cxy - b_hat * cmy) / (n - 3.0)) * cxx / det
-               AS se_b2
-           FROM fit)
-         SELECT CAST(nn AS BIGINT) AS n,
-           round(a_hat, 9) + 0.0 AS a_path, round(b_hat, 9) + 0.0 AS b_path,
-           round(c_prime, 9) + 0.0 AS direct,
-           round(a_hat * b_hat, 9) + 0.0 AS indirect,
-           round(a_hat * b_hat / sqrt(a_hat * a_hat * se_b2
-             + b_hat * b_hat * se_a2), 9) + 0.0 AS sobel_z
-         FROM fit3""",
-
-    "q01_groupby_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-         COUNT(l_orderkey) AS n_rows,
-         COUNT(DISTINCT l_orderkey) AS n_orders,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(18,4))) AS DOUBLE) AS sum_revenue
-         FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q02_transform" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity,
-         COUNT(l_linenumber) OVER (PARTITION BY l_orderkey) AS n_lines,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) OVER (PARTITION BY l_orderkey) AS DOUBLE) AS order_qty,
-         l_quantity / CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) OVER (PARTITION BY l_orderkey) AS DOUBLE) AS qty_share
-         FROM lineitem""",
-
-    "q03_iterate_by" ->
-      """SELECT l_orderkey, COUNT(*) AS n_lines, MAX(l_quantity) AS max_qty
-         FROM lineitem GROUP BY 1""",
-
-    "q04_inner_join" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, c_name, c_mktsegment
-         FROM orders JOIN customer ON o_custkey = c_custkey""",
-
-    "q05_left_join" ->
-      """SELECT c_custkey, c_name, o_orderkey, o_totalprice
-         FROM customer LEFT JOIN orders ON c_custkey = o_custkey""",
-
-    "q06_theta_join" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_extendedprice, p_retailprice, p_brand
-         FROM lineitem JOIN part ON l_partkey = p_partkey AND l_extendedprice > p_retailprice""",
-
-    "q07_cross_join" ->
-      """SELECT r_name, n_nationkey, n_name FROM region CROSS JOIN nation""",
-
-    "q08_union" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice, 'closed' AS tag
-         FROM orders WHERE o_orderstatus = 'F'
-         UNION ALL
-         SELECT o_orderkey, o_orderstatus, o_totalprice, 'open' AS tag
-         FROM orders WHERE o_orderstatus = 'O'""",
-
-    "q09_select_rename" ->
-      """SELECT c_custkey AS cust_id, c_name AS name, c_acctbal FROM customer""",
-
-    "q10_filter_sort_head" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_discount
-         FROM lineitem WHERE l_quantity > 45 AND l_discount < 0.05
-         ORDER BY l_orderkey, l_linenumber LIMIT 100""",
-
-    "q11_coalesce" ->
-      """SELECT c_custkey,
-         COALESCE(CASE WHEN c_acctbal > 0 THEN c_acctbal END, CAST(0.0 AS DOUBLE)) AS bal_pos
-         FROM customer""",
-
-    "q12_update_cast" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         CAST(FLOOR(l_quantity) AS INT) AS qty_int,
-         CAST(year(l_shipdate) AS INT) AS ship_year
-         FROM lineitem""",
-
-    "q13_distinct" ->
-      """SELECT DISTINCT c_mktsegment, c_nationkey FROM customer""",
-
-    "q14_agg_breadth" ->
-      """SELECT l_returnflag, MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
-         COUNT(l_orderkey) AS n, COUNT(DISTINCT l_suppkey) AS n_supp,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_orderkey) AS mean_qty,
-         (CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4)) AS DECIMAL(18,4))) AS DOUBLE)
-          - CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) * CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_orderkey))
-          / (COUNT(l_orderkey) - 1) AS var_qty,
-         SQRT((CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4)) AS DECIMAL(18,4))) AS DOUBLE)
-          - CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) * CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_orderkey))
-          / (COUNT(l_orderkey) - 1)) AS std_qty
-         FROM lineitem GROUP BY 1""",
-
-    "q15_rank_window" ->
-      """SELECT * FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-             CAST(ROW_NUMBER() OVER w AS INT) AS rn,
-             CAST(RANK() OVER w AS INT) AS rk,
-             CAST(DENSE_RANK() OVER w AS INT) AS drk
-           FROM orders
-           WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
-         ) WHERE rn <= 3""",
-
-    "q16_typed_map" ->
-      """SELECT l_orderkey, l_extendedprice * (1 + l_tax) AS gross,
-         CASE WHEN l_tax > 0.05 THEN 'high' ELSE 'low' END AS tax_band
-         FROM lineitem""",
-
-    "q17_expressions" ->
-      """SELECT o_orderkey,
-         CASE WHEN o_orderstatus = 'F' THEN 'fulfilled'
-              WHEN o_orderstatus = 'O' THEN 'open'
-              ELSE 'pending' END AS status_desc,
-         upper(substring(o_orderpriority, 1, 1)) || '_' || CAST(o_custkey AS VARCHAR) AS cust_tag,
-         CAST(year(o_orderdate) AS INT) AS od_year,
-         CAST(month(o_orderdate) AS INT) AS od_month,
-         CAST(substring(o_orderpriority, 1, 1) AS INT) AS priority_num,
-         CAST(length(o_orderpriority) AS INT) AS prio_len
-         FROM orders""",
-
-    "q18_read_csv" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation""",
-
-    "q19_sql" -> q19Sql,
-
-    // Both engines truncate ns→µs identically (Spark: ts div 1000;
-    // DuckDB: epoch_ns//1000) before any time arithmetic.
-    "q20_stream_window" ->
-      """SELECT date_trunc('hour', make_timestamp(epoch_ns(ts)//1000)) AS hour_start,
-         event_type, COUNT(*) AS n_events,
-         CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2""",
-
-    "q21_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts)//1000 AS tus FROM events),
-         l AS (SELECT user_id, tus,
-                 CASE WHEN LAG(tus) OVER w IS NULL OR tus - LAG(tus) OVER w > 1800000000
-                      THEN 1 ELSE 0 END AS new_s
-               FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
-         s AS (SELECT user_id, tus,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus ROWS UNBOUNDED PRECEDING) AS sid
-               FROM l)
-         SELECT user_id, CAST(sid AS INT) AS session_id, COUNT(*) AS n_events,
-           make_timestamp(MIN(tus)) AS session_start,
-           make_timestamp(MAX(tus)) AS session_end
-         FROM s GROUP BY 1, 2""",
-
-    "q22_dedup_exact" ->
-      """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS norm_hash,
-         MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
-         FROM documents GROUP BY 1""",
-
-    // the doubled stream dedups back to exactly the distinct event set
-    "q38_stream_dedup" ->
-      """SELECT user_id, make_timestamp(epoch_ns(ts)//1000) AS ts, event_type, value
-         FROM events""",
-
-    "q25_dedup_ngram" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                            for i in generate_series(1, len(w)-2)]) AS grams
-           FROM toks WHERE len(w) >= 3),
-         post AS (SELECT doc_id, unnest(grams) AS g FROM sh),
-         rare AS (SELECT g FROM post GROUP BY g HAVING COUNT(*) <= 20),
-         rpost AS (SELECT doc_id, g FROM post WHERE g IN (SELECT g FROM rare)),
-         cnt AS (SELECT doc_id, COUNT(*) AS n FROM rpost GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-           FROM rpost a JOIN rpost b ON a.g = b.g AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT doc_a, doc_b, common, jaccard, rnk FROM (
-           SELECT doc_a, doc_b, common,
-             CAST(common AS DOUBLE) / (ca.n + cb.n - common) AS jaccard,
-             CAST(ROW_NUMBER() OVER (
-               ORDER BY CAST(common AS DOUBLE) / (ca.n + cb.n - common) DESC, doc_a, doc_b) AS INT) AS rnk
-           FROM pairs
-           JOIN cnt ca ON doc_a = ca.doc_id
-           JOIN cnt cb ON doc_b = cb.doc_id)
-         WHERE rnk <= 100""",
-
-    // Full-pipeline portable-hash oracles (OracleGen): signatures,
-    // banding, capping, scoring and float ranks all recomputed by
-    // DuckDB from md5 primitives + inlined plan-time constants.
-    "q23_dedup_minhash" -> OracleGen.minhashSql(),
-    "q24_dedup_simhash" -> OracleGen.simhashSql(),
-    "q26_dedup_embedding" -> OracleGen.embeddingSql(),
-    "q58_semantic_dedup" -> OracleGen.semanticDedupSql(),
-    "q28_ann_lsh" -> OracleGen.lshAnnSql(),
-    "q36_ann_ivf" -> OracleGen.ivfAnnSql(),
-    "q69_embed_pq" -> OracleGen.pqSql(),
-    "q70_pq_adc" -> OracleGen.pqAdcSql(),
-    "q32_text_fingerprint" -> OracleGen.fingerprintSql,
-    "q165_random_projection" -> OracleGen.randomProjectionSql(),
-    "q167_label_prop" -> OracleGen.labelPropSql(),
-    "q175_centroid_outliers" -> OracleGen.centroidOutliersSql(),
-    "q180_decontaminate_fuzzy" -> OracleGen.decontaminateFuzzySql(),
-    "q183_label_conformity" -> OracleGen.labelConformitySql(),
-    "q185_pca_project" -> OracleGen.principalComponentSql(),
-    "q186_hard_negatives" -> OracleGen.hardNegativesSql(),
-    "q190_kmeans_step" -> OracleGen.kmeansStepSql(),
-    "q223_kmeans_train" -> OracleGen.kmeansTrainSql(),
-    "q225_bpe_train" -> OracleGen.bpeTrainSql(),
-    "q226_dsir" -> OracleGen.dsirSql(),
-
-    "q228_stream_quantile" ->
-      """WITH e AS (
-           SELECT event_type, CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS q
-           FROM events),
-         bnn AS (
-           SELECT event_type,
-             (CASE WHEN q < 0 THEN -1 ELSE 1 END)
-               * ((abs(q) // CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT))
-                  * CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT)) AS bin
-           FROM e),
-         st AS (SELECT event_type, bin, COUNT(*) AS cnt FROM bnn GROUP BY 1, 2),
-         c AS (
-           SELECT event_type, bin, cnt,
-             SUM(cnt) OVER (PARTITION BY event_type ORDER BY bin
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             SUM(cnt) OVER (PARTITION BY event_type) AS n
-           FROM st)
-         SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
-           CAST(MIN(bin) AS DOUBLE) / 1000000 AS p99
-         FROM c WHERE cum * 100 >= n * 99 GROUP BY 1""",
-
-    // dyadic quantile bins: value truncated to its top 6 significant
-    // bits via the HLL oracle's length(bin(abs(q))) trick + one exact
-    // power-of-two division; type-1 rank by integer cross-multiply
-    "q227_quantile_state" ->
-      """WITH e AS (
-           SELECT event_type, CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS q
-           FROM events),
-         bnn AS (
-           SELECT event_type,
-             (CASE WHEN q < 0 THEN -1 ELSE 1 END)
-               * ((abs(q) // CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT))
-                  * CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT)) AS bin
-           FROM e),
-         st AS (SELECT event_type, bin, COUNT(*) AS cnt FROM bnn GROUP BY 1, 2),
-         c AS (
-           SELECT event_type, bin, cnt,
-             SUM(cnt) OVER (PARTITION BY event_type ORDER BY bin
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             SUM(cnt) OVER (PARTITION BY event_type) AS n
-           FROM st),
-         p50 AS (SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
-                   CAST(MIN(bin) AS DOUBLE) / 1000000 AS p50
-                 FROM c WHERE cum * 2 >= n * 1 GROUP BY 1),
-         p90 AS (SELECT event_type, CAST(MIN(bin) AS DOUBLE) / 1000000 AS p90
-                 FROM c WHERE cum * 10 >= n * 9 GROUP BY 1)
-         SELECT p50.event_type, n, p50.p50, p90.p90
-         FROM p50 JOIN p90 ON p50.event_type = p90.event_type""",
-
-    "q224_tx_snapshot" ->
-      """SELECT CAST(1 AS INT) AS version, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM read_parquet('/tmp/graft_tx___SFTAG__/data/v1_*.parquet')
-         UNION ALL
-         SELECT CAST(2 AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet(['/tmp/graft_tx___SFTAG__/data/v1_*.parquet',
-                            '/tmp/graft_tx___SFTAG__/data/v2_*.parquet'])
-         UNION ALL
-         SELECT CAST(3 AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_tx___SFTAG__/data/v3_*.parquet')""",
-
-    "q229_tx_changes" ->
-      """SELECT CAST(2 AS INT) AS version, 'insert' AS change, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM read_parquet('/tmp/graft_txc___SFTAG__/data/v2_*.parquet')
-         UNION ALL
-         SELECT CAST(4 AS INT), 'delete', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txc___SFTAG__/data/v3_*.parquet')
-         UNION ALL
-         SELECT CAST(4 AS INT), 'insert', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txc___SFTAG__/data/v4_*.parquet')""",
-
-    "q230_tx_compact" ->
-      """SELECT CAST(1 AS INT) AS version, 'append' AS op,
-           CAST(COUNT(DISTINCT filename) AS INT) AS n_files, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM read_parquet('/tmp/graft_txo___SFTAG__/data/v1_*.parquet', filename=true)
-         UNION ALL
-         SELECT CAST(2 AS INT), 'compact',
-           CAST(COUNT(DISTINCT filename) AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txo___SFTAG__/data/v2_*.parquet', filename=true)""",
-
-    "q231_agg_delta" ->
-      """WITH ev AS (
-           SELECT o_orderpriority AS k, o_totalprice AS v, 1 AS s
-           FROM orders WHERE o_orderkey % 10 <> 0
-           UNION ALL
-           SELECT o_orderpriority, o_totalprice, 1 FROM orders WHERE o_orderkey % 10 = 0
-           UNION ALL
-           SELECT o_orderpriority, o_totalprice, -1 FROM orders WHERE o_orderkey % 10 = 3),
-         b AS (SELECT o_orderpriority AS k, MIN(o_totalprice) AS min_v,
-                      MAX(o_totalprice) AS max_v
-               FROM orders GROUP BY 1)
-         SELECT ev.k AS o_orderpriority, CAST(SUM(s) AS BIGINT) AS n,
-           CAST(SUM(CAST(s AS DECIMAL(20,0)) * CAST(FLOOR(v * 1000000 + 0.5) AS DECIMAL(20,0))) AS BIGINT) AS sum_q,
-           MIN(b.min_v) AS min_v, MAX(b.max_v) AS max_v
-         FROM ev JOIN b ON ev.k = b.k
-         GROUP BY 1""",
-    "q234_removal_effect" ->
-      OracleGen.removalEffectSql(Seq("click", "error", "signup", "view")),
-
-    "q235_grouped_auc" ->
-      """WITH e AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 100 + 0.5) AS BIGINT) AS v,
-             (user_id % 2 = 1) AS p
-           FROM events),
-         h AS (
-           SELECT g, v, COUNT(*) FILTER (WHERE p) AS cp,
-                        COUNT(*) FILTER (WHERE NOT p) AS cn
-           FROM e GROUP BY 1, 2),
-         c AS (
-           SELECT *, COALESCE(SUM(cp + cn) OVER (PARTITION BY g ORDER BY v
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-           FROM h),
-         s AS (
-           SELECT g, SUM(cp) AS n_pos, SUM(cn) AS n_neg,
-             SUM(CAST(cp AS HUGEINT) * (2*cum + (cp + cn) + 1)) AS r2
-           FROM c GROUP BY 1)
-         SELECT g AS event_type, CAST(n_pos AS BIGINT) AS n_pos,
-           CAST(n_neg AS BIGINT) AS n_neg,
-           CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-             round(CAST(r2 - n_pos*(n_pos+1) AS DOUBLE)
-               / (2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)), 9)
-           END AS auc
-         FROM s""",
-
-    "q236_js_divergence" ->
-      """WITH t AS (
-           SELECT event_type, value FROM events
-           WHERE event_type IN ('click', 'purchase')),
-         cells AS (
-           SELECT CAST(floor(value / 10.0) AS BIGINT) AS bin,
-             COUNT(*) FILTER (WHERE event_type = 'click') AS ca,
-             COUNT(*) FILTER (WHERE event_type = 'purchase') AS cb
-           FROM t GROUP BY 1),
-         tot AS (
-           SELECT COUNT(*) FILTER (WHERE event_type = 'click') AS na,
-                  COUNT(*) FILTER (WHERE event_type = 'purchase') AS nb
-           FROM t),
-         terms AS (
-           SELECT
-             CASE WHEN ca > 0 THEN CAST(0.5 * (CAST(ca AS DOUBLE)/CAST(na AS DOUBLE))
-               * ln((CAST(ca AS DOUBLE)/CAST(na AS DOUBLE))
-                 / ((CAST(ca AS DOUBLE)/CAST(na AS DOUBLE)
-                   + CAST(cb AS DOUBLE)/CAST(nb AS DOUBLE)) / 2.0)) AS DECIMAL(20,9)) END AS ta,
-             CASE WHEN cb > 0 THEN CAST(0.5 * (CAST(cb AS DOUBLE)/CAST(nb AS DOUBLE))
-               * ln((CAST(cb AS DOUBLE)/CAST(nb AS DOUBLE))
-                 / ((CAST(ca AS DOUBLE)/CAST(na AS DOUBLE)
-                   + CAST(cb AS DOUBLE)/CAST(nb AS DOUBLE)) / 2.0)) AS DECIMAL(20,9)) END AS tb,
-             na, nb
-           FROM cells, tot)
-         SELECT round(CAST(COALESCE(SUM(ta), 0) + COALESCE(SUM(tb), 0) AS DOUBLE), 6) AS jsd_nats,
-           COUNT(*) AS n_bins, MAX(na) AS n_a, MAX(nb) AS n_b
-         FROM terms""",
-
-    "q237_mi_matrix" ->
-      """WITH o AS (
-           SELECT COALESCE(CAST(o_orderstatus AS VARCHAR), ' null') AS s,
-                  COALESCE(CAST(o_orderpriority AS VARCHAR), ' null') AS p,
-                  COALESCE(CAST(year(o_orderdate) AS VARCHAR), ' null') AS y
-           FROM orders),
-         pr AS (
-           SELECT 'o_orderstatus' AS cx, 'o_orderpriority' AS cy, s AS x, p AS y FROM o
-           UNION ALL
-           SELECT 'o_orderstatus', 'o_year', s, y FROM o
-           UNION ALL
-           SELECT 'o_orderpriority', 'o_year', p, y FROM o),
-         cells AS (SELECT cx, cy, x, y, COUNT(*) AS c FROM pr GROUP BY 1,2,3,4),
-         m AS (
-           SELECT *, SUM(c) OVER (PARTITION BY cx, cy, x) AS cxn,
-                     SUM(c) OVER (PARTITION BY cx, cy, y) AS cyn,
-                     SUM(c) OVER (PARTITION BY cx, cy) AS n
-           FROM cells),
-         terms AS (
-           SELECT cx, cy, n,
-             CAST((CAST(c AS DOUBLE)/CAST(n AS DOUBLE))
-               * ln(CAST(n AS DOUBLE)*CAST(c AS DOUBLE)
-                 / (CAST(cxn AS DOUBLE)*CAST(cyn AS DOUBLE))) AS DECIMAL(20,9)) AS term
-           FROM m)
-         SELECT cx AS col_x, cy AS col_y, CAST(MAX(n) AS BIGINT) AS n,
-           round(CAST(SUM(term) AS DOUBLE), 6) AS mi_nats
-         FROM terms GROUP BY 1, 2""",
-
-    "q238_kmv_distinct" ->
-      """WITH h AS (
-           SELECT DISTINCT event_type,
-             ('0x' || substr(md5('kmv|' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-           FROM events),
-         r AS (
-           SELECT event_type, h,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
-           FROM h),
-         k AS (
-           SELECT event_type, CAST(COUNT(*) AS INT) AS n_state,
-             MAX(CASE WHEN rn = 64 THEN h END) AS hk
-           FROM r WHERE rn <= 64 GROUP BY 1)
-         SELECT event_type, n_state,
-           CASE WHEN n_state < 64 THEN CAST(n_state AS DOUBLE)
-                ELSE round(63.0 * pow(2.0, 60) / CAST(hk AS DOUBLE), 6) END AS est_distinct
-         FROM k""",
-
-    "q239_lift_table" ->
-      """WITH e AS (
-           SELECT event_id, (user_id % 2 = 1) AS p,
-             -CAST(floor(CAST(value AS DOUBLE) * 100 + 0.5) AS BIGINT) AS sq
-           FROM events),
-         r AS (
-           SELECT *, ROW_NUMBER() OVER (ORDER BY sq, event_id) AS idx,
-             COUNT(*) OVER () AS nt,
-             SUM(CASE WHEN p THEN 1 ELSE 0 END) OVER () AS npt
-           FROM e),
-         b AS (
-           SELECT ((idx - 1) * 10) // nt AS bucket, COUNT(*) AS n,
-             COUNT(*) FILTER (WHERE p) AS n_pos, MAX(nt) AS nt, MAX(npt) AS npt
-           FROM r GROUP BY 1),
-         c AS (
-           SELECT *, SUM(n) OVER (ORDER BY bucket
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cn,
-             SUM(n_pos) OVER (ORDER BY bucket
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cp
-           FROM b)
-         SELECT CAST(bucket AS BIGINT) AS bucket, n, n_pos,
-           round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 9) AS rate,
-           CASE WHEN npt > 0 THEN
-             round((CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE))
-               / (CAST(npt AS DOUBLE) / CAST(nt AS DOUBLE)), 9) END AS cum_lift
-         FROM c""",
-
-    "q240_modularity" ->
-      """WITH e AS (
-           SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-           FROM lineitem l1 JOIN lineitem l2
-             ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey),
-         deg AS (
-           SELECT nd, COUNT(*) AS d FROM (
-             SELECT a AS nd FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
-         dc AS (SELECT nd % 8 AS c, SUM(d) AS d_tot FROM deg GROUP BY 1),
-         ec AS (SELECT a % 8 AS c, COUNT(*) AS e_in FROM e
-                WHERE a % 8 = b % 8 GROUP BY 1),
-         mm AS (SELECT COUNT(*) AS m FROM e),
-         terms AS (
-           SELECT CAST(CAST(COALESCE(ec.e_in, 0) AS DOUBLE) / CAST(mm.m AS DOUBLE)
-             - (CAST(dc.d_tot AS DOUBLE) / (2.0 * CAST(mm.m AS DOUBLE)))
-               * (CAST(dc.d_tot AS DOUBLE) / (2.0 * CAST(mm.m AS DOUBLE)))
-             AS DECIMAL(20,9)) AS term
-           FROM dc LEFT JOIN ec ON dc.c = ec.c, mm)
-         SELECT (SELECT m FROM mm) AS m, COUNT(*) AS n_communities,
-           round(CAST(SUM(term) AS DOUBLE), 6) AS modularity
-         FROM terms""",
-
-    "q241_cdc_chunks" ->
-      """WITH d AS (
-           SELECT doc_id, COALESCE(text, '') AS t,
-             length(COALESCE(text, '')) AS n
-           FROM documents),
-         pos AS (
-           SELECT doc_id, t, n, unnest(range(1, n + 1)) AS i FROM d WHERE n > 0),
-         bf AS (
-           SELECT doc_id, t, i,
-             CASE WHEN i = n THEN 1
-                  WHEN i >= 16 AND i < n
-                   AND substr(md5(substr(t, CAST(i - 15 AS INT), 16)), 32, 1) = '0' THEN 1
-                  ELSE 0 END AS isb
-           FROM pos),
-         cid AS (
-           SELECT doc_id, t, i,
-             COALESCE(SUM(isb) OVER (PARTITION BY doc_id ORDER BY i
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pos
-           FROM bf),
-         chunks AS (
-           SELECT doc_id, pos, substr(t, CAST(MIN(i) AS INT),
-             CAST(MAX(i) - MIN(i) + 1 AS INT)) AS chunk
-           FROM cid GROUP BY doc_id, pos, t),
-         firsts AS (
-           SELECT chunk, MIN([doc_id, pos]) AS first FROM chunks GROUP BY 1),
-         flagged AS (
-           SELECT c.doc_id, c.chunk,
-             (f.first = [c.doc_id, c.pos]) AS kept
-           FROM chunks c JOIN firsts f USING (chunk)),
-         agg AS (
-           SELECT doc_id, CAST(COUNT(*) AS INT) AS n_chunks,
-             SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS n_kept,
-             SUM(CASE WHEN kept THEN length(chunk) ELSE 0 END) AS kept_chars
-           FROM flagged GROUP BY 1)
-         SELECT d.doc_id, COALESCE(a.n_chunks, 0) AS n_chunks,
-           CAST(COALESCE(a.n_kept, 0) AS BIGINT) AS n_kept,
-           CAST(COALESCE(a.kept_chars, 0) AS BIGINT) AS kept_chars
-         FROM d LEFT JOIN agg a USING (doc_id)""",
-
-    "q243_frequent_triples" ->
-      """WITH b AS (
-           SELECT DISTINCT CAST(user_id AS VARCHAR) || '|' ||
-             CAST(CAST(ts AS DATE) AS VARCHAR) AS k, event_type AS i
-           FROM events),
-         t AS (
-           SELECT b1.k, b1.i AS a, b2.i AS bb, b3.i AS c
-           FROM b b1
-           JOIN b b2 ON b1.k = b2.k AND b1.i < b2.i
-           JOIN b b3 ON b2.k = b3.k AND b2.i < b3.i),
-         nb AS (SELECT COUNT(DISTINCT k) AS n FROM b)
-         SELECT a AS item_a, bb AS item_b, c AS item_c,
-           COUNT(*) AS n_baskets,
-           round(CAST(COUNT(*) AS DOUBLE) / CAST((SELECT n FROM nb) AS DOUBLE), 9) AS support
-         FROM t GROUP BY 1, 2, 3 HAVING COUNT(*) >= 2""",
-
-    "q244_kmv_setops" ->
-      """WITH e AS (
-           SELECT CAST(ts AS DATE) AS day, event_type,
-             ('0x' || substr(md5('kmv|' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-           FROM events WHERE event_type IN ('click', 'purchase')),
-         hd AS (SELECT DISTINCT day, event_type, h FROM e),
-         r AS (
-           SELECT day, event_type, h,
-             ROW_NUMBER() OVER (PARTITION BY day, event_type ORDER BY h) AS rn
-           FROM hd),
-         ka AS (SELECT day, h FROM r WHERE event_type = 'click' AND rn <= 64),
-         kb AS (SELECT day, h FROM r WHERE event_type = 'purchase' AND rn <= 64),
-         u0 AS (SELECT day, h FROM ka UNION SELECT day, h FROM kb),
-         ur AS (SELECT day, h, ROW_NUMBER() OVER (PARTITION BY day ORDER BY h) AS rn FROM u0),
-         uk AS (SELECT day, h FROM ur WHERE rn <= 64),
-         asq AS (SELECT day, CAST(COUNT(*) AS INT) AS n_a,
-                   MAX(CASE WHEN rn = 64 THEN h END) AS hk FROM r
-                 WHERE event_type = 'click' AND rn <= 64 GROUP BY 1),
-         bsq AS (SELECT day, CAST(COUNT(*) AS INT) AS n_b,
-                   MAX(CASE WHEN rn = 64 THEN h END) AS hk FROM r
-                 WHERE event_type = 'purchase' AND rn <= 64 GROUP BY 1),
-         usq AS (SELECT day, CAST(COUNT(*) AS INT) AS n_u,
-                   MAX(CASE WHEN rn = 64 THEN h END) AS hk FROM ur
-                 WHERE rn <= 64 GROUP BY 1),
-         kap AS (
-           SELECT uk.day, COUNT(*) AS kappa
-           FROM uk
-           JOIN ka ON uk.day = ka.day AND uk.h = ka.h
-           JOIN kb ON uk.day = kb.day AND uk.h = kb.h
-           GROUP BY 1),
-         days AS (SELECT DISTINCT day FROM hd)
-         SELECT d.day,
-           COALESCE(asq.n_a, 0) AS n_a, COALESCE(bsq.n_b, 0) AS n_b,
-           CASE WHEN COALESCE(asq.n_a, 0) < 64 THEN CAST(COALESCE(asq.n_a, 0) AS DOUBLE)
-                ELSE round(63.0 * pow(2.0, 60) / CAST(asq.hk AS DOUBLE), 6) END AS est_a,
-           CASE WHEN COALESCE(bsq.n_b, 0) < 64 THEN CAST(COALESCE(bsq.n_b, 0) AS DOUBLE)
-                ELSE round(63.0 * pow(2.0, 60) / CAST(bsq.hk AS DOUBLE), 6) END AS est_b,
-           CASE WHEN COALESCE(usq.n_u, 0) < 64 THEN CAST(COALESCE(usq.n_u, 0) AS DOUBLE)
-                ELSE round(63.0 * pow(2.0, 60) / CAST(usq.hk AS DOUBLE), 6) END AS est_union,
-           round(CASE WHEN COALESCE(usq.n_u, 0) > 0
-             THEN CAST(COALESCE(kap.kappa, 0) AS DOUBLE) / CAST(usq.n_u AS DOUBLE)
-             ELSE 0.0 END, 9) AS jaccard,
-           round((CASE WHEN COALESCE(usq.n_u, 0) > 0
-             THEN CAST(COALESCE(kap.kappa, 0) AS DOUBLE) / CAST(usq.n_u AS DOUBLE)
-             ELSE 0.0 END)
-             * (CASE WHEN COALESCE(usq.n_u, 0) < 64 THEN CAST(COALESCE(usq.n_u, 0) AS DOUBLE)
-                ELSE 63.0 * pow(2.0, 60) / CAST(usq.hk AS DOUBLE) END), 6) AS est_intersection
-         FROM days d
-         LEFT JOIN asq ON d.day = asq.day
-         LEFT JOIN bsq ON d.day = bsq.day
-         LEFT JOIN usq ON d.day = usq.day
-         LEFT JOIN kap ON d.day = kap.day""",
-
-    "q245_stream_kmv" ->
-      """WITH h AS (
-           SELECT DISTINCT event_type,
-             ('0x' || substr(md5('kmv|' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-           FROM events),
-         r AS (
-           SELECT event_type, h,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rn
-           FROM h),
-         k AS (
-           SELECT event_type, CAST(COUNT(*) AS INT) AS n_state,
-             MAX(CASE WHEN rn = 64 THEN h END) AS hk
-           FROM r WHERE rn <= 64 GROUP BY 1)
-         SELECT event_type, n_state,
-           CASE WHEN n_state < 64 THEN CAST(n_state AS DOUBLE)
-                ELSE round(63.0 * pow(2.0, 60) / CAST(hk AS DOUBLE), 6) END AS est_distinct
-         FROM k""",
-
-    "q257_stream_quantile_hourly" ->
-      """WITH e AS (
-           SELECT date_trunc('hour', make_timestamp(epoch_ns(ts)//1000)) AS hour_start,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS q
-           FROM events),
-         bnn AS (
-           SELECT hour_start,
-             (CASE WHEN q < 0 THEN -1 ELSE 1 END)
-               * ((abs(q) // CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT))
-                  * CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT)) AS bin
-           FROM e),
-         st AS (SELECT hour_start, bin, COUNT(*) AS cnt FROM bnn GROUP BY 1, 2),
-         c AS (
-           SELECT hour_start, bin, cnt,
-             SUM(cnt) OVER (PARTITION BY hour_start ORDER BY bin
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             SUM(cnt) OVER (PARTITION BY hour_start) AS n
-           FROM st),
-         p50 AS (
-           SELECT hour_start, CAST(MAX(n) AS BIGINT) AS n,
-             CAST(MIN(bin) AS DOUBLE) / 1000000 AS p50
-           FROM c WHERE cum * 2 >= n * 1 GROUP BY 1),
-         p99 AS (
-           SELECT hour_start, CAST(MIN(bin) AS DOUBLE) / 1000000 AS p99
-           FROM c WHERE cum * 100 >= n * 99 GROUP BY 1)
-         SELECT p50.hour_start, n, p50, p99
-         FROM p50 JOIN p99 USING (hour_start)""",
-
-    "q258_stream_kmv_hourly" ->
-      """WITH h AS (
-           SELECT DISTINCT
-             date_trunc('hour', make_timestamp(epoch_ns(ts)//1000)) AS hour_start,
-             ('0x' || substr(md5('kmv|' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
-           FROM events),
-         r AS (
-           SELECT hour_start, h,
-             ROW_NUMBER() OVER (PARTITION BY hour_start ORDER BY h) AS rn
-           FROM h),
-         k AS (
-           SELECT hour_start, CAST(COUNT(*) AS INT) AS n_state,
-             MAX(CASE WHEN rn = 64 THEN h END) AS hk
-           FROM r WHERE rn <= 64 GROUP BY 1)
-         SELECT hour_start, n_state,
-           CASE WHEN n_state < 64 THEN CAST(n_state AS DOUBLE)
-                ELSE round(63.0 * pow(2.0, 60) / CAST(hk AS DOUBLE), 6) END AS est_distinct
-         FROM k""",
-
-    "q255_quantile_cdf" ->
-      """WITH e AS (
-           SELECT event_type, CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS q
-           FROM events),
-         bnn AS (
-           SELECT event_type,
-             (CASE WHEN q < 0 THEN -1 ELSE 1 END)
-               * ((abs(q) // CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT))
-                  * CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT)) AS bin
-           FROM e),
-         st AS (SELECT event_type, bin, COUNT(*) AS cnt FROM bnn GROUP BY 1, 2),
-         pb AS (
-           SELECT CAST(probe AS DOUBLE) AS probe,
-             (CASE WHEN q < 0 THEN -1 ELSE 1 END)
-               * ((abs(q) // CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT))
-                  * CAST(pow(2, GREATEST(0, length(bin(abs(q))) - 6)) AS BIGINT)) AS pbin
-           FROM (SELECT probe, CAST(floor(CAST(probe AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q
-                 FROM (SELECT unnest([25.0, 50.0, 100.0]) AS probe)))
-         SELECT s.event_type, pb.probe,
-           CAST(SUM(CASE WHEN s.bin <= pb.pbin THEN s.cnt ELSE 0 END) AS BIGINT) AS n_le,
-           CAST(SUM(s.cnt) AS BIGINT) AS n,
-           round(CAST(SUM(CASE WHEN s.bin <= pb.pbin THEN s.cnt ELSE 0 END) AS DOUBLE)
-             / CAST(SUM(s.cnt) AS DOUBLE), 9) AS cdf
-         FROM st s CROSS JOIN pb
-         GROUP BY 1, 2""",
-
-    "q254_tx_timetravel" ->
-      """SELECT 'at_v2' AS probe, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM read_parquet(['/tmp/graft_txt___SFTAG__/data/v1_*.parquet',
-                            '/tmp/graft_txt___SFTAG__/data/v2_*.parquet'])
-         UNION ALL
-         SELECT 'before_v3', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet(['/tmp/graft_txt___SFTAG__/data/v1_*.parquet',
-                            '/tmp/graft_txt___SFTAG__/data/v2_*.parquet'])
-         UNION ALL
-         SELECT 'at_v3', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txt___SFTAG__/data/v3_*.parquet')""",
-
-    "q261_seasonal_decompose" ->
-      """WITH hourly AS (
-           SELECT date_trunc('hour', make_timestamp(epoch_ns(ts)//1000)) AS hour_start,
-             SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS yq
-           FROM events GROUP BY 1),
-         w AS (
-           SELECT hour_start, yq,
-             SUM(yq) OVER (ORDER BY hour_start
-               ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING) AS s24,
-             COUNT(*) OVER (ORDER BY hour_start
-               ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING) AS c24,
-             EXTRACT(hour FROM hour_start) AS k
-           FROM hourly),
-         wd AS (
-           SELECT *, CASE WHEN c24 = 24 THEN 24 * yq - s24 END AS det FROM w),
-         slots AS (
-           SELECT k, SUM(CAST(det AS DECIMAL(38,0))) AS sd, COUNT(*) AS nk
-           FROM wd WHERE det IS NOT NULL GROUP BY 1)
-         SELECT hour_start,
-           round(CAST(yq AS DOUBLE) / 1000000.0, 6) AS y,
-           round(CASE WHEN c24 = 24 THEN CAST(s24 AS DOUBLE) / 24.0 / 1000000.0 END, 6) AS trend,
-           round(CAST(sd AS DOUBLE) / (24.0 * CAST(nk AS DOUBLE)) / 1000000.0, 6) AS seasonal,
-           round(CAST(yq AS DOUBLE) / 1000000.0
-               - CASE WHEN c24 = 24 THEN CAST(s24 AS DOUBLE) / 24.0 / 1000000.0 END
-               - CAST(sd AS DOUBLE) / (24.0 * CAST(nk AS DOUBLE)) / 1000000.0, 6) AS residual
-         FROM wd LEFT JOIN slots USING (k)""",
-
-    // discount weights are the SAME nano-unit long literals Spark uses
-    // (ndcgWeightsNano), so DCG/IDCG are exact integer sums on both
-    // engines — no logarithm is ever evaluated
-    "q262_ndcg" -> {
-      val w = operators.Similarity.ndcgWeightsNano(10)
-      val cums = w.scanLeft(0L)(_ + _).tail
-      s"""WITH tk AS (
-           SELECT query_id, neighbor_id, rank FROM (
-             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                          c.vec_id) AS INT) AS rank
-             FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-             WHERE q.vec_id % 50 = 0)
-           WHERE rank <= 10),
-         lab AS (SELECT vec_id, label FROM embeddings),
-         j AS (
-           SELECT t.query_id, t.rank,
-             CASE WHEN ql.label = cl.label THEN 1 ELSE 0 END AS rel
-           FROM tk t
-           JOIN lab ql ON ql.vec_id = t.query_id
-           JOIN lab cl ON cl.vec_id = t.neighbor_id),
-         a AS (
-           SELECT query_id, SUM(rel) AS n_rel,
-             SUM(CASE WHEN rel = 1 THEN ([${w.mkString(", ")}])[rank] ELSE 0 END) AS dcg
-           FROM j GROUP BY 1)
-         SELECT query_id, CAST(n_rel AS BIGINT) AS n_rel,
-           CASE WHEN n_rel > 0 THEN
-             round(CAST(dcg AS DOUBLE)
-               / CAST(([${cums.mkString(", ")}])[CAST(LEAST(n_rel, 10) AS INT)] AS DOUBLE), 9)
-           ELSE 0.0 END AS ndcg
-         FROM a"""
-    },
-
-    // confusion cells -> marginals -> per-class PRF (rounded BEFORE the
-    // macro DECIMAL(20,9) sums, mirroring Spark); kappa's expected
-    // agreement from the exact HUGEINT marginal-product sum
-    "q263_classification_report" ->
-      """WITH e AS (
-           SELECT event_type AS a,
-             CASE WHEN event_id % 7 = 0 THEN 'click' ELSE event_type END AS p
-           FROM events),
-         cells AS (SELECT a, p, COUNT(*) AS c FROM e GROUP BY 1, 2),
-         cls AS (SELECT a AS label FROM cells UNION SELECT p FROM cells),
-         rm AS (SELECT a AS label, SUM(c) AS n_actual FROM cells GROUP BY 1),
-         cm AS (SELECT p AS label, SUM(c) AS n_pred FROM cells GROUP BY 1),
-         dg AS (SELECT a AS label, c AS tp FROM cells WHERE a = p),
-         pc AS (
-           SELECT cls.label,
-             COALESCE(n_actual, 0) AS n_actual, COALESCE(n_pred, 0) AS n_pred,
-             COALESCE(tp, 0) AS tp
-           FROM cls LEFT JOIN rm USING (label) LEFT JOIN cm USING (label)
-             LEFT JOIN dg USING (label)),
-         sc AS (
-           SELECT label, n_actual, n_pred, tp,
-             CASE WHEN n_pred > 0 THEN
-               round(CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE), 9) END AS prec,
-             CASE WHEN n_actual > 0 THEN
-               round(CAST(tp AS DOUBLE) / CAST(n_actual AS DOUBLE), 9) END AS rec,
-             CASE WHEN n_pred > 0 AND n_actual > 0 THEN
-               CASE WHEN tp > 0 THEN
-                 round(2.0 * (CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE))
-                   * (CAST(tp AS DOUBLE) / CAST(n_actual AS DOUBLE))
-                   / ((CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE))
-                     + (CAST(tp AS DOUBLE) / CAST(n_actual AS DOUBLE))), 9)
-               ELSE 0.0 END END AS f1
-           FROM pc),
-         ov AS (
-           SELECT COUNT(*) AS k, SUM(n_actual) AS n, SUM(tp) AS tpt,
-             SUM(CAST(COALESCE(prec, 0) AS DECIMAL(20,9))) AS sp,
-             SUM(CAST(COALESCE(rec, 0) AS DECIMAL(20,9))) AS sr,
-             SUM(CAST(COALESCE(f1, 0) AS DECIMAL(20,9))) AS sf,
-             SUM(CAST(n_actual AS HUGEINT) * n_pred) AS pe
-           FROM sc)
-         SELECT 'overall' AS section, 'all' AS label,
-           CAST(n AS BIGINT) AS n_actual, CAST(n AS BIGINT) AS n_pred,
-           CAST(tpt AS BIGINT) AS tp,
-           round(CAST(sp AS DOUBLE) / CAST(k AS DOUBLE), 9) AS "precision",
-           round(CAST(sr AS DOUBLE) / CAST(k AS DOUBLE), 9) AS recall,
-           round(CAST(sf AS DOUBLE) / CAST(k AS DOUBLE), 9) AS f1,
-           round(CAST(tpt AS DOUBLE) / CAST(n AS DOUBLE), 9) AS accuracy,
-           CASE WHEN CAST(pe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) < 1.0 THEN
-             round((CAST(tpt AS DOUBLE) / CAST(n AS DOUBLE)
-                 - CAST(pe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
-               / (1.0 - CAST(pe AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 9)
-           END AS kappa
-         FROM ov
-         UNION ALL
-         SELECT 'class', label, CAST(n_actual AS BIGINT), CAST(n_pred AS BIGINT),
-           CAST(tp AS BIGINT), prec, rec, f1,
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-         FROM sc""",
-
-    // decimal moment sums per group; each S_g^2/n_g quantized
-    // DECIMAL(38,6) pre-sum; F in one mirrored double op order
-    "q264_anova" ->
-      """WITH q AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v
-           FROM events),
-         cells AS (
-           SELECT g, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS s,
-             SUM(CAST(v AS HUGEINT) * v) AS ss
-           FROM q GROUP BY 1),
-         agg AS (
-           SELECT COUNT(*) AS k, SUM(n) AS n, SUM(s) AS st, SUM(ss) AS sst,
-             SUM(CAST(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)
-               AS DECIMAL(38,6))) AS sbt
-           FROM cells)
-         SELECT CAST(k AS BIGINT) AS k_groups, CAST(n AS BIGINT) AS n,
-           round((CAST(sbt AS DOUBLE)
-             - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / CAST(n AS DOUBLE))
-             / (1000000.0 * 1000000.0), 6) AS ss_between,
-           round((CAST(sst AS DOUBLE) - CAST(sbt AS DOUBLE))
-             / (1000000.0 * 1000000.0), 6) AS ss_within,
-           CASE WHEN k >= 2 AND n > k
-                 AND CAST(sst AS DOUBLE) - CAST(sbt AS DOUBLE) > 0 THEN
-             round(((CAST(sbt AS DOUBLE)
-                 - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / CAST(n AS DOUBLE))
-                 / (CAST(k AS DOUBLE) - 1.0))
-               / ((CAST(sst AS DOUBLE) - CAST(sbt AS DOUBLE))
-                 / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE))), 6)
-           END AS f_stat
-         FROM agg""",
-
-    // half-unit integer ranks over the joint value histogram (the
-    // mannWhitneyU rule); (2R_g)^2/(4n_g) quantized DECIMAL(38,6)
-    // pre-sum; H and the tie correction in mirrored double order
-    "q265_kruskal" ->
-      """WITH q AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v
-           FROM events),
-         cells AS (SELECT g, v, COUNT(*) AS c FROM q GROUP BY 1, 2),
-         vh AS (SELECT v, SUM(c) AS t FROM cells GROUP BY 1),
-         rk AS (
-           SELECT v, t,
-             2 * COALESCE(SUM(t) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS r2,
-             CAST(t AS HUGEINT) * t * t - t AS tie
-           FROM vh),
-         bg AS (
-           SELECT g, SUM(c) AS n, SUM(CAST(c AS HUGEINT) * r2) AS r2g
-           FROM cells JOIN rk USING (v) GROUP BY 1),
-         gs AS (
-           SELECT COUNT(*) AS k, SUM(n) AS n,
-             SUM(CAST(CAST(r2g AS DOUBLE) * CAST(r2g AS DOUBLE)
-               / (4.0 * CAST(n AS DOUBLE)) AS DECIMAL(38,6))) AS rrt
-           FROM bg),
-         tt AS (SELECT SUM(tie) AS ties FROM rk)
-         SELECT CAST(k AS BIGINT) AS k_groups, CAST(n AS BIGINT) AS n,
-           round(12.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
-             * CAST(rrt AS DOUBLE) - 3.0 * (CAST(n AS DOUBLE) + 1.0), 6) AS h_stat,
-           CASE WHEN k >= 2 AND n >= 2
-                 AND 1.0 - CAST(ties AS DOUBLE)
-                   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                     - CAST(n AS DOUBLE)) > 0 THEN
-             round((12.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
-                 * CAST(rrt AS DOUBLE) - 3.0 * (CAST(n AS DOUBLE) + 1.0))
-               / (1.0 - CAST(ties AS DOUBLE)
-                 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                   - CAST(n AS DOUBLE))), 6)
-           END AS h_corrected
-         FROM gs, tt""",
-
-    // group medians by exact inverse-ECDF rank selection, then the
-    // q264 ANOVA arithmetic over |v - med|
-    "q266_levene" ->
-      """WITH q AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v0
-           FROM events),
-         h AS (SELECT g, v0, COUNT(*) AS c FROM q GROUP BY 1, 2),
-         cum AS (
-           SELECT g, v0,
-             SUM(c) OVER (PARTITION BY g ORDER BY v0
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumc,
-             SUM(c) OVER (PARTITION BY g) AS n
-           FROM h),
-         med AS (SELECT g, MIN(CASE WHEN cumc * 2 >= n THEN v0 END) AS med
-                 FROM cum GROUP BY 1),
-         dv AS (SELECT q.g, ABS(v0 - med) AS v FROM q JOIN med ON q.g = med.g),
-         cells AS (
-           SELECT g, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS s,
-             SUM(CAST(v AS HUGEINT) * v) AS ss
-           FROM dv GROUP BY 1),
-         agg AS (
-           SELECT COUNT(*) AS k, SUM(n) AS n, SUM(st2) AS st, SUM(ss) AS sst,
-             SUM(CAST(CAST(st2 AS DOUBLE) * CAST(st2 AS DOUBLE) / CAST(n AS DOUBLE)
-               AS DECIMAL(38,6))) AS sbt
-           FROM (SELECT g, n, s AS st2, ss FROM cells))
-         SELECT CAST(k AS BIGINT) AS k_groups, CAST(n AS BIGINT) AS n,
-           CASE WHEN k >= 2 AND n > k
-                 AND CAST(sst AS DOUBLE) - CAST(sbt AS DOUBLE) > 0 THEN
-             round(((CAST(sbt AS DOUBLE)
-                 - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / CAST(n AS DOUBLE))
-                 / (CAST(k AS DOUBLE) - 1.0))
-               / ((CAST(sst AS DOUBLE) - CAST(sbt AS DOUBLE))
-                 / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE))), 6)
-           END AS f_stat
-         FROM agg""",
-
-    "q267_ppr" -> OracleGen.pprSql(seedMod = 2, minCos = 0.1),
-
-    "q268_assortativity" -> OracleGen.assortativitySql(minCos = 0.1),
-
-    // the q249 observation machinery; E/V terms doubles of exact longs
-    // DECIMAL(20,9) pre-sum; k-sample chi-square on the overall row
-    "q281_log_rank" ->
-      """WITH u AS (
-           SELECT user_id, MIN(epoch_us(ts)) AS t0,
-             MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS tc,
-             MAX(epoch_us(ts)) AS tm
-           FROM events GROUP BY 1),
-         obs AS (
-           SELECT 'c' || CAST(user_id % 3 AS VARCHAR) AS g,
-             (COALESCE(tc, tm) - t0) // 86400000000 AS t,
-             CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END AS e
-           FROM u),
-         cells AS (SELECT g, t, SUM(e) AS d, COUNT(*) AS c FROM obs GROUP BY 1, 2),
-         ptot AS (SELECT t, SUM(d) AS dt, SUM(c) AS ct FROM cells GROUP BY 1),
-         pooled AS (
-           SELECT t, dt,
-             SUM(ct) OVER () - COALESCE(SUM(ct) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nt
-           FROM ptot),
-         pev AS (SELECT t, dt, nt FROM pooled WHERE dt > 0),
-         grid AS (
-           SELECT gs.g, ts.t, 0 AS d, 0 AS c
-           FROM (SELECT DISTINCT g FROM cells) gs, (SELECT t FROM pev) ts),
-         aug AS (
-           SELECT g, t, SUM(d) AS d, SUM(c) AS c FROM (
-             SELECT g, t, d, c FROM cells
-             UNION ALL SELECT g, t, d, c FROM grid) GROUP BY 1, 2),
-         aug2 AS (
-           SELECT g, t, d,
-             SUM(c) OVER (PARTITION BY g)
-               - COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY t
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ng
-           FROM aug),
-         risked AS (
-           SELECT a.g, a.d,
-             CAST(CAST(p.dt AS DOUBLE) * CAST(a.ng AS DOUBLE)
-               / CAST(p.nt AS DOUBLE) AS DECIMAL(20,9)) AS eterm,
-             CASE WHEN p.nt > 1 THEN
-               CAST(CAST(p.dt AS DOUBLE) * (CAST(a.ng AS DOUBLE) / CAST(p.nt AS DOUBLE))
-                 * (1.0 - CAST(a.ng AS DOUBLE) / CAST(p.nt AS DOUBLE))
-                 * (CAST(p.nt - p.dt AS DOUBLE) / CAST(p.nt - 1 AS DOUBLE))
-                 AS DECIMAL(20,9))
-             ELSE CAST(0.0 AS DECIMAL(20,9)) END AS vterm
-           FROM aug2 a JOIN pev p USING (t)),
-         per AS (SELECT g, SUM(d) AS o, SUM(eterm) AS ex, SUM(vterm) AS vr
-                 FROM risked GROUP BY 1)
-         SELECT 'group' AS section, g AS label, CAST(o AS BIGINT) AS observed,
-           round(CAST(ex AS DOUBLE), 6) AS expected,
-           round(CAST(vr AS DOUBLE), 6) AS variance,
-           CASE WHEN CAST(vr AS DOUBLE) > 0 THEN
-             round((CAST(o AS DOUBLE) - CAST(ex AS DOUBLE))
-               / sqrt(CAST(vr AS DOUBLE)), 9) END AS z,
-           CAST(NULL AS DOUBLE) AS chi2, CAST(NULL AS BIGINT) AS df
-         FROM per
-         UNION ALL
-         SELECT 'overall', 'all', CAST(SUM(o) AS BIGINT),
-           round(CAST(SUM(ex) AS DOUBLE), 6), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), round(CAST(SUM(x2) AS DOUBLE), 9),
-           COUNT(*) - 1
-         FROM (SELECT o, ex,
-             CAST(CASE WHEN CAST(ex AS DOUBLE) > 0 THEN
-               (CAST(o AS DOUBLE) - CAST(ex AS DOUBLE))
-                 * (CAST(o AS DOUBLE) - CAST(ex AS DOUBLE)) / CAST(ex AS DOUBLE)
-             ELSE 0.0 END AS DECIMAL(20,9)) AS x2 FROM per)""",
-
-    // confusion marginals exact HUGEINT; MCC numerator and both
-    // sqrt factors mirrored doubles of exact integers
-    "q282_mcc" ->
-      """WITH e AS (
-           SELECT 'm' || CAST(user_id % 3 AS VARCHAR) AS g, event_type AS a,
-             CASE WHEN event_id % (5 + user_id % 3) = 0 THEN 'click'
-                  ELSE event_type END AS p
-           FROM events),
-         cells AS (SELECT g, a, p, COUNT(*) AS c FROM e GROUP BY 1, 2, 3),
-         rm AS (SELECT g, a AS l, SUM(c) AS t FROM cells GROUP BY 1, 2),
-         cm AS (SELECT g, p AS l, SUM(c) AS q FROM cells GROUP BY 1, 2),
-         marg AS (
-           SELECT COALESCE(rm.g, cm.g) AS g,
-             COALESCE(t, 0) AS t, COALESCE(q, 0) AS q
-           FROM rm FULL OUTER JOIN cm ON rm.g = cm.g AND rm.l = cm.l),
-         ms AS (
-           SELECT g, SUM(CAST(t AS HUGEINT) * q) AS pt,
-             SUM(CAST(q AS HUGEINT) * q) AS p2,
-             SUM(CAST(t AS HUGEINT) * t) AS t2
-           FROM marg GROUP BY 1),
-         tot AS (
-           SELECT g, SUM(c) AS n,
-             SUM(CASE WHEN a = p THEN c ELSE 0 END) AS corr
-           FROM cells GROUP BY 1)
-         SELECT t.g AS model, CAST(n AS BIGINT) AS n,
-           round(CAST(corr AS DOUBLE) / CAST(n AS DOUBLE), 9) AS accuracy,
-           CASE WHEN CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(p2 AS DOUBLE) > 0
-                 AND CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(t2 AS DOUBLE) > 0 THEN
-             round((CAST(corr AS DOUBLE) * CAST(n AS DOUBLE) - CAST(pt AS DOUBLE))
-               / sqrt(CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(p2 AS DOUBLE))
-               / sqrt(CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(t2 AS DOUBLE)), 9)
-           END AS mcc
-         FROM tot t JOIN ms USING (g)""",
-
-    // q269's daily means; error terms doubles of the rounded means
-    // quantized DECIMAL(20,9)/(25,12) pre-sum; final folds mirrored
-    "q283_forecast_metrics" ->
-      """WITH e AS (
-           SELECT event_type AS g, epoch_us(ts) // 86400000000 AS day,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         cells AS (
-           SELECT g, day, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS y
-           FROM e GROUP BY 1, 2),
-         lagd AS (
-           SELECT g, y,
-             LAG(y, 1) OVER (PARTITION BY g ORDER BY day) AS f,
-             LAG(y, 7) OVER (PARTITION BY g ORDER BY day) AS fs
-           FROM cells),
-         agg AS (
-           SELECT g, COUNT(*) AS n_days,
-             SUM(CASE WHEN f IS NOT NULL THEN 1 ELSE 0 END) AS n_scored,
-             SUM(CASE WHEN f IS NOT NULL AND y <> 0.0 THEN 1 ELSE 0 END) AS nm,
-             SUM(CASE WHEN f IS NOT NULL THEN
-               CAST(abs(y - f) AS DECIMAL(20,9)) END) AS sae,
-             SUM(CASE WHEN f IS NOT NULL AND y <> 0.0 THEN
-               CAST(abs(y - f) / abs(y) AS DECIMAL(20,9)) END) AS sape,
-             SUM(CASE WHEN f IS NOT NULL AND abs(y) + abs(f) <> 0.0 THEN
-               CAST(2.0 * abs(y - f) / (abs(y) + abs(f)) AS DECIMAL(20,9)) END) AS ssm,
-             SUM(CASE WHEN f IS NOT NULL THEN
-               CAST(abs(y - f) * abs(y - f) AS DECIMAL(25,12)) END) AS sse,
-             SUM(CASE WHEN fs IS NOT NULL THEN
-               CAST(abs(y - fs) AS DECIMAL(20,9)) END) AS ssn,
-             SUM(CASE WHEN fs IS NOT NULL THEN 1 ELSE 0 END) AS nsn
-           FROM lagd GROUP BY 1)
-         SELECT g AS event_type, CAST(n_days AS BIGINT) AS n_days,
-           CAST(n_scored AS BIGINT) AS n_scored,
-           CASE WHEN nm > 0 THEN
-             round(CAST(sape AS DOUBLE) / CAST(nm AS DOUBLE), 9) END AS mape,
-           CASE WHEN n_scored > 0 THEN
-             round(CAST(ssm AS DOUBLE) / CAST(n_scored AS DOUBLE), 9) END AS smape,
-           CASE WHEN n_scored > 0 THEN
-             round(sqrt(CAST(sse AS DOUBLE) / CAST(n_scored AS DOUBLE)), 9) END AS rmse,
-           CASE WHEN nsn > 0 AND CAST(ssn AS DOUBLE) > 0 AND n_scored > 0 THEN
-             round((CAST(sae AS DOUBLE) / CAST(n_scored AS DOUBLE))
-               / (CAST(ssn AS DOUBLE) / CAST(nsn AS DOUBLE)), 9) END AS mase
-         FROM agg""",
-
-    // exact-cent revenue cells; share² terms DECIMAL(25,15) pre-sum
-    "q284_concentration" ->
-      """WITH cells AS (
-           SELECT s_nationkey AS g, l_suppkey AS e,
-             SUM(CAST(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100 + 0.5)
-               AS BIGINT) AS DECIMAL(38,0))) AS v
-           FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-           GROUP BY 1, 2),
-         tot AS (SELECT g, SUM(v) AS vt, COUNT(*) AS ne FROM cells GROUP BY 1),
-         terms AS (
-           SELECT c.g, ne,
-             CAST((CAST(v AS DOUBLE) / CAST(vt AS DOUBLE))
-               * (CAST(v AS DOUBLE) / CAST(vt AS DOUBLE)) AS DECIMAL(25,15)) AS t,
-             CAST(v AS DOUBLE) / CAST(vt AS DOUBLE) AS sh
-           FROM cells c JOIN tot USING (g) WHERE vt > 0)
-         SELECT g AS s_nationkey, CAST(MAX(ne) AS BIGINT) AS n_entities,
-           round(CAST(SUM(t) AS DOUBLE), 9) AS hhi,
-           round(1.0 / CAST(SUM(t) AS DOUBLE), 6) AS effective_n,
-           round(MAX(sh), 9) AS top_share
-         FROM terms GROUP BY 1""",
-
-    // signed md5-family counters exact; median-of-z² the exact order
-    // statistic; exact F2 from per-key HUGEINT squares
-    "q285_ams_f2" ->
-      """WITH signs AS (
-           SELECT r, SUM(1 - 2 * (('0x' || substr(md5('ams' || r || '|'
-             || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2)) AS z
-           FROM events, (SELECT UNNEST(range(9)) AS r) reps GROUP BY r),
-         med AS (
-           SELECT CAST(z AS HUGEINT) * z AS z2,
-             ROW_NUMBER() OVER (ORDER BY CAST(z AS HUGEINT) * z) AS rk,
-             COUNT(*) OVER () AS n
-           FROM signs),
-         est AS (
-           SELECT CAST(n AS INT) AS reps, CAST(z2 AS DOUBLE) AS f2_est
-           FROM med WHERE rk = (n + 1) // 2),
-         exact AS (
-           SELECT SUM(CAST(c AS HUGEINT) * c) AS f2
-           FROM (SELECT COUNT(*) AS c FROM events GROUP BY user_id))
-         SELECT reps, f2_est, CAST(f2 AS DOUBLE) AS f2_exact,
-           round(abs(f2_est / CAST(f2 AS DOUBLE) - 1.0), 9) AS rel_err
-         FROM est, exact""",
-
-    // the q95 hash-rank selection with the data-derived minority k;
-    // kept-set digest = order-free md5 sum (the contentDigest shape)
-    "q286_balanced_sample" ->
-      """WITH cnt AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY 1),
-         k AS (SELECT MIN(n) AS kmin FROM cnt),
-         r AS (
-           SELECT lang, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY lang
-               ORDER BY md5('0' || chr(0) || CAST(doc_id AS VARCHAR)),
-                        CAST(doc_id AS VARCHAR)) AS rk
-           FROM documents)
-         SELECT lang, COUNT(*) AS n_kept,
-           CAST(SUM(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-             AS DECIMAL(38,0))) AS VARCHAR) AS id_digest
-         FROM r, k WHERE rk <= kmin GROUP BY lang""",
-
-    // exact quantile_cont boundaries quantized DECIMAL(18,6) (the
-    // q171 rule) over integer day/count/cent metrics
-    "q287_rfm" ->
-      """WITH per AS (
-           SELECT o_custkey AS cust,
-             MAX(CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)) AS r,
-             COUNT(*) AS f,
-             CAST(SUM(CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-               AS DECIMAL(38,0))) AS BIGINT) AS m
-           FROM orders GROUP BY 1),
-         b AS (
-           SELECT
-             list_transform(quantile_cont(r, [0.2, 0.4, 0.6, 0.8]),
-               x -> CAST(x AS DECIMAL(18,6))) AS qr,
-             list_transform(quantile_cont(f, [0.2, 0.4, 0.6, 0.8]),
-               x -> CAST(x AS DECIMAL(18,6))) AS qf,
-             list_transform(quantile_cont(m, [0.2, 0.4, 0.6, 0.8]),
-               x -> CAST(x AS DECIMAL(18,6))) AS qm
-           FROM per),
-         scored AS (
-           SELECT
-             CAST(1 + len(list_filter(qr, x -> x <= CAST(r AS DECIMAL(18,6)))) AS INT)
-               AS r_score,
-             CAST(1 + len(list_filter(qf, x -> x <= CAST(f AS DECIMAL(18,6)))) AS INT)
-               AS f_score,
-             CAST(1 + len(list_filter(qm, x -> x <= CAST(m AS DECIMAL(18,6)))) AS INT)
-               AS m_score,
-             m
-           FROM per, b)
-         SELECT r_score, f_score, m_score, COUNT(*) AS n_customers,
-           round(CAST(SUM(CAST(m AS DECIMAL(38,0))) AS DOUBLE) / 100.0, 2)
-             AS total_spend
-         FROM scored GROUP BY 1, 2, 3""",
-
-    "q288_hits" -> OracleGen.hitsSql(iters = 2),
-
-    // the bucket layout, prune counts, snapshot, and CDC churn all
-    // derived from orders + the same integer width arithmetic
-    "q289_tx_delete" ->
-      """WITH w AS (SELECT (MAX(o_orderkey) + 3) // 4 AS width FROM orders),
-         del AS (SELECT width, width // 2 AS hi FROM w)
-         SELECT 'snapshot' AS section, 'after_delete' AS label,
-           COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM orders, del WHERE NOT (o_orderkey >= 1 AND o_orderkey <= hi)
-         UNION ALL
-         SELECT 'files', 'rewritten',
-           (SELECT COUNT(DISTINCT (o_orderkey - 1) // width)
-            FROM orders, del WHERE o_orderkey >= 1 AND o_orderkey <= hi),
-           CAST(NULL AS DOUBLE)
-         UNION ALL
-         SELECT 'files', 'carried',
-           (SELECT COUNT(DISTINCT (o_orderkey - 1) // width) FROM orders, del)
-             - (SELECT COUNT(DISTINCT (o_orderkey - 1) // width)
-                FROM orders, del WHERE o_orderkey >= 1 AND o_orderkey <= hi),
-           CAST(NULL AS DOUBLE)
-         UNION ALL
-         SELECT 'cdc', 'insert@5', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM orders, del WHERE o_orderkey <= width
-           AND NOT (o_orderkey >= 1 AND o_orderkey <= hi)
-         UNION ALL
-         SELECT 'cdc', 'delete@5', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM orders, del WHERE o_orderkey <= width""",
-
-    // the data row proves single application (a double apply would
-    // double n_rows/metric); the meta rows pin the protocol outcome
-    "q290_tx_idempotent" ->
-      """SELECT 'table' AS section, 'all' AS label, COUNT(*) AS n_rows,
-           round(CAST(SUM(CAST(CAST(floor(value * 1000000 + 0.5) AS BIGINT)
-             AS DECIMAL(38,0))) AS DOUBLE) / 1e6, 6) AS metric
-         FROM events
-         UNION ALL SELECT 'meta', 'n_versions', 3, CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'replay_applied', 0, CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'replay_version', 1, CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'first_version', 1, CAST(NULL AS DOUBLE)""",
-
-    "q291_degree_tail" -> OracleGen.degreeTailSql(k = 50, minCos = 0.1),
-
-    // one batch per run (single input file), second run replays batch 0
-    // through the idempotent committer: one version, each event once
-    "q293_stream_tx_sink" ->
-      """SELECT 'table' AS section, 'all' AS label, COUNT(*) AS n_rows,
-           round(CAST(SUM(CAST(CAST(floor(value * 1000000 + 0.5) AS BIGINT)
-             AS DECIMAL(38,0))) AS DOUBLE) / 1e6, 6) AS metric
-         FROM events
-         UNION ALL SELECT 'meta', 'n_versions', 1, CAST(NULL AS DOUBLE)""",
-
-    // v3 reads through mergeSchema: pre-evolution rows count NULL
-    // o_year; v1 time travel keeps the old 2-column shape
-    "q294_tx_evolve" ->
-      """SELECT 'v3' AS section, 'all' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
-           COUNT(CASE WHEN o_orderpriority <> '1-URGENT' THEN 1 END) AS n_year,
-           CAST(SUM(CASE WHEN o_orderpriority <> '1-URGENT' THEN
-             CAST(year(o_orderdate) AS DECIMAL(19,0)) END) AS DOUBLE) AS sum_year
-         FROM orders
-         WHERE o_orderpriority IN ('1-URGENT', '2-HIGH', '3-MEDIUM')
-         UNION ALL
-         SELECT 'v1', 'all', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE),
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
-         FROM orders WHERE o_orderpriority = '1-URGENT'""",
-
-    "q295_bfs" -> OracleGen.bfsSql(seedMod = 50, maxDepth = 3, minCos = 0.1),
-
-    // exact integer word/sentence/syllable counts; the two formulas
-    // one mirrored double op order each
-    "q297_readability" ->
-      """WITH p AS (
-           SELECT lang, lower(regexp_replace(text, '[^\x20-\x7e]', '', 'g')) AS a
-           FROM documents),
-         w AS (
-           SELECT lang, a,
-             list_filter(string_split_regex(trim(a), '\s+'),
-               w -> len(w) > 0) AS words
-           FROM p),
-         d AS (
-           SELECT lang, CAST(len(words) AS BIGINT) AS nw,
-             CASE WHEN len(words) > 0 THEN
-               greatest(1, CAST(len(regexp_extract_all(a, '[.!?]+')) AS BIGINT))
-             ELSE 0 END AS ns,
-             CASE WHEN len(words) > 0 THEN
-               CAST(list_sum(list_transform(words, w ->
-                 greatest(1, len(regexp_extract_all(w, '[aeiouy]+'))))) AS BIGINT)
-             ELSE 0 END AS ny
-           FROM w),
-         g AS (
-           SELECT lang, COUNT(*) AS n_docs, SUM(nw) AS n_words,
-             SUM(ns) AS n_sentences, SUM(ny) AS n_syllables
-           FROM d GROUP BY 1)
-         SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_words AS BIGINT) AS n_words,
-           CAST(n_sentences AS BIGINT) AS n_sentences,
-           CAST(n_syllables AS BIGINT) AS n_syllables,
-           CASE WHEN n_words > 0 THEN
-             round(206.835
-               - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE))
-               - 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)), 6)
-           END AS flesch,
-           CASE WHEN n_words > 0 THEN
-             round(0.39 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE))
-               + 11.8 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE))
-               - 15.59, 6)
-           END AS fk_grade
-         FROM g""",
-
-    // (group, char) cells exact; p·ln(p) terms the q250 op order
-    // DECIMAL(20,9) pre-sum
-    "q298_char_entropy" ->
-      """WITH p AS (
-           SELECT lang, lower(regexp_replace(text, '[^\x20-\x7e]', '', 'g')) AS a
-           FROM documents),
-         ch AS (SELECT lang, unnest(regexp_extract_all(a, '.')) AS c0 FROM p),
-         cells AS (SELECT lang, c0, COUNT(*) AS c FROM ch GROUP BY 1, 2),
-         tot AS (SELECT lang, SUM(c) AS n, COUNT(*) AS k FROM cells GROUP BY 1),
-         t AS (
-           SELECT cells.lang, n, k,
-             CAST((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-               * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) AS DECIMAL(20,9)) AS tm
-           FROM cells JOIN tot USING (lang))
-         SELECT lang, CAST(MAX(n) AS BIGINT) AS n_chars,
-           CAST(MAX(k) AS BIGINT) AS n_distinct,
-           round(-CAST(SUM(tm) AS DOUBLE), 6) AS entropy_nats
-         FROM t GROUP BY 1""",
-
-    "q299_matryoshka_recall" -> OracleGen.truncatedRecallSql(dims = 16, k = 10),
-
-    // values in the string rendering (json ->> unquotes; numbers and
-    // booleans render identically); one anchored numeric regex
-    "q304_props_profile" ->
-      """WITH kv AS (
-           SELECT k.key, props ->> ('$.' || k.key) AS value
-           FROM events, unnest(json_keys(props)) AS k(key)),
-         tot AS (SELECT COUNT(*) AS n FROM events)
-         SELECT key, COUNT(*) AS n_present,
-           round(CAST(COUNT(*) AS DOUBLE) / CAST(n AS DOUBLE), 9) AS present_rate,
-           CAST(SUM(CASE WHEN regexp_matches(value, '^-?[0-9]+(\.[0-9]+)?$')
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_numeric,
-           round(CAST(SUM(CASE WHEN regexp_matches(value, '^-?[0-9]+(\.[0-9]+)?$')
-               THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9)
-             AS numeric_rate,
-           COUNT(DISTINCT value) AS n_distinct
-         FROM kv, tot GROUP BY key, n""",
-
-    "q305_weekly_rollup" ->
-      """SELECT CAST(date_trunc('week', o_orderdate) AS DATE) AS week_start,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-         FROM orders GROUP BY 1""",
-
-    // expected CDC sections recomputed from the versioned data-file
-    // globs (the q256 technique): insert@N = vN files; the overwrite's
-    // deletes = every parent file. Stream and batch must both match;
-    // the meta row asserts commit-time monotonicity (protocol-true).
-    "q306_tx_changes_stream" ->
-      """WITH v1 AS (SELECT o_orderkey, o_totalprice
-             FROM read_parquet('/tmp/graft_txcdcs___SFTAG__/data/v1_*.parquet')),
-         v2n AS (SELECT o_orderkey, o_totalprice
-             FROM read_parquet('/tmp/graft_txcdcs___SFTAG__/data/v2_*.parquet')),
-         v3 AS (SELECT o_orderkey, o_totalprice
-             FROM read_parquet('/tmp/graft_txcdcs___SFTAG__/data/v3_*.parquet')),
-         rows AS (
-           SELECT 'insert@1' AS label, o_totalprice FROM v1
-           UNION ALL SELECT 'insert@2', o_totalprice FROM v2n
-           UNION ALL SELECT 'delete@3', o_totalprice FROM v1
-           UNION ALL SELECT 'delete@3', o_totalprice FROM v2n
-           UNION ALL SELECT 'insert@3', o_totalprice FROM v3),
-         agg AS (
-           SELECT label, COUNT(*) AS n_rows,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-           FROM rows GROUP BY 1)
-         SELECT 'stream' AS section, label, n_rows, sum_price FROM agg
-         UNION ALL SELECT 'batch', label, n_rows, sum_price FROM agg
-         UNION ALL SELECT 'meta', 'ms_monotonic', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q307_ivf_pq" -> OracleGen.ivfPqSql(),
-
-    "q308_ivfpq_recall" -> OracleGen.ivfPqRecallSql(),
-
-    "q309_weighted_pagerank" -> OracleGen.pageRankWeightedSql(),
-
-    "q310_weighted_ppr" -> OracleGen.pprWeightedSql(seedMod = 2, minCos = 0.1),
-
-    // IDENTICAL oracle to q137 — the bucketed decomposition must
-    // reproduce the plain per-key sessionization exactly
-    "q311_sessions_bucketed" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
-         f AS (
-           SELECT user_id, event_id, tus,
-             CASE WHEN LAG(tus) OVER w IS NULL
-                    OR tus - LAG(tus) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         s AS (
-           SELECT user_id, tus,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM f)
-         SELECT user_id, CAST(sid AS BIGINT) AS session_seq,
-           MIN(tus) AS start_us, MAX(tus) AS end_us,
-           COUNT(*) AS n_events, MAX(tus) - MIN(tus) AS duration_us
-         FROM s GROUP BY 1, 2""",
-
-    "q312_dedup_index_incremental" -> OracleGen.bandIndexSummarySql(),
-
-    // verdicts recomputed in plain SQL over the same filter — all three
-    // checks pass on this data (the refusal path is spec-gated)
-    "q313_tx_constraints" ->
-      """WITH u AS (SELECT o_orderkey, o_totalprice FROM orders
-           WHERE o_orderpriority = '1-URGENT')
-         SELECT 'table' AS section, 'all' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM u
-         UNION ALL
-         SELECT 'check', 'completeness@o_orderkey',
-           CAST(CASE WHEN COUNT(o_orderkey) = COUNT(*) THEN 1 ELSE 0 END AS BIGINT),
-           CAST(NULL AS DOUBLE) FROM u
-         UNION ALL
-         SELECT 'check', 'uniqueness@o_orderkey',
-           CAST(CASE WHEN COUNT(DISTINCT o_orderkey) = COUNT(*)
-                      AND COUNT(o_orderkey) = COUNT(*) THEN 1 ELSE 0 END AS BIGINT),
-           CAST(NULL AS DOUBLE) FROM u
-         UNION ALL
-         SELECT 'check', 'non_negative@o_totalprice',
-           CAST(CASE WHEN SUM(CASE WHEN o_totalprice < 0 THEN 1 ELSE 0 END) = 0
-                      THEN 1 ELSE 0 END AS BIGINT),
-           CAST(NULL AS DOUBLE) FROM u""",
-
-    "q314_louvain" -> OracleGen.louvainSql(),
-
-    "q316_tx_bloom_skip" ->
-      OracleGen.bloomSkipSql("/tmp/graft_txbloom___SFTAG__"),
-
-    "q323_stream_ams" ->
-      """WITH signs AS (
-           SELECT r, SUM(1 - 2 * (('0x' || substr(md5('ams' || r || '|'
-             || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2)) AS z
-           FROM events, (SELECT UNNEST(range(9)) AS r) reps GROUP BY r),
-         med AS (
-           SELECT CAST(z AS HUGEINT) * z AS z2,
-             ROW_NUMBER() OVER (ORDER BY CAST(z AS HUGEINT) * z) AS rk,
-             COUNT(*) OVER () AS n
-           FROM signs),
-         est AS (
-           SELECT CAST(n AS INT) AS reps, CAST(z2 AS DOUBLE) AS f2_est
-           FROM med WHERE rk = (n + 1) // 2),
-         exact AS (
-           SELECT SUM(CAST(c AS HUGEINT) * c) AS f2
-           FROM (SELECT COUNT(*) AS c FROM events GROUP BY user_id))
-         SELECT reps, f2_est, CAST(f2 AS DOUBLE) AS f2_exact,
-           round(abs(f2_est / CAST(f2 AS DOUBLE) - 1.0), 9) AS rel_err
-         FROM est, exact""",
-
-    "q321_tx_restore" ->
-      """WITH v12 AS (
-           SELECT o_orderkey, o_totalprice
-           FROM read_parquet('/tmp/graft_txres___SFTAG__/data/v1_*.parquet')
-           UNION ALL
-           SELECT o_orderkey, o_totalprice
-           FROM read_parquet('/tmp/graft_txres___SFTAG__/data/v2_*.parquet')),
-         v3 AS (
-           SELECT o_orderkey, o_totalprice
-           FROM read_parquet('/tmp/graft_txres___SFTAG__/data/v3_*.parquet'))
-         SELECT 'table' AS section, 'restored' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM v12
-         UNION ALL SELECT 'table', 'pre_restore', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM v3
-         UNION ALL SELECT 'cdc', 'delete@4', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM v3
-         UNION ALL SELECT 'cdc', 'insert@4', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM v12
-         UNION ALL SELECT 'meta', 'n_versions', CAST(4 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'restored_version', CAST(4 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'zero_copy', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q322_dedup_index_lookup" -> OracleGen.bandIndexLookupSql(),
-
-    "q324_tx_mor_delete" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice,
-             regexp_extract(filename, '[^/]*$') AS fn
-           FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v1_*.parquet', filename=true)),
-         tomb AS (
-           SELECT _gf, _gk
-           FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v2_t*.parquet')),
-         mor AS (
-           SELECT d.o_orderkey, d.o_totalprice FROM v1 d
-           ANTI JOIN tomb t ON d.fn = t._gf AND d.o_orderkey = t._gk)
-         SELECT 'table' AS section, 'v1_full' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM v1
-         UNION ALL SELECT 'table', 'v2_mor', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM mor
-         UNION ALL SELECT 'table', 'v3_compacted', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v3_*.parquet')
-         UNION ALL SELECT 'meta', 'zero_rewrite', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_deleted',
-           (SELECT COUNT(*) FROM tomb), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_tomb_files',
-           (SELECT COUNT(DISTINCT filename)
-            FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v2_t*.parquet', filename=true)),
-           CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'tombs_after_compact', CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q325_tx_rename_evolve" ->
-      """WITH phys AS (
-           SELECT o_orderkey, o_totalprice
-           FROM read_parquet(['/tmp/graft_txmap___SFTAG__/data/v1_*.parquet',
-                              '/tmp/graft_txmap___SFTAG__/data/v3_*.parquet'])),
-         cur AS (SELECT o_orderkey, o_totalprice AS price FROM phys)
-         SELECT 'table' AS section, 'current' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(price AS DECIMAL(18,4))) AS DOUBLE) AS sum_val
-         FROM cur
-         UNION ALL SELECT 'table', 'v1', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txmap___SFTAG__/data/v1_*.parquet')
-         UNION ALL SELECT 'table', 'pruned', COUNT(*),
-           CAST(SUM(CAST(price AS DECIMAL(18,4))) AS DOUBLE)
-         FROM cur WHERE o_orderkey BETWEEN 100 AND 2000
-         UNION ALL SELECT 'meta', 'zero_io', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_cols_now', CAST(2 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q327_tx_stream_mor" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice,
-             regexp_extract(filename, '[^/]*$') AS fn
-           FROM read_parquet('/tmp/graft_txsm___SFTAG__/data/v1_*.parquet', filename=true)),
-         tomb AS (
-           SELECT _gf, _gk
-           FROM read_parquet('/tmp/graft_txsm___SFTAG__/data/v2_t*.parquet'))
-         SELECT 'insert' AS change, CAST(1 AS INT) AS version, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM v1
-         UNION ALL
-         SELECT 'delete', CAST(2 AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM v1 d SEMI JOIN tomb t ON d.fn = t._gf AND d.o_orderkey = t._gk
-         UNION ALL
-         SELECT 'insert', CAST(3 AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txsm___SFTAG__/data/v3_*.parquet')""",
-
-    "q329_tx_mirror" ->
-      """WITH phys AS (
-           SELECT o_orderkey, o_totalprice, o_orderpriority,
-             regexp_extract(filename, '[^/]*$') AS fn
-           FROM read_parquet(['/tmp/graft_txmis___SFTAG__/data/v1_*.parquet',
-                              '/tmp/graft_txmis___SFTAG__/data/v2_*.parquet',
-                              '/tmp/graft_txmis___SFTAG__/data/v4_*.parquet'],
-                             filename=true)),
-         tomb AS (
-           SELECT _gf, _gk
-           FROM read_parquet('/tmp/graft_txmis___SFTAG__/data/v3_t*.parquet')),
-         cur AS (
-           SELECT d.o_orderkey, d.o_totalprice, d.o_orderpriority FROM phys d
-           ANTI JOIN tomb t ON d.fn = t._gf AND d.o_orderkey = t._gk)
-         SELECT 'src' AS side, o_orderpriority, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM cur GROUP BY 2
-         UNION ALL
-         SELECT 'dst', o_orderpriority, COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM cur GROUP BY 2""",
-
-    "q328_tx_value_skip" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice, o_orderpriority, filename
-           FROM read_parquet('/tmp/graft_txvs___SFTAG__/data/v1_*.parquet', filename=true))
-         SELECT 'rows' AS section, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM v1 WHERE o_orderpriority = '3-MEDIUM'
-         UNION ALL SELECT 'absent', 0, CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'kept_files',
-           (SELECT COUNT(DISTINCT filename) FROM v1 WHERE o_orderpriority = '3-MEDIUM'),
-           CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'total_files',
-           (SELECT COUNT(DISTINCT filename) FROM v1), CAST(NULL AS DOUBLE)""",
-
-    "q330_tx_partitioned" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice, o_orderpriority, filename
-           FROM read_parquet('/tmp/graft_txpt___SFTAG__/data/*/v1_*.parquet',
-                             filename=true, hive_partitioning=1))
-         SELECT 'rows' AS section, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM v1 WHERE o_orderpriority = '3-MEDIUM'
-         UNION ALL SELECT 'absent', 0, CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'kept_files',
-           (SELECT COUNT(DISTINCT filename) FROM v1 WHERE o_orderpriority = '3-MEDIUM'),
-           CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'total_files',
-           (SELECT COUNT(DISTINCT filename) FROM v1), CAST(NULL AS DOUBLE)""",
-
-    "q331_tx_pos_delete" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice,
-             regexp_extract(filename, '[^/]*$') AS fn, file_row_number AS ri
-           FROM read_parquet('/tmp/graft_txpd___SFTAG__/data/v1_*.parquet',
-                             filename=true, file_row_number=true)),
-         vec AS (
-           SELECT _gf, _gp
-           FROM read_parquet('/tmp/graft_txpd___SFTAG__/data/v2_p*.parquet')),
-         mor AS (
-           SELECT d.o_orderkey, d.o_totalprice FROM v1 d
-           ANTI JOIN vec t ON d.fn = t._gf AND d.ri = t._gp)
-         SELECT 'table' AS section, 'v1_full' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM v1
-         UNION ALL SELECT 'table', 'v2_pos', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM mor
-         UNION ALL SELECT 'table', 'v3_compacted', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txpd___SFTAG__/data/v3_*.parquet')
-         UNION ALL SELECT 'meta', 'zero_rewrite', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_deleted',
-           (SELECT COUNT(*) FROM vec), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_vec_files',
-           (SELECT COUNT(DISTINCT filename)
-            FROM read_parquet('/tmp/graft_txpd___SFTAG__/data/v2_p*.parquet', filename=true)),
-           CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'vecs_after_compact', CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q332_tx_update" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice, filename
-           FROM read_parquet('/tmp/graft_txup___SFTAG__/data/v1_*.parquet', filename=true)),
-         upd AS (
-           SELECT o_orderkey,
-             CASE WHEN o_orderkey BETWEEN 1 AND 500
-                  THEN CAST(CAST(o_totalprice AS DECIMAL(18,4)) * CAST(1.1 AS DECIMAL(2,1)) AS DOUBLE)
-                  ELSE o_totalprice END AS o_totalprice
-           FROM v1),
-         touched AS (
-           SELECT filename FROM v1 GROUP BY 1
-           HAVING min(o_orderkey) <= 500 AND max(o_orderkey) >= 1),
-         v2f AS (SELECT o_orderkey, o_totalprice
-                 FROM read_parquet('/tmp/graft_txup___SFTAG__/data/v2_*.parquet'))
-         SELECT 'table' AS section, 'v1_full' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price FROM v1
-         UNION ALL SELECT 'table', 'v2_updated', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM upd
-         UNION ALL SELECT 'cdc', 'insert', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM v2f
-         UNION ALL SELECT 'cdc', 'delete', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-           FROM v1 WHERE filename IN (SELECT filename FROM touched)
-         UNION ALL SELECT 'meta', 'n_touched',
-           (SELECT COUNT(*) FROM touched), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_carried',
-           (SELECT COUNT(DISTINCT filename) FROM v1) - (SELECT COUNT(*) FROM touched),
-           CAST(NULL AS DOUBLE)""",
-
-    "q333_tx_bucket" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice,
-             CAST("_gpt-bucket16-o_orderkey" AS VARCHAR) AS bkt, filename
-           FROM read_parquet('/tmp/graft_txbk___SFTAG__/data/*/v1_*.parquet',
-                             filename=true, hive_partitioning=1))
-         SELECT 'rows' AS section, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM v1 WHERE o_orderkey = 137
-         UNION ALL SELECT 'kept_files',
-           (SELECT COUNT(DISTINCT filename) FROM v1 WHERE bkt = substr(md5('137'), 1, 1)),
-           CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'total_files',
-           (SELECT COUNT(DISTINCT filename) FROM v1), CAST(NULL AS DOUBLE)""",
-
-    "q334_tx_day_partition" ->
-      """WITH v1 AS (
-           SELECT event_type, value, CAST("_gpt-day-ts" AS VARCHAR) AS d, filename
-           FROM read_parquet('/tmp/graft_txdy___SFTAG__/data/*/v1_*.parquet',
-                             filename=true, hive_partitioning=1))
-         SELECT 'rows' AS section, event_type, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM v1 WHERE d BETWEEN '2024-01-05' AND '2024-01-07' GROUP BY 1, 2
-         UNION ALL SELECT 'kept_files', NULL,
-           (SELECT COUNT(DISTINCT filename) FROM v1
-            WHERE d BETWEEN '2024-01-05' AND '2024-01-07'), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'total_files', NULL,
-           (SELECT COUNT(DISTINCT filename) FROM v1), CAST(NULL AS DOUBLE)""",
-
-    "q335_tx_wap" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice
-           FROM read_parquet('/tmp/graft_txwa___SFTAG__/data/v1_*.parquet')),
-         wg AS (
-           SELECT o_orderkey, o_totalprice
-           FROM read_parquet('/tmp/graft_txwa___SFTAG__/data/w_good_*.parquet')),
-         v2 AS (SELECT * FROM v1 UNION ALL SELECT * FROM wg)
-         SELECT 'table' AS section, 'v1_base' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price FROM v1
-         UNION ALL SELECT 'table', 'v2_published', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM v2
-         UNION ALL SELECT 'meta', 'pre_publish_rows',
-           (SELECT COUNT(*) FROM v1), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'published_version', CAST(2 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'bad_abandoned_files', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q336_gopher_rules" ->
-      """WITH tok AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         base AS (
-           SELECT doc_id, len(w) AS n_words,
-             CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-               / CAST(len(w) AS DOUBLE) AS mwl,
-             len(list_filter(w, x -> list_contains(['the','a','of','and','to'], x))) AS stop_cnt
-           FROM tok),
-         top AS (
-           SELECT doc_id, MAX(c) AS top_cnt FROM (
-             SELECT doc_id, t, COUNT(*) AS c
-             FROM (SELECT doc_id, unnest(w) AS t FROM tok) GROUP BY 1, 2)
-           GROUP BY 1)
-         SELECT b.doc_id, CAST(n_words AS INT) AS n_words,
-           n_words >= 30 AND n_words <= 500 AS ok_words,
-           mwl >= 3.0 AND mwl <= 10.0 AS ok_word_len,
-           stop_cnt >= 2 AS ok_stop,
-           CAST(top_cnt AS DOUBLE) / CAST(n_words AS DOUBLE) <= 0.2 AS ok_repeat,
-           (n_words >= 30 AND n_words <= 500) AND (mwl >= 3.0 AND mwl <= 10.0)
-             AND stop_cnt >= 2
-             AND (CAST(top_cnt AS DOUBLE) / CAST(n_words AS DOUBLE) <= 0.2) AS pass
-         FROM base b JOIN top USING (doc_id)""",
-
-    "q337_kneser_ney" ->
-      """WITH tok AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         bg AS (
-           SELECT doc_id, unnest([array_to_string(w[i : i+1], ' ')
-                                  for i in generate_series(1, len(w) - 1)]) AS bg
-           FROM tok WHERE len(w) >= 2),
-         seedbg AS (SELECT bg, COUNT(*) AS c2 FROM bg WHERE doc_id % 10 = 0 GROUP BY 1),
-         ctx AS (SELECT split_part(bg, ' ', 1) AS w1, SUM(c2) AS c1, COUNT(*) AS n1fwd
-                 FROM seedbg GROUP BY 1),
-         cont AS (SELECT split_part(bg, ' ', 2) AS w2, COUNT(*) AS n1rev
-                  FROM seedbg GROUP BY 1),
-         nb AS (SELECT COUNT(*) AS nbig FROM seedbg),
-         terms AS (
-           SELECT b.doc_id,
-             COALESCE(s.c2, 0) AS c2, COALESCE(c.c1, 0) AS c1,
-             COALESCE(c.n1fwd, 0) AS n1fwd, COALESCE(k.n1rev, 0) AS n1rev
-           FROM bg b
-           LEFT JOIN seedbg s ON b.bg = s.bg
-           LEFT JOIN ctx c ON split_part(b.bg, ' ', 1) = c.w1
-           LEFT JOIN cont k ON split_part(b.bg, ' ', 2) = k.w2),
-         p AS (
-           SELECT doc_id, c1,
-             greatest(CAST(c2 AS DOUBLE) - 0.75, 0.0) / CAST(c1 AS DOUBLE)
-             + 0.75 * CAST(n1fwd AS DOUBLE) / CAST(c1 AS DOUBLE)
-               * (CAST(n1rev AS DOUBLE) / CAST((SELECT nbig FROM nb) AS DOUBLE)) AS p
-           FROM terms),
-         sc AS (
-           SELECT doc_id, COUNT(*) AS n_bigrams,
-             SUM(CASE WHEN c1 > 0 AND p > 0 THEN 1 ELSE 0 END) AS n_scored,
-             SUM(CASE WHEN c1 > 0 AND p > 0 THEN CAST(ln(p) AS DECIMAL(20,6)) END) AS s
-           FROM p GROUP BY 1)
-         SELECT t.doc_id, CAST(COALESCE(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-           CAST(COALESCE(n_scored, 0) AS BIGINT) AS n_scored,
-           CASE WHEN n_scored > 0 THEN round(-CAST(s AS DOUBLE) / n_scored, 4) END AS kn_nll
-         FROM tok t LEFT JOIN sc ON t.doc_id = sc.doc_id""",
-
-    "q338_embed_isotropy" ->
-      """WITH e AS (
-           SELECT label, vec_id, embedding,
-             list_sum(list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e12 + 0.5) AS BIGINT)))
-               AS ssq
-           FROM embeddings),
-         b AS (
-           SELECT label, vec_id, embedding, sqrt(CAST(ssq AS DOUBLE) / 1e12) AS nrm
-           FROM e WHERE ssq > 0),
-         pv AS (
-           SELECT label, COUNT(*) AS n_vecs, SUM(CAST(nrm AS DECIMAL(20,9))) AS sn
-           FROM b GROUP BY 1),
-         comp AS (
-           SELECT label, s.p AS p,
-             CAST(floor(CAST(s.x AS DOUBLE) / nrm * 1e9 + 0.5) AS BIGINT) AS uq
-           FROM (SELECT label, nrm,
-                   unnest([{'p': i, 'x': embedding[i]}
-                           for i in generate_series(1, len(embedding))]) AS s
-                 FROM b)),
-         byp AS (
-           SELECT label, p, SUM(CAST(uq AS HUGEINT)) AS sp,
-             SUM(CAST(uq AS HUGEINT) * CAST(uq AS HUGEINT)) AS q
-           FROM comp GROUP BY 1, 2),
-         cr AS (SELECT label, SUM(sp * sp) AS s2, SUM(q) AS qt FROM byp GROUP BY 1)
-         SELECT pv.label, n_vecs,
-           round(CAST(sn AS DOUBLE) / CAST(n_vecs AS DOUBLE), 6) AS mean_norm,
-           CASE WHEN n_vecs >= 2 THEN
-             round((CAST(s2 AS DOUBLE) - CAST(qt AS DOUBLE)) /
-               (CAST(n_vecs AS DOUBLE) * (CAST(n_vecs AS DOUBLE) - 1.0) * 1e18), 9)
-           END AS mean_pair_cos
-         FROM pv JOIN cr USING (label)""",
-
-    "q339_ljung_box" ->
-      """WITH e AS (
-           SELECT user_id, epoch_ns(ts)//1000 AS tus, event_id,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS x FROM events),
-         l AS (
-           SELECT user_id, x,
-             LAG(x, 1) OVER w AS p1, LAG(x, 2) OVER w AS p2, LAG(x, 3) OVER w AS p3
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         s AS (
-           SELECT user_id, COUNT(*) AS n,
-             SUM(CAST(x AS HUGEINT)) AS sx,
-             SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS ss,
-             SUM(CASE WHEN p1 IS NOT NULL THEN CAST(x AS HUGEINT) * CAST(p1 AS HUGEINT) END) AS c1,
-             SUM(CASE WHEN p1 IS NOT NULL THEN CAST(x AS HUGEINT) END) AS a1,
-             SUM(CASE WHEN p1 IS NOT NULL THEN CAST(p1 AS HUGEINT) END) AS b1,
-             SUM(CASE WHEN p2 IS NOT NULL THEN CAST(x AS HUGEINT) * CAST(p2 AS HUGEINT) END) AS c2,
-             SUM(CASE WHEN p2 IS NOT NULL THEN CAST(x AS HUGEINT) END) AS a2,
-             SUM(CASE WHEN p2 IS NOT NULL THEN CAST(p2 AS HUGEINT) END) AS b2,
-             SUM(CASE WHEN p3 IS NOT NULL THEN CAST(x AS HUGEINT) * CAST(p3 AS HUGEINT) END) AS c3,
-             SUM(CASE WHEN p3 IS NOT NULL THEN CAST(x AS HUGEINT) END) AS a3,
-             SUM(CASE WHEN p3 IS NOT NULL THEN CAST(p3 AS HUGEINT) END) AS b3
-           FROM l GROUP BY 1),
-         r AS (
-           SELECT user_id, n,
-             CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT) * ss
-                  - CAST(n AS HUGEINT) * sx * sx AS DOUBLE) AS den,
-             CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT) * COALESCE(c1, 0)
-                  - CAST(n AS HUGEINT) * sx * (COALESCE(a1, 0) + COALESCE(b1, 0))
-                  + (CAST(n AS HUGEINT) - 1) * sx * sx AS DOUBLE) AS m1,
-             CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT) * COALESCE(c2, 0)
-                  - CAST(n AS HUGEINT) * sx * (COALESCE(a2, 0) + COALESCE(b2, 0))
-                  + (CAST(n AS HUGEINT) - 2) * sx * sx AS DOUBLE) AS m2,
-             CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT) * COALESCE(c3, 0)
-                  - CAST(n AS HUGEINT) * sx * (COALESCE(a3, 0) + COALESCE(b3, 0))
-                  + (CAST(n AS HUGEINT) - 3) * sx * sx AS DOUBLE) AS m3
-           FROM s)
-         SELECT user_id, n,
-           CASE WHEN n > 4 AND den > 0 THEN
-             round((m1 / den * (m1 / den) / (CAST(n AS DOUBLE) - 1.0)
-                    + m2 / den * (m2 / den) / (CAST(n AS DOUBLE) - 2.0)
-                    + m3 / den * (m3 / den) / (CAST(n AS DOUBLE) - 3.0))
-                   * CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 2.0), 9)
-           END AS lb_q
-         FROM r""",
-
-    "q340_cronbach_alpha" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day, event_type,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v FROM events),
-         cells0 AS (SELECT day, event_type, SUM(CAST(v AS HUGEINT)) AS x FROM e GROUP BY 1, 2),
-         grid AS (
-           SELECT d.day, i.event_type, COALESCE(c.x, 0) AS x
-           FROM (SELECT DISTINCT day FROM cells0) d
-           CROSS JOIN (SELECT DISTINCT event_type FROM cells0) i
-           LEFT JOIN cells0 c ON c.day = d.day AND c.event_type = i.event_type),
-         pi AS (
-           SELECT event_type, COUNT(*) AS n, SUM(x) AS sx, SUM(x * x) AS sxx
-           FROM grid GROUP BY 1),
-         ia AS (
-           SELECT COUNT(*) AS k, MAX(n) AS n,
-             SUM(CAST(n AS HUGEINT) * sxx - sx * sx) AS numi FROM pi),
-         tot AS (
-           SELECT CAST(CAST(COUNT(*) AS HUGEINT) * SUM(t * t) - SUM(t) * SUM(t) AS DOUBLE) AS numt
-           FROM (SELECT day, SUM(x) AS t FROM grid GROUP BY 1))
-         SELECT CAST(k AS INT) AS k_items, CAST(n AS BIGINT) AS n_subjects,
-           CASE WHEN k >= 2 AND numt > 0 THEN
-             round(CAST(k AS DOUBLE) / (CAST(k AS DOUBLE) - 1.0) *
-               (1.0 - CAST(numi AS DOUBLE) / numt), 9) END AS alpha
-         FROM ia, tot""",
-
-    "q341_info_gain" ->
-      """WITH e AS (
-           SELECT event_type,
-             (epoch_us(ts) // 3600000000) % 24 AS hour_of_day,
-             CAST(floor(value / 50.0) AS BIGINT) AS value_bin
-           FROM events),
-         n AS (SELECT COUNT(*) AS nt FROM e),
-         hl AS (
-           SELECT SUM(CAST((CAST(c AS DOUBLE) / CAST(nt AS DOUBLE))
-             * ln(CAST(c AS DOUBLE) / CAST(nt AS DOUBLE)) AS DECIMAL(20,9))) AS sy
-           FROM (SELECT event_type, COUNT(*) AS c FROM e GROUP BY 1), n),
-         hch AS (
-           SELECT SUM(CAST((CAST(cvc AS DOUBLE) / CAST(nt AS DOUBLE))
-             * ln(CAST(cvc AS DOUBLE) / CAST(cv AS DOUBLE)) AS DECIMAL(20,9))) AS sc
-           FROM (SELECT hour_of_day AS v, event_type, COUNT(*) AS cvc FROM e GROUP BY 1, 2) c
-           JOIN (SELECT hour_of_day AS v, COUNT(*) AS cv FROM e GROUP BY 1) t USING (v), n),
-         hcb AS (
-           SELECT SUM(CAST((CAST(cvc AS DOUBLE) / CAST(nt AS DOUBLE))
-             * ln(CAST(cvc AS DOUBLE) / CAST(cv AS DOUBLE)) AS DECIMAL(20,9))) AS sc
-           FROM (SELECT value_bin AS v, event_type, COUNT(*) AS cvc FROM e GROUP BY 1, 2) c
-           JOIN (SELECT value_bin AS v, COUNT(*) AS cv FROM e GROUP BY 1) t USING (v), n)
-         SELECT 'hour_of_day' AS feature,
-           round(-CAST(sy AS DOUBLE), 6) AS h_label,
-           round(-CAST(sc AS DOUBLE), 6) AS h_cond,
-           round(CAST(sc AS DOUBLE) - CAST(sy AS DOUBLE), 6) AS info_gain
-         FROM hl, hch
-         UNION ALL SELECT 'value_bin',
-           round(-CAST(sy AS DOUBLE), 6), round(-CAST(sc AS DOUBLE), 6),
-           round(CAST(sc AS DOUBLE) - CAST(sy AS DOUBLE), 6)
-         FROM hl, hcb""",
-
-    "q342_fleiss_kappa" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY epoch_us(ts) // 86400000000
-               ORDER BY epoch_ns(ts)//1000, event_id) AS rn
-           FROM events),
-         r AS (SELECT day, event_type FROM e WHERE rn <= 10),
-         cnt AS (SELECT day, event_type, COUNT(*) AS n FROM r GROUP BY 1, 2),
-         ps AS (SELECT day, SUM(n) AS tot, SUM(n * n) AS s2 FROM cnt GROUP BY 1),
-         kept AS (SELECT day, s2 FROM ps WHERE tot = 10),
-         ct AS (
-           SELECT SUM(CAST(m AS HUGEINT) * CAST(m AS HUGEINT)) AS sm2 FROM (
-             SELECT c.event_type, SUM(c.n) AS m
-             FROM cnt c JOIN kept USING (day) GROUP BY 1)),
-         sa AS (SELECT COUNT(*) AS ns, SUM(CAST(s2 AS HUGEINT)) AS s2tot FROM kept),
-         raw AS (
-           SELECT ns,
-             (CAST(s2tot AS DOUBLE) - CAST(ns AS DOUBLE) * 10.0)
-               / (CAST(ns AS DOUBLE) * 10.0 * (10.0 - 1.0)) AS pbar,
-             CAST(sm2 AS DOUBLE)
-               / (CAST(ns AS DOUBLE) * 10.0 * CAST(ns AS DOUBLE) * 10.0) AS pe
-           FROM sa, ct)
-         SELECT CAST(ns AS BIGINT) AS n_subjects, CAST(10 AS INT) AS n_raters,
-           CASE WHEN ns > 0 THEN round(pbar, 9) END AS p_bar,
-           CASE WHEN ns > 0 THEN round(pe, 9) END AS p_e,
-           CASE WHEN ns > 0 AND pe < 1.0 THEN round((pbar - pe) / (1.0 - pe), 9) END AS kappa
-         FROM raw""",
-
-    "q343_stream_join_outer" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts)//1000 AS tus, value FROM events),
-         c AS (SELECT user_id, tus AS cus, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS bus, value AS buy_value FROM e WHERE event_type = 'purchase'),
-         wm AS (SELECT least((SELECT MAX(cus) FROM c), (SELECT MAX(bus) FROM b))
-                  - 3600000000 AS w),
-         m AS (
-           SELECT c.user_id, cus, click_value, bus, buy_value
-           FROM c JOIN b ON c.user_id = b.user_id
-             AND bus >= cus AND bus <= cus + 1800000000),
-         um AS (
-           SELECT c.user_id, cus, click_value,
-             CAST(NULL AS BIGINT) AS bus, CAST(NULL AS DOUBLE) AS buy_value
-           FROM c ANTI JOIN m ON c.user_id = m.user_id AND c.cus = m.cus
-           WHERE cus + 1800000000 < (SELECT w FROM wm))
-         SELECT user_id, make_timestamp(cus) AS click_ts, click_value,
-           make_timestamp(bus) AS buy_ts, buy_value FROM m
-         UNION ALL SELECT user_id, make_timestamp(cus), click_value,
-           make_timestamp(bus), buy_value FROM um""",
-
-    // clone/source content derives from orders (logical truth); the
-    // file accounting and the carried-stats pruning recompute from the
-    // raw files of BOTH table roots
-    "q344_tx_clone" ->
-      """WITH base AS (
-           SELECT o_orderkey AS k, o_totalprice AS p FROM orders WHERE o_orderkey % 2 = 0),
-         cl AS (SELECT k, p FROM base
-                UNION ALL SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 4 = 1),
-         sr AS (SELECT k, p FROM base
-                UNION ALL SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 4 = 3),
-         fstats AS (
-           SELECT filename, MIN(o_orderkey) AS mn, MAX(o_orderkey) AS mx
-           FROM read_parquet(['/tmp/graft_txcl_src___SFTAG__/data/v1_*.parquet',
-                              '/tmp/graft_txcl_dst___SFTAG__/data/v2_*.parquet'],
-                             filename=true)
-           GROUP BY 1)
-         SELECT 'table' AS section, 'clone' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) AS sum_price FROM cl
-         UNION ALL SELECT 'table', 'source', COUNT(*),
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) FROM sr
-         UNION ALL SELECT 'table', 'clone_range', COUNT(*),
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) FROM cl WHERE k BETWEEN 1 AND 300
-         UNION ALL SELECT 'meta', 'borrowed_files',
-           (SELECT COUNT(DISTINCT filename) FROM fstats
-            WHERE filename LIKE '%graft_txcl_src%'), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'owned_files',
-           (SELECT COUNT(DISTINCT filename) FROM fstats
-            WHERE filename LIKE '%graft_txcl_dst%'), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'kept_files',
-           (SELECT COUNT(*) FROM fstats WHERE NOT (mx < 1 OR mn > 300)),
-           CAST(NULL AS DOUBLE)""",
-
-    // both sections — the manifest-answered count and the full scan —
-    // must equal the logical truth from orders
-    "q345_tx_meta_count" ->
-      """WITH live AS (
-           SELECT o_orderpriority AS p FROM orders
-           WHERE NOT (o_orderkey BETWEEN 1 AND 400)),
-         byp AS (SELECT p, COUNT(*) AS n FROM live GROUP BY 1)
-         SELECT 'meta' AS section, p AS o_orderpriority, n AS n_rows FROM byp
-         UNION ALL SELECT 'meta', '*', (SELECT COUNT(*) FROM live)
-         UNION ALL SELECT 'scan', p, n FROM byp""",
-
-    "q346_tx_append_unique" ->
-      """WITH d AS (
-           SELECT doc_id, source, n_chars FROM documents WHERE doc_id % 3 IN (0, 1))
-         SELECT 'content' AS section, source AS label, COUNT(*) AS n_rows,
-           CAST(SUM(n_chars) AS DOUBLE) AS sum_chars FROM d GROUP BY 2
-         UNION ALL SELECT 'meta', 'inserted_b1',
-           (SELECT COUNT(*) FROM documents WHERE doc_id % 3 = 1), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'inserted_b2', CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'noop_kept_version', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'meta_count',
-           (SELECT COUNT(*) FROM d), CAST(NULL AS DOUBLE)""",
-
-    // mirrors Rolling.pageHinkley: quantized daily means, dev vs the
-    // running mean re-quantized before the integer prefix sum
-    "q347_page_hinkley" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day, event_type,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         daily AS (
-           SELECT day, event_type, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS m
-           FROM e GROUP BY 1, 2),
-         q AS (SELECT day, event_type,
-             CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS v FROM daily),
-         w1 AS (SELECT event_type, day, v,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i,
-             SUM(v) OVER (PARTITION BY event_type ORDER BY day) AS cum
-           FROM q),
-         w2 AS (SELECT event_type, day,
-             CAST(floor((CAST(i * v - cum AS DOUBLE)
-               / (CAST(i AS DOUBLE) * 1000000.0) - 0.001) * 1000000 + 0.5)
-               AS BIGINT) AS devq
-           FROM w1),
-         w3 AS (SELECT event_type, day,
-             SUM(devq) OVER (PARTITION BY event_type ORDER BY day) AS mm
-           FROM w2),
-         w4 AS (SELECT event_type,
-             mm - LEAST(CAST(0 AS BIGINT),
-               MIN(mm) OVER (PARTITION BY event_type ORDER BY day)) AS ph
-           FROM w3)
-         SELECT event_type, COUNT(*) AS n_days,
-           CAST(SUM(CASE WHEN ph > 50000 THEN 1 ELSE 0 END) AS BIGINT) AS n_drift,
-           round(CAST(MAX(ph) AS DOUBLE) / 1000000.0, 6) AS max_ph
-         FROM w4 GROUP BY 1""",
-
-    // mirrors NaiveBayes.trainScoreConfusion: Laplace-1 over the train
-    // vocabulary, quantized log-probs, integer score sums, label-asc
-    // tie-break
-    "q348_naive_bayes" ->
-      """WITH tr AS (
-           SELECT lang, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-           FROM documents WHERE doc_id % 5 != 0),
-         trt AS (SELECT lang, tok FROM tr WHERE length(tok) > 0),
-         cnt AS (SELECT lang, tok, COUNT(*) AS c FROM trt GROUP BY 1, 2),
-         tot AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS t FROM cnt GROUP BY 1),
-         voc AS (SELECT CAST(COUNT(DISTINCT tok) AS DOUBLE) AS v FROM cnt),
-         model AS (
-           SELECT lang, tok, CAST(floor(
-               ln((c + 1.0) / (CAST(t AS DOUBLE) + v)) * 1000000 + 0.5) AS BIGINT) AS lpq
-           FROM cnt JOIN tot USING (lang), voc),
-         unseen AS (
-           SELECT lang, CAST(floor(
-               ln(1.0 / (CAST(t AS DOUBLE) + v)) * 1000000 + 0.5) AS BIGINT) AS uq
-           FROM tot, voc),
-         ntr AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n
-           FROM documents WHERE doc_id % 5 != 0),
-         pri AS (SELECT lang, CAST(floor(
-               ln(CAST(COUNT(*) AS DOUBLE) / (SELECT n FROM ntr)) * 1000000 + 0.5)
-               AS BIGINT) AS pq
-           FROM documents WHERE doc_id % 5 != 0 GROUP BY 1),
-         te0 AS (
-           SELECT doc_id, lang AS true_lang,
-             unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-           FROM documents WHERE doc_id % 5 = 0),
-         tet AS (SELECT doc_id, true_lang, tok, COUNT(*) AS n
-           FROM te0 WHERE length(tok) > 0 GROUP BY 1, 2, 3),
-         sc AS (
-           SELECT tet.doc_id, tet.true_lang, u.lang,
-             CAST(SUM(n * COALESCE(m.lpq, u.uq)) AS BIGINT) AS sq
-           FROM tet CROSS JOIN unseen u
-           LEFT JOIN model m ON m.lang = u.lang AND m.tok = tet.tok
-           GROUP BY 1, 2, 3),
-         al AS (
-           SELECT d.doc_id, d.lang AS true_lang, u.lang,
-             COALESCE(sc.sq, 0) + pri.pq AS score
-           FROM (SELECT doc_id, lang FROM documents WHERE doc_id % 5 = 0) d
-           CROSS JOIN (SELECT lang FROM unseen) u
-           LEFT JOIN sc ON sc.doc_id = d.doc_id AND sc.lang = u.lang
-           JOIN pri ON pri.lang = u.lang),
-         pred AS (
-           SELECT doc_id, true_lang, lang,
-             ROW_NUMBER() OVER (PARTITION BY doc_id
-               ORDER BY score DESC, lang ASC) AS rn
-           FROM al)
-         SELECT true_lang AS label_true, lang AS label_pred, COUNT(*) AS n_docs
-         FROM pred WHERE rn = 1 GROUP BY 1, 2""",
-
-    // mirrors Profile.quantileNormalize: ntile over (value, id),
-    // re-quantized bin means, bins-sized reference
-    "q349_quantile_norm" ->
-      """WITH e AS (
-           SELECT event_type, value, event_id,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         b AS (SELECT event_type, vq,
-             NTILE(20) OVER (PARTITION BY event_type ORDER BY value, event_id) AS bin
-           FROM e),
-         cells AS (SELECT event_type, bin, SUM(CAST(vq AS HUGEINT)) AS s,
-             COUNT(*) AS n FROM b GROUP BY 1, 2),
-         cm AS (SELECT event_type, bin, n,
-             CAST(floor(CAST(s AS DOUBLE) / n + 0.5) AS BIGINT) AS mq FROM cells),
-         ref AS (SELECT bin, SUM(CAST(mq AS HUGEINT)) AS rs, COUNT(*) AS rn
-           FROM cm GROUP BY 1)
-         SELECT event_type, CAST(cm.bin AS INT) AS bin, n,
-           round(CAST(mq AS DOUBLE) / 1000000.0, 6) AS orig_mean,
-           round(CAST(rs AS DOUBLE) / rn / 1000000.0, 6) AS norm_value
-         FROM cm JOIN ref ON cm.bin = ref.bin""",
-
-    "q350_mcnemar" ->
-      """WITH per AS (
-           SELECT user_id,
-             MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS a,
-             MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
-           FROM events GROUP BY 1),
-         c AS (SELECT
-             CAST(SUM(CASE WHEN a = 0 AND b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n00,
-             CAST(SUM(CASE WHEN a = 0 AND b = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n01,
-             CAST(SUM(CASE WHEN a = 1 AND b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n10,
-             CAST(SUM(CASE WHEN a = 1 AND b = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n11
-           FROM per)
-         SELECT n00, n01, n10, n11,
-           CASE WHEN n01 + n10 > 0 THEN round(
-             CAST((abs(n01 - n10) - 1) * (abs(n01 - n10) - 1) AS DOUBLE)
-               / CAST(n01 + n10 AS DOUBLE), 9) END AS chi2
-         FROM c""",
-
-    // mirrors Eval.ipwAte: stratified propensities, quantized weighted
-    // contributions, positivity-violating strata excluded
-    "q351_ipw_ate" ->
-      """WITH j AS (
-           SELECT c_mktsegment AS s,
-             o_orderpriority IN ('1-URGENT', '2-HIGH') AS t,
-             CAST(o_totalprice AS DOUBLE) AS y
-           FROM orders JOIN customer ON o_custkey = c_custkey),
-         st AS (SELECT s, COUNT(*) AS n,
-             CAST(SUM(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS nt
-           FROM j GROUP BY 1),
-         keep AS (SELECT s, CAST(nt AS DOUBLE) / CAST(n AS DOUBLE) AS e
-           FROM st WHERE nt > 0 AND nt < n),
-         r AS (SELECT j.s, j.t, CAST(floor(
-             (CASE WHEN t THEN y / e ELSE -y / (1.0 - e) END) * 1000000 + 0.5)
-             AS BIGINT) AS wq
-           FROM j JOIN keep USING (s))
-         SELECT s AS stratum, COUNT(*) AS n,
-           CAST(SUM(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS n_treated,
-           round(CAST(SUM(CAST(wq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 9) AS ate
-         FROM r GROUP BY 1
-         UNION ALL SELECT '_ate', COUNT(*),
-           CAST(SUM(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT),
-           round(CAST(SUM(CAST(wq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 9)
-         FROM r
-         UNION ALL SELECT '_dropped',
-           CAST(COALESCE((SELECT SUM(n) FROM st WHERE NOT (nt > 0 AND nt < n)), 0) AS BIGINT),
-           CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    // mirrors Eval.permutationTestDiff: md5 relabelings, quantized
-    // sums, identically-shaped mean differences
-    "q352_permutation_test" ->
-      """WITH two AS (
-           SELECT CAST(event_id AS VARCHAR) AS id, event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events WHERE event_type IN ('click', 'view')),
-         obs AS (SELECT
-             CAST(SUM(CASE WHEN g = 'click' THEN CAST(vq AS HUGEINT) ELSE 0 END) AS DOUBLE)
-               / CAST(SUM(CASE WHEN g = 'click' THEN 1 ELSE 0 END) AS DOUBLE)
-             - CAST(SUM(CASE WHEN g != 'click' THEN CAST(vq AS HUGEINT) ELSE 0 END) AS DOUBLE)
-               / CAST(SUM(CASE WHEN g != 'click' THEN 1 ELSE 0 END) AS DOUBLE) AS d
-           FROM two),
-         ex AS (SELECT two.vq,
-             substr(md5(CAST(bb.b AS VARCHAR) || ' ' || two.id), 1, 1) < '8' AS side,
-             bb.b
-           FROM two CROSS JOIN (SELECT unnest(generate_series(0, 99)) AS b) bb),
-         perms AS (SELECT b,
-             CAST(SUM(CASE WHEN side THEN CAST(vq AS HUGEINT) ELSE 0 END) AS DOUBLE)
-               / CAST(SUM(CASE WHEN side THEN 1 ELSE 0 END) AS DOUBLE)
-             - CAST(SUM(CASE WHEN NOT side THEN CAST(vq AS HUGEINT) ELSE 0 END) AS DOUBLE)
-               / CAST(SUM(CASE WHEN NOT side THEN 1 ELSE 0 END) AS DOUBLE) AS d
-           FROM ex GROUP BY 1),
-         ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM perms, obs
-           WHERE abs(perms.d) >= abs(obs.d))
-         SELECT round((SELECT d FROM obs) / 1000000.0, 9) AS observed_diff,
-           CAST(100 AS BIGINT) AS n_reps, (SELECT n FROM ne) AS n_extreme,
-           round((1.0 + (SELECT n FROM ne)) / 101.0, 9) AS p_value""",
-
-    // mirrors Profile.olsInfluence over the daily-mean series: exact
-    // integer moments, quantized SSE, Cook's D ranked on its rounded value
-    "q353_ols_influence" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         daily AS (
-           SELECT day, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS m
-           FROM e GROUP BY 1),
-         p AS (SELECT day AS id,
-             CAST(floor(CAST(day AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS x,
-             CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS y
-           FROM daily),
-         mo AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nd,
-             CAST(SUM(CAST(x AS HUGEINT)) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS HUGEINT)) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(x AS HUGEINT) * y) AS DOUBLE) AS sxy
-           FROM p),
-         c2 AS (SELECT nd, sx, sy, sxx - sx * sx / nd AS sxxc,
-             (sxy - sx * sy / nd) / (sxx - sx * sx / nd) AS slope
-           FROM mo),
-         c3 AS (SELECT nd, sx, sxxc, slope, (sy - slope * sx) / nd AS icept FROM c2),
-         r AS (SELECT id, x,
-             (CAST(y AS DOUBLE) - icept - slope * CAST(x AS DOUBLE)) / 1000000.0 AS e,
-             1.0 / nd + (CAST(x AS DOUBLE) - sx / nd) * (CAST(x AS DOUBLE) - sx / nd)
-               / sxxc AS h
-           FROM p, c3),
-         r2 AS (SELECT id, e, h,
-             CAST(floor(e * e * 1000000 + 0.5) AS BIGINT) AS e2q FROM r),
-         ss AS (SELECT CAST(SUM(CAST(e2q AS HUGEINT)) AS DOUBLE) / 1000000.0
-             / ((SELECT nd FROM c3) - 2.0) AS s2 FROM r2),
-         f AS (SELECT id, round(e, 6) AS residual, round(h, 9) AS leverage,
-             round(e * e * h / ((2.0 * s2) * (1.0 - h) * (1.0 - h)), 9) AS cooks_d
-           FROM r2, ss),
-         rk AS (SELECT id, residual, leverage, cooks_d,
-             CAST(ROW_NUMBER() OVER (ORDER BY cooks_d DESC, id) AS INT) AS rank
-           FROM f)
-         SELECT id AS day, rank, residual, leverage, cooks_d
-         FROM rk WHERE rank <= 15""",
-
-    // mirrors Profile.partialCorr: exact quantized second moments, one
-    // mirrored double per correlation
-    "q354_partial_corr" ->
-      """WITH q AS (SELECT
-           CAST(floor(CAST(l_quantity AS DOUBLE) * 100 + 0.5) AS HUGEINT) AS x,
-           CAST(floor(CAST(l_extendedprice AS DOUBLE) * 100 + 0.5) AS HUGEINT) AS y,
-           CAST(floor(CAST(l_discount AS DOUBLE) * 100 + 0.5) AS HUGEINT) AS z
-           FROM lineitem),
-         mo AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-             CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-             CAST(SUM(z) AS DOUBLE) AS sz,
-             CAST(SUM(x * x) AS DOUBLE) AS sxx, CAST(SUM(y * y) AS DOUBLE) AS syy,
-             CAST(SUM(z * z) AS DOUBLE) AS szz,
-             CAST(SUM(x * y) AS DOUBLE) AS sxy, CAST(SUM(x * z) AS DOUBLE) AS sxz,
-             CAST(SUM(y * z) AS DOUBLE) AS syz
-           FROM q),
-         r AS (SELECT
-             (n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)) AS rxy,
-             (n * sxz - sx * sz) / sqrt((n * sxx - sx * sx) * (n * szz - sz * sz)) AS rxz,
-             (n * syz - sy * sz) / sqrt((n * syy - sy * sy) * (n * szz - sz * sz)) AS ryz
-           FROM mo)
-         SELECT 'l_quantity' AS a, 'l_extendedprice' AS b, 'l_discount' AS controlling,
-           round((rxy - rxz * ryz) / sqrt((1 - rxz * rxz) * (1 - ryz * ryz)), 9) AS partial_r,
-           round(rxy, 9) AS pearson_r FROM r
-         UNION ALL SELECT 'l_quantity', 'l_discount', 'l_extendedprice',
-           round((rxz - rxy * ryz) / sqrt((1 - rxy * rxy) * (1 - ryz * ryz)), 9),
-           round(rxz, 9) FROM r
-         UNION ALL SELECT 'l_extendedprice', 'l_discount', 'l_quantity',
-           round((ryz - rxy * rxz) / sqrt((1 - rxy * rxy) * (1 - rxz * rxz)), 9),
-           round(ryz, 9) FROM r""",
-
-    // mirrors Eval.vMeasure: DECIMAL-quantized p·ln p terms, entropy
-    // ratios in identically-shaped doubles
-    "q355_v_measure" ->
-      """WITH cells AS (SELECT lang AS c, source AS k, COUNT(*) AS cnt
-           FROM documents GROUP BY 1, 2),
-         nn AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS n FROM cells),
-         hc AS (SELECT CAST(SUM(CAST(
-             -(CAST(m AS DOUBLE) / n) * ln(CAST(m AS DOUBLE) / n)
-             AS DECIMAL(20,9))) AS DOUBLE) AS h
-           FROM (SELECT c, SUM(cnt) AS m FROM cells GROUP BY 1), nn),
-         hk AS (SELECT CAST(SUM(CAST(
-             -(CAST(m AS DOUBLE) / n) * ln(CAST(m AS DOUBLE) / n)
-             AS DECIMAL(20,9))) AS DOUBLE) AS h
-           FROM (SELECT k, SUM(cnt) AS m FROM cells GROUP BY 1), nn),
-         hck AS (SELECT CAST(SUM(CAST(
-             -(CAST(cnt AS DOUBLE) / n) * ln(CAST(cnt AS DOUBLE) / CAST(m AS DOUBLE))
-             AS DECIMAL(20,9))) AS DOUBLE) AS h
-           FROM cells JOIN (SELECT k, SUM(cnt) AS m FROM cells GROUP BY 1) mk
-             USING (k), nn),
-         hkc AS (SELECT CAST(SUM(CAST(
-             -(CAST(cnt AS DOUBLE) / n) * ln(CAST(cnt AS DOUBLE) / CAST(m AS DOUBLE))
-             AS DECIMAL(20,9))) AS DOUBLE) AS h
-           FROM cells JOIN (SELECT c, SUM(cnt) AS m FROM cells GROUP BY 1) mc
-             USING (c), nn),
-         v AS (SELECT hc.h AS hc, hk.h AS hk, hck.h AS hck, hkc.h AS hkc,
-             CASE WHEN hc.h = 0 THEN 1.0 ELSE 1.0 - hck.h / hc.h END AS hom,
-             CASE WHEN hk.h = 0 THEN 1.0 ELSE 1.0 - hkc.h / hk.h END AS com
-           FROM hc, hk, hck, hkc)
-         SELECT round(hc, 9) AS h_class, round(hk, 9) AS h_cluster,
-           round(hck, 9) AS h_class_given_cluster,
-           round(hkc, 9) AS h_cluster_given_class,
-           round(hom, 9) AS homogeneity, round(com, 9) AS completeness,
-           round(CASE WHEN hom + com = 0 THEN 0.0
-             ELSE 2.0 * hom * com / (hom + com) END, 9) AS v_measure
-         FROM v""",
-
-    // mirrors TermStats.qlDirichletRank: q161's tokenizer, Dirichlet
-    // smoothing over the collection model, DECIMAL-quantized terms
-    "q356_ql_dirichlet" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-           FROM documents),
-         tot AS (SELECT CAST(SUM(len(w)) AS DOUBLE) AS nt FROM toks),
-         tf0 AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term
-           FROM toks),
-         tfc AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM tf0
-           WHERE term IN ('join', 'hash', 'scan') GROUP BY 1, 2, 3),
-         cf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS cf FROM tfc GROUP BY 1),
-         cand AS (SELECT DISTINCT doc_id, dl FROM tfc),
-         sc AS (SELECT cand.doc_id,
-             CAST(ln((COALESCE(tfc.tf, 0) + 2000.0 * CAST(cf.cf AS DOUBLE)
-                 / (SELECT nt FROM tot)) / (cand.dl + 2000.0))
-               AS DECIMAL(20,9)) AS c,
-             CASE WHEN COALESCE(tfc.tf, 0) > 0 THEN 1 ELSE 0 END AS hit
-           FROM cand CROSS JOIN cf
-           LEFT JOIN tfc ON tfc.doc_id = cand.doc_id AND tfc.term = cf.term),
-         agg AS (SELECT doc_id, SUM(c) AS score,
-             CAST(SUM(hit) AS BIGINT) AS n_hits FROM sc GROUP BY 1),
-         rk AS (SELECT doc_id, score, n_hits,
-             CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank
-           FROM agg)
-         SELECT doc_id, ROUND(CAST(score AS DOUBLE), 6) AS score, n_hits, rank
-         FROM rk WHERE rank <= 10""",
-
-    "q357_kendall_tau" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day, event_type,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events WHERE event_type IN ('click', 'view')),
-         daily AS (
-           SELECT day,
-             CASE WHEN SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) > 0
-               THEN round(CAST(SUM(CASE WHEN event_type = 'click'
-                     THEN CAST(vq AS HUGEINT) ELSE 0 END) AS DOUBLE)
-                 / CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS DOUBLE)
-                 / 1000000.0, 6) END AS cm,
-             CASE WHEN SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) > 0
-               THEN round(CAST(SUM(CASE WHEN event_type = 'view'
-                     THEN CAST(vq AS HUGEINT) ELSE 0 END) AS DOUBLE)
-                 / CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS DOUBLE)
-                 / 1000000.0, 6) END AS vm
-           FROM e GROUP BY 1),
-         b AS (
-           SELECT day AS o, CAST(floor(cm * 1000000 + 0.5) AS BIGINT) AS x,
-             CAST(floor(vm * 1000000 + 0.5) AS BIGINT) AS y
-           FROM daily WHERE cm IS NOT NULL AND vm IS NOT NULL),
-         pairs AS (
-           SELECT SUM(CASE WHEN (b2.x > b1.x AND b2.y > b1.y)
-                             OR (b2.x < b1.x AND b2.y < b1.y) THEN 1 ELSE 0 END) AS c,
-             SUM(CASE WHEN (b2.x > b1.x AND b2.y < b1.y)
-                        OR (b2.x < b1.x AND b2.y > b1.y) THEN 1 ELSE 0 END) AS d
-           FROM b b1 JOIN b b2 ON b1.o < b2.o),
-         tx AS (SELECT COALESCE(SUM((t * (t - 1)) // 2), 0) AS n1, SUM(t) AS n
-           FROM (SELECT x, COUNT(*) AS t FROM b GROUP BY 1)),
-         ty AS (SELECT COALESCE(SUM((t * (t - 1)) // 2), 0) AS n2
-           FROM (SELECT y, COUNT(*) AS t FROM b GROUP BY 1)),
-         f AS (SELECT n, c, d, n1, n2, (n * (n - 1)) // 2 AS n0 FROM pairs, tx, ty)
-         SELECT CAST(n AS BIGINT) AS n, CAST(c AS BIGINT) AS concordant,
-           CAST(d AS BIGINT) AS discordant, CAST(n1 AS BIGINT) AS ties_x,
-           CAST(n2 AS BIGINT) AS ties_y,
-           CASE WHEN n0 > n1 AND n0 > n2 THEN
-             round((CAST(c AS DOUBLE) - CAST(d AS DOUBLE))
-               / sqrt(CAST(n0 - n1 AS DOUBLE) * CAST(n0 - n2 AS DOUBLE)), 9)
-           END AS tau_b
-         FROM f""",
-
-    "q358_cochran_q" ->
-      """WITH per AS (
-           SELECT user_id,
-             MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS tc,
-             MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS tv,
-             MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS tp
-           FROM events GROUP BY 1),
-         m AS (
-           SELECT COUNT(*) AS n_blocks, SUM(tc) AS t1, SUM(tv) AS t2,
-             SUM(tp) AS t3, SUM(tc + tv + tp) AS bsum,
-             SUM((tc + tv + tp) * (tc + tv + tp)) AS b2sum
-           FROM per)
-         SELECT n_blocks, CAST(3 AS BIGINT) AS k, CAST(2 AS BIGINT) AS df,
-           CASE WHEN 3 * bsum - b2sum > 0 THEN
-             round(CAST(2 * (3 * (t1 * t1 + t2 * t2 + t3 * t3) - bsum * bsum)
-                 AS DOUBLE) / CAST(3 * bsum - b2sum AS DOUBLE), 9)
-           END AS q_stat
-         FROM m""",
-
-    "q359_cohen_kappa" ->
-      """WITH r AS (
-           SELECT least(length(text) // 400, 4) AS a,
-             least(len(string_split_regex(lower(trim(text)), '\s+')) // 80, 4) AS b
-           FROM documents),
-         cells AS (SELECT a, b, COUNT(*) AS n FROM r GROUP BY 1, 2),
-         nn AS (SELECT SUM(n) AS n FROM cells),
-         obs AS (SELECT SUM((a - b) * (a - b) * n) AS wo FROM cells),
-         ra AS (SELECT a, SUM(n) AS ra FROM cells GROUP BY 1),
-         cb AS (SELECT b, SUM(n) AS cb FROM cells GROUP BY 1),
-         ex AS (SELECT SUM(CAST((ra.a - cb.b) * (ra.a - cb.b) AS HUGEINT)
-               * ra.ra * cb.cb) AS we
-           FROM ra CROSS JOIN cb)
-         SELECT CAST(nn.n AS BIGINT) AS n, CAST(obs.wo AS BIGINT) AS w_observed,
-           CASE WHEN ex.we <> 0 THEN
-             round(1.0 - CAST(nn.n AS DOUBLE) * CAST(obs.wo AS DOUBLE)
-               / CAST(ex.we AS DOUBLE), 9)
-           END AS kappa_w
-         FROM nn, obs, ex""",
-
-    "q360_rbo" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-           FROM documents),
-         tot AS (
-           SELECT CAST(SUM(len(w)) AS BIGINT) AS nt, COUNT(*) AS nd FROM toks),
-         tf0 AS (
-           SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term
-           FROM toks),
-         tfc AS (
-           SELECT doc_id, dl, term, COUNT(*) AS tf
-           FROM tf0 WHERE term IN ('join', 'hash', 'scan') GROUP BY 1, 2, 3),
-         dft AS (
-           SELECT term,
-             CAST(ln((CAST((SELECT nd FROM tot) AS DOUBLE) - COUNT(*) + 0.5)
-               / (COUNT(*) + 0.5) + 1.0) AS DECIMAL(20,6)) AS idf
-           FROM tfc GROUP BY 1),
-         bsc AS (
-           SELECT tfc.doc_id,
-             CAST(CAST(idf AS DOUBLE) * (tf * 2.5)
-               / (tf + 1.5 * (0.25 + 0.75 * dl
-                   / (CAST((SELECT nt FROM tot) AS DOUBLE) / CAST((SELECT nd FROM tot) AS DOUBLE))))
-               AS DECIMAL(20,9)) AS c
-           FROM tfc JOIN dft ON tfc.term = dft.term),
-         lex AS (
-           SELECT doc_id, rank FROM (
-             SELECT doc_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY SUM(c) DESC, doc_id) AS INT) AS rank
-             FROM bsc GROUP BY doc_id)
-           WHERE rank <= 10),
-         cf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS cf FROM tfc GROUP BY 1),
-         cand AS (SELECT DISTINCT doc_id, dl FROM tfc),
-         qsc AS (
-           SELECT cand.doc_id,
-             CAST(ln((COALESCE(tfc.tf, 0) + 2000.0 * CAST(cf.cf AS DOUBLE)
-                 / CAST((SELECT nt FROM tot) AS DOUBLE)) / (cand.dl + 2000.0))
-               AS DECIMAL(20,9)) AS c
-           FROM cand CROSS JOIN cf
-           LEFT JOIN tfc ON tfc.doc_id = cand.doc_id AND tfc.term = cf.term),
-         ql AS (
-           SELECT doc_id, rank FROM (
-             SELECT doc_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY SUM(c) DESC, doc_id) AS INT) AS rank
-             FROM qsc GROUP BY doc_id)
-           WHERE rank <= 10),
-         ov AS (
-           SELECT greatest(l.rank, q.rank) AS m
-           FROM lex l JOIN ql q USING (doc_id)),
-         dep AS (SELECT unnest(generate_series(1, 10)) AS d),
-         xd AS (
-           SELECT dep.d, COUNT(ov.m) AS x
-           FROM dep LEFT JOIN ov ON ov.m <= dep.d GROUP BY 1),
-         terms AS (
-           SELECT d, x,
-             CAST(((1.0 - 0.9) / 0.9) * CAST(x AS DOUBLE) / CAST(d AS DOUBLE)
-               * power(0.9, CAST(d AS DOUBLE)) AS DECIMAL(20,9)) AS t
-           FROM xd),
-         agg AS (
-           SELECT MAX(CASE WHEN d = 10 THEN x END) AS xk, SUM(t) AS s FROM terms)
-         SELECT CAST(10 AS INT) AS depth, round(0.9, 6) AS p,
-           CAST(xk AS BIGINT) AS overlap_at_k,
-           round(CAST(s AS DOUBLE)
-             + CAST(xk AS DOUBLE) / 10.0 * power(0.9, 10.0), 9) AS rbo_ext
-         FROM agg""",
-
-    "q361_sup_chow" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         daily AS (
-           SELECT day, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS m
-           FROM e GROUP BY 1),
-         b AS (SELECT day AS o, CAST(day AS BIGINT) AS x,
-             CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS y
-           FROM daily),
-         tot AS (
-           SELECT COUNT(*) AS tn, SUM(CAST(x AS HUGEINT)) AS tsx,
-             SUM(CAST(y AS HUGEINT)) AS tsy,
-             SUM(CAST(x AS HUGEINT) * x) AS tsxx,
-             SUM(CAST(x AS HUGEINT) * y) AS tsxy,
-             SUM(CAST(y AS HUGEINT) * y) AS tsyy
-           FROM b),
-         pre AS (
-           SELECT o, COUNT(*) OVER w AS pn,
-             SUM(CAST(x AS HUGEINT)) OVER w AS psx,
-             SUM(CAST(y AS HUGEINT)) OVER w AS psy,
-             SUM(CAST(x AS HUGEINT) * x) OVER w AS psxx,
-             SUM(CAST(x AS HUGEINT) * y) OVER w AS psxy,
-             SUM(CAST(y AS HUGEINT) * y) OVER w AS psyy
-           FROM b
-           WINDOW w AS (ORDER BY o ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         sc AS (
-           SELECT o, pn, psx, psy, psxx, psxy, tn, tsx, tsy, tsxx, tsxy,
-             CASE WHEN CAST(psxx AS DOUBLE) - CAST(psx AS DOUBLE) * CAST(psx AS DOUBLE) / CAST(pn AS DOUBLE) > 0.0
-               THEN (CAST(psyy AS DOUBLE) - CAST(psy AS DOUBLE) * CAST(psy AS DOUBLE) / CAST(pn AS DOUBLE))
-                 - (CAST(psxy AS DOUBLE) - CAST(psx AS DOUBLE) * CAST(psy AS DOUBLE) / CAST(pn AS DOUBLE))
-                   * (CAST(psxy AS DOUBLE) - CAST(psx AS DOUBLE) * CAST(psy AS DOUBLE) / CAST(pn AS DOUBLE))
-                   / (CAST(psxx AS DOUBLE) - CAST(psx AS DOUBLE) * CAST(psx AS DOUBLE) / CAST(pn AS DOUBLE))
-               ELSE CAST(psyy AS DOUBLE) - CAST(psy AS DOUBLE) * CAST(psy AS DOUBLE) / CAST(pn AS DOUBLE)
-             END AS sse1,
-             CASE WHEN CAST(tsxx - psxx AS DOUBLE) - CAST(tsx - psx AS DOUBLE) * CAST(tsx - psx AS DOUBLE) / CAST(tn - pn AS DOUBLE) > 0.0
-               THEN (CAST(tsyy - psyy AS DOUBLE) - CAST(tsy - psy AS DOUBLE) * CAST(tsy - psy AS DOUBLE) / CAST(tn - pn AS DOUBLE))
-                 - (CAST(tsxy - psxy AS DOUBLE) - CAST(tsx - psx AS DOUBLE) * CAST(tsy - psy AS DOUBLE) / CAST(tn - pn AS DOUBLE))
-                   * (CAST(tsxy - psxy AS DOUBLE) - CAST(tsx - psx AS DOUBLE) * CAST(tsy - psy AS DOUBLE) / CAST(tn - pn AS DOUBLE))
-                   / (CAST(tsxx - psxx AS DOUBLE) - CAST(tsx - psx AS DOUBLE) * CAST(tsx - psx AS DOUBLE) / CAST(tn - pn AS DOUBLE))
-               ELSE CAST(tsyy - psyy AS DOUBLE) - CAST(tsy - psy AS DOUBLE) * CAST(tsy - psy AS DOUBLE) / CAST(tn - pn AS DOUBLE)
-             END AS sse2,
-             CASE WHEN CAST(tsxx AS DOUBLE) - CAST(tsx AS DOUBLE) * CAST(tsx AS DOUBLE) / CAST(tn AS DOUBLE) > 0.0
-               THEN (CAST(tsyy AS DOUBLE) - CAST(tsy AS DOUBLE) * CAST(tsy AS DOUBLE) / CAST(tn AS DOUBLE))
-                 - (CAST(tsxy AS DOUBLE) - CAST(tsx AS DOUBLE) * CAST(tsy AS DOUBLE) / CAST(tn AS DOUBLE))
-                   * (CAST(tsxy AS DOUBLE) - CAST(tsx AS DOUBLE) * CAST(tsy AS DOUBLE) / CAST(tn AS DOUBLE))
-                   / (CAST(tsxx AS DOUBLE) - CAST(tsx AS DOUBLE) * CAST(tsx AS DOUBLE) / CAST(tn AS DOUBLE))
-               ELSE CAST(tsyy AS DOUBLE) - CAST(tsy AS DOUBLE) * CAST(tsy AS DOUBLE) / CAST(tn AS DOUBLE)
-             END AS ssep
-           FROM pre CROSS JOIN tot
-           WHERE pn >= 5 AND tn - pn >= 5),
-         fs AS (
-           SELECT *,
-             CASE WHEN (sse1 + sse2) / (CAST(tn AS DOUBLE) - 4.0) > 0.0 THEN
-               ((ssep - sse1 - sse2) / 2.0)
-                 / ((sse1 + sse2) / (CAST(tn AS DOUBLE) - 4.0))
-             END AS f
-           FROM sc),
-         top AS (
-           SELECT * FROM fs WHERE f IS NOT NULL ORDER BY f DESC, o ASC LIMIT 1)
-         SELECT CAST(tn AS BIGINT) AS n, CAST(o AS BIGINT) AS break_at,
-           round(f, 6) AS f_stat,
-           round(CASE WHEN CAST(psxx AS DOUBLE) - CAST(psx AS DOUBLE) * CAST(psx AS DOUBLE) / CAST(pn AS DOUBLE) > 0.0
-             THEN (CAST(psxy AS DOUBLE) - CAST(psx AS DOUBLE) * CAST(psy AS DOUBLE) / CAST(pn AS DOUBLE))
-               / (CAST(psxx AS DOUBLE) - CAST(psx AS DOUBLE) * CAST(psx AS DOUBLE) / CAST(pn AS DOUBLE))
-             END / 1000000.0, 9) AS slope_pre,
-           round(CASE WHEN CAST(tsxx - psxx AS DOUBLE) - CAST(tsx - psx AS DOUBLE) * CAST(tsx - psx AS DOUBLE) / CAST(tn - pn AS DOUBLE) > 0.0
-             THEN (CAST(tsxy - psxy AS DOUBLE) - CAST(tsx - psx AS DOUBLE) * CAST(tsy - psy AS DOUBLE) / CAST(tn - pn AS DOUBLE))
-               / (CAST(tsxx - psxx AS DOUBLE) - CAST(tsx - psx AS DOUBLE) * CAST(tsx - psx AS DOUBLE) / CAST(tn - pn AS DOUBLE))
-             END / 1000000.0, 9) AS slope_post
-         FROM top""",
-
-    "q362_good_turing" ->
-      """WITH tf AS (
-           SELECT t, COUNT(*) AS r FROM (
-             SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY 1),
-         cells AS (SELECT r, COUNT(*) AS nr FROM tf GROUP BY 1),
-         fit AS (
-           SELECT COUNT(*) AS m,
-             SUM(CAST(ln(CAST(r AS DOUBLE)) AS DECIMAL(20,9))) AS su,
-             SUM(CAST(ln(CAST(nr AS DOUBLE)) AS DECIMAL(20,9))) AS sv,
-             SUM(CAST(CAST(ln(CAST(r AS DOUBLE)) AS DECIMAL(20,9))
-               * CAST(ln(CAST(nr AS DOUBLE)) AS DECIMAL(20,9)) AS DECIMAL(20,9))) AS suv,
-             SUM(CAST(CAST(ln(CAST(r AS DOUBLE)) AS DECIMAL(20,9))
-               * CAST(ln(CAST(r AS DOUBLE)) AS DECIMAL(20,9)) AS DECIMAL(20,9))) AS suu
-           FROM cells),
-         bfit AS (
-           SELECT (CAST(m AS DOUBLE) * CAST(suv AS DOUBLE)
-               - CAST(su AS DOUBLE) * CAST(sv AS DOUBLE))
-             / (CAST(m AS DOUBLE) * CAST(suu AS DOUBLE)
-               - CAST(su AS DOUBLE) * CAST(su AS DOUBLE)) AS b
-           FROM fit),
-         tots AS (
-           SELECT CAST(SUM(CAST(r AS HUGEINT) * nr) AS DOUBLE) AS nt,
-             COALESCE(MAX(CASE WHEN r = 1 THEN nr END), 0) AS n1
-           FROM cells),
-         seen AS (
-           SELECT CAST(r AS BIGINT) AS r, CAST(nr AS BIGINT) AS n_r,
-             round((b + 1.0) * ln(CAST(r AS DOUBLE) + 1.0)
-               - b * ln(CAST(r AS DOUBLE)), 9) AS log_r_star,
-             round((b + 1.0) * ln(CAST(r AS DOUBLE) + 1.0)
-               - b * ln(CAST(r AS DOUBLE))
-               - ln((SELECT nt FROM tots)), 9) AS log_p_r
-           FROM (SELECT * FROM cells ORDER BY r ASC LIMIT 15), bfit)
-         SELECT CAST(0 AS BIGINT) AS r, CAST(n1 AS BIGINT) AS n_r,
-           CAST(NULL AS DOUBLE) AS log_r_star,
-           CASE WHEN n1 > 0 THEN
-             round(ln(CAST(n1 AS DOUBLE)) - ln(nt), 9) END AS log_p_r
-         FROM tots
-         UNION ALL SELECT r, n_r, log_r_star, log_p_r FROM seen""",
-
-    "q365_calibration" ->
-      """WITH g AS (
-           SELECT value - floor(value) AS conf,
-             CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END AS y
-           FROM events),
-         cells AS (
-           SELECT least(CAST(floor(conf * 10) AS BIGINT), 9) AS b,
-             COUNT(*) AS n,
-             SUM(CAST(CAST(floor(conf * 1000000 + 0.5) AS BIGINT) AS HUGEINT)) AS ss,
-             SUM(y) AS np
-           FROM g GROUP BY 1),
-         pb AS (
-           SELECT b, n, np,
-             CAST(ss AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0 AS conf,
-             CAST(np AS DOUBLE) / CAST(n AS DOUBLE) AS acc
-           FROM cells),
-         pb2 AS (SELECT *, abs(acc - conf) AS gap FROM pb)
-         SELECT 'bin' AS section, CAST(b AS INT) AS bin, CAST(n AS BIGINT) AS n,
-           round(conf, 9) AS avg_conf, round(acc, 9) AS accuracy,
-           round(gap, 9) AS gap
-         FROM pb2
-         UNION ALL
-         SELECT 'total', CAST(NULL AS INT), CAST(SUM(n) AS BIGINT), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE),
-           round(CAST(SUM(CAST(CAST(n AS DOUBLE) * gap AS DECIMAL(20,9))) AS DOUBLE)
-             / CAST(SUM(n) AS DOUBLE), 9)
-         FROM pb2""",
-
-    "q366_odds_risk" ->
-      """WITH j AS (
-           SELECT c_mktsegment AS seg,
-             o_orderpriority IN ('1-URGENT', '2-HIGH') AS e,
-             o_totalprice > 150000.0 AS o
-           FROM orders JOIN customer ON o_custkey = c_custkey),
-         cells AS (
-           SELECT seg AS segment,
-             SUM(CASE WHEN e AND o THEN 1 ELSE 0 END) AS a,
-             SUM(CASE WHEN e AND NOT o THEN 1 ELSE 0 END) AS b,
-             SUM(CASE WHEN NOT e AND o THEN 1 ELSE 0 END) AS c,
-             SUM(CASE WHEN NOT e AND NOT o THEN 1 ELSE 0 END) AS d
-           FROM j GROUP BY 1)
-         SELECT segment, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
-           CAST(c AS BIGINT) AS c, CAST(d AS BIGINT) AS d,
-           CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-             round(CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-               / (CAST(b AS DOUBLE) * CAST(c AS DOUBLE)), 9) END AS odds_ratio,
-           CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-             round((CAST(a AS DOUBLE) / (CAST(a AS DOUBLE) + CAST(b AS DOUBLE)))
-               / (CAST(c AS DOUBLE) / (CAST(c AS DOUBLE) + CAST(d AS DOUBLE))), 9)
-           END AS risk_ratio,
-           CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-             round(ln(CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-                 / (CAST(b AS DOUBLE) * CAST(c AS DOUBLE)))
-               - 1.96 * sqrt(1.0 / CAST(a AS DOUBLE) + 1.0 / CAST(b AS DOUBLE)
-                 + 1.0 / CAST(c AS DOUBLE) + 1.0 / CAST(d AS DOUBLE)), 9)
-           END AS ln_or_lo,
-           CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-             round(ln(CAST(a AS DOUBLE) * CAST(d AS DOUBLE)
-                 / (CAST(b AS DOUBLE) * CAST(c AS DOUBLE)))
-               + 1.96 * sqrt(1.0 / CAST(a AS DOUBLE) + 1.0 / CAST(b AS DOUBLE)
-                 + 1.0 / CAST(c AS DOUBLE) + 1.0 / CAST(d AS DOUBLE)), 9)
-           END AS ln_or_hi
-         FROM cells""",
-
-    "q367_heaps_law" ->
-      """WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
-         cuts AS (
-           SELECT i, (SELECT m FROM mx) * i // 10 AS cut
-           FROM (SELECT unnest(generate_series(1, 10)) AS i)),
-         fd AS (
-           SELECT t, MIN(d) AS f FROM (
-             SELECT doc_id AS d,
-               unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY 1),
-         pd AS (
-           SELECT doc_id AS d,
-             CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS c
-           FROM documents),
-         pts AS (
-           SELECT cuts.i,
-             (SELECT COALESCE(SUM(c), 0) FROM pd WHERE pd.d <= cuts.cut) AS n,
-             (SELECT COUNT(*) FROM fd WHERE fd.f <= cuts.cut) AS v
-           FROM cuts),
-         pp AS (SELECT i, n, v FROM pts WHERE n > 0 AND v > 0),
-         fit AS (
-           SELECT COUNT(*) AS m,
-             SUM(CAST(ln(CAST(n AS DOUBLE)) AS DECIMAL(20,9))) AS su,
-             SUM(CAST(ln(CAST(v AS DOUBLE)) AS DECIMAL(20,9))) AS sv,
-             SUM(CAST(CAST(CAST(ln(CAST(n AS DOUBLE)) AS DECIMAL(20,9)) AS DOUBLE)
-               * CAST(CAST(ln(CAST(v AS DOUBLE)) AS DECIMAL(20,9)) AS DOUBLE)
-               AS DECIMAL(20,9))) AS suv,
-             SUM(CAST(CAST(CAST(ln(CAST(n AS DOUBLE)) AS DECIMAL(20,9)) AS DOUBLE)
-               * CAST(CAST(ln(CAST(n AS DOUBLE)) AS DECIMAL(20,9)) AS DOUBLE)
-               AS DECIMAL(20,9))) AS suu
-           FROM pp),
-         bf AS (
-           SELECT (CAST(m AS DOUBLE) * CAST(suv AS DOUBLE)
-               - CAST(su AS DOUBLE) * CAST(sv AS DOUBLE))
-             / (CAST(m AS DOUBLE) * CAST(suu AS DOUBLE)
-               - CAST(su AS DOUBLE) * CAST(su AS DOUBLE)) AS beta,
-             CAST(sv AS DOUBLE) AS svd, CAST(su AS DOUBLE) AS sud,
-             CAST(m AS DOUBLE) AS md
-           FROM fit)
-         SELECT CAST(i AS INT) AS point, CAST(n AS BIGINT) AS n_tokens,
-           CAST(v AS BIGINT) AS v_terms, round(beta, 9) + 0.0 AS beta,
-           round((svd - beta * sud) / md, 9) + 0.0 AS ln_k
-         FROM pp, bf""",
-
-    "q371_mmr" -> OracleGen.mmrSql(),
-
-    "q372_ktruss" -> OracleGen.kTrussSql(),
-
-    "q373_periodogram" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 3600000000 AS hr,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         hourly AS (
-           SELECT hr, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS m
-           FROM e GROUP BY 1),
-         b AS (SELECT hr AS t,
-             CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS vq FROM hourly),
-         mm AS (SELECT COUNT(*) AS n,
-             CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE) AS s FROM b),
-         pds AS (SELECT unnest([6, 8, 12, 24, 36, 48]) AS p),
-         cells AS (
-           SELECT p,
-             SUM(CAST(((CAST(vq AS DOUBLE) - (s / CAST(n AS DOUBLE))) / 1000000.0)
-               * CAST(CAST(cos((6.283185307179586 * CAST(t % p AS DOUBLE))
-                 / CAST(p AS DOUBLE)) AS DECIMAL(20,9)) AS DOUBLE)
-               AS DECIMAL(20,9))) AS c,
-             SUM(CAST(((CAST(vq AS DOUBLE) - (s / CAST(n AS DOUBLE))) / 1000000.0)
-               * CAST(CAST(sin((6.283185307179586 * CAST(t % p AS DOUBLE))
-                 / CAST(p AS DOUBLE)) AS DECIMAL(20,9)) AS DOUBLE)
-               AS DECIMAL(20,9))) AS sv
-           FROM b CROSS JOIN pds CROSS JOIN mm GROUP BY 1),
-         pw AS (
-           SELECT p AS period,
-             round(CAST(c AS DOUBLE) * CAST(c AS DOUBLE)
-               + CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE), 9) + 0.0 AS power
-           FROM cells)
-         SELECT CAST(period AS INT) AS period, power,
-           CAST(ROW_NUMBER() OVER (ORDER BY power DESC, period) AS INT) AS rank
-         FROM pw""",
-
-    "q368_krippendorff" ->
-      """WITH r AS (
-           SELECT CAST(user_id AS VARCHAR) || ':' ||
-               CAST(epoch_us(ts) // 86400000000 AS VARCHAR) AS u,
-             event_type AS v
-           FROM events),
-         mu AS (SELECT u, COUNT(*) AS m FROM r GROUP BY 1 HAVING COUNT(*) >= 2),
-         nuc AS (
-           SELECT r.u, r.v, COUNT(*) AS k, ANY_VALUE(mu.m) AS m
-           FROM r JOIN mu ON r.u = mu.u GROUP BY 1, 2),
-         dsum AS (
-           SELECT SUM(CAST(CAST(k AS DOUBLE) * CAST(m - k AS DOUBLE)
-             / CAST(m - 1 AS DOUBLE) AS DECIMAL(20,9))) AS do_sum
-           FROM nuc),
-         ncs AS (SELECT v, SUM(k) AS nc FROM nuc GROUP BY 1),
-         tot AS (
-           SELECT CAST(SUM(nc) AS BIGINT) AS n,
-             CAST(SUM(CAST(nc AS HUGEINT) * nc) AS DOUBLE) AS nc2
-           FROM ncs),
-         un AS (SELECT COUNT(*) AS units FROM mu)
-         SELECT CAST(units AS BIGINT) AS n_units, n AS n_ratings,
-           CASE WHEN CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - nc2 > 0.0 THEN
-             round(1.0 - (CAST(n AS DOUBLE) - 1.0) * CAST(do_sum AS DOUBLE)
-               / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - nc2), 9) + 0.0
-           END AS alpha
-         FROM un, tot, dsum""",
-
-    "q369_tx_replace_where" ->
-      """WITH after AS (
-           SELECT o_orderkey AS k, o_totalprice AS p, o_orderpriority AS pr
-           FROM orders
-           WHERE o_orderpriority <> '1-URGENT'
-              OR (o_orderpriority = '1-URGENT' AND o_orderkey % 2 = 0)),
-         nf AS (
-           SELECT COUNT(DISTINCT filename) AS files_before,
-             COUNT(DISTINCT CASE WHEN filename NOT LIKE '%1-URGENT%'
-               THEN filename END) AS carried
-           FROM read_parquet(
-             '/tmp/graft_txrw___SFTAG__/data/*/v1_*.parquet', filename=true))
-         SELECT 'part' AS section, pr AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM after GROUP BY 2
-         UNION ALL SELECT 'meta', 'version', CAST(2 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'carried_files',
-           CAST(carried AS BIGINT), CAST(NULL AS DOUBLE) FROM nf
-         UNION ALL SELECT 'meta', 'files_before',
-           CAST(files_before AS BIGINT), CAST(NULL AS DOUBLE) FROM nf""",
-
-    "q370_tx_null_skip" ->
-      """WITH o AS (
-           SELECT o_orderkey AS k,
-             CASE WHEN o_orderkey % 7 = 0 THEN NULL
-               ELSE o_totalprice END AS price
-           FROM orders)
-         SELECT 'read' AS section, 'is_null' AS label, COUNT(*) AS n_rows,
-           CAST(NULL AS DOUBLE) AS sum_price FROM o WHERE price IS NULL
-         UNION ALL SELECT 'read', 'not_null', COUNT(*),
-           CAST(SUM(CAST(price AS DECIMAL(18,4))) AS DOUBLE)
-         FROM o WHERE price IS NOT NULL
-         UNION ALL SELECT 'meta', 'files_total', CAST(2 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'kept_is_null', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'kept_not_null', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q363_tx_refs" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_totalprice AS p FROM orders)
-         SELECT 'table' AS section, 'main' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) AS sum_price FROM o
-         UNION ALL SELECT 'table', 'tag', COUNT(*),
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) FROM o WHERE k % 3 = 0
-         UNION ALL SELECT 'table', 'branch', COUNT(*),
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) FROM o
-         UNION ALL SELECT 'meta', 'ff_version', CAST(3 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'branch_base', CAST(2 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_refs', CAST(2 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'borrowed_files',
-           (SELECT COUNT(DISTINCT filename) FROM read_parquet(
-             '/tmp/graft_txrf___SFTAG__/_refs_branch/dev/data/v2_*.parquet',
-             filename=true)), CAST(NULL AS DOUBLE)""",
-
-    "q364_tx_ref_expire" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_totalprice AS p FROM orders)
-         SELECT 'table' AS section, 'tag_v3' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM o WHERE k % 13 IN (0, 1, 2)
-         UNION ALL SELECT 'table', 'tagged_head', COUNT(*),
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) FROM o
-         UNION ALL SELECT 'table', 'plain_head', COUNT(*),
-           CAST(SUM(CAST(p AS DECIMAL(18,4))) AS DOUBLE) FROM o
-         UNION ALL SELECT 'meta', 'n_expired_tagged', CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_expired_plain', CAST(9 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'tag_version', CAST(3 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q326_tx_backfill" ->
-      """SELECT CAST(1 AS INT) AS version, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM read_parquet('/tmp/graft_txan___SFTAG__/data/v1_*.parquet')
-         UNION ALL SELECT CAST(2 AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txan___SFTAG__/data/v2_*.parquet')
-         UNION ALL SELECT CAST(3 AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txan___SFTAG__/data/v3_*.parquet')
-         UNION ALL SELECT CAST(4 AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txan___SFTAG__/data/v4_*.parquet')
-         UNION ALL SELECT CAST(5 AS INT), COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM read_parquet('/tmp/graft_txan___SFTAG__/data/v5_*.parquet')
-         UNION ALL SELECT CAST(0 AS INT), CAST(3 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q319_cochran_armitage" ->
-      """WITH e AS (
-           SELECT (epoch_us(ts) // 3600000000) % 24 AS s,
-             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-           FROM events),
-         a AS (
-           SELECT COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS r,
-             SUM(CAST(s AS HUGEINT)) AS sn, SUM(CAST(s AS HUGEINT) * y) AS sr,
-             SUM(CAST(s AS HUGEINT) * s) AS ssn, COUNT(DISTINCT s) AS k
-           FROM e)
-         SELECT n, r, CAST(k AS INT) AS n_groups,
-           round(CAST(sr AS DOUBLE)
-             - CAST(r AS DOUBLE) / CAST(n AS DOUBLE) * CAST(sn AS DOUBLE), 9) AS t_stat,
-           round(CAST(r AS DOUBLE) / CAST(n AS DOUBLE)
-               * (1.0 - CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-               * (CAST(ssn AS DOUBLE)
-                 - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS var_t,
-           CASE WHEN r > 0 AND r < n AND k >= 2
-                 AND CAST(r AS DOUBLE) / CAST(n AS DOUBLE)
-                   * (1.0 - CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-                   * (CAST(ssn AS DOUBLE)
-                     - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE) / CAST(n AS DOUBLE)) > 0.0
-             THEN round((CAST(sr AS DOUBLE)
-                 - CAST(r AS DOUBLE) / CAST(n AS DOUBLE) * CAST(sn AS DOUBLE))
-               / sqrt(CAST(r AS DOUBLE) / CAST(n AS DOUBLE)
-                 * (1.0 - CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (CAST(ssn AS DOUBLE)
-                   - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE) / CAST(n AS DOUBLE))), 9)
-           END AS z
-         FROM a""",
-
-    "q320_bartlett" ->
-      """WITH e AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v
-           FROM events),
-         gs AS (
-           SELECT g, COUNT(*) AS ni,
-             SUM(CAST(v AS HUGEINT)) AS s1, SUM(CAST(v AS HUGEINT) * v) AS s2
-           FROM e GROUP BY 1 HAVING COUNT(*) >= 2),
-         terms AS (
-           SELECT ni,
-             CAST(CAST(s2 AS DOUBLE)
-               - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(ni AS DOUBLE)
-               AS DECIMAL(38,6)) AS ssdq,
-             CAST((CAST(ni AS DOUBLE) - 1.0)
-               * ln((CAST(s2 AS DOUBLE)
-                   - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(ni AS DOUBLE))
-                 / (CAST(ni AS DOUBLE) - 1.0) / (1000000.0 * 1000000.0))
-               AS DECIMAL(25,12)) AS lt,
-             CAST(1.0 / (CAST(ni AS DOUBLE) - 1.0) AS DECIMAL(25,12)) AS ci,
-             CASE WHEN (CAST(s2 AS DOUBLE)
-                 - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(ni AS DOUBLE))
-                 / (CAST(ni AS DOUBLE) - 1.0) / (1000000.0 * 1000000.0) <= 0.0
-               THEN 1 ELSE 0 END AS degen
-           FROM gs),
-         a AS (
-           SELECT COUNT(*) AS k, CAST(SUM(ni) AS BIGINT) AS n,
-             SUM(ssdq) AS ssdtot, SUM(lt) AS ltsum, SUM(ci) AS csum,
-             SUM(degen) AS ndegen
-           FROM terms)
-         SELECT CAST(k AS INT) AS k, n,
-           CASE WHEN k >= 2 AND ndegen = 0 THEN
-             round(((CAST(n AS DOUBLE) - CAST(k AS DOUBLE))
-                 * ln(CAST(ssdtot AS DOUBLE) / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE))
-                   / (1000000.0 * 1000000.0))
-               - CAST(ltsum AS DOUBLE))
-               / (1.0 + (CAST(csum AS DOUBLE)
-                   - 1.0 / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
-                 / (3.0 * (CAST(k AS DOUBLE) - 1.0))), 9)
-           END AS chi2_bartlett,
-           CAST(k - 1 AS INT) AS df
-         FROM a""",
-
-    "q318_tx_pipeline" ->
-      """WITH u AS (
-           SELECT o_orderkey, o_totalprice FROM orders
-           WHERE o_orderpriority IN ('1-URGENT', '2-HIGH', '3-MEDIUM')
-             AND o_orderkey % 2 = 0)
-         SELECT 'table' AS section, 'all' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM u
-         UNION ALL SELECT 'meta', 'n_versions', CAST(3 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'run1_applied', CAST(3 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'run2_applied', CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'run3_applied', CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)""",
-
-    "q317_friedman" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day, event_type,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         daily AS (
-           SELECT day, event_type, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS m
-           FROM e GROUP BY 1, 2),
-         q AS (SELECT day, event_type,
-             CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS v FROM daily),
-         kt AS (SELECT COUNT(DISTINCT event_type) AS k FROM q),
-         cb AS (SELECT day, COUNT(*) AS c FROM q GROUP BY 1),
-         f AS (SELECT q.* FROM q JOIN cb ON cb.day = q.day, kt WHERE cb.c = kt.k),
-         r AS (SELECT day, event_type,
-             2 * RANK() OVER (PARTITION BY day ORDER BY v)
-               + COUNT(*) OVER (PARTITION BY day, v) - 1 AS r2
-           FROM f),
-         pt AS (SELECT event_type AS treatment, COUNT(*) AS n_blocks,
-             CAST(SUM(r2) AS BIGINT) AS r2_sum FROM r GROUP BY 1),
-         sc AS (SELECT MAX(n_blocks) AS n, COUNT(*) AS kk,
-             SUM(CAST(r2_sum AS HUGEINT) * r2_sum) AS s2 FROM pt)
-         SELECT treatment, n_blocks, r2_sum,
-           round(CAST(r2_sum AS DOUBLE) / (2.0 * CAST(n_blocks AS DOUBLE)), 9) AS mean_rank,
-           CAST(kk AS INT) AS k, CAST(kk - 1 AS INT) AS df,
-           round(3.0 * CAST(s2 AS DOUBLE)
-               / (CAST(n AS DOUBLE) * CAST(kk AS DOUBLE) * (CAST(kk AS DOUBLE) + 1.0))
-             - 3.0 * CAST(n AS DOUBLE) * (CAST(kk AS DOUBLE) + 1.0), 9) AS chi2_f
-         FROM pt, sc""",
-
-    "q315_kcenter_coreset" -> OracleGen.kCenterSql(),
-
-    // the q98 funnel machinery with the 6h window bound on each hop
-    "q300_funnel_windowed" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS tus, event_type FROM events),
-         t0 AS (SELECT user_id, MIN(tus) AS t FROM e
-                WHERE event_type = 'view' GROUP BY 1),
-         t1 AS (SELECT e.user_id, MIN(tus) AS t FROM e JOIN t0 USING (user_id)
-                WHERE event_type = 'click' AND tus > t0.t
-                  AND tus <= t0.t + 21600000000 GROUP BY 1),
-         t2 AS (SELECT e.user_id, MIN(tus) AS t FROM e JOIN t1 USING (user_id)
-                WHERE event_type = 'purchase' AND tus > t1.t
-                  AND tus <= t1.t + 21600000000 GROUP BY 1),
-         c AS (SELECT (SELECT COUNT(*) FROM t0) AS n0,
-                      (SELECT COUNT(*) FROM t1) AS n1,
-                      (SELECT COUNT(*) FROM t2) AS n2)
-         SELECT 1 AS step_idx, 'view' AS step, n0 AS n_users,
-           CAST(1.0 AS DOUBLE) AS conv FROM c
-         UNION ALL
-         SELECT 2, 'click', n1, CAST(n1 AS DOUBLE) / CAST(n0 AS DOUBLE) FROM c
-         UNION ALL
-         SELECT 3, 'purchase', n2, CAST(n2 AS DOUBLE) / CAST(n1 AS DOUBLE) FROM c""",
-
-    // q269's daily means; S and tie sums exact integers; z one
-    // mirrored double op order with the continuity correction
-    "q301_mann_kendall" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         daily AS (
-           SELECT day, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS m
-           FROM e GROUP BY 1),
-         b AS (SELECT day AS o,
-             CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS v FROM daily),
-         s AS (
-           SELECT SUM(CASE WHEN b2.v > b1.v THEN 1
-                           WHEN b2.v < b1.v THEN -1 ELSE 0 END) AS s
-           FROM b b1 JOIN b b2 ON b1.o < b2.o),
-         t AS (
-           SELECT SUM(CAST(t AS HUGEINT) * (t - 1) * (2 * t + 5)) AS tsum,
-             SUM(t) AS n
-           FROM (SELECT v, COUNT(*) AS t FROM b GROUP BY 1)),
-         v2 AS (
-           SELECT n, s,
-             (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-               * (2.0 * CAST(n AS DOUBLE) + 5.0) - CAST(tsum AS DOUBLE)) / 18.0
-               AS var_s
-           FROM s, t)
-         SELECT CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS s_stat,
-           round(var_s, 6) AS var_s,
-           CASE WHEN var_s > 0.0 THEN
-             round(CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0) / sqrt(var_s)
-                        WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0) / sqrt(var_s)
-                        ELSE 0.0 END, 9) END AS z
-         FROM v2""",
-
-    // content preserved; rewritten/carried/version accounting pinned
-    // (3 micro-files re-binned, the big file carried by reference)
-    "q302_tx_compact_small" ->
-      """SELECT 'content' AS section, 'after' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM orders
-         UNION ALL SELECT 'meta', 'rewritten', 3, CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'carried', 1, CAST(NULL AS DOUBLE)
-         UNION ALL SELECT 'meta', 'n_versions', 5, CAST(NULL AS DOUBLE)""",
-
-    // q156's exact-sum OLS per series; residual DW terms DECIMAL(25,12)
-    "q303_durbin_watson" ->
-      """WITH e AS (
-           SELECT event_type AS g, epoch_us(ts) // 86400000000 AS day,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         daily AS (
-           SELECT g, day, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS m
-           FROM e GROUP BY 1, 2),
-         b AS (SELECT g, day AS x,
-             CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS y FROM daily),
-         fit AS (
-           SELECT g, COUNT(*) AS n, SUM(CAST(x AS HUGEINT)) AS sx,
-             SUM(CAST(y AS HUGEINT)) AS sy,
-             SUM(CAST(x AS HUGEINT) * x) AS sxx,
-             SUM(CAST(x AS HUGEINT) * y) AS sxy
-           FROM b GROUP BY 1),
-         ab2 AS (
-           SELECT g, n, sx, sy,
-             CASE WHEN den <> 0.0 THEN
-               (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                 - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / den
-             ELSE 0.0 END AS bb
-           FROM (SELECT *, CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS den FROM fit)),
-         ab3 AS (
-           SELECT g, n, bb,
-             (CAST(sy AS DOUBLE) - bb * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS aa
-           FROM ab2),
-         r AS (
-           SELECT b.g, b.x, ab3.n,
-             (CAST(y AS DOUBLE) - (aa + bb * CAST(x AS DOUBLE))) / 1000000.0 AS e2
-           FROM b JOIN ab3 ON ab3.g = b.g),
-         lg AS (
-           SELECT g, n, e2, LAG(e2) OVER (PARTITION BY g ORDER BY x) AS ep
-           FROM r),
-         agg AS (
-           SELECT g, MAX(n) AS n,
-             SUM(CASE WHEN ep IS NOT NULL THEN
-               CAST((e2 - ep) * (e2 - ep) AS DECIMAL(25,12)) END) AS num,
-             SUM(CAST(e2 * e2 AS DECIMAL(25,12))) AS den2
-           FROM lg GROUP BY 1)
-         SELECT g AS event_type, CAST(n AS BIGINT) AS n,
-           CASE WHEN CAST(den2 AS DOUBLE) > 0.0 THEN
-             round(CAST(num AS DOUBLE) / CAST(den2 AS DOUBLE), 9) END AS dw
-         FROM agg""",
-
-    // joint half-unit ranks per pair; moments exact HUGEINT; d and
-    // delta one mirrored double op order each
-    "q296_effect_sizes" ->
-      """WITH q AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v
-           FROM events),
-         cells AS (SELECT g, v, COUNT(*) AS c FROM q GROUP BY 1, 2),
-         mom AS (
-           SELECT g, SUM(c) AS n, SUM(CAST(v AS HUGEINT) * c) AS s1,
-             SUM(CAST(v AS HUGEINT) * v * c) AS s2
-           FROM cells GROUP BY 1),
-         prs AS (
-           SELECT x.g AS ga, y.g AS gb
-           FROM (SELECT g FROM mom) x JOIN (SELECT g FROM mom) y ON x.g < y.g),
-         pcells AS (
-           SELECT p.ga, p.gb, c.v,
-             SUM(CASE WHEN c.g = p.ga THEN c.c ELSE 0 END) AS ta,
-             SUM(c.c) AS t
-           FROM cells c JOIN prs p ON c.g = p.ga OR c.g = p.gb
-           GROUP BY 1, 2, 3),
-         rk AS (
-           SELECT ga, gb, ta,
-             2 * COALESCE(SUM(t) OVER (PARTITION BY ga, gb ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS r2
-           FROM pcells),
-         ra AS (SELECT ga, gb, SUM(CAST(ta AS HUGEINT) * r2) AS r2a
-                FROM rk GROUP BY 1, 2),
-         j AS (
-           SELECT ra.ga, ra.gb, ra.r2a, ma.n AS na, ma.s1 AS s1a, ma.s2 AS s2a,
-             mb.n AS nb, mb.s1 AS s1b, mb.s2 AS s2b
-           FROM ra JOIN mom ma ON ma.g = ra.ga JOIN mom mb ON mb.g = ra.gb),
-         k AS (
-           SELECT *,
-             (CAST(na AS DOUBLE) - 1.0)
-               * ((CAST(s2a AS DOUBLE)
-                   - CAST(s1a AS DOUBLE) * CAST(s1a AS DOUBLE) / CAST(na AS DOUBLE))
-                 / (CAST(na AS DOUBLE) - 1.0))
-             + (CAST(nb AS DOUBLE) - 1.0)
-               * ((CAST(s2b AS DOUBLE)
-                   - CAST(s1b AS DOUBLE) * CAST(s1b AS DOUBLE) / CAST(nb AS DOUBLE))
-                 / (CAST(nb AS DOUBLE) - 1.0)) AS pnum
-           FROM j)
-         SELECT ga AS group_a, gb AS group_b,
-           CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-           CASE WHEN na > 1 AND nb > 1 AND pnum > 0 THEN
-             round((CAST(s1a AS DOUBLE) / CAST(na AS DOUBLE)
-                 - CAST(s1b AS DOUBLE) / CAST(nb AS DOUBLE))
-               / sqrt(pnum / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 2.0)), 6)
-           END AS cohens_d,
-           round((CAST(r2a AS DOUBLE)
-               - CAST(na AS DOUBLE) * (CAST(na AS DOUBLE) + 1.0))
-             / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) - 1.0, 9) AS cliffs_delta
-         FROM k""",
-
-    // ASCII-pinned alphabet so levenshtein counts identically; macro
-    // terms DECIMAL(20,9) pre-sum, micro one division of exact longs
-    "q292_cer" ->
-      """WITH prep AS (
-           SELECT lang,
-             substr(regexp_replace(lower(text), '[^\x20-\x7e]', '', 'g'), 1, 200)
-               AS ref
-           FROM documents),
-         p2 AS (
-           SELECT lang, ref,
-             substr(translate(ref, 'aeio', '4310'), 1, 180) AS hyp
-           FROM prep),
-         sc AS (
-           SELECT lang, CAST(levenshtein(ref, hyp) AS BIGINT) AS lev,
-             CAST(length(ref) AS BIGINT) AS len
-           FROM p2)
-         SELECT lang, COUNT(*) AS n_docs,
-           CAST(SUM(CASE WHEN len = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty_ref,
-           CAST(SUM(CASE WHEN len > 0 THEN lev ELSE 0 END) AS BIGINT) AS edit_total,
-           CAST(SUM(CASE WHEN len > 0 THEN len ELSE 0 END) AS BIGINT) AS ref_chars,
-           CASE WHEN SUM(CASE WHEN len > 0 THEN len ELSE 0 END) > 0 THEN
-             round(CAST(SUM(CASE WHEN len > 0 THEN lev ELSE 0 END) AS DOUBLE)
-               / CAST(SUM(CASE WHEN len > 0 THEN len ELSE 0 END) AS DOUBLE), 9)
-           END AS cer_micro,
-           CASE WHEN SUM(CASE WHEN len > 0 THEN 1 ELSE 0 END) > 0 THEN
-             round(CAST(SUM(CASE WHEN len > 0 THEN
-                 CAST(CAST(lev AS DOUBLE) / CAST(len AS DOUBLE) AS DECIMAL(20,9))
-               END) AS DOUBLE)
-               / CAST(SUM(CASE WHEN len > 0 THEN 1 ELSE 0 END) AS DOUBLE), 9)
-           END AS cer_macro
-         FROM sc GROUP BY 1""",
-
-    // daily means from exact integer sums (rounded 1e-6 on both
-    // engines), half-unit ranks, U_t exact longs, earliest-t argmax
-    "q269_pettitt" ->
-      """WITH e AS (
-           SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         daily AS (
-           SELECT day, round(CAST(SUM(CAST(vq AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1000000.0, 6) AS m
-           FROM e GROUP BY 1),
-         b AS (SELECT day AS o,
-             CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS v FROM daily),
-         vh AS (SELECT v, COUNT(*) AS t FROM b GROUP BY 1),
-         rk AS (
-           SELECT v, 2 * COALESCE(SUM(t) OVER (ORDER BY v
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS r2
-           FROM vh),
-         u AS (
-           SELECT o,
-             SUM(r2) OVER (ORDER BY o
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s2,
-             COUNT(*) OVER (ORDER BY o
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ti,
-             COUNT(*) OVER () AS n
-           FROM b JOIN rk USING (v)),
-         uu AS (SELECT o, n, s2 - ti * (n + 1) AS uv FROM u),
-         kk AS (SELECT *, MAX(ABS(uv)) OVER () AS k FROM uu)
-         SELECT CAST(n AS BIGINT) AS n, MIN(o) AS t_star,
-           CAST(k AS BIGINT) AS k_stat,
-           round(2.0 * exp(-6.0 * CAST(k AS DOUBLE) * CAST(k AS DOUBLE)
-             / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-               + CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 9) AS p_approx
-         FROM kk WHERE ABS(uv) = k GROUP BY n, k""",
-
-    // the q237 cell build; chi^2 folds empty cells in closed form
-    // (sum over occupied of (c-e)^2/e - e, + N); terms DECIMAL(29,9)
-    "q270_cramers_v" ->
-      """WITH o AS (
-           SELECT COALESCE(CAST(o_orderstatus AS VARCHAR), ' null') AS s,
-                  COALESCE(CAST(o_orderpriority AS VARCHAR), ' null') AS p,
-                  COALESCE(CAST(year(o_orderdate) AS VARCHAR), ' null') AS y
-           FROM orders),
-         pr AS (
-           SELECT 'o_orderstatus' AS cx, 'o_orderpriority' AS cy, s AS x, p AS y FROM o
-           UNION ALL
-           SELECT 'o_orderstatus', 'o_year', s, y FROM o
-           UNION ALL
-           SELECT 'o_orderpriority', 'o_year', p, y FROM o),
-         cells AS (SELECT cx, cy, x, y, COUNT(*) AS c FROM pr GROUP BY 1,2,3,4),
-         m AS (
-           SELECT *, SUM(c) OVER (PARTITION BY cx, cy, x) AS cxn,
-                     SUM(c) OVER (PARTITION BY cx, cy, y) AS cyn,
-                     SUM(c) OVER (PARTITION BY cx, cy) AS n
-           FROM cells),
-         lev AS (
-           SELECT cx, cy, COUNT(DISTINCT x) AS r, COUNT(DISTINCT y) AS sl
-           FROM cells GROUP BY 1, 2),
-         terms AS (
-           SELECT cx, cy, n,
-             CAST((CAST(c AS DOUBLE)
-                 - CAST(cxn AS DOUBLE) * CAST(cyn AS DOUBLE) / CAST(n AS DOUBLE))
-               * (CAST(c AS DOUBLE)
-                 - CAST(cxn AS DOUBLE) * CAST(cyn AS DOUBLE) / CAST(n AS DOUBLE))
-               / (CAST(cxn AS DOUBLE) * CAST(cyn AS DOUBLE) / CAST(n AS DOUBLE))
-               - CAST(cxn AS DOUBLE) * CAST(cyn AS DOUBLE) / CAST(n AS DOUBLE)
-               AS DECIMAL(29,9)) AS term
-           FROM m),
-         agg AS (
-           SELECT cx AS col_x, cy AS col_y, MAX(n) AS nt, SUM(term) AS chi
-           FROM terms GROUP BY 1, 2)
-         SELECT col_x, col_y, CAST(nt AS BIGINT) AS n,
-           CAST(r AS BIGINT) AS levels_x, CAST(sl AS BIGINT) AS levels_y,
-           round(CAST(chi AS DOUBLE) + CAST(nt AS DOUBLE), 6) AS chi2,
-           CASE WHEN LEAST(r, sl) - 1 > 0 THEN
-             round(sqrt((CAST(chi AS DOUBLE) + CAST(nt AS DOUBLE))
-               / (CAST(nt AS DOUBLE) * CAST(LEAST(r, sl) - 1 AS DOUBLE))), 9)
-           END AS cramers_v
-         FROM agg JOIN lev ON agg.col_x = lev.cx AND agg.col_y = lev.cy""",
-
-    // one shared scan for the row-local checks + one NOT EXISTS count
-    // for referential integrity; passes decided by integer arithmetic
-    "q271_quality_audit" ->
-      """WITH t AS (
-           SELECT COUNT(*) AS n, COUNT(o_custkey) AS cc,
-             COUNT(DISTINCT o_orderkey) AS du, COUNT(o_orderkey) AS cu,
-             MIN(CAST(o_totalprice AS DOUBLE)) AS mn,
-             MAX(CAST(o_totalprice AS DOUBLE)) AS mx,
-             COUNT(*) FILTER (WHERE o_totalprice < 0) AS neg,
-             COUNT(*) FILTER (WHERE CAST(o_orderstatus AS VARCHAR) IN ('F','O','P')) AS ins,
-             COUNT(*) FILTER (WHERE o_orderstatus IS NOT NULL
-               AND CAST(o_orderstatus AS VARCHAR) NOT IN ('F','O','P')) AS outs
-           FROM orders),
-         fk AS (
-           SELECT COUNT(*) AS orphans FROM orders o
-           WHERE o.o_custkey IS NOT NULL
-             AND NOT EXISTS (SELECT 1 FROM customer c
-                             WHERE c.c_custkey = o.o_custkey))
-         SELECT 'completeness' AS "check", 'o_custkey' AS "column",
-           round(CAST(cc AS DOUBLE) / CAST(n AS DOUBLE), 9) AS metric,
-           1.0 AS threshold, cc * 1 >= n * 1 AS passed FROM t
-         UNION ALL SELECT 'uniqueness', 'o_orderkey',
-           round(CAST(du AS DOUBLE) / CAST(n AS DOUBLE), 9), 1.0,
-           du = n AND cu = n FROM t
-         UNION ALL SELECT 'min_bound', 'o_totalprice', round(mn, 9), 0.0,
-           mn >= 0.0 FROM t
-         UNION ALL SELECT 'max_bound', 'o_totalprice', round(mx, 9), 1000000.0,
-           mx <= 1000000.0 FROM t
-         UNION ALL SELECT 'non_negative', 'o_totalprice', CAST(neg AS DOUBLE), 0.0,
-           neg = 0 FROM t
-         UNION ALL SELECT 'in_set', 'o_orderstatus',
-           round(CAST(ins AS DOUBLE) / CAST(n AS DOUBLE), 9), 1.0, outs = 0 FROM t
-         UNION ALL SELECT 'foreign_key', 'o_custkey', CAST(orphans AS DOUBLE), 0.0,
-           orphans = 0 FROM fk""",
-
-    // the q249 risk-set machinery with d/n and d/n^2 terms
-    // DECIMAL(20,9) pre-cumsum
-    "q278_hazard" ->
-      """WITH u AS (
-           SELECT user_id, MIN(epoch_us(ts)) AS t0,
-             MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS tc,
-             MAX(epoch_us(ts)) AS tm
-           FROM events GROUP BY 1),
-         obs AS (
-           SELECT 'c' || CAST(user_id % 3 AS VARCHAR) AS g,
-             (COALESCE(tc, tm) - t0) // 86400000000 AS t,
-             CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END AS e
-           FROM u),
-         cells AS (SELECT g, t, SUM(e) AS d, COUNT(*) AS c FROM obs GROUP BY 1, 2),
-         r AS (
-           SELECT *, SUM(c) OVER (PARTITION BY g)
-             - COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nrisk
-           FROM cells),
-         tm2 AS (
-           SELECT *,
-             CASE WHEN d > 0 THEN
-               CAST(CAST(d AS DOUBLE) / CAST(nrisk AS DOUBLE) AS DECIMAL(20,9)) END AS term,
-             CASE WHEN d > 0 THEN
-               CAST(CAST(d AS DOUBLE) / (CAST(nrisk AS DOUBLE) * CAST(nrisk AS DOUBLE))
-                 AS DECIMAL(20,9)) END AS vterm
-           FROM r),
-         hz AS (
-           SELECT *,
-             SUM(term) OVER (PARTITION BY g ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hh,
-             SUM(vterm) OVER (PARTITION BY g ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS vv
-           FROM tm2)
-         SELECT g AS cohort, CAST(t AS BIGINT) AS t, CAST(nrisk AS BIGINT) AS n_risk,
-           CAST(d AS BIGINT) AS d_events,
-           round(CAST(hh AS DOUBLE), 6) AS cum_hazard,
-           round(CAST(vv AS DOUBLE), 9) AS hazard_var
-         FROM hz WHERE d > 0""",
-
-    // term histogram + vocabulary-scale rank/cumulative windows; the
-    // shared whitespace tokenizer (the q174 oracle's split) inlined
-    "q279_vocab_coverage" ->
-      """WITH tok AS (
-           SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-           FROM documents),
-         counts AS (SELECT t, COUNT(*) AS c FROM tok GROUP BY 1),
-         ranked AS (
-           SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, t) AS rank,
-             SUM(c) OVER (ORDER BY c DESC, t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM counts),
-         tot AS (SELECT SUM(c) AS total, COUNT(*) AS v FROM counts),
-         probes AS (SELECT unnest([10, 30, 100, 300, 1000, 3000, 10000]) AS k)
-         SELECT CAST(p.k AS BIGINT) AS k, CAST(r.rank AS BIGINT) AS rank_used,
-           CAST(r.cum AS BIGINT) AS covered_tokens,
-           CAST(t.total AS BIGINT) AS total_tokens,
-           round(CAST(r.cum AS DOUBLE) / CAST(t.total AS DOUBLE), 9) AS coverage
-         FROM probes p CROSS JOIN tot t
-         JOIN ranked r ON r.rank = LEAST(p.k, t.v)""",
-
-    // both sections recompute from the base table — the z-ordered
-    // pruned reads must be row-exact
-    "q280_tx_zorder_skip" ->
-      """SELECT 'by_okey' AS section, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-         FROM lineitem WHERE l_orderkey BETWEEN 1000 AND 3000
-         UNION ALL
-         SELECT 'by_pkey', COUNT(*),
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-         FROM lineitem WHERE l_partkey BETWEEN 10 AND 60""",
-
-    // the q242 bins (conf/acc rounded 1e-9 there, mirrored), Murphy
-    // terms DECIMAL(29,9) pre-sum, final row in one mirrored op order
-    "q276_brier" ->
-      """WITH e AS (
-           SELECT (user_id % 2 = 1) AS p, CAST(value AS DOUBLE) / 500.0 AS pr
-           FROM events),
-         b AS (
-           SELECT LEAST(GREATEST(CAST(floor(pr * 10) AS BIGINT), 0), 9) AS bin,
-             CAST(floor(pr * 1000000 + 0.5) AS BIGINT) AS pq, p
-           FROM e),
-         a AS (
-           SELECT bin, COUNT(*) AS n, COUNT(*) FILTER (WHERE p) AS n_pos,
-             SUM(CAST(pq AS HUGEINT)) AS sp
-           FROM b GROUP BY 1),
-         c AS (
-           SELECT bin, n, n_pos,
-             round(CAST(sp AS DOUBLE) / (1000000.0 * CAST(n AS DOUBLE)), 9) AS conf,
-             round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 9) AS acc
-           FROM a),
-         t AS (SELECT SUM(n) AS nt, SUM(n_pos) AS pt FROM c),
-         terms AS (
-           SELECT nt, pt,
-             CAST(CAST(n AS DOUBLE) * (conf - acc) * (conf - acc) AS DECIMAL(29,9)) AS rel,
-             CAST(CAST(n AS DOUBLE)
-               * (acc - CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE))
-               * (acc - CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)) AS DECIMAL(29,9)) AS res
-           FROM c, t),
-         g AS (SELECT nt, pt, SUM(rel) AS relt, SUM(res) AS rest
-               FROM terms GROUP BY 1, 2)
-         SELECT CAST(nt AS BIGINT) AS n,
-           round(CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE), 9) AS base_rate,
-           round(CAST(relt AS DOUBLE) / CAST(nt AS DOUBLE), 9) AS reliability,
-           round(CAST(rest AS DOUBLE) / CAST(nt AS DOUBLE), 9) AS resolution,
-           round(CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)
-             * (1.0 - CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)), 9) AS uncertainty,
-           round(CAST(relt AS DOUBLE) / CAST(nt AS DOUBLE)
-             - CAST(rest AS DOUBLE) / CAST(nt AS DOUBLE)
-             + CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)
-               * (1.0 - CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)), 9) AS brier
-         FROM g""",
-
-    // the q117 CMS cells with an hour dimension; probe estimates =
-    // min over depth rows (missing cell -> 0 via the left join)
-    "q277_stream_cms_hourly" ->
-      """WITH e AS (
-           SELECT date_trunc('hour', make_timestamp(epoch_ns(ts)//1000)) AS hour_start,
-             CAST(user_id AS VARCHAR) AS k
-           FROM events),
-         cells AS (
-           SELECT hour_start, j.j,
-             ('0x' || substr(md5('cm' || j.j || '|' || k), 1, 8))::BIGINT % 1024 AS cell
-           FROM e CROSS JOIN (SELECT unnest([0,1,2,3]) AS j) j),
-         sk AS (SELECT hour_start, j, cell, COUNT(*) AS cnt FROM cells GROUP BY 1,2,3),
-         probes AS (SELECT unnest(['1','2','3']) AS k),
-         pc AS (
-           SELECT p.k, j.j,
-             ('0x' || substr(md5('cm' || j.j || '|' || p.k), 1, 8))::BIGINT % 1024 AS cell
-           FROM probes p CROSS JOIN (SELECT unnest([0,1,2,3]) AS j) j),
-         hrs AS (SELECT DISTINCT hour_start FROM sk)
-         SELECT h.hour_start, pc.k AS user_id,
-           CAST(MIN(COALESCE(sk.cnt, 0)) AS BIGINT) AS est
-         FROM hrs h
-         CROSS JOIN pc
-         LEFT JOIN sk ON sk.hour_start = h.hour_start
-           AND sk.j = pc.j AND sk.cell = pc.cell
-         GROUP BY 1, 2""",
-
-    // the pruned read must return EXACTLY the full snapshot's filtered
-    // rows — both sections recompute from the base table
-    "q272_tx_skipping" ->
-      """WITH f AS (SELECT * FROM orders WHERE o_orderkey BETWEEN 1000 AND 3000),
-         a AS (SELECT COUNT(*) AS n_rows,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-           FROM f)
-         SELECT 'pruned' AS section, n_rows, sum_price FROM a
-         UNION ALL
-         SELECT 'snapshot', n_rows, sum_price FROM a""",
-
-    // the groupedAuc histogram state walked DESCENDING; per-threshold
-    // tp*(cumTP/cumN) terms DECIMAL(20,9) pre-sum
-    "q273_pr_auc" ->
-      """WITH e AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 100 + 0.5) AS BIGINT) AS v,
-             (user_id % 2 = 1) AS p
-           FROM events),
-         h AS (
-           SELECT g, v, COUNT(*) FILTER (WHERE p) AS cp,
-                        COUNT(*) FILTER (WHERE NOT p) AS cn
-           FROM e GROUP BY 1, 2),
-         c AS (
-           SELECT *,
-             SUM(cp) OVER (PARTITION BY g ORDER BY v DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ctp,
-             SUM(cp + cn) OVER (PARTITION BY g ORDER BY v DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cnn
-           FROM h),
-         s AS (
-           SELECT g, SUM(cp) AS n_pos, SUM(cn) AS n_neg,
-             SUM(CAST(CAST(cp AS DOUBLE) * (CAST(ctp AS DOUBLE) / CAST(cnn AS DOUBLE))
-               AS DECIMAL(20,9))) AS num
-           FROM c GROUP BY 1)
-         SELECT g AS event_type, CAST(n_pos AS BIGINT) AS n_pos,
-           CAST(n_neg AS BIGINT) AS n_neg,
-           CASE WHEN n_pos > 0 THEN
-             round(CAST(num AS DOUBLE) / CAST(n_pos AS DOUBLE), 9)
-           END AS pr_auc
-         FROM s""",
-
-    "q274_jaccard_links" -> OracleGen.jaccardLinksSql(),
-
-    // per-group moments in ORIGINAL units (one mirrored op order);
-    // w-weighted terms DECIMAL(38,9), h terms DECIMAL(20,9) pre-sum
-    "q275_welch_anova" ->
-      """WITH q AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(value AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v
-           FROM events),
-         cells AS (
-           SELECT g, COUNT(*) AS n, SUM(CAST(v AS HUGEINT)) AS s,
-             SUM(CAST(v AS HUGEINT) * v) AS ss
-           FROM q GROUP BY 1),
-         c2 AS (
-           SELECT *,
-             (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / 1000000.0 AS m,
-             ((CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-               / (CAST(n AS DOUBLE) - 1.0)) / (1000000.0 * 1000000.0) AS va
-           FROM cells),
-         c3 AS (
-           SELECT *, (n >= 2 AND va > 0) AS usable,
-             CASE WHEN n >= 2 AND va > 0 THEN CAST(n AS DOUBLE) / va END AS w
-           FROM c2),
-         tot AS (
-           SELECT COUNT(*) FILTER (WHERE usable) AS k,
-             COUNT(*) FILTER (WHERE NOT usable) AS k_excluded,
-             SUM(n) FILTER (WHERE usable) AS nt,
-             SUM(CAST(w AS DECIMAL(38,9))) FILTER (WHERE usable) AS wt,
-             SUM(CAST(w * m AS DECIMAL(38,9))) FILTER (WHERE usable) AS wmt
-           FROM c3),
-         terms AS (
-           SELECT k, k_excluded, nt,
-             SUM(CAST(w * (m - CAST(wmt AS DOUBLE) / CAST(wt AS DOUBLE))
-               * (m - CAST(wmt AS DOUBLE) / CAST(wt AS DOUBLE)) AS DECIMAL(38,9))) AS at,
-             SUM(CAST((1.0 - w / CAST(wt AS DOUBLE)) * (1.0 - w / CAST(wt AS DOUBLE))
-               / (CAST(n AS DOUBLE) - 1.0) AS DECIMAL(20,9))) AS ht
-           FROM c3, tot WHERE usable GROUP BY 1, 2, 3)
-         SELECT CAST(k AS BIGINT) AS k_groups,
-           CAST(k_excluded AS BIGINT) AS k_excluded, CAST(nt AS BIGINT) AS n,
-           CASE WHEN k >= 2 AND CAST(ht AS DOUBLE) > 0 THEN
-             round((CAST(at AS DOUBLE) / (CAST(k AS DOUBLE) - 1.0))
-               / (1.0 + 2.0 * (CAST(k AS DOUBLE) - 2.0)
-                 / (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0) * CAST(ht AS DOUBLE)), 6)
-           END AS w_stat,
-           CASE WHEN k >= 2 AND CAST(ht AS DOUBLE) > 0 THEN
-             round((CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1.0)
-               / (3.0 * CAST(ht AS DOUBLE)), 6)
-           END AS dof
-         FROM terms""",
-
-    // z from exact counts in ONE mirrored double op order; normal tail
-    // via the A&S 7.1.26 erf polynomial (Horner order mirrored); BH on
-    // 1e-9-quantized p's with DECIMAL cross-multiplied thresholds
-    "q260_fdr_bh" ->
-      """WITH c AS (
-           SELECT event_type,
-             COUNT(*) FILTER (WHERE user_id % 2 = 1) AS n_treat,
-             COUNT(*) FILTER (WHERE user_id % 2 = 1 AND value > 50) AS x_treat,
-             COUNT(*) FILTER (WHERE user_id % 2 = 0) AS n_ctrl,
-             COUNT(*) FILTER (WHERE user_id % 2 = 0 AND value > 50) AS x_ctrl
-           FROM events GROUP BY 1),
-         z AS (
-           SELECT *,
-             (n_treat = 0 OR n_ctrl = 0 OR x_treat + x_ctrl = 0
-              OR x_treat + x_ctrl = n_treat + n_ctrl) AS degen,
-             (CAST(x_treat AS DOUBLE) / CAST(n_treat AS DOUBLE)
-              - CAST(x_ctrl AS DOUBLE) / CAST(n_ctrl AS DOUBLE))
-             / sqrt((CAST(x_treat + x_ctrl AS DOUBLE) / CAST(n_treat + n_ctrl AS DOUBLE))
-                 * (1.0 - CAST(x_treat + x_ctrl AS DOUBLE) / CAST(n_treat + n_ctrl AS DOUBLE))
-                 * (1.0 / CAST(n_treat AS DOUBLE) + 1.0 / CAST(n_ctrl AS DOUBLE))) AS zv
-           FROM c),
-         pv AS (
-           SELECT *,
-             CASE WHEN NOT degen THEN CAST(floor(
-               (((((1.061405429 * (1.0 / (1.0 + 0.3275911 * (abs(zv) / 1.4142135623730951)))
-                  + -1.453152027) * (1.0 / (1.0 + 0.3275911 * (abs(zv) / 1.4142135623730951)))
-                  + 1.421413741) * (1.0 / (1.0 + 0.3275911 * (abs(zv) / 1.4142135623730951)))
-                  + -0.284496736) * (1.0 / (1.0 + 0.3275911 * (abs(zv) / 1.4142135623730951)))
-                  + 0.254829592) * (1.0 / (1.0 + 0.3275911 * (abs(zv) / 1.4142135623730951))))
-               * exp(-(abs(zv) / 1.4142135623730951) * (abs(zv) / 1.4142135623730951))
-               * 1000000000 + 0.5) AS BIGINT) END AS pq
-           FROM z),
-         b AS (
-           SELECT *,
-             CASE WHEN pq IS NOT NULL THEN CAST(ROW_NUMBER() OVER
-               (ORDER BY pq ASC NULLS LAST, event_type) AS INT) END AS rk,
-             COUNT(pq) OVER () AS m
-           FROM pv),
-         o AS (
-           SELECT *, CASE WHEN pq IS NOT NULL
-               AND CAST(pq AS DECIMAL(38,0)) * 100 * m
-                   <= CAST(5 AS DECIMAL(38,0)) * rk * 1000000000
-             THEN rk END AS ok
-           FROM b)
-         SELECT event_type, n_treat, x_treat, n_ctrl, x_ctrl,
-           CASE WHEN NOT degen THEN round(zv, 6) END AS z,
-           CAST(pq AS DOUBLE) / 1e9 AS p_value,
-           rk AS p_rank, m AS m_tests,
-           COALESCE(rk <= MAX(ok) OVER (), false) AS rejected
-         FROM o""",
-
-    "q259_hot_key_probe" ->
-      """WITH k AS (SELECT user_id, COUNT(*) AS n FROM events GROUP BY 1)
-         SELECT CAST(SUM(n) AS BIGINT) AS n_rows, CAST(COUNT(*) AS BIGINT) AS n_keys,
-           CAST(MAX(n) AS BIGINT) AS max_key_rows,
-           round(CAST(MAX(n) AS DOUBLE) / CAST(SUM(n) AS DOUBLE), 9) AS hot_share,
-           MAX(n) > 1000 AS use_bucketed
-         FROM k""",
-
-    // the merge audit recomputes the EXPECTED post-MERGE snapshot from
-    // the v1 manifest glob + the same deterministic feed rules — a
-    // wrong applyChanges or a wrong manifest each fail a distinct row
-    "q256_tx_merge" ->
-      """WITH v1 AS (
-           SELECT o_orderkey, o_totalprice
-           FROM read_parquet('/tmp/graft_txm___SFTAG__/data/v1_*.parquet')),
-         v2 AS (
-           SELECT o_orderkey, o_totalprice
-           FROM read_parquet('/tmp/graft_txm___SFTAG__/data/v2_*.parquet')),
-         expected AS (
-           SELECT o_orderkey, o_totalprice FROM v1 WHERE o_orderkey % 3 = 2
-           UNION ALL
-           SELECT o_orderkey, o_totalprice * 2 FROM v1 WHERE o_orderkey % 3 = 0
-           UNION ALL
-           SELECT o_orderkey, o_totalprice FROM orders
-           WHERE o_orderpriority = '2-HIGH'),
-         d AS (
-           SELECT CASE WHEN a.o_orderkey IS NULL THEN 'added'
-                       WHEN b.o_orderkey IS NULL THEN 'removed'
-                       WHEN a.o_totalprice IS DISTINCT FROM b.o_totalprice THEN 'changed'
-                       ELSE 'same' END AS label
-           FROM v1 a FULL OUTER JOIN v2 b ON a.o_orderkey = b.o_orderkey)
-         SELECT 'merge' AS section, 'expected' AS label, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-         FROM expected
-         UNION ALL
-         SELECT 'snapshot', 'v2', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM v2
-         UNION ALL
-         SELECT 'cdc', 'delete@2', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM v1
-         UNION ALL
-         SELECT 'cdc', 'insert@2', COUNT(*),
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM v2
-         UNION ALL
-         SELECT 'diff', label, COUNT(*), CAST(NULL AS DOUBLE)
-         FROM d GROUP BY 2""",
-
-    "q251_delta_join" ->
-      """WITH ao AS (SELECT o_orderkey AS okey, o_totalprice FROM orders
-                     WHERE o_orderkey % 10 <> 0),
-         ad AS (SELECT o_orderkey AS okey, o_totalprice FROM orders
-                WHERE o_orderkey % 10 = 0),
-         bo AS (SELECT l_orderkey AS okey, l_quantity, l_linenumber FROM lineitem
-                WHERE l_orderkey % 7 <> 0),
-         bd AS (SELECT l_orderkey AS okey, l_quantity, l_linenumber FROM lineitem
-                WHERE l_orderkey % 7 = 0)
-         SELECT ad.okey, ad.o_totalprice, b.l_quantity, b.l_linenumber
-         FROM ad JOIN (SELECT * FROM bo UNION ALL SELECT * FROM bd) b USING (okey)
-         UNION ALL
-         SELECT ao.okey, ao.o_totalprice, bd.l_quantity, bd.l_linenumber
-         FROM ao JOIN bd USING (okey)""",
-
-    "q252_trailing_bucketed" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 AS tus,
-                      CAST(value AS DECIMAL(18,4)) AS v FROM events)
-         SELECT event_id, user_id, tus,
-           COUNT(*) OVER w AS n_win,
-           CAST(SUM(v) OVER w AS DOUBLE) AS sum_win
-         FROM e
-         WINDOW w AS (PARTITION BY user_id ORDER BY tus
-                      RANGE BETWEEN 300000000 PRECEDING AND CURRENT ROW)""",
-
-    "q253_ap_at_k" ->
-      """WITH tk AS (
-           SELECT query_id, neighbor_id, rank FROM (
-             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                          c.vec_id) AS INT) AS rank
-             FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-             WHERE q.vec_id % 50 = 0)
-           WHERE rank <= 10),
-         lab AS (SELECT vec_id, label FROM embeddings),
-         j AS (
-           SELECT t.query_id, t.rank,
-             CASE WHEN ql.label = cl.label THEN 1 ELSE 0 END AS rel
-           FROM tk t
-           JOIN lab ql ON ql.vec_id = t.query_id
-           JOIN lab cl ON cl.vec_id = t.neighbor_id),
-         h AS (
-           SELECT query_id, rank, rel,
-             SUM(rel) OVER (PARTITION BY query_id ORDER BY rank
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hits
-           FROM j),
-         a AS (
-           SELECT query_id, SUM(rel) AS n_rel,
-             SUM(CASE WHEN rel = 1 THEN hits * (2520 // rank) ELSE 0 END) AS num
-           FROM h GROUP BY 1)
-         SELECT query_id, CAST(n_rel AS BIGINT) AS n_rel,
-           CASE WHEN n_rel > 0 THEN
-             round(CAST(num AS DOUBLE) / (2520.0 * CAST(n_rel AS DOUBLE)), 9)
-           ELSE 0.0 END AS ap
-         FROM a""",
-
-    "q249_survival" ->
-      """WITH u AS (
-           SELECT user_id, MIN(epoch_us(ts)) AS t0,
-             MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS tc,
-             MAX(epoch_us(ts)) AS tm
-           FROM events GROUP BY 1),
-         obs AS (
-           SELECT 'c' || CAST(user_id % 3 AS VARCHAR) AS g,
-             (COALESCE(tc, tm) - t0) // 86400000000 AS t,
-             CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END AS e
-           FROM u),
-         cells AS (SELECT g, t, SUM(e) AS d, COUNT(*) AS c FROM obs GROUP BY 1, 2),
-         r AS (
-           SELECT *, SUM(c) OVER (PARTITION BY g)
-             - COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nrisk
-           FROM cells),
-         tm2 AS (
-           SELECT *, CASE WHEN d > 0 AND d < nrisk THEN
-               CAST(ln(CAST(nrisk - d AS DOUBLE) / CAST(nrisk AS DOUBLE)) AS DECIMAL(20,9))
-             END AS term,
-             SUM(CASE WHEN d = nrisk AND d > 0 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY g ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dead
-           FROM r),
-         lg AS (
-           SELECT *, SUM(term) OVER (PARTITION BY g ORDER BY t
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS logs
-           FROM tm2)
-         SELECT g AS cohort, CAST(t AS BIGINT) AS t, CAST(nrisk AS BIGINT) AS n_risk,
-           CAST(d AS BIGINT) AS d_events,
-           CASE WHEN dead = 0 THEN round(CAST(logs AS DOUBLE), 6) END AS log_surv
-         FROM lg WHERE d > 0""",
-
-    "q250_markov_entropy" ->
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, event_type FROM events),
-         st AS (
-           SELECT event_type AS from_type,
-             LEAD(event_type) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS to_type
-           FROM e),
-         tc AS (SELECT from_type, to_type, COUNT(*) AS n FROM st
-                WHERE to_type IS NOT NULL GROUP BY 1, 2),
-         w AS (
-           SELECT *, SUM(n) OVER (PARTITION BY from_type) AS tot,
-                     SUM(n) OVER () AS nn
-           FROM tc),
-         terms AS (
-           SELECT nn, from_type,
-             CAST((CAST(n AS DOUBLE) / CAST(nn AS DOUBLE))
-               * ln(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE)) AS DECIMAL(20,9)) AS term
-           FROM w)
-         SELECT CAST(MAX(nn) AS BIGINT) AS n_steps,
-           COUNT(DISTINCT from_type) AS n_states,
-           round(-CAST(SUM(term) AS DOUBLE), 6) AS entropy_nats
-         FROM terms""",
-
-    "q247_clustering_coeff" -> OracleGen.clusteringSql(minCos = 0.1),
-
-    "q248_bootstrap_ci" -> OracleGen.bootstrapCiSql(
-      "event_type", "value", "event_id", "events"),
-
-    "q246_isotonic" ->
-      """WITH base AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(floor(value) AS DOUBLE) * 1 + 0.5) AS BIGINT) AS x,
-             CAST(floor(CAST(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END AS DOUBLE)
-               * 1000000 + 0.5) AS BIGINT) AS y
-           FROM events),
-         pooled AS (
-           SELECT g, x, SUM(CAST(y AS HUGEINT)) AS sy, COUNT(*) AS w
-           FROM base GROUP BY 1, 2),
-         pref AS (
-           SELECT g, x, sy, w,
-             ROW_NUMBER() OVER (PARTITION BY g ORDER BY x) AS i,
-             SUM(sy) OVER (PARTITION BY g ORDER BY x
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s,
-             SUM(w) OVER (PARTITION BY g ORDER BY x
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw
-           FROM pooled),
-         pairs AS (
-           SELECT l.g, l.i AS j, r.i AS k,
-             CAST(r.s - (l.s - l.sy) AS DOUBLE)
-               / CAST(r.cw - (l.cw - l.w) AS DOUBLE) AS a
-           FROM pref l JOIN pref r ON l.g = r.g AND l.i <= r.i),
-         sm AS (
-           SELECT g, j, k, MIN(a) OVER (PARTITION BY g, j ORDER BY k DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m
-           FROM pairs),
-         ft AS (SELECT g, k, MAX(m) AS fit FROM sm GROUP BY 1, 2)
-         SELECT p.g AS event_type, CAST(p.x AS DOUBLE) AS x, p.w AS n,
-           round(CAST(p.sy AS DOUBLE) / (1000000.0 * CAST(p.w AS DOUBLE)), 9) AS y_mean,
-           round(ft.fit / 1000000.0, 9) AS fit
-         FROM pref p JOIN ft ON p.g = ft.g AND p.i = ft.k""",
-
-    "q242_calibration" ->
-      """WITH e AS (
-           SELECT (user_id % 2 = 1) AS p, CAST(value AS DOUBLE) / 500.0 AS pr
-           FROM events),
-         b AS (
-           SELECT LEAST(GREATEST(CAST(floor(pr * 10) AS BIGINT), 0), 9) AS bin,
-             CAST(floor(pr * 1000000 + 0.5) AS BIGINT) AS pq, p
-           FROM e),
-         a AS (
-           SELECT bin, COUNT(*) AS n, COUNT(*) FILTER (WHERE p) AS n_pos,
-             SUM(CAST(pq AS HUGEINT)) AS sp
-           FROM b GROUP BY 1)
-         SELECT bin, n, n_pos,
-           round(CAST(sp AS DOUBLE) / (1000000.0 * CAST(n AS DOUBLE)), 9) AS conf,
-           round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 9) AS acc,
-           round(abs(CAST(sp AS DOUBLE) / (1000000.0 * CAST(n AS DOUBLE))
-             - CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS gap
-         FROM a""",
-
-    "q192_ann_recall" -> OracleGen.annRecallSql(),
-    "q193_kmeanspp_round" -> OracleGen.kmeansOversampleSql(),
-
-    "q50_audio" ->
-      """SELECT doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_samples,
-         CAST(8000 AS INT) AS sample_rate,
-         octet_length(encode(text)) / 8000.0 AS duration_s,
-         CASE WHEN octet_length(encode(text)) = 0 THEN 0.0
-              ELSE sqrt(CAST(list_sum(
-                     [(ord(substr(text, i, 1)) - 128) * (ord(substr(text, i, 1)) - 128)
-                      for i in generate_series(1, length(text))]) AS DOUBLE)
-                   / octet_length(encode(text))) END AS rms
-         FROM documents""",
-
-    "q51_sample_hash" ->
-      """SELECT doc_id, source FROM documents
-         WHERE substr(md5('0' || chr(0) || CAST(doc_id AS VARCHAR)), 1, 4) < '4000'""",
-
-    // frame layout mirror of Multimodal.encodeVideo/decodeVideo
-    // (stride 2): nf = min(n/64+1, 8) frames, last takes the
-    // remainder; dims flen%320+1 × flen%240+1; pixels tile the slice
-    // bytes, so pixel sums are cycles·sliceSum + prefixSum(rem)
-    "q54_video" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
-         fr AS (
-           SELECT doc_id, text, n, least(n // 64 + 1, 8) AS nf,
-             unnest(generate_series(0, least(n // 64 + 1, 8) - 1)) AS f
-           FROM d),
-         fx AS (
-           SELECT doc_id, text, nf, f,
-             CASE WHEN f < nf - 1 THEN 64 ELSE n - 64 * (nf - 1) END AS flen
-           FROM fr WHERE f % 2 = 0),
-         px AS (
-           SELECT doc_id, nf,
-             CASE WHEN flen = 0 THEN CAST(1 AS BIGINT)
-                  ELSE CAST((flen % 320 + 1) * (flen % 240 + 1) AS BIGINT) END AS pix,
-             CASE WHEN flen = 0 THEN CAST(0 AS BIGINT)
-                  ELSE CAST(((flen % 320 + 1) * (flen % 240 + 1)) // flen AS BIGINT)
-                       * list_sum([ord(substr(text, 64 * f + j, 1))
-                                   for j in generate_series(1, flen)])
-                       + COALESCE(list_sum([ord(substr(text, 64 * f + j, 1))
-                                   for j in generate_series(1,
-                                     ((flen % 320 + 1) * (flen % 240 + 1)) % flen)]), 0)
-             END AS psum
-           FROM fx)
-         SELECT doc_id, CAST(MAX(nf) AS INT) AS n_frames,
-           CAST(COUNT(*) AS INT) AS n_sampled,
-           CAST(SUM(pix) AS BIGINT) AS sampled_pixels,
-           CASE WHEN SUM(pix) = 0 THEN 0.0
-                ELSE CAST(SUM(psum) AS DOUBLE) / CAST(SUM(pix) AS DOUBLE) END AS mean_sampled
-         FROM px GROUP BY doc_id""",
-
-    "q52_band_left" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts)//1000 AS tus, value FROM events),
-         c AS (SELECT user_id, tus AS cus, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS bus, value AS buy_value FROM e WHERE event_type = 'purchase')
-         SELECT c.user_id, make_timestamp(cus) AS click_ts, click_value,
-           make_timestamp(bus) AS buy_ts, buy_value
-         FROM c LEFT JOIN b ON c.user_id = b.user_id AND abs(cus - bus) <= 1800000000""",
-
-    "q53_asof_tolerance" ->
-      """WITH e AS (SELECT user_id, event_type,
-                      make_timestamp(epoch_ns(ts)//1000) AS tus, value FROM events),
-         c AS (SELECT user_id, tus AS click_ts, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS buy_ts, value AS buy_value FROM e WHERE event_type = 'purchase')
-         SELECT c.user_id, click_ts, click_value, m.buy_ts, m.buy_value
-         FROM c LEFT JOIN LATERAL (
-           SELECT b.buy_ts, b.buy_value FROM b
-           WHERE b.user_id = c.user_id AND b.buy_ts <= c.click_ts
-             AND b.buy_ts >= c.click_ts - INTERVAL '10 minutes'
-           ORDER BY b.buy_ts DESC LIMIT 1) m ON TRUE""",
-
-    "q27_ann_bruteforce" ->
-      """SELECT query_id, neighbor_id, rank FROM (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id) AS INT) AS rank
-           FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-           WHERE q.vec_id < 8)
-         WHERE rank <= 10""",
-
-    "q29_text_langid" ->
-      """WITH t AS (
-           SELECT doc_id, lang, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         sc AS (
-           SELECT doc_id, lang,
-             CAST(len(list_filter(w, x -> list_contains(['the','a','big'], x))) AS INT) AS s_en,
-             CAST(len(list_filter(w, x -> list_contains(['query','data','line'], x))) AS INT) AS s_fr,
-             CAST(len(list_filter(w, x -> list_contains(['slow','agg','vector'], x))) AS INT) AS s_es,
-             CAST(len(list_filter(w, x -> list_contains(['customer','hash','column'], x))) AS INT) AS s_de,
-             CAST(len(list_filter(w, x -> list_contains(['join','small','scan'], x))) AS INT) AS s_zh
-           FROM t)
-         SELECT doc_id, lang, s_en, s_fr, s_es, s_de, s_zh, pred_lang,
-           (pred_lang = lang) AS is_match
-         FROM (
-           SELECT *, CASE
-             WHEN s_en >= s_fr AND s_en >= s_es AND s_en >= s_de AND s_en >= s_zh THEN 'en'
-             WHEN s_fr >= s_es AND s_fr >= s_de AND s_fr >= s_zh THEN 'fr'
-             WHEN s_es >= s_de AND s_es >= s_zh THEN 'es'
-             WHEN s_de >= s_zh THEN 'de'
-             ELSE 'zh' END AS pred_lang
-           FROM sc)""",
-
-    "q30_text_quality" ->
-      """WITH t AS (
-           SELECT doc_id, text, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents)
-         SELECT doc_id,
-           CAST(length(text) AS INT) AS n_chars_m,
-           CAST(len(w) AS INT) AS n_words,
-           CAST(length(text) AS DOUBLE) / len(w) AS avg_word_len,
-           CAST(len(regexp_extract_all(text, '[.!?,;:]')) AS INT) AS n_punct,
-           CAST(len(list_filter(w, x -> list_contains(['the','a'], x))) AS INT) AS stop_cnt,
-           CAST(len(list_filter(w, x -> list_contains(['the','a'], x))) AS DOUBLE) / len(w) AS stop_ratio,
-           CASE WHEN len(w) >= 20
-                 AND CAST(len(list_filter(w, x -> list_contains(['the','a'], x))) AS DOUBLE) / len(w) < 0.3
-                THEN CAST(1.0 AS DOUBLE)
-                WHEN len(w) >= 5 THEN CAST(0.5 AS DOUBLE)
-                ELSE CAST(0.0 AS DOUBLE) END AS quality_score
-         FROM t""",
-
-    "q31_text_tokens" ->
-      """SELECT doc_id,
-         CAST(len(string_split_regex(trim(text), '\s+')) AS INT) AS ws_tokens,
-         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]')) AS INT) AS re_tokens,
-         CAST(ceil(length(text) / 4.0) AS INT) AS bpe_est
-         FROM documents""",
-
-    "q33_multimodal" ->
-      """SELECT doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         CAST(octet_length(encode(text)) % 320 + 1 AS INT) AS width,
-         CAST(octet_length(encode(text)) % 240 + 1 AS INT) AS height
-         FROM documents""",
-
-    "q34_skew_join" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, o_orderkey, o_totalprice
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey""",
-
-    "q37_supplier_revenue" ->
-      """SELECT n_name,
-         COUNT(DISTINCT s_suppkey) AS n_supp,
-         CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(18,4))) AS DOUBLE) AS sum_rev
-         FROM lineitem
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         GROUP BY 1""",
-
-    // split at >= gap (Spark session_window's exclusive end); window
-    // end = last event + gap
-    "q42_session_window" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts)//1000 AS tus FROM events),
-         l AS (SELECT user_id, tus,
-                 CASE WHEN LAG(tus) OVER w IS NULL OR tus - LAG(tus) OVER w >= 1800000000
-                      THEN 1 ELSE 0 END AS new_s
-               FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
-         s AS (SELECT user_id, tus,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus ROWS UNBOUNDED PRECEDING) AS sid
-               FROM l)
-         SELECT user_id, make_timestamp(MIN(tus)) AS session_start,
-           make_timestamp(MAX(tus) + 1800000000) AS session_end,
-           COUNT(*) AS n_events
-         FROM s GROUP BY user_id, sid""",
-
-    "q39_parse_dtypes" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-         CAST(n_regionkey AS BIGINT) AS n_regionkey
-         FROM nation""",
-
-    // same pair list as q25, then min-label components via recursive CTE
-    "q41_dedup_components" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                            for i in generate_series(1, len(w)-2)]) AS grams
-           FROM toks WHERE len(w) >= 3),
-         post AS (SELECT doc_id, unnest(grams) AS g FROM sh),
-         rare AS (SELECT g FROM post GROUP BY g HAVING COUNT(*) <= 20),
-         rpost AS (SELECT doc_id, g FROM post WHERE g IN (SELECT g FROM rare)),
-         cnt AS (SELECT doc_id, COUNT(*) AS n FROM rpost GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-           FROM rpost a JOIN rpost b ON a.g = b.g AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         top AS (
-           SELECT doc_a, doc_b FROM (
-             SELECT doc_a, doc_b,
-               ROW_NUMBER() OVER (
-                 ORDER BY CAST(common AS DOUBLE) / (ca.n + cb.n - common) DESC, doc_a, doc_b) AS rnk
-             FROM pairs
-             JOIN cnt ca ON doc_a = ca.doc_id
-             JOIN cnt cb ON doc_b = cb.doc_id)
-           WHERE rnk <= 100),
-         edges AS (SELECT doc_a AS a, doc_b AS b FROM top
-                   UNION SELECT doc_b, doc_a FROM top),
-         reach(node, lbl) AS (
-           SELECT a, a FROM edges
-           UNION
-           SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.b = r.node)
-         SELECT node, MIN(lbl) AS component FROM reach GROUP BY node""",
-
-    "q40_bucketed_join" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, o_orderkey, o_totalprice
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey""",
-
-    "q43_pii_scrub" ->
-      """WITH d AS (
-           SELECT doc_id,
-             text || ' contact user' || CAST(doc_id AS VARCHAR)
-                  || '@mail.example.com or 10.20.' || CAST(doc_id % 250 AS VARCHAR)
-                  || '.7 call +1 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-                  || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                  || ' v6 fe80::' || lower(hex(doc_id % 65536))
-                  || ' see https://ex.com/d/' || CAST(doc_id AS VARCHAR) || ' end' AS dirty
-           FROM documents),
-         s1 AS (SELECT doc_id, regexp_replace(dirty,
-             'https?://\S+', '<URL>', 'g') AS c FROM d),
-         s2 AS (SELECT doc_id, regexp_replace(c,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS c FROM s1),
-         s3 AS (SELECT doc_id, regexp_replace(c,
-             '(\+\d{1,3}[ -]?)?\(?\d{3}\)?[ -]\d{3}[ -]\d{4}\b', '<PHONE>', 'g') AS c FROM s2),
-         s4 AS (SELECT doc_id, regexp_replace(c,
-             '(([0-9a-fA-F]{1,4}:){7}[0-9a-fA-F]{1,4}|([0-9a-fA-F]{1,4}:)+:([0-9a-fA-F]{1,4}(:[0-9a-fA-F]{1,4})*)?|::([0-9a-fA-F]{1,4}(:[0-9a-fA-F]{1,4})*))', '<IPV6>', 'g') AS c FROM s3)
-         SELECT doc_id, regexp_replace(c,
-             '\b\d{1,3}(\.\d{1,3}){3}\b', '<IP>', 'g') AS clean
-         FROM s4""",
-
-    "q44_text_repetition" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         uni AS (
-           SELECT doc_id, MAX(c) AS top_word, SUM(c) AS n_tok, COUNT(*) AS n_distinct FROM (
-             SELECT doc_id, tok, COUNT(*) AS c
-             FROM (SELECT doc_id, unnest(w) AS tok FROM toks) GROUP BY 1, 2)
-           GROUP BY 1),
-         bi AS (
-           SELECT doc_id, MAX(c) AS top_bigram, SUM(c) AS n_bi FROM (
-             SELECT doc_id, bg, COUNT(*) AS c FROM (
-               SELECT doc_id,
-                 unnest([w[i] || ' ' || w[i+1] for i in generate_series(1, len(w)-1)]) AS bg
-               FROM toks WHERE len(w) >= 2) GROUP BY 1, 2)
-           GROUP BY 1)
-         SELECT uni.doc_id,
-           CAST(top_word AS DOUBLE) / n_tok AS top_word_mass,
-           CAST(n_distinct AS DOUBLE) / n_tok AS distinct_ratio,
-           CAST(top_bigram AS DOUBLE) / n_bi AS top_bigram_mass
-         FROM uni JOIN bi ON uni.doc_id = bi.doc_id""",
-
-    "q45_pack_sequences" ->
-      """SELECT doc_id, shard, n_tokens, tok_offset,
-           CAST(FLOOR(tok_offset / 2048.0) AS BIGINT) AS chunk
-         FROM (
-           SELECT doc_id, doc_id % 8 AS shard, n_tokens,
-             CAST(COALESCE(SUM(n_tokens) OVER (
-               PARTITION BY doc_id % 8 ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_offset
-           FROM (
-             SELECT doc_id,
-               CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS INT) AS n_tokens
-             FROM documents))""",
-
-    "q46_split_hash" ->
-      """SELECT doc_id,
-           CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc' THEN 'train'
-                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
-                ELSE 'test' END AS split
-         FROM documents""",
-
-    "q47_band_join" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts)//1000 AS tus, value FROM events),
-         c AS (SELECT user_id, tus AS cus, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS bus, value AS buy_value FROM e WHERE event_type = 'purchase')
-         SELECT c.user_id, make_timestamp(cus) AS click_ts, click_value,
-           make_timestamp(bus) AS buy_ts, buy_value
-         FROM c JOIN b ON c.user_id = b.user_id AND abs(cus - bus) <= 1800000000""",
-
-    "q48_stream_join" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts)//1000 AS tus, value FROM events),
-         c AS (SELECT user_id, tus AS cus, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS bus, value AS buy_value FROM e WHERE event_type = 'purchase')
-         SELECT c.user_id, make_timestamp(cus) AS click_ts, click_value,
-           make_timestamp(bus) AS buy_ts, buy_value
-         FROM c JOIN b ON c.user_id = b.user_id
-           AND bus >= cus AND bus <= cus + 1800000000""",
-
-    "q49_mix_sources" ->
-      """SELECT doc_id, source FROM documents
-         WHERE source = 'src0'
-            OR (source = 'src1' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000')
-            OR (source = 'src2' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000')
-            OR (source = 'src3' AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '1999')""",
-
-    "q35_asof_join" ->
-      """WITH e AS (SELECT user_id, event_type,
-                      make_timestamp(epoch_ns(ts)//1000) AS tus, value FROM events),
-         c AS (SELECT user_id, tus AS click_ts, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS buy_ts, value AS buy_value FROM e WHERE event_type = 'purchase')
-         SELECT c.user_id, click_ts, click_value, buy_ts, buy_value
-         FROM c ASOF LEFT JOIN b ON c.user_id = b.user_id AND b.buy_ts <= c.click_ts""",
-
-    // aligned 10-token chunks; first occurrence (doc_id, pos) wins;
-    // documents rebuilt from surviving chunks in position order
-    "q55_chunk_dedup" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         ch AS (
-           SELECT doc_id, i - 1 AS pos, array_to_string(w[(i-1)*10+1 : i*10], ' ') AS chunk
-           FROM toks, unnest(generate_series(1,
-             (SELECT CAST(max(ceil(len(w) / 10.0)) AS BIGINT) FROM toks))) AS t(i)
-           WHERE i <= CAST(ceil(len(w) / 10.0) AS BIGINT)),
-         keep AS (
-           SELECT doc_id, pos, chunk,
-             ROW_NUMBER() OVER (PARTITION BY chunk ORDER BY doc_id, pos) AS rn
-           FROM ch),
-         reb AS (
-           SELECT doc_id, COUNT(*) AS n_kept,
-             string_agg(chunk, ' ' ORDER BY pos) AS clean_text
-           FROM keep WHERE rn = 1 GROUP BY doc_id)
-         SELECT t.doc_id, CAST(ceil(len(w) / 10.0) AS INT) AS n_chunks,
-           COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text
-         FROM toks t LEFT JOIN reb ON t.doc_id = reb.doc_id""",
-
-    // 8-gram overlap of train docs (doc_id % 10 != 0) vs the eval
-    // split (doc_id % 10 == 0); n_hits counts DISTINCT shared grams
-    "q56_decontaminate" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         g AS (
-           SELECT doc_id,
-             unnest(list_distinct([array_to_string(w[i : i+7], ' ')
-                                   for i in generate_series(1, len(w) - 7)])) AS g
-           FROM toks WHERE len(w) >= 8),
-         ev AS (SELECT DISTINCT g FROM g WHERE doc_id % 10 = 0),
-         hits AS (
-           SELECT doc_id, COUNT(*) AS n_hits FROM g
-           WHERE doc_id % 10 <> 0 AND g IN (SELECT g FROM ev)
-           GROUP BY doc_id)
-         SELECT t.doc_id, COALESCE(h.n_hits, 0) AS n_hits,
-           COALESCE(h.n_hits, 0) > 0 AS contaminated
-         FROM (SELECT doc_id FROM documents WHERE doc_id % 10 <> 0) t
-         LEFT JOIN hits h ON t.doc_id = h.doc_id""",
-
-    // batch (doc_id % 5 == 0) vs corpus membership on the sorted
-    // distinct-token-set md5 key; bloom is a prefilter only, so the
-    // oracle is the exact join semantics
-    "q57_dedup_incremental" ->
-      """WITH k AS (
-           SELECT doc_id,
-             md5(array_to_string(list_sort(list_distinct(
-               string_split_regex(lower(trim(text)), '\s+'))), ' ')) AS set_key
-           FROM documents)
-         SELECT b.doc_id, b.set_key,
-           NOT EXISTS (SELECT 1 FROM k c WHERE c.doc_id % 5 <> 0
-                       AND c.set_key = b.set_key) AS is_new
-         FROM k b WHERE b.doc_id % 5 = 0""",
-
-    // the identical regex chain as extractHtmlText, over the same
-    // planted page wrapper
-    "q59_text_extract" ->
-      """WITH page AS (
-           SELECT doc_id,
-             '<html><head><script>var x = ' || CAST(doc_id AS VARCHAR) ||
-             ';
-load();</script><style>p { color: red }</style></head><body><h1>Doc &amp; entry</h1><p>' ||
-             text || '</p><a href="/d/' || CAST(doc_id AS VARCHAR) ||
-             '">1 &lt; 2&nbsp;link</a></body></html>' AS page
-           FROM documents),
-         s1 AS (SELECT doc_id,
-                  regexp_replace(page, '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS t
-                FROM page),
-         s2 AS (SELECT doc_id,
-                  regexp_replace(t, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS t
-                FROM s1),
-         s3 AS (SELECT doc_id, regexp_replace(t, '<[^>]+>', ' ', 'g') AS t FROM s2),
-         s4 AS (SELECT doc_id,
-                  regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-                    t, '&amp;', '&', 'g'), '&lt;', '<', 'g'), '&gt;', '>', 'g'),
-                    '&quot;', '"', 'g'), '&nbsp;', ' ', 'g') AS t
-                FROM s3)
-         SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g')) AS clean FROM s4""",
-
-    // the q30 quality score as the keep probability; membership is the
-    // same seed-prefixed NUL-separated md5 contract as q51
-    "q60_quality_sample" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         q AS (
-           SELECT doc_id,
-             CASE WHEN len(w) >= 20
-                   AND CAST(len(list_filter(w, x -> list_contains(['the','a'], x))) AS DOUBLE) / len(w) < 0.3
-                  THEN CAST(1.0 AS DOUBLE)
-                  WHEN len(w) >= 5 THEN CAST(0.5 AS DOUBLE)
-                  ELSE CAST(0.0 AS DOUBLE) END AS quality_score
-           FROM t)
-         SELECT doc_id, quality_score FROM q
-         WHERE ('0x' || substr(md5('0' || chr(0) || CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-               < floor(quality_score * 65536)""",
-
-    // round trip is lossless, so the oracle is the original table
-    "q61_jsonl" ->
-      """SELECT doc_id, text, lang, source FROM documents""",
-
-    // materialized packing: per-shard prefix-sum offsets → per-doc
-    // window spans (integer-div chunk range, boundary cuts) → ordered
-    // span concatenation per (shard, chunk). generate_series bounds are
-    // corpus-derived constants (DuckDB lacks lateral series) with the
-    // real chunk range applied in WHERE.
-    "q62_pack_emit" ->
-      """WITH toks AS (
-           SELECT doc_id, doc_id % 8 AS shard,
-                  string_split_regex(lower(trim(text)), '\s+') AS w
-           FROM documents),
-         o AS (
-           SELECT doc_id, shard, w, CAST(len(w) AS BIGINT) AS n,
-             CAST(COALESCE(SUM(len(w)) OVER (PARTITION BY shard ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-           FROM toks),
-         sp AS (
-           SELECT shard, i AS chunk,
-             GREATEST(off, i * 200) - i * 200 AS chunk_offset,
-             LEAST(off + n, (i + 1) * 200) - GREATEST(off, i * 200) AS span_tokens,
-             array_to_string(
-               w[CAST(GREATEST(off, i * 200) - off + 1 AS BIGINT) :
-                 CAST(LEAST(off + n, (i + 1) * 200) - off AS BIGINT)], ' ') AS span_text
-           FROM o, unnest(generate_series(0,
-             (SELECT CAST(MAX((off + n - 1) // 200) AS BIGINT) FROM o))) AS t(i)
-           WHERE n > 0 AND i BETWEEN off // 200 AND (off + n - 1) // 200)
-         SELECT shard, chunk, COUNT(*) AS n_docs,
-           CAST(SUM(span_tokens) AS BIGINT) AS n_tokens,
-           string_agg(span_text, ' ' ORDER BY chunk_offset) AS packed_text
-         FROM sp GROUP BY 1, 2""",
-
-    // rank-by-rank BPE replay: each rank's merge is a string replace
-    // over space-delimited symbols, repeated until it stops applying
-    // (CASE keeps r when rep changed), then the next rank; token count
-    // is spaces - 1 at the terminal rank. Merges literal = Bpe.Merges.
-    "q63_bpe_tokens" ->
-      """WITH RECURSIVE m(rank, a, b) AS (
-           SELECT * FROM (VALUES
-             (1,'t','h'), (2,'th','e'), (3,'n','d'), (4,'i','n'),
-             (5,'a','nd'), (6,'s','t'), (7,'s','h'), (8,'n','s'),
-             (9,'l','e'), (10,'e','r'), (11,'t','i'), (12,'r','e'),
-             (13,'re','a'), (14,'in','g'), (15,'d','s'), (16,'a','r'),
-             (17,'u','f'), (18,'uf','f'), (19,'uff','le'), (20,'sh','uffle'),
-             (21,'r','o'), (22,'o','l'), (23,'l','l'), (24,'e','n'),
-             (25,'c','l'), (26,'c','a'), (27,'a','t'), (28,'y','s'),
-             (29,'w','s'), (30,'w','i'), (31,'wi','nd'), (32,'wind','o'),
-             (33,'u','st'), (34,'ust','er'), (35,'u','m'), (36,'u','er'),
-             (37,'uer','y'), (38,'ti','ti'), (39,'titi','o'), (40,'titio','ns'),
-             (41,'t','s'), (42,'st','rea'), (43,'strea','m'), (44,'stream','ing'),
-             (45,'shuffle','s'), (46,'sh','ing'), (47,'s','p'), (48,'s','i'))),
-         w AS (
-           SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-           FROM documents WHERE doc_id % 100 = 0),
-         wc AS (SELECT doc_id, word, COUNT(*) AS cnt FROM w
-                WHERE word <> '' GROUP BY 1, 2),
-         bpe AS (
-           SELECT doc_id, word, cnt,
-             ' ' || array_to_string(string_split(word, ''), ' ') || ' ' AS s, 1 AS r
-           FROM wc
-           UNION ALL
-           SELECT doc_id, word, cnt,
-             CASE WHEN rep <> s THEN rep ELSE s END,
-             CASE WHEN rep <> s THEN r ELSE r + 1 END
-           FROM (
-             SELECT b.doc_id, b.word, b.cnt, b.s, b.r,
-               replace(b.s, ' ' || m.a || ' ' || m.b || ' ',
-                       ' ' || m.a || m.b || ' ') AS rep
-             FROM bpe b JOIN m ON m.rank = b.r) t),
-         fin AS (
-           SELECT doc_id, cnt,
-             (length(s) - length(replace(s, ' ', ''))) - 1 AS ntok
-           FROM bpe WHERE r = 49)
-         SELECT d.doc_id, CAST(COALESCE(SUM(cnt), 0) AS BIGINT) AS n_ws_tokens,
-           CAST(COALESCE(SUM(cnt * ntok), 0) AS BIGINT) AS n_bpe_tokens
-         FROM (SELECT doc_id FROM documents WHERE doc_id % 100 = 0) d
-         LEFT JOIN fin ON fin.doc_id = d.doc_id
-         GROUP BY 1""",
-
-    // bigram LM over the seed split; per-bigram ln terms quantized to
-    // DECIMAL(20,6) before the sum (exact, order-insensitive on both
-    // engines), mean rounded to 4 decimals
-    "q65_lm_perplexity" ->
-      """WITH tok AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         bg AS (
-           SELECT doc_id, unnest([array_to_string(w[i : i+1], ' ')
-                                  for i in generate_series(1, len(w) - 1)]) AS bg
-           FROM tok WHERE len(w) >= 2),
-         seedbg AS (SELECT bg, COUNT(*) AS c2 FROM bg WHERE doc_id % 10 = 0 GROUP BY 1),
-         ctx AS (SELECT split_part(bg, ' ', 1) AS w1, SUM(c2) AS c1 FROM seedbg GROUP BY 1),
-         v AS (SELECT COUNT(DISTINCT u.t) AS vcab
-               FROM (SELECT unnest(w) AS t FROM tok WHERE doc_id % 10 = 0) u),
-         terms AS (
-           SELECT b.doc_id, COALESCE(s.c2, 0) AS c2, COALESCE(c.c1, 0) AS c1
-           FROM bg b
-           LEFT JOIN seedbg s ON b.bg = s.bg
-           LEFT JOIN ctx c ON split_part(b.bg, ' ', 1) = c.w1),
-         sc AS (
-           SELECT doc_id, COUNT(*) AS n_bigrams,
-             SUM(CASE WHEN c2 = 0 THEN 1 ELSE 0 END) AS oov_bigrams,
-             SUM(CAST(ln((c2 + 0.5) / (c1 + 0.5 * (SELECT vcab FROM v))) AS DECIMAL(20,6))) AS s
-           FROM terms GROUP BY 1)
-         SELECT t.doc_id,
-           CAST(COALESCE(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-           CAST(COALESCE(oov_bigrams, 0) AS BIGINT) AS oov_bigrams,
-           round(-CAST(s AS DOUBLE) / n_bigrams, 4) AS nll
-         FROM tok t LEFT JOIN sc ON t.doc_id = sc.doc_id""",
-
-    "q232_stupid_backoff" ->
-      """WITH tok AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         tg AS (
-           SELECT doc_id, unnest([array_to_string(w[i : i+2], ' ')
-                                  for i in generate_series(1, len(w) - 2)]) AS tg
-           FROM tok WHERE len(w) >= 3),
-         bgall AS (
-           SELECT doc_id, unnest([array_to_string(w[i : i+1], ' ')
-                                  for i in generate_series(1, len(w) - 1)]) AS bg
-           FROM tok WHERE len(w) >= 2),
-         tri AS (SELECT tg, COUNT(*) AS c3 FROM tg WHERE doc_id % 10 = 0 GROUP BY 1),
-         bi AS (SELECT bg, COUNT(*) AS c2 FROM bgall WHERE doc_id % 10 = 0 GROUP BY 1),
-         uni AS (SELECT t, COUNT(*) AS c1
-                 FROM (SELECT unnest(w) AS t FROM tok WHERE doc_id % 10 = 0) GROUP BY 1),
-         nv AS (SELECT (SELECT SUM(len(w)) FROM tok WHERE doc_id % 10 = 0) AS ntok,
-                       (SELECT COUNT(*) FROM uni) AS v),
-         terms AS (
-           SELECT g.doc_id,
-             COALESCE(t3.c3, 0) AS c3, COALESCE(bc.c2, 0) AS c2ctx,
-             COALESCE(bl.c2, 0) AS c2last, COALESCE(um.c1, 0) AS c1mid,
-             COALESCE(ul.c1, 0) AS c1last
-           FROM tg g
-           LEFT JOIN tri t3 ON g.tg = t3.tg
-           LEFT JOIN bi bc ON array_to_string(string_split(g.tg, ' ')[1:2], ' ') = bc.bg
-           LEFT JOIN bi bl ON array_to_string(string_split(g.tg, ' ')[2:3], ' ') = bl.bg
-           LEFT JOIN uni um ON string_split(g.tg, ' ')[2] = um.t
-           LEFT JOIN uni ul ON string_split(g.tg, ' ')[3] = ul.t),
-         sc AS (
-           SELECT doc_id, COUNT(*) AS n_trigrams,
-             SUM(CASE WHEN c3 = 0 AND c2last = 0 THEN 1 ELSE 0 END) AS floor_hits,
-             SUM(CAST(CASE
-               WHEN c3 > 0 THEN ln(CAST(c3 AS DOUBLE) / CAST(c2ctx AS DOUBLE))
-               WHEN c2last > 0 THEN ln(CAST(0.4 AS DOUBLE) * CAST(c2last AS DOUBLE) / CAST(c1mid AS DOUBLE))
-               ELSE ln(CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE) * (CAST(c1last AS DOUBLE) + 1.0)
-                       / CAST((SELECT ntok + v FROM nv) AS DOUBLE))
-             END AS DECIMAL(20,6))) AS s
-           FROM terms GROUP BY 1)
-         SELECT t.doc_id,
-           CAST(COALESCE(n_trigrams, 0) AS BIGINT) AS n_trigrams,
-           CAST(COALESCE(floor_hits, 0) AS BIGINT) AS floor_hits,
-           round(-CAST(s AS DOUBLE) / n_trigrams, 4) AS sb_nll
-         FROM tok t LEFT JOIN sc ON t.doc_id = sc.doc_id""",
-
-    // overlapping 8-token windows; first occurrence by (doc_id, pos)
-    // wins; duplicate windows expand to token indices (constant-bound
-    // series — DuckDB lacks lateral ranges), docs rebuilt from kept
-    // tokens
-    "q66_span_dedup" ->
-      """WITH b AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w,
-             CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS n
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS pos, array_to_string(w[i : i+7], ' ') AS g
-           FROM b, unnest(generate_series(1,
-             (SELECT CAST(MAX(n) AS BIGINT) FROM b))) t(i)
-           WHERE n >= 8 AND i <= n - 7),
-         d AS (
-           SELECT doc_id, pos FROM (
-             SELECT doc_id, pos,
-               ROW_NUMBER() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn
-             FROM g) WHERE rn > 1),
-         rem AS (
-           SELECT DISTINCT doc_id, pos + i AS idx
-           FROM d, unnest(generate_series(0, 7)) t(i)),
-         tk AS (
-           SELECT doc_id, i AS idx, w[i] AS tok
-           FROM b, unnest(generate_series(1,
-             (SELECT CAST(MAX(n) AS BIGINT) FROM b))) t(i)
-           WHERE i <= n),
-         reb AS (
-           SELECT tk.doc_id, string_agg(tk.tok, ' ' ORDER BY tk.idx) AS clean_text
-           FROM tk LEFT JOIN rem ON tk.doc_id = rem.doc_id AND tk.idx = rem.idx
-           WHERE rem.idx IS NULL GROUP BY 1),
-         rc AS (SELECT doc_id, COUNT(*) AS n_removed FROM rem GROUP BY 1)
-         SELECT b.doc_id, n AS n_tokens,
-           CAST(COALESCE(rc.n_removed, 0) AS BIGINT) AS n_removed,
-           COALESCE(reb.clean_text, '') AS clean_text
-         FROM b LEFT JOIN reb ON b.doc_id = reb.doc_id
-         LEFT JOIN rc ON b.doc_id = rc.doc_id""",
-
-    // idf quantized DECIMAL(20,6) per term; score = tf * idf (decimal,
-    // exact) ranks identically in both engines; ties break on term
-    "q67_tfidf_terms" ->
-      """WITH tf AS (
-           SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-           FROM documents),
-         tfc AS (SELECT doc_id, term, COUNT(*) AS tf FROM tf GROUP BY 1, 2),
-         idf AS (
-           SELECT term,
-             CAST(ln(((SELECT COUNT(*) FROM documents) + 1.0) / (COUNT(*) + 1.0))
-               AS DECIMAL(20,6)) AS idf
-           FROM tfc GROUP BY 1),
-         sc AS (
-           SELECT tfc.doc_id, tfc.term, tfc.tf, tfc.tf * idf.idf AS score
-           FROM tfc JOIN idf ON tfc.term = idf.term),
-         rk AS (
-           SELECT doc_id, term, tf, score,
-             ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rnk
-           FROM sc)
-         SELECT doc_id, term, tf, round(CAST(score AS DOUBLE), 4) AS score,
-           CAST(rnk AS INT) AS rnk
-         FROM rk WHERE rnk <= 5""",
-
-    // per-dim min/max affine int8 codes; round() before the int cast on
-    // both engines (casting an integral double can't drift)
-    "q68_embed_quantize" ->
-      """WITH x AS (
-           SELECT vec_id, CAST(i AS INT) AS dim, CAST(embedding[i] AS DOUBLE) AS v
-           FROM embeddings, unnest(generate_series(1, 64)) t(i)),
-         mm AS (SELECT dim, MIN(v) AS lo, MAX(v) AS hi FROM x GROUP BY 1)
-         SELECT x.vec_id, x.dim,
-           CASE WHEN hi = lo THEN 0
-                ELSE CAST(round((v - lo) / (hi - lo) * 255) AS INT) - 128 END AS q
-         FROM x JOIN mm ON x.dim = mm.dim""",
-
-    // same ASOF semantics as q35, times as µs longs
-    "q64_asof_bucketed" ->
-      """WITH e AS (SELECT user_id, event_type,
-                      epoch_ns(ts)//1000 AS tus, value FROM events),
-         c AS (SELECT user_id, tus AS cus, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS bus, value AS buy_value FROM e WHERE event_type = 'purchase')
-         SELECT c.user_id, cus, click_value, bus, buy_value
-         FROM c ASOF LEFT JOIN b ON c.user_id = b.user_id AND b.bus <= c.cus""",
-
-    // quantile_cont shares percentile's p·(n−1) interpolation; both
-    // engines quantize the double through DECIMAL(18,4) (see Profile).
-    // SUM(bigint) is HUGEINT in DuckDB → cast back to BIGINT.
-    "q71_corpus_stats" ->
-      """SELECT source, CAST(GROUPING(source) AS INT) AS is_total,
-         COUNT(*) AS n_rows, CAST(SUM(n_chars) AS BIGINT) AS total,
-         CAST(CAST(quantile_cont(n_chars, 0.5) AS DECIMAL(18,4)) AS DOUBLE) AS p50,
-         CAST(CAST(quantile_cont(n_chars, 0.9) AS DECIMAL(18,4)) AS DOUBLE) AS p90,
-         CAST(CAST(quantile_cont(n_chars, 0.99) AS DECIMAL(18,4)) AS DOUBLE) AS p99
-         FROM documents GROUP BY ROLLUP(source)""",
-
-    "q72_rolling_window" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_ns(ts)//1000 AS tus,
-                      CAST(value AS DECIMAL(18,4)) AS v FROM events)
-         SELECT event_id, user_id, tus,
-           COUNT(*) OVER w AS n_win,
-           CAST(SUM(v) OVER w AS DOUBLE) AS sum_win
-         FROM e
-         WINDOW w AS (PARTITION BY user_id ORDER BY tus
-                      RANGE BETWEEN 300000000 PRECEDING AND CURRENT ROW)""",
-
-    "q73_diverse_sample" -> OracleGen.diverseSampleSql(),
-
-    "q74_novelty" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                            for i in generate_series(1, len(w)-2)]) AS grams
-           FROM toks WHERE len(w) >= 3),
-         post AS (SELECT doc_id, unnest(grams) AS g FROM sh),
-         perdoc AS (SELECT doc_id, COUNT(*) AS n_grams FROM post GROUP BY 1),
-         gd AS (SELECT g, COUNT(*) AS df, MIN(doc_id) AS owner FROM post GROUP BY g),
-         novel AS (SELECT owner AS doc_id, COUNT(*) AS n_novel FROM gd WHERE df = 1 GROUP BY 1)
-         SELECT p.doc_id, p.n_grams, COALESCE(n.n_novel, 0) AS n_novel,
-           CAST(COALESCE(n.n_novel, 0) AS DOUBLE) / p.n_grams AS novelty
-         FROM perdoc p LEFT JOIN novel n ON p.doc_id = n.doc_id""",
-
-    "q75_adaptive_filter" ->
-      """WITH t AS (
-           SELECT doc_id, source,
-             string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         sc AS (
-           SELECT doc_id, source,
-             CAST(len(list_filter(w, x -> list_contains(['the','a'], x))) AS DOUBLE)
-               / len(w) AS stop_ratio
-           FROM t),
-         thr AS (
-           SELECT source, CAST(quantile_cont(stop_ratio, 0.25) AS DECIMAL(18,6)) AS thr_d
-           FROM sc GROUP BY source)
-         SELECT doc_id, sc.source, stop_ratio, CAST(thr_d AS DOUBLE) AS thr
-         FROM sc JOIN thr ON sc.source = thr.source
-         WHERE CAST(stop_ratio AS DECIMAL(18,6)) >= thr_d""",
-
-    // floor(v·1e12 + 0.5) is tie-free pure-IEEE quantization (HALF_UP
-    // decimal casts disagree across engines on floats' exact .5 ties)
-    "q76_label_centroids" ->
-      """WITH x AS (
-           SELECT label, CAST(i AS INT) AS dim,
-             CAST(floor(CAST(embedding[i] AS DOUBLE) * 1e12 + 0.5) AS DECIMAL(38,0)) AS v
-           FROM embeddings, unnest(generate_series(1, 64)) t(i))
-         SELECT label, dim, COUNT(*) AS n_vecs,
-           CAST(SUM(v) AS DOUBLE) / 1e12 / COUNT(*) AS c
-         FROM x GROUP BY 1, 2""",
-
-    // every event lands in the 4 slide-aligned windows whose start is
-    // in (ts - 1h, ts]: floor-align to the 15-min grid, back off k slides
-    "q77_stream_sliding" ->
-      """WITH e AS (SELECT event_type, epoch_ns(ts)//1000 AS tus, value FROM events),
-         w AS (SELECT event_type, value,
-                 (tus // 900000000) * 900000000 - k * 900000000 AS ws
-               FROM e, unnest(generate_series(0, 3)) t(k))
-         SELECT make_timestamp(ws) AS window_start, event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-         FROM w GROUP BY 1, 2""",
-
-    "q78_token_budget_mix" ->
-      """WITH t AS (
-           SELECT doc_id, source,
-             len(string_split_regex(trim(text), '\s+')) AS n_tok FROM documents
-           WHERE source IN ('src0','src1','src2','src3')),
-         tot AS (SELECT source, SUM(n_tok) AS tot FROM t GROUP BY 1),
-         f AS (
-           SELECT t.doc_id, t.source, CAST(t.n_tok AS INT) AS n_tok,
-             least(1.0, CAST(CASE t.source
-                 WHEN 'src0' THEN 100000 WHEN 'src1' THEN 1000
-                 WHEN 'src2' THEN 500 ELSE 100 END AS DOUBLE)
-               / CAST(tot AS DOUBLE)) AS keep_frac
-           FROM t JOIN tot ON t.source = tot.source)
-         SELECT doc_id, source, n_tok, keep_frac FROM f
-         WHERE ('0x' || substr(md5('0' || chr(0) || CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-               < floor(keep_frac * 65536)""",
-
-    // chr(769)/chr(776) = combining acute/diaeresis, chr(7) = BEL,
-    // chr(9) = tab — the identical plant as the Spark escapes
-    "q79_text_normalize" ->
-      """WITH d AS (
-           SELECT doc_id,
-             text || ' cafe' || chr(769) || ' nai' || chr(776) || 've' || chr(7)
-                  || '  x ' || chr(9) || ' y ' || CAST(doc_id AS VARCHAR) AS dirty
-           FROM documents)
-         SELECT doc_id,
-           trim(regexp_replace(regexp_replace(nfc_normalize(dirty),
-             '[\x00-\x1f\x7f]', ' ', 'g'), '\s+', ' ', 'g')) AS clean
-         FROM d""",
-
-    "q80_source_overlap" ->
-      """WITH toks AS (
-           SELECT source, string_split_regex(lower(trim(text)), '\s+') AS w
-           FROM documents),
-         p AS (
-           SELECT DISTINCT src, g FROM (
-             SELECT source AS src,
-               unnest(list_distinct([array_to_string(w[i : i+7], ' ')
-                                     for i in generate_series(1, len(w) - 7)])) AS g
-             FROM toks WHERE len(w) >= 8))
-         SELECT a.src AS src_a, b.src AS src_b, COUNT(*) AS n_shared
-         FROM p a JOIN p b ON a.g = b.g AND a.src < b.src
-         GROUP BY 1, 2""",
-
-    "q81_pmi_collocations" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         tot AS (
-           SELECT SUM(len(w)) AS nu, SUM(greatest(len(w) - 1, 0)) AS nb FROM toks),
-         uni AS (
-           SELECT t, COUNT(*) AS c FROM (SELECT unnest(w) AS t FROM toks) GROUP BY t),
-         bi AS (
-           SELECT bg, COUNT(*) AS cab FROM (
-             SELECT w[i] || ' ' || w[i+1] AS bg
-             FROM toks, unnest(generate_series(1, len(w) - 1)) s(i)
-             WHERE len(w) >= 2) GROUP BY bg
-           HAVING COUNT(*) >= 5),
-         scored AS (
-           SELECT bg, cab,
-             CAST(ln((CAST(cab AS DOUBLE) * nu * nu)
-                     / (CAST(nb AS DOUBLE) * ca.c * cb.c)) AS DECIMAL(20,6)) AS pmi_d
-           FROM bi
-           CROSS JOIN tot
-           JOIN uni ca ON ca.t = string_split(bg, ' ')[1]
-           JOIN uni cb ON cb.t = string_split(bg, ' ')[2])
-         SELECT bg, cab, pmi, rnk FROM (
-           SELECT bg, cab, CAST(pmi_d AS DOUBLE) AS pmi,
-             CAST(ROW_NUMBER() OVER (ORDER BY pmi_d DESC, bg) AS INT) AS rnk
-           FROM scored) WHERE rnk <= 100""",
-
-    "q82_asof_forward" ->
-      """WITH e AS (SELECT user_id, event_type,
-                      epoch_ns(ts)//1000 AS tus, value FROM events),
-         c AS (SELECT user_id, tus AS cus, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS bus, value AS buy_value FROM e WHERE event_type = 'purchase')
-         SELECT c.user_id, cus, click_value, bus, buy_value
-         FROM c ASOF LEFT JOIN b ON c.user_id = b.user_id AND b.bus >= c.cus""",
-
-    "q83_pivot" ->
-      """SELECT o_orderpriority,
-         CAST(SUM(CASE WHEN o_orderstatus = 'F'
-                       THEN CAST(o_totalprice AS DECIMAL(18,4)) END) AS DOUBLE) AS total_f,
-         CAST(SUM(CASE WHEN o_orderstatus = 'O'
-                       THEN CAST(o_totalprice AS DECIMAL(18,4)) END) AS DOUBLE) AS total_o,
-         CAST(SUM(CASE WHEN o_orderstatus = 'P'
-                       THEN CAST(o_totalprice AS DECIMAL(18,4)) END) AS DOUBLE) AS total_p
-         FROM orders GROUP BY 1""",
-
-    "q84_fuzzy_pairs" ->
-      """WITH ent AS (
-           SELECT p_name AS s, MIN(p_partkey) AS id FROM part GROUP BY p_name),
-         corpus AS (
-           SELECT id, s FROM ent
-           UNION ALL
-           SELECT id + 1000000 AS id,
-             substr(s, 1, CAST(id % len(s) AS INT)) || 'q'
-               || substr(s, CAST(id % len(s) AS INT) + 2) AS s
-           FROM ent WHERE id % 2 = 0),
-         base AS (SELECT id, s, len(s) AS l FROM corpus),
-         posts AS (
-           SELECT id, s, l, i AS idx,
-             substr(s, (i*l)//3 + 1, ((i+1)*l)//3 - (i*l)//3) AS seg
-           FROM base, unnest([0, 1, 2]) t(i)),
-         blocks AS (
-           SELECT idx, seg, l FROM posts GROUP BY idx, seg, l HAVING COUNT(*) <= 100),
-         allowed AS (SELECT p.* FROM posts p JOIN blocks b USING (idx, seg, l)),
-         pairs AS (
-           SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.s AS sa, b.s AS sb
-           FROM allowed a JOIN allowed b USING (idx, seg, l)
-           WHERE a.id < b.id)
-         SELECT id_a, id_b, CAST(levenshtein(sa, sb) AS INT) AS dist
-         FROM pairs WHERE levenshtein(sa, sb) <= 2""",
-
-    "q85_winnow" ->
-      s"""WITH t AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-             [array_to_string(w[i : i+3], ' ')
-              for i in generate_series(1, len(w) - 3)] AS grams
-           FROM t WHERE len(w) >= 4),
-         h AS (
-           SELECT doc_id,
-             list_transform(grams,
-               x -> ('0x' || substr(md5(x), 1, 8))::BIGINT % ${functions.Hashing.PortableP}) AS hs,
-             len(grams) AS m
-           FROM g),
-         sel AS (
-           SELECT doc_id, list_distinct([
-             list_min([hs[p] * 1048576 + (1048575 - p)
-                       for p in generate_series(j, least(j + 3, m))])
-             for j in generate_series(1, greatest(m - 3, 1))]) AS sels
-           FROM h)
-         SELECT doc_id, x // 1048576 AS fp,
-           CAST(1048575 - (x % 1048576) AS INT) AS pos
-         FROM sel, unnest(sels) u(x)""",
-
-    "q86_resample" ->
-      """WITH e AS (
-           SELECT user_id, epoch_ns(ts)//1000 AS tus, value FROM events),
-         b AS (
-           SELECT user_id,
-             MIN(tus) + (21600000000 - MIN(tus) % 21600000000) % 21600000000 AS g0,
-             MAX(tus) - MAX(tus) % 21600000000 AS g1
-           FROM e GROUP BY user_id),
-         g AS (
-           SELECT user_id, gts
-           FROM b, unnest(generate_series(g0, g1, 21600000000)) t(gts)
-           WHERE g0 <= g1)
-         SELECT g.user_id, gts AS grid_ts, e.tus AS last_ts, e.value AS last_value
-         FROM g ASOF LEFT JOIN e ON g.user_id = e.user_id AND e.tus <= g.gts""",
-
-    "q87_stream_enrich" ->
-      """WITH e AS (
-           SELECT user_id, epoch_ns(ts)//1000 AS tus, event_type, value FROM events),
-         prof AS (
-           SELECT user_id,
-             CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_value
-           FROM e GROUP BY user_id)
-         SELECT date_trunc('day', make_timestamp(tus)) AS day_start, event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CASE WHEN value > avg_value * 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalous
-         FROM e JOIN prof USING (user_id)
-         GROUP BY 1, 2""",
-
-    "q88_knn_classify" ->
-      """WITH nb AS (
-           SELECT query_id, neighbor_id FROM (
-             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                          c.vec_id) AS rank
-             FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-             WHERE q.vec_id < 8)
-           WHERE rank <= 10),
-         votes AS (
-           SELECT query_id, c.label AS nb_label, COUNT(*) AS votes
-           FROM nb JOIN embeddings c ON c.vec_id = nb.neighbor_id
-           GROUP BY 1, 2),
-         best AS (
-           SELECT query_id, nb_label AS pred_label, CAST(votes AS INT) AS votes,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY votes DESC, nb_label) AS rn
-           FROM votes)
-         SELECT b.query_id, b.pred_label, b.votes, q.label AS true_label,
-           (b.pred_label = q.label) AS correct
-         FROM best b JOIN embeddings q ON q.vec_id = b.query_id
-         WHERE rn = 1""",
-
-    "q89_tfidf_pairs" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-         nd AS (SELECT COUNT(*) AS n FROM documents),
-         idf AS (
-           SELECT term, CAST(ln((n + 1.0) / (COUNT(*) + 1.0)) AS DECIMAL(20,6)) AS idf
-           FROM tf CROSS JOIN nd GROUP BY term, n HAVING COUNT(*) <= 100),
-         w AS (
-           SELECT doc_id, term,
-             CAST(floor(tf * CAST(idf AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS wq
-           FROM tf JOIN idf USING (term)),
-         norm AS (
-           SELECT doc_id, SUM(CAST(wq AS DECIMAL(38,0)) * wq) AS n2 FROM w GROUP BY doc_id),
-         dots AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             SUM(CAST(a.wq AS DECIMAL(38,0)) * b.wq) AS dot
-           FROM w a JOIN w b USING (term) WHERE a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT doc_a, doc_b,
-           CAST(dot AS DOUBLE) / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))) AS cos
-         FROM dots
-         JOIN norm na ON na.doc_id = doc_a
-         JOIN norm nb ON nb.doc_id = doc_b
-         WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))) >= 0.5""",
-
-    "q90_semi_anti" ->
-      """WITH no_o AS (
-           SELECT c_mktsegment, COUNT(*) AS n_no_orders FROM customer c
-           WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-           GROUP BY 1),
-         wf AS (
-           SELECT c_mktsegment, COUNT(*) AS n_with_f FROM customer c
-           WHERE EXISTS (SELECT 1 FROM orders o
-                         WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-           GROUP BY 1)
-         SELECT COALESCE(n.c_mktsegment, w.c_mktsegment) AS c_mktsegment,
-           COALESCE(n_no_orders, CAST(0 AS BIGINT)) AS n_no_orders,
-           COALESCE(n_with_f, CAST(0 AS BIGINT)) AS n_with_f
-         FROM no_o n FULL JOIN wf w ON n.c_mktsegment = w.c_mktsegment""",
-
-    "q91_percentile_rank" ->
-      """WITH counts AS (
-           SELECT source, n_chars, COUNT(*) AS c FROM documents GROUP BY 1, 2),
-         cum AS (
-           SELECT source, n_chars,
-             CAST(SUM(c) OVER (PARTITION BY source ORDER BY n_chars
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-               / SUM(c) OVER (PARTITION BY source) AS pct
-           FROM counts)
-         SELECT d.doc_id, d.source, d.n_chars, cum.pct
-         FROM documents d JOIN cum USING (source, n_chars)""",
-
-    "q92_zorder" ->
-      """SELECT l_orderkey, l_linenumber,
-         CAST(list_sum([((l_partkey % 65536) // (1 << i)) % 2 * (1 << (2*i))
-                        + ((l_suppkey % 65536) // (1 << i)) % 2 * (1 << (2*i + 1))
-                        for i in generate_series(0, 15)]) AS BIGINT) AS zkey
-         FROM lineitem""",
-
-    "q93_jaccard_prefix" ->
-      """WITH t0 AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-           FROM documents),
-         sets AS (
-           SELECT doc_id,
-             list_sort(list_distinct([array_to_string(w[i : i+2], ' ')
-                                      for i in generate_series(1, len(w) - 2)])) AS st
-           FROM t0 WHERE len(w) >= 3),
-         grp AS (
-           SELECT MIN(doc_id) AS rep, COUNT(*) AS members,
-             ANY_VALUE(st) AS st, ANY_VALUE(s) AS s
-           FROM (SELECT doc_id, st, len(st) AS s,
-                   md5(array_to_string(st, chr(10))) AS gkey FROM sets)
-           GROUP BY gkey),
-         posts AS (SELECT rep, s, unnest(st) AS tok FROM grp),
-         dfq AS (SELECT tok, COUNT(*) AS dfc FROM posts GROUP BY tok),
-         rk AS (SELECT rep, tok, s,
-                  ROW_NUMBER() OVER (PARTITION BY rep ORDER BY dfc, tok) AS rn
-                FROM posts JOIN dfq USING (tok)),
-         pref AS (SELECT rep, tok FROM rk WHERE rn <= s - (4*s + 4)//5 + 1),
-         cand AS (SELECT DISTINCT a.rep AS doc_a, b.rep AS doc_b
-                  FROM pref a JOIN pref b USING (tok) WHERE a.rep < b.rep),
-         scored AS (
-           SELECT doc_a, doc_b, ga.members AS members_a, gb.members AS members_b,
-             len(list_intersect(ga.st, gb.st)) AS inter, ga.s AS ssa, gb.s AS ssb
-           FROM cand
-           JOIN grp ga ON ga.rep = doc_a
-           JOIN grp gb ON gb.rep = doc_b)
-         SELECT doc_a, doc_b, members_a, members_b,
-           CAST(inter AS DOUBLE) / (ssa + ssb - inter) AS jac
-         FROM scored WHERE 5*inter >= 4*(ssa + ssb - inter)""",
-
-    "q94_sliding_chunks" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-           FROM documents),
-         b AS (SELECT doc_id, w, len(w) AS n FROM t WHERE len(w) >= 1),
-         c AS (
-           SELECT doc_id, i AS chunk_idx, i*15 + 1 AS start_tok, n, w
-           FROM b, unnest(generate_series(0, (greatest(n - 20, 0) + 14)//15)) s(i))
-         SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-           CAST(start_tok AS INT) AS start_tok,
-           CAST(least(20, n - start_tok + 1) AS INT) AS n_tok,
-           array_to_string(w[start_tok : start_tok + 19], ' ') AS chunk_text
-         FROM c""",
-
-    "q95_stratified_topk" ->
-      """SELECT doc_id, source FROM (
-           SELECT doc_id, source,
-             ROW_NUMBER() OVER (PARTITION BY source
-               ORDER BY md5('0' || chr(0) || CAST(doc_id AS VARCHAR)),
-                        CAST(doc_id AS VARCHAR)) AS rk
-           FROM documents) WHERE rk <= 10""",
-
-    "q96_corr_matrix" ->
-      """WITH q AS (
-           SELECT CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS qq,
-                  CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS qp,
-                  CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS qd
-           FROM lineitem),
-         s AS (
-           SELECT COUNT(*) AS n,
-             SUM(CAST(qq AS DECIMAL(38,0))) AS sq,
-             SUM(CAST(qp AS DECIMAL(38,0))) AS sp,
-             SUM(CAST(qd AS DECIMAL(38,0))) AS sd,
-             SUM(CAST(qq*qq AS DECIMAL(38,0))) AS sqq,
-             SUM(CAST(qp*qp AS DECIMAL(38,0))) AS spp,
-             SUM(CAST(qd*qd AS DECIMAL(38,0))) AS sdd,
-             SUM(CAST(qq*qp AS DECIMAL(38,0))) AS s_qp,
-             SUM(CAST(qq*qd AS DECIMAL(38,0))) AS s_qd,
-             SUM(CAST(qp*qd AS DECIMAL(38,0))) AS s_pd
-           FROM q)
-         SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b,
-           (CAST(n AS DOUBLE) * CAST(s_qp AS DOUBLE) - CAST(sq AS DOUBLE) * CAST(sp AS DOUBLE))
-           / (sqrt(CAST(n AS DOUBLE) * CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))
-              * sqrt(CAST(n AS DOUBLE) * CAST(spp AS DOUBLE) - CAST(sp AS DOUBLE) * CAST(sp AS DOUBLE))) AS r
-         FROM s
-         UNION ALL
-         SELECT 'l_quantity', 'l_discount',
-           (CAST(n AS DOUBLE) * CAST(s_qd AS DOUBLE) - CAST(sq AS DOUBLE) * CAST(sd AS DOUBLE))
-           / (sqrt(CAST(n AS DOUBLE) * CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))
-              * sqrt(CAST(n AS DOUBLE) * CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE)))
-         FROM s
-         UNION ALL
-         SELECT 'l_extendedprice', 'l_discount',
-           (CAST(n AS DOUBLE) * CAST(s_pd AS DOUBLE) - CAST(sp AS DOUBLE) * CAST(sd AS DOUBLE))
-           / (sqrt(CAST(n AS DOUBLE) * CAST(spp AS DOUBLE) - CAST(sp AS DOUBLE) * CAST(sp AS DOUBLE))
-              * sqrt(CAST(n AS DOUBLE) * CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE)))
-         FROM s""",
-
-    "q97_pagerank" -> OracleGen.pageRankSql(),
-
-    "q98_funnel" ->
-      """WITH e AS (
-           SELECT user_id, epoch_ns(ts)//1000 AS tus, event_type FROM events),
-         t0 AS (SELECT user_id, MIN(tus) AS t FROM e
-                WHERE event_type = 'view' GROUP BY 1),
-         t1 AS (SELECT e.user_id, MIN(tus) AS t FROM e JOIN t0 USING (user_id)
-                WHERE event_type = 'click' AND tus > t0.t GROUP BY 1),
-         t2 AS (SELECT e.user_id, MIN(tus) AS t FROM e JOIN t1 USING (user_id)
-                WHERE event_type = 'purchase' AND tus > t1.t GROUP BY 1),
-         c AS (SELECT (SELECT COUNT(*) FROM t0) AS n0,
-                      (SELECT COUNT(*) FROM t1) AS n1,
-                      (SELECT COUNT(*) FROM t2) AS n2)
-         SELECT 1 AS step_idx, 'view' AS step, n0 AS n_users,
-           CAST(1.0 AS DOUBLE) AS conv FROM c
-         UNION ALL
-         SELECT 2, 'click', n1, CAST(n1 AS DOUBLE) / CAST(n0 AS DOUBLE) FROM c
-         UNION ALL
-         SELECT 3, 'purchase', n2, CAST(n2 AS DOUBLE) / CAST(n1 AS DOUBLE) FROM c""",
-
-    "q99_retention" ->
-      """WITH e AS (
-           SELECT user_id, (epoch_ns(ts)//1000) // 86400000000 AS dnum FROM events),
-         d AS (SELECT DISTINCT user_id, dnum FROM e),
-         f AS (SELECT user_id, MIN(dnum) AS cohort FROM d GROUP BY 1)
-         SELECT make_timestamp(cohort * 86400000000) AS cohort_day,
-           CAST(dnum - cohort AS INT) AS day_offset, COUNT(*) AS n_users
-         FROM d JOIN f USING (user_id)
-         GROUP BY cohort, day_offset""",
-
-    "q100_weighted_topk" ->
-      """SELECT doc_id, source, n_chars FROM (
-           SELECT doc_id, source, n_chars,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY
-               CAST(-ln(CAST(('0x' || substr(md5('0' || chr(0) || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                             + 1 AS DOUBLE)
-                        / CAST(4294967297 AS DOUBLE))
-                    / CAST(n_chars AS DOUBLE) AS DECIMAL(20,9)),
-               CAST(doc_id AS VARCHAR)) AS rk
-           FROM documents) WHERE rk <= 5""",
-
-    "q101_twap" ->
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_ns(ts)//1000 AS tus, value FROM events),
-         d AS (
-           SELECT user_id, value,
-             LEAD(tus) OVER (PARTITION BY user_id ORDER BY tus, event_id) - tus AS dur
-           FROM e),
-         a AS (
-           SELECT user_id,
-             SUM(CAST(value * dur AS DECIMAL(27,6))) AS num,
-             SUM(dur) AS den, COUNT(*) AS n_obs
-           FROM d WHERE dur IS NOT NULL GROUP BY 1)
-         SELECT user_id, n_obs,
-           ROUND(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) AS twap
-         FROM a""",
-
-    "q102_interval_merge" ->
-      """WITH e AS (
-           SELECT user_id, epoch_ns(ts)//1000 AS s0,
-                  epoch_ns(ts)//1000 + 600000000 AS e0 FROM events),
-         m AS (
-           SELECT user_id, s0, e0,
-             MAX(e0) OVER (PARTITION BY user_id ORDER BY s0, e0
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-           FROM e),
-         i AS (
-           SELECT user_id, s0, e0,
-             SUM(CASE WHEN pmax IS NULL OR s0 > pmax THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY s0, e0
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-           FROM m),
-         g AS (SELECT user_id, isl, MIN(s0) AS s, MAX(e0) AS e FROM i GROUP BY 1, 2)
-         SELECT user_id, COUNT(*) AS n_islands,
-           CAST(SUM(e - s) AS BIGINT) AS covered_us
-         FROM g GROUP BY 1""",
-
-    "q103_stream_trending" ->
-      """WITH c AS (
-           SELECT date_trunc('hour', make_timestamp(epoch_ns(ts)//1000)) AS hour_start,
-             event_type, COUNT(*) AS n_events
-           FROM events GROUP BY 1, 2)
-         SELECT hour_start, event_type, n_events, rnk FROM (
-           SELECT hour_start, event_type, n_events,
-             CAST(ROW_NUMBER() OVER (PARTITION BY hour_start
-               ORDER BY n_events DESC, event_type) AS INT) AS rnk
-           FROM c) WHERE rnk <= 3""",
-
-    "q104_cube" ->
-      """SELECT o_orderpriority, o_orderstatus,
-         CAST(GROUPING(o_orderpriority) AS INT) AS g_pri,
-         CAST(GROUPING(o_orderstatus) AS INT) AS g_st,
-         COUNT(*) AS n,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-         FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)""",
-
-    "q105_mad_outliers" ->
-      """WITH med AS (
-           SELECT source, CAST(quantile_cont(n_chars, 0.5) AS DECIMAL(18,6)) AS med
-           FROM documents GROUP BY 1),
-         dev AS (
-           SELECT doc_id, source, n_chars,
-             abs(CAST(n_chars AS DECIMAL(18,6)) - med) AS dev
-           FROM documents JOIN med USING (source)),
-         mad AS (
-           SELECT source, CAST(quantile_cont(CAST(dev AS DOUBLE), 0.5) AS DECIMAL(18,6)) AS mad
-           FROM dev GROUP BY 1)
-         SELECT doc_id, source, n_chars, (dev > 3 * mad) AS is_outlier,
-           CAST(dev AS DOUBLE) AS dev
-         FROM dev JOIN mad USING (source)""",
-
-    "q106_basket_lift" ->
-      """WITH d AS (SELECT DISTINCT user_id AS k, event_type AS item FROM events),
-         nk AS (SELECT COUNT(DISTINCT k) AS n FROM d),
-         ic AS (SELECT item, COUNT(*) AS ic FROM d GROUP BY 1),
-         p AS (
-           SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS n_both
-           FROM d a JOIN d b ON a.k = b.k AND a.item < b.item
-           GROUP BY 1, 2)
-         SELECT item_a, item_b, n_both,
-           ROUND(n_both / CAST(n AS DOUBLE), 9) AS support,
-           ROUND(CAST(n_both AS DOUBLE) / ia.ic, 9) AS confidence,
-           ROUND(n_both * CAST(n AS DOUBLE) / (ia.ic * ib.ic), 9) AS lift
-         FROM p
-         CROSS JOIN nk
-         JOIN ic ia ON ia.item = item_a
-         JOIN ic ib ON ib.item = item_b""",
-
-    "q107_label_entropy" ->
-      """WITH c AS (
-           SELECT user_id, event_type, COUNT(*) AS c FROM events GROUP BY 1, 2),
-         t AS (SELECT user_id, COUNT(*) AS tot FROM events GROUP BY 1),
-         s AS (
-           SELECT c.user_id, MAX(tot) AS n_events,
-             SUM(CAST((c / CAST(tot AS DOUBLE)) * ln(c / CAST(tot AS DOUBLE))
-                      AS DECIMAL(20,9))) AS s
-           FROM c JOIN t USING (user_id)
-           GROUP BY 1)
-         SELECT user_id, n_events, ROUND(-CAST(s AS DOUBLE), 6) AS entropy
-         FROM s""",
-
-    "q108_json_extract" ->
-      """WITH e AS (
-           SELECT event_type, CAST(props->>'k' AS INT) AS k FROM events)
-         SELECT event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(k AS BIGINT)) AS BIGINT) AS k_sum,
-           COUNT(CASE WHEN k > 50 THEN 1 END) AS n_high
-         FROM e GROUP BY 1""",
-
-    "q109_cms_topk" ->
-      """WITH k AS (SELECT CAST(user_id AS VARCHAR) AS user_id FROM events),
-         cells AS (
-           SELECT user_id, j.j,
-             ('0x' || substr(md5('cm' || j.j || '|' || user_id), 1, 8))::BIGINT % 1024 AS cell
-           FROM k CROSS JOIN (SELECT unnest([0,1,2,3]) AS j) j),
-         sketch AS (SELECT j, cell, COUNT(*) AS cnt FROM cells GROUP BY 1, 2),
-         exact AS (SELECT user_id, COUNT(*) AS exact FROM k GROUP BY 1),
-         est AS (
-           SELECT e.user_id, MIN(COALESCE(s.cnt, 0)) AS est
-           FROM exact e
-           CROSS JOIN (SELECT unnest([0,1,2,3]) AS j) j
-           LEFT JOIN sketch s ON s.j = j.j
-             AND s.cell = ('0x' || substr(md5('cm' || j.j || '|' || e.user_id), 1, 8))::BIGINT % 1024
-           GROUP BY 1)
-         SELECT est.user_id, est.est, exact.exact
-         FROM est JOIN exact USING (user_id)
-         ORDER BY est DESC, user_id LIMIT 20""",
-
-    "q110_hll_distinct" ->
-      """WITH k AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS key FROM events),
-         h AS (SELECT ('0x' || substr(md5(key), 1, 8))::BIGINT AS h1,
-                      ('0x' || substr(md5(key), 9, 8))::BIGINT AS w FROM k),
-         regs AS (
-           SELECT h1 >> 22 AS bucket,
-                  MAX(CASE WHEN w = 0 THEN 33 ELSE 33 - length(bin(w)) END) AS r
-           FROM h GROUP BY 1),
-         s AS (SELECT COUNT(*) AS nonzero,
-                      CAST(SUM(1::BIGINT << (33 - r)) AS BIGINT) AS zsum FROM regs)
-         SELECT 1024::BIGINT AS m, nonzero,
-           zsum + (1024 - nonzero) * (1::BIGINT << 33) AS zs,
-           0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE)
-             * 1048576.0::DOUBLE * 8589934592.0::DOUBLE
-             / CAST(zsum + (1024 - nonzero) * (1::BIGINT << 33) AS DOUBLE) AS est,
-           (SELECT COUNT(DISTINCT user_id) FROM events) AS exact_distinct
-         FROM s""",
-
-    "q111_cdc_upsert" ->
-      """WITH ch AS (
-           SELECT l_orderkey AS o_orderkey, CAST(l_linenumber AS BIGINT) AS seq,
-             CASE WHEN ('0x' || substr(md5('op' || l_orderkey || ':' || l_linenumber), 1, 8))::BIGINT % 7 = 0
-                  THEN 'D' ELSE 'U' END AS op,
-             'R' AS o_orderstatus, l_extendedprice AS o_totalprice
-           FROM lineitem),
-         w AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY seq DESC, op DESC, o_totalprice DESC) AS rn FROM ch),
-         win AS (SELECT o_orderkey, op, o_orderstatus, o_totalprice FROM w WHERE rn = 1)
-         SELECT o_orderkey,
-           CASE WHEN win.op IS NOT NULL THEN win.o_orderstatus ELSE b.o_orderstatus END AS o_orderstatus,
-           CASE WHEN win.op IS NOT NULL THEN win.o_totalprice ELSE b.o_totalprice END AS o_totalprice
-         FROM orders b FULL OUTER JOIN win USING (o_orderkey)
-         WHERE win.op IS NULL OR win.op <> 'D'""",
-
-    "q113_window_suite" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-           CAST(row_number() OVER w AS INT) AS rn,
-           lag(o_totalprice, 1) OVER w AS prev_price,
-           lead(o_totalprice, 1) OVER w AS next_price,
-           first_value(o_totalprice) OVER w AS first_price,
-           CAST(ntile(4) OVER w AS INT) AS tile,
-           cume_dist() OVER w AS cd,
-           percent_rank() OVER w AS pr
-         FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)""",
-
-    "q114_triangles" -> OracleGen.triangleSql(minCos = 0.1),
-
-    "q115_scd2" ->
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, event_type FROM events),
-         r AS (
-           SELECT *, CASE WHEN lag(event_type) OVER w IS NULL
-                            OR lag(event_type) OVER w <> event_type
-                          THEN 1 ELSE 0 END AS chg
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         p AS (
-           SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS per FROM r),
-         g AS (
-           SELECT user_id, per, MIN(event_type) AS status, MIN(tus) AS from_us,
-                  COUNT(*) AS n_rows
-           FROM p GROUP BY 1, 2)
-         SELECT user_id, status, from_us,
-           lead(from_us) OVER (PARTITION BY user_id ORDER BY per) AS to_us,
-           n_rows, CAST(per AS BIGINT) AS period_seq
-         FROM g""",
-
-    "q117_stream_sketch" ->
-      """WITH k AS (SELECT CAST(user_id AS VARCHAR) AS user_id FROM events),
-         cells AS (
-           SELECT user_id, j.j,
-             ('0x' || substr(md5('cm' || j.j || '|' || user_id), 1, 8))::BIGINT % 1024 AS cell
-           FROM k CROSS JOIN (SELECT unnest([0,1,2,3]) AS j) j)
-         SELECT j, cell, COUNT(*) AS cnt FROM cells GROUP BY 1, 2""",
-
-    "q116_hll_by_group" ->
-      """WITH k AS (SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS key FROM events),
-         h AS (SELECT event_type, ('0x' || substr(md5(key), 1, 8))::BIGINT AS h1,
-                      ('0x' || substr(md5(key), 9, 8))::BIGINT AS w FROM k),
-         regs AS (
-           SELECT event_type, h1 >> 22 AS bucket,
-                  MAX(CASE WHEN w = 0 THEN 33 ELSE 33 - length(bin(w)) END) AS r
-           FROM h GROUP BY 1, 2),
-         s AS (SELECT event_type, COUNT(*) AS nonzero,
-                      CAST(SUM(1::BIGINT << (33 - r)) AS BIGINT) AS zsum
-               FROM regs GROUP BY 1),
-         ex AS (SELECT event_type, COUNT(DISTINCT user_id) AS exact_distinct
-                FROM events GROUP BY 1)
-         SELECT s.event_type, s.nonzero,
-           zsum + (1024 - nonzero) * (1::BIGINT << 33) AS zs,
-           0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE)
-             * 1048576.0::DOUBLE * 8589934592.0::DOUBLE
-             / CAST(zsum + (1024 - nonzero) * (1::BIGINT << 33) AS DOUBLE) AS est,
-           ex.exact_distinct
-         FROM s JOIN ex USING (event_type)""",
-
-    "q112_binary_source" ->
-      """SELECT parse_filename(filename) AS file_name,
-           octet_length(content) AS n_bytes,
-           md5(decode(content)) AS content_md5
-         FROM read_blob('/tmp/graft_binsrc___SFTAG__/doc_*.txt')""",
-
-    "q118_interval_join" ->
-      """SELECT l_orderkey, l_linenumber,
-           epoch_us(l_shipdate) // 86400000000 AS ship_day,
-           epoch_us(o_orderdate) // 86400000000 AS d0,
-           epoch_us(o_orderdate) // 86400000000 + 120 AS d1
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE epoch_us(l_shipdate) // 86400000000
-                 >= epoch_us(o_orderdate) // 86400000000
-           AND epoch_us(l_shipdate) // 86400000000
-                 <= epoch_us(o_orderdate) // 86400000000 + 120""",
-
-    "q119_transitions" ->
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, event_type FROM events),
-         s AS (
-           SELECT event_type AS from_type,
-             LEAD(event_type) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS to_type
-           FROM e),
-         c AS (SELECT from_type, to_type, COUNT(*) AS n FROM s
-               WHERE to_type IS NOT NULL GROUP BY 1, 2),
-         t AS (SELECT from_type, SUM(n) AS tot FROM c GROUP BY 1)
-         SELECT from_type, to_type, n,
-           ROUND(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 9) AS p
-         FROM c JOIN t USING (from_type)""",
-
-    "q120_snapshot_diff" ->
-      """WITH ch AS (
-           SELECT l_orderkey AS o_orderkey, CAST(l_linenumber AS BIGINT) AS seq,
-             CASE WHEN ('0x' || substr(md5('op' || l_orderkey || ':' || l_linenumber), 1, 8))::BIGINT % 7 = 0
-                  THEN 'D' ELSE 'U' END AS op,
-             'R' AS o_orderstatus, l_extendedprice AS o_totalprice
-           FROM lineitem),
-         w AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY seq DESC, op DESC, o_totalprice DESC) AS rn FROM ch),
-         win AS (SELECT o_orderkey, op, o_orderstatus, o_totalprice FROM w WHERE rn = 1),
-         newsnap AS (
-           SELECT o_orderkey,
-             CASE WHEN win.op IS NOT NULL THEN win.o_orderstatus ELSE b.o_orderstatus END AS o_orderstatus,
-             CASE WHEN win.op IS NOT NULL THEN win.o_totalprice ELSE b.o_totalprice END AS o_totalprice
-           FROM orders b FULL OUTER JOIN win USING (o_orderkey)
-           WHERE win.op IS NULL OR win.op <> 'D'),
-         o AS (SELECT o_orderkey, o_orderstatus AS os_o, o_totalprice AS tp_o, 1 AS in_o FROM orders),
-         n AS (SELECT o_orderkey, o_orderstatus AS os_n, o_totalprice AS tp_n, 1 AS in_n FROM newsnap)
-         SELECT o_orderkey,
-           CASE WHEN in_o IS NULL THEN 'added'
-                WHEN in_n IS NULL THEN 'removed'
-                WHEN os_o IS NOT DISTINCT FROM os_n
-                 AND tp_o IS NOT DISTINCT FROM tp_n THEN 'same'
-                ELSE 'changed' END AS change
-         FROM o FULL OUTER JOIN n USING (o_orderkey)""",
-
-    "q121_histogram" ->
-      """SELECT source, n_chars // 200 AS bin, (n_chars // 200) * 200 AS bin_lo,
-           COUNT(*) AS n
-         FROM documents GROUP BY 1, 2, 3""",
-
-    "q122_pareto" ->
-      """WITH u AS (
-           SELECT user_id, COUNT(*) AS x0, COUNT(DISTINCT event_type) AS y0
-           FROM events GROUP BY 1),
-         pts AS (SELECT x0 AS x, y0 AS y, COUNT(*) AS n FROM u GROUP BY 1, 2)
-         SELECT x, y, n FROM pts p
-         WHERE NOT EXISTS (
-           SELECT 1 FROM pts q
-           WHERE q.x >= p.x AND q.y >= p.y AND (q.x > p.x OR q.y > p.y))""",
-
-    "q123_containment" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                            for i in generate_series(1, len(w)-2)]) AS grams
-           FROM toks WHERE len(w) >= 3),
-         post AS (SELECT doc_id, unnest(grams) AS g FROM sh),
-         rare AS (SELECT g FROM post GROUP BY g HAVING COUNT(*) <= 20),
-         rpost AS (SELECT doc_id, g FROM post WHERE g IN (SELECT g FROM rare)),
-         cnt AS (SELECT doc_id, COUNT(*) AS n FROM rpost GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-           FROM rpost a JOIN rpost b ON a.g = b.g AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT doc_a, doc_b, common, containment, rnk FROM (
-           SELECT doc_a, doc_b, common,
-             CAST(common AS DOUBLE) / least(ca.n, cb.n) AS containment,
-             CAST(ROW_NUMBER() OVER (
-               ORDER BY CAST(common AS DOUBLE) / least(ca.n, cb.n) DESC, doc_a, doc_b) AS INT) AS rnk
-           FROM pairs
-           JOIN cnt ca ON doc_a = ca.doc_id
-           JOIN cnt cb ON doc_b = cb.doc_id
-           WHERE common * 2 >= least(ca.n, cb.n) * 1)
-         WHERE rnk <= 100""",
-
-    "q124_wma" ->
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, value,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY tus, event_id) AS rn FROM e),
-         f AS (
-           SELECT user_id, event_id, tus, value, rn,
-             SUM(CAST(vq AS DECIMAL(38,0))) OVER w AS s1,
-             SUM(CAST(vq AS DECIMAL(38,0)) * rn) OVER w AS s2,
-             COUNT(*) OVER w AS m
-           FROM r WINDOW w AS (PARTITION BY user_id ORDER BY rn
-             ROWS BETWEEN 9 PRECEDING AND CURRENT ROW))
-         SELECT user_id, event_id, tus, value,
-           ROUND(CAST((10 - rn) * s1 + s2 AS DOUBLE)
-             / CAST(m * 10 - (m * (m - 1)) // 2 AS DOUBLE) / 1000000.0, 9) AS wma
-         FROM f""",
-
-    "q125_grouping_sets" ->
-      """SELECT o_orderpriority, o_orderstatus,
-         CAST(GROUPING(o_orderpriority) AS INT) AS g_pri,
-         CAST(GROUPING(o_orderstatus) AS INT) AS g_st,
-         COUNT(*) AS n,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-         FROM orders
-         GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus), (o_orderpriority), ())""",
-
-    "q126_stream_hll" ->
-      """WITH k AS (SELECT CAST(user_id AS VARCHAR) AS key FROM events),
-         h AS (SELECT ('0x' || substr(md5(key), 1, 8))::BIGINT AS h1,
-                      ('0x' || substr(md5(key), 9, 8))::BIGINT AS w FROM k)
-         SELECT h1 >> 22 AS bucket,
-           CAST(MAX(CASE WHEN w = 0 THEN 33 ELSE 33 - length(bin(w)) END) AS INT) AS r
-         FROM h GROUP BY 1""",
-
-    // pixels of the deterministic grayscale payload are the tiled text
-    // bytes (Multimodal.encodePng), so the block-mean signature is
-    // rebuilt from hex(encode(text)); the bit gate is the same integer
-    // cross-multiplication the Scala decoder computes
-    "q127_image_sig" ->
-      """WITH d AS (
-           SELECT doc_id, octet_length(encode(text)) AS n, hex(encode(text)) AS hx
-           FROM documents),
-         dims AS (
-           SELECT doc_id, n, hx,
-             CAST(n % 320 + 1 AS BIGINT) AS w, CAST(n % 240 + 1 AS BIGINT) AS h
-           FROM d),
-         px AS (
-           SELECT doc_id, w, h, unnest(generate_series(0, w * h - 1)) AS p
-           FROM dims),
-         pv AS (
-           SELECT px.doc_id, px.p,
-             ((px.p // px.w) * 4 // px.h) * 4 + ((px.p % px.w) * 4 // px.w) AS blk,
-             CASE WHEN dims.n = 0 THEN 0
-                  ELSE ('0x' || substr(dims.hx, CAST(2 * (px.p % dims.n) + 1 AS INT), 2))::BIGINT
-             END AS v
-           FROM px JOIN dims USING (doc_id)),
-         blocks AS (SELECT doc_id, blk, SUM(v) AS bsum, COUNT(*) AS bn FROM pv GROUP BY 1, 2),
-         tot AS (SELECT doc_id, SUM(v) AS gsum, COUNT(*) AS npix FROM pv GROUP BY 1),
-         sg AS (
-           SELECT b.doc_id,
-             CAST(SUM(CASE WHEN b.bsum * t.npix > t.gsum * b.bn
-                           THEN (1::BIGINT << b.blk) ELSE 0 END) AS BIGINT) AS sig
-           FROM blocks b JOIN tot t USING (doc_id) GROUP BY 1)
-         SELECT sg.doc_id,
-           CAST(dims.w AS INT) AS width, CAST(dims.h AS INT) AS height, sg.sig,
-           COUNT(*) OVER (PARTITION BY sg.sig) AS n_same_sig
-         FROM sg JOIN dims USING (doc_id)""",
-
-    "q128_source_minhash" -> OracleGen.sourceMinhashSql(),
-
-    "q129_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS value FROM lineitem
-         UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
-         UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-         UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""",
-
-    // multiplicity arithmetic form of the four set ops: with d2 ⊆ d1
-    // rowwise, INTERSECT/EXCEPT are distinct-key membership, the ALL
-    // forms are least(n1,n2) / n1−n2 copies per key
-    "q130_set_ops" ->
-      """WITH d1 AS (SELECT o_custkey AS custkey, COUNT(*) AS n1 FROM orders GROUP BY 1),
-         d2 AS (SELECT o_custkey AS custkey, COUNT(*) AS n2 FROM orders
-                WHERE o_orderpriority = '1-URGENT' GROUP BY 1)
-         SELECT 'intersect' AS op, custkey, 1::BIGINT AS n
-           FROM d1 JOIN d2 USING (custkey)
-         UNION ALL
-         SELECT 'except', custkey, 1::BIGINT
-           FROM d1 LEFT JOIN d2 USING (custkey) WHERE n2 IS NULL
-         UNION ALL
-         SELECT 'intersect_all', custkey, least(n1, n2)
-           FROM d1 JOIN d2 USING (custkey)
-         UNION ALL
-         SELECT 'except_all', custkey, n1 - COALESCE(n2, 0)
-           FROM d1 LEFT JOIN d2 USING (custkey)
-           WHERE n1 - COALESCE(n2, 0) > 0""",
-
-    "q131_array_suite" ->
-      """WITH g AS (
-           SELECT l_orderkey, list_sort(list(CAST(l_quantity AS INT))) AS qs
-           FROM lineitem GROUP BY 1)
-         SELECT l_orderkey,
-           CAST(len(qs) AS INT) AS n_items,
-           CAST(list_sum(qs) AS BIGINT) AS total_qty,
-           CAST(len(list_filter(qs, x -> x > 25)) AS INT) AS n_big,
-           CAST(list_sum([qs[i] * i for i in generate_series(1, len(qs))]) AS BIGINT) AS wsum,
-           array_to_string(list_transform(qs[1:3], x -> CAST(x AS VARCHAR)), ',') AS first3
-         FROM g""",
-
-    // the q96 Pearson shape, grouped by (user, lag) over lead pairs
-    "q132_autocorr" ->
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         l AS (
-           SELECT user_id, vq AS x,
-             LEAD(vq, 1) OVER w AS y1, LEAD(vq, 2) OVER w AS y2
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         p AS (
-           SELECT user_id, CAST(1 AS INT) AS lag, x, y1 AS y FROM l WHERE y1 IS NOT NULL
-           UNION ALL
-           SELECT user_id, CAST(2 AS INT), x, y2 FROM l WHERE y2 IS NOT NULL),
-         s AS (
-           SELECT user_id, lag, COUNT(*) AS n_pairs,
-             SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-             SUM(CAST(x*x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y*y AS DECIMAL(38,0))) AS syy,
-             SUM(CAST(x*y AS DECIMAL(38,0))) AS sxy
-           FROM p GROUP BY 1, 2)
-         SELECT user_id, lag, n_pairs,
-           CASE WHEN n_pairs >= 2
-                 AND CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-                 AND CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
-             THEN ROUND(
-               (CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (sqrt(CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                  * sqrt(CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 9)
-           END AS acf
-         FROM s""",
-
-    "q133_attribution" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_type, value FROM events),
-         c AS (SELECT user_id, tus, value FROM e WHERE event_type = 'purchase'),
-         tt AS (SELECT user_id, tus, MAX(event_type) AS channel
-                FROM e WHERE event_type <> 'purchase' GROUP BY 1, 2),
-         m AS (
-           SELECT c.user_id, c.value, t.channel
-           FROM c LEFT JOIN LATERAL (
-             SELECT channel FROM tt
-             WHERE tt.user_id = c.user_id AND tt.tus <= c.tus
-               AND c.tus - tt.tus <= 604800000000
-             ORDER BY tt.tus DESC LIMIT 1) t ON TRUE)
-         SELECT channel, COUNT(*) AS n_conv,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-         FROM m GROUP BY 1""",
-
-    // block-energy signature rebuilt from the ASCII payload bytes: the
-    // same p·blocks/n block membership and bss·n > gss·bn integer gate
-    // as Multimodal.audioSignatures; empty docs sign 0
-    "q134_audio_sig" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
-         pos AS (
-           SELECT doc_id, text, n, unnest(generate_series(1, n)) AS j
-           FROM d WHERE n > 0),
-         amp AS (
-           SELECT doc_id, n, ((j - 1) * 16) // n AS b,
-             ord(substr(text, j, 1)) - 128 AS a
-           FROM pos),
-         bs AS (
-           SELECT doc_id, n, b, SUM(CAST(a AS BIGINT) * a) AS ss, COUNT(*) AS bn
-           FROM amp GROUP BY 1, 2, 3),
-         g AS (SELECT doc_id, SUM(ss) AS gss FROM bs GROUP BY 1),
-         sigs AS (
-           SELECT bs.doc_id, CAST(MAX(bs.n) AS BIGINT) AS n_samples,
-             CAST(SUM(CASE WHEN ss * bs.n > gss * bn THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sig
-           FROM bs JOIN g ON bs.doc_id = g.doc_id GROUP BY 1
-           UNION ALL
-           SELECT doc_id, 0::BIGINT, 0::BIGINT FROM d WHERE n = 0)
-         SELECT doc_id, n_samples, sig,
-           COUNT(*) OVER (PARTITION BY sig) AS n_same_sig
-         FROM sigs""",
-
-    // per-frame pixel sums from the q54 tiling formula over ALL frames,
-    // cut iff |Δ mean| > 8 via the cross-multiplied integer gate
-    "q135_scene_cuts" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
-         fr AS (
-           SELECT doc_id, text, n, least(n // 64 + 1, 8) AS nf,
-             unnest(generate_series(0, least(n // 64 + 1, 8) - 1)) AS f
-           FROM d),
-         fx AS (
-           SELECT doc_id, text, nf, f,
-             CASE WHEN f < nf - 1 THEN 64 ELSE n - 64 * (nf - 1) END AS flen
-           FROM fr),
-         px AS (
-           SELECT doc_id, nf, f,
-             CASE WHEN flen = 0 THEN CAST(1 AS BIGINT)
-                  ELSE CAST((flen % 320 + 1) * (flen % 240 + 1) AS BIGINT) END AS pix,
-             CASE WHEN flen = 0 THEN CAST(0 AS BIGINT)
-                  ELSE CAST(((flen % 320 + 1) * (flen % 240 + 1)) // flen AS BIGINT)
-                       * list_sum([ord(substr(text, 64 * f + j, 1))
-                                   for j in generate_series(1, flen)])
-                       + COALESCE(list_sum([ord(substr(text, 64 * f + j, 1))
-                                   for j in generate_series(1,
-                                     ((flen % 320 + 1) * (flen % 240 + 1)) % flen)]), 0)
-             END AS psum
-           FROM fx),
-         lg AS (
-           SELECT doc_id, nf, f, pix, psum,
-             LAG(pix) OVER w AS ppix, LAG(psum) OVER w AS ppsum
-           FROM px WINDOW w AS (PARTITION BY doc_id ORDER BY f)),
-         cuts AS (
-           SELECT doc_id, nf, f,
-             CASE WHEN ppix IS NOT NULL
-                   AND abs(psum * ppix - ppsum * pix) > 8 * pix * ppix
-               THEN 1 ELSE 0 END AS cut
-           FROM lg)
-         SELECT doc_id, CAST(MAX(nf) AS INT) AS n_frames,
-           CAST(SUM(cut) AS INT) AS n_cuts,
-           CAST(MIN(CASE WHEN cut = 1 THEN f END) AS INT) AS first_cut
-         FROM cuts GROUP BY doc_id""",
-
-    "q136_asof_nearest" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_type, value FROM events),
-         c AS (SELECT user_id, tus, value AS click_value FROM e WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS btus, MAX(value) AS buy_value
-               FROM e WHERE event_type = 'purchase' GROUP BY 1, 2)
-         SELECT c.user_id, c.tus, c.click_value, m.btus, m.buy_value
-         FROM c LEFT JOIN LATERAL (
-           SELECT btus, buy_value FROM b
-           WHERE b.user_id = c.user_id AND abs(b.btus - c.tus) <= 3600000000
-           ORDER BY abs(b.btus - c.tus), b.btus LIMIT 1) m ON TRUE""",
-
-    "q137_batch_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
-         f AS (
-           SELECT user_id, event_id, tus,
-             CASE WHEN LAG(tus) OVER w IS NULL
-                    OR tus - LAG(tus) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         s AS (
-           SELECT user_id, tus,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM f)
-         SELECT user_id, CAST(sid AS BIGINT) AS session_seq,
-           MIN(tus) AS start_us, MAX(tus) AS end_us,
-           COUNT(*) AS n_events, MAX(tus) - MIN(tus) AS duration_us
-         FROM s GROUP BY 1, 2""",
-
-    // the z-score gate entirely in exact integer arithmetic: DuckDB's
-    // BIGINT sums widen to HUGEINT, Spark's run DECIMAL(38,0) — same
-    // integers, so the cross-multiplied dev² > 9·var gate agrees at
-    // every boundary
-    "q139_rolling_anomaly" ->
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, value,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         f AS (
-           SELECT user_id, event_id, tus, value, vq,
-             COUNT(*) OVER w AS cnt,
-             SUM(vq) OVER w AS s,
-             SUM(vq * vq) OVER w AS ss
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW))
-         SELECT user_id, event_id, tus, value,
-           CAST(cnt - 1 AS BIGINT) AS n_win,
-           CASE WHEN cnt - 1 >= 5 THEN
-             CASE WHEN ((cnt - 1) * vq - (s - vq)) * ((cnt - 1) * vq - (s - vq))
-                       > 9 * ((cnt - 1) * (ss - vq * vq) - (s - vq) * (s - vq))
-               THEN 1 ELSE 0 END
-           END AS is_anomaly
-         FROM f""",
-
-    // counts → ratios → binding-stratum scale → md5-threshold
-    // membership, all mirroring Tafra.matchDistribution token-for-token
-    "q140_distribution_match" ->
-      """WITH d AS (SELECT doc_id, source FROM documents
-                    WHERE source IN ('src0', 'src1', 'src2')),
-         t AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.3), ('src2', 0.2))
-               AS t(source, share)),
-         c AS (SELECT source, COUNT(*) AS n FROM d GROUP BY 1),
-         sc AS (SELECT MIN(CAST(n AS DOUBLE) / share) AS scale
-                FROM c JOIN t USING (source)),
-         k AS (
-           SELECT d.doc_id, d.source,
-             least(1.0, sc.scale * t.share / CAST(c.n AS DOUBLE)) AS keep_frac
-           FROM d JOIN c USING (source) JOIN t USING (source), sc)
-         SELECT doc_id, source, keep_frac FROM k
-         WHERE ('0x' || substr(md5('0' || chr(0) || CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-               < floor(keep_frac * 65536)""",
-
-    "q141_ks_drift" ->
-      """WITH e AS (SELECT event_type, value FROM events
-                    WHERE event_type IN ('click', 'purchase')),
-         h AS (
-           SELECT value AS v,
-             COUNT(*) FILTER (event_type = 'click') AS ca,
-             COUNT(*) FILTER (event_type = 'purchase') AS cb
-           FROM e GROUP BY 1),
-         c AS (
-           SELECT v,
-             SUM(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
-             SUM(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb
-           FROM h),
-         t AS (
-           SELECT COUNT(*) FILTER (event_type = 'click') AS na,
-             COUNT(*) FILTER (event_type = 'purchase') AS nb
-           FROM e)
-         SELECT ROUND(abs(CAST(cuma AS DOUBLE) / CAST(na AS DOUBLE)
-                  - CAST(cumb AS DOUBLE) / CAST(nb AS DOUBLE)), 9) AS d_stat,
-           v AS at_value, na AS n_a, nb AS n_b
-         FROM c, t
-         ORDER BY abs(CAST(cuma AS DOUBLE) / CAST(na AS DOUBLE)
-           - CAST(cumb AS DOUBLE) / CAST(nb AS DOUBLE)) DESC, v
-         LIMIT 1""",
-
-    "q142_kcore" -> OracleGen.kCoreSql(minCos = 0.1, k = 2),
-
-    "q144_global_index" ->
-      """SELECT l_orderkey, l_linenumber,
-           ROW_NUMBER() OVER (ORDER BY l_orderkey, l_linenumber) AS global_idx
-         FROM lineitem""",
-
-    "q145_winsorize" ->
-      """WITH b AS (
-           SELECT event_type,
-             quantile_cont(value, 0.05) AS lo, quantile_cont(value, 0.95) AS hi
-           FROM events GROUP BY 1)
-         SELECT e.event_type, e.event_id, e.value,
-           least(greatest(e.value, b.lo), b.hi) AS clamped
-         FROM events e JOIN b USING (event_type)""",
-
-    "q147_url_domains" ->
-      """WITH d AS (
-           SELECT doc_id,
-             text || ' see http://site' || (doc_id % 20)
-                  || '.example.com/page and https://cdn' || (doc_id % 7)
-                  || '.example.org/x' AS text
-           FROM documents),
-         u AS (
-           SELECT doc_id,
-             unnest(regexp_extract_all(text, 'https?://([^/\s]+)', 1)) AS domain
-           FROM d)
-         SELECT domain, COUNT(*) AS n_urls,
-           COUNT(DISTINCT doc_id) AS n_docs
-         FROM u GROUP BY 1""",
-
-    "q154_join_size" ->
-      """WITH ka AS (SELECT CAST(o_custkey AS VARCHAR) AS k FROM orders),
-         kb AS (SELECT CAST(c_custkey AS VARCHAR) AS k FROM customer),
-         ca AS (
-           SELECT j.j, ('0x' || substr(md5('cm' || j.j || '|' || k), 1, 8))::BIGINT % 1024 AS cell,
-             COUNT(*) AS cnt
-           FROM ka CROSS JOIN (SELECT unnest([0,1,2,3]) AS j) j GROUP BY 1, 2),
-         cb AS (
-           SELECT j.j, ('0x' || substr(md5('cm' || j.j || '|' || k), 1, 8))::BIGINT % 1024 AS cell,
-             COUNT(*) AS cnt
-           FROM kb CROSS JOIN (SELECT unnest([0,1,2,3]) AS j) j GROUP BY 1, 2),
-         pr AS (
-           SELECT ca.j, CAST(SUM(ca.cnt * cb.cnt) AS BIGINT) AS row_estimate
-           FROM ca JOIN cb ON ca.j = cb.j AND ca.cell = cb.cell GROUP BY 1)
-         SELECT j, row_estimate,
-           (SELECT MIN(row_estimate) FROM pr) AS est
-         FROM pr""",
-
-    "q155_gini" ->
-      """WITH r AS (
-           SELECT source, n_chars,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS i
-           FROM documents),
-         s AS (
-           SELECT source, COUNT(*) AS n,
-             SUM(CAST(n_chars AS DECIMAL(38,0))) AS sx,
-             SUM(CAST(n_chars AS DECIMAL(38,0)) * i) AS six
-           FROM r GROUP BY 1)
-         SELECT source, n,
-           CASE WHEN sx > 0 THEN
-             ROUND(CAST(2 * six - (n + 1) * sx AS DOUBLE)
-               / (CAST(n AS DOUBLE) * CAST(sx AS DOUBLE)), 9)
-           END AS gini
-         FROM s""",
-
-    "q176_cusum" ->
-      """WITH e AS (
-           SELECT event_id, event_type, epoch_ns(ts)//1000 AS tus,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) - 50000000 AS dev
-           FROM events),
-         c AS (
-           SELECT event_id, event_type, tus,
-             SUM(dev) OVER (PARTITION BY event_type ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM e),
-         d AS (
-           SELECT event_id, event_type, tus, cum,
-             MIN(cum) OVER (PARTITION BY event_type ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rmin,
-             MAX(cum) OVER (PARTITION BY event_type ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rmax
-           FROM c)
-         SELECT event_id, event_type, tus,
-           CAST(cum - least(0, rmin) AS BIGINT) AS cusum_hi,
-           CAST(greatest(0, rmax) - cum AS BIGINT) AS cusum_lo,
-           (cum - least(0, rmin) > 2000000000 OR greatest(0, rmax) - cum > 2000000000) AS is_shift
-         FROM d""",
-
-    "q191_grouped_split" ->
-      """SELECT event_id, user_id,
-           CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 2) < 'cc' THEN 'train'
-                WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
-                ELSE 'test' END AS split
-         FROM events""",
-
-    "q194_blocklist" -> {
-      val values = BlocklistTerms.map(t => s"('$t')").mkString(", ")
-      s"""SELECT doc_id, term,
-           CAST((len(lower(text)) - len(replace(lower(text), term, ''))) / len(term) AS INT) AS n_occ
-         FROM documents CROSS JOIN (VALUES $values) t(term)
-         WHERE len(lower(text)) - len(replace(lower(text), term, '')) > 0"""
-    },
-
-    "q195_kfold" ->
-      """SELECT event_id, user_id,
-           CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 5 AS INT) AS fold
-         FROM events""",
-
-    "q233_target_encode_oof" ->
-      """WITH f AS (
-           SELECT event_type,
-             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 5 AS INT) AS fold,
-             CAST(floor(value * 1e6 + 0.5) AS DECIMAL(38,0)) AS q
-           FROM events),
-         cf AS (SELECT event_type, fold, CAST(SUM(q) AS DECIMAL(38,0)) AS s_cf,
-                       COUNT(*) AS n_cf
-                FROM f GROUP BY 1, 2),
-         c AS (SELECT event_type, CAST(SUM(s_cf) AS DECIMAL(38,0)) AS s_c,
-                      SUM(n_cf) AS n_c FROM cf GROUP BY 1),
-         g AS (SELECT fold, CAST(SUM(s_cf) AS DECIMAL(38,0)) AS s_f,
-                      SUM(n_cf) AS n_f FROM cf GROUP BY 1),
-         t AS (SELECT CAST(SUM(s_cf) AS DECIMAL(38,0)) AS s_all, SUM(n_cf) AS n_all FROM cf)
-         SELECT cf.event_type, cf.fold, CAST(c.n_c - cf.n_cf AS BIGINT) AS n_oof,
-           round((CAST(c.s_c - cf.s_cf AS DOUBLE) / 1e6
-                  + 10 * (CAST(t.s_all - g.s_f AS DOUBLE) / 1e6 / (t.n_all - g.n_f)))
-                 / ((c.n_c - cf.n_cf) + 10), 6) AS encoded
-         FROM cf JOIN c USING (event_type) JOIN g USING (fold) CROSS JOIN t""",
-
-    "q196_state_merge" ->
-      """SELECT event_type, COUNT(value) AS n,
-           CAST(SUM(CAST(floor(value * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6 AS sum_v,
-           MIN(value) AS min_v, MAX(value) AS max_v
-         FROM events GROUP BY 1""",
-
-    "q197_moments_merge" ->
-      """WITH q AS (
-           SELECT event_type, value,
-             CAST(floor(value * 1e6 + 0.5) AS HUGEINT) AS q
-           FROM events),
-         s AS (
-           SELECT event_type, COUNT(value) AS n, SUM(q) AS sq, SUM(q*q) AS sq2
-           FROM q GROUP BY 1)
-         SELECT event_type, n,
-           round(CAST(sq AS DOUBLE) / (CAST(n AS DOUBLE) * 1e6), 9) AS mean_v,
-           CASE WHEN n >= 2 THEN round(CAST(n*sq2 - sq*sq AS DOUBLE)
-             / (CAST(n*(n-1) AS DOUBLE) * 1e12), 9) END AS var_v,
-           CASE WHEN n >= 2 THEN round(sqrt(CAST(n*sq2 - sq*sq AS DOUBLE)
-             / (CAST(n*(n-1) AS DOUBLE) * 1e12)), 9) END AS std_v
-         FROM s""",
-
-    "q199_ewma" -> {
-      val w = 16
-      val terms = (0 until w).map { l =>
-        val src = if (l == 0) "vq" else s"lag(vq, $l) OVER w"
-        s"COALESCE(CAST($src AS HUGEINT) * ${1L << (w - 1 - l)}, 0)"
-      }.mkString(" + ")
-      s"""WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, value,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         f AS (
-           SELECT user_id, event_id, tus, value,
-             LEAST(ROW_NUMBER() OVER w, $w) AS m,
-             $terms AS num
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id))
-         SELECT user_id, event_id, tus, value,
-           ROUND(CAST(num AS DOUBLE)
-             / (${(1L << w).toDouble} - power(2, $w - m)) / 1000000.0, 9) AS ewma
-         FROM f"""
-    },
-
-    "q200_ra_links" -> OracleGen.raLinksSql(),
-
-    "q222_conformal" ->
-      """WITH b AS (
-           SELECT event_type AS g, CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS q,
-             event_id % 2 = 0 AS cal
-           FROM events),
-         cs AS (SELECT g, COUNT(*) AS nc, SUM(CAST(q AS HUGEINT)) AS sq
-                FROM b WHERE cal GROUP BY 1),
-         cr AS (SELECT b.g, cs.nc, abs(CAST(b.q AS HUGEINT)*cs.nc - cs.sq) AS r
-                FROM b JOIN cs ON b.g = cs.g WHERE b.cal),
-         h AS (SELECT g, nc, r, COUNT(*) AS c FROM cr GROUP BY 1, 2, 3),
-         cw AS (
-           SELECT *, SUM(c) OVER (PARTITION BY g ORDER BY r
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             ((nc + 1) * 9 + 9) // 10 AS k0
-           FROM h),
-         qh AS (
-           SELECT g, MIN(r) AS rhat, MIN(nc) AS ncal,
-             bool_or(k0 > nc) AS rank_clamped
-           FROM cw WHERE cum >= LEAST(k0, nc) GROUP BY 1)
-         SELECT b.g AS event_type,
-           CAST(MIN(qh.ncal) AS BIGINT) AS n_cal,
-           COUNT(*) AS n_test,
-           round(CAST(MIN(qh.rhat) AS DOUBLE) / (CAST(MIN(cs.nc) AS DOUBLE) * 1e6), 9) AS qhat,
-           CAST(SUM(CASE WHEN abs(CAST(b.q AS HUGEINT)*cs.nc - cs.sq) <= qh.rhat
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-           bool_or(qh.rank_clamped) AS rank_clamped
-         FROM b JOIN cs ON b.g = cs.g JOIN qh ON b.g = qh.g
-         WHERE NOT b.cal GROUP BY 1""",
-
-    "q220_cuped" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS tus,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         b AS (SELECT (MIN(tus) + MAX(tus)) // 2 AS mid FROM e),
-         u AS (
-           SELECT user_id,
-             CAST(SUM(CASE WHEN tus < mid THEN vq ELSE 0 END) AS DOUBLE) / 1e6 AS x,
-             CAST(SUM(CASE WHEN tus >= mid THEN vq ELSE 0 END) AS DOUBLE) / 1e6 AS y
-           FROM e, b GROUP BY user_id),
-         q AS (
-           SELECT user_id,
-             CAST(floor(x * 1e6 + 0.5) AS BIGINT) AS qx,
-             CAST(floor(y * 1e6 + 0.5) AS BIGINT) AS qy
-           FROM u),
-         s AS (
-           SELECT COUNT(*) AS n,
-             SUM(CAST(qx AS HUGEINT)) AS sx, SUM(CAST(qy AS HUGEINT)) AS sy,
-             SUM(CAST(qx AS HUGEINT) * qx) AS sxx, SUM(CAST(qx AS HUGEINT) * qy) AS sxy
-           FROM q),
-         t AS (
-           SELECT *,
-             CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE) AS covnum,
-             CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) AS varnum,
-             CAST(sx AS DOUBLE)/CAST(n AS DOUBLE) AS xbar
-           FROM s)
-         SELECT user_id, round(CAST(qy AS DOUBLE) / 1e6, 6) AS y,
-           CASE WHEN varnum > 0 THEN
-             round((CAST(qy AS DOUBLE) - (covnum/varnum) * (CAST(qx AS DOUBLE) - xbar)) / 1e6, 6)
-           ELSE round(CAST(qy AS DOUBLE) / 1e6, 6) END AS y_adj,
-           CASE WHEN varnum > 0 THEN round(covnum/varnum, 6) END AS theta
-         FROM q, t""",
-
-    "q221_trimmed_mean" ->
-      """WITH h AS (
-           SELECT event_type AS g, CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS v,
-             COUNT(*) AS c
-           FROM events GROUP BY 1, 2),
-         cw AS (
-           SELECT g, v, c,
-             SUM(c) OVER (PARTITION BY g ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             SUM(c) OVER (PARTITION BY g) AS n
-           FROM h),
-         bd AS (
-           SELECT g, MIN(CASE WHEN cum * 20 >= n * 1 THEN v END) AS lo,
-                     MIN(CASE WHEN cum * 20 >= n * 19 THEN v END) AS hi
-           FROM cw GROUP BY 1)
-         SELECT cw.g AS event_type, CAST(SUM(c) AS BIGINT) AS n_kept,
-           round(CAST(SUM(CAST(v AS HUGEINT) * c) AS DOUBLE)
-             / (CAST(SUM(c) AS DOUBLE) * 1000000.0), 9) AS trimmed_mean
-         FROM cw JOIN bd ON cw.g = bd.g WHERE v > lo AND v < hi GROUP BY 1""",
-
-    "q217_stream_state_merge" ->
-      """SELECT event_type, COUNT(value) AS n,
-           CAST(SUM(CAST(floor(value * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6 AS sum_v,
-           MIN(value) AS min_v, MAX(value) AS max_v
-         FROM events GROUP BY 1""",
-
-    "q218_fk_audit" ->
-      """SELECT 'lineitem_orphans' AS relationship,
-           (SELECT COUNT(*) FROM lineitem l
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) AS n_violations
-         UNION ALL
-         SELECT 'order_orphans',
-           (SELECT COUNT(*) FROM orders o
-            WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
-         UNION ALL
-         SELECT 'childless_orders',
-           (SELECT COUNT(*) FROM orders o
-            WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey))
-         UNION ALL
-         SELECT 'childless_customers',
-           (SELECT COUNT(*) FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey))""",
-
-    "q219_running_distinct" ->
-      """WITH e AS (
-           SELECT event_id, event_type, user_id, epoch_us(ts) AS tus FROM events),
-         f AS (
-           SELECT *, CASE WHEN ROW_NUMBER() OVER (PARTITION BY event_type, user_id
-             ORDER BY tus, event_id) = 1 THEN 1 ELSE 0 END AS ff
-           FROM e)
-         SELECT event_id, event_type, tus,
-           CAST(SUM(ff) OVER (PARTITION BY event_type ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_distinct
-         FROM f""",
-
-    "q215_mannwhitney" ->
-      """WITH two AS (
-           SELECT source AS g,
-             CAST(floor(CAST(n_chars AS DOUBLE) * 1 + 0.5) AS BIGINT) AS v
-           FROM documents WHERE source IN ('src1', 'src2')),
-         h AS (
-           SELECT v, COUNT(*) FILTER (WHERE g = 'src1') AS ca,
-                     COUNT(*) FILTER (WHERE g = 'src2') AS cb
-           FROM two GROUP BY 1),
-         c AS (
-           SELECT *, COALESCE(SUM(ca + cb) OVER (ORDER BY v
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-           FROM h),
-         s AS (
-           SELECT SUM(ca) AS n_a, SUM(cb) AS n_b,
-             SUM(ca * (2*cum + (ca + cb) + 1)) AS r2sum,
-             SUM(CAST((ca+cb)*(ca+cb)*(ca+cb) - (ca+cb) AS HUGEINT)) AS ties
-           FROM c),
-         f AS (
-           SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-             CAST(r2sum - n_a*(n_a+1) AS BIGINT) AS u2_a,
-             CAST(ties AS DOUBLE) AS ties_d
-           FROM s),
-         g AS (
-           SELECT *, CAST(n_a AS DOUBLE)*CAST(n_b AS DOUBLE)/12.0 *
-             ((CAST(n_a+n_b AS DOUBLE) + 1.0)
-               - ties_d/(CAST(n_a+n_b AS DOUBLE)*(CAST(n_a+n_b AS DOUBLE) - 1.0))) AS varu
-           FROM f)
-         SELECT n_a, n_b, u2_a, CAST(u2_a AS DOUBLE)/2.0 AS u_a,
-           CASE WHEN n_a >= 1 AND n_b >= 1 AND varu > 0 THEN
-             round((CAST(u2_a AS DOUBLE)/2.0
-               - CAST(n_a AS DOUBLE)*CAST(n_b AS DOUBLE)/2.0)/sqrt(varu), 6)
-           END AS z
-         FROM g""",
-
-    "q216_spearman" ->
-      """WITH b AS (
-           SELECT event_type AS g,
-             CAST(floor(CAST(epoch_us(ts) AS DOUBLE) * 1 + 0.5) AS BIGINT) AS x,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS y
-           FROM events),
-         hx AS (SELECT g, x, COUNT(*) AS t FROM b GROUP BY 1, 2),
-         cx AS (
-           SELECT g, x, 2*COALESCE(SUM(t) OVER (PARTITION BY g ORDER BY x
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS rx
-           FROM hx),
-         hy AS (SELECT g, y, COUNT(*) AS t FROM b GROUP BY 1, 2),
-         cy AS (
-           SELECT g, y, 2*COALESCE(SUM(t) OVER (PARTITION BY g ORDER BY y
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + t + 1 AS ry
-           FROM hy),
-         r AS (
-           SELECT b.g, cx.rx, cy.ry FROM b
-           JOIN cx ON b.g = cx.g AND b.x = cx.x
-           JOIN cy ON b.g = cy.g AND b.y = cy.y),
-         a AS (
-           SELECT g, COUNT(*) AS n,
-             SUM(CAST(rx AS HUGEINT)) AS sx, SUM(CAST(ry AS HUGEINT)) AS sy,
-             SUM(CAST(rx AS HUGEINT) * rx) AS sxx,
-             SUM(CAST(ry AS HUGEINT) * ry) AS syy,
-             SUM(CAST(rx AS HUGEINT) * ry) AS sxy
-           FROM r GROUP BY 1)
-         SELECT g AS event_type, n,
-           CASE WHEN n >= 2
-                 AND CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) > 0
-                 AND CAST(n AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) > 0
-           THEN round((CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))
-             / sqrt((CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))
-                  * (CAST(n AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 9)
-           END AS rho
-         FROM a""",
-
-    "q213_bitmap_distinct" ->
-      """SELECT event_type,
-           COUNT(DISTINCT user_id) AS n_distinct,
-           COUNT(DISTINCT user_id // 64) AS n_buckets
-         FROM events GROUP BY 1""",
-
-    "q214_jpeg_meta" ->
-      """SELECT doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         true AS is_jpeg,
-         CAST(octet_length(encode(text)) % 240 + 1 AS INT) AS height,
-         CAST(octet_length(encode(text)) % 320 + 1 AS INT) AS width
-         FROM documents""",
-
-    "q211_orc" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           MAX(l_orderkey) AS max_key
-         FROM lineitem GROUP BY 1""",
-
-    "q212_bitemporal" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS valid_from, event_id AS tx,
-             event_type AS status, value
-           FROM events),
-         b AS (
-           SELECT MAX(tx) // 2 AS tmax, MAX(valid_from) - 604800000000 AS vmax
-           FROM e),
-         f AS (SELECT e.* FROM e, b WHERE tx <= tmax AND valid_from <= vmax),
-         r AS (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-             ORDER BY valid_from DESC, tx DESC) AS rn
-           FROM f)
-         SELECT user_id, valid_from, tx, status, value FROM r WHERE rn = 1""",
-
-    "q209_neyman" ->
-      """WITH v AS (
-           SELECT source, doc_id,
-             CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS nt
-           FROM documents),
-         q AS (
-           SELECT source, doc_id,
-             CAST(floor(CAST(nt AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS vq
-           FROM v),
-         m AS (
-           SELECT source, COUNT(*) AS n_rows,
-             SUM(CAST(vq AS HUGEINT)) AS sq, SUM(CAST(vq AS HUGEINT) * vq) AS sq2
-           FROM q GROUP BY 1),
-         w AS (
-           SELECT source, n_rows,
-             CASE WHEN n_rows >= 2 THEN
-               sqrt(CAST(n_rows*sq2 - sq*sq AS DOUBLE)
-                 / (CAST(n_rows*(n_rows-1) AS DOUBLE) * 1e12))
-             ELSE 0.0 END AS sigma
-           FROM m),
-         wq AS (
-           SELECT source, n_rows,
-             CAST(floor(CAST(n_rows AS DOUBLE) * sigma * 1e6 + 0.5) AS BIGINT) AS wq0
-           FROM w),
-         tw AS (SELECT *, SUM(wq0) OVER () AS tw0, COUNT(*) OVER () AS ns FROM wq),
-         ww AS (
-           SELECT source, n_rows,
-             CASE WHEN tw0 > 0 THEN wq0 ELSE 1 END AS wqe,
-             CASE WHEN tw0 > 0 THEN CAST(tw0 AS BIGINT) ELSE ns END AS twe
-           FROM tw),
-         ap AS (
-           SELECT source, n_rows,
-             (120 * wqe) // twe AS base, (120 * wqe) % twe AS rem
-           FROM ww),
-         rk AS (
-           SELECT *, ROW_NUMBER() OVER (ORDER BY rem DESC, source) AS rk,
-             120 - SUM(base) OVER () AS leftover
-           FROM ap),
-         al AS (
-           SELECT source, n_rows,
-             LEAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END, n_rows) AS alloc
-           FROM rk),
-         rn AS (
-           SELECT source, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM q)
-         SELECT rn.source, rn.doc_id, al.n_rows, CAST(al.alloc AS BIGINT) AS alloc
-         FROM rn JOIN al ON rn.source = al.source WHERE rn.rn <= al.alloc""",
-
-    "q210_decay_attribution" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS tus, event_type, value FROM events),
-         conv AS (
-           SELECT user_id, tus AS ct, SUM(value) AS cv FROM e
-           WHERE event_type = 'purchase' GROUP BY 1, 2),
-         tch AS (
-           SELECT user_id, tus AS tt, MAX(event_type) AS ch FROM e
-           WHERE event_type <> 'purchase' GROUP BY 1, 2),
-         p AS (
-           SELECT c.user_id, c.ct, c.cv, t.ch,
-             (c.ct - t.tt) // 86400000000 AS b
-           FROM conv c JOIN tch t ON c.user_id = t.user_id
-             AND t.tt <= c.ct AND c.ct - t.tt <= 604800000000),
-         w AS (SELECT *, CAST(power(2.0, 7 - b) AS BIGINT) AS wt FROM p),
-         sw AS (SELECT *, SUM(wt) OVER (PARTITION BY user_id, ct) AS swt FROM w),
-         cr AS (
-           SELECT ch,
-             CAST(cv * CAST(wt AS DOUBLE) / CAST(swt AS DOUBLE) AS DECIMAL(18,6)) AS credit
-           FROM sw)
-         SELECT ch AS channel, COUNT(*) AS n_credits,
-           CAST(SUM(credit) AS DOUBLE) AS total_credit
-         FROM cr GROUP BY 1""",
-
-    "q207_interval_overlap" ->
-      """WITH i AS (
-           SELECT o_custkey, o_orderkey,
-             epoch_us(o_orderdate) // 86400000000 AS s,
-             epoch_us(o_orderdate) // 86400000000 + 30 AS e
-           FROM orders)
-         SELECT a.o_custkey, a.o_orderkey AS key_a, b.o_orderkey AS key_b,
-           least(a.e, b.e) - greatest(a.s, b.s) + 1 AS ov_days
-         FROM i a JOIN i b
-           ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey
-           AND a.s <= b.e AND b.s <= a.e""",
-
-    "q208_rrf_fusion" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-           FROM documents),
-         tot AS (
-           SELECT CAST(SUM(len(w)) AS BIGINT) AS nt, COUNT(*) AS nd FROM toks),
-         tfc AS (
-           SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term
-           FROM toks),
-         tfg AS (
-           SELECT doc_id, dl, term, COUNT(*) AS tf
-           FROM tfc WHERE term IN ('join', 'hash', 'scan') GROUP BY 1, 2, 3),
-         dft AS (
-           SELECT term,
-             CAST(ln((CAST((SELECT nd FROM tot) AS DOUBLE) - COUNT(*) + 0.5)
-               / (COUNT(*) + 0.5) + 1.0) AS DECIMAL(20,6)) AS idf
-           FROM tfg GROUP BY 1),
-         sc AS (
-           SELECT tfg.doc_id,
-             CAST(CAST(idf AS DOUBLE) * (tf * 2.5)
-               / (tf + 1.5 * (0.25 + 0.75 * dl
-                   / (CAST((SELECT nt FROM tot) AS DOUBLE) / CAST((SELECT nd FROM tot) AS DOUBLE))))
-               AS DECIMAL(20,9)) AS c
-           FROM tfg JOIN dft ON tfg.term = dft.term),
-         lex AS (
-           SELECT doc_id, rank FROM (
-             SELECT doc_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY SUM(c) DESC, doc_id) AS INT) AS rank
-             FROM sc GROUP BY doc_id)
-           WHERE rank <= 50),
-         sem AS (
-           SELECT doc_id, rank FROM (
-             SELECT c.vec_id AS doc_id,
-               CAST(ROW_NUMBER() OVER (
-                 ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                          c.vec_id) AS INT) AS rank
-             FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-             WHERE q.vec_id = 0)
-           WHERE rank <= 50),
-         u AS (SELECT doc_id, rank FROM lex UNION ALL SELECT doc_id, rank FROM sem),
-         f AS (
-           SELECT doc_id, CAST(SUM(1000000000 // (60 + rank)) AS BIGINT) AS rrf_q,
-             COUNT(*) AS n_rankers
-           FROM u GROUP BY 1)
-         SELECT doc_id, rrf_q, n_rankers, fused_rank FROM (
-           SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY rrf_q DESC, doc_id) AS INT) AS fused_rank
-           FROM f)
-         WHERE fused_rank <= 20""",
-
-    "q205_robust_scale" ->
-      """WITH q AS (
-           SELECT event_id, event_type, value,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         h AS (SELECT event_type, vq AS v, COUNT(*) AS c FROM q GROUP BY 1, 2),
-         cw AS (
-           SELECT event_type, v,
-             SUM(c) OVER (PARTITION BY event_type ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             SUM(c) OVER (PARTITION BY event_type) AS n
-           FROM h),
-         s AS (
-           SELECT event_type,
-             MIN(CASE WHEN cum * 4 >= n THEN v END) AS q1,
-             MIN(CASE WHEN cum * 2 >= n THEN v END) AS med,
-             MIN(CASE WHEN cum * 4 >= n * 3 THEN v END) AS q3
-           FROM cw GROUP BY 1)
-         SELECT q.event_id, q.event_type, q.value,
-           CASE WHEN s.q3 > s.q1 THEN
-             round(CAST(q.vq - s.med AS DOUBLE) / CAST(s.q3 - s.q1 AS DOUBLE), 9)
-           END AS scaled
-         FROM q JOIN s USING (event_type)""",
-
-    "q206_rendezvous" ->
-      """WITH d AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS k FROM documents),
-         h AS (
-           SELECT doc_id, s.s AS s,
-             ('0x' || substr(md5('hrw|' || s.s || '|' || k), 1, 8))::BIGINT AS hv
-           FROM d CROSS JOIN (SELECT unnest(range(0, 9)) AS s) s),
-         m8 AS (SELECT doc_id, MAX(hv) AS mh FROM h WHERE s < 8 GROUP BY 1),
-         a8 AS (
-           SELECT h.doc_id, MAX(h.s) AS shard8 FROM h
-           JOIN m8 ON h.doc_id = m8.doc_id AND h.hv = m8.mh WHERE h.s < 8 GROUP BY 1),
-         m9 AS (SELECT doc_id, MAX(hv) AS mh FROM h GROUP BY 1),
-         a9 AS (
-           SELECT h.doc_id, MAX(h.s) AS shard9 FROM h
-           JOIN m9 ON h.doc_id = m9.doc_id AND h.hv = m9.mh GROUP BY 1)
-         SELECT a8.doc_id, CAST(shard8 AS INT) AS shard8, CAST(shard9 AS INT) AS shard9,
-           shard8 <> shard9 AS moved
-         FROM a8 JOIN a9 ON a8.doc_id = a9.doc_id""",
-
-    "q203_pit_join" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tus, event_type FROM events),
-         upd AS (SELECT * FROM e WHERE event_id % 5 = 0),
-         r AS (
-           SELECT *, CASE WHEN lag(event_type) OVER w IS NULL
-                            OR lag(event_type) OVER w <> event_type
-                          THEN 1 ELSE 0 END AS chg
-           FROM upd WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         p AS (
-           SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS per FROM r),
-         g AS (SELECT user_id, per, MIN(event_type) AS status, MIN(tus) AS from_us
-               FROM p GROUP BY 1, 2),
-         f AS (SELECT user_id, event_id, tus FROM e WHERE event_id % 5 <> 0)
-         SELECT f.user_id, f.event_id, f.tus, g.status, g.from_us
-         FROM f ASOF LEFT JOIN g ON f.user_id = g.user_id AND g.from_us <= f.tus""",
-
-    "q204_theil_sen" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS t,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         p AS (
-           SELECT a.user_id,
-             (CAST(b.vq - a.vq AS HUGEINT) * 3600000000) // ((b.t - a.t) * 1000) AS sq
-           FROM e a JOIN e b ON a.user_id = b.user_id AND a.t < b.t),
-         r AS (
-           SELECT user_id, CAST(sq AS BIGINT) AS sq,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY sq) AS rn,
-             COUNT(*) OVER (PARTITION BY user_id) AS np
-           FROM p)
-         SELECT user_id, np AS n_pairs, sq AS slope_q,
-           round(CAST(sq AS DOUBLE) / 1000.0, 9) AS slope
-         FROM r WHERE rn = (np + 1) // 2""",
-
-    "q201_jw_linkage" ->
-      """WITH r AS (
-           SELECT c_custkey, c_name,
-             ROW_NUMBER() OVER (ORDER BY c_name, c_custkey) AS idx
-           FROM customer)
-         SELECT a.c_custkey AS k_a, b.c_custkey AS k_b,
-           round(jaro_winkler_similarity(a.c_name, b.c_name), 9) AS jw
-         FROM r a JOIN r b ON b.idx - a.idx BETWEEN 1 AND 10
-         WHERE round(jaro_winkler_similarity(a.c_name, b.c_name), 9) >= 0.96""",
-
-    "q202_bloom_join" ->
-      """SELECT p.p_brand, COUNT(*) AS n,
-           CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-         WHERE p.p_size <= 2
-         GROUP BY 1""",
-
-    "q198_linkage" ->
-      """WITH c AS (
-           SELECT c_custkey, c_name,
-             CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
-           FROM customer),
-         r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY c_name, c_custkey) AS idx FROM c)
-         SELECT a.c_custkey AS c_custkey_a, b.c_custkey AS c_custkey_b,
-           (CASE WHEN levenshtein(a.c_name, b.c_name) <= 1 THEN '1' ELSE '0' END) ||
-           (CASE WHEN abs(a.cents - b.cents) <= 5000 THEN '1' ELSE '0' END) AS pattern,
-           (CASE WHEN levenshtein(a.c_name, b.c_name) <= 1 THEN 3 ELSE -3 END) +
-           (CASE WHEN abs(a.cents - b.cents) <= 5000 THEN 2 ELSE -2 END) AS score
-         FROM r a JOIN r b ON b.idx - a.idx BETWEEN 1 AND 10
-         WHERE (CASE WHEN levenshtein(a.c_name, b.c_name) <= 1 THEN 3 ELSE -3 END) +
-               (CASE WHEN abs(a.cents - b.cents) <= 5000 THEN 2 ELSE -2 END) >= 1""",
-
-    "q188_gif_meta" ->
-      """SELECT doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         true AS is_gif,
-         CAST(octet_length(encode(text)) % 320 + 1 AS INT) AS width,
-         CAST(octet_length(encode(text)) % 240 + 1 AS INT) AS height
-         FROM documents""",
-
-    "q189_target_encode" ->
-      """WITH q AS (
-           SELECT l_suppkey,
-             CAST(floor(CAST(l_quantity AS DOUBLE) * 1000000 + 0.5) AS DECIMAL(38,0)) AS vq
-           FROM lineitem),
-         g AS (SELECT SUM(vq) AS gs, COUNT(*) AS gn FROM q),
-         c AS (SELECT l_suppkey, SUM(vq) AS s, COUNT(*) AS n FROM q GROUP BY 1)
-         SELECT l_suppkey, n,
-           ROUND((CAST(s AS DOUBLE) / 1e6 + 10 * (CAST(gs AS DOUBLE) / 1e6 / gn))
-             / (n + 10), 6) AS encoded
-         FROM c, g""",
-
-    // the streaming monitor is exact-equal to the batch closed form
-    "q187_stream_cusum" ->
-      """WITH e AS (
-           SELECT event_id, event_type, epoch_ns(ts)//1000 AS tus,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) - 50000000 AS dev
-           FROM events),
-         c AS (
-           SELECT event_id, event_type, tus,
-             SUM(dev) OVER (PARTITION BY event_type ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM e),
-         d AS (
-           SELECT event_id, event_type, tus, cum,
-             MIN(cum) OVER (PARTITION BY event_type ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rmin,
-             MAX(cum) OVER (PARTITION BY event_type ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rmax
-           FROM c)
-         SELECT event_id, event_type, tus,
-           CAST(cum - least(0, rmin) AS BIGINT) AS cusum_hi,
-           CAST(greatest(0, rmax) - cum AS BIGINT) AS cusum_lo,
-           (cum - least(0, rmin) > 2000000000 OR greatest(0, rmax) - cum > 2000000000) AS is_shift
-         FROM d""",
-
-    // The oracle PREDICTS each planted URL's canonical form from the
-    // normalization spec — stronger than mirroring the chain.
-    "q177_canonical_url" ->
-      """SELECT doc_id, url, canon FROM (
-           SELECT doc_id,
-             'HTTP://WWW.Site' || (doc_id % 20) || '.Example.COM:80/Page' || (doc_id % 5)
-               || '/?utm_source=x&b=' || (doc_id % 3) || '&a=1#sec' AS url,
-             'http://site' || (doc_id % 20) || '.example.com/Page' || (doc_id % 5)
-               || '?a=1&b=' || (doc_id % 3) AS canon
-           FROM documents
-           UNION ALL
-           SELECT doc_id,
-             'https://CDN' || (doc_id % 7) || '.example.org:443/x/y/' AS url,
-             'https://cdn' || (doc_id % 7) || '.example.org/x/y' AS canon
-           FROM documents
-           UNION ALL
-           SELECT doc_id,
-             'http://shop.example.net/p?z=9&a=' || (doc_id % 2) || '&fbclid=abc' AS url,
-             'http://shop.example.net/p?a=' || (doc_id % 2) || '&z=9' AS canon
-           FROM documents)""",
-
-    "q178_boilerplate" ->
-      """WITH d AS (
-           SELECT doc_id, source,
-             text || chr(10) || 'Copyright Example Corp' || chr(10) || 'Banner '
-               || (doc_id % 2) || chr(10) || 'unique tail ' || doc_id AS text
-           FROM documents),
-         ls AS (SELECT doc_id, source, string_split(text, chr(10)) AS arr FROM d),
-         l AS (SELECT doc_id, source, unnest(arr) AS line,
-                 unnest(generate_series(1, len(arr))) AS pos FROM ls),
-         tot AS (SELECT source, COUNT(DISTINCT doc_id) AS n_docs FROM d GROUP BY 1),
-         lf AS (SELECT source, line, COUNT(DISTINCT doc_id) AS df FROM l GROUP BY 1, 2),
-         boiler AS (
-           SELECT source, line FROM lf JOIN tot USING (source)
-           WHERE df * 2 >= n_docs * 1),
-         kept AS (
-           SELECT l.doc_id, l.line, l.pos FROM l
-           ANTI JOIN boiler b ON l.source = b.source AND l.line = b.line)
-         SELECT doc_id, CAST(COUNT(*) AS INT) AS n_lines,
-           array_to_string(list(line ORDER BY pos), chr(10)) AS text
-         FROM kept GROUP BY doc_id""",
-
-    "q179_golden_records" ->
-      """WITH RECURSIVE ent AS (
-           SELECT p_name AS s, MIN(p_partkey) AS id, MIN(p_brand) AS brand,
-             MIN(p_size) AS psize
-           FROM part GROUP BY p_name),
-         corpus AS (
-           SELECT id, s, brand, psize FROM ent
-           UNION ALL
-           SELECT id + 1000000 AS id,
-             substr(s, 1, CAST(id % len(s) AS INT)) || 'q'
-               || substr(s, CAST(id % len(s) AS INT) + 2) AS s,
-             brand, psize + 1 AS psize
-           FROM ent WHERE id % 2 = 0),
-         base AS (SELECT id, s, len(s) AS l FROM corpus),
-         posts AS (
-           SELECT id, s, l, i AS idx,
-             substr(s, (i*l)//3 + 1, ((i+1)*l)//3 - (i*l)//3) AS seg
-           FROM base, unnest([0, 1, 2]) t(i)),
-         blocks AS (
-           SELECT idx, seg, l FROM posts GROUP BY idx, seg, l HAVING COUNT(*) <= 100),
-         allowed AS (SELECT p.* FROM posts p JOIN blocks b USING (idx, seg, l)),
-         prs AS (
-           SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           FROM allowed a JOIN allowed b USING (idx, seg, l)
-           WHERE a.id < b.id AND levenshtein(a.s, b.s) <= 2),
-         edges AS (SELECT id_a AS a, id_b AS bb FROM prs
-                   UNION SELECT id_b, id_a FROM prs),
-         reach(node, lbl) AS (
-           SELECT a, a FROM edges
-           UNION
-           SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.bb = r.node),
-         comp AS (SELECT node, MIN(lbl) AS component FROM reach GROUP BY node),
-         lab AS (
-           SELECT c.*, coalesce(m.component, c.id) AS cluster
-           FROM corpus c LEFT JOIN comp m ON c.id = m.node),
-         melt AS (
-           SELECT cluster, 's' AS attr, CAST(s AS VARCHAR) AS v FROM lab
-           UNION ALL SELECT cluster, 'brand', CAST(brand AS VARCHAR) FROM lab
-           UNION ALL SELECT cluster, 'psize', CAST(psize AS VARCHAR) FROM lab),
-         cnts AS (
-           SELECT cluster, attr, v, COUNT(*) AS cnt FROM melt
-           WHERE v IS NOT NULL GROUP BY 1, 2, 3),
-         best AS (
-           SELECT cluster, attr, v FROM (
-             SELECT cluster, attr, v,
-               ROW_NUMBER() OVER (PARTITION BY cluster, attr
-                 ORDER BY cnt DESC, v) AS rn
-             FROM cnts) WHERE rn = 1),
-         mem AS (SELECT cluster, COUNT(*) AS n_members FROM lab GROUP BY 1)
-         SELECT b.cluster, m.n_members,
-           MAX(CASE WHEN attr = 's' THEN v END) AS s,
-           MAX(CASE WHEN attr = 'brand' THEN v END) AS brand,
-           MAX(CASE WHEN attr = 'psize' THEN v END) AS psize
-         FROM best b JOIN mem m USING (cluster)
-         GROUP BY b.cluster, m.n_members""",
-
-    // q41's pair list + components, winner = highest n_chars / tie
-    // smallest id
-    "q181_dedup_keep_best" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
-         sh AS (
-           SELECT doc_id,
-             list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                            for i in generate_series(1, len(w)-2)]) AS grams
-           FROM toks WHERE len(w) >= 3),
-         post AS (SELECT doc_id, unnest(grams) AS g FROM sh),
-         rare AS (SELECT g FROM post GROUP BY g HAVING COUNT(*) <= 20),
-         rpost AS (SELECT doc_id, g FROM post WHERE g IN (SELECT g FROM rare)),
-         cnt AS (SELECT doc_id, COUNT(*) AS n FROM rpost GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-           FROM rpost a JOIN rpost b ON a.g = b.g AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         top AS (
-           SELECT doc_a, doc_b FROM (
-             SELECT doc_a, doc_b,
-               ROW_NUMBER() OVER (
-                 ORDER BY CAST(common AS DOUBLE) / (ca.n + cb.n - common) DESC, doc_a, doc_b) AS rnk
-             FROM pairs
-             JOIN cnt ca ON doc_a = ca.doc_id
-             JOIN cnt cb ON doc_b = cb.doc_id)
-           WHERE rnk <= 100),
-         edges AS (SELECT doc_a AS a, doc_b AS b FROM top
-                   UNION SELECT doc_b, doc_a FROM top),
-         reach(node, lbl) AS (
-           SELECT a, a FROM edges
-           UNION
-           SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.b = r.node),
-         comp AS (SELECT node, MIN(lbl) AS component FROM reach GROUP BY node),
-         lab AS (
-           SELECT d.doc_id, d.n_chars, coalesce(c.component, d.doc_id) AS cluster
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.node),
-         win AS (
-           SELECT cluster, doc_id AS keep_id FROM (
-             SELECT cluster, doc_id,
-               ROW_NUMBER() OVER (PARTITION BY cluster
-                 ORDER BY n_chars DESC, doc_id) AS rn
-             FROM lab) WHERE rn = 1)
-         SELECT l.doc_id, l.cluster, l.doc_id = w.keep_id AS keep
-         FROM lab l JOIN win w USING (cluster)""",
-
-    "q182_temperature_mix" ->
-      """WITH c AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY 1),
-         w AS (SELECT source,
-                 CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000000) AS BIGINT) AS wq
-               FROM c),
-         t AS (SELECT SUM(wq) AS totw FROM w),
-         q AS (SELECT source, CAST((300 * wq) // totw AS BIGINT) AS quota FROM w, t),
-         r AS (SELECT doc_id, source,
-                 ROW_NUMBER() OVER (PARTITION BY source
-                   ORDER BY md5('0 ' || CAST(doc_id AS VARCHAR)),
-                            CAST(doc_id AS VARCHAR)) AS rk
-               FROM documents)
-         SELECT r.doc_id, r.source, q.quota
-         FROM r JOIN q USING (source) WHERE r.rk <= q.quota""",
-
-    "q184_seasonal_anomaly" ->
-      """WITH e AS (
-           SELECT event_id, event_type, epoch_ns(ts)//1000 AS tus,
-             CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vq
-           FROM events),
-         h AS (
-           SELECT event_id, event_type,
-             CAST((tus // 3600000000) % 24 AS INT) AS hod, vq
-           FROM e),
-         b AS (
-           SELECT event_type, hod, SUM(vq) AS s, COUNT(*) AS n
-           FROM h GROUP BY 1, 2)
-         SELECT h.event_id, h.event_type, h.hod,
-           CAST(s AS DOUBLE) / n AS base_mean,
-           abs(n * vq - s) > 25000000 * n AS is_anomaly
-         FROM h JOIN b USING (event_type, hod)""",
-
-    "q172_wav_meta" ->
-      """SELECT doc_id,
-         true AS is_wav,
-         CAST(1 AS INT) AS n_channels,
-         CAST(8000 AS INT) AS sample_rate,
-         CAST(8 AS INT) AS bits_per_sample,
-         CAST(octet_length(encode(text)) AS BIGINT) AS data_bytes
-         FROM documents""",
-
-    "q173_top_paths" ->
-      """WITH e AS (
-           SELECT user_id, epoch_ns(ts)//1000 AS tus, event_type, event_id
-           FROM events),
-         s AS (
-           SELECT user_id, tus, event_type, event_id,
-             CASE WHEN lag(tus) OVER (PARTITION BY user_id ORDER BY tus, event_id) IS NULL
-                    OR tus - lag(tus) OVER (PARTITION BY user_id ORDER BY tus, event_id) > 1800000000
-                  THEN 1 ELSE 0 END AS nw
-           FROM e),
-         sd AS (
-           SELECT user_id, tus, event_type, event_id,
-             SUM(nw) OVER (PARTITION BY user_id ORDER BY tus, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM s),
-         p AS (
-           SELECT event_type AS t0, sid,
-             lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS t1,
-             lead(sid, 1) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS s1,
-             lead(event_type, 2) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS t2,
-             lead(sid, 2) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS s2
-           FROM sd),
-         c AS (
-           SELECT t0 || '>' || t1 || '>' || t2 AS path, COUNT(*) AS c
-           FROM p WHERE t1 IS NOT NULL AND t2 IS NOT NULL AND s1 = sid AND s2 = sid
-           GROUP BY 1),
-         r AS (
-           SELECT path, c,
-             CAST(ROW_NUMBER() OVER (ORDER BY c DESC, path) AS INT) AS rank
-           FROM c)
-         SELECT path, c, rank FROM r WHERE rank <= 20""",
-
-    "q174_zipf" ->
-      """WITH tf AS (
-           SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-           FROM documents),
-         cc AS (SELECT t, COUNT(*) AS c FROM tf GROUP BY 1),
-         r AS (
-           SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, t) AS rank FROM cc),
-         q AS (
-           SELECT CAST(floor(ln(CAST(rank AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT) AS x,
-                  CAST(floor(ln(CAST(c AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT) AS y
-           FROM r WHERE rank <= 200),
-         s AS (
-           SELECT COUNT(*) AS n,
-             SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-             SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-             SUM(CAST(y * y AS DECIMAL(38,0))) AS syy,
-             SUM(CAST(x * y AS DECIMAL(38,0))) AS sxy
-           FROM q)
-         SELECT n AS n_terms,
-           ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-             / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 9) AS slope,
-           ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-             * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-             / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 9) AS r2
-         FROM s""",
-
-    "q168_png_meta" ->
-      """SELECT doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         true AS is_png,
-         CAST(octet_length(encode(text)) % 320 + 1 AS INT) AS width,
-         CAST(octet_length(encode(text)) % 240 + 1 AS INT) AS height,
-         CAST(8 AS INT) AS bit_depth,
-         CAST(0 AS INT) AS color_type
-         FROM documents""",
-
-    "q169_stream_psi" ->
-      """WITH e AS (
-           SELECT date_trunc('hour', make_timestamp(epoch_ns(ts)//1000)) AS h,
-             CAST(floor(value / 20.0) AS BIGINT) AS bin
-           FROM events),
-         cells AS (SELECT h, bin, COUNT(*) AS n FROM e GROUP BY 1, 2),
-         ht AS (SELECT h, SUM(n) AS tot FROM cells GROUP BY 1),
-         base AS (SELECT bin, COUNT(*) AS bn FROM e GROUP BY 1),
-         bt AS (SELECT SUM(bn) AS btot FROM base),
-         grid AS (
-           SELECT hh.h, b.bin, b.bn
-           FROM (SELECT DISTINCT h FROM cells) hh CROSS JOIN base b),
-         f AS (
-           SELECT coalesce(g.h, c.h) AS h, coalesce(g.bin, c.bin) AS bin, g.bn, c.n
-           FROM grid g FULL JOIN cells c ON g.h = c.h AND g.bin = c.bin),
-         t AS (
-           SELECT f.h,
-             CASE WHEN n > 0 AND bn > 0 THEN
-               CAST((CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) - CAST(bn AS DOUBLE) / CAST(btot AS DOUBLE))
-                 * ln((CAST(n AS DOUBLE) / CAST(tot AS DOUBLE)) / (CAST(bn AS DOUBLE) / CAST(btot AS DOUBLE)))
-                 AS DECIMAL(20,9)) END AS term,
-             tot
-           FROM f JOIN ht ON ht.h = f.h CROSS JOIN bt)
-         SELECT h AS hour_start, ROUND(CAST(SUM(term) AS DOUBLE), 6) AS psi,
-           COUNT(term) AS n_bins_used,
-           COUNT(CASE WHEN term IS NULL THEN 1 END) AS n_bins_dropped,
-           CAST(MAX(tot) AS BIGINT) AS n_events
-         FROM t GROUP BY 1""",
-
-    "q170_interarrival" ->
-      """WITH e AS (
-           SELECT user_id, epoch_ns(ts)//1000 AS tus, event_id FROM events),
-         g AS (
-           SELECT user_id,
-             lead(tus) OVER (PARTITION BY user_id ORDER BY tus, event_id) - tus AS gap
-           FROM e)
-         SELECT user_id, COUNT(*) AS n_gaps, MIN(gap) AS min_gap, MAX(gap) AS max_gap,
-           CAST(CAST(quantile_cont(gap, 0.5) AS DECIMAL(18,4)) AS DOUBLE) AS median_gap
-         FROM g WHERE gap IS NOT NULL GROUP BY 1""",
-
-    "q171_quantile_bins" ->
-      """WITH b AS (
-           SELECT source,
-             list_transform(quantile_cont(n_chars, [0.25, 0.5, 0.75]),
-               x -> CAST(x AS DECIMAL(18,6))) AS qs
-           FROM documents GROUP BY 1)
-         SELECT d.doc_id, d.source, d.n_chars,
-           CAST(1 + len(list_filter(b.qs, x -> x <= CAST(d.n_chars AS DECIMAL(18,6)))) AS INT) AS bin
-         FROM documents d JOIN b USING (source)""",
-
-    "q166_table_digest" ->
-      """WITH k AS (
-           SELECT md5(concat_ws(chr(1),
-             coalesce(CAST(l_orderkey AS VARCHAR), chr(0)),
-             coalesce(CAST(l_linenumber AS VARCHAR), chr(0)),
-             coalesce(l_returnflag, chr(0)),
-             coalesce(l_linestatus, chr(0)))) AS h
-           FROM lineitem)
-         SELECT COUNT(*) AS n_rows,
-           CAST(SUM(('0x' || substr(h, 1, 8))::BIGINT) AS VARCHAR) AS digest_a,
-           CAST(SUM(('0x' || substr(h, 9, 8))::BIGINT) AS VARCHAR) AS digest_b
-         FROM k""",
-
-    "q161_bm25" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-           FROM documents),
-         tot AS (
-           SELECT CAST(SUM(len(w)) AS BIGINT) AS nt, COUNT(*) AS nd FROM toks),
-         tf AS (
-           SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, unnest(w) AS term
-           FROM toks),
-         tfc AS (
-           SELECT doc_id, dl, term, COUNT(*) AS tf
-           FROM tf WHERE term IN ('join', 'hash', 'scan') GROUP BY 1, 2, 3),
-         dft AS (
-           SELECT term,
-             CAST(ln((CAST((SELECT nd FROM tot) AS DOUBLE) - COUNT(*) + 0.5)
-               / (COUNT(*) + 0.5) + 1.0) AS DECIMAL(20,6)) AS idf
-           FROM tfc GROUP BY 1),
-         sc AS (
-           SELECT tfc.doc_id,
-             CAST(CAST(idf AS DOUBLE) * (tf * 2.5)
-               / (tf + 1.5 * (0.25 + 0.75 * dl
-                   / (CAST((SELECT nt FROM tot) AS DOUBLE) / CAST((SELECT nd FROM tot) AS DOUBLE))))
-               AS DECIMAL(20,9)) AS c
-           FROM tfc JOIN dft ON tfc.term = dft.term),
-         agg AS (
-           SELECT doc_id, SUM(c) AS score, COUNT(*) AS n_terms FROM sc GROUP BY 1),
-         rk AS (
-           SELECT doc_id, score, n_terms,
-             CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank
-           FROM agg)
-         SELECT doc_id, ROUND(CAST(score AS DOUBLE), 6) AS score, n_terms, rank
-         FROM rk WHERE rank <= 10""",
-
-    "q162_snm" ->
-      """WITH k AS (
-           SELECT doc_id, substring(lower(text), 1, 16) AS sk FROM documents),
-         r AS (
-           SELECT doc_id, ROW_NUMBER() OVER (ORDER BY sk, doc_id) AS idx FROM k)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b, b.idx - a.idx AS d
-         FROM r a JOIN r b ON b.idx - a.idx BETWEEN 1 AND 5""",
-
-    "q163_gaps" ->
-      """WITH ids AS (
-           SELECT DISTINCT o_orderpriority AS pri, o_orderkey AS id FROM orders),
-         g AS (
-           SELECT pri, id,
-             lead(id) OVER (PARTITION BY pri ORDER BY id) AS nxt
-           FROM ids)
-         SELECT pri, id + 1 AS gap_lo, nxt - 1 AS gap_hi, nxt - id - 1 AS gap_len
-         FROM g WHERE nxt - id > 1""",
-
-    "q164_file_stats" ->
-      """SELECT parse_filename(filename) AS file_name, COUNT(*) AS n_rows,
-           MIN(l_partkey) AS min_l_partkey, MAX(l_partkey) AS max_l_partkey,
-           MIN(l_suppkey) AS min_l_suppkey, MAX(l_suppkey) AS max_l_suppkey
-         FROM read_parquet('/tmp/graft_zorder___SFTAG__/*.parquet', filename=true)
-         GROUP BY 1""",
-
-    "q156_linreg" ->
-      """WITH q AS (
-           SELECT l_returnflag,
-             CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS x,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y
-           FROM lineitem),
-         s AS (
-           SELECT l_returnflag, COUNT(*) AS n,
-             SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-             SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-             SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-             SUM(CAST(y * y AS DECIMAL(38,0))) AS syy,
-             SUM(CAST(x * y AS DECIMAL(38,0))) AS sxy
-           FROM q GROUP BY 1)
-         SELECT l_returnflag, n,
-           CASE WHEN n >= 2 AND CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 THEN
-             ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 9) END AS slope,
-           CASE WHEN n >= 2 AND CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 THEN
-             ROUND((CAST(sy AS DOUBLE) - (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * CAST(sx AS DOUBLE))
-               / CAST(n AS DOUBLE) / 100, 9) END AS intercept,
-           CASE WHEN n >= 2 AND CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-                  AND CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0 THEN
-             ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                  * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 9) END AS r2
-         FROM s""",
-
-    "q157_welch_t" ->
-      """WITH q AS (
-           SELECT source, CAST(floor(n_chars * 1 + 0.5) AS BIGINT) AS v
-           FROM documents WHERE source IN ('src1', 'src2')),
-         s AS (
-           SELECT
-             COUNT(*) FILTER (source = 'src1') AS n_a,
-             COUNT(*) FILTER (source = 'src2') AS n_b,
-             SUM(CAST(v AS DECIMAL(38,0))) FILTER (source = 'src1') AS sa,
-             SUM(CAST(v AS DECIMAL(38,0))) FILTER (source = 'src2') AS sb,
-             SUM(CAST(v * v AS DECIMAL(38,0))) FILTER (source = 'src1') AS ssa,
-             SUM(CAST(v * v AS DECIMAL(38,0))) FILTER (source = 'src2') AS ssb
-           FROM q),
-         e AS (
-           SELECT n_a, n_b,
-             CAST(sa AS DOUBLE) / CAST(n_a AS DOUBLE) AS ma,
-             CAST(sb AS DOUBLE) / CAST(n_b AS DOUBLE) AS mb,
-             (CAST(ssa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / CAST(n_a AS DOUBLE)) / (CAST(n_a AS DOUBLE) - 1) / CAST(n_a AS DOUBLE) AS sea,
-             (CAST(ssb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / CAST(n_b AS DOUBLE)) / (CAST(n_b AS DOUBLE) - 1) / CAST(n_b AS DOUBLE) AS seb
-           FROM s)
-         SELECT n_a, n_b,
-           ROUND(ma / 1, 6) AS mean_a, ROUND(mb / 1, 6) AS mean_b,
-           CASE WHEN n_a >= 2 AND n_b >= 2 AND sea + seb > 0 THEN
-             ROUND((ma - mb) / sqrt(sea + seb), 6) END AS t_stat,
-           CASE WHEN n_a >= 2 AND n_b >= 2 AND sea + seb > 0 THEN
-             ROUND((sea + seb) * (sea + seb)
-               / (sea * sea / (CAST(n_a AS DOUBLE) - 1) + seb * seb / (CAST(n_b AS DOUBLE) - 1)), 6) END AS dof
-         FROM e""",
-
-    "q158_benford" ->
-      """WITH base AS (
-           SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v FROM orders),
-         tot AS (
-           SELECT COUNT(*) FILTER (v > 0) AS n_pos,
-             COUNT(*) FILTER (v <= 0 OR v IS NULL) AS n_skipped
-           FROM base)
-         SELECT CAST(substring(CAST(v AS VARCHAR), 1, 1) AS INT) AS digit,
-           COUNT(*) AS n,
-           ROUND(CAST(COUNT(*) AS DOUBLE) / CAST(MAX(tot.n_pos) AS DOUBLE), 9) AS p_obs,
-           ROUND(ln(1.0 + 1.0 / CAST(CAST(substring(CAST(v AS VARCHAR), 1, 1) AS INT) AS DOUBLE)) / ln(10.0), 9) AS p_exp,
-           ROUND(CAST(COUNT(*) AS DOUBLE) / CAST(MAX(tot.n_pos) AS DOUBLE)
-             - ln(1.0 + 1.0 / CAST(CAST(substring(CAST(v AS VARCHAR), 1, 1) AS INT) AS DOUBLE)) / ln(10.0), 9) AS dev,
-           MAX(tot.n_skipped) AS n_skipped
-         FROM base CROSS JOIN tot WHERE v > 0 GROUP BY 1""",
-
-    "q159_null_profile" ->
-      """WITH d AS (
-           SELECT
-             CASE WHEN o_orderpriority <> '1-URGENT' THEN o_orderpriority END AS pri,
-             CASE WHEN o_orderstatus = 'F' THEN o_orderstatus END AS status_f,
-             CASE WHEN o_totalprice > 200000 THEN o_totalprice END AS price_high
-           FROM orders)
-         SELECT 'pri' AS "column", COUNT(*) AS n_rows, COUNT(pri) AS n_nonnull,
-           COUNT(*) - COUNT(pri) AS n_null, COUNT(DISTINCT pri) AS n_distinct,
-           ROUND(CAST(COUNT(pri) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9) AS fill_rate
-         FROM d
-         UNION ALL
-         SELECT 'status_f', COUNT(*), COUNT(status_f),
-           COUNT(*) - COUNT(status_f), COUNT(DISTINCT status_f),
-           ROUND(CAST(COUNT(status_f) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9)
-         FROM d
-         UNION ALL
-         SELECT 'price_high', COUNT(*), COUNT(price_high),
-           COUNT(*) - COUNT(price_high), COUNT(DISTINCT price_high),
-           ROUND(CAST(COUNT(price_high) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9)
-         FROM d""",
-
-    "q160_mode" ->
-      """WITH h AS (
-           SELECT user_id, event_type AS mode_value, COUNT(*) AS n
-           FROM events GROUP BY 1, 2),
-         r AS (
-           SELECT user_id, mode_value, n,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n DESC, mode_value) AS rn
-           FROM h)
-         SELECT user_id, mode_value, n FROM r WHERE rn = 1""",
-
-    "q152_stream_hll_hourly" ->
-      """WITH k AS (
-           SELECT DISTINCT date_trunc('hour', make_timestamp(epoch_ns(ts)//1000)) AS h,
-             CAST(user_id AS VARCHAR) AS key
-           FROM events),
-         hh AS (
-           SELECT h, ('0x' || substr(md5(key), 1, 8))::BIGINT AS h1,
-                  ('0x' || substr(md5(key), 9, 8))::BIGINT AS w
-           FROM k)
-         SELECT h AS hour_start, h1 >> 22 AS bucket,
-           CAST(MAX(CASE WHEN w = 0 THEN 33 ELSE 33 - length(bin(w)) END) AS INT) AS r
-         FROM hh GROUP BY 1, 2""",
-
-    "q153_schema_merge" ->
-      """SELECT doc_id, source, lang
-         FROM read_parquet('/tmp/graft_merge___SFTAG__/*.parquet', union_by_name=true)""",
-
-    "q150_k_anonymity" ->
-      """SELECT event_type,
-           CAST((epoch_us(ts) // 86400000000) % 7 AS BIGINT) AS dow,
-           COUNT(*) AS group_size,
-           COUNT(DISTINCT user_id) AS n_sensitive,
-           CAST(COUNT(*) < 50 AS INT) AS k_violation,
-           CAST(COUNT(DISTINCT user_id) < 5 AS INT) AS l_violation
-         FROM events GROUP BY 1, 2""",
-
-    "q151_weighted_median" ->
-      """WITH h AS (
-           SELECT source, n_chars AS v, SUM(n_chars) AS w
-           FROM documents GROUP BY 1, 2),
-         c AS (
-           SELECT source, v,
-             SUM(w) OVER (PARTITION BY source ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             SUM(w) OVER (PARTITION BY source) AS tot
-           FROM h)
-         SELECT source, CAST(MIN(v) AS BIGINT) AS wpct,
-           CAST(MAX(tot) AS BIGINT) AS total_weight
-         FROM c WHERE cum * 2 >= tot * 1 GROUP BY 1""",
-
-    "q148_compaction_plan" ->
-      """WITH f AS (
-           SELECT parse_filename(filename) AS file_name,
-             CAST(octet_length(content) AS BIGINT) AS n_bytes
-           FROM read_blob('/tmp/graft_binsrc___SFTAG__/doc_*.txt')),
-         p AS (
-           SELECT file_name, n_bytes,
-             COALESCE(SUM(n_bytes) OVER (ORDER BY file_name
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pfx
-           FROM f)
-         SELECT CAST(pfx // 4096 AS BIGINT) AS group_id, COUNT(*) AS n_files,
-           CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
-           MIN(file_name) AS first_file, MAX(file_name) AS last_file
-         FROM p GROUP BY 1""",
-
-    "q149_nullsafe_join" ->
-      """WITH k AS (
-           SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN NULL
-                       ELSE o_orderpriority END AS pri, o_totalprice
-           FROM orders),
-         a AS (SELECT pri, COUNT(*) AS na FROM k GROUP BY 1),
-         b AS (SELECT pri, COUNT(*) AS nb FROM k
-               WHERE o_totalprice > 150000 GROUP BY 1)
-         SELECT a.pri, a.na, b.nb
-         FROM a LEFT JOIN b ON a.pri IS NOT DISTINCT FROM b.pri""",
-
-    "q146_chisq" ->
-      """WITH ev AS (
-           SELECT event_type,
-             CASE WHEN (epoch_us(ts) // 86400000000) % 7 < 5
-                  THEN 'weekday' ELSE 'weekend' END AS cohort
-           FROM events),
-         cells AS (
-           SELECT cohort AS r, event_type AS c, COUNT(*) AS o
-           FROM ev GROUP BY 1, 2),
-         rt AS (SELECT r, SUM(o) AS rtot FROM cells GROUP BY 1),
-         ct AS (SELECT c, SUM(o) AS ctot FROM cells GROUP BY 1),
-         g AS (SELECT SUM(o) AS n, COUNT(DISTINCT r) AS nr,
-                      COUNT(DISTINCT c) AS nc FROM cells),
-         terms AS (
-           SELECT CAST(
-               (CAST(o AS DOUBLE) - CAST(rtot AS DOUBLE) * CAST(ctot AS DOUBLE) / CAST(n AS DOUBLE))
-               * (CAST(o AS DOUBLE) - CAST(rtot AS DOUBLE) * CAST(ctot AS DOUBLE) / CAST(n AS DOUBLE))
-               / (CAST(rtot AS DOUBLE) * CAST(ctot AS DOUBLE) / CAST(n AS DOUBLE))
-             AS DECIMAL(20,9)) AS term, n, nr, nc
-           FROM cells JOIN rt USING (r) JOIN ct USING (c), g)
-         SELECT ROUND(CAST(SUM(term) AS DOUBLE), 6) AS chi2,
-           MAX((nr - 1) * (nc - 1)) AS dof,
-           CAST(MAX(n) AS BIGINT) AS n
-         FROM terms""",
-
-    "q143_psi" ->
-      """WITH e AS (SELECT event_type, value FROM events
-                    WHERE event_type IN ('click', 'purchase')),
-         c AS (
-           SELECT CAST(floor(value / 25.0) AS BIGINT) AS bin,
-             COUNT(*) FILTER (event_type = 'click') AS ca,
-             COUNT(*) FILTER (event_type = 'purchase') AS cb
-           FROM e GROUP BY 1),
-         t AS (
-           SELECT COUNT(*) FILTER (event_type = 'click') AS na,
-             COUNT(*) FILTER (event_type = 'purchase') AS nb
-           FROM e),
-         terms AS (
-           SELECT CASE WHEN ca > 0 AND cb > 0 THEN
-               CAST((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)
-                     - CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-                 * ln((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
-                      / (CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))) AS DECIMAL(20,9))
-             END AS term, na, nb
-           FROM c, t)
-         SELECT ROUND(CAST(SUM(term) AS DOUBLE), 6) AS psi,
-           COUNT(term) AS n_bins_used,
-           COUNT(*) FILTER (term IS NULL) AS n_bins_dropped,
-           MAX(na) AS n_a, MAX(nb) AS n_b
-         FROM terms""",
-
-    // q110's exact-BIGINT Z-sum shape three times (A, B, cellwise-max
-    // union), intersection by inclusion–exclusion in the same token
-    // order as Sketches.hllSetEstimates
-    "q138_hll_setops" ->
-      """WITH ka AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS key FROM events WHERE event_type = 'click'),
-         kb AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS key FROM events WHERE event_type = 'purchase'),
-         ra AS (
-           SELECT ('0x' || substr(md5(key), 1, 8))::BIGINT >> 22 AS bucket,
-             MAX(CASE WHEN ('0x' || substr(md5(key), 9, 8))::BIGINT = 0 THEN 33
-                      ELSE 33 - length(bin(('0x' || substr(md5(key), 9, 8))::BIGINT)) END) AS r
-           FROM ka GROUP BY 1),
-         rb AS (
-           SELECT ('0x' || substr(md5(key), 1, 8))::BIGINT >> 22 AS bucket,
-             MAX(CASE WHEN ('0x' || substr(md5(key), 9, 8))::BIGINT = 0 THEN 33
-                      ELSE 33 - length(bin(('0x' || substr(md5(key), 9, 8))::BIGINT)) END) AS r
-           FROM kb GROUP BY 1),
-         ru AS (
-           SELECT bucket, MAX(r) AS r
-           FROM (SELECT * FROM ra UNION ALL SELECT * FROM rb) GROUP BY 1),
-         za AS (SELECT CAST(SUM(1::BIGINT << (33 - r)) AS BIGINT)
-                  + (1024 - COUNT(*)) * (1::BIGINT << 33) AS zs FROM ra),
-         zb AS (SELECT CAST(SUM(1::BIGINT << (33 - r)) AS BIGINT)
-                  + (1024 - COUNT(*)) * (1::BIGINT << 33) AS zs FROM rb),
-         zu AS (SELECT CAST(SUM(1::BIGINT << (33 - r)) AS BIGINT)
-                  + (1024 - COUNT(*)) * (1::BIGINT << 33) AS zs FROM ru)
-         SELECT
-           0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE)
-             * 1048576.0::DOUBLE * 8589934592.0::DOUBLE / CAST(za.zs AS DOUBLE) AS est_a,
-           0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE)
-             * 1048576.0::DOUBLE * 8589934592.0::DOUBLE / CAST(zb.zs AS DOUBLE) AS est_b,
-           0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE)
-             * 1048576.0::DOUBLE * 8589934592.0::DOUBLE / CAST(zu.zs AS DOUBLE) AS est_union,
-           ROUND(
-             0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE)
-               * 1048576.0::DOUBLE * 8589934592.0::DOUBLE / CAST(za.zs AS DOUBLE)
-             + 0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE)
-               * 1048576.0::DOUBLE * 8589934592.0::DOUBLE / CAST(zb.zs AS DOUBLE)
-             - 0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE)
-               * 1048576.0::DOUBLE * 8589934592.0::DOUBLE / CAST(zu.zs AS DOUBLE), 6) AS est_intersect
-         FROM za, zb, zu"""
-  )
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (name, q) => name -> q.oracle }
 }

@@ -1,23 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Query `name`'s oracle SQL for inputs in `sfDir`. Side-channel
+    * queries (q112/q148/q153/q164) write dir-derived /tmp paths; the
+    * oracle SQL carries a __SFTAG__ token resolved here with the SAME
+    * derivation, so a bench run at another SF can never clobber the
+    * files between this dump and the oracle check's DuckDB pass.
+    */
+  def oracleFor(sfDir: String, name: String): String =
+    SparkEntry.oracleSql(name).replace("__SFTAG__", SparkEntry.sfTag(sfDir))
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.r)) // dev-only: regex over query names
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [queryRegex]")
+        sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
@@ -40,14 +44,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Side-channel queries (q112/q148/q153/q164) write dir-derived /tmp
-    // paths; the oracle SQL carries a __SFTAG__ token resolved here with
-    // the SAME derivation, so a bench run at another SF can never clobber
-    // the files between this dump and the driver's DuckDB pass.
-    val tag = SparkEntry.sfTag(sfDir)
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.findFirstIn(k).isDefined) }
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__SFTAG__", tag))}" }
+    val json = SparkEntry.oracleSql.keys
+      .filter(k => only.forall(_.findFirstIn(k).isDefined))
+      .map(k => s"${q(k)}: ${q(oracleFor(sfDir, k))}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

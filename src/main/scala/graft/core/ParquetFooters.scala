@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * WITHOUT a Spark job. `spark.read.parquet` with no user schema runs
   * footer inference as a 1-task job per frame construction (~25 ms plus
   * a 50-200 ms scheduler/planning gap on this host — measured with
-  * JobProbe); reading the footer on the driver costs single-digit ms
+  * `graft.Dev profile`); reading the footer on the driver costs single-digit ms
   * and yields the identical StructType, because Spark-written files
   * carry the exact schema JSON in the footer's key-value metadata and
   * Spark's own inference prefers that key too. Used wherever the

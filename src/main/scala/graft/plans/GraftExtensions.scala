@@ -6,11 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension registering graft's native expressions as SQL
   * functions, so `spark.sql("... vec_cosine(a, b) ...")` works next to
-  * the Column API. Enable with:
-  * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
+  * the Column API. Enabled by setting `spark.sql.extensions` to
+  * `graft.plans.GraftExtensions`, as [[graft.LocalSession]] does.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -2358,6 +2358,7 @@ object TxTable {
   def readWap(spark: SparkSession, table: String, wapId: String): DataFrame = {
     requireWapId(wapId)
     val files = parseFileArray(stagedText(fs(spark, table), table, wapId), "files")
+    require(files.nonEmpty, s"TxTable: staged batch '$wapId' records no files")
     val paths = files.map(rel => s"$table/$rel")
     spark.read.schema(graft.core.ParquetFooters.schemaOf(spark, paths.head))
       .parquet(paths: _*)

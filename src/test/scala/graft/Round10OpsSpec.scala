@@ -577,6 +577,19 @@ class Round10OpsSpec extends SparkSpec {
       .map(_.getLong(0)).sorted shouldBe Array(1L, 2L, 3L)
   }
 
+  test("WAP read and publish of a staged record with no files fail with a named error") {
+    val table = freshTable()
+    TxTable.commit(Seq((1L, "a")).toDF("id", "s"), table)
+    val staged = java.nio.file.Paths.get(table, "_staged", "e1.json")
+    java.nio.file.Files.createDirectories(staged.getParent)
+    java.nio.file.Files.writeString(staged, """{"wap":"e1","files":[]}""")
+    val read = the[IllegalArgumentException] thrownBy TxTable.readWap(spark, table, "e1")
+    read.getMessage should include("staged batch 'e1' records no files")
+    val publish = the[IllegalArgumentException] thrownBy TxTable.publishWap(spark, table, "e1")
+    publish.getMessage should include("staged batch 'e1' records no files")
+    TxTable.currentVersion(spark, table) shouldBe 1
+  }
+
   // --- r10: isotropy identity vs brute-force pairwise cosine ---
   test("isotropyByGroup equals brute-force mean pairwise cosine of quantized unit vectors") {
     val rnd = new scala.util.Random(5)

@@ -1,7 +1,7 @@
 package graft
 
 /** Driver-contract smoke: every declared query runs and returns rows at
-  * sf0.001, and every oracle key maps to a real query.
+  * sf0.001, and the registry refuses duplicate query names.
   */
 class SparkEntrySpec extends SparkSpec {
 
@@ -11,8 +11,12 @@ class SparkEntrySpec extends SparkSpec {
     SparkEntry.entry(spark).count() should be > 0L
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet shouldBe empty
+  test("building the registry fails with a named error listing duplicate query names") {
+    def q(name: String) = queries.Query(name, (s, _) => s.range(1).toDF(), "SELECT 1")
+    val err = the[IllegalArgumentException] thrownBy
+      queries.Query.byName(Seq(q("q_a"), q("q_b"), q("q_a"), q("q_c"), q("q_c")))
+    err.getMessage should include("duplicate query names in the registry: q_a, q_c")
+    queries.Query.byName(Seq(q("q_a"), q("q_b"))).keySet shouldBe Set("q_a", "q_b")
   }
 
   test("bench sf1 growth gate flags a planted quadratic and nothing else") {
@@ -105,6 +109,7 @@ class SparkEntrySpec extends SparkSpec {
     Bench.effectiveMaxGrowth(8.0, 32) shouldBe 8.0
     Bench.effectiveMaxGrowth(8.0, 64) shouldBe 8.0   // never tightens
     Bench.effectiveMaxGrowth(8.0, 8) shouldBe 32.0   // 32/8 relaxation
+    Bench.effectiveMaxGrowth(8.0, 1) shouldBe 32.0   // 32/1 capped at 4x
     Bench.effectiveMaxGrowth(8.0, 0) shouldBe 8.0    // degenerate input
     // round-10 incident replayed: q322 1.50->19.16 s (12.8x) at 8 cores
     // tripped the fixed 8x gate with unchanged code; core-aware it passes

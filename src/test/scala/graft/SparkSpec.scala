@@ -8,18 +8,7 @@ import org.scalatest.matchers.should.Matchers
   * session; sbt forks a single test JVM).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite with Matchers {
