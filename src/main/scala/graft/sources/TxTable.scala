@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
   * Layout:
   * {{{
   *   <table>/data/v<N>_<i>.parquet      # immutable, never rewritten
-  *   <table>/_manifests/v<N>.json       # {"version":N,"op":...,"files":[...]}
+  *   <table>/_manifests/v<N>.json       # one TxManifest, JSON (TxManifest.render)
   * }}}
   *
   * Why this shape survives 100 TB:
@@ -172,215 +172,60 @@ object TxTable {
   private def dataPath(table: String, rel: String): String =
     if (rel.startsWith("/")) rel else s"$table/$rel"
 
-  /** JSON string escape/unescape for manifest-embedded schema DDL —
-    * engine-owned flat format, same minimal rules Verify uses.
-    */
-  private def jesc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c    => c.toString
-  }
-
-  private def junesc(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case c => b.append(c); i += 2
-        }
-      } else { b.append(s.charAt(i)); i += 1 }
-    }
-    b.toString
-  }
-
-  /** Manifest stats/bloom fragments — ONE renderer for every manifest
-    * writer (commitAs and restore), so the two can never drift.
-    */
-  private def statsJsonOf(stats: Seq[(String, String, Double, Double)]): String =
-    if (stats.isEmpty) ""
-    else "," + "\"stats\":[" + stats.map { case (fl, c, lo, hi) =>
-      s"""{"f":"$fl","c":"$c","lo":$lo,"hi":$hi}"""
-    }.mkString(",") + "]"
-
-  private def bloomJsonOf(blooms: Seq[(String, String, Int, Int, String)]): String =
-    if (blooms.isEmpty) ""
-    else "," + "\"bloom\":[" + blooms.map { case (fl, c, m, k, b64) =>
-      s"""{"f":"$fl","c":"$c","m":$m,"k":$k,"b":"$b64"}"""
-    }.mkString(",") + "]"
-
-  /** Per-file VALUE-SET skipping entries (file, physical column,
-    * distinct values) — the partition-pruning equivalent for
-    * low-cardinality categorical columns WITHOUT physical
-    * partitioning: a file whose recorded value set misses the probe
-    * value cannot contain it (exact, not probabilistic — the
-    * categorical complement of the bloom index, which serves
-    * high-cardinality keys). Values are PER-VALUE ESCAPED, then
-    * U+001F-joined inside one flat string so the manifest grammar
-    * stays nested-bracket-free. The per-value escape (backslash
-    * doubled, U+001F to \\s, ']' to \\q) runs BEFORE the join, so a
-    * data value containing the separator can never be mis-split at
-    * parse time, and a ']' in a value can never truncate arraySpan's
-    * bracket match — the "exact, no false positives either way"
-    * claim holds for arbitrary values.
-    */
-  private def vsepEsc(v: String): String =
-    v.replace("\\", "\\\\").replace("\u001f", "\\s").replace("]", "\\q")
-
-  private def vsepUnesc(v: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < v.length) {
-      if (v.charAt(i) == '\\' && i + 1 < v.length) {
-        v.charAt(i + 1) match {
-          case 's' => b.append('\u001f')
-          case 'q' => b.append(']')
-          case c   => b.append(c) // doubled backslash
-        }
-        i += 2
-      } else { b.append(v.charAt(i)); i += 1 }
-    }
-    b.toString
-  }
-
-  private def vsetJsonOf(vsets: Seq[(String, String, Seq[String])]): String =
-    if (vsets.isEmpty) ""
-    else "," + "\"vset\":[" + vsets.map { case (fl, c, vs) =>
-      s"""{"f":"$fl","c":"$c","v":"${jesc(vs.map(vsepEsc).mkString("\u001f"))}"}"""
-    }.mkString(",") + "]"
-
   /** Files with more distinct values than this record no value set
     * (they are always kept — conservative, and the manifest stays
     * small). A range-/hash-clustered layout on the column keeps
-    * per-file cardinality tiny, which is the point.
+    * per-file cardinality tiny, which is the point. Value-set skipping
+    * is the partition-pruning equivalent for low-cardinality
+    * categorical columns WITHOUT physical partitioning: a file whose
+    * recorded value set misses the probe value cannot contain it
+    * (exact, not probabilistic — the categorical complement of the
+    * bloom index, which serves high-cardinality keys). Values are
+    * stored as JSON strings, so any value round-trips exactly.
     */
   val VsetMaxValues: Int = 64
 
-  /** Merge-on-read tombstone sidecars: (tombstone file, PHYSICAL key
-    * column). Each sidecar holds (_gf = data-file name, _gk = key)
-    * pairs the snapshot read anti-joins away.
+  /** THE publish step of every writer: `next` is the version's whole
+    * resolved state, built as an edit of `parent` (the resolved head it
+    * read; None for a first version). Here, and only here:
+    *  - the commit time is set STRICTLY MONOTONIC over the parent
+    *    (Delta's timestamp-as-of contract: two commits landing in the
+    *    same wall millisecond must still resolve distinctly);
+    *  - the form is chosen: the O(delta) form when the commit carries
+    *    any of its parent's files, is not a [[CheckpointEvery]]
+    *    version, and the delta resolves back to `next` exactly; the
+    *    self-contained full form otherwise (a snapshot-replacing commit
+    *    is its own natural checkpoint);
+    *  - the manifest is CAS-published and, on a win, the head pointer
+    *    updated.
+    * @return false iff another writer already published the version
     */
-  private def tombJsonOf(tombs: Seq[(String, String)]): String =
-    if (tombs.isEmpty) ""
-    else "," + "\"tomb\":[" + tombs.map { case (fl, k) =>
-      s"""{"f":"$fl","k":"$k"}"""
-    }.mkString(",") + "]"
-
-  /** Positional deletion-vector sidecars: each holds (_gf = data-file
-    * name, _gp = row ordinal) pairs the snapshot read anti-joins away
-    * — the Delta/Iceberg deletion-vector shape. Schema-independent
-    * (no key column) and cheaper than the key form on wide string
-    * keys: the read compares a long ordinal, never a key value.
-    */
-  private def posdJsonOf(posd: Seq[String]): String =
-    if (posd.isEmpty) ""
-    else "," + "\"posd\":[" + posd.map(fl => s"""{"f":"$fl"}""")
-      .mkString(",") + "]"
-
-  /** Per-file ROW COUNTS (the Delta `numRecords` shape): recorded at
-    * commit when `countRows` is set, carried with their files like
-    * skipping stats. With every live file counted — and every
-    * outstanding positional deletion vector an exact (file, ordinal)
-    * decrement — `SELECT COUNT(*)` answers from the MANIFEST alone
-    * ([[metaCount]]): O(log) driver work on a 100 TB table, zero data
-    * IO. Key-form tombstones make the count underivable (one key may
-    * match many rows), so [[metaCount]] refuses loudly while any are
-    * outstanding.
-    */
-  private def rowsJsonOf(rows: Seq[(String, Long)]): String =
-    if (rows.isEmpty) ""
-    else "," + "\"rows\":[" + rows.map { case (fl, n) =>
-      s"""{"f":"$fl","n":$n}"""
-    }.mkString(",") + "]"
-
-  /** Column mapping (the Delta column-mapping / Iceberg field-id
-    * shape, keyed by STABLE physical name instead of an id): each live
-    * column's (logical name, physical name). Physical names never
-    * change once any file is written — rename edits only the logical
-    * side (metadata-only), drop removes the entry (old files project
-    * through the mapping, the orphaned physical column is simply never
-    * selected).
-    */
-  private def mapJsonOf(map: Option[Seq[(String, String)]]): String =
-    map.fold("")(m => "," + "\"map\":[" + m.map { case (n, p) =>
-      s"""{"n":"${jesc(n)}","p":"${jesc(p)}"}"""
-    }.mkString(",") + "]")
-
-  /** ONE manifest renderer for every writer (commitAs, restore, the
-    * metadata-only rename/drop commits, merge-on-read delete) — the
-    * grammar cannot drift between paths.
-    */
-  private def renderManifest(v: Int, op: String, ts: Long, txnJson: String,
-                             evolved: Boolean, schemaDDL: Option[String],
-                             files: Seq[String],
-                             stats: Seq[(String, String, Double, Double)],
-                             blooms: Seq[(String, String, Int, Int, String)],
-                             tombs: Seq[(String, String)],
-                             map: Option[Seq[(String, String)]],
-                             vsets: Seq[(String, String, Seq[String])] = Nil,
-                             part: Option[String] = None,
-                             posd: Seq[String] = Nil,
-                             rows: Seq[(String, Long)] = Nil): String = {
-    val msJson = if (evolved) ""","ms":1""" else ""
-    val partJson = part.fold("")(p => s""","part":"${jesc(p)}"""")
-    val schemaJson = schemaDDL.map(d => s""""schema":"${jesc(d)}",""").getOrElse("")
-    s"""{"version":$v,"op":"$op","commit_ms":$ts$txnJson$msJson$partJson,""" +
-      schemaJson + s""""n_files":${files.size},""" +
-      s""""files":[${files.map("\"" + _ + "\"").mkString(",")}]""" +
-      statsJsonOf(stats) + bloomJsonOf(blooms) + tombJsonOf(tombs) +
-      mapJsonOf(map) + vsetJsonOf(vsets) + posdJsonOf(posd) +
-      rowsJsonOf(rows) + "}"
-  }
-
-  /** DELTA manifest renderer (the commits between checkpoints):
-    * `base` names the parent whose resolved state the delta applies
-    * to; `add`/`rm` are the file-list edits; stats/bloom/vset entries
-    * cover the ADDED files only (removed files' entries drop during
-    * reconstruction). Scalar fields and the tombstone list render in
-    * full, exactly like the full form, so their accessors never need
-    * the chain. Manifest bytes are O(files changed + tombs), never
-    * O(table).
-    */
-  private def renderDeltaManifest(v: Int, op: String, ts: Long, txnJson: String,
-                                  evolved: Boolean, schemaDDL: Option[String],
-                                  base: Int, nFiles: Int,
-                                  addFiles: Seq[String], rmFiles: Seq[String],
-                                  addStats: Seq[(String, String, Double, Double)],
-                                  addBlooms: Seq[(String, String, Int, Int, String)],
-                                  tombs: Seq[(String, String)],
-                                  map: Option[Seq[(String, String)]],
-                                  addVsets: Seq[(String, String, Seq[String])],
-                                  part: Option[String] = None,
-                                  posd: Seq[String] = Nil,
-                                  addRows: Seq[(String, Long)] = Nil): String = {
-    val msJson = if (evolved) ""","ms":1""" else ""
-    val partJson = part.fold("")(p => s""","part":"${jesc(p)}"""")
-    val schemaJson = schemaDDL.map(d => s""""schema":"${jesc(d)}",""").getOrElse("")
-    s"""{"version":$v,"op":"$op","commit_ms":$ts$txnJson$msJson$partJson,""" +
-      schemaJson + s""""base":$base,"n_files":$nFiles,""" +
-      s""""add":[${addFiles.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""rm":[${rmFiles.map("\"" + _ + "\"").mkString(",")}]""" +
-      statsJsonOf(addStats) + bloomJsonOf(addBlooms) + tombJsonOf(tombs) +
-      mapJsonOf(map) + vsetJsonOf(addVsets) + posdJsonOf(posd) +
-      rowsJsonOf(addRows) + "}"
-  }
-
-  /** CAS-publish one rendered manifest; loud conflict on a lost race;
-    * head pointer updated on the win.
-    */
-  private def publishOrConflict(f: FileSystem, table: String, v: Int,
-                                json: String): Unit = {
-    val mp = manifestPath(table, v)
+  private def publishNext(f: FileSystem, table: String, parent: Option[TxManifest],
+                          next: TxManifest,
+                          casNonce: String = java.util.UUID.randomUUID().toString.take(8)): Boolean = {
+    val full = next.copy(commitMs =
+      math.max(System.currentTimeMillis(), parent.fold(0L)(_.commitMs) + 1L))
+    val form = parent match {
+      case Some(p) if full.version % CheckpointEvery != 0 =>
+        val d = full.deltaOver(p)
+        if (d.files.size < full.files.size && d.resolve(p) == full) d else full
+      case _ => full
+    }
+    val mp = manifestPath(table, full.version)
     f.mkdirs(mp.getParent)
-    if (!committerFor(f).publish(f, mp, json,
-        java.util.UUID.randomUUID().toString.take(8)))
-      sys.error(s"TxTable: commit conflict — version $v at $table was " +
-        "published by another writer; re-read and retry")
-    writeHeadHint(f, table, v)
+    val won = committerFor(f).publish(f, mp, TxManifest.render(form), casNonce)
+    if (won) writeHeadHint(f, table, full.version)
+    won
   }
+
+  /** [[publishNext]] with a loud conflict on a lost race. */
+  private def publishOrConflict(f: FileSystem, table: String,
+                                parent: Option[TxManifest], next: TxManifest): Unit =
+    if (!publishNext(f, table, parent, next)) conflict(table, next.version)
+
+  private def conflict(table: String, v: Int): Nothing =
+    sys.error(s"TxTable: commit conflict — version $v at $table was " +
+      "published by another writer; re-read and retry")
 
   /** Diagnostic counter of manifest-directory enumerations — the spec
     * instrument proving head discovery stays O(1) on the hot path
@@ -454,31 +299,20 @@ object TxTable {
   }
 
   /** MANIFEST DELTA-LOG (the Delta actions-log + checkpoint shape):
-    * a commit that carries its parent's files forward writes a DELTA
+    * a commit that carries any of its parent's files writes a DELTA
     * manifest — `"base":<parent>`, the files it added/removed, and
     * skipping entries for the ADDED files only — so a 1-file append's
     * manifest bytes are O(delta), independent of the table's file
     * count; every [[CheckpointEvery]]-th version (and every
-    * snapshot-replacing commit: overwrite/merge/full-compact/restore)
-    * writes the self-contained FULL form, bounding every reader's
-    * reconstruction walk. Per-manifest scalar fields (version, op,
-    * commit_ms, txn, ms, schema, map) and the tombstone list (bounded
-    * by deletes-since-OPTIMIZE, not by file count) render in full in
-    * BOTH forms, so their accessors stay single-manifest text parses.
+    * snapshot-replacing commit: overwrite/merge/full-compact, which
+    * carry nothing) writes the self-contained FULL form, bounding every
+    * reader's reconstruction walk. [[publishNext]] makes that choice
+    * for every writer. Scalar fields (version, op, commit_ms, txn, ms,
+    * part, schema, map) and the tombstone and deletion-vector lists
+    * (bounded by deletes-since-OPTIMIZE, not by file count) are whole
+    * in BOTH forms, so their accessors read one manifest.
     */
   val CheckpointEvery: Int = 10
-
-  /** One version's RESOLVED file-scale state: the reconstruction
-    * target of the delta-log (checkpoint + suffix of deltas).
-    */
-  private[graft] final case class TxSnapshot(
-      files: Seq[String],
-      stats: Seq[(String, String, Double, Double)],
-      blooms: Seq[(String, String, Int, Int, String)],
-      vsets: Seq[(String, String, Seq[String])],
-      tombs: Seq[(String, String)],
-      posd: Seq[String],
-      rows: Seq[(String, Long)] = Nil)
 
   /** Manifests are immutable once published, so resolved snapshots
     * cache safely; bounded (cleared wholesale past the cap — resolved
@@ -486,93 +320,31 @@ object TxTable {
     * invalidates a table's entries (same path, new content).
     */
   private val snapCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), TxSnapshot]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Int), TxManifest]()
 
-  private def parseFileArray(txt: String, name: String): Seq[String] = {
-    val span = arraySpan(txt, name)
-    if (span.isEmpty) Seq.empty
-    else span.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-  }
-
-  private def parseStats(txt: String): Seq[(String, String, Double, Double)] =
-    """\{"f":"([^"]*)","c":"([^"]*)","lo":([-0-9.eE]+),"hi":([-0-9.eE]+)\}""".r
-      .findAllMatchIn(arraySpan(txt, "stats"))
-      .map(m => (m.group(1), m.group(2), m.group(3).toDouble, m.group(4).toDouble))
-      .toSeq
-
-  private def parseBlooms(txt: String): Seq[(String, String, Int, Int, String)] =
-    """\{"f":"([^"]*)","c":"([^"]*)","m":(\d+),"k":(\d+),"b":"([^"]*)"\}""".r
-      .findAllMatchIn(arraySpan(txt, "bloom"))
-      .map(m => (m.group(1), m.group(2), m.group(3).toInt, m.group(4).toInt,
-        m.group(5))).toSeq
-
-  private def parseVsets(txt: String): Seq[(String, String, Seq[String])] =
-    """\{"f":"([^"]*)","c":"([^"]*)","v":"((?:[^"\\]|\\.)*)"\}""".r
-      .findAllMatchIn(arraySpan(txt, "vset"))
-      .map(m => (m.group(1), m.group(2),
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(
-          junesc(m.group(3)).split('\u001f').map(vsepUnesc)): Seq[String])).toSeq
-
-  private def parseTombs(txt: String): Seq[(String, String)] =
-    """\{"f":"([^"]*)","k":"([^"]*)"\}""".r
-      .findAllMatchIn(arraySpan(txt, "tomb"))
-      .map(m => (m.group(1), m.group(2))).toSeq
-
-  private def parseRows(txt: String): Seq[(String, Long)] =
-    """\{"f":"([^"]*)","n":(\d+)\}""".r
-      .findAllMatchIn(arraySpan(txt, "rows"))
-      .map(m => (m.group(1), m.group(2).toLong)).toSeq
-
-  private def parsePosd(txt: String): Seq[String] =
-    """\{"f":"([^"]*)"\}""".r
-      .findAllMatchIn(arraySpan(txt, "posd"))
-      .map(_.group(1)).toSeq
-
-  private def deltaBaseOf(txt: String): Option[Int] =
-    "\"base\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-
-  /** Resolve version `v`'s file-scale snapshot state: a full manifest
-    * parses directly; a delta manifest applies (add, rm, added
-    * skipping entries) over its parent's resolved state — entries for
-    * removed files drop automatically, the tombstone list is this
-    * manifest's own full render. Recursion depth ≤ [[CheckpointEvery]]
-    * by the checkpoint cadence; resolved parents cache, so a poll loop
-    * pays one small manifest read per new commit.
+  /** Resolve version `v`'s whole state: a full manifest as parsed; a
+    * delta manifest applied over its parent's resolved state.
+    * Recursion depth ≤ [[CheckpointEvery]] by the checkpoint cadence;
+    * resolved parents cache, so a poll loop pays one small manifest
+    * read per new commit.
     */
   private[graft] def snapshotOf(spark: SparkSession, table: String,
-                                v: Int): TxSnapshot = {
+                                v: Int): TxManifest = {
     require(v >= 1, s"versions start at 1, got $v")
     val key = (table, v)
     val hit = snapCache.get(key)
     if (hit != null) return hit
-    val p = manifestPath(table, v)
-    require(fs(spark, table).exists(p), s"TxTable: no version $v at $table")
-    val txt = manifestText(spark, table, v)
-    val snap = deltaBaseOf(txt) match {
-      case None =>
-        require(txt.contains("\"files\":["), s"TxTable: malformed manifest $p")
-        TxSnapshot(parseFileArray(txt, "files"), parseStats(txt),
-          parseBlooms(txt), parseVsets(txt), parseTombs(txt), parsePosd(txt),
-          parseRows(txt))
-      case Some(b) =>
-        val parent = snapshotOf(spark, table, b)
-        val rm = parseFileArray(txt, "rm").toSet
-        TxSnapshot(
-          parent.files.filterNot(rm) ++ parseFileArray(txt, "add"),
-          parent.stats.filterNot(e => rm(e._1)) ++ parseStats(txt),
-          parent.blooms.filterNot(e => rm(e._1)) ++ parseBlooms(txt),
-          parent.vsets.filterNot(e => rm(e._1)) ++ parseVsets(txt),
-          parseTombs(txt), parsePosd(txt),
-          parent.rows.filterNot(e => rm(e._1)) ++ parseRows(txt))
-    }
+    require(fs(spark, table).exists(manifestPath(table, v)),
+      s"TxTable: no version $v at $table")
+    val m = manifestOf(spark, table, v)
+    val snap = m.delta.fold(m)(d => m.resolve(snapshotOf(spark, table, d.base)))
     if (snapCache.size > 512) snapCache.clear()
     snapCache.put(key, snap)
     snap
   }
 
   /** Data files of version `v`, as resolved from its manifest chain
-    * (relative to the table root). Manifest format is engine-owned and
-    * flat, so the parse is a plain split — no JSON library dependency.
+    * (relative to the table root).
     */
   def filesOf(spark: SparkSession, table: String, v: Int): Seq[String] =
     snapshotOf(spark, table, v).files
@@ -959,8 +731,6 @@ object TxTable {
           finally r.close()
         }
       }
-    val txnJson = txn.map { case (app, batch) =>
-      s""","txn":{"app":"$app","batch":$batch}""" }.getOrElse("")
     // THE PUBLISH LOOP. Attempt 1 targets `v`; a pure append losing the
     // CAS rebases — re-reads the head, re-runs the schema gate against
     // the new parent, renames the staged files to the new target (a
@@ -974,87 +744,35 @@ object TxTable {
     var out = -1
     while (out < 0) {
       attempt += 1
-      val parentFiles = if (target > 1) filesOf(spark, table, target - 1)
-        else Seq.empty[String]
+      val parent = if (target > 1) Some(snapshotOf(spark, table, target - 1)) else None
       // carryFiles overrides the default carry rule: a copy-on-write
       // op (delete) carries exactly the UNTOUCHED subset of the
       // parent's files — the caller decided which from manifest stats.
       val carried = carryFiles.getOrElse(
-        if ((op == "append" || op == "evolve") && target > 1) parentFiles
+        if (op == "append" || op == "evolve") parent.fold(Seq.empty[String])(_.files)
         else Seq.empty)
-      // schema-evolution flag: sticky from the first evolve commit on
-      // (every later snapshot mixes footers, so every later read needs
-      // mergeSchema), reset by an overwrite/compact (fresh uniform files)
-      val evolved = op == "evolve" ||
-        (carried.nonEmpty && target > 1 && msOf(spark, table, target - 1))
-      // commit time, STRICTLY MONOTONIC over the parent (Delta's
-      // timestamp-as-of contract: two commits landing in the same wall
-      // millisecond must still resolve distinctly — max(now, parent+1))
-      // Only the EXPECTED miss (parent manifest expired by
-      // expireVersions) resets the baseline to epoch; anything else —
-      // OOM, interrupts, a corrupt manifest — must propagate, not
-      // silently zero the monotonicity floor.
-      val parentMs = if (target > 1)
-        try commitMsOf(spark, table, target - 1)
-        catch { case _: java.io.FileNotFoundException => 0L }
-      else 0L
-      val ts = math.max(System.currentTimeMillis(), parentMs + 1L)
-      val all = carried ++ named
-      // DELTA vs CHECKPOINT: a snapshot-replacing commit (no carried
-      // files) is its own natural checkpoint; a carrying commit writes
-      // the full form only at the CheckpointEvery cadence and the
-      // O(delta) form otherwise — a 1-file append to a 10⁶-file table
-      // writes kilobytes, not the file list.
-      val isCkpt = carried.isEmpty || target % CheckpointEvery == 0
-      val json = if (isCkpt) {
-        val carriedStats = if (carried.nonEmpty && target > 1)
-          statsOf(spark, table, target - 1).filter(s => carried.contains(s._1))
-        else Seq.empty
-        val carriedBloom = if (carried.nonEmpty && target > 1)
-          bloomEntries(spark, table, target - 1).filter(b => carried.contains(b._1))
-        else Seq.empty
-        val carriedVsets = if (carried.nonEmpty && target > 1)
-          valueSetsOf(spark, table, target - 1).filter(s => carried.contains(s._1))
-        else Seq.empty
-        // merge-on-read tombstones ride their files: any commit
-        // carrying parent files keeps the parent's tombs (they
-        // reference carried file names); snapshot-replacing commits
-        // shed them (the rewrite read them through readVersion /
-        // tombFilter)
-        val carriedTombs = if (carried.nonEmpty && target > 1)
-          tombEntriesOf(spark, table, target - 1) else Seq.empty
-        val carriedPosd = if (carried.nonEmpty && target > 1)
-          posDeletesOf(spark, table, target - 1) else Seq.empty[String]
-        val carriedRows = if (carried.nonEmpty && target > 1)
-          rowCountsOf(spark, table, target - 1).filter(r => carried.contains(r._1))
-        else Seq.empty
-        renderManifest(target, op, ts, txnJson, evolved,
-          Some(logicalSchema.toDDL), all,
-          carriedStats ++ newStats.map { case (i, c, lo, hi) => (named(i), c, lo, hi) },
-          carriedBloom ++ newBloom.map { case (i, c, m, k, b) => (named(i), c, m, k, b) },
-          carriedTombs, writeMap,
-          carriedVsets ++ newVsets.map { case (i, c, vs) => (named(i), c, vs) },
-          physPart, carriedPosd,
-          carriedRows ++ newRows.map { case (i, n) => (named(i), n) })
-      } else {
-        renderDeltaManifest(target, op, ts, txnJson, evolved,
-          Some(logicalSchema.toDDL), target - 1, all.size,
-          named, parentFiles.filterNot(carried.toSet),
-          newStats.map { case (i, c, lo, hi) => (named(i), c, lo, hi) },
-          newBloom.map { case (i, c, m, k, b) => (named(i), c, m, k, b) },
-          tombEntriesOf(spark, table, target - 1), writeMap,
-          newVsets.map { case (i, c, vs) => (named(i), c, vs) },
-          physPart, posDeletesOf(spark, table, target - 1),
-          newRows.map { case (i, n) => (named(i), n) })
-      }
-      val mp = manifestPath(table, target)
-      f.mkdirs(mp.getParent)
-      if (committerFor(f).publish(f, mp, json, nonce)) {
-        writeHeadHint(f, table, target)
+      // the parent's state for the carried files: their skipping
+      // entries and row counts, plus the merge-on-read tombstones and
+      // deletion vectors (they reference carried file names). A
+      // snapshot-replacing commit sheds them all (the rewrite read them
+      // through readVersion / the MoR filters).
+      val kept = parent.filter(_ => carried.nonEmpty)
+        .fold(TxManifest(target, op))(_.carrying(carried))
+      val next = kept.copy(version = target, op = op, txn = txn,
+        // schema-evolution flag: sticky from the first evolve commit on
+        // (every later snapshot mixes footers, so every later read needs
+        // mergeSchema), reset by an overwrite/compact (fresh uniform files)
+        ms = op == "evolve" || kept.ms,
+        part = physPart, schema = Some(logicalSchema.toDDL), map = writeMap,
+        files = kept.files ++ named,
+        stats = kept.stats ++ newStats.map { case (i, c, lo, hi) => (named(i), c, lo, hi) },
+        blooms = kept.blooms ++ newBloom.map { case (i, c, m, k, b) => (named(i), c, m, k, b) },
+        vsets = kept.vsets ++ newVsets.map { case (i, c, vs) => (named(i), c, vs) },
+        rows = kept.rows ++ newRows.map { case (i, n) => (named(i), n) })
+      if (publishNext(f, table, parent, next, nonce)) {
         out = target
       } else if (!(rebaseAppend && op == "append" && attempt < maxAttempts)) {
-        sys.error(s"TxTable: commit conflict — version $target at $table was " +
-          "published by another writer; re-read and retry")
+        conflict(table, target)
       } else {
         val newTarget = currentVersion(spark, table) + 1
         // a concurrent rename/drop changed the column mapping under
@@ -1107,19 +825,6 @@ object TxTable {
   /** Latest-snapshot read. */
   def read(spark: SparkSession, table: String): DataFrame =
     readVersion(spark, table, currentVersion(spark, table))
-
-  /** The bracketed span of a top-level manifest array ("stats" /
-    * "bloom" / "tomb"). Each entry grammar parses ONLY its own span:
-    * with both stats and bloom present, an unscoped non-greedy match
-    * starting in one array can swallow text into the other (the first
-    * file's bloom silently lost, garbage re-rendered into every
-    * carried manifest). Entry values never contain brackets (file
-    * names, column identifiers, base64), so the first ']' closes the
-    * array.
-    */
-  private def arraySpan(txt: String, name: String): String =
-    ("\"" + name + "\":\\[(.*?)\\]").r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("")
 
   /** Per-file data-skipping stats of version `v`'s snapshot: (file,
     * column, min, max), resolved through the delta-log. Empty for
@@ -1322,13 +1027,8 @@ object TxTable {
     * ever happened, or a snapshot-replacing op reset it).
     */
   private[graft] def colMapOf(spark: SparkSession, table: String,
-                              v: Int): Option[Seq[(String, String)]] = {
-    val span = arraySpan(manifestText(spark, table, v), "map")
-    if (span.isEmpty) None
-    else Some("""\{"n":"((?:[^"\\]|\\.)*)","p":"((?:[^"\\]|\\.)*)"\}""".r
-      .findAllMatchIn(span)
-      .map(m => (junesc(m.group(1)), junesc(m.group(2)))).toSeq)
-  }
+                              v: Int): Option[Seq[(String, String)]] =
+    manifestOf(spark, table, v).map
 
   /** Physical name of a logical column under a mapping (identity when
     * unmapped). Data files, skipping stats, blooms, and tombstone keys
@@ -1364,54 +1064,51 @@ object TxTable {
 
   /** PHYSICAL partition column of version `v`'s layout, if the
     * snapshot was committed with `partitionBy` (hive-style
-    * `data/<col>=<val>/` directories). Scalar manifest field — a
-    * single-manifest text parse, like op/schema/map.
+    * `data/<col>=<val>/` directories). Scalar manifest field, like
+    * op/schema/map.
     */
   def partColOf(spark: SparkSession, table: String, v: Int): Option[String] =
-    "\"part\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findFirstMatchIn(manifestText(spark, table, v))
-      .map(m => junesc(m.group(1)))
+    manifestOf(spark, table, v).part
 
   /** The raw per-file reader every physical path shares: mergeSchema
     * for evolved snapshots; for a PARTITIONED layout the hive
     * `basePath` so the partition column re-derives from the directory
-    * names, cast back to the manifest schema's recorded type (path
-    * inference alone is stringly). No tomb filter, no logical
-    * projection — those layer on in [[snapshotRead]].
+    * names. No tomb filter, no logical projection — those layer on in
+    * [[snapshotRead]].
     */
   private def rawRead(spark: SparkSession, table: String, v: Int,
                       files: Seq[String]): DataFrame = {
     val ms = msOf(spark, table, v)
     val rd0 = if (ms) spark.read.option("mergeSchema", "true") else spark.read
+    val paths = files.map(rel => dataPath(table, rel))
+    // non-evolved snapshots are schema-uniform by the commit gate, so a
+    // driver-side footer read replaces the inference job — the same
+    // single-footer sample plain inference takes anyway
+    def dataSchema: StructType =
+      if (ms) rd0.parquet(paths: _*).schema
+      else graft.core.ParquetFooters.schemaOf(spark, paths.head)
     partColOf(spark, table, v) match {
       case None =>
-        val paths = files.map(rel => dataPath(table, rel))
-        // non-evolved snapshots are schema-uniform by the commit gate,
-        // so a driver-side footer read replaces the inference job —
-        // the same single-footer sample plain inference takes anyway
-        val rd = if (ms || paths.isEmpty) rd0
-                 else rd0.schema(graft.core.ParquetFooters.schemaOf(spark, paths.head))
-        rd.parquet(paths: _*)
+        if (ms || paths.isEmpty) rd0.parquet(paths: _*)
+        else rd0.schema(dataSchema).parquet(paths: _*)
       case Some(pc) =>
         val logicalName = colMapOf(spark, table, v)
           .flatMap(_.collectFirst { case (n, p) if p == pc => n }).getOrElse(pc)
         val dt = manifestSchema(spark, table, v)
           .flatMap(st => st.fields.find(_.name == logicalName).map(_.dataType))
-        val paths = files.map(rel => dataPath(table, rel))
-        // fast path only when the partition column's manifest type is
-        // known: the user schema appends pc LAST (matching Spark's
-        // dataSchema ++ partition-column output order) so the explicit
-        // schema read is column-for-column identical to inference
-        val rd1 =
-          if (ms || paths.isEmpty || dt.isEmpty) rd0
-          else {
-            val dataSch = graft.core.ParquetFooters.schemaOf(spark, paths.head)
-            if (dataSch.fieldNames.contains(pc)) rd0
-            else rd0.schema(org.apache.spark.sql.types.StructType(
-              dataSch.fields :+ org.apache.spark.sql.types.StructField(pc, dt.get, true)))
-          }
-        val df = rd1.option("basePath", s"$table/data").parquet(paths: _*)
-        dt.fold(df)(t => df.withColumn(pc, col(pc).cast(t)))
+        val hive = rd0.option("basePath", s"$table/data")
+        dt match {
+          case Some(t) if paths.nonEmpty =>
+            // ONE partition-value rule, evolved or not: the directory
+            // string parses as the manifest type (the user-schema
+            // partition parse), never as an inferred type cast back —
+            // inference reads the string partition '01' as '1'. The
+            // partition column goes LAST, Spark's data ++ partition
+            // column order.
+            hive.schema(StructType(dataSchema.fields.filterNot(_.name == pc) :+
+              org.apache.spark.sql.types.StructField(pc, t, true))).parquet(paths: _*)
+          case _ => hive.parquet(paths: _*) // pre-schema manifest: inferred
+        }
     }
   }
 
@@ -1601,7 +1298,6 @@ object TxTable {
     if (touch.isEmpty) return (v, 0, all.size)
     val map = colMapOf(spark, table, v)
     val phys = physOf(map, colName)
-    require(!assign.contains(colName) || colName == colName, "")
     val pred = col(phys).isNotNull && col(phys) >= lo && col(phys) <= hi
     val base = morFilter(spark, table, v, rawRead(spark, table, v, touch))
     // assignment TARGETS are logical names resolved through the column
@@ -1645,13 +1341,11 @@ object TxTable {
                      lo: Double, hi: Double, keyCol: String): (Int, Long) = {
     val v = currentVersion(spark, table)
     require(v >= 1, s"TxTable: cannot delete from non-existent table $table")
-    val all = filesOf(spark, table, v)
     val map = colMapOf(spark, table, v)
     val phys = physOf(map, colName)
     val physKey = physOf(map, keyCol)
     val touch = prunedFiles(spark, table, v, colName, lo, hi)
     if (touch.isEmpty) return (v, 0L)
-    val f = fs(spark, table)
     val matched = morFilter(spark, table, v,
         rawRead(spark, table, v, touch))
       .filter(col(phys) >= lo && col(phys) <= hi)
@@ -1663,7 +1357,8 @@ object TxTable {
     val keys = matched.select(
       element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf"),
       guardedKey.as("_gk")).distinct()
-    publishTombstonePairs(spark, table, v, physKey, keys, None)
+    publishSidecar(spark, table, v, "mordelete", 't', keys, None)((head, named) =>
+      head.copy(tombs = head.tombs ++ named.map(rel => (rel, physKey))))
   }
 
   /** Key-SET merge-on-read delete — the CDC-apply form of
@@ -1789,23 +1484,26 @@ object TxTable {
     val pairs = matched.select(
       element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf"),
       col(physKey).as("_gk")).distinct()
-    publishTombstonePairs(spark, table, v, physKey, pairs, txn)
+    publishSidecar(spark, table, v, "mordelete", 't', pairs, txn)((head, named) =>
+      head.copy(tombs = head.tombs ++ named.map(rel => (rel, physKey))))
   }
 
   /** Shared sidecar-publish tail of the merge-on-read deletes: write
-    * the (file, key) pairs as a tombstone sidecar, then publish a
-    * manifest-only `mordelete` version carrying every data file,
-    * stat, bloom, value set, mapping, and prior tomb verbatim.
-    * Empty match → no commit (Delta's no-op rule).
+    * `pairs` as sidecar files (`data/v<N>_<kind><i>_<nonce>` —
+    * versioned names ride the same vacuum protocol as data files, and
+    * the in-flight skip covers a racing delete's sidecars), then
+    * publish a manifest-only `op` version: `edit` records the sidecars
+    * on the head's state, and every data file, stat, bloom, value set,
+    * mapping and prior sidecar carries verbatim (the "zero files
+    * rewritten" property an auditor checks; the O(delta) form between
+    * checkpoints). Empty match → no commit (Delta's no-op rule).
+    *
+    * @return (version, nPairs) — the head with 0 on an empty match
     */
-  private def publishTombstonePairs(spark: SparkSession, table: String, v: Int,
-                                    physKey: String, pairs: DataFrame,
-                                    txn: Option[(String, Long)]): (Int, Long) = {
+  private def publishSidecar(spark: SparkSession, table: String, v: Int, op: String,
+                             kind: Char, pairs: DataFrame, txn: Option[(String, Long)])(
+                             edit: (TxManifest, Seq[String]) => TxManifest): (Int, Long) = {
     val f = fs(spark, table)
-    val all = filesOf(spark, table, v)
-    val map = colMapOf(spark, table, v)
-    // sidecar write — versioned names ride the same vacuum protocol as
-    // data files (in-flight skip covers a racing delete's sidecars)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(s"$table/_tmp_v${v + 1}_$nonce")
     pairs.write.mode("overwrite").parquet(tmp.toString)
@@ -1813,43 +1511,30 @@ object TxTable {
       .filter(_.getName.startsWith("part-")).sortBy(_.getName)
     f.mkdirs(new Path(s"$table/data"))
     val named = parts.zipWithIndex.map { case (p, i) =>
-      val rel = s"data/v${v + 1}_t${i}_$nonce.parquet"
+      val rel = s"data/v${v + 1}_$kind${i}_$nonce.parquet"
       require(f.rename(p, new Path(s"$table/$rel")), s"rename failed for $p")
       rel
     }.toSeq
     f.delete(tmp, true)
-    val nDeleted = // exact from footers, no scan job (just-written files)
+    val nPairs = // exact from footers, no scan job (just-written files)
       if (named.isEmpty) 0L
       else graft.core.ParquetFooters.rowCount(spark, named.map(rel => s"$table/$rel"))
-    if (nDeleted == 0L) { // no actual match: no-op
+    if (nPairs == 0L) { // no actual match: no-op
       named.foreach(rel => f.delete(new Path(s"$table/$rel"), false))
       return (v, 0L)
     }
-    // manifest-only publish: every DATA file carries verbatim (the
-    // "zero files rewritten" property an auditor checks), stats/blooms/
-    // mapping/ms carry with them, tombs extend. O(delta) form between
-    // checkpoints — the manifest edit is just the tomb extension.
-    val tombs = tombEntriesOf(spark, table, v) ++ named.map(rel => (rel, physKey))
-    val parentMs = try commitMsOf(spark, table, v)
-      catch { case _: java.io.FileNotFoundException => 0L }
-    val ts = math.max(System.currentTimeMillis(), parentMs + 1L)
-    val schemaDDL = manifestSchema(spark, table, v).map(_.toDDL)
-      .orElse(scala.util.Try(readVersion(spark, table, v).schema.toDDL).toOption)
-    val txnJson = txn.map { case (app, batch) =>
-      s""","txn":{"app":"$app","batch":$batch}""" }.getOrElse("")
-    val json = if ((v + 1) % CheckpointEvery == 0)
-      renderManifest(v + 1, "mordelete", ts, txnJson, msOf(spark, table, v),
-        schemaDDL, all, statsOf(spark, table, v), bloomEntries(spark, table, v),
-        tombs, map, valueSetsOf(spark, table, v), partColOf(spark, table, v),
-        posDeletesOf(spark, table, v), rowCountsOf(spark, table, v))
-    else
-      renderDeltaManifest(v + 1, "mordelete", ts, txnJson, msOf(spark, table, v),
-        schemaDDL, v, all.size, Seq.empty, Seq.empty, Seq.empty, Seq.empty,
-        tombs, map, Seq.empty, partColOf(spark, table, v),
-        posDeletesOf(spark, table, v))
-    publishOrConflict(f, table, v + 1, json)
-    (v + 1, nDeleted)
+    val head = withSchema(snapshotOf(spark, table, v), readVersion(spark, table, v))
+    publishOrConflict(f, table, Some(head),
+      edit(head, named).copy(version = v + 1, op = op, txn = txn))
+    (v + 1, nPairs)
   }
+
+  /** `m` with a recorded schema: a pre-schema manifest takes its
+    * snapshot read's, best-effort.
+    */
+  private def withSchema(m: TxManifest, read: => DataFrame): TxManifest =
+    if (m.schema.isDefined) m
+    else m.copy(schema = scala.util.Try(read.schema.toDDL).toOption)
 
   /** Row-level DELETE via POSITIONAL DELETION VECTORS (the
     * Delta/Iceberg deletion-vector shape): like [[deleteWhereMor]],
@@ -1878,57 +1563,8 @@ object TxTable {
     val pairs = matched.select(
       element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf"),
       col("_metadata.row_index").as("_gp"))
-    publishPosPairs(spark, table, v, pairs)
-  }
-
-  /** Sidecar-publish tail of the positional delete: write the (file,
-    * ordinal) pairs as a deletion-vector sidecar, then publish a
-    * manifest-only `posdelete` version carrying every data file, stat,
-    * bloom, value set, mapping, tomb, and prior vector verbatim.
-    * Empty match → no commit.
-    */
-  private def publishPosPairs(spark: SparkSession, table: String, v: Int,
-                              pairs: DataFrame): (Int, Long) = {
-    val f = fs(spark, table)
-    val all = filesOf(spark, table, v)
-    val map = colMapOf(spark, table, v)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(s"$table/_tmp_v${v + 1}_$nonce")
-    pairs.write.mode("overwrite").parquet(tmp.toString)
-    val parts = f.listStatus(tmp).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    f.mkdirs(new Path(s"$table/data"))
-    val named = parts.zipWithIndex.map { case (p0, i) =>
-      val rel = s"data/v${v + 1}_p${i}_$nonce.parquet"
-      require(f.rename(p0, new Path(s"$table/$rel")), s"rename failed for $p0")
-      rel
-    }.toSeq
-    f.delete(tmp, true)
-    val nDeleted = // exact from footers, no scan job (just-written files)
-      if (named.isEmpty) 0L
-      else graft.core.ParquetFooters.rowCount(spark, named.map(rel => s"$table/$rel"))
-    if (nDeleted == 0L) {
-      named.foreach(rel => f.delete(new Path(s"$table/$rel"), false))
-      return (v, 0L)
-    }
-    val posd = posDeletesOf(spark, table, v) ++ named
-    val parentMs = try commitMsOf(spark, table, v)
-      catch { case _: java.io.FileNotFoundException => 0L }
-    val ts = math.max(System.currentTimeMillis(), parentMs + 1L)
-    val schemaDDL = manifestSchema(spark, table, v).map(_.toDDL)
-      .orElse(scala.util.Try(readVersion(spark, table, v).schema.toDDL).toOption)
-    val json = if ((v + 1) % CheckpointEvery == 0)
-      renderManifest(v + 1, "posdelete", ts, "", msOf(spark, table, v),
-        schemaDDL, all, statsOf(spark, table, v), bloomEntries(spark, table, v),
-        tombEntriesOf(spark, table, v), map, valueSetsOf(spark, table, v),
-        partColOf(spark, table, v), posd, rowCountsOf(spark, table, v))
-    else
-      renderDeltaManifest(v + 1, "posdelete", ts, "", msOf(spark, table, v),
-        schemaDDL, v, all.size, Seq.empty, Seq.empty, Seq.empty, Seq.empty,
-        tombEntriesOf(spark, table, v), map, Seq.empty,
-        partColOf(spark, table, v), posd)
-    publishOrConflict(f, table, v + 1, json)
-    (v + 1, nDeleted)
+    publishSidecar(spark, table, v, "posdelete", 'p', pairs, None)((head, named) =>
+      head.copy(posd = head.posd ++ named))
   }
 
   /** Metadata-only column RENAME (the Delta column-mapping rename):
@@ -2005,26 +1641,12 @@ object TxTable {
                              schema1: StructType,
                              map1: Seq[(String, String)]): Int = {
     val v = currentVersion(spark, table)
-    val f = fs(spark, table)
-    val parentMs = try commitMsOf(spark, table, v)
-      catch { case _: java.io.FileNotFoundException => 0L }
-    val ts = math.max(System.currentTimeMillis(), parentMs + 1L)
+    val head = snapshotOf(spark, table, v)
     // O(delta) between checkpoints: the manifest edit is only the new
     // schema + mapping (scalar fields) — rename/drop on a 10⁶-file
     // table writes kilobytes
-    val json = if ((v + 1) % CheckpointEvery == 0)
-      renderManifest(v + 1, op, ts, "", msOf(spark, table, v),
-        Some(schema1.toDDL), filesOf(spark, table, v), statsOf(spark, table, v),
-        bloomEntries(spark, table, v), tombEntriesOf(spark, table, v), Some(map1),
-        valueSetsOf(spark, table, v), partColOf(spark, table, v),
-        posDeletesOf(spark, table, v), rowCountsOf(spark, table, v))
-    else
-      renderDeltaManifest(v + 1, op, ts, "", msOf(spark, table, v),
-        Some(schema1.toDDL), v, filesOf(spark, table, v).size,
-        Seq.empty, Seq.empty, Seq.empty, Seq.empty,
-        tombEntriesOf(spark, table, v), Some(map1), Seq.empty,
-        partColOf(spark, table, v), posDeletesOf(spark, table, v))
-    publishOrConflict(f, table, v + 1, json)
+    publishOrConflict(fs(spark, table), table, Some(head), head.copy(version = v + 1,
+      op = op, txn = None, schema = Some(schema1.toDDL), map = Some(map1)))
     v + 1
   }
 
@@ -2080,9 +1702,8 @@ object TxTable {
     */
   def txnVersionOf(spark: SparkSession, table: String, appId: String,
                    batchId: Long): Option[Int] = {
-    val marker = s""""txn":{"app":"$appId","batch":$batchId}"""
     liveVersions(spark, table).reverse
-      .find(v => manifestText(spark, table, v).contains(marker))
+      .find(v => manifestOf(spark, table, v).txn.contains((appId, batchId)))
   }
 
   /** RESTORE (the Delta RESTORE TABLE ... TO VERSION shape): publish a
@@ -2108,27 +1729,13 @@ object TxTable {
     require(manifestPath(table, toV).getFileSystem(
         spark.sparkContext.hadoopConfiguration).exists(manifestPath(table, toV)),
       s"TxTable: cannot restore $table to expired/unknown version $toV")
-    val v = head + 1
-    val f = fs(spark, table)
-    val parentMs = try commitMsOf(spark, table, head)
-      catch { case _: java.io.FileNotFoundException => 0L }
-    val ts = math.max(System.currentTimeMillis(), parentMs + 1L)
-    // every manifest this layer writes records a schema (the commitAs
-    // invariant) — a pre-schema target falls back to its snapshot read.
     // Stats, blooms, TOMBSTONES, and the COLUMN MAPPING restore with
     // their files: the restored snapshot must read bit-identically to
-    // the target, merge-on-read deletes and renames included.
-    val schemaDDL = manifestSchema(spark, table, toV)
-      .orElse(scala.util.Try(readVersion(spark, table, toV).schema).toOption)
-      .map(_.toDDL)
-    val json = renderManifest(v, "restore", ts, "", msOf(spark, table, toV),
-      schemaDDL, filesOf(spark, table, toV), statsOf(spark, table, toV),
-      bloomEntries(spark, table, toV), tombEntriesOf(spark, table, toV),
-      colMapOf(spark, table, toV), valueSetsOf(spark, table, toV),
-      partColOf(spark, table, toV), posDeletesOf(spark, table, toV),
-      rowCountsOf(spark, table, toV))
-    publishOrConflict(f, table, v, json)
-    v
+    // the target, merge-on-read deletes and renames included
+    val target = withSchema(snapshotOf(spark, table, toV), readVersion(spark, table, toV))
+    publishOrConflict(fs(spark, table), table, Some(snapshotOf(spark, table, head)),
+      target.copy(version = head + 1, op = "restore", txn = None))
+    head + 1
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` shape):
@@ -2162,20 +1769,8 @@ object TxTable {
       s"TxTable: $src v$v has a hive-partitioned layout — a clone cannot " +
       "re-derive path partition values across table roots; compact to a " +
       "flat layout first")
-    val snap = snapshotOf(spark, src, v)
-    def abs(rel: String): String = dataPath(src, rel)
-    val json = renderManifest(1, "clone", System.currentTimeMillis(), "",
-      msOf(spark, src, v), manifestSchema(spark, src, v).map(_.toDDL),
-      snap.files.map(abs),
-      snap.stats.map(e => (abs(e._1), e._2, e._3, e._4)),
-      snap.blooms.map(e => (abs(e._1), e._2, e._3, e._4, e._5)),
-      snap.tombs.map(e => (abs(e._1), e._2)),
-      colMapOf(spark, src, v),
-      snap.vsets.map(e => (abs(e._1), e._2, e._3)),
-      None,
-      snap.posd.map(abs),
-      snap.rows.map(e => (abs(e._1), e._2)))
-    publishOrConflict(fs(spark, dst), dst, 1, json)
+    publishOrConflict(fs(spark, dst), dst, None, snapshotOf(spark, src, v)
+      .mapFiles(rel => dataPath(src, rel)).copy(version = 1, op = "clone", txn = None))
     1
   }
 
@@ -2224,15 +1819,16 @@ object TxTable {
         c.isLetterOrDigit && c < 128 || c == '-' || c == '_'),
       s"TxTable: wapId must be [A-Za-z0-9_-]+, got '$wapId'")
 
-  private def stagedText(f: FileSystem, table: String, wapId: String): String = {
+  private def stagedFiles(f: FileSystem, table: String, wapId: String): Seq[String] = {
     val sp = stagedPath(table, wapId)
     require(f.exists(sp), s"TxTable: no staged batch '$wapId' at $table")
-    val in = f.open(sp)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
+    TxManifest.parseStaged(textOf(f, sp))
+  }
+
+  /** A whole small UTF-8 file (manifest, ref or staged record). */
+  private def textOf(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
   /** Stage a batch for write-audit-publish: the frame writes to the
@@ -2344,10 +1940,9 @@ object TxTable {
         rel
       }.toSeq
     f.delete(tmp, true)
-    val json = s"""{"wap":"${jesc(wapId)}",""" +
-      s""""files":[${named.map("\"" + _ + "\"").mkString(",")}]}"""
     val out = f.create(stagedPath(table, wapId), false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    try out.write(TxManifest.renderStaged(wapId, named).getBytes("UTF-8"))
+    finally out.close()
     named
   }
 
@@ -2357,7 +1952,7 @@ object TxTable {
     */
   def readWap(spark: SparkSession, table: String, wapId: String): DataFrame = {
     requireWapId(wapId)
-    val files = parseFileArray(stagedText(fs(spark, table), table, wapId), "files")
+    val files = stagedFiles(fs(spark, table), table, wapId)
     require(files.nonEmpty, s"TxTable: staged batch '$wapId' records no files")
     val paths = files.map(rel => s"$table/$rel")
     spark.read.schema(graft.core.ParquetFooters.schemaOf(spark, paths.head))
@@ -2385,7 +1980,7 @@ object TxTable {
         f.delete(stagedPath(table, wapId), false)
         v
       case None =>
-        val add = parseFileArray(stagedText(f, table, wapId), "files")
+        val add = stagedFiles(f, table, wapId)
         require(add.nonEmpty, s"TxTable: staged batch '$wapId' records no files")
         val head = currentVersion(spark, table)
         require(head < 1 || partColOf(spark, table, head).isEmpty,
@@ -2410,7 +2005,7 @@ object TxTable {
   def abandonWap(spark: SparkSession, table: String, wapId: String): Seq[String] = {
     requireWapId(wapId)
     val f = fs(spark, table)
-    val files = parseFileArray(stagedText(f, table, wapId), "files")
+    val files = stagedFiles(f, table, wapId)
     files.foreach(rel => f.delete(new Path(s"$table/$rel"), false))
     f.delete(stagedPath(table, wapId), false)
     files
@@ -2469,40 +2064,39 @@ object TxTable {
 
   /** Manifests are immutable once published (conditional-create
     * committer — a version file is never rewritten in place), so the
-    * raw text caches safely; the scalar helpers below (op, ms, schema,
-    * partCol, commitMs) each re-parse it, and a single snapshot read
-    * consults several of them. Bounded like [[snapCache]]; [[drop]]
-    * and version expiry invalidate the same way.
+    * parsed manifest caches safely; the scalar accessors below (op, ms,
+    * schema, partCol, commitMs, map, txn) are field reads of it, and a
+    * single snapshot read consults several of them. Bounded like
+    * [[snapCache]]; [[drop]] and version expiry invalidate the same way.
     */
   private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Int), TxManifest]()
 
-  private def manifestText(spark: SparkSession, table: String, v: Int): String = {
+  /** Version `v`'s manifest as written (the delta form between
+    * checkpoints); [[snapshotOf]] is the resolved state.
+    */
+  private def manifestOf(spark: SparkSession, table: String, v: Int): TxManifest = {
     val key = (table, v)
     val hit = manifestCache.get(key)
     if (hit != null) return hit
-    val in = fs(spark, table).open(manifestPath(table, v))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
+    val m = TxManifest.parse(textOf(fs(spark, table), manifestPath(table, v)))
     if (manifestCache.size > 1024) manifestCache.clear()
-    manifestCache.put(key, txt)
-    txt
+    manifestCache.put(key, m)
+    m
   }
 
   /** Whether version `v`'s snapshot requires a mergeSchema read
     * (sticky from the first `commitEvolve`; reset by overwrite).
     */
   private[graft] def msOf(spark: SparkSession, table: String, v: Int): Boolean =
-    manifestText(spark, table, v).contains("\"ms\":1")
+    manifestOf(spark, table, v).ms
 
   /** Snapshot schema as recorded in version `v`'s manifest; None for
     * manifests written before the schema field existed.
     */
   private[graft] def manifestSchema(spark: SparkSession, table: String,
-                                    v: Int): Option[org.apache.spark.sql.types.StructType] =
-    "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findFirstMatchIn(manifestText(spark, table, v))
-      .map(m => org.apache.spark.sql.types.StructType.fromDDL(junesc(m.group(1))))
+                                    v: Int): Option[StructType] =
+    manifestOf(spark, table, v).schema.map(StructType.fromDDL)
 
   /** Additive schema evolution (the Delta `mergeSchema` append): the
     * new frame may ADD columns over the parent snapshot but must keep
@@ -2535,16 +2129,14 @@ object TxTable {
 
   /** The op recorded in version `v`'s manifest. */
   def opOf(spark: SparkSession, table: String, v: Int): String =
-    "\"op\":\"(.*?)\"".r.findFirstMatchIn(manifestText(spark, table, v))
-      .getOrElse(sys.error(s"TxTable: malformed manifest v$v at $table")).group(1)
+    manifestOf(spark, table, v).op
 
   /** Commit time (epoch ms) of version `v` — strictly increasing with
     * the version by the commit protocol. Pre-timestamp manifests read
     * as 0 (epoch) so an old table stays time-travelable to "ever".
     */
   def commitMsOf(spark: SparkSession, table: String, v: Int): Long =
-    "\"commit_ms\":(\\d+)".r.findFirstMatchIn(manifestText(spark, table, v))
-      .map(_.group(1).toLong).getOrElse(0L)
+    manifestOf(spark, table, v).commitMs
 
   /** Timestamp time travel (Delta's `timestampAsOf`): the snapshot the
     * table showed at `tsMs` — the LARGEST live version whose commit
@@ -2967,7 +2559,7 @@ object TxTable {
       else f.listStatus(stagedDir).toSeq.filter(_.getPath.getName.endsWith(".json"))
         .flatMap { st =>
           val wapId = st.getPath.getName.stripSuffix(".json")
-          scala.util.Try(parseFileArray(stagedText(f, table, wapId), "files"))
+          scala.util.Try(stagedFiles(f, table, wapId))
             .getOrElse(Seq.empty)
         }
     val referenced = (liveVersions(spark, table)
@@ -3050,12 +2642,10 @@ object TxTable {
     // unreadably. The oldest kept version's chain floor bounds what
     // may expire; the CheckpointEvery cadence keeps the extra
     // retention under one checkpoint interval of (small) manifests.
-    def chainFloorOf(v: Int): Int = {
-      var cur = v
-      var base = deltaBaseOf(manifestText(spark, table, cur))
-      while (base.isDefined) { cur = base.get
-        base = deltaBaseOf(manifestText(spark, table, cur)) }
-      cur
+    @scala.annotation.tailrec
+    def chainFloorOf(v: Int): Int = manifestOf(spark, table, v).delta match {
+      case Some(d) => chainFloorOf(d.base)
+      case None => v
     }
     val floor = live.filter(_ > cut).minOption.fold(head)(chainFloorOf)
     // REF PROTECTION: versions pinned by a tag or serving as a branch
@@ -3130,8 +2720,7 @@ object TxTable {
     require(f.exists(manifestPath(table, v)),
       s"TxTable: cannot tag expired/unknown version $v at $table")
     f.mkdirs(refsDir(table))
-    if (!committerFor(f).publish(f, refPath(table, name),
-        s"""{"kind":"tag","v":$v}""",
+    if (!committerFor(f).publish(f, refPath(table, name), TxManifest.renderRef("tag", v),
         java.util.UUID.randomUUID().toString.take(8)))
       sys.error(s"TxTable: ref '$name' already exists at $table — " +
         "refs are immutable; dropRef first to re-point deliberately")
@@ -3143,17 +2732,10 @@ object TxTable {
     val f = fs(spark, table)
     val d = refsDir(table)
     if (!f.exists(d)) return Seq.empty
-    val re = """\{"kind":"(tag|branch)","v":(\d+)\}""".r
     f.listStatus(d).toSeq.filter(_.getPath.getName.endsWith(".json"))
       .flatMap { st =>
-        val txt = {
-          val in = f.open(st.getPath)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        }
-        re.findFirstMatchIn(txt).map(m =>
-          (st.getPath.getName.stripSuffix(".json"), m.group(1),
-            m.group(2).toInt))
+        TxManifest.parseRef(textOf(f, st.getPath)).map { case (kind, v) =>
+          (st.getPath.getName.stripSuffix(".json"), kind, v) }
       }.sortBy(_._1)
   }
 
@@ -3211,8 +2793,7 @@ object TxTable {
     cloneShallow(spark, table, root, v)
     val f = fs(spark, table)
     f.mkdirs(refsDir(table))
-    if (!committerFor(f).publish(f, refPath(table, name),
-        s"""{"kind":"branch","v":$v}""",
+    if (!committerFor(f).publish(f, refPath(table, name), TxManifest.renderRef("branch", v),
         java.util.UUID.randomUUID().toString.take(8))) {
       drop(spark, root)
       sys.error(s"TxTable: ref '$name' already exists at $table")
@@ -3250,32 +2831,16 @@ object TxTable {
       s"v$head since the branch was cut; merge the lines explicitly")
     val br = branchRoot(table, name)
     val bv = currentVersion(spark, br)
-    val snap = snapshotOf(spark, br, bv)
     val prefix = s"$table/"
     def back(pth: String): String =
       if (pth.startsWith(prefix)) pth.substring(prefix.length)
       else if (pth.startsWith("/")) pth
       else s"$br/$pth"
-    val v = head + 1
-    val parentMs = try commitMsOf(spark, table, head)
-      catch { case _: java.io.FileNotFoundException => 0L }
-    val ts = math.max(System.currentTimeMillis(), parentMs + 1L)
-    val schemaDDL = manifestSchema(spark, br, bv)
-      .orElse(scala.util.Try(read(spark, br).schema).toOption)
-      .map(_.toDDL)
-    val json = renderManifest(v, "fast_forward", ts, "", msOf(spark, br, bv),
-      schemaDDL,
-      snap.files.map(back),
-      snap.stats.map(e => (back(e._1), e._2, e._3, e._4)),
-      snap.blooms.map(e => (back(e._1), e._2, e._3, e._4, e._5)),
-      snap.tombs.map(e => (back(e._1), e._2)),
-      colMapOf(spark, br, bv),
-      snap.vsets.map(e => (back(e._1), e._2, e._3)),
-      None,
-      snap.posd.map(back),
-      snap.rows.map(e => (back(e._1), e._2)))
-    publishOrConflict(fs(spark, table), table, v, json)
-    v
+    val branchHead = withSchema(snapshotOf(spark, br, bv), read(spark, br))
+    publishOrConflict(fs(spark, table), table, Some(snapshotOf(spark, table, head)),
+      branchHead.mapFiles(back).copy(version = head + 1, op = "fast_forward",
+        txn = None, part = None))
+    head + 1
   }
 
   /** Per-file null counts of `colName` at version `v` (entries ride

@@ -445,4 +445,113 @@ class TxTableSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(1))).sorted shouldBe
       Seq((1L, 10.0), (2L, 99.0), (5L, 50.0), (7L, 70.0))
   }
+
+  // --- the manifest codec: any file, column or value string and any
+  // stats bound a writer records parses back exactly
+  test("renameColumn to a name holding ']' keeps every column of the snapshot") {
+    val table = freshTable()
+    TxTable.commit(Seq((1L, "a", 2.0)).toDF("id", "s", "x"), table)
+    TxTable.renameColumn(spark, table, "s", "s]x")
+    val df = TxTable.read(spark, table)
+    df.columns.toSeq shouldBe Seq("id", "s]x", "x")
+    df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))) shouldBe
+      Array((1L, "a", 2.0))
+  }
+
+  test("a bloom on a column whose name holds a quote prunes point lookups") {
+    val table = freshTable()
+    val k = "k\"q"
+    TxTable.commit(Seq((1L, "alpha")).toDF("id", k).coalesce(1), table, bloomCols = Seq(k))
+    TxTable.commit(Seq((2L, "beta")).toDF("id", k).coalesce(1), table, bloomCols = Seq(k))
+    TxTable.prunedFilesByKey(spark, table, 2, k, "alpha") shouldBe TxTable.filesOf(spark, table, 1)
+    TxTable.readWhereKey(spark, table, k, "alpha").collect().map(_.getLong(0)) shouldBe Array(1L)
+  }
+
+  test("a zero-padded string partition reads back unchanged before and after an evolve") {
+    val table = freshTable()
+    TxTable.commit(Seq((1L, "01"), (2L, "10")).toDF("id", "p"), table, partitionBy = Some("p"))
+    def parts(): Seq[String] =
+      TxTable.read(spark, table).select("p").collect().map(_.getString(0)).sorted.toSeq
+    parts() shouldBe Seq("01", "10")
+    TxTable.commitEvolve(Seq((3L, "02", 1.5)).toDF("id", "p", "x"), table)
+    TxTable.msOf(spark, table, 2) shouldBe true // the mergeSchema read path
+    parts() shouldBe Seq("01", "02", "10")
+  }
+
+  test("skipping stats with infinite or NaN bounds never prune a file holding a match") {
+    val table = freshTable()
+    val (inf, ninf) = (Double.PositiveInfinity, Double.NegativeInfinity)
+    Seq(Seq((1L, 1.0), (2L, inf)), Seq((3L, ninf), (4L, 0.0)), Seq((5L, Double.NaN), (6L, 5.0)))
+      .foreach(rows => TxTable.commit(rows.toDF("id", "x").coalesce(1), table, statsCols = Seq("x")))
+    def ids(lo: Double, hi: Double): Seq[Long] =
+      TxTable.readWhere(spark, table, "x", lo, hi).collect().map(_.getLong(0)).sorted.toSeq
+    ids(1e300, inf) shouldBe Seq(2L)
+    ids(ninf, -1e300) shouldBe Seq(3L)
+    ids(4.0, 6.0) shouldBe Seq(6L)
+    // the infinite bounds are recorded, not dropped
+    TxTable.statsOf(spark, table, 3).map(e => (e._3, e._4)) should contain allOf ((1.0, inf), (ninf, 0.0))
+  }
+
+  test("manifest codec: render then parse is the identity; minimal manifests parse with defaults") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import graft.sources.{TxDelta, TxManifest}
+    def check(p: Prop): Unit = {
+      val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(200).withMaxSize(6)
+        .withInitialSeed(org.scalacheck.rng.Seed(421L)), p)
+      assert(r.passed, org.scalacheck.util.Pretty.pretty(r))
+    }
+    val piece: Gen[String] = Gen.oneOf(
+      Gen.oneOf("\"", "\\", "]", "[", ",", "{", "}", ":", "\u001f", "\\s", "\\q", "data/v1_0.parquet"),
+      Gen.alphaNumChar.map(_.toString),
+      Gen.choose(0, 0x1f).map(_.toChar.toString), // control characters
+      Gen.choose(0x10000, 0x10ffff).map(cp => new String(Character.toChars(cp)))) // non-BMP
+    val str: Gen[String] = Gen.listOf(piece).map(_.mkString)
+    val bound: Gen[Double] = Gen.oneOf(Gen.choose(-1e300, 1e300),
+      Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity, Double.MaxValue,
+        Double.MinPositiveValue, -0.0, 1e-310))
+    val anyLong = Gen.choose(Long.MinValue, Long.MaxValue)
+    val manifests: Gen[TxManifest] = for {
+      version <- Gen.choose(1, Int.MaxValue)
+      op <- str
+      commitMs <- Gen.choose(0L, Long.MaxValue)
+      txn <- Gen.option(Gen.zip(str, anyLong))
+      ms <- Gen.oneOf(true, false)
+      part <- Gen.option(str)
+      schema <- Gen.option(str)
+      delta <- Gen.option(Gen.zip(Gen.choose(1, Int.MaxValue), Gen.listOf(str),
+        Gen.choose(0, Int.MaxValue)).map { case (b, rm, n) => TxDelta(b, rm, n) })
+      files <- Gen.listOf(str)
+      stats <- Gen.listOf(Gen.zip(str, str, bound, bound))
+      blooms <- Gen.listOf(Gen.zip(str, str, Gen.choose(0, Int.MaxValue),
+        Gen.choose(0, Int.MaxValue), str))
+      tombs <- Gen.listOf(Gen.zip(str, str))
+      map <- Gen.option(Gen.listOf(Gen.zip(str, str)))
+      vsets <- Gen.listOf(Gen.zip(str, str, Gen.listOf(str)))
+      posd <- Gen.listOf(str)
+      rows <- Gen.listOf(Gen.zip(str, anyLong))
+    } yield TxManifest(version, op, commitMs, txn, ms, part, schema, delta, files, stats,
+      blooms, tombs, map, vsets, posd, rows)
+    // through UTF-8 bytes, as the committer writes and the reader reads
+    def utf8(s: String): String = new String(s.getBytes("UTF-8"), "UTF-8")
+    check(Prop.forAll(manifests)(m => TxManifest.parse(utf8(TxManifest.render(m))) == m))
+    check(Prop.forAll(str, Gen.listOf(str)) { (id, files) =>
+      TxManifest.parseStaged(utf8(TxManifest.renderStaged(id, files))) == files })
+    check(Prop.forAll(Gen.oneOf("tag", "branch"), Gen.choose(1, Int.MaxValue)) { (k, v) =>
+      TxManifest.parseRef(TxManifest.renderRef(k, v)).contains((k, v)) })
+    TxManifest.parseRef("""{"kind":"other","v":3}""") shouldBe None
+    val nan = TxManifest.parse(TxManifest.render(TxManifest(1, "append", files = Seq("f"),
+      stats = Seq(("f", "c", Double.NaN, Double.NaN))))).stats.head
+    assert(nan._3.isNaN && nan._4.isNaN)
+    // the compact layout and top-level keys writers have always produced
+    TxManifest.render(TxManifest(2, "append", commitMs = 9L, schema = Some("id BIGINT"),
+      files = Seq("data/a.parquet"), stats = Seq(("data/a.parquet", "id", 1.0, 2.0)))) shouldBe
+      """{"version":2,"op":"append","commit_ms":9,"schema":"id BIGINT","n_files":1,""" +
+      """"files":["data/a.parquet"],"stats":[{"f":"data/a.parquet","c":"id","lo":1.0,"hi":2.0}]}"""
+    // the hand-written manifests the race specs publish
+    TxManifest.parse("""{"version":2,"op":"append","n_files":0,"files":[]}""") shouldBe
+      TxManifest(2, "append")
+    TxManifest.parse("""{"version":2,"op":"append","commit_ms":9,"txn":{"app":"app","batch":1},""" +
+      """"n_files":0,"files":[]}""") shouldBe
+      TxManifest(2, "append", commitMs = 9L, txn = Some(("app", 1L)))
+  }
 }
