@@ -1,17 +1,230 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph computation done Spark-relational: PageRank as
   * repeated join + partial-agg rounds over an edge list — the
   * importance/centrality pass over a similarity graph (which documents
   * anchor a near-dup neighborhood; which get sampled as cluster
   * exemplars). Complements [[Dedup.components]] (reachability): same
-  * pair-list-sized shuffles, no GraphX dependency, no driver-side
-  * adjacency.
+  * pair-list-sized shuffles, no GraphX dependency. Every gated kernel
+  * keeps its distributed plan as the path that scales; a derived graph
+  * small enough for the driver takes an exact driver-local mirror
+  * instead, chosen in ONE place (`localRows`).
   */
 object Graph {
+
+  // -----------------------------------------------------------------
+  // Exact local small-graph fast path (the Dedup.components adaptive
+  // union-find precedent, generalized to the integer graph kernels).
+  //
+  // Every operator below consumes a DERIVED pair list (bucket-capped
+  // candidate pairs) that is orders of magnitude smaller than the
+  // corpus. When that list fits the driver comfortably, the
+  // distributed peel/wedge rounds are pure scheduling overhead: at
+  // sf0.1, kTruss ran 108 jobs (~30 peel rounds × 3-4 actions) and
+  // triangleCounts 57 jobs/1205 tasks for an 11k-edge graph a single
+  // core closes in milliseconds. The kernels are integer fixpoints
+  // (counts, supports, peels) with at most one mirrored double
+  // expression at the very end, so the local form reproduces the
+  // distributed outputs EXACTLY (property-tested both ways).
+  //
+  // Gate: conf "graft.graph.localEdgeGate" (edges; default 2e6 ≈
+  // 32 MB of id pairs — the broadcast-side budget class, far under the
+  // 8 GB broadcast cap; "0" disables — the scale posture stays: above
+  // the gate, for non-LONG ids, or with a NULL endpoint, the
+  // distributed rounds run unchanged, and every local kernel below
+  // does strictly less work than the distributed plan materializes as
+  // rows). Each kernel gates on the row count it actually collects
+  // (symmetrized for the wedge kernels, canonical undirected for
+  // modularity and kTruss), so the budget is uniform per collect.
+  // Integer arithmetic stays exact at this gate — louvain's largest
+  // products (m2·e_ic ≤ gate²) are long-exact up to a ~3e9 gate;
+  // assortativity's cubic moment sums bind FIRST and that kernel caps
+  // its own local path at 3e6 independently of the conf.
+  // -----------------------------------------------------------------
+
+  /** The one driver-or-cluster switch: the collected rows of `edges`
+    * when the exact local mirror may run, None to run the distributed
+    * plan. Local needs a positive gate (the conf, lowered to `cap` by a
+    * kernel whose local arithmetic has a tighter exactness bound), LONG
+    * `aCol`/`bCol` in `ids`, the row count `n` within the gate (`n` is
+    * evaluated only after the first two checks pass, so a disabled gate
+    * issues no count), and no NULL in any collected row: the
+    * distributed joins define what a NULL endpoint means, and a map
+    * keyed on Long cannot mirror it.
+    */
+  private def localRows(ids: DataFrame, aCol: String, bCol: String, edges: DataFrame,
+                        n: => Long, cap: Long = Long.MaxValue): Option[Array[Row]] = {
+    val gate = math.min(
+      ids.sparkSession.conf.get("graft.graph.localEdgeGate", "2000000").toLong, cap)
+    if (gate <= 0 || !longCols(ids, aCol, bCol) || n > gate) None
+    else Some(edges.collect()).filterNot(_.exists(_.anyNull))
+  }
+
+  /** [[localRows]] of a (src, dst) edge list, as id pairs. */
+  private def localPairs(ids: DataFrame, aCol: String, bCol: String, edges: DataFrame,
+                         n: => Long, cap: Long = Long.MaxValue): Option[Array[(Long, Long)]] =
+    localRows(ids, aCol, bCol, edges, n, cap).map(_.map(r => (r.getLong(0), r.getLong(1))))
+
+  private def longCols(df: DataFrame, cols: String*): Boolean =
+    cols.forall(c => df.schema(c).dataType == LongType)
+
+  /** Both orientations of every pair as (src, dst), duplicates kept. */
+  private def bothWays(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+
+  /** The symmetrized edge list: distinct (src, dst) in both
+    * orientations. Persisted like components' pair list — it is the
+    * small derived artifact, read by degrees, joins, rounds and the
+    * gate count; without the persist each reference re-runs the full
+    * upstream candidate pipeline. Callers unpersist.
+    */
+  private def symEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    bothWays(pairs, aCol, bCol).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** (src, deg): the out-degree of every source of a (src, dst) list. */
+  private def degreeFrame(edges: DataFrame): DataFrame =
+    edges.groupBy("src").agg(count(lit(1)).as("deg"))
+
+  /** Local out-degree of every source of an edge array. */
+  private def degrees(es: Array[(Long, Long)]): java.util.HashMap[Long, Long] = {
+    val deg = new java.util.HashMap[Long, Long]()
+    es.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
+    deg
+  }
+
+  /** Local adjacency lists of the edges `keep` accepts, in edge order. */
+  private def adjacency(es: Array[(Long, Long)])(keep: (Long, Long) => Boolean)
+      : java.util.HashMap[Long, ArrayBuffer[Long]] = {
+    val adj = new java.util.HashMap[Long, ArrayBuffer[Long]]()
+    es.foreach { case (s, d) =>
+      if (keep(s, d)) adj.computeIfAbsent(s, _ => ArrayBuffer.empty[Long]) += d
+    }
+    adj
+  }
+
+  /** A driver-side result as a frame with the given column names. */
+  private def localFrame[T <: Product : TypeTag](spark: SparkSession, rows: Seq[T],
+                                                 names: String*): DataFrame = {
+    import spark.implicits._
+    rows.toDF(names: _*)
+  }
+
+  /** Spark's own round(x, 9) on a double: shortest-repr BigDecimal,
+    * HALF_UP at scale 9.
+    */
+  private def round9(x: Double): Double =
+    JBigDecimal.valueOf(x).setScale(9, RoundingMode.HALF_UP).doubleValue()
+
+  /** A rank kernel's per-edge quantisation, one definition per path:
+    * `edge` is the contribution column over the round's (pr, deg) or
+    * (pr, wq, wtot) and `local(pr, wq, total)` its exact driver-side
+    * twin (wq = 1 on unweighted edges); `mass` / `localMass` turn a
+    * node's quantum sum back into double rank mass.
+    */
+  private final case class Quantum(edge: Column, local: (Double, Long, Long) => JBigDecimal,
+                                   mass: Column => Column, localMass: JBigDecimal => Double)
+
+  /** floor(pr·wq/Wq·10¹⁵ + ½) integer quanta: the weighted kernels'. */
+  private def weightQuantum: Quantum = Quantum(
+    floor(col("pr") * col("wq") / col("wtot") * lit(1e15) + lit(0.5)).cast("decimal(38,0)"),
+    (pr, wq, wt) => JBigDecimal.valueOf(math.floor(pr * wq.toDouble / wt.toDouble * 1e15 + 0.5)),
+    _ / lit(1e15), _.doubleValue() / 1e15)
+
+  /** The rank loop of the four PageRank kernels, on both paths.
+    * `edges` is (src, dst) or (src, dst, wq) and `totals` the
+    * per-source (src, deg) or (src, wtot), both persisted; `seeds` is
+    * the persisted personalized seed set — teleport only on seed rows,
+    * the rank frame holds exactly the reached nodes ∪ seeds — or None
+    * for the uniform teleport over every vertex; `n` is the size of
+    * the teleport set. Per round, each edge carries the quantum `q` of
+    * its source's rank, quanta sum exactly per dst (decimal sums are
+    * order-insensitive at any parallelism) and the teleport is added in
+    * one IEEE expression. The local loop mirrors that operation for
+    * operation, so the two paths are bit-identical (property-tested in
+    * Round10OptSpec). Every cache is released before return.
+    */
+  private def rank(pairs: DataFrame, aCol: String, bCol: String,
+                   edges: DataFrame, totals: DataFrame, seeds: Option[DataFrame], n: Long,
+                   iters: Int, dampNum: Int, dampDen: Int, q: Quantum): DataFrame = {
+    val d = dampNum.toDouble / dampDen.toDouble
+    val caches = Seq(edges, totals) ++ seeds
+    val weighted = edges.columns.contains("wq")
+    localRows(pairs, aCol, bCol, edges, edges.count()) match {
+      case Some(rows) =>
+        val es = rows.map(r => (r.getLong(0), r.getLong(1), if (weighted) r.getLong(2) else 1L))
+        val tot =
+          if (!weighted) degrees(rows.map(r => (r.getLong(0), r.getLong(1))))
+          else {
+            val m = new java.util.HashMap[Long, Long]()
+            totals.collect().foreach(r => m.put(r.getLong(0), r.getLong(1)))
+            m
+          }
+        val seedL = seeds.map { s =>
+          val set = new java.util.HashSet[Long]()
+          s.collect().foreach(r => set.add(r.getLong(0)))
+          set
+        }
+        caches.foreach(_.unpersist())
+        val baseL = (dampDen - dampNum).toDouble / (dampDen.toDouble * n.toDouble)
+        var prL = new java.util.HashMap[Long, Double]()
+        seedL.getOrElse(tot.keySet()).forEach(v => prL.put(v, 1.0 / n.toDouble))
+        for (_ <- 0 until iters) {
+          val csum = new java.util.HashMap[Long, JBigDecimal]()
+          es.foreach { case (s, dst, wq) =>
+            if (prL.containsKey(s)) csum.merge(dst, q.local(prL.get(s), wq, tot.get(s)), _.add(_))
+          }
+          val next = new java.util.HashMap[Long, Double]()
+          csum.forEach { (v, c) =>
+            val b = if (seedL.forall(_.contains(v))) baseL else 0.0
+            next.put(v, b + d * q.localMass(c))
+          }
+          seedL.foreach(_.forEach(sd => if (!next.containsKey(sd)) next.put(sd, baseL + d * 0.0)))
+          prL = next
+        }
+        localFrame(pairs.sparkSession, prL.asScala.toSeq, "node", "pr")
+      case None =>
+        val base = lit((dampDen - dampNum).toDouble) / (lit(dampDen.toDouble) * lit(n.toDouble))
+        val init = (lit(1.0) / lit(n.toDouble)).as("pr")
+        var pr = seeds.fold(totals.select(col("src").as("node"), init))(_.select(col("node"), init))
+        for (_ <- 0 until iters) {
+          val spread = edges
+            .join(pr.withColumnRenamed("node", "src"), Seq("src"))
+            .join(totals, Seq("src"))
+            .select(col("dst").as("node"), q.edge.as("c"))
+            .groupBy("node")
+            .agg(sum("c").as("csum"))
+          pr = seeds match {
+            case None =>
+              spread.select(col("node"), (base + lit(d) * q.mass(col("csum").cast("double"))).as("pr"))
+            case Some(s) =>
+              spread
+                .join(s.withColumn("_s", lit(1)), Seq("node"), "full")
+                .select(col("node"),
+                  (when(col("_s").isNotNull, base).otherwise(lit(0.0))
+                    + lit(d) * q.mass(coalesce(col("csum").cast("double"), lit(0.0))))
+                    .as("pr"))
+          }
+        }
+        // eager node-sized result checkpoint, then release the caches
+        // (the modularity pattern): a long-lived session calling graph
+        // ops repeatedly must not accumulate MEMORY_AND_DISK blocks
+        val out = pr.localCheckpoint()
+        caches.foreach(_.unpersist())
+        out
+    }
+  }
 
   /** Fixed-iteration PageRank over an UNDIRECTED pair list (edges are
     * symmetrized, so every vertex has out-degree ≥ 1 — no dangling-
@@ -35,75 +248,17 @@ object Graph {
                dampNum: Int = 17, dampDen: Int = 20): DataFrame = {
     require(iters >= 1 && dampNum > 0 && dampDen > dampNum,
       s"need iters >= 1 and 0 < dampNum/dampDen < 1")
-    // the edge list is joined EVERY iteration — persist it (pair-list-
-    // sized, the components pattern) or each round re-runs the full
-    // upstream candidate-pair pipeline
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).persist()
+    // the edge list is joined EVERY iteration (the components pattern)
+    val edges = symEdges(pairs, aCol, bCol)
+    val deg = degreeFrame(edges).persist()
     val nV = deg.count()
     require(nV > 0, "pageRank: empty edge list — no vertices to rank")
-    val d = dampNum.toDouble / dampDen.toDouble
-    // adaptive local path (triangleCounts rationale): the rank rounds
-    // are deterministic arithmetic — per-edge contributions go through
-    // the double→DECIMAL(30,15) cast (BigDecimal.valueOf + HALF_UP,
-    // mirrored below), decimal sums are exact, the rank update is the
-    // same IEEE expression — so local and distributed ranks are
-    // bit-identical (property-tested in Round10OptSpec)
-    val gate = localEdgeGate(pairs.sparkSession)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val degL = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => degL.merge(s, 1L, _ + _) }
-      edges.unpersist(); deg.unpersist()
-      val baseL = (dampDen - dampNum).toDouble / (dampDen.toDouble * nV.toDouble)
-      var prL = new java.util.HashMap[Long, Double]()
-      val itD = degL.keySet().iterator()
-      while (itD.hasNext) prL.put(itD.next(), 1.0 / nV.toDouble)
-      for (_ <- 0 until iters) {
-        val csum = new java.util.HashMap[Long, java.math.BigDecimal]()
-        es.foreach { case (s, dst) =>
-          // mirror cast(double as decimal(30,15)): shortest-repr
-          // BigDecimal + HALF_UP at scale 15
-          val c = java.math.BigDecimal.valueOf(prL.get(s) / degL.get(s).toDouble)
-            .setScale(15, java.math.RoundingMode.HALF_UP)
-          csum.merge(dst, c, _.add(_))
-        }
-        val next = new java.util.HashMap[Long, Double]()
-        val itC = csum.entrySet().iterator()
-        while (itC.hasNext) {
-          val e = itC.next()
-          next.put(e.getKey, baseL + d * e.getValue.doubleValue())
-        }
-        prL = next
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      val itP = prL.entrySet().iterator()
-      while (itP.hasNext) { val e = itP.next(); rows += ((e.getKey, e.getValue)) }
-      return rows.toSeq.toDF("node", "pr")
-    }
-    val base = lit((dampDen - dampNum).toDouble) / (lit(dampDen.toDouble) * lit(nV.toDouble))
-    var pr = deg.select(col("src").as("node"),
-      (lit(1.0) / lit(nV.toDouble)).as("pr"))
-    for (_ <- 0 until iters) {
-      pr = edges
-        .join(pr.withColumnRenamed("node", "src"), Seq("src"))
-        .join(deg, Seq("src"))
-        .select(col("dst").as("node"),
-          (col("pr") / col("deg")).cast("decimal(30,15)").as("c"))
-        .groupBy("node")
-        .agg(sum("c").as("csum"))
-        .select(col("node"), (base + lit(d) * col("csum").cast("double")).as("pr"))
-    }
-    // eager node-sized result checkpoint, then release the edge/degree
-    // caches (the modularity pattern): a long-lived session calling
-    // graph ops repeatedly must not accumulate MEMORY_AND_DISK blocks
-    val out = pr.localCheckpoint()
-    edges.unpersist(); deg.unpersist()
-    out
+    rank(pairs, aCol, bCol, edges, deg, None, nV, iters, dampNum, dampDen, Quantum(
+      (col("pr") / col("deg")).cast("decimal(30,15)"),
+      // mirror cast(double as decimal(30,15)): shortest-repr
+      // BigDecimal + HALF_UP at scale 15
+      (pr, _, dg) => JBigDecimal.valueOf(pr / dg.toDouble).setScale(15, RoundingMode.HALF_UP),
+      c => c, _.doubleValue()))
   }
 
   /** Shared weighted-edge construction for the weighted rank family —
@@ -120,7 +275,7 @@ object Graph {
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst"), wq0.as("wq")))
       .groupBy("src", "dst").agg(max("wq").as("wq"))
       .filter(col("wq") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val wsum = edges.groupBy("src").agg(sum("wq").as("wtot")).persist()
     (edges, wsum)
   }
@@ -155,58 +310,7 @@ object Graph {
     val (edges, wsum) = weightedEdges(pairs, aCol, bCol, wCol, weightScale)
     val nV = wsum.count()
     require(nV > 0, "pageRankWeighted: no positive-weight edges — nothing to rank")
-    val d = dampNum.toDouble / dampDen.toDouble
-    // adaptive local path (pageRank rationale); the per-edge quantum is
-    // the same IEEE chain floor(pr·wq/Wq·1e15 + ½), summed exactly
-    val gate = localEdgeGate(pairs.sparkSession)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val wtot = new java.util.HashMap[Long, Long]()
-      wsum.collect().foreach(r => wtot.put(r.getLong(0), r.getLong(1)))
-      edges.unpersist(); wsum.unpersist()
-      val baseL = (dampDen - dampNum).toDouble / (dampDen.toDouble * nV.toDouble)
-      var prL = new java.util.HashMap[Long, Double]()
-      val itW = wtot.keySet().iterator()
-      while (itW.hasNext) prL.put(itW.next(), 1.0 / nV.toDouble)
-      for (_ <- 0 until iters) {
-        val csum = new java.util.HashMap[Long, java.math.BigDecimal]()
-        es.foreach { case (s, dst, wq) =>
-          val c = java.math.BigDecimal.valueOf(
-            math.floor(prL.get(s) * wq.toDouble / wtot.get(s).toDouble * 1e15 + 0.5))
-          csum.merge(dst, c, _.add(_))
-        }
-        val next = new java.util.HashMap[Long, Double]()
-        val itC = csum.entrySet().iterator()
-        while (itC.hasNext) {
-          val e = itC.next()
-          next.put(e.getKey, baseL + d * (e.getValue.doubleValue() / 1e15))
-        }
-        prL = next
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      val itP = prL.entrySet().iterator()
-      while (itP.hasNext) { val e = itP.next(); rows += ((e.getKey, e.getValue)) }
-      return rows.toSeq.toDF("node", "pr")
-    }
-    val base = lit((dampDen - dampNum).toDouble) / (lit(dampDen.toDouble) * lit(nV.toDouble))
-    var pr = wsum.select(col("src").as("node"),
-      (lit(1.0) / lit(nV.toDouble)).as("pr"))
-    for (_ <- 0 until iters) {
-      pr = edges
-        .join(pr.withColumnRenamed("node", "src"), Seq("src"))
-        .join(wsum, Seq("src"))
-        .select(col("dst").as("node"),
-          floor(col("pr") * col("wq") / col("wtot") * lit(1e15) + lit(0.5))
-            .cast("decimal(38,0)").as("c"))
-        .groupBy("node")
-        .agg(sum("c").as("csum"))
-        .select(col("node"),
-          (base + lit(d) * (col("csum").cast("double") / lit(1e15))).as("pr"))
-    }
-    val out = pr.localCheckpoint()
-    edges.unpersist(); wsum.unpersist()
-    out
+    rank(pairs, aCol, bCol, edges, wsum, None, nV, iters, dampNum, dampDen, weightQuantum)
   }
 
   /** Weighted-edge personalized PageRank — [[personalizedPageRank]]'s
@@ -230,71 +334,8 @@ object Graph {
       .persist()
     val nS = seedSet.count()
     require(nS > 0, "personalizedPageRankWeighted: no seed appears in the edge list")
-    val d = dampNum.toDouble / dampDen.toDouble
-    // adaptive local path: personalizedPageRank's sparse frontier with
-    // pageRankWeighted's quantum, both mirrored exactly
-    val gate = localEdgeGate(pairs.sparkSession)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val wtot = new java.util.HashMap[Long, Long]()
-      wsum.collect().foreach(r => wtot.put(r.getLong(0), r.getLong(1)))
-      val seedL = new java.util.HashSet[Long]()
-      seedSet.collect().foreach(r => { seedL.add(r.getLong(0)); () })
-      edges.unpersist(); wsum.unpersist(); seedSet.unpersist()
-      val baseL = (dampDen - dampNum).toDouble / (dampDen.toDouble * nS.toDouble)
-      var prL = new java.util.HashMap[Long, Double]()
-      val itS = seedL.iterator()
-      while (itS.hasNext) prL.put(itS.next(), 1.0 / nS.toDouble)
-      for (_ <- 0 until iters) {
-        val csum = new java.util.HashMap[Long, java.math.BigDecimal]()
-        es.foreach { case (s, dst, wq) =>
-          if (prL.containsKey(s)) {
-            val c = java.math.BigDecimal.valueOf(
-              math.floor(prL.get(s) * wq.toDouble / wtot.get(s).toDouble * 1e15 + 0.5))
-            csum.merge(dst, c, _.add(_))
-          }
-        }
-        val next = new java.util.HashMap[Long, Double]()
-        val itC = csum.entrySet().iterator()
-        while (itC.hasNext) {
-          val e = itC.next()
-          val b = if (seedL.contains(e.getKey)) baseL else 0.0
-          next.put(e.getKey, b + d * (e.getValue.doubleValue() / 1e15))
-        }
-        val itSd = seedL.iterator()
-        while (itSd.hasNext) {
-          val sd = itSd.next()
-          if (!next.containsKey(sd)) next.put(sd, baseL + d * 0.0)
-        }
-        prL = next
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      val itP = prL.entrySet().iterator()
-      while (itP.hasNext) { val e = itP.next(); rows += ((e.getKey, e.getValue)) }
-      return rows.toSeq.toDF("node", "pr")
-    }
-    val base = lit((dampDen - dampNum).toDouble) / (lit(dampDen.toDouble) * lit(nS.toDouble))
-    var pr = seedSet.select(col("node"), (lit(1.0) / lit(nS.toDouble)).as("pr"))
-    for (_ <- 0 until iters) {
-      val spread = edges
-        .join(pr.withColumnRenamed("node", "src"), Seq("src"))
-        .join(wsum, Seq("src"))
-        .select(col("dst").as("node"),
-          floor(col("pr") * col("wq") / col("wtot") * lit(1e15) + lit(0.5))
-            .cast("decimal(38,0)").as("c"))
-        .groupBy("node")
-        .agg(sum("c").as("csum"))
-      pr = spread
-        .join(seedSet.withColumn("_s", lit(1)), Seq("node"), "full")
-        .select(col("node"),
-          (when(col("_s").isNotNull, base).otherwise(lit(0.0))
-            + lit(d) * (coalesce(col("csum").cast("double"), lit(0.0)) / lit(1e15)))
-            .as("pr"))
-    }
-    val out = pr.localCheckpoint()
-    edges.unpersist(); wsum.unpersist(); seedSet.unpersist()
-    out
+    rank(pairs, aCol, bCol, edges, wsum, Some(seedSet), nS, iters, dampNum, dampDen,
+      weightQuantum)
   }
 
   /** k-core decomposition membership (SURVEY.md §2 #30l): the maximal
@@ -318,123 +359,65 @@ object Graph {
   def kCore(pairs: DataFrame, aCol: String, bCol: String, k: Int,
             maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = pairs.sparkSession
-    var edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
+    var edges = bothWays(pairs, aCol, bCol).distinct().localCheckpoint()
     var n = edges.count()
-    // adaptive local path: integer peel, rounds and outputs mirror the
-    // distributed loop exactly (triangleCounts rationale)
-    val gate = localEdgeGate(spark)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && n <= gate) {
-      var es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      var itL = 0
-      var conv = es.isEmpty
-      while (!conv && itL < maxIter) {
-        val deg = new java.util.HashMap[Long, Long]()
-        es.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
-        val pruned = es.filter { case (s, d) =>
-          deg.getOrDefault(s, 0L) >= k && deg.getOrDefault(d, 0L) >= k }
-        conv = pruned.length == es.length
-        es = pruned; itL += 1
-      }
-      require(conv, s"kCore($k) did not converge within $maxIter peel rounds")
-      val deg = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
-      import spark.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val itr = deg.entrySet().iterator()
-      while (itr.hasNext) { val e = itr.next(); rows += ((e.getKey, e.getValue)) }
-      return rows.toSeq.toDF("node", "core_degree")
+    // local: integer peel, rounds and outputs mirror the distributed
+    // loop exactly
+    localPairs(pairs, aCol, bCol, edges, n) match {
+      case Some(es0) =>
+        var es = es0
+        var itL = 0
+        var conv = es.isEmpty
+        while (!conv && itL < maxIter) {
+          val deg = degrees(es)
+          val pruned = es.filter { case (s, d) =>
+            deg.getOrDefault(s, 0L) >= k && deg.getOrDefault(d, 0L) >= k }
+          conv = pruned.length == es.length
+          es = pruned; itL += 1
+        }
+        require(conv, s"kCore($k) did not converge within $maxIter peel rounds")
+        localFrame(pairs.sparkSession, degrees(es).asScala.toSeq, "node", "core_degree")
+      case None =>
+        var it = 0
+        var converged = n == 0
+        while (!converged && it < maxIter) {
+          val keep = degreeFrame(edges).filter(col("deg") >= k).select("src")
+          val pruned = edges
+            .join(keep, Seq("src"), "left_semi")
+            .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
+            .select("src", "dst")
+            .localCheckpoint()
+          val n2 = pruned.count()
+          converged = n2 == n
+          edges = pruned; n = n2; it += 1
+        }
+        require(converged, s"kCore($k) did not converge within $maxIter peel rounds")
+        edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_degree"))
     }
-    var it = 0
-    var converged = n == 0
-    while (!converged && it < maxIter) {
-      val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("src")
-      val pruned = edges
-        .join(keep, Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .localCheckpoint()
-      val n2 = pruned.count()
-      converged = n2 == n
-      edges = pruned; n = n2; it += 1
-    }
-    require(converged, s"kCore($k) did not converge within $maxIter peel rounds")
-    edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_degree"))
   }
-
-  // -----------------------------------------------------------------
-  // Exact local small-graph fast path (the Dedup.components adaptive
-  // union-find precedent, generalized to the integer graph kernels).
-  //
-  // Every operator below consumes a DERIVED pair list (bucket-capped
-  // candidate pairs) that is orders of magnitude smaller than the
-  // corpus. When that list fits the driver comfortably, the
-  // distributed peel/wedge rounds are pure scheduling overhead: at
-  // sf0.1, kTruss ran 108 jobs (~30 peel rounds × 3-4 actions) and
-  // triangleCounts 57 jobs/1205 tasks for an 11k-edge graph a single
-  // core closes in milliseconds. The kernels are integer fixpoints
-  // (counts, supports, peels) with at most one mirrored double
-  // expression at the very end, so the local form reproduces the
-  // distributed outputs EXACTLY (property-tested both ways).
-  //
-  // Gate: conf "graft.graph.localEdgeGate" (edges; default 2e6 ≈
-  // 32 MB of id pairs — the broadcast-side budget class, far under the
-  // 8 GB broadcast cap; "0" disables — the scale posture stays: above
-  // the gate, or for non-LONG ids, the distributed rounds run
-  // unchanged, and every local kernel below does strictly less work
-  // than the distributed plan materializes as rows). Each kernel gates
-  // on the row count it actually collects (symmetrized for the wedge
-  // kernels, canonical undirected for modularity), so the budget is
-  // uniform per collect. Integer arithmetic stays exact at this gate —
-  // louvain's largest products (m2·e_ic ≤ gate²) are long-exact up to a
-  // ~3e9 gate; assortativity's cubic moment sums bind FIRST and that
-  // kernel clamps its own local path to 3e6 independently of the conf.
-  // -----------------------------------------------------------------
-
-  private def localEdgeGate(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("graft.graph.localEdgeGate", "2000000").toLong
-
-  private def longCols(df: DataFrame, cols: String*): Boolean =
-    cols.forall(c => df.schema(c).dataType == org.apache.spark.sql.types.LongType)
 
   /** Enumerate every triangle of the undirected graph given by
     * `edges` (SYMMETRIZED distinct directed pairs) exactly once via
     * the same Schank–Wagner (degree, id) orientation the distributed
-    * plan uses, calling `emit(a, b, c)` with a the orientation-
-    * smallest vertex and (b, c) in orientation order. Degrees count
-    * self-loops (they are in the symmetric edge set) but self-loops
-    * never orient, exactly like the distributed filter.
+    * plan ([[orientedTriangles]]) uses, calling `emit(a, b, c)` with a
+    * the orientation-smallest vertex and (b, c) in orientation order.
+    * Degrees count self-loops (they are in the symmetric edge set) but
+    * self-loops never orient, exactly like the distributed filter.
     */
   private def localTriangles(edges: Array[(Long, Long)])
                             (emit: (Long, Long, Long) => Unit): Unit = {
-    val deg = new java.util.HashMap[Long, Long]()
-    edges.foreach { case (s, _) => deg.merge(s, 1L, _ + _) }
+    val deg = degrees(edges)
     @inline def less(x: Long, y: Long): Boolean = {
       val dx = deg.get(x); val dy = deg.get(y)
       dx < dy || (dx == dy && x < y)
     }
-    val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
+    val adj = adjacency(edges)((s, d) => s != d && less(s, d))
     // closure probes need a set keyed on the PAIR; ids are arbitrary
     // longs, so probe a set of (b, c) tuples
     val orientedPairs = new java.util.HashSet[(Long, Long)]()
-    edges.foreach { case (s, d) =>
-      if (s != d && less(s, d)) {
-        var buf = adj.get(s)
-        if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Long]; adj.put(s, buf) }
-        buf += d
-        orientedPairs.add((s, d))
-        ()
-      }
-    }
-    val it = adj.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val a = e.getKey
-      val nbrs = e.getValue.sortWith(less)
+    adj.forEach((a, out) => out.foreach(b => orientedPairs.add((a, b))))
+    adj.forEach { (a, out) =>
+      val nbrs = out.sortWith(less)
       var i = 0
       while (i < nbrs.length) {
         var j = i + 1
@@ -448,6 +431,48 @@ object Graph {
       }
     }
   }
+
+  /** Local triangle count per vertex on at least one triangle. */
+  private def localTrianglesPerNode(es: Array[(Long, Long)]): java.util.HashMap[Long, Long] = {
+    val tri = new java.util.HashMap[Long, Long]()
+    localTriangles(es) { (a, b, c) =>
+      tri.merge(a, 1L, _ + _); tri.merge(b, 1L, _ + _); tri.merge(c, 1L, _ + _)
+      ()
+    }
+    tri
+  }
+
+  /** Every triangle of a symmetrized (src, dst) edge list exactly once,
+    * as (b, c, a) rows with a the (deg, id)-smallest corner — the
+    * distributed plan [[localTriangles]] mirrors (rationale at
+    * [[triangleCounts]]).
+    */
+  private def orientedTriangles(edges: DataFrame): DataFrame = {
+    val deg = degreeFrame(edges)
+    // orient by (deg, id): strict total order → acyclic
+    val oriented = edges
+      .join(deg.withColumnRenamed("src", "src_").withColumnRenamed("deg", "ds"),
+        col("src") === col("src_")).drop("src_")
+      .join(deg.withColumnRenamed("src", "dst_").withColumnRenamed("deg", "dd"),
+        col("dst") === col("dst_")).drop("dst_")
+      .filter(col("ds") < col("dd") || (col("ds") === col("dd") && col("src") < col("dst")))
+      .select(col("src"), col("dst"), col("dd").as("dg"))
+    // wedge pair ordered by the SAME (deg, id) orientation key, so the
+    // closing edge — if it exists — is oriented exactly b→c
+    val wedges = oriented.select(col("src").as("a"), col("dst").as("b"), col("dg").as("bg"))
+      .join(oriented.select(col("src").as("a"), col("dst").as("c"), col("dg").as("cg")), Seq("a"))
+      .filter(col("bg") < col("cg") || (col("bg") === col("cg") && col("b") < col("c")))
+      .select("a", "b", "c")
+    wedges.join(oriented.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c"))
+  }
+
+  /** (node, n_triangles) over [[orientedTriangles]]: each triangle
+    * counts once at each of its three corners.
+    */
+  private def trianglesPerNode(edges: DataFrame): DataFrame =
+    orientedTriangles(edges)
+      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("n_triangles"))
 
   /** Exact triangle count per vertex over an undirected pair list —
     * the local clustering signal (a near-dup pair embedded in many
@@ -468,65 +493,28 @@ object Graph {
     * plain hash semi-join against the oriented edge set.
     */
   def triangleCounts(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val spark = pairs.sparkSession
-    // persisted like components' pair list: the edge list is the small
-    // derived artifact (candidate pairs), and it feeds degrees, both
-    // orientation joins, and the wedge closure — without the persist
-    // each reference re-runs the full upstream candidate pipeline
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // adaptive local path: the count materializes the persist either
-    // way (the distributed branch reuses it for free)
-    val gate = localEdgeGate(spark)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      val tri = new java.util.HashMap[Long, Long]()
-      var total = 0L
-      localTriangles(es) { (a, b, c) =>
-        tri.merge(a, 1L, _ + _); tri.merge(b, 1L, _ + _); tri.merge(c, 1L, _ + _)
-        total += 1
-      }
-      import spark.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      val it = tri.entrySet().iterator()
-      while (it.hasNext) { val e = it.next(); rows += ((e.getKey, e.getValue, total)) }
-      return rows.toSeq.toDF("node", "n_triangles", "total_triangles")
+    val edges = symEdges(pairs, aCol, bCol)
+    // the gate count materializes the persist either way (the
+    // distributed branch reuses it for free)
+    localPairs(pairs, aCol, bCol, edges, edges.count()) match {
+      case Some(es) =>
+        edges.unpersist()
+        val tri = localTrianglesPerNode(es)
+        val total = tri.values().asScala.sum / 3
+        localFrame(pairs.sparkSession, tri.asScala.toSeq.map { case (v, t) => (v, t, total) },
+          "node", "n_triangles", "total_triangles")
+      case None =>
+        // node-sized checkpoint FIRST: the per-node frame feeds both the
+        // output and the global count, which is the exact integer
+        // sum(n_triangles) DIV 3 over it (each triangle contributes once
+        // to each of its 3 corners) — the oriented-wedge subtree
+        // evaluates once per query (plan pins in plans/r10/)
+        val perNode = trianglesPerNode(edges).localCheckpoint()
+        val out = perNode.crossJoin(broadcast(perNode.agg(
+          expr("CAST(SUM(n_triangles) DIV 3 AS BIGINT)").as("total_triangles"))))
+        edges.unpersist()
+        out
     }
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // orient by (deg, id): strict total order → acyclic
-    val oriented = edges
-      .join(deg.withColumnRenamed("src", "src_").withColumnRenamed("deg", "ds"),
-        col("src") === col("src_")).drop("src_")
-      .join(deg.withColumnRenamed("src", "dst_").withColumnRenamed("deg", "dd"),
-        col("dst") === col("dst_")).drop("dst_")
-      .filter(col("ds") < col("dd") || (col("ds") === col("dd") && col("src") < col("dst")))
-      .select(col("src"), col("dst"), col("dd").as("dg"))
-    // wedge pair ordered by the SAME (deg, id) orientation key, so the
-    // closing edge — if it exists — is oriented exactly b→c
-    val wedges = oriented.select(col("src").as("a"), col("dst").as("b"), col("dg").as("bg"))
-      .join(oriented.select(col("src").as("a"), col("dst").as("c"), col("dg").as("cg")), Seq("a"))
-      .filter(col("bg") < col("cg") || (col("bg") === col("cg") && col("b") < col("c")))
-      .select("a", "b", "c")
-    val tris = wedges.join(
-      oriented.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c"))
-    // node-sized checkpoint FIRST: `tris` was referenced twice (the
-    // per-node agg and the global count), so the whole oriented-wedge
-    // subtree evaluated twice per query; the global count is the exact
-    // integer sum(n_triangles) DIV 3 over the checkpointed per-node
-    // frame (each triangle contributes once to each of its 3 corners),
-    // so the second wedge pass disappears outright (2 subtree
-    // evaluations → 1; plan pins in plans/r10/)
-    val perNode = tris
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-      .localCheckpoint()
-    val out = perNode.crossJoin(broadcast(perNode.agg(
-      expr("CAST(SUM(n_triangles) DIV 3 AS BIGINT)").as("total_triangles"))))
-    edges.unpersist()
-    out
   }
 
   /** Local clustering coefficient per node: cc(v) = 2·T(v)/(deg(v)·
@@ -547,68 +535,26 @@ object Graph {
     * Output: (node, deg, n_triangles, cc).
     */
   def clusteringCoefficient(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // adaptive local path (triangleCounts rationale); cc mirrors the
-    // distributed double expression exactly: (2.0·T)/(d·(d−1.0)) then
-    // Round's own double path, BigDecimal.valueOf(x).setScale(9, HALF_UP)
-    val gate = localEdgeGate(spark)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      val degL = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => degL.merge(s, 1L, _ + _) }
-      val tri = new java.util.HashMap[Long, Long]()
-      localTriangles(es) { (a, b, c) =>
-        tri.merge(a, 1L, _ + _); tri.merge(b, 1L, _ + _); tri.merge(c, 1L, _ + _)
-        ()
-      }
-      import spark.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Option[Double])]
-      val it = degL.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val node = e.getKey; val d = e.getValue
-        val t = tri.getOrDefault(node, 0L)
-        val cc = if (d >= 2)
-          Some(java.math.BigDecimal.valueOf(
-              (2.0 * t.toDouble) / (d.toDouble * (d.toDouble - 1.0)))
-            .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue())
-        else None
-        rows += ((node, d, t, cc))
-      }
-      return rows.toSeq.toDF("node", "deg", "n_triangles", "cc")
+    val edges = symEdges(pairs, aCol, bCol)
+    // local cc mirrors the distributed double expression exactly:
+    // (2.0·T)/(d·(d−1.0)) then Round's own double path
+    localPairs(pairs, aCol, bCol, edges, edges.count()) match {
+      case Some(es) =>
+        edges.unpersist()
+        val tri = localTrianglesPerNode(es)
+        localFrame(pairs.sparkSession, degrees(es).asScala.toSeq.map { case (v, dg) =>
+          val t = tri.getOrDefault(v, 0L)
+          val cc = if (dg >= 2) Some(round9((2.0 * t.toDouble) / (dg.toDouble * (dg.toDouble - 1.0))))
+            else None
+          (v, dg, t, cc)
+        }, "node", "deg", "n_triangles", "cc")
+      case None =>
+        val out = clusteringCoefficient(trianglesPerNode(edges),
+            degreeFrame(edges).withColumnRenamed("src", "node"))
+          .localCheckpoint() // node-sized; then release the edge cache
+        edges.unpersist()
+        out
     }
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val oriented = edges
-      .join(deg.withColumnRenamed("src", "src_").withColumnRenamed("deg", "ds"),
-        col("src") === col("src_")).drop("src_")
-      .join(deg.withColumnRenamed("src", "dst_").withColumnRenamed("deg", "dd"),
-        col("dst") === col("dst_")).drop("dst_")
-      .filter(col("ds") < col("dd") || (col("ds") === col("dd") && col("src") < col("dst")))
-      .select(col("src"), col("dst"), col("dd").as("dg"))
-    val wedges = oriented.select(col("src").as("a"), col("dst").as("b"), col("dg").as("bg"))
-      .join(oriented.select(col("src").as("a"), col("dst").as("c"), col("dg").as("cg")), Seq("a"))
-      .filter(col("bg") < col("cg") || (col("bg") === col("cg") && col("b") < col("c")))
-      .select("a", "b", "c")
-    val tris = wedges.join(
-      oriented.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c"))
-    val perNode = tris
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-    val dd = col("deg").cast("double")
-    val out = deg.withColumnRenamed("src", "node")
-      .join(perNode, Seq("node"), "left")
-      .withColumn("n_triangles", coalesce(col("n_triangles"), lit(0L)))
-      .withColumn("cc", when(col("deg") >= 2,
-        round(lit(2.0) * col("n_triangles").cast("double") / (dd * (dd - lit(1.0))), 9)))
-      .select("node", "deg", "n_triangles", "cc")
-      .localCheckpoint() // node-sized; then release the edge cache
-    edges.unpersist()
-    out
   }
 
   /** [[clusteringCoefficient]] over a PRECOMPUTED per-node triangle
@@ -629,6 +575,55 @@ object Graph {
       .withColumn("cc", when(col("deg") >= 2,
         round(lit(2.0) * col("n_triangles").cast("double") / (dd * (dd - lit(1.0))), 9)))
       .select("node", "deg", "n_triangles", "cc")
+  }
+
+  /** Common-neighbour enumeration shared by the link predictors:
+    * (node_a, node_b, cn, ra_q) for every NON-ADJACENT pair node_a <
+    * node_b with cn ≥ 1 common neighbours w of deg(w) ≤ maxDeg, ra_q
+    * the RA sum of 10⁹ div deg(w). Candidates enumerate through the
+    * common neighbour — a self-join of the adjacency list keyed on w,
+    * cost Σ_w deg(w)², never all-pairs; known edges drop via one
+    * left-anti join onto the symmetrized edge list. A caller that
+    * reads only cn has ra_q and its share column pruned away.
+    */
+  private def commonNeighbours(edges: DataFrame, deg: DataFrame, maxDeg: Long): DataFrame = {
+    // adjacency keyed by the COMMON neighbor w: (w, u, 1e9 div deg(w))
+    val nbr = edges.join(deg, Seq("src"))
+      .filter(col("deg") <= maxDeg)
+      .select(col("src").as("w"), col("dst").as("u"),
+        // `div`, not `/`: integer division (Spark `/` is double even on longs)
+        expr("1000000000L div deg").as("share"))
+    nbr.join(nbr.select(col("w"), col("u").as("v"), col("share").as("_s2")), Seq("w"))
+      .filter(col("u") < col("v"))
+      .groupBy(col("u").as("node_a"), col("v").as("node_b"))
+      .agg(count(lit(1)).as("cn"), sum(col("share")).as("ra_q"))
+      .join(edges.select(col("src").as("node_a"), col("dst").as("node_b")),
+        Seq("node_a", "node_b"), "left_anti")
+  }
+
+  /** [[commonNeighbours]] on the driver: (u, v, cn, ra_q) rows. */
+  private def localCommonNeighbours(es: Array[(Long, Long)], deg: java.util.HashMap[Long, Long],
+                                    maxDeg: Long): Seq[(Long, Long, Long, Long)] = {
+    val edgeSet = new java.util.HashSet[(Long, Long)]()
+    es.foreach(edgeSet.add)
+    val cn = new java.util.HashMap[(Long, Long), (Long, Long)]()
+    adjacency(es)((w, _) => deg.get(w) <= maxDeg).forEach { (w, nbrs) =>
+      val share = 1000000000L / deg.get(w)
+      var i = 0
+      while (i < nbrs.length) {
+        var j = 0
+        val u = nbrs(i)
+        while (j < nbrs.length) {
+          val v = nbrs(j)
+          if (u < v) cn.merge((u, v), (1L, share), (x, y) => (x._1 + y._1, x._2 + y._2))
+          j += 1
+        }
+        i += 1
+      }
+    }
+    cn.asScala.iterator.collect {
+      case ((u, v), (c, ra)) if !edgeSet.contains((u, v)) => (u, v, c, ra)
+    }.toSeq
   }
 
   /** Resource-allocation link prediction (Zhou–Lü–Zhang): for every
@@ -657,78 +652,20 @@ object Graph {
     */
   def raLinkPrediction(pairs: DataFrame, aCol: String, bCol: String,
                        maxDeg: Long = 1000L): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // adaptive local path (jaccardLinkPrediction rationale): counts and
-    // the 1e9 div deg shares are pure integers
-    val gateR = localEdgeGate(pairs.sparkSession)
-    if (gateR > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gateR) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      val degL = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => degL.merge(s, 1L, _ + _) }
-      val edgeSet = new java.util.HashSet[(Long, Long)]()
-      es.foreach { e => edgeSet.add(e); () }
-      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      es.foreach { case (w, u) =>
-        if (degL.get(w) <= maxDeg) {
-          var buf = adj.get(w)
-          if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Long]; adj.put(w, buf) }
-          buf += u
-        }
-      }
-      val cnL = new java.util.HashMap[(Long, Long), (Long, Long)]() // (cn, ra_q)
-      val itW = adj.entrySet().iterator()
-      while (itW.hasNext) {
-        val e = itW.next()
-        val share = 1000000000L / degL.get(e.getKey)
-        val nbrs = e.getValue
-        var i = 0
-        while (i < nbrs.length) {
-          var j = 0
-          val u = nbrs(i)
-          while (j < nbrs.length) {
-            val v = nbrs(j)
-            if (u < v) {
-              val cur = cnL.get((u, v))
-              if (cur == null) cnL.put((u, v), (1L, share))
-              else cnL.put((u, v), (cur._1 + 1L, cur._2 + share))
-            }
-            j += 1
-          }
-          i += 1
-        }
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      val itC = cnL.entrySet().iterator()
-      while (itC.hasNext) {
-        val e = itC.next()
-        val (u, v) = e.getKey
-        if (!edgeSet.contains((u, v))) rows += ((u, v, e.getValue._1, e.getValue._2))
-      }
-      return rows.toSeq.toDF("node_a", "node_b", "cn", "ra_q")
+    val edges = symEdges(pairs, aCol, bCol)
+    // local: counts and the 1e9 div deg shares are pure integers
+    localPairs(pairs, aCol, bCol, edges, edges.count()) match {
+      case Some(es) =>
+        edges.unpersist()
+        localFrame(pairs.sparkSession, localCommonNeighbours(es, degrees(es), maxDeg),
+          "node_a", "node_b", "cn", "ra_q")
+      case None =>
+        // output-sized checkpoint (what the caller materializes anyway),
+        // then edge-cache release (modularity pattern)
+        val out = commonNeighbours(edges, degreeFrame(edges), maxDeg).localCheckpoint()
+        edges.unpersist()
+        out
     }
-    // adjacency keyed by the COMMON neighbor w: (w, u, 1e9 div deg(w))
-    val nbr = edges.join(deg, Seq("src"))
-      .filter(col("deg") <= maxDeg)
-      .select(col("src").as("w"), col("dst").as("u"),
-        // `div`, not `/`: integer division (Spark `/` is double even on longs)
-        expr("1000000000L div deg").as("share"))
-    val cand = nbr.select(col("w"), col("u"), col("share"))
-      .join(nbr.select(col("w"), col("u").as("v"), col("share").as("_s2")), Seq("w"))
-      .filter(col("u") < col("v"))
-    val scored = cand.groupBy(col("u").as("node_a"), col("v").as("node_b"))
-      .agg(count(lit(1)).as("cn"), sum(col("share")).as("ra_q"))
-    // output-sized checkpoint (what the caller materializes anyway),
-    // then edge-cache release (modularity pattern)
-    val out = scored.join(edges.select(col("src").as("node_a"), col("dst").as("node_b")),
-      Seq("node_a", "node_b"), "left_anti").localCheckpoint()
-    edges.unpersist()
-    out
   }
 
   /** Synchronous label propagation (fixed rounds, deterministic): each
@@ -753,56 +690,48 @@ object Graph {
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
                        iters: Int = 2): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // adaptive local path (triangleCounts rationale): frequency votes
-    // and the (count desc, label asc) argmax are pure integers
-    val gate = localEdgeGate(pairs.sparkSession)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      var lab = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => lab.put(s, s) }
-      for (_ <- 0 until iters) {
-        val cnt = new java.util.HashMap[(Long, Long), Long]()
-        es.foreach { case (s, d) => cnt.merge((s, lab.get(d)), 1L, _ + _) }
-        val best = new java.util.HashMap[Long, (Long, Long)]() // node → (c, label)
-        val itC = cnt.entrySet().iterator()
-        while (itC.hasNext) {
-          val e = itC.next()
-          val (node, l) = e.getKey; val c = e.getValue
-          val cur = best.get(node)
-          if (cur == null || c > cur._1 || (c == cur._1 && l < cur._2))
-            best.put(node, (c, l))
+    val edges = symEdges(pairs, aCol, bCol)
+    // local: frequency votes and the (count desc, label asc) argmax are
+    // pure integers
+    localPairs(pairs, aCol, bCol, edges, edges.count()) match {
+      case Some(es) =>
+        edges.unpersist()
+        var lab = new java.util.HashMap[Long, Long]()
+        es.foreach { case (s, _) => lab.put(s, s) }
+        for (_ <- 0 until iters) {
+          val cnt = new java.util.HashMap[(Long, Long), Long]()
+          es.foreach { case (s, d) => cnt.merge((s, lab.get(d)), 1L, _ + _) }
+          val best = new java.util.HashMap[Long, (Long, Long)]() // node → (c, label)
+          val itC = cnt.entrySet().iterator()
+          while (itC.hasNext) {
+            val e = itC.next()
+            val (node, l) = e.getKey; val c = e.getValue
+            val cur = best.get(node)
+            if (cur == null || c > cur._1 || (c == cur._1 && l < cur._2))
+              best.put(node, (c, l))
+          }
+          val next = new java.util.HashMap[Long, Long]()
+          best.forEach((node, cl) => next.put(node, cl._2))
+          lab = next
         }
-        val next = new java.util.HashMap[Long, Long]()
-        val itB = best.entrySet().iterator()
-        while (itB.hasNext) { val e = itB.next(); next.put(e.getKey, e.getValue._2) }
-        lab = next
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val itL = lab.entrySet().iterator()
-      while (itL.hasNext) { val e = itL.next(); rows += ((e.getKey, e.getValue)) }
-      return rows.toSeq.toDF("node", "label")
+        localFrame(pairs.sparkSession, lab.asScala.toSeq, "node", "label")
+      case None =>
+        var labels = edges.select(col("src").as("node")).distinct()
+          .withColumn("label", col("node"))
+        for (_ <- 0 until iters) {
+          val counts = edges
+            .join(labels.select(col("node").as("dst"), col("label").as("nl")), Seq("dst"))
+            .groupBy(col("src").as("node"), col("nl").as("label"))
+            .agg(count(lit(1)).as("c"))
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy("node").orderBy(col("c").desc, col("label"))
+          labels = counts.withColumn("_rn", row_number().over(w))
+            .filter(col("_rn") === 1).select("node", "label")
+            .localCheckpoint()
+        }
+        edges.unpersist() // labels are already checkpointed — no edge ref left
+        labels
     }
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    for (_ <- 0 until iters) {
-      val counts = edges
-        .join(labels.select(col("node").as("dst"), col("label").as("nl")), Seq("dst"))
-        .groupBy(col("src").as("node"), col("nl").as("label"))
-        .agg(count(lit(1)).as("c"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("node").orderBy(col("c").desc, col("label"))
-      labels = counts.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1).select("node", "label")
-        .localCheckpoint()
-    }
-    edges.unpersist() // labels are already checkpointed — no edge ref left
-    labels
   }
 
   /** Synchronous Louvain local-move rounds (Blondel et al. 2008, the
@@ -833,96 +762,79 @@ object Graph {
   def louvainMove(pairs: DataFrame, aCol: String, bCol: String,
                   rounds: Int = 2): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+    val edges = bothWays(pairs, aCol, bCol)
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).persist()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = degreeFrame(edges).persist()
     val m2 = edges.count() // Σk_i = 2m — scalar model artifact
     require(m2 > 0, "louvainMove: empty edge list")
-    // adaptive local path (labelPropagation rationale): the gain argmax
-    // is exact integer arithmetic — every product m2·e_ic and k_i·d'_c
-    // is ≤ m2², i.e. ≤ 4e12 at the default 2e6 gate (long-exact up to a
-    // ~3e9 gate), so the local scores equal the DECIMAL(38,0) plan's
-    // values identically
-    val gate = localEdgeGate(pairs.sparkSession)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && m2 <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist(); deg.unpersist()
-      val degL = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => degL.merge(s, 1L, _ + _) }
-      var labL = new java.util.HashMap[Long, Long]()
-      val itN = degL.keySet().iterator()
-      while (itN.hasNext) { val n = itN.next(); labL.put(n, n) }
-      for (_ <- 0 until rounds) {
-        val dtot = new java.util.HashMap[Long, Long]() // community → Σ deg
-        val itD = degL.entrySet().iterator()
-        while (itD.hasNext) {
-          val e = itD.next()
-          dtot.merge(labL.get(e.getKey), e.getValue, _ + _)
+    // local: the gain argmax is exact integer arithmetic — every
+    // product m2·e_ic and k_i·d'_c is ≤ m2², i.e. ≤ 4e12 at the default
+    // 2e6 gate (long-exact up to a ~3e9 gate), so the local scores
+    // equal the DECIMAL(38,0) plan's values identically
+    localPairs(pairs, aCol, bCol, edges, m2) match {
+      case Some(es) =>
+        edges.unpersist(); deg.unpersist()
+        val degL = degrees(es)
+        var labL = new java.util.HashMap[Long, Long]()
+        degL.keySet().forEach(v => labL.put(v, v))
+        for (_ <- 0 until rounds) {
+          val dtot = new java.util.HashMap[Long, Long]() // community → Σ deg
+          degL.forEach((v, dg) => dtot.merge(labL.get(v), dg, _ + _))
+          // candidate links e_{i→c}; own community always a candidate at ≥0
+          val eic = new java.util.HashMap[(Long, Long), Long]()
+          es.foreach { case (s, d) => eic.merge((s, labL.get(d)), 1L, _ + _) }
+          labL.forEach((v, c) => eic.merge((v, c), 0L, math.max))
+          val best = new java.util.HashMap[Long, (Long, Long)]() // node → (score, c)
+          val itC = eic.entrySet().iterator()
+          while (itC.hasNext) {
+            val e = itC.next()
+            val (node, c) = e.getKey
+            val own = labL.get(node)
+            val dAdj = dtot.get(c) - (if (own == c) degL.get(node) else 0L)
+            val score = m2 * e.getValue - degL.get(node) * dAdj
+            val cur = best.get(node)
+            if (cur == null || score > cur._1 || (score == cur._1 && c < cur._2))
+              best.put(node, (score, c))
+          }
+          val next = new java.util.HashMap[Long, Long]()
+          best.forEach((node, sc) => next.put(node, sc._2))
+          labL = next
         }
-        // candidate links e_{i→c}; own community always a candidate at ≥0
-        val eic = new java.util.HashMap[(Long, Long), Long]()
-        es.foreach { case (s, d) => eic.merge((s, labL.get(d)), 1L, _ + _) }
-        val itO = labL.entrySet().iterator()
-        while (itO.hasNext) {
-          val e = itO.next()
-          eic.merge((e.getKey, e.getValue), 0L, math.max)
+        localFrame(pairs.sparkSession, labL.asScala.toSeq, "node", "community")
+      case None =>
+        var lab = deg.select(col("src").as("node"), col("src").as("community"))
+        for (_ <- 0 until rounds) {
+          val dc = lab.join(deg.withColumnRenamed("src", "node"), Seq("node"))
+            .groupBy("community").agg(sum("deg").as("dtot"))
+          val links = edges
+            .join(lab.select(col("node").as("dst"), col("community").as("c")), Seq("dst"))
+            .groupBy(col("src").as("node"), col("c"))
+            .agg(count(lit(1)).as("e_ic"))
+          // own community is always a candidate (e defaults 0; max-merges
+          // with the real link count when internal neighbors exist)
+          val own = lab.select(col("node"), col("community").as("c"), lit(0L).as("e_ic"))
+          val cand = links.unionByName(own)
+            .groupBy("node", "c").agg(max("e_ic").as("e_ic"))
+            .join(deg.withColumnRenamed("src", "node"), Seq("node"))
+            .join(dc.withColumnRenamed("community", "c"), Seq("c"))
+            .join(lab, Seq("node"))
+            .withColumn("score",
+              lit(m2).cast("decimal(38,0)") * col("e_ic")
+                - col("deg").cast("decimal(38,0)")
+                  * (col("dtot") - when(col("community") === col("c"), col("deg"))
+                      .otherwise(lit(0L))))
+          lab = cand.withColumn("_rn", row_number().over(
+              org.apache.spark.sql.expressions.Window
+                .partitionBy("node").orderBy(col("score").desc, col("c"))))
+            .filter(col("_rn") === 1)
+            .select(col("node"), col("c").as("community"))
+            .localCheckpoint()
         }
-        val best = new java.util.HashMap[Long, (Long, Long)]() // node → (score, c)
-        val itC = eic.entrySet().iterator()
-        while (itC.hasNext) {
-          val e = itC.next()
-          val (node, c) = e.getKey
-          val own = labL.get(node)
-          val dAdj = dtot.get(c) - (if (own == c) degL.get(node) else 0L)
-          val score = m2 * e.getValue - degL.get(node) * dAdj
-          val cur = best.get(node)
-          if (cur == null || score > cur._1 || (score == cur._1 && c < cur._2))
-            best.put(node, (score, c))
-        }
-        val next = new java.util.HashMap[Long, Long]()
-        val itB = best.entrySet().iterator()
-        while (itB.hasNext) { val e = itB.next(); next.put(e.getKey, e.getValue._2) }
-        labL = next
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val itL = labL.entrySet().iterator()
-      while (itL.hasNext) { val e = itL.next(); rows += ((e.getKey, e.getValue)) }
-      return rows.toSeq.toDF("node", "community")
+        edges.unpersist(); deg.unpersist()
+        lab
     }
-    var lab = deg.select(col("src").as("node"), col("src").as("community"))
-    for (_ <- 0 until rounds) {
-      val dc = lab.join(deg.withColumnRenamed("src", "node"), Seq("node"))
-        .groupBy("community").agg(sum("deg").as("dtot"))
-      val links = edges
-        .join(lab.select(col("node").as("dst"), col("community").as("c")), Seq("dst"))
-        .groupBy(col("src").as("node"), col("c"))
-        .agg(count(lit(1)).as("e_ic"))
-      // own community is always a candidate (e defaults 0; max-merges
-      // with the real link count when internal neighbors exist)
-      val own = lab.select(col("node"), col("community").as("c"), lit(0L).as("e_ic"))
-      val cand = links.unionByName(own)
-        .groupBy("node", "c").agg(max("e_ic").as("e_ic"))
-        .join(deg.withColumnRenamed("src", "node"), Seq("node"))
-        .join(dc.withColumnRenamed("community", "c"), Seq("c"))
-        .join(lab, Seq("node"))
-        .withColumn("score",
-          lit(m2).cast("decimal(38,0)") * col("e_ic")
-            - col("deg").cast("decimal(38,0)")
-              * (col("dtot") - when(col("community") === col("c"), col("deg"))
-                  .otherwise(lit(0L))))
-      lab = cand.withColumn("_rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("node").orderBy(col("score").desc, col("c"))))
-        .filter(col("_rn") === 1)
-        .select(col("node"), col("c").as("community"))
-        .localCheckpoint()
-    }
-    edges.unpersist(); deg.unpersist()
-    lab
   }
 
   /** Newman modularity of a community labeling over an undirected
@@ -954,7 +866,7 @@ object Graph {
       .select(least(col(aCol), col(bCol)).as("a"), greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val lab = labels.select(col(nodeCol).as("_ln"), col(communityCol).as("_lc"))
     // Singleton fallback keys are TYPE-TAGGED ("L:" label vs "N:" node)
     // so an unlabeled node whose id happens to equal an existing
@@ -962,8 +874,7 @@ object Graph {
     // communities that ARE node ids) stays a genuine singleton instead
     // of silently merging into that community and skewing d_tot/e_in.
     // The tag is internal — the output carries counts, never keys.
-    def ckey(labC: org.apache.spark.sql.Column,
-             nodeC: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    def ckey(labC: Column, nodeC: Column): Column =
       coalesce(concat(lit("L:"), labC), concat(lit("N:"), nodeC))
     // degree sum per community: explode endpoints, count, label
     val dC = e.select(col("a").as("_nd")).unionByName(e.select(col("b").as("_nd")))
@@ -979,20 +890,17 @@ object Graph {
       .groupBy(ckey(col("_ca"), col("a")).as("_c"))
       .agg(count(lit(1)).as("e_in"))
     val m = e.count() // materializes the persisted edge list
-    // adaptive local path (triangleCounts rationale): every community
-    // aggregate is an exact integer count and the per-community term is
-    // ONE mirrored double expression quantized through Spark's own
-    // double→DECIMAL(20,9) path (BigDecimal.valueOf = Double.toString),
-    // so the local fold is bit-identical to the distributed plan
-    val gate = localEdgeGate(spark)
-    val localOk = gate > 0 && m <= gate && longCols(pairs, aCol, bCol) &&
-      labels.columns.contains(nodeCol) && labels.columns.contains(communityCol) &&
-      longCols(labels, nodeCol, communityCol)
+    // local: every community aggregate is an exact integer count and
+    // the per-community term is ONE mirrored double expression
+    // quantized through Spark's own double→DECIMAL(20,9) path
+    // (BigDecimal.valueOf = Double.toString), so the local fold is
+    // bit-identical to the distributed plan. Labels must be LONG too.
+    val labelsLong = labels.columns.contains(nodeCol) &&
+      labels.columns.contains(communityCol) && longCols(labels, nodeCol, communityCol)
     // the label collect (and the duplicate check below) happens BEFORE
     // the edge cache is released, so a fallback to the distributed
     // branch re-reads the cache, not the upstream pipeline
-    if (localOk) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val local = (if (labelsLong) localPairs(pairs, aCol, bCol, e, m) else None).flatMap { es =>
       // only graph nodes' labels are needed: the node set is already in
       // memory, so it semi-joins the label table as a broadcast local
       // relation — the collect stays inside the gate budget even when
@@ -1000,8 +908,7 @@ object Graph {
       val nodeSet = new java.util.HashSet[java.lang.Long]()
       es.foreach { case (a, b) => nodeSet.add(a); nodeSet.add(b); () }
       import spark.implicits._
-      val nodesDf = scala.jdk.CollectionConverters
-        .SetHasAsScala(nodeSet).asScala.toSeq.map(_.longValue).toDF("_n")
+      val nodesDf = nodeSet.asScala.toSeq.map(_.longValue).toDF("_n")
       // a node with MORE THAN ONE label row fans the distributed joins
       // out (degree counted once per label row) — a map cannot mirror
       // that, so duplicate labels fall back to the distributed branch
@@ -1023,61 +930,57 @@ object Graph {
             if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2)))
         }
       }
-      if (!dupLabel) {
-      e.unpersist()
-      if (es.isEmpty) // the empty agg row of the distributed plan
-        return Seq((0L, 0L, None: Option[Double]))
-          .toDF("m", "n_communities", "modularity")
-      // community key: ("L", label) when labeled, ("N", node) singleton
-      // fallback — the tuple form of the type-tagged ckey string
-      def key(n: Long): (Boolean, Long) = {
-        val c = labMap.get(n)
-        if (c != null) (true, c.longValue) else (false, n)
+      Option.when(!dupLabel) { // duplicate labels run the distributed aggs
+        e.unpersist()
+        val names = Seq("m", "n_communities", "modularity")
+        if (es.isEmpty) // the empty agg row of the distributed plan
+          localFrame(spark, Seq((0L, 0L, None: Option[Double])), names: _*)
+        else {
+          // community key: ("L", label) when labeled, ("N", node)
+          // singleton fallback — the tuple form of the type-tagged ckey
+          def key(n: Long): (Boolean, Long) = {
+            val c = labMap.get(n)
+            if (c != null) (true, c.longValue) else (false, n)
+          }
+          val degL = new java.util.HashMap[Long, Long]()
+          es.foreach { case (a, b) =>
+            degL.merge(a, 1L, _ + _); degL.merge(b, 1L, _ + _)
+          }
+          val dTot = new java.util.HashMap[(Boolean, Long), Long]()
+          degL.forEach((v, dg) => dTot.merge(key(v), dg, _ + _))
+          val eIn = new java.util.HashMap[(Boolean, Long), Long]()
+          es.foreach { case (a, b) =>
+            val ka = key(a); if (ka == key(b)) eIn.merge(ka, 1L, _ + _)
+          }
+          val dmL = m.toDouble
+          var acc = JBigDecimal.ZERO
+          dTot.forEach { (c, dt) =>
+            val ein = eIn.getOrDefault(c, 0L)
+            val half = dt.toDouble / (2.0 * dmL)
+            val term = ein.toDouble / dmL - half * half
+            acc = acc.add(JBigDecimal.valueOf(term).setScale(9, RoundingMode.HALF_UP))
+          }
+          val mod = JBigDecimal.valueOf(acc.doubleValue).setScale(6, RoundingMode.HALF_UP).doubleValue
+          localFrame(spark, Seq((m, dTot.size.toLong, Some(mod): Option[Double])), names: _*)
+        }
       }
-      val degL = new java.util.HashMap[Long, Long]()
-      es.foreach { case (a, b) =>
-        degL.merge(a, 1L, _ + _); degL.merge(b, 1L, _ + _)
-      }
-      val dTot = new java.util.HashMap[(Boolean, Long), Long]()
-      val itD = degL.entrySet().iterator()
-      while (itD.hasNext) {
-        val en = itD.next(); dTot.merge(key(en.getKey), en.getValue, _ + _)
-      }
-      val eIn = new java.util.HashMap[(Boolean, Long), Long]()
-      es.foreach { case (a, b) =>
-        val ka = key(a); if (ka == key(b)) eIn.merge(ka, 1L, _ + _)
-      }
-      import java.math.{BigDecimal => JBD, RoundingMode => RM}
-      val dmL = m.toDouble
-      var acc = JBD.ZERO
-      val itC = dTot.entrySet().iterator()
-      var nComm = 0L
-      while (itC.hasNext) {
-        val en = itC.next(); nComm += 1
-        val ein = eIn.getOrDefault(en.getKey, 0L)
-        val half = en.getValue.toDouble / (2.0 * dmL)
-        val term = ein.toDouble / dmL - half * half
-        acc = acc.add(JBD.valueOf(term).setScale(9, RM.HALF_UP))
-      }
-      val mod = JBD.valueOf(acc.doubleValue).setScale(6, RM.HALF_UP).doubleValue
-      return Seq((m, nComm, Some(mod): Option[Double]))
-        .toDF("m", "n_communities", "modularity")
-      } // !dupLabel — duplicate labels fall through to the distributed aggs
     }
-    val dm = lit(m).cast("double")
-    val term = (col("e_in").cast("double") / dm
-      - (col("d_tot").cast("double") / (lit(2.0) * dm)) * (col("d_tot").cast("double") / (lit(2.0) * dm)))
-      .cast("decimal(20,9)")
-    // single-row result checkpointed EAGERLY so the edge cache can be
-    // released before return (a lazy result would recompute e cold)
-    val out = dC.join(eC, Seq("_c"), "left")
-      .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
-      .withColumn("_term", term)
-      .agg(lit(m).as("m"), count(lit(1)).as("n_communities"),
-           round(sum(col("_term")).cast("double"), 6).as("modularity"))
-      .localCheckpoint()
-    e.unpersist()
-    out
+    local.getOrElse {
+      val dm = lit(m).cast("double")
+      val term = (col("e_in").cast("double") / dm
+        - (col("d_tot").cast("double") / (lit(2.0) * dm)) * (col("d_tot").cast("double") / (lit(2.0) * dm)))
+        .cast("decimal(20,9)")
+      // single-row result checkpointed EAGERLY so the edge cache can be
+      // released before return (a lazy result would recompute e cold)
+      val out = dC.join(eC, Seq("_c"), "left")
+        .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
+        .withColumn("_term", term)
+        .agg(lit(m).as("m"), count(lit(1)).as("n_communities"),
+             round(sum(col("_term")).cast("double"), 6).as("modularity"))
+        .localCheckpoint()
+      e.unpersist()
+      out
+    }
   }
 
   /** Jaccard-coefficient link prediction: for non-adjacent vertex
@@ -1100,82 +1003,33 @@ object Graph {
     */
   def jaccardLinkPrediction(pairs: DataFrame, aCol: String, bCol: String,
                             maxDeg: Long = 1000L): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // adaptive local path (triangleCounts rationale): common-neighbor
-    // counts are integers; jaccard is the same mirrored round-9 ratio
-    val gateJ = localEdgeGate(pairs.sparkSession)
-    if (gateJ > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gateJ) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      val degL = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => degL.merge(s, 1L, _ + _) }
-      val edgeSet = new java.util.HashSet[(Long, Long)]()
-      es.foreach { e => edgeSet.add(e); () }
-      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      es.foreach { case (w, u) =>
-        if (degL.get(w) <= maxDeg) {
-          var buf = adj.get(w)
-          if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Long]; adj.put(w, buf) }
-          buf += u
-        }
-      }
-      val cnL = new java.util.HashMap[(Long, Long), Long]()
-      val itW = adj.values().iterator()
-      while (itW.hasNext) {
-        val nbrs = itW.next()
-        var i = 0
-        while (i < nbrs.length) {
-          var j = 0
-          val u = nbrs(i)
-          while (j < nbrs.length) {
-            val v = nbrs(j)
-            if (u < v) cnL.merge((u, v), 1L, _ + _)
-            j += 1
-          }
-          i += 1
-        }
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Double)]
-      val itC = cnL.entrySet().iterator()
-      while (itC.hasNext) {
-        val e = itC.next()
-        val (u, v) = e.getKey; val c = e.getValue
-        if (!edgeSet.contains((u, v))) {
-          val un = degL.get(u) + degL.get(v) - c
-          val jac = java.math.BigDecimal.valueOf(c.toDouble / un.toDouble)
-            .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-          rows += ((u, v, c, un, jac))
-        }
-      }
-      return rows.toSeq.toDF("node_a", "node_b", "cn", "n_union", "jaccard")
+    val edges = symEdges(pairs, aCol, bCol)
+    // local: common-neighbor counts are integers; jaccard is the same
+    // mirrored round-9 ratio
+    localPairs(pairs, aCol, bCol, edges, edges.count()) match {
+      case Some(es) =>
+        edges.unpersist()
+        val deg = degrees(es)
+        localFrame(pairs.sparkSession, localCommonNeighbours(es, deg, maxDeg).map {
+          case (u, v, c, _) =>
+            val un = deg.get(u) + deg.get(v) - c
+            (u, v, c, un, round9(c.toDouble / un.toDouble))
+        }, "node_a", "node_b", "cn", "n_union", "jaccard")
+      case None =>
+        val deg = degreeFrame(edges)
+        // output-sized checkpoint then edge-cache release (modularity
+        // pattern)
+        val out = commonNeighbours(edges, deg, maxDeg)
+          .join(deg.select(col("src").as("node_a"), col("deg").as("_da")), Seq("node_a"))
+          .join(deg.select(col("src").as("node_b"), col("deg").as("_db")), Seq("node_b"))
+          .select(col("node_a"), col("node_b"), col("cn"),
+            (col("_da") + col("_db") - col("cn")).as("n_union"),
+            round(col("cn").cast("double")
+              / (col("_da") + col("_db") - col("cn")).cast("double"), 9).as("jaccard"))
+          .localCheckpoint()
+        edges.unpersist()
+        out
     }
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nbr = edges.join(deg, Seq("src"))
-      .filter(col("deg") <= maxDeg)
-      .select(col("src").as("w"), col("dst").as("u"))
-    val cand = nbr
-      .join(nbr.select(col("w"), col("u").as("v")), Seq("w"))
-      .filter(col("u") < col("v"))
-    val cn = cand.groupBy(col("u").as("node_a"), col("v").as("node_b"))
-      .agg(count(lit(1)).as("cn"))
-    // output-sized checkpoint then edge-cache release (modularity
-    // pattern — r7 left this operator's edge persist unreleased)
-    val out = cn
-      .join(edges.select(col("src").as("node_a"), col("dst").as("node_b")),
-        Seq("node_a", "node_b"), "left_anti")
-      .join(deg.select(col("src").as("node_a"), col("deg").as("_da")), Seq("node_a"))
-      .join(deg.select(col("src").as("node_b"), col("deg").as("_db")), Seq("node_b"))
-      .select(col("node_a"), col("node_b"), col("cn"),
-        (col("_da") + col("_db") - col("cn")).as("n_union"),
-        round(col("cn").cast("double")
-          / (col("_da") + col("_db") - col("cn")).cast("double"), 9).as("jaccard"))
-      .localCheckpoint()
-    edges.unpersist()
-    out
   }
 
   /** Personalized PageRank: [[pageRank]] with the teleport mass
@@ -1187,13 +1041,13 @@ object Graph {
     * importance RELATIVE to the seeds.
     *
     * Same arithmetic contract as pageRank: rational damping, per-edge
-    * contributions quantized DECIMAL(30,15) pre-sum, fixed `iters`
-    * the oracle unrolls. The rank frame stays SPARSE — only nodes
-    * with mass appear (mass reaches exactly the ≤iters-hop
-    * neighborhood of the seeds), so each round's join is sized by the
-    * reached frontier, not the graph; teleport adds base only on seed
-    * rows (left join against the broadcast seed set). Nodes never
-    * reached simply don't appear (ppr = 0 implicitly).
+    * contributions quantized pre-sum, fixed `iters` the oracle
+    * unrolls. The rank frame stays SPARSE — only nodes with mass
+    * appear (mass reaches exactly the ≤iters-hop neighborhood of the
+    * seeds), so each round's join is sized by the reached frontier,
+    * not the graph; teleport adds base only on seed rows (left join
+    * against the broadcast seed set). Nodes never reached simply don't
+    * appear (ppr = 0 implicitly).
     *
     * @param seeds one-column frame of seed node ids (deduplicated
     *              here; must be nonempty)
@@ -1203,90 +1057,24 @@ object Graph {
                            dampNum: Int = 17, dampDen: Int = 20): DataFrame = {
     require(iters >= 1 && dampNum > 0 && dampDen > dampNum,
       s"need iters >= 1 and 0 < dampNum/dampDen < 1")
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).persist()
+    val edges = symEdges(pairs, aCol, bCol)
+    val deg = degreeFrame(edges).persist()
     val seedSet = seeds.toDF("node").distinct()
       .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left_semi")
       .persist()
     val nS = seedSet.count() // scalar model artifact, the pageRank nV pattern
     require(nS > 0, "personalizedPageRank: no seed appears in the edge list")
-    val d = dampNum.toDouble / dampDen.toDouble
-    // adaptive local path (pageRank rationale); same sparse-frontier
-    // semantics: rank map holds exactly spread ∪ seed nodes per round
-    val gate = localEdgeGate(pairs.sparkSession)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val degL = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => degL.merge(s, 1L, _ + _) }
-      val seedL = new java.util.HashSet[Long]()
-      seedSet.collect().foreach(r => { seedL.add(r.getLong(0)); () })
-      edges.unpersist(); deg.unpersist(); seedSet.unpersist()
-      val baseL = (dampDen - dampNum).toDouble / (dampDen.toDouble * nS.toDouble)
-      var prL = new java.util.HashMap[Long, Double]()
-      val itS = seedL.iterator()
-      while (itS.hasNext) prL.put(itS.next(), 1.0 / nS.toDouble)
-      for (_ <- 0 until iters) {
-        val csum = new java.util.HashMap[Long, java.math.BigDecimal]()
-        es.foreach { case (s, dst) =>
-          if (prL.containsKey(s)) {
-            val c = java.math.BigDecimal.valueOf(
-              math.floor(prL.get(s) / degL.get(s).toDouble * 1e15 + 0.5))
-            csum.merge(dst, c, _.add(_))
-          }
-        }
-        val next = new java.util.HashMap[Long, Double]()
-        val itC = csum.entrySet().iterator()
-        while (itC.hasNext) {
-          val e = itC.next()
-          val b = if (seedL.contains(e.getKey)) baseL else 0.0
-          next.put(e.getKey, b + d * (e.getValue.doubleValue() / 1e15))
-        }
-        val itSd = seedL.iterator()
-        while (itSd.hasNext) {
-          val sd = itSd.next()
-          if (!next.containsKey(sd)) next.put(sd, baseL + d * 0.0)
-        }
-        prL = next
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      val itP = prL.entrySet().iterator()
-      while (itP.hasNext) { val e = itP.next(); rows += ((e.getKey, e.getValue)) }
-      return rows.toSeq.toDF("node", "pr")
-    }
-    val base = lit((dampDen - dampNum).toDouble) / (lit(dampDen.toDouble) * lit(nS.toDouble))
-    var pr = seedSet.select(col("node"), (lit(1.0) / lit(nS.toDouble)).as("pr"))
-    for (_ <- 0 until iters) {
-      // contributions quantize by INTEGER floor(x·10¹⁵ + ½), not a
-      // double→DECIMAL cast: Spark's cast routes through the shortest
-      // string representation (Decimal(double) = BigDecimal.valueOf),
-      // which can round a quantum differently than an engine reading
-      // the full binary expansion — measured 1-ulp-of-quantum drift on
-      // ~3% of nodes vs the oracle. floor on the same IEEE product is
-      // engine-exact.
-      val spread = edges
-        .join(pr.withColumnRenamed("node", "src"), Seq("src"))
-        .join(deg, Seq("src"))
-        .select(col("dst").as("node"),
-          floor(col("pr") / col("deg") * lit(1e15) + lit(0.5))
-            .cast("decimal(38,0)").as("c"))
-        .groupBy("node")
-        .agg(sum("c").as("csum"))
-      pr = spread
-        .join(seedSet.withColumn("_s", lit(1)), Seq("node"), "full")
-        .select(col("node"),
-          (when(col("_s").isNotNull, base).otherwise(lit(0.0))
-            + lit(d) * (coalesce(col("csum").cast("double"), lit(0.0)) / lit(1e15)))
-            .as("pr"))
-    }
-    // frontier-sized result checkpoint, then release all three caches
-    // (modularity pattern — r7 left edges + deg + seedSet persisted)
-    val out = pr.localCheckpoint()
-    edges.unpersist(); deg.unpersist(); seedSet.unpersist()
-    out
+    // contributions quantize by INTEGER floor(x·10¹⁵ + ½), not a
+    // double→DECIMAL cast: Spark's cast routes through the shortest
+    // string representation (Decimal(double) = BigDecimal.valueOf),
+    // which can round a quantum differently than an engine reading the
+    // full binary expansion — measured 1-ulp-of-quantum drift on ~3% of
+    // nodes vs the oracle. floor on the same IEEE product is
+    // engine-exact.
+    rank(pairs, aCol, bCol, edges, deg, Some(seedSet), nS, iters, dampNum, dampDen, Quantum(
+      floor(col("pr") / col("deg") * lit(1e15) + lit(0.5)).cast("decimal(38,0)"),
+      (pr, _, dg) => JBigDecimal.valueOf(math.floor(pr / dg.toDouble * 1e15 + 0.5)),
+      _ / lit(1e15), _.doubleValue() / 1e15))
   }
 
   /** Degree assortativity: the Pearson correlation of endpoint
@@ -1308,72 +1096,57 @@ object Graph {
     * + one scalar agg — everything edge-list-sized, no windows.
     */
   def assortativity(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // adaptive local path (triangleCounts rationale): the five moment
-    // sums are exact integers — the largest, Σ deg(src)² over directed
-    // edges, is ≤ m·(m/2)², so plain long sums equal the distributed
-    // DECIMAL(38,0) sums exactly only while m³/4 < 2⁶³, i.e. m ≤ ~3.3e6.
-    // The local path therefore clamps to 3e6 INDEPENDENTLY of the
-    // user-settable gate: a larger conf value must widen the other
-    // kernels without ever letting these longs wrap. NULL endpoints
-    // (possible from upstream outer joins) fall back to the distributed
-    // branch, whose inner degree joins define the null semantics.
-    val gateA = math.min(localEdgeGate(spark), 3000000L)
-    if (gateA > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gateA) {
-      val rows = edges.collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      val degL = new java.util.HashMap[Long, Long]()
-      es.foreach { case (s, _) => degL.merge(s, 1L, _ + _) }
-      var sx = 0L; var sy = 0L; var sxy = 0L; var sxx = 0L; var syy = 0L
-      es.foreach { case (s, d) =>
-        val dx = degL.get(s); val dy = degL.get(d)
-        sx += dx; sy += dy; sxy += dx * dy; sxx += dx * dx; syy += dy * dy
-      }
-      val mD = es.length.toDouble
-      val num = mD * sxy.toDouble - sx.toDouble * sy.toDouble
-      val denX = mD * sxx.toDouble - sx.toDouble * sx.toDouble
-      val denY = mD * syy.toDouble - sy.toDouble * sy.toDouble
-      val assort: Option[Double] =
-        if (denX > 0 && denY > 0)
-          Some(java.math.BigDecimal.valueOf(num / math.sqrt(denX * denY))
-            .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue)
-        else None
-      import spark.implicits._
-      return Seq((es.length.toLong, degL.size.toLong, assort))
-        .toDF("n_directed_edges", "n_nodes", "assortativity")
-      } // null endpoints — fall through to the distributed join semantics
+    val edges = symEdges(pairs, aCol, bCol)
+    // local: the five moment sums are exact integers — the largest,
+    // Σ deg(src)² over directed edges, is ≤ m·(m/2)², so plain long
+    // sums equal the distributed DECIMAL(38,0) sums exactly only while
+    // m³/4 < 2⁶³, i.e. m ≤ ~3.3e6. The local path therefore caps at
+    // 3e6 INDEPENDENTLY of the user-settable gate: a larger conf value
+    // must widen the other kernels without ever letting these longs
+    // wrap.
+    localPairs(pairs, aCol, bCol, edges, edges.count(), cap = 3000000L) match {
+      case Some(es) =>
+        edges.unpersist()
+        val degL = degrees(es)
+        var sx = 0L; var sy = 0L; var sxy = 0L; var sxx = 0L; var syy = 0L
+        es.foreach { case (s, d) =>
+          val dx = degL.get(s); val dy = degL.get(d)
+          sx += dx; sy += dy; sxy += dx * dy; sxx += dx * dx; syy += dy * dy
+        }
+        val mD = es.length.toDouble
+        val num = mD * sxy.toDouble - sx.toDouble * sy.toDouble
+        val denX = mD * sxx.toDouble - sx.toDouble * sx.toDouble
+        val denY = mD * syy.toDouble - sy.toDouble * sy.toDouble
+        val assort = if (denX > 0 && denY > 0) Some(round9(num / math.sqrt(denX * denY))) else None
+        localFrame(pairs.sparkSession, Seq((es.length.toLong, degL.size.toLong, assort)),
+          "n_directed_edges", "n_nodes", "assortativity")
+      case None =>
+        val deg = degreeFrame(edges)
+        val joined = edges
+          .join(deg.select(col("src"), col("deg").as("_dx")), Seq("src"))
+          .join(deg.select(col("src").as("dst"), col("deg").as("_dy")), Seq("dst"))
+        def dz(c: Column) = c.cast("decimal(19,0)")
+        val sums = joined.agg(
+          count(lit(1)).as("m"),
+          sum(dz(col("_dx")).cast("decimal(38,0)")).as("_sx"),
+          sum(dz(col("_dy")).cast("decimal(38,0)")).as("_sy"),
+          sum((dz(col("_dx")) * col("_dy")).cast("decimal(38,0)")).as("_sxy"),
+          sum((dz(col("_dx")) * col("_dx")).cast("decimal(38,0)")).as("_sxx"),
+          sum((dz(col("_dy")) * col("_dy")).cast("decimal(38,0)")).as("_syy"))
+        val nNodes = deg.count()
+        def d(c: String) = col(c).cast("double")
+        val m = d("m")
+        val num = m * d("_sxy") - d("_sx") * d("_sy")
+        val denX = m * d("_sxx") - d("_sx") * d("_sx")
+        val denY = m * d("_syy") - d("_sy") * d("_sy")
+        val out = sums.select(col("m").as("n_directed_edges"),
+            lit(nNodes).as("n_nodes"),
+            when(denX > 0 && denY > 0, round(num / sqrt(denX * denY), 9))
+              .as("assortativity"))
+          .localCheckpoint()
+        edges.unpersist()
+        out
     }
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val joined = edges
-      .join(deg.select(col("src"), col("deg").as("_dx")), Seq("src"))
-      .join(deg.select(col("src").as("dst"), col("deg").as("_dy")), Seq("dst"))
-    def dz(c: org.apache.spark.sql.Column) = c.cast("decimal(19,0)")
-    val sums = joined.agg(
-      count(lit(1)).as("m"),
-      sum(dz(col("_dx")).cast("decimal(38,0)")).as("_sx"),
-      sum(dz(col("_dy")).cast("decimal(38,0)")).as("_sy"),
-      sum((dz(col("_dx")) * col("_dy")).cast("decimal(38,0)")).as("_sxy"),
-      sum((dz(col("_dx")) * col("_dx")).cast("decimal(38,0)")).as("_sxx"),
-      sum((dz(col("_dy")) * col("_dy")).cast("decimal(38,0)")).as("_syy"))
-    val nNodes = deg.count()
-    def d(c: String) = col(c).cast("double")
-    val m = d("m")
-    val num = m * d("_sxy") - d("_sx") * d("_sy")
-    val denX = m * d("_sxx") - d("_sx") * d("_sx")
-    val denY = m * d("_syy") - d("_sy") * d("_sy")
-    val out = sums.select(col("m").as("n_directed_edges"),
-        lit(nNodes).as("n_nodes"),
-        when(denX > 0 && denY > 0, round(num / sqrt(denX * denY), 9))
-          .as("assortativity"))
-      .localCheckpoint()
-    edges.unpersist()
-    out
   }
 
   /** HITS hubs & authorities (Kleinberg '99) over a DIRECTED edge
@@ -1406,94 +1179,83 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val edges = edges0.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val hubs0 = edges.select(col("src").as("node")).distinct()
     val nH = hubs0.count()
     require(nH > 0, "hits: empty edge list — no hubs to score")
-    // adaptive local path (pageRank rationale): contributions are the
-    // long quantum floor(score·1e15 + ½), per-node sums exact, the L1
-    // normalization the same two-double division — bit-identical
-    val gateH = localEdgeGate(edges0.sparkSession)
-    if (gateH > 0 && longCols(edges0, srcCol, dstCol) && edges.count() <= gateH) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist()
-      var hubL = new java.util.HashMap[Long, Double]()
-      es.foreach { case (s, _) => hubL.put(s, 1.0 / nH.toDouble) }
-      var authL: java.util.HashMap[Long, Double] = null
-      def l1norm(sums: java.util.HashMap[Long, java.math.BigDecimal])
-          : java.util.HashMap[Long, Double] = {
-        var tot = java.math.BigDecimal.ZERO
-        val itT = sums.values().iterator()
-        while (itT.hasNext) tot = tot.add(itT.next())
-        val out = new java.util.HashMap[Long, Double]()
-        val itN = sums.entrySet().iterator()
-        while (itN.hasNext) {
-          val e = itN.next()
-          out.put(e.getKey, e.getValue.doubleValue() / tot.doubleValue())
+    // local (pageRank rationale): contributions are the long quantum
+    // floor(score·1e15 + ½), per-node sums exact, the L1 normalization
+    // the same two-double division — bit-identical
+    localPairs(edges0, srcCol, dstCol, edges, edges.count()) match {
+      case Some(es) =>
+        edges.unpersist()
+        var hubL = new java.util.HashMap[Long, Double]()
+        es.foreach { case (s, _) => hubL.put(s, 1.0 / nH.toDouble) }
+        var authL: java.util.HashMap[Long, Double] = null
+        def l1norm(sums: java.util.HashMap[Long, JBigDecimal]): java.util.HashMap[Long, Double] = {
+          var tot = JBigDecimal.ZERO
+          sums.values().forEach(v => tot = tot.add(v))
+          val out = new java.util.HashMap[Long, Double]()
+          sums.forEach((v, s) => out.put(v, s.doubleValue() / tot.doubleValue()))
+          out
         }
+        for (_ <- 0 until iters) {
+          val aSums = new java.util.HashMap[Long, JBigDecimal]()
+          es.foreach { case (s, dst) =>
+            val c = math.floor(hubL.get(s) * 1000000000000000.0 + 0.5).toLong
+            aSums.merge(dst, JBigDecimal.valueOf(c), _.add(_))
+          }
+          authL = l1norm(aSums)
+          val hSums = new java.util.HashMap[Long, JBigDecimal]()
+          es.foreach { case (s, dst) =>
+            val c = math.floor(authL.get(dst) * 1000000000000000.0 + 0.5).toLong
+            hSums.merge(s, JBigDecimal.valueOf(c), _.add(_))
+          }
+          hubL = l1norm(hSums)
+        }
+        def side(name: String, scores: java.util.HashMap[Long, Double]) =
+          scores.asScala.toSeq.map { case (v, s) => (name, v, round9(s)) }
+        localFrame(edges0.sparkSession, side("hub", hubL) ++ side("authority", authL),
+          "side", "node", "score")
+      case None =>
+        var hub = hubs0.select(col("node"), (lit(1.0) / lit(nH.toDouble)).as("score"))
+        var auth: DataFrame = null
+        val unit = lit(1000000000000000.0) // 1e15 integer quantization units
+        def l1Normalize(contrib: DataFrame): DataFrame = {
+          // contrib: (node, _c LONG = floor(score·1e15 + ½)) per edge.
+          // summed is referenced TWICE (the total + the select): without a
+          // lineage cut the plan DOUBLES per half-round — 2^(2·iters)
+          // recomputations of the whole chain (measured 18s → ~1s at
+          // sf0.1). localCheckpoint materializes the node-sized artifact
+          // once per half-round (the kCore per-round pattern).
+          val summed = contrib.groupBy("node")
+            .agg(sum(col("_c").cast("decimal(38,0)")).as("_s"))
+            .localCheckpoint()
+          val tot = summed.agg(sum("_s").as("_t"))
+          summed.crossJoin(broadcast(tot))
+            .select(col("node"),
+              (col("_s").cast("double") / col("_t").cast("double")).as("score"))
+        }
+        for (_ <- 0 until iters) {
+          auth = l1Normalize(edges
+            .join(hub.withColumnRenamed("node", "src"), Seq("src"))
+            .select(col("dst").as("node"),
+              floor(col("score") * unit + lit(0.5)).cast("long").as("_c")))
+          hub = l1Normalize(edges
+            .join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
+            .select(col("src").as("node"),
+              floor(col("score") * unit + lit(0.5)).cast("long").as("_c")))
+        }
+        val out = hub.select(lit("hub").as("side"), col("node"),
+            round(col("score"), 9).as("score"))
+          .unionByName(auth.select(lit("authority").as("side"), col("node"),
+            round(col("score"), 9).as("score")))
+        // hub/auth stem from the per-half-round checkpointed `summed`
+        // frames — no plan reference to `edges` survives, so the cache
+        // releases immediately
+        edges.unpersist()
         out
-      }
-      for (_ <- 0 until iters) {
-        val aSums = new java.util.HashMap[Long, java.math.BigDecimal]()
-        es.foreach { case (s, dst) =>
-          val c = math.floor(hubL.get(s) * 1000000000000000.0 + 0.5).toLong
-          aSums.merge(dst, java.math.BigDecimal.valueOf(c), _.add(_))
-        }
-        authL = l1norm(aSums)
-        val hSums = new java.util.HashMap[Long, java.math.BigDecimal]()
-        es.foreach { case (s, dst) =>
-          val c = math.floor(authL.get(dst) * 1000000000000000.0 + 0.5).toLong
-          hSums.merge(s, java.math.BigDecimal.valueOf(c), _.add(_))
-        }
-        hubL = l1norm(hSums)
-      }
-      def r9(x: Double): Double = java.math.BigDecimal.valueOf(x)
-        .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-      import edges0.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
-      val itH = hubL.entrySet().iterator()
-      while (itH.hasNext) { val e = itH.next(); rows += (("hub", e.getKey, r9(e.getValue))) }
-      val itA = authL.entrySet().iterator()
-      while (itA.hasNext) { val e = itA.next(); rows += (("authority", e.getKey, r9(e.getValue))) }
-      return rows.toSeq.toDF("side", "node", "score")
     }
-    var hub = hubs0.select(col("node"), (lit(1.0) / lit(nH.toDouble)).as("score"))
-    var auth: DataFrame = null
-    val unit = lit(1000000000000000.0) // 1e15 integer quantization units
-    def l1Normalize(contrib: DataFrame): DataFrame = {
-      // contrib: (node, _c LONG = floor(score·1e15 + ½)) per edge.
-      // summed is referenced TWICE (the total + the select): without a
-      // lineage cut the plan DOUBLES per half-round — 2^(2·iters)
-      // recomputations of the whole chain (measured 18s → ~1s at
-      // sf0.1). localCheckpoint materializes the node-sized artifact
-      // once per half-round (the kCore per-round pattern).
-      val summed = contrib.groupBy("node")
-        .agg(sum(col("_c").cast("decimal(38,0)")).as("_s"))
-        .localCheckpoint()
-      val tot = summed.agg(sum("_s").as("_t"))
-      summed.crossJoin(broadcast(tot))
-        .select(col("node"),
-          (col("_s").cast("double") / col("_t").cast("double")).as("score"))
-    }
-    for (_ <- 0 until iters) {
-      auth = l1Normalize(edges
-        .join(hub.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"),
-          floor(col("score") * unit + lit(0.5)).cast("long").as("_c")))
-      hub = l1Normalize(edges
-        .join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("src").as("node"),
-          floor(col("score") * unit + lit(0.5)).cast("long").as("_c")))
-    }
-    val out = hub.select(lit("hub").as("side"), col("node"),
-        round(col("score"), 9).as("score"))
-      .unionByName(auth.select(lit("authority").as("side"), col("node"),
-        round(col("score"), 9).as("score")))
-    // hub/auth stem from the per-half-round checkpointed `summed`
-    // frames — no plan reference to `edges` survives, so the cache
-    // releases immediately (r7 left it persisted)
-    edges.unpersist()
-    out
   }
 
   /** Multi-source BFS distances over an undirected edge list: per
@@ -1516,69 +1278,60 @@ object Graph {
     * shuffles are edge-list-bounded, rounds are maxDepth-bounded,
     * `localCheckpoint` cuts lineage per round (the kCore pattern).
     * Seeds are restricted to graph nodes (a seed absent from the
-    * edge list contributes nothing, mirroring the PPR rule).
+    * edge list — a NULL seed included — contributes nothing, mirroring
+    * the PPR rule).
     */
   def bfsDistances(pairs: DataFrame, aCol: String, bCol: String,
                    seeds: DataFrame, maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // adaptive local path (triangleCounts rationale): min-hop is a
-    // pure integer fixpoint, order-independent by construction
-    val gate = localEdgeGate(pairs.sparkSession)
-    if (gate > 0 && longCols(pairs, aCol, bCol) && edges.count() <= gate) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val nodeSet = new java.util.HashSet[Long]()
-      es.foreach { case (s, _) => nodeSet.add(s); () }
-      val seedRows = seeds.select(col(seeds.columns.head).cast("long")).distinct()
-        .collect().map(_.getLong(0)).filter(nodeSet.contains)
-      edges.unpersist()
-      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      es.foreach { case (s, d) =>
-        var buf = adj.get(s)
-        if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Long]; adj.put(s, buf) }
-        buf += d
-      }
-      val distL = new java.util.HashMap[Long, Int]()
-      var frontier = scala.collection.mutable.ArrayBuffer.empty[Long]
-      seedRows.foreach { s => distL.put(s, 0); frontier += s }
-      var r = 1
-      while (r <= maxDepth && frontier.nonEmpty) {
-        val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-        frontier.foreach { s =>
-          val nbrs = adj.get(s)
-          if (nbrs != null) nbrs.foreach { d =>
-            if (!distL.containsKey(d)) { distL.put(d, r); next += d }
+    val edges = symEdges(pairs, aCol, bCol)
+    // local: min-hop is a pure integer fixpoint, order-independent by
+    // construction
+    localPairs(pairs, aCol, bCol, edges, edges.count()) match {
+      case Some(es) =>
+        val nodeSet = new java.util.HashSet[Long]()
+        es.foreach { case (s, _) => nodeSet.add(s); () }
+        // a NULL seed is no graph node: the distributed left-semi join
+        // drops it, so the local seed set drops it too
+        val seedRows = seeds.select(col(seeds.columns.head).cast("long")).distinct()
+          .collect().filterNot(_.isNullAt(0)).map(_.getLong(0)).filter(nodeSet.contains)
+        edges.unpersist()
+        val adj = adjacency(es)((_, _) => true)
+        val distL = new java.util.HashMap[Long, Int]()
+        var frontier = ArrayBuffer.empty[Long]
+        seedRows.foreach { s => distL.put(s, 0); frontier += s }
+        var r = 1
+        while (r <= maxDepth && frontier.nonEmpty) {
+          val next = ArrayBuffer.empty[Long]
+          frontier.foreach { s =>
+            val nbrs = adj.get(s)
+            if (nbrs != null) nbrs.foreach { d =>
+              if (!distL.containsKey(d)) { distL.put(d, r); next += d }
+            }
           }
+          frontier = next; r += 1
         }
-        frontier = next; r += 1
-      }
-      import pairs.sparkSession.implicits._
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-      val itD = distL.entrySet().iterator()
-      while (itD.hasNext) { val e = itD.next(); rows += ((e.getKey, e.getValue)) }
-      return rows.toSeq.toDF("node", "dist")
+        localFrame(pairs.sparkSession, distL.asScala.toSeq, "node", "dist")
+      case None =>
+        val nodes = edges.select(col("src").as("node")).distinct()
+        var dist = seeds.select(col(seeds.columns.head).as("node")).distinct()
+          .join(nodes, Seq("node"), "left_semi")
+          .select(col("node"), lit(0).as("dist"))
+          .localCheckpoint()
+        var frontier = dist
+        for (r <- 1 to maxDepth) {
+          val reached = edges
+            .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+            .select(col("dst").as("node"), lit(r).as("dist"))
+          val merged = dist.unionByName(reached)
+            .groupBy("node").agg(min("dist").as("dist"))
+            .localCheckpoint()
+          frontier = merged.filter(col("dist") === r).localCheckpoint()
+          dist = merged
+        }
+        edges.unpersist()
+        dist
     }
-    val nodes = edges.select(col("src").as("node")).distinct()
-    var dist = seeds.select(col(seeds.columns.head).as("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .select(col("node"), lit(0).as("dist"))
-      .localCheckpoint()
-    var frontier = dist
-    for (r <- 1 to maxDepth) {
-      val reached = edges
-        .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), lit(r).as("dist"))
-      val merged = dist.unionByName(reached)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      frontier = merged.filter(col("dist") === r).localCheckpoint()
-      dist = merged
-    }
-    edges.unpersist()
-    dist
   }
 
   /** Hill tail-index estimate of the degree distribution: α̂ = k /
@@ -1625,6 +1378,24 @@ object Graph {
         round(lit(k.toDouble) / sum(col("_t")).cast("double"), 9).as("alpha"))
   }
 
+  /** (u, v, support) for every canonical edge of `canon` (u < v,
+    * distinct): the number of triangles it is on, via
+    * [[orientedTriangles]] — each triangle explodes to its THREE
+    * canonical edges for the support partial agg. LEFT join: an edge on
+    * ZERO triangles is absent from the support agg but must still
+    * compare against k−2 (at k = 2 it survives — truss-2 is the whole
+    * graph).
+    */
+  private def trussSupport(canon: DataFrame): DataFrame = {
+    def edge(x: String, y: String) =
+      struct(least(col(x), col(y)).as("u"), greatest(col(x), col(y)).as("v"))
+    val support = orientedTriangles(bothWays(canon, "u", "v"))
+      .select(explode(array(edge("a", "b"), edge("a", "c"), edge("b", "c"))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .groupBy("u", "v").agg(count(lit(1)).as("support"))
+    canon.join(support, Seq("u", "v"), "left").na.fill(0L, Seq("support"))
+  }
+
   /** k-truss decomposition (Cohen '08): the maximal subgraph where
     * every EDGE sits on ≥ k−2 triangles — the edge-level cohesion
     * companion to [[kCore]]'s node-level peel (a k-core can be held
@@ -1648,120 +1419,55 @@ object Graph {
              maxIter: Int = 30): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     val need = (k - 2).toLong
-    val spark = pairs.sparkSession
     var canon = pairs
       .select(least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
       .localCheckpoint()
     var n = canon.count()
-    // adaptive local path: the peel is a pure integer fixpoint whose
-    // distributed form ran 108 jobs (~30 rounds × 3-4 actions) on an
-    // 11k-edge sf0.1 graph; rounds and outputs mirror exactly
-    val gate = localEdgeGate(spark)
-    if (gate > 0 && longCols(canon, "u", "v") && n <= gate) {
-      var es = canon.collect().map(r => (r.getLong(0), r.getLong(1)))
-      def supports(ce: Array[(Long, Long)]): java.util.HashMap[(Long, Long), Long] = {
-        val sym = new Array[(Long, Long)](ce.length * 2)
-        var i = 0
-        while (i < ce.length) {
-          sym(2 * i) = ce(i); sym(2 * i + 1) = (ce(i)._2, ce(i)._1); i += 1
+    // local: the peel is a pure integer fixpoint whose distributed form
+    // ran 108 jobs (~30 rounds × 3-4 actions) on an 11k-edge sf0.1
+    // graph; rounds and outputs mirror exactly
+    localPairs(canon, "u", "v", canon, n) match {
+      case Some(es0) =>
+        def supports(ce: Array[(Long, Long)]): java.util.HashMap[(Long, Long), Long] = {
+          val sup = new java.util.HashMap[(Long, Long), Long]()
+          localTriangles(ce ++ ce.map(_.swap)) { (a, b, c) =>
+            sup.merge((math.min(a, b), math.max(a, b)), 1L, _ + _)
+            sup.merge((math.min(a, c), math.max(a, c)), 1L, _ + _)
+            sup.merge((math.min(b, c), math.max(b, c)), 1L, _ + _)
+            ()
+          }
+          sup
         }
-        val sup = new java.util.HashMap[(Long, Long), Long]()
-        localTriangles(sym) { (a, b, c) =>
-          sup.merge((math.min(a, b), math.max(a, b)), 1L, _ + _)
-          sup.merge((math.min(a, c), math.max(a, c)), 1L, _ + _)
-          sup.merge((math.min(b, c), math.max(b, c)), 1L, _ + _)
-          ()
+        var es = es0
+        var itL = 0
+        var conv = es.isEmpty
+        while (!conv && itL < maxIter) {
+          val sup = supports(es)
+          val pruned = es.filter(e => sup.getOrDefault(e, 0L) >= need)
+          conv = pruned.length == es.length
+          es = pruned; itL += 1
         }
-        sup
-      }
-      var itL = 0
-      var conv = es.isEmpty
-      while (!conv && itL < maxIter) {
-        val sup = supports(es)
-        val pruned = es.filter(e => sup.getOrDefault(e, 0L) >= need)
-        conv = pruned.length == es.length
-        es = pruned; itL += 1
-      }
-      require(conv, s"kTruss($k) did not converge within $maxIter peel rounds")
-      import spark.implicits._
-      if (es.isEmpty) return Seq.empty[(Long, Long, Long)].toDF("u", "v", "support")
-      val supF = supports(es)
-      return es.toSeq.map(e => (e._1, e._2, supF.getOrDefault(e, 0L)))
-        .toDF("u", "v", "support")
+        require(conv, s"kTruss($k) did not converge within $maxIter peel rounds")
+        val supF = supports(es)
+        localFrame(pairs.sparkSession, es.toSeq.map(e => (e._1, e._2, supF.getOrDefault(e, 0L))),
+          "u", "v", "support")
+      case None =>
+        var it = 0
+        var converged = n == 0
+        while (!converged && it < maxIter) {
+          val pruned = trussSupport(canon)
+            .filter(col("support") >= need).select("u", "v")
+            .localCheckpoint()
+          val n2 = pruned.count()
+          converged = n2 == n
+          canon = pruned; n = n2; it += 1
+        }
+        require(converged, s"kTruss($k) did not converge within $maxIter peel rounds")
+        if (n == 0) canon.withColumn("support", lit(0L)).limit(0)
+        // final support over the converged subgraph (one more count pass)
+        else trussSupport(canon)
     }
-    var it = 0
-    var converged = n == 0
-    while (!converged && it < maxIter) {
-      val edges = canon.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(canon.select(col("v").as("src"), col("u").as("dst")))
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      val oriented = edges
-        .join(deg.withColumnRenamed("src", "s_").withColumnRenamed("deg", "ds"),
-          col("src") === col("s_")).drop("s_")
-        .join(deg.withColumnRenamed("src", "d_").withColumnRenamed("deg", "dd"),
-          col("dst") === col("d_")).drop("d_")
-        .filter(col("ds") < col("dd") ||
-          (col("ds") === col("dd") && col("src") < col("dst")))
-        .select(col("src"), col("dst"), col("dd").as("dg"))
-      val wedges = oriented
-        .select(col("src").as("a"), col("dst").as("b"), col("dg").as("bg"))
-        .join(oriented.select(col("src").as("a"), col("dst").as("c"),
-          col("dg").as("cg")), Seq("a"))
-        .filter(col("bg") < col("cg") ||
-          (col("bg") === col("cg") && col("b") < col("c")))
-        .select("a", "b", "c")
-      val tris = wedges.join(
-        oriented.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c"))
-      val support = tris.select(explode(array(
-          struct(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v")),
-          struct(least(col("a"), col("c")).as("u"), greatest(col("a"), col("c")).as("v")),
-          struct(least(col("b"), col("c")).as("u"), greatest(col("b"), col("c")).as("v"))))
-          .as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .groupBy("u", "v").agg(count(lit(1)).as("support"))
-      // LEFT join: an edge on ZERO triangles is absent from the
-      // support agg but must still compare against k−2 (at k = 2 it
-      // survives — truss-2 is the whole graph)
-      val pruned = canon.join(support, Seq("u", "v"), "left")
-        .na.fill(0L, Seq("support"))
-        .filter(col("support") >= need).select("u", "v")
-        .localCheckpoint()
-      val n2 = pruned.count()
-      converged = n2 == n
-      canon = pruned; n = n2; it += 1
-    }
-    require(converged, s"kTruss($k) did not converge within $maxIter peel rounds")
-    if (n == 0) return canon.withColumn("support", lit(0L)).limit(0)
-    // final support over the converged subgraph (one more count pass)
-    val edges = canon.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(canon.select(col("v").as("src"), col("u").as("dst")))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val oriented = edges
-      .join(deg.withColumnRenamed("src", "s_").withColumnRenamed("deg", "ds"),
-        col("src") === col("s_")).drop("s_")
-      .join(deg.withColumnRenamed("src", "d_").withColumnRenamed("deg", "dd"),
-        col("dst") === col("d_")).drop("d_")
-      .filter(col("ds") < col("dd") ||
-        (col("ds") === col("dd") && col("src") < col("dst")))
-      .select(col("src"), col("dst"), col("dd").as("dg"))
-    val wedges = oriented
-      .select(col("src").as("a"), col("dst").as("b"), col("dg").as("bg"))
-      .join(oriented.select(col("src").as("a"), col("dst").as("c"),
-        col("dg").as("cg")), Seq("a"))
-      .filter(col("bg") < col("cg") ||
-        (col("bg") === col("cg") && col("b") < col("c")))
-      .select("a", "b", "c")
-    val tris = wedges.join(
-      oriented.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c"))
-    canon.join(tris.select(explode(array(
-        struct(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v")),
-        struct(least(col("a"), col("c")).as("u"), greatest(col("a"), col("c")).as("v")),
-        struct(least(col("b"), col("c")).as("u"), greatest(col("b"), col("c")).as("v"))))
-        .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("support")), Seq("u", "v"), "left")
-      .na.fill(0L, Seq("support"))
   }
 }

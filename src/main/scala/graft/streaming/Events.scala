@@ -102,6 +102,13 @@ object Events {
     normTs(reader.parquet(streamDir))
   }
 
+  /** State-store partitions of the memory-sink harness. 8 measured best
+    * (interleaved min-of-3 at sf0.1 on 32 cores: 3.4 s at 8, 5.6 s at
+    * 16, 9.8 s at 32 — per-partition state-store commit files dominate
+    * tiny-state batches).
+    */
+  private val StatePartitions = 8
+
   /** Drive an unstarted streaming frame through all available input via
     * a named memory sink and hand back the materialized table. This is
     * the TEST/ORACLE harness — results land on the driver by design so
@@ -134,8 +141,7 @@ object Events {
       Some(java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")) else None
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("graft.stream.statePartitions", "8"))
+    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     // OUTER stream joins are the exception to the no-data-batch cut:
     // an unmatched row's null-padded result is emitted by the WATERMARK
     // ADVANCE, which only a trailing no-data batch performs

@@ -181,6 +181,47 @@ class Round10OptSpec extends SparkSpec {
     }
   }
 
+  test("every gated kernel answers NULL-endpoint pairs identically at both gates") {
+    // NULL endpoints (an upstream outer join) are defined by the
+    // distributed joins; the local mirror cannot key a NULL, so the
+    // switch falls back instead of failing on the collected rows
+    val pairs = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L), (2L, 4L),
+      (null, 4L), (2L, null), (null, null))
+      .toDF("a", "b").withColumn("w", (coalesce(col("a"), lit(7L)) % 3 + 1) / lit(4.0))
+    val seeds = Seq(1L, 4L).toDF("n")
+    val labels = (1L to 5L).map(n => (n, n % 2)).toDF("node", "community")
+    val kernels: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(pairs, "a", "b")),
+      "pageRankWeighted" -> (() => Graph.pageRankWeighted(pairs, "a", "b", "w")),
+      "personalizedPageRank" -> (() => Graph.personalizedPageRank(pairs, "a", "b", seeds)),
+      "personalizedPageRankWeighted" ->
+        (() => Graph.personalizedPageRankWeighted(pairs, "a", "b", "w", seeds)),
+      "kCore" -> (() => Graph.kCore(pairs, "a", "b", 2)),
+      "triangleCounts" -> (() => Graph.triangleCounts(pairs, "a", "b")),
+      "clusteringCoefficient" -> (() => Graph.clusteringCoefficient(pairs, "a", "b")),
+      "raLinkPrediction" -> (() => Graph.raLinkPrediction(pairs, "a", "b")),
+      "labelPropagation" -> (() => Graph.labelPropagation(pairs, "a", "b")),
+      "louvainMove" -> (() => Graph.louvainMove(pairs, "a", "b")),
+      "modularity" -> (() => Graph.modularity(pairs, "a", "b", labels)),
+      "jaccardLinkPrediction" -> (() => Graph.jaccardLinkPrediction(pairs, "a", "b")),
+      "assortativity" -> (() => Graph.assortativity(pairs, "a", "b")),
+      "hits" -> (() => Graph.hits(pairs, "a", "b")),
+      "bfsDistances" -> (() => Graph.bfsDistances(pairs, "a", "b", seeds)),
+      "kTruss" -> (() => Graph.kTruss(pairs, "a", "b", 3)))
+    for ((name, op) <- kernels) withClue(s"$name: ") {
+      val (l, d) = bothPaths(op())
+      l shouldBe d
+    }
+    // a NULL seed id over NULL-free pairs: the local path runs and drops
+    // the seed, as the distributed left-semi join does
+    val clean = pairs.na.drop(Seq("a", "b"))
+    val nullSeed = Seq[java.lang.Long](1L, null).toDF("n")
+    val (l, d) = bothPaths(Graph.bfsDistances(clean, "a", "b", nullSeed))
+    l shouldBe d
+    l should not be empty
+  }
+
   test("commitSlices equals N sequential coalesce(1) commits (versions, rows, stats, files)") {
     import graft.sources.TxTable
     val df = (1L to 400L).map(i => (i, i * 1.5)).toDF("k", "v")

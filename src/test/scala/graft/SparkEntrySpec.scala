@@ -125,6 +125,19 @@ class SparkEntrySpec extends SparkSpec {
     Bench.parseBenchQueries(line) shouldBe Map("q1_a" -> 1.25, "q2_b" -> 2.25)
   }
 
+  test("every graph query answers the same rows with the local edge gate at its default and at 0") {
+    // the local graph mirrors are what the oracle hashes at this scale;
+    // gate 0 forces every distributed plan over the same pipeline inputs
+    for (q <- queries.GraphQueries.all) withClue(s"${q.name}: ") {
+      spark.conf.unset("graft.graph.localEdgeGate")
+      val local = canon(q.build(spark, sfDir))
+      spark.conf.set("graft.graph.localEdgeGate", "0")
+      val dist = try canon(q.build(spark, sfDir))
+      finally spark.conf.unset("graft.graph.localEdgeGate")
+      dist shouldBe local
+    }
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs and returns rows at sf0.001") {
       fn(spark, sfDir).count() should be > 0L
