@@ -235,9 +235,10 @@ object Sketches {
     * (order/split-invariant, bit-exact), and any quantile's estimate
     * is within relative error 2^-subBits of the true quantized value.
     *
-    * All bit arithmetic is the HLL oracle's `length(bin(abs(q)))`
-    * trick plus an exact power-of-two division — both engines compute
-    * identical bins, so state AND estimates hash-verify.
+    * All bit arithmetic ([[dyadicBin]]) is the HLL oracle's
+    * `length(bin(abs(q)))` trick plus an exact power-of-two truncation
+    * — both engines compute identical bins, so state AND estimates
+    * hash-verify.
     *
     * Scale shape: ONE map-side-combining partial agg to the bin table;
     * [[mergeQuantileStates]] is union + one partial agg;
@@ -247,16 +248,7 @@ object Sketches {
   def quantileState(df: DataFrame, keys: Seq[String], valueCol: String,
                     unitScale: Long = 1000000L, subBits: Int = 5): DataFrame = {
     require(subBits >= 1 && subBits <= 20, s"subBits out of range: $subBits")
-    val q = floor(col(valueCol).cast("double") * unitScale + lit(0.5)).cast("long")
-    df.select(keys.map(col) :+ q.as("_q"): _*)
-      .withColumn("_a", abs(col("_q")))
-      // shift = max(0, bitLength - 1 - subBits); bin() of 0 is "0"
-      // (length 1) so zero needs no special case
-      .withColumn("_s", greatest(lit(0), length(bin(col("_a"))) - lit(1 + subBits)))
-      .withColumn("_p", expr("cast(pow(2, _s) as long)")) // 2^s exact in double
-      // integer div, NOT `/` (long / long is double division in Spark)
-      .withColumn("bin",
-        (when(col("_q") < 0, -1L).otherwise(1L)) * expr("(_a div _p) * _p"))
+    df.select(keys.map(col) :+ dyadicBin(col(valueCol), unitScale, subBits).as("bin"): _*)
       .groupBy(keys.map(col) :+ col("bin"): _*)
       .agg(count(lit(1)).as("cnt"))
   }
@@ -361,20 +353,22 @@ object Sketches {
     * probe (state-sized, never rows).
     * Output: (keys…, probe, n_le, n, cdf).
     */
-  /** The dyadic-bin map as a pure Column expression — the exact
-    * arithmetic [[quantileState]] applies, usable anywhere a plain
-    * column works (probe literals in [[cdfOf]], the windowed streaming
-    * build): quantize to `unitScale` units, truncate to the top
-    * `subBits+1` significant bits via the HLL `length(bin(abs(q)))`
-    * trick + one exact power-of-two division.
+  /** The dyadic-bin map as a pure Column expression — the one bin
+    * formula, used by [[quantileState]] and anywhere a plain column
+    * works (probe literals in [[cdfOf]]): quantize to `unitScale`
+    * units, truncate |q| to its top `subBits+1` significant bits via
+    * the HLL `length(bin(abs(q)))` trick, keep the sign.
     */
   private[graft] def dyadicBin(v: Column, unitScale: Long, subBits: Int): Column = {
     val q = floor(v.cast("double") * unitScale + lit(0.5)).cast("long")
     val a = abs(q)
+    // shift = max(0, bitLength - 1 - subBits); bin() of 0 is "0"
+    // (length 1) so zero needs no special case
     val s = greatest(lit(0), length(bin(a)) - lit(1 + subBits))
     val p2 = pow(lit(2.0), s).cast("long") // 2^s exact in double
-    (when(q < 0, -1L).otherwise(1L)) *
-      (((a - pmod(a, p2)) / p2).cast("long") * p2) // a div p2, exact multiple
+    // (a div p2) * p2 in long arithmetic: no `/` (long / long is a
+    // double division in Spark)
+    (when(q < 0, -1L).otherwise(1L)) * (a - pmod(a, p2))
   }
 
   def cdfOf(state: DataFrame, keys: Seq[String], probes: Seq[Double],

@@ -1328,6 +1328,10 @@ object TxQueries {
       // MD5/shingle work, this query's dominant cost). Row sets are
       // identical by the per-doc property; the checkpoint is index-
       // sized (docs × bands), the q348 localCheckpoint pattern.
+      // The rebuild section therefore checks the TxTable commit/merge/
+      // read path, not the signing: rebuild independence is guarded by
+      // the OperatorsSpec test "minhashBandIndex commutes with a doc
+      // filter", which pins the per-doc property this sharing rests on.
       val sig = operators.Dedup.minhashBandIndex(docs).withColumn("key", key)
         .select("key", "doc_id", "band", "bandval")
         .localCheckpoint()

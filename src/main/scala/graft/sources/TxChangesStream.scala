@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
+import graft.streaming.Drain
+
 /** Streaming CDC SOURCE over a [[TxTable]] — the inverse of the
   * exactly-once sink (`Events.streamIntoTx`), closing the incremental
   * loop stream → table → stream. This is the Delta streaming-source
@@ -72,8 +74,8 @@ private[graft] class TxChangesSource(spark: SparkSession, table: String,
     * backfill of K committed versions drains in ⌈K/mx⌉ rate-limited
     * batches and then goes idle (commits landing DURING the run wait
     * for the next run); a restart on the same checkpoint consumes only
-    * later commits. The stop itself is the caller's (`processAllAvailable`
-    * returns once the source stops offering — see [[TxChangesStream.runAvailableNow]]).
+    * later commits. The stop itself is the caller's (the drain returns
+    * once the source stops offering — see [[TxChangesStream.runAvailableNow]]).
     */
   private val endCap: Int =
     if (availableNow) TxTable.currentVersion(spark, table) else Int.MaxValue
@@ -230,17 +232,13 @@ object TxChangesStream {
                       startingVersion: Int = 0,
                       maxVersionsPerTrigger: Option[Int] = None): Long = {
     val n = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = readChangesStream(spark, table, startingVersion,
-        maxVersionsPerTrigger, availableNow = true)
-      .writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        n.incrementAndGet(); onBatch(batch, batchId)
-      }
-      .start()
-    // the pinned end cap makes processAllAvailable a DRAIN: once the
-    // source stops offering (offered == cap), the engine is idle and
-    // this returns — then the query stops, the AvailableNow contract
-    try q.processAllAvailable() finally q.stop()
+    // the pinned end cap makes the drain finite: once the source stops
+    // offering (offered == cap), the engine is idle and the drain
+    // returns — then the query stops, the AvailableNow contract
+    Drain.foreachBatch(readChangesStream(spark, table, startingVersion,
+        maxVersionsPerTrigger, availableNow = true), Some(checkpoint)) { (batch, batchId) =>
+      n.incrementAndGet(); onBatch(batch, batchId)
+    }
     n.get()
   }
 
@@ -262,19 +260,14 @@ object TxChangesStream {
              checkpoint: String, startingVersion: Int = 0,
              maxVersionsPerTrigger: Option[Int] = None): Long = {
     val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = readChangesStream(spark, srcTable, startingVersion, maxVersionsPerTrigger)
-      .writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = transform(batch.filter(org.apache.spark.sql.functions
-          .col("_change") === "insert"))
-        if (!out.isEmpty) {
-          val (_, didApply) = TxTable.commitIdempotent(out, dstTable, appId, batchId)
-          if (didApply) { applied.incrementAndGet(); () }
-        }
-        ()
+    Drain.foreachBatch(readChangesStream(spark, srcTable, startingVersion,
+        maxVersionsPerTrigger), Some(checkpoint)) { (batch, batchId) =>
+      val out = transform(batch.filter(col("_change") === "insert"))
+      if (!out.isEmpty) {
+        val (_, didApply) = TxTable.commitIdempotent(out, dstTable, appId, batchId)
+        if (didApply) { applied.incrementAndGet(); () }
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     applied.get()
   }
 
@@ -324,91 +317,74 @@ object TxChangesStream {
                    maxVersionsPerTrigger: Option[Int] = None,
                    bloomCols: Seq[String] = Nil): Long = {
     val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = readChangesStream(spark, srcTable, startingVersion, maxVersionsPerTrigger)
-      .writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ONE census action replaces the old per-version isEmpty
-        // probes: (version, hasDeletes, hasInserts), version-ordered
-        val info = batch.groupBy(col("_version"))
-          .agg(sum(when(col("_change") === "delete", 1L).otherwise(0L)).as("nd"),
-               sum(when(col("_change") === "insert", 1L).otherwise(0L)).as("ni"))
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1) > 0L, r.getLong(2) > 0L))
-          .sortBy(_._1)
-        var run = List.empty[Int] // pending delete-free versions (reversed)
-        def flushRun(): Unit = if (run.nonEmpty) {
-          val vs = run.reverse
-          val ins = batch
-            .filter(col("_version").isin(vs: _*) && col("_change") === "insert")
-            .drop("_change", "_version", "_commit_ms")
-          // bloomCols (typically the mirror key) keeps the index that
-          // accelerates this pipeline's OWN delete batches maintained
-          val (_, didIns) = TxTable.commitIdempotent(ins, dstTable,
-            mirrorMarker(appId, vs.last, del = false), batchId,
-            bloomCols = bloomCols)
-          if (didIns) { applied.addAndGet(vs.size.toLong); () }
-          run = Nil
-        }
-        info.foreach { case (sv, hasDel, hasIns) =>
-          if (!hasDel) run = sv :: run
-          else {
-            flushRun() // strict ordering across any delete
-            var did = false
-            if (TxTable.currentVersion(spark, dstTable) >= 1 &&
-                TxTable.txnVersionOf(spark, dstTable,
-                  mirrorMarker(appId, sv, del = true), batchId).isEmpty) {
-              val dels = batch.filter(col("_version") === sv &&
-                col("_change") === "delete").select(col(keyCol))
-              TxTable.deleteKeysMor(spark, dstTable, keyCol, dels,
-                txn = Some((mirrorMarker(appId, sv, del = true), batchId)))
-              did = true
-            }
-            if (hasIns) {
-              val ins = batch.filter(col("_version") === sv &&
-                col("_change") === "insert")
-                .drop("_change", "_version", "_commit_ms")
-              val (_, didIns) = TxTable.commitIdempotent(ins, dstTable,
-                mirrorMarker(appId, sv, del = false), batchId,
-                bloomCols = bloomCols)
-              did = did || didIns
-            }
-            if (did) { applied.incrementAndGet(); () }
-          }
-        }
-        flushRun()
-        ()
+    Drain.foreachBatch(readChangesStream(spark, srcTable, startingVersion,
+        maxVersionsPerTrigger), Some(checkpoint)) { (batch, batchId) =>
+      // ONE census action replaces the old per-version isEmpty
+      // probes: (version, hasDeletes, hasInserts), version-ordered
+      val info = batch.groupBy(col("_version"))
+        .agg(sum(when(col("_change") === "delete", 1L).otherwise(0L)).as("nd"),
+             sum(when(col("_change") === "insert", 1L).otherwise(0L)).as("ni"))
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1) > 0L, r.getLong(2) > 0L))
+        .sortBy(_._1)
+      var run = List.empty[Int] // pending delete-free versions (reversed)
+      def flushRun(): Unit = if (run.nonEmpty) {
+        val vs = run.reverse
+        val ins = batch
+          .filter(col("_version").isin(vs: _*) && col("_change") === "insert")
+          .drop("_change", "_version", "_commit_ms")
+        // bloomCols (typically the mirror key) keeps the index that
+        // accelerates this pipeline's OWN delete batches maintained
+        val (_, didIns) = TxTable.commitIdempotent(ins, dstTable,
+          mirrorMarker(appId, vs.last, del = false), batchId,
+          bloomCols = bloomCols)
+        if (didIns) { applied.addAndGet(vs.size.toLong); () }
+        run = Nil
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      info.foreach { case (sv, hasDel, hasIns) =>
+        if (!hasDel) run = sv :: run
+        else {
+          flushRun() // strict ordering across any delete
+          var did = false
+          if (TxTable.currentVersion(spark, dstTable) >= 1 &&
+              TxTable.txnVersionOf(spark, dstTable,
+                mirrorMarker(appId, sv, del = true), batchId).isEmpty) {
+            val dels = batch.filter(col("_version") === sv &&
+              col("_change") === "delete").select(col(keyCol))
+            TxTable.deleteKeysMor(spark, dstTable, keyCol, dels,
+              txn = Some((mirrorMarker(appId, sv, del = true), batchId)))
+            did = true
+          }
+          if (hasIns) {
+            val ins = batch.filter(col("_version") === sv &&
+              col("_change") === "insert")
+              .drop("_change", "_version", "_commit_ms")
+            val (_, didIns) = TxTable.commitIdempotent(ins, dstTable,
+              mirrorMarker(appId, sv, del = false), batchId,
+              bloomCols = bloomCols)
+            did = did || didIns
+          }
+          if (did) { applied.incrementAndGet(); () }
+        }
+      }
+      flushRun()
+    }
     applied.get()
   }
 
-  /** Synchronous replay harness (the Events.runToMemory shape): drive
-    * the change stream through all currently-committed versions into a
-    * memory sink and return the materialized frame. Test/oracle-side
-    * by design — production attaches `readChangesStream` to a real
-    * sink with a durable checkpoint.
+  /** Synchronous replay harness: drive the change stream through all
+    * currently-committed versions into a memory sink
+    * ([[Drain.toMemory]], the memory-sink path `Events.runToMemory`
+    * takes, without its harness session settings) and return the
+    * materialized frame. `checkpoint`, when given, is the caller's
+    * durable state and survives the run; without one a throwaway
+    * checkpoint is made and deleted. Test/oracle-side by design —
+    * production attaches `readChangesStream` to a real sink with a
+    * durable checkpoint.
     */
   def replayAll(spark: SparkSession, table: String,
                 startingVersion: Int = 0,
-                checkpoint: Option[String] = None): DataFrame = {
-    val name = "graft_txcdc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = checkpoint.getOrElse((if (java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")
-    else java.nio.file.Files.createTempDirectory("graft_ckpt_")).toString)
-    val q = readChangesStream(spark, table, startingVersion)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ckpt)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // a caller-provided checkpoint is durable state; the throwaway
-    // temp one cleans up here (the Events.runToMemory rule)
-    if (checkpoint.isEmpty) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt)).iterator().asScala
-        .toSeq.reverse.foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-    spark.table(name)
-  }
+                checkpoint: Option[String] = None): DataFrame =
+    Drain.toMemory(readChangesStream(spark, table, startingVersion), "append",
+      "graft_txcdc_", checkpoint)
 }

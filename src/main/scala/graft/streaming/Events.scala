@@ -1,19 +1,20 @@
 package graft.streaming
 
-import java.util.UUID
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming over the `events` table (SURVEY.md §2 #27-28).
   *
   * The reference has no streaming surface; these are the scale
-  * additions. Each operator is split into an unstarted PLAN builder
-  * (what production code composes and attaches to a real sink) and a
-  * memory-sink RUNNER (the synchronous test/oracle harness). Production
-  * runs `runToFiles` — append mode, watermark-bounded state, checkpoint
-  * — on the same plans.
+  * additions. Each RUNNER builds its plan and hands the unstarted query
+  * to [[Drain]], the one place a synchronous run starts, checkpoints,
+  * drains and cleans up: aggregation, join and dedup plans drain into a
+  * memory sink ([[runToMemory]], the test/oracle harness), the
+  * foreachBatch folds and the exactly-once TxTable sink drain their own
+  * writer. Production attaches the same plans to a durable sink:
+  * [[runToFiles]] — append mode, watermark-bounded state, the caller's
+  * checkpoint and query lifecycle.
   *
   * events.parquet has shipped two physical `ts` encodings across data
   * generations: ns-precision int96-style timestamps Spark's reader
@@ -109,15 +110,14 @@ object Events {
     */
   private val StatePartitions = 8
 
-  /** Drive an unstarted streaming frame through all available input via
-    * a named memory sink and hand back the materialized table. This is
+  /** Drain an unstarted streaming frame into a memory sink
+    * ([[Drain.toMemory]]) and hand back the materialized table. This is
     * the TEST/ORACLE harness — results land on the driver by design so
     * the batch-SQL compare can hash them. Production attaches the same
     * plan to a real sink via [[runToFiles]].
     */
   private def runToMemory(agg: DataFrame, mode: String, prefix: String,
                           noDataBatches: Boolean = false): DataFrame = {
-    val name = prefix + UUID.randomUUID().toString.replace("-", "")
     val spark = agg.sparkSession
     // Stateful operators keep one state store (and its per-batch commit
     // files) PER shuffle partition, so partition count should track
@@ -126,19 +126,11 @@ object Events {
     // multi-second commit overhead otherwise). Production (runToFiles)
     // keeps the session setting: at real scale state is what's big.
     //
-    // Two more harness-only floor cuts (results verified identical):
-    //  - checkpoint on tmpfs when available: every micro-batch fsyncs
-    //    offset/commit logs + one state-store delta per partition; the
-    //    throwaway oracle harness shouldn't pay disk latency for them.
-    //    Production (runToFiles) takes the caller's durable location.
-    //  - no trailing no-data micro-batches: every plan here emits its
-    //    rows in the batch that carries them (complete/update modes,
-    //    in-watermark dedup, inner join on match); the extra empty
-    //    batch only advances state cleanup, which stops mattering the
-    //    moment the harness query stops.
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = if (java.nio.file.Files.isWritable(shm))
-      Some(java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")) else None
+    // No trailing no-data micro-batches either (results verified
+    // identical): every plan here emits its rows in the batch that
+    // carries them (complete/update modes, in-watermark dedup, inner
+    // join on match); the extra empty batch only advances state
+    // cleanup, which stops mattering the moment the harness query stops.
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
@@ -147,23 +139,40 @@ object Events {
     // ADVANCE, which only a trailing no-data batch performs
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
       noDataBatches.toString)
-    try {
-      val w0 = agg.writeStream.outputMode(mode).format("memory").queryName(name)
-      val w = ckpt.fold(w0)(p => w0.option("checkpointLocation", p.toString))
-      val q = w.start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
+    try Drain.toMemory(agg, mode, prefix)
+    finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      ckpt.foreach { p =>
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      }
     }
-    spark.table(name)
   }
+
+  /** The event stream, watermarked on `ts` when a lateness bound is given. */
+  private def eventStream(spark: SparkSession, eventsPath: String,
+                          watermark: Option[String],
+                          maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val stream = readStream(spark, eventsPath, maxFilesPerTrigger)
+    watermark.fold(stream)(w => stream.withWatermark("ts", w))
+  }
+
+  /** The window struct column `win` replaced, in place, by its start. */
+  private def winStart(df: DataFrame, startAs: String = "hour_start"): DataFrame =
+    df.select(df.columns.toIndexedSeq.map(c =>
+      if (c == "win") col("win.start").as(startAs) else col(c)): _*)
+
+  /** The windowed-runner shape: `plan` (grouped by a window column
+    * named `win`) over the event stream, drained to a memory sink and
+    * unwrapped to the window start. With a watermark it runs APPEND
+    * mode — sealed windows emit once, final, and state stays bounded by
+    * the open windows within the lateness horizon, never by key
+    * cardinality; without one (the test/oracle path) COMPLETE mode, so
+    * every window lands in the batch-SQL compare (the q20 convention).
+    */
+  private def runWindowed(spark: SparkSession, eventsPath: String,
+                          watermark: Option[String], maxFilesPerTrigger: Option[Int],
+                          prefix: String, startAs: String = "hour_start")(
+                           plan: DataFrame => DataFrame): DataFrame =
+    winStart(runToMemory(plan(eventStream(spark, eventsPath, watermark, maxFilesPerTrigger)),
+      if (watermark.isEmpty) "complete" else "append", prefix), startAs)
 
   /** #27c streaming count-min sketch build (SURVEY §2 #60): the CMS
     * cell aggregation run in complete mode over the event stream —
@@ -250,38 +259,20 @@ object Events {
     * "distinct users per hour, forever, in constant memory per
     * window" report (q126's global sketch can never tell you WHEN).
     * Because the register value is a plain `max`, this is an ordinary
-    * windowed aggregation: with a watermark it runs APPEND mode —
-    * sealed windows emit finalized register tables and state stays
-    * bounded by (open windows within the lateness horizon) × 2^p,
-    * never by key cardinality; without one (test/oracle path) it runs
-    * complete mode so every window lands in the batch-SQL compare
-    * (the q20 harness convention). Emitted registers max-merge across
-    * shards/restarts like any HLL table.
+    * windowed aggregation ([[runWindowed]]: append with a watermark,
+    * state bounded by open windows × 2^p; complete without one), the
+    * batch [[graft.functions.Sketches.hllRegistersBy]] grouped by the
+    * window. Emitted registers max-merge across shards/restarts like
+    * any HLL table. Output: (hour_start, bucket, r).
     */
-  def streamHllHourlyStream(spark: SparkSession, eventsPath: String, p: Int = 10,
-                            watermark: Option[String] = None,
-                            maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val stream0 = readStream(spark, eventsPath, maxFilesPerTrigger)
-    val stream = watermark.fold(stream0)(w => stream0.withWatermark("ts", w))
-    val k = col("user_id").cast("string")
-    val w32 = graft.functions.Hashing.md5Long32b(k)
-    stream
-      .select(window(col("ts"), "1 hour").as("win"),
-        shiftrightunsigned(graft.functions.Hashing.md5Long32(k), 32 - p).as("bucket"),
-        when(w32 === 0L, lit(33)).otherwise(lit(33) - length(bin(w32))).as("rho"))
-      .groupBy(col("win"), col("bucket")).agg(max("rho").as("r"))
-  }
-
-  /** #61e test harness: [[streamHllHourlyStream]] to a memory sink. */
   def streamHllHourly(spark: SparkSession, eventsPath: String, p: Int = 10,
                       watermark: Option[String] = None,
-                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val mode = if (watermark.isEmpty) "complete" else "append"
-    runToMemory(
-      streamHllHourlyStream(spark, eventsPath, p, watermark, maxFilesPerTrigger),
-      mode, "graft_hllw_")
-      .select(col("win.start").as("hour_start"), col("bucket"), col("r"))
-  }
+                      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runWindowed(spark, eventsPath, watermark, maxFilesPerTrigger, "graft_hllw_") { s =>
+      graft.functions.Sketches.hllRegistersBy(
+        s.select(window(col("ts"), "1 hour").as("win"), col("user_id")),
+        Seq("win"), "user_id", p)
+    }
 
   /** Per-WINDOW count-min sketches over the stream (SURVEY §2 #60h):
     * one ≤depth·width cell table per event-time hour — "who was hot
@@ -289,81 +280,45 @@ object Events {
     * member of the per-window sealed-emission family beside the HLL
     * (#61e), quantile (#60g), and KMV (#61h) members. CMS cells are
     * commutative counts, so like the HLL this is an ORDINARY windowed
-    * aggregation: with a watermark it runs append mode (sealed hours
-    * emit finalized sketches, state bounded by open-windows ×
-    * depth·width cells — never by key cardinality); without one
-    * (test/oracle path) complete mode. Per-hour sketches sum-merge
-    * across shards/restarts like any CMS.
+    * aggregation ([[runWindowed]]: sealed hours emit finalized sketches,
+    * state bounded by open-windows × depth·width cells — never by key
+    * cardinality). Per-hour sketches sum-merge across shards/restarts
+    * like any CMS. Output: (hour_start, j, cell, cnt).
     */
-  def streamCmsHourlyStream(spark: SparkSession, eventsPath: String,
-                            depth: Int = 4, width: Int = 1024,
-                            watermark: Option[String] = None,
-                            maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val stream0 = readStream(spark, eventsPath, maxFilesPerTrigger)
-    val stream = watermark.fold(stream0)(w => stream0.withWatermark("ts", w))
-    stream
-      .select(window(col("ts"), "1 hour").as("win"),
-        col("user_id").cast("string").as("k"))
-      .select(col("win"), posexplode(array((0 until depth).map(j =>
-        graft.functions.Sketches.cmsCell(col("k"), j, width)): _*)).as(Seq("j", "cell")))
-      .groupBy(col("win"), col("j"), col("cell")).agg(count(lit(1)).as("cnt"))
-  }
-
-  /** #60h test harness: [[streamCmsHourlyStream]] to a memory sink. */
   def streamCmsHourly(spark: SparkSession, eventsPath: String,
                       depth: Int = 4, width: Int = 1024,
                       watermark: Option[String] = None,
-                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val mode = if (watermark.isEmpty) "complete" else "append"
-    runToMemory(
-      streamCmsHourlyStream(spark, eventsPath, depth, width, watermark, maxFilesPerTrigger),
-      mode, "graft_cmsw_")
-      .select(col("win.start").as("hour_start"), col("j"), col("cell"), col("cnt"))
-  }
+                      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runWindowed(spark, eventsPath, watermark, maxFilesPerTrigger, "graft_cmsw_") { s =>
+      s.select(window(col("ts"), "1 hour").as("win"), col("user_id").cast("string").as("k"))
+        .select(col("win"), posexplode(array((0 until depth).map(j =>
+          graft.functions.Sketches.cmsCell(col("k"), j, width)): _*)).as(Seq("j", "cell")))
+        .groupBy(col("win"), col("j"), col("cell")).agg(count(lit(1)).as("cnt"))
+    }
 
   /** Per-WINDOW dyadic quantile states over the stream (SURVEY §2
     * #60g): one bin table per event-time hour — "p99 per hour,
     * forever, in constant memory per window", the quantile member of
-    * the per-window sealed-emission family [[streamHllHourlyStream]]
-    * founded. Because a bin count is a plain windowed `count`, this is
-    * an ordinary windowed aggregation: with a watermark it runs APPEND
-    * mode — sealed windows emit finalized bin tables and state stays
-    * bounded by (open windows within the lateness horizon) ×
-    * (≤ 64·2^subBits bins per sign), never by row count or value
-    * cardinality; without one (test/oracle path) it runs complete mode
-    * so every window lands in the batch-SQL compare (the q20
-    * convention). Emitted bin tables sum-merge across shards/restarts
-    * like any quantile state, and [[graft.functions.Sketches
-    * .quantileOf]] reads p50/p99 per hour off them directly.
-    */
-  def streamQuantileHourlyStream(spark: SparkSession, eventsPath: String,
-                                 valueCol: String = "value",
-                                 unitScale: Long = 1000000L, subBits: Int = 5,
-                                 watermark: Option[String] = None,
-                                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val stream0 = readStream(spark, eventsPath, maxFilesPerTrigger)
-    val stream = watermark.fold(stream0)(w => stream0.withWatermark("ts", w))
-    stream
-      .select(window(col("ts"), "1 hour").as("win"),
-        graft.functions.Sketches.dyadicBin(col(valueCol), unitScale, subBits).as("bin"))
-      .groupBy(col("win"), col("bin")).agg(count(lit(1)).as("cnt"))
-  }
-
-  /** #60g test harness: [[streamQuantileHourlyStream]] to a memory
-    * sink, unwrapped to (hour_start, bin, cnt).
+    * the per-window sealed-emission family [[streamHllHourly]]
+    * founded. A bin count is a plain windowed `count`, so this is the
+    * batch [[graft.functions.Sketches.quantileState]] keyed by the
+    * window, run as an ordinary windowed aggregation ([[runWindowed]]:
+    * state bounded by open windows × (≤ 64·2^subBits bins per sign),
+    * never by row count or value cardinality). Emitted bin tables
+    * sum-merge across shards/restarts like any quantile state, and
+    * [[graft.functions.Sketches.quantileOf]] reads p50/p99 per hour off
+    * them directly. Output: (hour_start, bin, cnt).
     */
   def streamQuantileHourly(spark: SparkSession, eventsPath: String,
                            valueCol: String = "value",
                            unitScale: Long = 1000000L, subBits: Int = 5,
                            watermark: Option[String] = None,
-                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val mode = if (watermark.isEmpty) "complete" else "append"
-    runToMemory(
-      streamQuantileHourlyStream(spark, eventsPath, valueCol, unitScale, subBits,
-        watermark, maxFilesPerTrigger),
-      mode, "graft_qsw_")
-      .select(col("win.start").as("hour_start"), col("bin"), col("cnt"))
-  }
+                           maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runWindowed(spark, eventsPath, watermark, maxFilesPerTrigger, "graft_qsw_") { s =>
+      graft.functions.Sketches.quantileState(
+        s.select(window(col("ts"), "1 hour").as("win"), col(valueCol)),
+        Seq("win"), valueCol, unitScale, subBits)
+    }
 
   /** Per-WINDOW KMV states over the stream (SURVEY §2 #61h): one ≤k
     * bottom-hash array per event-time hour — "distinct users per hour
@@ -401,46 +356,36 @@ object Events {
     @volatile var open: Option[DataFrame] = None
     @volatile var sealedOut: Option[DataFrame] = None
     @volatile var highWaterUs: Long = Long.MinValue
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = if (java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")
-    else java.nio.file.Files.createTempDirectory("graft_ckpt_")
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Spark's own rule, made explicit: the late-data predicate uses
-        // the watermark SEALED AT THE END OF THE PREVIOUS BATCH. Rows
-        // for a window already sealed are dropped — folding them into a
-        // fresh state entry would re-emit that hour at the final flush.
-        val hwPrev = highWaterUs
-        val fresh = latenessUs.fold(batch)(_ => batch.filter(
-          unix_micros(col("hour_start")) + lit(HOUR_US) > lit(hwPrev)))
-        val bs = graft.functions.Sketches.kmvState(
-          fresh.select(col("hour_start"), col(valueCol)), Seq("hour_start"), valueCol, k)
-        val merged = open
-          .map(s => graft.functions.Sketches.mergeKmvStates(Seq(s, bs), Seq("hour_start"), k))
-          .getOrElse(bs)
-        latenessUs match {
-          case None => open = Some(merged.localCheckpoint())
-          case Some(lu) =>
-            // advance the high-water mark off the FULL batch (dropped
-            // rows still advance event time — Spark's semantics), then
-            // seal windows fully below it: window end ≤ hw
-            val mx = batch.agg(max(unix_micros(col("ts")))).head
-            if (!mx.isNullAt(0)) highWaterUs = math.max(highWaterUs, mx.getLong(0) - lu)
-            val isSealed = unix_micros(col("hour_start")) + lit(HOUR_US) <= lit(highWaterUs)
-            val sealedNow = merged.filter(isSealed)
-            if (!sealedNow.isEmpty) {
-              val emitted = sealedNow.localCheckpoint()
-              sealedOut = Some(sealedOut.map(_.unionByName(emitted)).getOrElse(emitted))
-            }
-            open = Some(merged.filter(!isSealed).localCheckpoint())
-        }
-        ()
+    Drain.foreachBatch(stream) { (batch, _) =>
+      // Spark's own rule, made explicit: the late-data predicate uses
+      // the watermark SEALED AT THE END OF THE PREVIOUS BATCH. Rows
+      // for a window already sealed are dropped — folding them into a
+      // fresh state entry would re-emit that hour at the final flush.
+      val hwPrev = highWaterUs
+      val fresh = latenessUs.fold(batch)(_ => batch.filter(
+        unix_micros(col("hour_start")) + lit(HOUR_US) > lit(hwPrev)))
+      val bs = graft.functions.Sketches.kmvState(
+        fresh.select(col("hour_start"), col(valueCol)), Seq("hour_start"), valueCol, k)
+      val merged = open
+        .map(s => graft.functions.Sketches.mergeKmvStates(Seq(s, bs), Seq("hour_start"), k))
+        .getOrElse(bs)
+      latenessUs match {
+        case None => open = Some(merged.localCheckpoint())
+        case Some(lu) =>
+          // advance the high-water mark off the FULL batch (dropped
+          // rows still advance event time — Spark's semantics), then
+          // seal windows fully below it: window end ≤ hw
+          val mx = batch.agg(max(unix_micros(col("ts")))).head
+          if (!mx.isNullAt(0)) highWaterUs = math.max(highWaterUs, mx.getLong(0) - lu)
+          val isSealed = unix_micros(col("hour_start")) + lit(HOUR_US) <= lit(highWaterUs)
+          val sealedNow = merged.filter(isSealed)
+          if (!sealedNow.isEmpty) {
+            val emitted = sealedNow.localCheckpoint()
+            sealedOut = Some(sealedOut.map(_.unionByName(emitted)).getOrElse(emitted))
+          }
+          open = Some(merged.filter(!isSealed).localCheckpoint())
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    }
     val tail = open.map(_.withColumn("sealed", lit(false)))
     val sealedPart = sealedOut.map(_.withColumn("sealed", lit(true)))
     (sealedPart, tail) match {
@@ -477,13 +422,12 @@ object Events {
                       binWidth: Double = 20.0,
                       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     require(binWidth > 0, s"binWidth must be positive, got $binWidth")
-    val cells = runToMemory(
+    val cells = winStart(runToMemory(
       readStream(spark, eventsPath, maxFilesPerTrigger)
         .groupBy(window(col("ts"), "1 hour").as("win"),
           floor(col("value") / binWidth).cast("long").as("bin"))
         .agg(count(lit(1)).as("n")),
-      "complete", "graft_psi_")
-      .select(col("win.start").as("hour_start"), col("bin"), col("n"))
+      "complete", "graft_psi_"))
     // per-emission transform: PSI of each hour vs the corpus baseline
     val baseline = readBatch(spark, eventsPath)
       .groupBy(floor(col("value") / binWidth).cast("long").as("bin"))
@@ -507,17 +451,11 @@ object Events {
            max(col("tot")).as("n_events"))
   }
 
-  /** Streaming incremental aggregate-state maintenance — the streaming
-    * half of the mergeable-state family (Upsert.aggState /
-    * mergeAggStates): each micro-batch is aggregated ONCE and FOLDED
-    * into the standing state inside `foreachBatch`; history is never
-    * rescanned. This is the medallion-silver incremental rollup
-    * pattern — the state table is |keys|-sized however much history
-    * the stream has absorbed, and because every component is
-    * commutative/associative the result is bit-identical to a
-    * from-scratch aggregation of everything ever seen (exactly what
-    * the oracle checks; the multi-batch spec checks it across real
-    * micro-batch boundaries).
+  /** The stream-state fold (the q217 foreachBatch contract): each
+    * micro-batch of the projected event stream is built ONCE into a
+    * state and folded into the standing one,
+    * `state = merge(state, build(batch))`; history is never rescanned.
+    * With no micro-batch at all, the state of an empty batch.
     *
     * Per batch the new state is `localCheckpoint`ed: materialized and
     * lineage-cut, so batch k's merge reads (state_{k−1}, batch_k)
@@ -525,118 +463,96 @@ object Events {
     * merge and the incremental pipeline silently degrades to
     * quadratic recomputation.
     */
+  private def foldState(spark: SparkSession, eventsPath: String, cols: Seq[String],
+                        maxFilesPerTrigger: Option[Int])(build: DataFrame => DataFrame)(
+                         merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    @volatile var state: Option[DataFrame] = None
+    Drain.foreachBatch(
+        readStream(spark, eventsPath, maxFilesPerTrigger).select(cols.map(col): _*)) {
+      (batch, _) =>
+        val bs = build(batch)
+        state = Some(state.map(merge(_, bs)).getOrElse(bs).localCheckpoint())
+    }
+    state.getOrElse(build(readBatch(spark, eventsPath).limit(0).select(cols.map(col): _*)))
+  }
+
+  /** Streaming incremental aggregate-state maintenance — the streaming
+    * half of the mergeable-state family (Upsert.aggState /
+    * mergeAggStates), run through [[foldState]]. This is the
+    * medallion-silver incremental rollup pattern — the state table is
+    * |keys|-sized however much history the stream has absorbed, and
+    * because every component is commutative/associative the result is
+    * bit-identical to a from-scratch aggregation of everything ever
+    * seen (exactly what the oracle checks; the multi-batch spec checks
+    * it across real micro-batch boundaries).
+    */
   def streamAggState(spark: SparkSession, eventsPath: String,
                      keys: Seq[String] = Seq("event_type"),
                      valueCol: String = "value",
-                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val stream = readStream(spark, eventsPath, maxFilesPerTrigger)
-      .select(keys.map(col) :+ col(valueCol): _*)
-    @volatile var state: Option[DataFrame] = None
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = if (java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")
-    else java.nio.file.Files.createTempDirectory("graft_ckpt_")
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bs = graft.operators.Upsert.aggState(batch, keys, valueCol)
-        state = Some(state
-          .map(s => graft.operators.Upsert.mergeAggStates(Seq(s, bs), keys))
-          .getOrElse(bs)
-          .localCheckpoint())
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    state.getOrElse(
-      graft.operators.Upsert.aggState(
-        readBatch(spark, eventsPath).limit(0).select(keys.map(col) :+ col(valueCol): _*),
-        keys, valueCol))
-  }
+                     maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    foldState(spark, eventsPath, keys :+ valueCol, maxFilesPerTrigger)(
+      graft.operators.Upsert.aggState(_, keys, valueCol))(
+      (s, b) => graft.operators.Upsert.mergeAggStates(Seq(s, b), keys))
 
   /** Streaming KMV bottom-k distinct sketch (SURVEY §2 #61f): each
     * micro-batch builds its own KMV state and folds it into the
-    * standing state via [[graft.functions.Sketches.mergeKmvStates]] —
-    * history is never rescanned, the standing state is ≤k hashes per
-    * key however long the stream runs (never keyed by value), and
-    * because bottom-k over a set is ORDER-INVARIANT the final state is
-    * bit-identical to a from-scratch batch build (the oracle computes
-    * directly over everything ingested — equality across arbitrary
-    * micro-batch boundaries IS the split-invariance proof, the q217
-    * foreachBatch contract). Completes the streaming sketch family:
-    * CMS = frequency, HLL = distinct, dyadic bins = quantiles,
-    * KMV = distinct WITH set-operation support downstream.
+    * standing state via [[graft.functions.Sketches.mergeKmvStates]]
+    * ([[foldState]]) — the standing state is ≤k hashes per key however
+    * long the stream runs (never keyed by value), and because bottom-k
+    * over a set is ORDER-INVARIANT the final state is bit-identical to
+    * a from-scratch batch build (the oracle computes directly over
+    * everything ingested — equality across arbitrary micro-batch
+    * boundaries IS the split-invariance proof). Completes the streaming
+    * sketch family: CMS = frequency, HLL = distinct, dyadic bins =
+    * quantiles, KMV = distinct WITH set-operation support downstream.
     */
   def streamKmv(spark: SparkSession, eventsPath: String,
                 keys: Seq[String] = Seq("event_type"),
                 valueCol: String = "user_id", k: Int = 64,
-                maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val stream = readStream(spark, eventsPath, maxFilesPerTrigger)
-      .select(keys.map(col) :+ col(valueCol): _*)
-    @volatile var state: Option[DataFrame] = None
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = if (java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")
-    else java.nio.file.Files.createTempDirectory("graft_ckpt_")
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bs = graft.functions.Sketches.kmvState(batch, keys, valueCol, k)
-        state = Some(state
-          .map(s => graft.functions.Sketches.mergeKmvStates(Seq(s, bs), keys, k))
-          .getOrElse(bs)
-          .localCheckpoint())
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    state.getOrElse(graft.functions.Sketches.kmvState(
-      readBatch(spark, eventsPath).limit(0).select(keys.map(col) :+ col(valueCol): _*),
-      keys, valueCol, k))
-  }
+                maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    foldState(spark, eventsPath, keys :+ valueCol, maxFilesPerTrigger)(
+      graft.functions.Sketches.kmvState(_, keys, valueCol, k))(
+      (s, b) => graft.functions.Sketches.mergeKmvStates(Seq(s, b), keys, k))
 
   /** Production sink: append-mode parquet with a checkpoint. State
     * stays bounded by the plan's watermark; output is distributed
     * (never driver-materialized). Caller owns the query lifecycle.
     */
   def runToFiles(agg: DataFrame, outPath: String, checkpointPath: String): StreamingQuery =
-    agg.writeStream.outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .start()
+    filesWriter(agg, outPath).option("checkpointLocation", checkpointPath).start()
 
-  /** #27 plan: tumbling 1-hour windowed counts/sums per event_type.
-    * With a watermark the aggregation emits finalized windows in append
-    * mode and its state is bounded by the lateness horizon; without one
-    * (test/oracle path) it runs complete mode so every window is
-    * emitted for the batch-SQL compare.
+  private def filesWriter(agg: DataFrame, outPath: String): DataStreamWriter[Row] =
+    agg.writeStream.outputMode(OutputMode.Append).format("parquet").option("path", outPath)
+
+  /** Per-window event count and exact (decimal) value sum per event_type. */
+  private def byType(win: Column)(stream: DataFrame): DataFrame =
+    stream.groupBy(win.as("win"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+           sum(col("value").cast("decimal(18,4)")).as("sum_value_d"))
+
+  /** The decimal sum reported as the double `sum_value`, in place. */
+  private def sumValue(df: DataFrame): DataFrame =
+    df.withColumn("sum_value_d", col("sum_value_d").cast("double"))
+      .withColumnRenamed("sum_value_d", "sum_value")
+
+  /** #27 plan: tumbling 1-hour windowed counts/sums per event_type,
+    * grouped by the window column `win`. With a watermark the
+    * aggregation emits finalized windows in append mode and its state
+    * is bounded by the lateness horizon; without one (test/oracle path)
+    * it runs complete mode so every window is emitted for the batch-SQL
+    * compare.
     */
   def hourlyByTypeStream(spark: SparkSession, eventsPath: String,
                          watermark: Option[String] = None,
-                         maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val stream0 = readStream(spark, eventsPath, maxFilesPerTrigger)
-    val stream = watermark.fold(stream0)(w => stream0.withWatermark("ts", w))
-    stream
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-           sum(col("value").cast("decimal(18,4)")).as("sum_value_d"))
-  }
+                         maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    byType(window(col("ts"), "1 hour"))(
+      eventStream(spark, eventsPath, watermark, maxFilesPerTrigger))
 
-  private def unpackHourly(df: DataFrame): DataFrame =
-    df.select(
-      col("window.start").as("hour_start"), col("event_type"),
-      col("n_events"), col("sum_value_d").cast("double").as("sum_value"))
-
-  /** #27 test harness: run [[hourlyByTypeStream]] to a memory sink. */
+  /** #27 test harness: [[hourlyByTypeStream]]'s plan to a memory sink. */
   def hourlyByType(spark: SparkSession, eventsPath: String,
-                   watermark: Option[String] = None): DataFrame = {
-    val mode = if (watermark.isEmpty) "complete" else "append"
-    unpackHourly(runToMemory(
-      hourlyByTypeStream(spark, eventsPath, watermark), mode, "graft_hourly_"))
-  }
+                   watermark: Option[String] = None): DataFrame =
+    sumValue(runWindowed(spark, eventsPath, watermark, None, "graft_hourly_")(
+      byType(window(col("ts"), "1 hour"))))
 
   /** #27 production harness: watermarked append into parquet files.
     * Only windows sealed by the watermark are written — the correct
@@ -647,9 +563,7 @@ object Events {
                           watermark: String = "2 hours",
                           maxFilesPerTrigger: Option[Int] = None): Unit = {
     val agg = hourlyByTypeStream(spark, eventsPath, Some(watermark), maxFilesPerTrigger)
-    val q = runToFiles(unpackHourly(agg), outPath, checkpointPath)
-    q.processAllAvailable()
-    q.stop()
+    Drain(filesWriter(sumValue(winStart(agg)), outPath), Some(checkpointPath))
   }
 
   /** #27b sliding (hopping) windows: 1-hour windows advancing every 15
@@ -658,27 +572,14 @@ object Events {
     * hide bursts). Spark expands the covering window set MAP-SIDE and
     * runs the same partial-agg shuffle as tumbling; with a watermark,
     * per-window state stays bounded by the lateness horizon (just 4×
-    * the window count of tumbling, never event-scaled).
+    * the window count of tumbling, never event-scaled). Memory-sink
+    * harness, unwrapped to (window_start, event_type, n_events,
+    * sum_value).
     */
-  def slidingByTypeStream(spark: SparkSession, eventsPath: String,
-                          watermark: Option[String] = None,
-                          maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val stream0 = readStream(spark, eventsPath, maxFilesPerTrigger)
-    val stream = watermark.fold(stream0)(w => stream0.withWatermark("ts", w))
-    stream
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-           sum(col("value").cast("decimal(18,4)")).as("sum_value_d"))
-  }
-
-  /** #27b test harness: [[slidingByTypeStream]] to a memory sink. */
   def slidingByType(spark: SparkSession, eventsPath: String,
-                    watermark: Option[String] = None): DataFrame = {
-    val mode = if (watermark.isEmpty) "complete" else "append"
-    runToMemory(slidingByTypeStream(spark, eventsPath, watermark), mode, "graft_sliding_")
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value_d").cast("double").as("sum_value"))
-  }
+                    watermark: Option[String] = None): DataFrame =
+    sumValue(runWindowed(spark, eventsPath, watermark, None, "graft_sliding_", "window_start")(
+      byType(window(col("ts"), "1 hour", "15 minutes"))))
 
   /** #29-streaming: exact dedup as a STREAM, state bounded by the
     * watermark: `dropDuplicatesWithinWatermark` keyed on (user_id, ts)
@@ -762,16 +663,15 @@ object Events {
     readStream(spark, eventsPath, maxFilesPerTrigger)
       .join(broadcast(hist), Seq("user_id"))
       .withColumn("anomalous", col("value") > col("avg_value") * 2)
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
+      .groupBy(window(col("ts"), "1 day").as("win"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
            sum(when(col("anomalous"), 1L).otherwise(0L)).as("n_anomalous"))
   }
 
   /** #28e test harness: run [[streamEnrichPlan]] to a memory sink. */
   def streamEnrichAnomalies(spark: SparkSession, eventsPath: String): DataFrame =
-    runToMemory(streamEnrichPlan(spark, eventsPath), "complete", "graft_enrich_")
-      .select(col("window.start").as("day_start"), col("event_type"),
-        col("n_events"), col("n_anomalous"))
+    winStart(runToMemory(streamEnrichPlan(spark, eventsPath), "complete", "graft_enrich_"),
+      "day_start")
 
   /** #27c streaming trending: hourly counts maintained INCREMENTALLY
     * by the stream ([[hourlyByTypeStream]] — the partial-agg state the
@@ -783,10 +683,8 @@ object Events {
     * memory-sink table IS that emission). Ties break by event type.
     */
   def trendingByHour(spark: SparkSession, eventsPath: String, topN: Int = 3): DataFrame = {
-    val counts = runToMemory(
-      hourlyByTypeStream(spark, eventsPath), "complete", "graft_trend_")
-    counts.select(col("window.start").as("hour_start"),
-        col("event_type"), col("n_events"))
+    winStart(runToMemory(hourlyByTypeStream(spark, eventsPath), "complete", "graft_trend_"))
+      .select(col("hour_start"), col("event_type"), col("n_events"))
       .withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("hour_start")
           .orderBy(col("n_events").desc, col("event_type"))))
@@ -1022,25 +920,16 @@ object Events {
     for (_ <- 0 until runs) {
       val src = readStream(spark, eventsPath, maxFilesPerTrigger)
         .select(col("event_id"), col("user_id"), col("value"))
-      // a FRESH checkpoint per run models the crash that lost it: the
-      // engine restarts batch numbering and re-delivers everything
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val ckpt = if (java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")
-      else java.nio.file.Files.createTempDirectory("graft_ckpt_")
-      val q = src.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // no-data micro-batches (watermark bookkeeping) must not
-          // burn a version — the standard Delta-sink foreachBatch guard
-          if (!batch.isEmpty) {
-            graft.sources.TxTable.commitIdempotent(batch, table, appId, batchId)
-          }
-          ()
+      // a FRESH throwaway checkpoint per run models the crash that lost
+      // it: the engine restarts batch numbering and re-delivers everything
+      Drain.foreachBatch(src) { (batch, batchId) =>
+        // no-data micro-batches (watermark bookkeeping) must not
+        // burn a version — the standard Delta-sink foreachBatch guard
+        if (!batch.isEmpty) {
+          graft.sources.TxTable.commitIdempotent(batch, table, appId, batchId)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        ()
+      }
     }
     graft.sources.TxTable.read(spark, table)
   }

@@ -530,4 +530,33 @@ class StreamingSpec extends SparkSpec {
     runOnce()
     buf.asScala.toSeq.sorted shouldBe Seq((3L, 3), (4L, 4))
   }
+
+  test("streaming runners delete the throwaway checkpoints they create") {
+    import spark.implicits._
+    import graft.sources.{TxChangesStream, TxTable}
+    def ckptDirs(): Set[String] =
+      Seq("/dev/shm", System.getProperty("java.io.tmpdir")).flatMap { d =>
+        Option(new java.io.File(d).listFiles()).toSeq.flatten
+          .filter(_.getName.startsWith("graft_ckpt_")).map(_.getPath)
+      }.toSet
+    val dir = timeSplitDir(s"$sfDir/events.parquet", 2)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_leak_spec_").toString
+    val table = s"$tmp/t"
+    TxTable.commit(Seq((1L, "a")).toDF("id", "s"), table) shouldBe 1
+    val runs: Seq[(String, () => Any)] = Seq(
+      "streamAggState" -> (() => Events.streamAggState(spark, dir, maxFilesPerTrigger = Some(1))),
+      "streamKmv" -> (() => Events.streamKmv(spark, dir, maxFilesPerTrigger = Some(1))),
+      "streamKmvHourly" -> (() => Events.streamKmvHourly(spark, dir,
+        latenessUs = Some(3600000000L), maxFilesPerTrigger = Some(1))),
+      "streamIntoTx" -> (() => Events.streamIntoTx(spark, dir, s"$tmp/sink", "spec", runs = 2)),
+      "replayAll" -> (() => TxChangesStream.replayAll(spark, table)),
+      "hourlyByType" -> (() => Events.hourlyByType(spark, dir)))
+    runs.foreach { case (name, run) =>
+      val before = ckptDirs()
+      run()
+      withClue(s"$name left a checkpoint behind: ") {
+        (ckptDirs() -- before) shouldBe empty
+      }
+    }
+  }
 }
