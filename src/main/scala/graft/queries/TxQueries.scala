@@ -640,7 +640,7 @@ object TxQueries {
         partitionBy = Some("o_orderpriority"))
       val probe = "3-MEDIUM"
       val total = sources.TxTable.filesOf(s, table, 1)
-      val mine = total.filter(_.startsWith(s"data/o_orderpriority=$probe/"))
+      val mine = sources.TxTable.prunedFilesByValue(s, table, 1, "o_orderpriority", probe)
       val rows = sources.TxTable.readPartition(s, table, probe)
         .agg(count(lit(1)).as("n_rows"),
           sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))

@@ -833,44 +833,176 @@ object TxTable {
   def statsOf(spark: SparkSession, table: String, v: Int): Seq[(String, String, Double, Double)] =
     snapshotOf(spark, table, v).stats
 
-  /** The file subset of version `v` a range predicate `lo ≤ col ≤ hi`
-    * can touch, decided from the MANIFEST STATS ALONE (no footer
-    * reads): a file is skipped only when its recorded [min, max] is
-    * disjoint from [lo, hi]; files without stats for `col` are always
-    * kept (conservative).
+  /** Skipping read: the rows of version `version` (default: the head)
+    * that satisfy `predicate`. Reads ONLY the files [[keptFiles]] keeps,
+    * then applies the exact predicate, so planning and IO scale with the
+    * files that can match, not the snapshot. When no file can match, the
+    * result is an empty frame with the snapshot's columns, planned over
+    * at most one file ([[readKept]]).
     */
-  def prunedFiles(spark: SparkSession, table: String, v: Int,
-                  colName: String, lo: Double, hi: Double): Seq[String] = {
-    val phys = physOf(colMapOf(spark, table, v), colName)
-    val byFile = statsOf(spark, table, v)
-      .collect { case (fl, c, flo, fhi) if c == phys => fl -> (flo, fhi) }
-      .toMap
-    filesOf(spark, table, v).filter { fl =>
-      byFile.get(fl).forall { case (flo, fhi) => !(fhi < lo || flo > hi) }
+  def scan(spark: SparkSession, table: String, predicate: Column,
+           version: Int = -1): DataFrame = {
+    val v = if (version > 0) version else currentVersion(spark, table)
+    readKept(spark, table, v, keptFiles(spark, table, v, predicate)).filter(predicate)
+  }
+
+  /** THE file-skipping decision: the files of version `v` that
+    * `predicate` can touch, from the manifest alone. The predicate is
+    * analyzed against the snapshot's logical schema (so comparisons
+    * carry Spark's own types and implicit casts) and walked once; a file
+    * is skipped only when a stat recorded for it refutes an `And`
+    * conjunct:
+    *  - `=` on the string form (a string column, or any column cast to
+    *    string, against a constant): value set, bloom, and the
+    *    identity-partition directory;
+    *  - `>=`, `>`, `<=`, `<` (so `between`) on a non-decimal numeric
+    *    column against a numeric constant: [min, max];
+    *  - `IS NULL` / `IS NOT NULL`: null count, and row count for the
+    *    all-null test (positional deletes only remove rows).
+    * Any other node, an unresolvable predicate and a missing stat keep
+    * the file. The probe is the constant as the analyzed predicate
+    * compares it, a string from Spark's own cast-to-string — what the
+    * executor-built value sets and blooms hashed (a driver-side
+    * toString diverges for e.g. timestamps, and a diverged probe is a
+    * false negative: files wrongly skipped, rows silently missed).
+    */
+  private[graft] def keptFiles(spark: SparkSession, table: String, v: Int,
+                               predicate: Column): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.types._
+    val snap = snapshotOf(spark, table, v)
+    if (snap.files.isEmpty) return Nil
+    val schema = snap.schema.map(StructType.fromDDL).getOrElse(readVersion(spark, table, v).schema)
+    def phys(a: AttributeReference): String = physOf(snap.map, a.name)
+    object Const {
+      def unapply(e: Expression): Option[Any] =
+        if (!e.foldable) None else scala.util.Try(e.eval()).toOption.flatMap(Option(_))
+    }
+    object StrCol {
+      def unapply(e: Expression): Option[String] = e match {
+        case a: AttributeReference if a.dataType == StringType => Some(phys(a))
+        case Cast(a: AttributeReference, StringType, _, _) => Some(phys(a))
+        case _ => None
+      }
+    }
+    // stats are doubles: the analyzer's widening cast to double keeps
+    // their order (BIGINT stats past 2^53 are widened outward at commit)
+    val numeric = Set[DataType](ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
+    object NumCol {
+      def unapply(e: Expression): Option[String] = e match {
+        case a: AttributeReference if numeric(a.dataType) => Some(phys(a))
+        case Cast(a: AttributeReference, DoubleType, _, _) if numeric(a.dataType) => Some(phys(a))
+        case _ => None
+      }
+    }
+    def range(c: String)(ok: (Double, Double) => Boolean): String => Boolean = {
+      val byFile = snap.stats.collect { case (fl, `c`, lo, hi) => fl -> (lo, hi) }.toMap
+      fl => byFile.get(fl).forall(ok.tupled)
+    }
+    def nulls(c: String, wantNull: Boolean): String => Boolean = {
+      val counts = snap.stats.collect { case (fl, k, n, _) if k == c + "#nulls" => fl -> n }.toMap
+      val rows = snap.rows.toMap
+      fl => counts.get(fl).forall(n => if (wantNull) n > 0 else rows.get(fl).forall(n < _))
+    }
+    def stringEq(c: String, s: String): String => Boolean = {
+      val sets = snap.vsets.collect { case (fl, `c`, vs) => fl -> vs }.toMap
+      val bloom = bloomAdmits(snap, c, Seq(s))
+      val part = snap.part.filter(_ == c)
+      fl => sets.get(fl).forall(_.contains(s)) && bloom(fl) &&
+        part.forall(partValueOf(_, fl).forall(_ == s))
+    }
+    def allows(e: Expression): String => Boolean = e match {
+      case And(l, r) =>
+        val (a, b) = (allows(l), allows(r))
+        fl => a(fl) && b(fl)
+      case EqualTo(StrCol(c), Const(s: org.apache.spark.unsafe.types.UTF8String)) =>
+        stringEq(c, s.toString)
+      case GreaterThanOrEqual(NumCol(c), Const(x: java.lang.Number)) =>
+        range(c)((_, hi) => !(hi < x.doubleValue))
+      case GreaterThan(NumCol(c), Const(x: java.lang.Number)) =>
+        range(c)((_, hi) => !(hi <= x.doubleValue))
+      case LessThanOrEqual(NumCol(c), Const(x: java.lang.Number)) =>
+        range(c)((lo, _) => !(lo > x.doubleValue))
+      case LessThan(NumCol(c), Const(x: java.lang.Number)) =>
+        range(c)((lo, _) => !(lo >= x.doubleValue))
+      case IsNull(a: AttributeReference) => nulls(phys(a), wantNull = true)
+      case IsNotNull(a: AttributeReference) => nulls(phys(a), wantNull = false)
+      case _ => _ => true
+    }
+    scala.util.Try(spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        schema).filter(predicate).queryExecution.analyzed).toOption match {
+      case Some(org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _)) =>
+        snap.files.filter(allows(cond))
+      case _ => snap.files
     }
   }
 
-  /** Range read with manifest-level data skipping: reads ONLY the
-    * files [[prunedFiles]] keeps, then applies the row filter. With a
-    * range-clustered layout (repartitionByRange / z-order before
-    * commit) this is the Delta data-skipping read: planning and IO
-    * scale with the MATCHING file count, not the snapshot. Falls back
-    * to the full file list when no file survives pruning is impossible
-    * — an empty keep-set still reads one manifest file to preserve the
-    * snapshot's schema (row-group stats prune its pages anyway).
+  /** The read tail of every skipping reader: `kept` of version `v`'s
+    * files through [[snapshotRead]]. An empty `kept` (nothing can
+    * match) reads as an empty frame with the snapshot's columns and
+    * types, planned over the snapshot's first file only — except an
+    * evolved (mergeSchema) snapshot, whose columns are the union of all
+    * its files' and so plans them all.
+    */
+  private def readKept(spark: SparkSession, table: String, v: Int,
+                       kept: Seq[String]): DataFrame =
+    if (kept.nonEmpty) snapshotRead(spark, table, v, kept)
+    else {
+      val first = filesOf(spark, table, v).take(1)
+      (if (first.isEmpty || msOf(spark, table, v)) readVersion(spark, table, v)
+       else snapshotRead(spark, table, v, first)).limit(0)
+    }
+
+  /** The named skipping readers: each is [[scan]] of one predicate, and
+    * its `prunedFiles*` twin is [[keptFiles]] of the same predicate.
+    *  - `readWhere`: `lo ≤ col ≤ hi` on min/max — with a range-clustered
+    *    layout (repartitionByRange / z-order before commit) the Delta
+    *    data-skipping read;
+    *  - `readWhereValue`, `readWhereKey`: `col = value` on the string
+    *    rendering — value sets prune categorical columns exactly, blooms
+    *    let a needle-in-100-TB id lookup read only the files that admit
+    *    the key (never a false negative);
+    *  - `readWhereNull`: IS NULL (`wantNull`) or IS NOT NULL on null
+    *    counts — a completeness audit reads the incomplete files.
     */
   def readWhere(spark: SparkSession, table: String, colName: String,
-                lo: Double, hi: Double, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else currentVersion(spark, table)
-    val allFiles = filesOf(spark, table, v)
-    if (allFiles.isEmpty) // empty snapshot: schema-preserving empty read
-      return readVersion(spark, table, v)
-        .filter(col(colName) >= lo && col(colName) <= hi)
-    val kept = prunedFiles(spark, table, v, colName, lo, hi)
-    val paths = if (kept.nonEmpty) kept else allFiles.take(1)
-    snapshotRead(spark, table, v, paths)
-      .filter(col(colName) >= lo && col(colName) <= hi)
-  }
+                lo: Double, hi: Double, version: Int = -1): DataFrame =
+    scan(spark, table, col(colName).between(lo, hi), version)
+
+  def prunedFiles(spark: SparkSession, table: String, v: Int,
+                  colName: String, lo: Double, hi: Double): Seq[String] =
+    keptFiles(spark, table, v, col(colName).between(lo, hi))
+
+  def readWhereValue(spark: SparkSession, table: String, colName: String,
+                     value: String, version: Int = -1): DataFrame =
+    scan(spark, table, equalsString(colName, value), version)
+
+  def prunedFilesByValue(spark: SparkSession, table: String, v: Int,
+                         colName: String, value: String): Seq[String] =
+    keptFiles(spark, table, v, equalsString(colName, value))
+
+  def readWhereKey(spark: SparkSession, table: String, colName: String,
+                   value: String, version: Int = -1): DataFrame =
+    scan(spark, table, equalsString(colName, value), version)
+
+  def prunedFilesByKey(spark: SparkSession, table: String, v: Int,
+                       colName: String, value: String): Seq[String] =
+    keptFiles(spark, table, v, equalsString(colName, value))
+
+  def readWhereNull(spark: SparkSession, table: String, colName: String,
+                    wantNull: Boolean, version: Int = -1): DataFrame =
+    scan(spark, table, nullTest(colName, wantNull), version)
+
+  def prunedFilesByNull(spark: SparkSession, table: String, v: Int,
+                        colName: String, wantNull: Boolean): Seq[String] =
+    keptFiles(spark, table, v, nullTest(colName, wantNull))
+
+  /** `col = value` on the string rendering value sets and blooms record. */
+  private def equalsString(colName: String, value: String): Column =
+    col(colName).cast("string") === value
+
+  private def nullTest(colName: String, wantNull: Boolean): Column =
+    if (wantNull) col(colName).isNull else col(colName).isNotNull
 
   /** Per-file bloom entries of version `v`: (file, column, m, k,
     * base64 bits). m/k ride each entry so the GEOMETRY can evolve —
@@ -904,13 +1036,6 @@ object TxTable {
                   v: Int): Seq[(String, String, Seq[String])] =
     snapshotOf(spark, table, v).vsets
 
-  /** Per-file row counts of version `v`'s snapshot: (file, rows).
-    * Present only for files written under `countRows = true` commits
-    * (carried forward with their files, like skipping stats).
-    */
-  def rowCountsOf(spark: SparkSession, table: String, v: Int): Seq[(String, Long)] =
-    snapshotOf(spark, table, v).rows
-
   /** METADATA-ONLY `COUNT(*)` (the Delta/Iceberg log-answered count):
     * sum of the manifest-recorded per-file row counts minus the
     * outstanding positional-deletion-vector pairs (each pair is
@@ -938,12 +1063,10 @@ object TxTable {
     val v = if (version > 0) version else currentVersion(spark, table)
     val pc = partColOf(spark, table, v).getOrElse(
       sys.error(s"TxTable: $table v$v has no partitioned layout"))
-    val prefix = s"data/${pc}="
     def valOf(rel: String): String = {
-      val dir = rel.substring(0, rel.lastIndexOf('/'))
-      require(dir.startsWith(prefix),
-        s"TxTable: file $rel is outside the $pc= partition layout")
-      dir.substring(prefix.length)
+      val pv = partValueOf(pc, rel)
+      require(pv.isDefined, s"TxTable: file $rel is outside the $pc= partition layout")
+      pv.get
     }
     metaFileCounts(spark, table, v)
       .groupBy { case (rel, _) => valOf(rel) }
@@ -964,7 +1087,7 @@ object TxTable {
       "sidecar(s) — a key may match any number of rows, so the metadata count " +
       "is underivable; OPTIMIZE (compact) folds them away, or count by scan")
     val files = filesOf(spark, table, v)
-    val counts = rowCountsOf(spark, table, v).toMap
+    val counts = snapshotOf(spark, table, v).rows.toMap
     val missing = files.filterNot(counts.contains)
     require(missing.isEmpty,
       s"TxTable: ${missing.size} of ${files.size} files at $table v$v have no " +
@@ -986,40 +1109,6 @@ object TxTable {
       val base = rel.substring(rel.lastIndexOf('/') + 1)
       rel -> (counts(rel) - deleted.getOrElse(base, 0L))
     }
-  }
-
-  /** The file subset of version `v` an equality probe `col = value`
-    * can touch, decided from the manifest VALUE SETS alone: a file is
-    * skipped only when its recorded distinct set misses the value —
-    * EXACT pruning (no false positives either way) for categorical
-    * columns, the manifest-level equivalent of Hive partition pruning
-    * without physical partitioning. Files without an entry are always
-    * kept (conservative).
-    */
-  def prunedFilesByValue(spark: SparkSession, table: String, v: Int,
-                         colName: String, value: String): Seq[String] = {
-    val phys = physOf(colMapOf(spark, table, v), colName)
-    val byFile = valueSetsOf(spark, table, v)
-      .collect { case (fl, c, vs) if c == phys => fl -> vs.toSet }.toMap
-    filesOf(spark, table, v).filter(fl => byFile.get(fl).forall(_.contains(value)))
-  }
-
-  /** Categorical point read with value-set file skipping: reads ONLY
-    * the files [[prunedFilesByValue]] keeps, then applies the exact
-    * equality filter on the string rendering. With a layout clustered
-    * on the column (repartition by it before commit) this is partition
-    * pruning from the manifest alone — a per-category read touches the
-    * category's files, not the snapshot.
-    */
-  def readWhereValue(spark: SparkSession, table: String, colName: String,
-                     value: String, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else currentVersion(spark, table)
-    val kept = prunedFilesByValue(spark, table, v, colName, value)
-    if (kept.isEmpty) // value set proved absence in every file
-      return readVersion(spark, table, v).limit(0)
-        .filter(col(colName).cast("string") === value)
-    snapshotRead(spark, table, v, kept)
-      .filter(col(colName).cast("string") === value)
   }
 
   /** Column mapping of version `v`'s snapshot — (logical, physical)
@@ -1092,8 +1181,7 @@ object TxTable {
         if (ms || paths.isEmpty) rd0.parquet(paths: _*)
         else rd0.schema(dataSchema).parquet(paths: _*)
       case Some(pc) =>
-        val logicalName = colMapOf(spark, table, v)
-          .flatMap(_.collectFirst { case (n, p) if p == pc => n }).getOrElse(pc)
+        val logicalName = logicalOf(colMapOf(spark, table, v), pc)
         val dt = manifestSchema(spark, table, v)
           .flatMap(st => st.fields.find(_.name == logicalName).map(_.dataType))
         val hive = rd0.option("basePath", s"$table/data")
@@ -1187,43 +1275,23 @@ object TxTable {
     }.distinct
   }
 
-  /** The file subset of version `v` a point lookup `col = value` can
-    * touch, decided from the manifest BLOOMS alone: a file is skipped
-    * only when its bloom for `col` misses at least one of the value's
-    * bits (no false negatives — the filter never skips a file that
-    * holds the key); files without a bloom for `col` are always kept.
+  /** Whether a file's bloom on physical column `c` can hold any of
+    * `probes` — the one bloom test, shared by [[keptFiles]]' `=` atom
+    * and the key-set writes ([[bloomCandidateFiles]]). Each probe is
+    * hashed ONCE per recorded bloom geometry (md5 is the expensive part;
+    * per-(file, probe) hashing would be files × probes digests), so the
+    * per-file test is pure bit tests. A file without a bloom on `c` is
+    * admitted.
     */
-  def prunedFilesByKey(spark: SparkSession, table: String, v: Int,
-                       colName: String, value: String): Seq[String] = {
-    val phys = physOf(colMapOf(spark, table, v), colName)
-    val byFile = bloomEntries(spark, table, v)
-      .collect { case (fl, c, m, k, b64) if c == phys =>
-        fl -> (m, k, java.util.Base64.getDecoder.decode(b64)) }
-      .toMap
-    filesOf(spark, table, v).filter { fl =>
-      byFile.get(fl).forall { case (m, k, bytes) =>
-        bloomBitsOf(value, m, k)
-          .forall(b => (bytes(b >> 3) & (1 << (b & 7))) != 0)
-      }
+  private def bloomAdmits(snap: TxManifest, c: String,
+                          probes: Seq[String]): String => Boolean = {
+    val blooms = snap.blooms.collect { case (fl, `c`, m, k, b64) =>
+      fl -> (m, k, java.util.Base64.getDecoder.decode(b64)) }.toMap
+    val bitsByGeom = blooms.values.map { case (m, k, _) => (m, k) }.toSet
+      .map { g: (Int, Int) => g -> probes.map(bloomBitsOf(_, g._1, g._2)) }.toMap
+    fl => blooms.get(fl).forall { case (m, k, bytes) =>
+      bitsByGeom((m, k)).exists(_.forall(b => (bytes(b >> 3) & (1 << (b & 7))) != 0))
     }
-  }
-
-  /** Point-lookup read with bloom file skipping: reads ONLY the files
-    * [[prunedFilesByKey]] keeps, then applies the exact equality
-    * filter (on the string rendering — the same canonical form the
-    * bloom hashed). The companion to [[readWhere]]'s range skipping
-    * for columns the layout does NOT cluster: needle-in-100-TB id
-    * lookups read the handful of files whose blooms admit the key.
-    */
-  def readWhereKey(spark: SparkSession, table: String, colName: String,
-                   value: String, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else currentVersion(spark, table)
-    val kept = prunedFilesByKey(spark, table, v, colName, value)
-    if (kept.isEmpty) // bloom proved absence in every file
-      return readVersion(spark, table, v).limit(0)
-        .filter(col(colName).cast("string") === value)
-    snapshotRead(spark, table, v, kept)
-      .filter(col(colName).cast("string") === value)
   }
 
   /** Row-level DELETE, copy-on-write (the Delta default path): files
@@ -1361,27 +1429,9 @@ object TxTable {
       head.copy(tombs = head.tombs ++ named.map(rel => (rel, physKey))))
   }
 
-  /** Key-SET merge-on-read delete — the CDC-apply form of
-    * [[deleteWhereMor]]: tombstone every row of the current snapshot
-    * whose `keyCol` appears in `keys` (one column, same type). The
-    * scan is BLOOM-ACCELERATED when the table indexes `keyCol` and the
-    * batch is small (each key probes the per-file blooms driver-side —
-    * a needle-batch delete reads the handful of admitting files, not
-    * the snapshot); otherwise one semi-join pass over the snapshot,
-    * the standard index-less CDC-apply cost. Naturally IDEMPOTENT:
-    * already-tombstoned rows never re-match (the scan reads through
-    * existing tombs), so a replayed delete batch is a no-op — and an
-    * optional `txn` marker records (appId, batchId) in the manifest
-    * for [[txnVersionOf]]-gated exactly-once composition (the
-    * streaming mirror uses it to never re-tombstone rows a later
-    * version re-inserted).
-    *
-    * @return (version, nTombstonedPairs) — current version with 0 on
-    *         an empty match
-    */
   /** The file subset of version `v` whose per-file bloom (on physical
-    * column `physKey`) can contain ANY of `keys` — the shared
-    * candidate-pruning step of the key-addressed writes
+    * column `physKey`) can contain ANY of `keys` ([[bloomAdmits]]) —
+    * the shared candidate-pruning step of the key-addressed writes
     * ([[deleteKeysMor]], [[appendUnique]]). Falls back to ALL files
     * when the column has no blooms or the probe exceeds the bounded
     * driver collect (big batches amortize a full semi-join scan
@@ -1394,31 +1444,14 @@ object TxTable {
     */
   private def bloomCandidateFiles(spark: SparkSession, table: String, v: Int,
                                   physKey: String, keys: DataFrame): Seq[String] = {
-    val all = filesOf(spark, table, v)
-    val blooms = bloomEntries(spark, table, v)
-      .collect { case (fl, c, m, k, b64) if c == physKey =>
-        fl -> (m, k, java.util.Base64.getDecoder.decode(b64)) }.toMap
-    if (blooms.isEmpty) return all
+    val snap = snapshotOf(spark, table, v)
+    if (!snap.blooms.exists(_._2 == physKey)) return snap.files
     val probe = keys
       .select(keys.col(keys.columns.head).cast("string").as("_graft_pk"))
       .filter(col("_graft_pk").isNotNull)
-      .limit(10001).collect()
-    if (probe.length > 10000) all
-    else {
-      // hash each key ONCE per bloom geometry (md5 is the expensive
-      // part — per-(file, key) hashing would be files × keys
-      // digests); the per-file pass is then pure bit tests
-      val bitsByGeom = blooms.values.map { case (m, k, _) => (m, k) }.toSet
-        .map { g: (Int, Int) =>
-          g -> probe.map(r => bloomBitsOf(r.getString(0), g._1, g._2)) }
-        .toMap
-      all.filter { fl =>
-        blooms.get(fl).forall { case (m, k, bytes) =>
-          bitsByGeom((m, k)).exists(_.forall(b =>
-            (bytes(b >> 3) & (1 << (b & 7))) != 0))
-        }
-      }
-    }
+      .limit(10001).collect().map(_.getString(0))
+    if (probe.length > 10000) snap.files
+    else snap.files.filter(bloomAdmits(snap, physKey, probe.toSeq))
   }
 
   /** UNIQUE-KEY-ENFORCED APPEND (INSERT ... ON CONFLICT DO NOTHING /
@@ -1465,6 +1498,24 @@ object TxTable {
     (nv, n)
   }
 
+  /** Key-SET merge-on-read delete — the CDC-apply form of
+    * [[deleteWhereMor]]: tombstone every row of the current snapshot
+    * whose `keyCol` appears in `keys` (one column, same type). The
+    * scan is BLOOM-ACCELERATED when the table indexes `keyCol` and the
+    * batch is small (each key probes the per-file blooms driver-side —
+    * a needle-batch delete reads the handful of admitting files, not
+    * the snapshot); otherwise one semi-join pass over the snapshot,
+    * the standard index-less CDC-apply cost. Naturally IDEMPOTENT:
+    * already-tombstoned rows never re-match (the scan reads through
+    * existing tombs), so a replayed delete batch is a no-op — and an
+    * optional `txn` marker records (appId, batchId) in the manifest
+    * for [[txnVersionOf]]-gated exactly-once composition (the
+    * streaming mirror uses it to never re-tombstone rows a later
+    * version re-inserted).
+    *
+    * @return (version, nTombstonedPairs) — current version with 0 on
+    *         an empty match
+    */
   def deleteKeysMor(spark: SparkSession, table: String, keyCol: String,
                     keys: DataFrame,
                     txn: Option[(String, Long)] = None): (Int, Long) = {
@@ -2048,9 +2099,7 @@ object TxTable {
       // a partitioned layout survives the snapshot-replacing merge
       // (same rule as the full compact: fresh files re-partition by
       // the logical column; the mapping resets)
-      val partLogical = partColOf(spark, table, v).map { pc =>
-        colMapOf(spark, table, v)
-          .flatMap(_.collectFirst { case (n, p) if p == pc => n }).getOrElse(pc) }
+      val partLogical = partColOf(spark, table, v).map(logicalOf(colMapOf(spark, table, v), _))
       try out = commitAs(merged, table, v + 1, "merge", statsCols,
         partitionBy = partLogical)
       catch {
@@ -2327,9 +2376,7 @@ object TxTable {
     // a partitioned layout survives the full rewrite: the fresh files
     // re-partition by the LOGICAL column (the mapping resets, so
     // logical == physical afterwards — same rule as the column map)
-    val partLogical = partColOf(spark, table, v).map { pc =>
-      colMapOf(spark, table, v)
-        .flatMap(_.collectFirst { case (n, p) if p == pc => n }).getOrElse(pc) }
+    val partLogical = partColOf(spark, table, v).map(logicalOf(colMapOf(spark, table, v), _))
     commitAs(readVersion(spark, table, v).repartition(nOut), table, v + 1,
       "compact", partitionBy = partLogical)
   }
@@ -2400,7 +2447,8 @@ object TxTable {
       sys.error(s"TxTable: $table v$v has no partitioned layout"))
     require(hiddenSpecOf(pc).isDefined,
       s"TxTable: $table is identity-partitioned — use readPartition")
-    readPartition(spark, table, hiddenValueOf(pc, key), v)
+    val dir = hiddenValueOf(pc, key)
+    readKept(spark, table, v, filesOf(spark, table, v).filter(partValueOf(pc, _).contains(dir)))
   }
 
   /** PARTITION-RANGE read over the directory values, inclusive both
@@ -2413,32 +2461,32 @@ object TxTable {
     val v = if (version > 0) version else currentVersion(spark, table)
     val pc = partColOf(spark, table, v).getOrElse(
       sys.error(s"TxTable: $table v$v has no partitioned layout"))
-    val prefix = s"data/$pc="
-    val mine = filesOf(spark, table, v).filter { rel =>
-      rel.startsWith(prefix) && {
-        val seg = rel.substring(prefix.length, rel.indexOf('/', prefix.length))
-        val value = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg)
-        value >= lo && value <= hi
-      }
-    }
-    if (mine.isEmpty) readVersion(spark, table, v).limit(0)
-    else snapshotRead(spark, table, v, mine)
+    readKept(spark, table, v, filesOf(spark, table, v)
+      .filter(partValueOf(pc, _).exists(pv => pv >= lo && pv <= hi)))
   }
 
-  /** Escaped hive directory segment for one partition value — the
-    * exact escaping Spark's `partitionBy` writer used, so the manifest
-    * path match is byte-exact for any value.
+  /** Partition value of data file `rel` under layout column `pc`: its
+    * `data/<pc>=<value>/` directory segment, unescaped (the inverse of
+    * the escaping Spark's `partitionBy` writer applied). None for a
+    * file outside the layout.
     */
-  private def partDirOf(pc: String, value: String): String =
-    s"data/$pc=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .escapePathName(value)
+  private def partValueOf(pc: String, rel: String): Option[String] = {
+    val prefix = s"data/$pc="
+    val end = rel.indexOf('/', prefix.length)
+    if (!rel.startsWith(prefix) || end < 0) None
+    else Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .unescapePathName(rel.substring(prefix.length, end)))
+  }
 
-  /** PARTITION-PRUNED READ: exactly the named partition's files,
-    * selected from the manifest file list alone (the hive partition-
-    * pruning effect — a per-partition read plans and reads the
-    * partition's files, never the snapshot). `value` matches the
-    * partition column's STRING rendering (the directory name).
+  /** Logical name of physical column `p` under a mapping. */
+  private def logicalOf(map: Option[Seq[(String, String)]], p: String): String =
+    map.flatMap(_.collectFirst { case (n, `p`) => n }).getOrElse(p)
+
+  /** PARTITION-PRUNED READ: [[scan]] for the identity partition
+    * column's string rendering `= value` — the partition's files, chosen
+    * from the manifest file list alone (the hive partition-pruning
+    * effect: a per-partition read plans and reads the partition's files,
+    * never the snapshot).
     */
   def readPartition(spark: SparkSession, table: String, value: String,
                     version: Int = -1): DataFrame = {
@@ -2446,10 +2494,9 @@ object TxTable {
     val pc = partColOf(spark, table, v).getOrElse(
       sys.error(s"TxTable: $table v$v has no partitioned layout — commit with " +
         "partitionBy, or use readWhereValue (value-set skipping)"))
-    val dir = partDirOf(pc, value) + "/"
-    val mine = filesOf(spark, table, v).filter(_.startsWith(dir))
-    if (mine.isEmpty) readVersion(spark, table, v).limit(0)
-    else snapshotRead(spark, table, v, mine)
+    require(hiddenSpecOf(pc).isEmpty,
+      s"TxTable: $table uses the hidden layout '$pc' — use readHiddenPoint")
+    scan(spark, table, equalsString(logicalOf(colMapOf(spark, table, v), pc), value), v)
   }
 
   /** PER-PARTITION OPTIMIZE: rewrite ONLY one partition's files into
@@ -2469,8 +2516,7 @@ object TxTable {
     require(v >= 1, s"TxTable: nothing to compact at $table")
     val pc = partColOf(spark, table, v).getOrElse(
       sys.error(s"TxTable: $table v$v has no partitioned layout"))
-    val dir = partDirOf(pc, value) + "/"
-    val (mine, others) = filesOf(spark, table, v).partition(_.startsWith(dir))
+    val (mine, others) = filesOf(spark, table, v).partition(partValueOf(pc, _).contains(value))
     if (mine.size < 2) return (v, 0, others.size)
     val f = fs(spark, table)
     val bytes = mine.map(rel => f.getFileStatus(new Path(dataPath(table, rel))).getLen).sum
@@ -2843,55 +2889,6 @@ object TxTable {
     head + 1
   }
 
-  /** Per-file null counts of `colName` at version `v` (entries ride
-    * the stats array under '<col>#nulls'); files committed without
-    * null tracking are absent.
-    */
-  def nullCountsOf(spark: SparkSession, table: String, v: Int,
-                   colName: String): Map[String, Long] = {
-    val key = physOf(colMapOf(spark, table, v), colName) + "#nulls"
-    statsOf(spark, table, v)
-      .collect { case (fl, c, lo, _) if c == key => fl -> lo.toLong }.toMap
-  }
-
-  /** NULL-predicate file skipping (Delta's nullCount stats): for
-    * IS NULL, a file recording ZERO nulls cannot match; for
-    * IS NOT NULL, a file whose null count equals its recorded row
-    * count is all-null and cannot match (positional deletes only
-    * remove rows, so both prunes stay conservative). Files without a
-    * recorded count (or, for the all-null test, without a row count)
-    * are always kept.
-    */
-  def prunedFilesByNull(spark: SparkSession, table: String, v: Int,
-                        colName: String, wantNull: Boolean): Seq[String] = {
-    val nulls = nullCountsOf(spark, table, v, colName)
-    val rows = rowCountsOf(spark, table, v).toMap
-    filesOf(spark, table, v).filter { fl =>
-      nulls.get(fl) match {
-        case None => true
-        case Some(n) =>
-          if (wantNull) n > 0
-          else rows.get(fl).forall(rc => n < rc)
-      }
-    }
-  }
-
-  /** IS [NOT] NULL read with null-count file skipping: reads only the
-    * files [[prunedFilesByNull]] keeps, then applies the exact
-    * predicate. On a corpus where missing values cluster by file
-    * (staged backfills, per-source ingests) the completeness audit
-    * reads the incomplete files, not the snapshot.
-    */
-  def readWhereNull(spark: SparkSession, table: String, colName: String,
-                    wantNull: Boolean, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else currentVersion(spark, table)
-    val kept = prunedFilesByNull(spark, table, v, colName, wantNull)
-    val pred = if (wantNull) col(colName).isNull else col(colName).isNotNull
-    if (kept.isEmpty)
-      return readVersion(spark, table, v).limit(0).filter(pred)
-    snapshotRead(spark, table, v, kept).filter(pred)
-  }
-
   /** Atomic single-partition overwrite (Delta's `replaceWhere` on a
     * partition predicate): replace EXACTLY the named hive partition's
     * files with `df`'s content in one commit — the nightly
@@ -2919,14 +2916,12 @@ object TxTable {
       "partition values are path-derived; replace through the key surface")
     // the partition column is stored under its PHYSICAL name; the
     // caller's frame speaks logical names
-    val logicalPc = colMapOf(spark, table, v)
-      .flatMap(_.collectFirst { case (n, p) if p == pc => n }).getOrElse(pc)
+    val logicalPc = logicalOf(colMapOf(spark, table, v), pc)
     val bad = df.filter(col(logicalPc).isNull ||
       col(logicalPc).cast("string") =!= value).count()
     require(bad == 0L, s"TxTable: overwritePartition($value): $bad rows " +
       s"violate $logicalPc = '$value' — replaceWhere writes exactly one partition")
-    val dir = partDirOf(pc, value)
-    val keep = filesOf(spark, table, v).filterNot(_.startsWith(dir + "/"))
+    val keep = filesOf(spark, table, v).filterNot(partValueOf(pc, _).contains(value))
     commitAs(df, table, v + 1, "update", statsCols,
       carryFiles = Some(keep), countRows = countRows)
   }

@@ -40,13 +40,16 @@ private[graft] object Drain {
     apply(df.writeStream.foreachBatch(f), checkpoint)
 
   /** Drain into a uniquely named memory sink and return the
-    * materialized table.
+    * materialized table. The returned frame is analyzed against the
+    * sink's temp view and then holds the sink itself, so the view is
+    * dropped at once: the rows live as long as the frame, not the
+    * session.
     */
   def toMemory(df: DataFrame, mode: String, prefix: String,
                checkpoint: Option[String] = None): DataFrame = {
     val name = prefix + UUID.randomUUID().toString.replace("-", "")
     apply(df.writeStream.outputMode(mode).format("memory").queryName(name), checkpoint)
-    df.sparkSession.table(name)
+    try df.sparkSession.table(name) finally df.sparkSession.catalog.dropTempView(name)
   }
 
   private def drain(writer: DataStreamWriter[Row], checkpoint: String): Unit = {

@@ -559,4 +559,19 @@ class StreamingSpec extends SparkSpec {
       }
     }
   }
+
+  test("memory-sink runners drop their temp views and the returned rows still read") {
+    import spark.implicits._
+    import graft.sources.{TxChangesStream, TxTable}
+    def tempViews(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val table = java.nio.file.Files.createTempDirectory("graft_view_spec_").toString + "/t"
+    TxTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), table) shouldBe 1
+    val before = tempViews()
+    val hourly = Events.hourlyByType(spark, s"$sfDir/events.parquet")
+    val replayed = TxChangesStream.replayAll(spark, table)
+    (tempViews() -- before) shouldBe empty
+    hourly.count() should be > 0L
+    replayed.select("id").collect().map(_.getLong(0)).sorted shouldBe Array(1L, 2L)
+  }
 }

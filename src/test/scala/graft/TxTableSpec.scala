@@ -554,4 +554,82 @@ class TxTableSpec extends SparkSpec {
       """"n_files":0,"files":[]}""") shouldBe
       TxManifest(2, "append", commitMs = 9L, txn = Some(("app", 1L)))
   }
+
+  test("a probe no file can match reads as an empty frame with the snapshot's columns, planned over at most one file") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case r: LogicalRelation => r.relation }
+        .collect { case h: HadoopFsRelation => h.location.rootPaths.size }.sum
+    val flat = freshTable()
+    (0 until 3).foreach { i =>
+      TxTable.commit(Seq((10L * i + 1, s"c$i", Some(i + 0.5)), (10L * i + 2, s"c$i", Some(i + 1.5)))
+        .toDF("id", "cat", "x").coalesce(1), flat, statsCols = Seq("id"), bloomCols = Seq("id"),
+        setCols = Seq("cat"), nullCols = Seq("x"), countRows = true)
+    }
+    TxTable.renameColumn(spark, flat, "cat", "kind") shouldBe 4
+    TxTable.prunedFilesByKey(spark, flat, 4, "id", "99") shouldBe empty
+    val part = freshTable()
+    TxTable.commit(Seq((1L, "A", 1.0), (2L, "B", 2.0), (3L, "a:b", 3.0)).toDF("id", "cat", "price"),
+      part, partitionBy = Some("cat"), statsCols = Seq("id"))
+    // an escaped directory name still matches its value
+    TxTable.readPartition(spark, part, "a:b").select("id").collect().map(_.getLong(0)) shouldBe Array(3L)
+    Seq(
+      ("value", flat, TxTable.readWhereValue(spark, flat, "kind", "c9")),
+      ("key", flat, TxTable.readWhereKey(spark, flat, "id", "99")),
+      ("range", flat, TxTable.readWhere(spark, flat, "id", 500.0, 600.0)),
+      ("null", flat, TxTable.readWhereNull(spark, flat, "x", wantNull = true)),
+      ("partition", part, TxTable.readPartition(spark, part, "Z")),
+      ("partitioned range", part, TxTable.readWhere(spark, part, "id", 500.0, 600.0))
+    ).foreach { case (probe, table, df) =>
+      withClue(s"$probe probe: ") {
+        val snapshot = TxTable.read(spark, table)
+        df.dtypes.toSeq shouldBe snapshot.dtypes.toSeq
+        df.count() shouldBe 0L
+        df.inputFiles.size should be <= 1
+        plannedFiles(df) shouldBe 1
+        plannedFiles(snapshot) shouldBe 3
+      }
+    }
+  }
+
+  test("a conjunctive predicate prunes by every stat kind it names; an unknown conjunct never removes a file") {
+    val table = freshTable()
+    Seq(("x", true), ("x", false), ("y", true), ("y", false)).zipWithIndex.foreach {
+      case ((k, withNull), i) =>
+        TxTable.commit(Seq((2L * i, k, if (withNull) None else Some(1.0)), (2L * i + 1, k, Some(2.0)))
+          .toDF("id", "k", "v").coalesce(1), table, setCols = Seq("k"), nullCols = Seq("v"),
+          countRows = true)
+    }
+    val files = TxTable.filesOf(spark, table, 4)
+    val byValue = TxTable.prunedFilesByValue(spark, table, 4, "k", "x")
+    val byNull = TxTable.prunedFilesByNull(spark, table, 4, "v", wantNull = true)
+    byValue shouldBe Seq(files(0), files(1))
+    byNull shouldBe Seq(files(0), files(2))
+    val both = col("k") === "x" && col("v").isNull
+    TxTable.keptFiles(spark, table, 4, both) shouldBe byValue.intersect(byNull)
+    TxTable.scan(spark, table, both).select("id").collect().map(_.getLong(0)) shouldBe Array(0L)
+    val nonEmpty = udf((s: String) => s.nonEmpty)
+    Seq(col("id") === 0L || col("id") === 7L, nonEmpty(col("k")), col("k").isin("x", "y"))
+      .foreach { unknown =>
+        withClue(s"$unknown: ") {
+          TxTable.keptFiles(spark, table, 4, unknown) shouldBe files
+          TxTable.keptFiles(spark, table, 4, col("k") === "x" && unknown) shouldBe byValue
+          TxTable.keptFiles(spark, table, 4, unknown && col("v").isNull) shouldBe byNull
+          val pred = unknown && both
+          TxTable.scan(spark, table, pred).count() shouldBe
+            TxTable.read(spark, table).filter(pred).count()
+        }
+      }
+  }
+
+  test("a range on a decimal column, whose footer stats are unscaled, never skips a file") {
+    val table = freshTable()
+    Seq("12.34", "56.78").foreach(d => TxTable.commit(Seq((1L, d)).toDF("id", "d")
+      .select(col("id"), col("d").cast("decimal(7,2)").as("d")).coalesce(1), table,
+      statsCols = Seq("d")))
+    TxTable.prunedFiles(spark, table, 2, "d", 12.0, 13.0).size shouldBe 2
+    TxTable.deleteWhere(spark, table, "d", 12.0, 13.0)._2 shouldBe 2
+    TxTable.read(spark, table).select(col("d").cast("string")).collect().map(_.getString(0)) shouldBe
+      Array("56.78")
+  }
 }
