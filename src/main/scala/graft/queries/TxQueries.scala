@@ -129,8 +129,7 @@ object TxQueries {
       val lo = 1.0
       val hi = (width / 2).toDouble
       val (v, nRewritten, nCarried) =
-        sources.TxTable.deleteWhere(s, table, "o_orderkey", lo, hi,
-          statsCols = Seq("o_orderkey"))
+        sources.TxTable.deleteWhere(s, table, "o_orderkey", lo, hi)
       def summarize(df: org.apache.spark.sql.DataFrame, section: String, label: String) =
         df.agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -283,8 +282,7 @@ object TxQueries {
         when(pmod(col("o_orderkey"), lit(1500)).isin(1, 2, 3),
           pmod(col("o_orderkey"), lit(1500))).otherwise(lit(0)), 4,
         statsCols = Seq("o_orderkey"))
-      val (v, nRw, nCar) = sources.TxTable.compactSmall(s, table,
-        minBytes = 4096, statsCols = Seq("o_orderkey"))
+      val (v, nRw, nCar) = sources.TxTable.compactSmall(s, table, minBytes = 4096)
       val content = sources.TxTable.readVersion(s, table, v)
         .agg(count(lit(1)).as("n_rows"),
           sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -750,8 +748,7 @@ object TxQueries {
       val bump = (dec(col("o_totalprice")) *
         lit(new java.math.BigDecimal("1.1"))).cast("double")
       val (v2, nTouched, nCarried) = sources.TxTable.updateWhere(s, table,
-        "o_orderkey", 1.0, 500.0, Map("o_totalprice" -> bump),
-        statsCols = Seq("o_orderkey"))
+        "o_orderkey", 1.0, 500.0, Map("o_totalprice" -> bump))
       def summarize(df: DataFrame, label: String) =
         df.agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -900,7 +897,8 @@ object TxQueries {
       val table = sidePath("graft_txwa", dir)
       sources.TxTable.drop(s, table)
       val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
-      sources.TxTable.commit(ord.filter(col("o_orderkey") % 2 === 0), table)
+      sources.TxTable.commit(ord.filter(col("o_orderkey") % 2 === 0), table,
+        statsCols = Seq("o_orderkey"))
       sources.TxTable.stageWap(
         ord.filter(col("o_orderkey") % 2 === 1).repartition(2), table, "good")
       val preRows = sources.TxTable.read(s, table).count() // staged invisible
@@ -908,7 +906,7 @@ object TxQueries {
       val nBadKeys = sources.TxTable.readWap(s, table, "good")
         .filter(col("o_orderkey").isNull).count()
       val v2 = if (nBadKeys == 0L)
-        sources.TxTable.publishWap(s, table, "good", statsCols = Seq("o_orderkey"))
+        sources.TxTable.publishWap(s, table, "good")
         else -1
       // a second stage whose audit FAILS is abandoned; head untouched
       sources.TxTable.stageWap(
@@ -1077,8 +1075,7 @@ object TxQueries {
         docs.filter(col("doc_id") % 3 === 0).repartition(2), table,
         bloomCols = Seq("doc_id"), countRows = true)
       val b1 = docs.filter(col("doc_id") % 3 === 1 || col("doc_id") % 6 === 0)
-      val (v2, n1) = sources.TxTable.appendUnique(b1, table, "doc_id",
-        bloomCols = Seq("doc_id"), countRows = true)
+      val (v2, n1) = sources.TxTable.appendUnique(b1, table, "doc_id")
       val (v3, n2) = sources.TxTable.appendUnique(
         docs.filter(col("doc_id") % 6 === 0), table, "doc_id")
       val content = sources.TxTable.read(s, table)

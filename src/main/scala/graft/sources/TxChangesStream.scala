@@ -333,8 +333,9 @@ object TxChangesStream {
         val ins = batch
           .filter(col("_version").isin(vs: _*) && col("_change") === "insert")
           .drop("_change", "_version", "_commit_ms")
-        // bloomCols (typically the mirror key) keeps the index that
-        // accelerates this pipeline's OWN delete batches maintained
+        // bloomCols (typically the mirror key) declares the index that
+        // accelerates this pipeline's OWN delete batches; the mirror's
+        // manifest keeps it for every later commit
         val (_, didIns) = TxTable.commitIdempotent(ins, dstTable,
           mirrorMarker(appId, vs.last, del = false), batchId,
           bloomCols = bloomCols)

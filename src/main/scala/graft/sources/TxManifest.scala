@@ -9,6 +9,37 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   */
 private[graft] final case class TxDelta(base: Int, rm: Seq[String], nFiles: Int)
 
+/** A table's declared skipping index: which PHYSICAL columns carry
+  * which per-file entry. It is table state, not a write option — the
+  * manifest records it once, and every writer's commit gives the files
+  * it adds the entries it declares (the Delta
+  * `dataSkippingStatsColumns` shape).
+  *
+  * @param stats  min/max range stats (numeric columns only, see
+  *               [[TxTable.rangeTyped]])
+  * @param nulls  null counts
+  * @param blooms bloom filters
+  * @param sets   value sets
+  * @param rows   per-file row counts
+  */
+private[graft] final case class TxIndex(
+    stats: Seq[String] = Nil,
+    nulls: Seq[String] = Nil,
+    blooms: Seq[String] = Nil,
+    sets: Seq[String] = Nil,
+    rows: Boolean = false) {
+
+  /** Both declarations: this one's columns first, then `o`'s new ones. */
+  def ++(o: TxIndex): TxIndex = TxIndex((stats ++ o.stats).distinct,
+    (nulls ++ o.nulls).distinct, (blooms ++ o.blooms).distinct,
+    (sets ++ o.sets).distinct, rows || o.rows)
+
+  /** Every column name through `fn`; a name `fn` maps to None leaves. */
+  def columns(fn: String => Option[String]): TxIndex =
+    TxIndex(stats.flatMap(fn(_)), nulls.flatMap(fn(_)), blooms.flatMap(fn(_)),
+      sets.flatMap(fn(_)), rows)
+}
+
 /** One table version's manifest — the single model of the format
   * [[TxTable]] writes. RESOLVED (`delta = None`) it is the version's
   * whole state; the DELTA form (`delta = Some(…)`) keeps `files` and
@@ -40,6 +71,8 @@ private[graft] final case class TxDelta(base: Int, rm: Seq[String], nFiles: Int)
   * @param posd     positional deletion-vector sidecars, each holding
   *                 (_gf = data-file name, _gp = row ordinal) pairs
   * @param rows     per-file row counts (Delta's numRecords)
+  * @param index    the declared skipping index (PHYSICAL names, like
+  *                 `part`), applied to every file a commit adds
   */
 private[graft] final case class TxManifest(
     version: Int,
@@ -57,7 +90,8 @@ private[graft] final case class TxManifest(
     map: Option[Seq[(String, String)]] = None,
     vsets: Seq[(String, String, Seq[String])] = Nil,
     posd: Seq[String] = Nil,
-    rows: Seq[(String, Long)] = Nil) {
+    rows: Seq[(String, Long)] = Nil,
+    index: TxIndex = TxIndex()) {
 
   /** This state narrowed to `keep` (a subsequence of `files`): the
     * other files' per-file entries drop; tombstones and deletion
@@ -69,6 +103,12 @@ private[graft] final case class TxManifest(
       blooms = blooms.filter(e => k(e._1)), vsets = vsets.filter(e => k(e._1)),
       rows = rows.filter(e => k(e._1)))
   }
+
+  /** `added`'s files and per-file entries after this state's. */
+  def plus(added: TxManifest): TxManifest =
+    copy(files = files ++ added.files, stats = stats ++ added.stats,
+      blooms = blooms ++ added.blooms, vsets = vsets ++ added.vsets,
+      rows = rows ++ added.rows)
 
   /** Every file name — data files, entry keys and sidecars — through `fn`. */
   def mapFiles(fn: String => String): TxManifest =
@@ -176,6 +216,14 @@ private[graft] object TxManifest {
     entries(g, "rows", m.rows) { case (f, n) =>
       g.writeStringField("f", f); g.writeNumberField("n", n)
     }
+    if (m.index != TxIndex()) {
+      val x = m.index
+      g.writeObjectFieldStart("index")
+      Seq("stats" -> x.stats, "nulls" -> x.nulls, "bloom" -> x.blooms, "vset" -> x.sets)
+        .foreach { case (k, cs) => if (cs.nonEmpty) strings(g, k, cs) }
+      if (x.rows) g.writeNumberField("rows", 1)
+      g.writeEndObject()
+    }
   }
 
   private def malformed(what: String): Nothing =
@@ -224,7 +272,8 @@ private[graft] object TxManifest {
   }
 
   /** Absent optional fields take their defaults, so minimal manifests
-    * (`{"version":2,"op":"append","n_files":0,"files":[]}`) parse.
+    * (`{"version":2,"op":"append","n_files":0,"files":[]}`) parse, and a
+    * manifest without `index` declares no skipping index.
     */
   def parse(txt: String): TxManifest = {
     val n = tree(txt)
@@ -248,7 +297,10 @@ private[graft] object TxManifest {
       map = Option(n.get("map")).map(_ => list(n, "map")(e => (str(e, "n"), str(e, "p")))),
       vsets = list(n, "vset")(e => (str(e, "f"), str(e, "c"), textList(e, "v"))),
       posd = list(n, "posd")(e => str(e, "f")),
-      rows = list(n, "rows")(e => (str(e, "f"), long(e, "n"))))
+      rows = list(n, "rows")(e => (str(e, "f"), long(e, "n"))),
+      index = Option(n.get("index")).fold(TxIndex())(x => TxIndex(textList(x, "stats"),
+        textList(x, "nulls"), textList(x, "bloom"), textList(x, "vset"),
+        x.has("rows") && long(x, "rows") == 1L)))
   }
 
   def renderRef(kind: String, v: Int): String = write { g =>

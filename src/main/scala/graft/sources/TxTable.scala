@@ -308,7 +308,7 @@ object TxTable {
     * carry nothing) writes the self-contained FULL form, bounding every
     * reader's reconstruction walk. [[publishNext]] makes that choice
     * for every writer. Scalar fields (version, op, commit_ms, txn, ms,
-    * part, schema, map) and the tombstone and deletion-vector lists
+    * part, schema, map, index) and the tombstone and deletion-vector lists
     * (bounded by deletes-since-OPTIMIZE, not by file count) are whole
     * in BOTH forms, so their accessors read one manifest.
     */
@@ -354,6 +354,11 @@ object TxTable {
     * "overwrite"` starts the file list fresh (old files stay on disk
     * for time travel until vacuumed). Returns the committed version.
     *
+    * `statsCols`, `nullCols`, `bloomCols`, `setCols` and `countRows`
+    * DECLARE the table's skipping index ([[TxIndex]]): the manifest
+    * records the union of these and the table's earlier declaration, and
+    * every later writer gives the files it adds the same entries.
+    *
     * Concurrency: the manifest publish is a CAS. A PURE APPEND that
     * loses the race REBASES automatically — it has no read-set, so
     * landing after the competitor is semantically identical to landing
@@ -372,10 +377,10 @@ object TxTable {
              partitionBy: Option[String] = None,
              countRows: Boolean = false,
              nullCols: Seq[String] = Nil): Int =
-    commitAs(df, table, currentVersion(df.sparkSession, table) + 1, op, statsCols,
-      bloomCols = bloomCols, rebaseAppend = op == "append",
-      maxAttempts = maxAttempts, setCols = setCols, partitionBy = partitionBy,
-      countRows = countRows, nullCols = nullCols)
+    commitAs(df, table, currentVersion(df.sparkSession, table) + 1, op,
+      TxIndex(statsCols, nullCols, bloomCols, setCols, countRows),
+      rebaseAppend = op == "append", maxAttempts = maxAttempts,
+      partitionBy = partitionBy)
 
   /** Bloom-index geometry (recorded per manifest entry so it can evolve
     * without breaking old tables): m bits / k hashes give ~1% FP at
@@ -386,10 +391,6 @@ object TxTable {
   val BloomM: Int = 4096
   val BloomK: Int = 3
 
-  /** The version-pinned commit body — the race window lives between
-    * the head read and the manifest create, so tests (and a future
-    * retry loop) drive this directly with a chosen target version.
-    */
   /** Normalized (name, type) schema fingerprint: order- and
     * nullability-insensitive (parquet resolves columns by name; a
     * reordered append round-trips losslessly), type-strict.
@@ -397,19 +398,37 @@ object TxTable {
   private def schemaKey(s: org.apache.spark.sql.types.StructType): Seq[(String, String)] =
     s.fields.map(fd => (fd.name, fd.dataType.sql)).sortBy(_._1).toSeq
 
+  /** The Spark types whose per-file min/max is recorded (at commit) and
+    * read (by [[keptFiles]]): the ones whose footer statistics are their
+    * values, exactly or widened outward as doubles. Decimal footers hold
+    * UNSCALED integers, and other types' order is not the double order,
+    * so they record no range stats.
+    */
+  private[graft] def rangeTyped(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
+      case _ => false
+    }
+  }
+
+  /** The version-pinned commit body every writer publishes through —
+    * the race window lives between the head read and the manifest
+    * create, so tests (and a future retry loop) drive this directly
+    * with a chosen target version. `index` (LOGICAL names) joins the
+    * parent's declaration; the union, restricted to the columns the new
+    * files hold, is recorded and gathered for every file this commit
+    * adds ([[indexEntries]]).
+    */
   private[graft] def commitAs(df: DataFrame, table: String, v: Int, op: String,
-                              statsCols: Seq[String] = Nil,
+                              index: TxIndex = TxIndex(),
                               carryFiles: Option[Seq[String]] = None,
                               txn: Option[(String, Long)] = None,
-                              bloomCols: Seq[String] = Nil,
                               rebaseAppend: Boolean = false,
                               maxAttempts: Int = 5,
                               dfIsPhysical: Boolean = false,
-                              setCols: Seq[String] = Nil,
                               partitionBy: Option[String] = None,
-                              preNamed: Option[Seq[String]] = None,
-                              countRows: Boolean = false,
-                              nullCols: Seq[String] = Nil): Int = {
+                              preNamed: Option[Seq[String]] = None): Int = {
     require(op == "append" || op == "overwrite" || op == "compact" ||
       op == "delete" || op == "update" || op == "evolve" || op == "merge",
       s"unknown op $op")
@@ -423,9 +442,9 @@ object TxTable {
     // because physical names never change once a file is written.
     // Snapshot-REPLACING ops (overwrite / merge / full compact) reset
     // the mapping: their fresh files use logical names physically.
-    val mapped = v > 1 && (op == "append" || op == "evolve" || carryFiles.isDefined)
+    val carrying = v > 1 && (op == "append" || op == "evolve" || carryFiles.isDefined)
     val parentMap: Option[Seq[(String, String)]] =
-      if (mapped) colMapOf(spark, table, v - 1) else None
+      if (carrying) colMapOf(spark, table, v - 1) else None
     val writeMap: Option[Seq[(String, String)]] =
       if (op == "evolve")
         // evolution under a mapping: new columns enter with physical =
@@ -484,39 +503,33 @@ object TxTable {
     // column last, and the recorded schema must not drift with them);
     // columns new to this commit (evolve) append at the end
     val logicalSchema: StructType =
-      if (!(carryFiles.isDefined || ((op == "append" || op == "evolve") && v > 1))
-          || v <= 1) logicalSchema0
+      if (!carrying) logicalSchema0
       else manifestSchema(spark, table, v - 1).map { ps =>
         StructType(
           ps.fieldNames.toSeq.flatMap(n => logicalSchema0.fields.find(_.name == n)) ++
           logicalSchema0.fields.filterNot(f => ps.fieldNames.contains(f.name)))
       }.getOrElse(logicalSchema0)
-    val physStatsCols = statsCols.map(c => physOf(writeMap, c))
-    val physBloomCols = bloomCols.map(c => physOf(writeMap, c))
-    val physSetCols = setCols.map(c => physOf(writeMap, c))
     // null counts ride the stats array under '<col>#nulls' — '#' in a
     // tracked name would collide with that namespace
-    require((physStatsCols ++ nullCols).forall(!_.contains("#")),
+    require((index.stats ++ index.nulls).forall(!_.contains("#")),
       "TxTable: statsCols/nullCols names may not contain '#'")
-    val physNullCols = nullCols.map(c => physOf(writeMap, c))
+    val own = index.columns(c => Some(physOf(writeMap, c)))
     // PARTITIONED LAYOUT (the hive data/<col>=<val>/ shape): a commit
     // carrying parent files INHERITS the parent's partition column —
     // mixing partitioned and flat files under one basePath read is
     // unreadable, so a carrying commit may never change the layout
     // (an overwrite/merge/full-compact may, like the column mapping).
-    val carrying = carryFiles.isDefined ||
-      ((op == "append" || op == "evolve") && v > 1)
     val parentPart: Option[String] =
-      if (carrying && v > 1) partColOf(spark, table, v - 1) else None
+      if (carrying) partColOf(spark, table, v - 1) else None
     val physPart: Option[String] =
       partitionBy.map(c => physOf(writeMap, c)).orElse(parentPart)
-    if (carrying && v > 1) require(physPart == parentPart,
+    if (carrying) require(physPart == parentPart,
       s"TxTable: partition layout mismatch at $table v$v — parent layout is " +
       s"${parentPart.fold("unpartitioned")(c => s"partitioned by '$c'")} but this " +
       s"commit asked for ${physPart.fold("unpartitioned")(c => s"'$c'")}; layout " +
       "changes require op=\"overwrite\" (or a full compact)")
     physPart.foreach { pc =>
-      require(!(physStatsCols ++ physBloomCols ++ physSetCols).contains(pc),
+      require(!(own.stats ++ own.blooms ++ own.sets).contains(pc),
         s"TxTable: column '$pc' is the partition column — its value is in the " +
         "file path and partition pruning is already exact; drop it from " +
         "statsCols/bloomCols/setCols")
@@ -570,181 +583,37 @@ object TxTable {
       f.delete(tmp, true)
       out
     }
-    // DATA-SKIPPING STATS (the Delta data-skipping shape: per-file
-    // min/max recorded in the transaction log at commit time, so a
-    // range read prunes FILES from the manifest alone — no footer
-    // round-trips on the read path, which at 100 TB is millions of
-    // them). Extracted here from the just-written parquet FOOTERS
-    // (metadata-only reads, one per new file, driver-side like the
-    // renames); numeric columns only — a min/max on floor-truncated
-    // binary stats would prune wrongly. Append carries the parent's
-    // stats forward with its files; files without stats are always
-    // kept by the pruner (conservative by construction). Keyed by
-    // INDEX into `named` so an append rebase re-keys by rename.
-    val newStats: Seq[(Int, String, Double, Double)] =
-      if (physStatsCols.isEmpty && physNullCols.isEmpty) Seq.empty
-      else {
-        import scala.jdk.CollectionConverters._
-        val conf = spark.sparkContext.hadoopConfiguration
-        named.zipWithIndex.flatMap { case (rel, idx) =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(s"$table/$rel"), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            val blocks = r.getFooter.getBlocks.asScala.toSeq
-            physStatsCols.flatMap { c =>
-              val perBlock = blocks.map { b =>
-                b.getColumns.asScala.find(_.getPath.toDotString == c)
-                  .map(_.getStatistics)
-                  .filter(s => s != null && s.hasNonNullValue)
-                  .flatMap { s =>
-                    (s.genericGetMin, s.genericGetMax) match {
-                      case (lo: Number, hi: Number) =>
-                        // BIGINT beyond 2^53 can round INWARD in the
-                        // double convert (recorded lo above the true
-                        // min), turning the documented-conservative
-                        // pruner into a silent row loss — widen such
-                        // stats OUTWARD one ulp so pruning stays safe
-                        def safe(n: Number, up: Boolean): Double = {
-                          val d = n.doubleValue()
-                          n match {
-                            case l: java.lang.Long
-                              if l.longValue > (1L << 53) || l.longValue < -(1L << 53) =>
-                              if (up) Math.nextUp(d) else Math.nextDown(d)
-                            case _ => d
-                          }
-                        }
-                        Some((safe(lo, up = false), safe(hi, up = true)))
-                      case _ => None // non-numeric: no skipping stats
-                    }
-                  }
-              }
-              if (perBlock.nonEmpty && perBlock.forall(_.isDefined))
-                Some((idx, c, perBlock.map(_.get._1).min, perBlock.map(_.get._2).max))
-              else None
-            } ++
-            // NULL-COUNT entries (Delta's nullCount data-skipping
-            // shape, works for ANY column type): the footer records
-            // numNulls per block; a missing/-unknown count on any
-            // block records nothing (kept conservatively). Riding the
-            // stats array under '<col>#nulls' means the entries
-            // carry/rebase/clone/restore/fast-forward with their
-            // files through the machinery stats already have.
-            physNullCols.flatMap { c =>
-              val perBlock = blocks.map { b =>
-                b.getColumns.asScala.find(_.getPath.toDotString == c)
-                  .map(_.getStatistics)
-                  .collect { case st if st != null && st.isNumNullsSet &&
-                      st.getNumNulls >= 0 => st.getNumNulls }
-              }
-              if (perBlock.nonEmpty && perBlock.forall(_.isDefined)) {
-                val n = perBlock.map(_.get).sum.toDouble
-                Some((idx, c + "#nulls", n, n))
-              } else None
-            }
-          } finally r.close()
-        }
-      }
-    // PER-FILE BLOOM INDEX (the Delta bloom-filter-index shape): the
-    // point-lookup complement of the min/max stats — on a column the
-    // layout does NOT cluster (high-cardinality ids), every file's
-    // [min,max] spans the domain and range pruning keeps everything;
-    // a per-file bloom over the md5-affine portable family prunes by
-    // MEMBERSHIP instead (no false negatives — a key's file is always
-    // kept; false positives only cost extra reads). The build is ONE
-    // distributed pass over the newly-written files only (the standard
-    // index-build cost); blooms carry forward with their files like
-    // stats. The bitset AGGREGATES EXECUTOR-SIDE — collect_set of bit
-    // positions per file, partial-agg'd map-side — so the driver
-    // receives newFiles rows (each ≤ m distinct bits), never
-    // newFiles × m exploded rows: a 10⁵-file backfill commit collects
-    // 10⁵ rows, the same scale class as the manifest's own file list.
-    // Index-keyed like stats.
-    val newBloom: Seq[(Int, String, Int, Int, String)] =
-      if (physBloomCols.isEmpty || named.isEmpty) Seq.empty
-      else {
-        val idxOf = named.zipWithIndex.map { case (rel, i) =>
-          rel.stripPrefix("data/") -> i }.toMap
-        val paths = named.map(rel => s"$table/$rel")
-        val pathsSchema = graft.core.ParquetFooters.schemaOf(spark, paths.head)
-        physBloomCols.flatMap { c =>
-          val base = spark.read.schema(pathsSchema).parquet(paths: _*)
-            .select(input_file_name().as("_f"), col(c).cast("string").as("_v"))
-            .filter(col("_v").isNotNull)
-          val h = graft.functions.Hashing.portableHash(col("_v"))
-          val bits = (0 until BloomK).map(j =>
-            pmod(graft.functions.Hashing.affine(j, h), lit(BloomM.toLong)))
-          base.select(col("_f"), explode(array(bits: _*)).as("_b"))
-            .groupBy(col("_f")).agg(collect_set(col("_b")).as("_bits"))
-            .collect()
-            .map { r =>
-              val bytes = new Array[Byte](BloomM / 8)
-              r.getSeq[Long](1).foreach { bl =>
-                val b = bl.toInt
-                bytes(b >> 3) = (bytes(b >> 3) | (1 << (b & 7))).toByte
-              }
-              val fp = r.getString(0)
-              val name = fp.substring(fp.lastIndexOf('/') + 1)
-              (idxOf(name), c, BloomM, BloomK,
-                java.util.Base64.getEncoder.encodeToString(bytes))
-            }.toSeq
-        }
-      }
-    // PER-FILE VALUE SETS (categorical file skipping): one distributed
-    // distinct pass over the new files per declared column, bounded
-    // collect (≤ nfiles × VsetMaxValues rows) — same scale class as
-    // the bloom build. Files exceeding the cap record nothing (kept
-    // conservatively); a value-clustered layout keeps sets tiny.
-    val newVsets: Seq[(Int, String, Seq[String])] =
-      if (physSetCols.isEmpty || named.isEmpty) Seq.empty
-      else {
-        val idxOf = named.zipWithIndex.map { case (rel, i) =>
-          rel.stripPrefix("data/") -> i }.toMap
-        val paths = named.map(rel => s"$table/$rel")
-        val pathsSchema = graft.core.ParquetFooters.schemaOf(spark, paths.head)
-        physSetCols.flatMap { c =>
-          spark.read.schema(pathsSchema).parquet(paths: _*)
-            .select(input_file_name().as("_f"), col(c).cast("string").as("_v"))
-            .filter(col("_v").isNotNull).distinct().collect()
-            .groupBy(_.getString(0)).toSeq.flatMap { case (fp, rows) =>
-              val vs = rows.map(_.getString(1)).toSeq.sorted
-              if (vs.isEmpty || vs.size > VsetMaxValues) None
-              else Some((idxOf(fp.substring(fp.lastIndexOf('/') + 1)), c, vs))
-            }
-        }
-      }
-    // PER-FILE ROW COUNTS (Delta's numRecords): read from the
-    // just-written footers like the skipping stats — metadata-only,
-    // one footer per NEW file, driver-side. Carried files keep their
-    // parent-recorded counts; [[metaCount]] then answers COUNT(*)
-    // from the manifest alone. Index-keyed like stats.
-    val newRows: Seq[(Int, Long)] =
-      if (!countRows || named.isEmpty) Seq.empty
-      else {
-        import scala.jdk.CollectionConverters._
-        val conf = spark.sparkContext.hadoopConfiguration
-        named.zipWithIndex.map { case (rel, idx) =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(s"$table/$rel"), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try (idx, r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-          finally r.close()
-        }
-      }
+    // THE SKIPPING INDEX this commit records: the parent's declaration
+    // (its physical names read back through the parent's mapping, then
+    // written through this commit's — identity for a carrying commit,
+    // logical names for a snapshot-replacing one) plus this commit's own,
+    // restricted to columns the new files hold
+    val present = physDfW.columns.toSet -- physPart
+    def declared(parent: Option[TxManifest]): TxIndex =
+      (parent.fold(TxIndex())(p => p.index.columns(c =>
+        Some(physOf(writeMap, logicalOf(p.map, c))))) ++ own)
+        .columns(c => Some(c).filter(present))
+    // the new files' entries, gathered once per declaration (a rebase
+    // onto a parent that declares more gathers again)
+    var gathered: Option[(TxIndex, TxManifest)] = None
     // THE PUBLISH LOOP. Attempt 1 targets `v`; a pure append losing the
     // CAS rebases — re-reads the head, re-runs the schema gate against
     // the new parent, renames the staged files to the new target (a
     // driver-side metadata op; the distributed write is NOT redone —
     // the Delta rule: an AddFile-only commit is conflict-free), and
     // publishes again. Everything parent-derived (carried files/stats/
-    // blooms/tombs, the ms flag, the monotonic timestamp) recomputes
-    // per attempt.
+    // blooms/tombs, the ms flag, the declaration, the monotonic
+    // timestamp) recomputes per attempt.
     var target = v
     var attempt = 0
     var out = -1
     while (out < 0) {
       attempt += 1
       val parent = if (target > 1) Some(snapshotOf(spark, table, target - 1)) else None
+      val decl = declared(parent)
+      if (!gathered.exists(_._1 == decl))
+        gathered = Some(decl -> indexEntries(spark, table, named,
+          StructType(physDfW.schema.filter(fd => present(fd.name))), decl))
       // carryFiles overrides the default carry rule: a copy-on-write
       // op (delete) carries exactly the UNTOUCHED subset of the
       // parent's files — the caller decided which from manifest stats.
@@ -758,17 +627,13 @@ object TxTable {
       // through readVersion / the MoR filters).
       val kept = parent.filter(_ => carried.nonEmpty)
         .fold(TxManifest(target, op))(_.carrying(carried))
-      val next = kept.copy(version = target, op = op, txn = txn,
+      val next = kept.plus(gathered.get._2).copy(version = target, op = op, txn = txn,
         // schema-evolution flag: sticky from the first evolve commit on
         // (every later snapshot mixes footers, so every later read needs
         // mergeSchema), reset by an overwrite/compact (fresh uniform files)
         ms = op == "evolve" || kept.ms,
         part = physPart, schema = Some(logicalSchema.toDDL), map = writeMap,
-        files = kept.files ++ named,
-        stats = kept.stats ++ newStats.map { case (i, c, lo, hi) => (named(i), c, lo, hi) },
-        blooms = kept.blooms ++ newBloom.map { case (i, c, m, k, b) => (named(i), c, m, k, b) },
-        vsets = kept.vsets ++ newVsets.map { case (i, c, vs) => (named(i), c, vs) },
-        rows = kept.rows ++ newRows.map { case (i, n) => (named(i), n) })
+        index = decl)
       if (publishNext(f, table, parent, next, nonce)) {
         out = target
       } else if (!(rebaseAppend && op == "append" && attempt < maxAttempts)) {
@@ -786,18 +651,115 @@ object TxTable {
           s"TxTable: commit conflict at $table — a concurrent writer changed the " +
           "partition layout; the staged append carries the old layout (retry)")
         if (newTarget != target) {
-          named = named.zipWithIndex.map { case (rel, i) =>
+          val renamed = named.zipWithIndex.map { case (rel, i) =>
             val dir = rel.substring(0, rel.lastIndexOf('/')) // keeps <col>=<val>
             val nrel = s"$dir/v${newTarget}_${i}_$nonce.parquet"
             require(f.rename(new Path(s"$table/$rel"), new Path(s"$table/$nrel")),
               s"TxTable: rebase rename failed for $rel")
-            nrel
+            rel -> nrel
           }
+          named = renamed.map(_._2)
+          gathered = gathered.map { case (d, m) => (d, m.mapFiles(renamed.toMap)) }
           target = newTarget
         }
       }
     }
     out
+  }
+
+  /** The skipping entries declaration `index` asks of a commit's new
+    * files `named` (PHYSICAL columns, typed by `schema`), as a manifest
+    * fragment holding those files. Recorded at commit, they let a read
+    * prune FILES from the manifest alone (the Delta data-skipping shape:
+    * no footer round-trip per file on the read path). Two passes:
+    *  - ONE FOOTER WALK, driver-side, one open per new file: min/max of
+    *    the [[rangeTyped]] stats columns (BIGINT past 2^53 widened
+    *    outward one ulp, so a double bound never rounds inward), null
+    *    counts as '<col>#nulls' entries with lo = hi = the count, and
+    *    the row count. A block without the statistic records nothing
+    *    for that column, and the pruner keeps such files;
+    *  - ONE SPARK JOB over the new files for every bloom and value-set
+    *    column, aggregated executor-side to one row per (file, column):
+    *    a bloom's bit positions (k md5-affine hashes mod m of each
+    *    non-null string form — membership pruning with no false
+    *    negatives), a value set's distinct string forms (exact
+    *    categorical pruning; a file past [[VsetMaxValues]] records none,
+    *    dropped before the collect).
+    */
+  private def indexEntries(spark: SparkSession, table: String, named: Seq[String],
+                           schema: StructType, index: TxIndex): TxManifest = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.column.statistics.Statistics
+    val ranged = index.stats.filter(c => rangeTyped(schema(c).dataType))
+    // per new file: (range and null-count entries, row count)
+    val footers: Seq[(Seq[(String, String, Double, Double)], Option[(String, Long)])] =
+      if (ranged.isEmpty && index.nulls.isEmpty && !index.rows) Nil
+      else named.map { rel =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new Path(s"$table/$rel"), spark.sparkContext.hadoopConfiguration))
+        try {
+          val blocks = r.getFooter.getBlocks.asScala.toSeq
+          // column c's statistic in every block, or None
+          def perBlock[A](c: String)(stat: Statistics[_] => Option[A]): Option[Seq[A]] = {
+            val xs = blocks.map(b => b.getColumns.asScala.find(_.getPath.toDotString == c)
+              .flatMap(m => Option(m.getStatistics)).flatMap(stat))
+            if (xs.nonEmpty && xs.forall(_.isDefined)) Some(xs.flatten) else None
+          }
+          def widened(n: Any, up: Boolean): Double = n match {
+            case l: java.lang.Long if l.longValue > (1L << 53) || l.longValue < -(1L << 53) =>
+              if (up) Math.nextUp(l.doubleValue) else Math.nextDown(l.doubleValue)
+            case x: java.lang.Number => x.doubleValue
+          }
+          val ranges = ranged.flatMap(c => perBlock(c)(st =>
+            if (!st.hasNonNullValue) None
+            else Some((widened(st.genericGetMin, up = false),
+              widened(st.genericGetMax, up = true))))
+            .map(bs => (rel, c, bs.map(_._1).min, bs.map(_._2).max)))
+          val nulls = index.nulls.flatMap(c => perBlock(c)(st =>
+            if (st.isNumNullsSet && st.getNumNulls >= 0) Some(st.getNumNulls) else None)
+            .map { ns => val n = ns.sum.toDouble; (rel, c + "#nulls", n, n) })
+          (ranges ++ nulls, if (index.rows) Some(rel -> blocks.map(_.getRowCount).sum) else None)
+        } finally r.close()
+      }
+    // per (new file, probed column): the bit positions of a bloom column
+    // (index < nb) or the values of a set column, as strings
+    val nb = index.blooms.size
+    val probed: Seq[(String, Int, Seq[String])] =
+      if (nb + index.sets.size == 0 || named.isEmpty) Nil
+      else {
+        val relOf = named.map(rel => rel.substring(rel.lastIndexOf('/') + 1) -> rel).toMap
+        val order = named.zipWithIndex.toMap
+        def item(i: Int, x: Column) = struct(lit(i).as("c"), x.cast("string").as("x"))
+        val items = index.blooms.zipWithIndex.flatMap { case (c, i) =>
+          val v = col(c).cast("string")
+          val h = graft.functions.Hashing.portableHash(v)
+          (0 until BloomK).map(j => item(i,
+            when(v.isNotNull, pmod(graft.functions.Hashing.affine(j, h), lit(BloomM.toLong)))))
+        } ++ index.sets.zipWithIndex.map { case (c, i) => item(nb + i, col(c)) }
+        spark.read.schema(StructType((index.blooms ++ index.sets).distinct.map(schema(_))))
+          .parquet(named.map(rel => s"$table/$rel"): _*)
+          .select(input_file_name().as("_f"), explode(array(items: _*)).as("_e"))
+          .filter(col("_e.x").isNotNull)
+          .groupBy(col("_f"), col("_e.c").as("_c")).agg(collect_set(col("_e.x")).as("_s"))
+          .filter(col("_c") < nb || size(col("_s")) <= VsetMaxValues)
+          .collect().toSeq
+          .map { r =>
+            val fp = r.getString(0)
+            (relOf(fp.substring(fp.lastIndexOf('/') + 1)), r.getInt(1), r.getSeq[String](2))
+          }
+          .sortBy { case (rel, i, _) => (order(rel), i) } // bytes independent of collect order
+      }
+    def bitset(bits: Seq[String]): String = {
+      val bytes = new Array[Byte](BloomM / 8)
+      bits.map(_.toInt).foreach(b => bytes(b >> 3) = (bytes(b >> 3) | (1 << (b & 7))).toByte)
+      java.util.Base64.getEncoder.encodeToString(bytes)
+    }
+    TxManifest(0, "", files = named, stats = footers.flatMap(_._1), rows = footers.flatMap(_._2),
+      blooms = probed.collect { case (rel, i, bits) if i < nb =>
+        (rel, index.blooms(i), BloomM, BloomK, bitset(bits)) },
+      vsets = probed.collect { case (rel, i, vs) if i >= nb =>
+        (rel, index.sets(i - nb), vs.sorted) })
   }
 
   /** Snapshot read of version `v` — exactly its manifest's files, as
@@ -827,8 +789,9 @@ object TxTable {
     readVersion(spark, table, currentVersion(spark, table))
 
   /** Per-file data-skipping stats of version `v`'s snapshot: (file,
-    * column, min, max), resolved through the delta-log. Empty for
-    * commits made without `statsCols`.
+    * column, min, max), resolved through the delta-log. A file has
+    * entries for the range-stats and null-count columns its table
+    * declared when the file was added.
     */
   def statsOf(spark: SparkSession, table: String, v: Int): Seq[(String, String, Double, Double)] =
     snapshotOf(spark, table, v).stats
@@ -855,8 +818,8 @@ object TxTable {
     *  - `=` on the string form (a string column, or any column cast to
     *    string, against a constant): value set, bloom, and the
     *    identity-partition directory;
-    *  - `>=`, `>`, `<=`, `<` (so `between`) on a non-decimal numeric
-    *    column against a numeric constant: [min, max];
+    *  - `>=`, `>`, `<=`, `<` (so `between`) on a [[rangeTyped]] column
+    *    against a numeric constant: [min, max];
     *  - `IS NULL` / `IS NOT NULL`: null count, and row count for the
     *    all-null test (positional deletes only remove rows).
     * Any other node, an unresolvable predicate and a missing stat keep
@@ -887,11 +850,11 @@ object TxTable {
     }
     // stats are doubles: the analyzer's widening cast to double keeps
     // their order (BIGINT stats past 2^53 are widened outward at commit)
-    val numeric = Set[DataType](ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
     object NumCol {
       def unapply(e: Expression): Option[String] = e match {
-        case a: AttributeReference if numeric(a.dataType) => Some(phys(a))
-        case Cast(a: AttributeReference, DoubleType, _, _) if numeric(a.dataType) => Some(phys(a))
+        case a: AttributeReference if rangeTyped(a.dataType) => Some(phys(a))
+        case Cast(a: AttributeReference, DoubleType, _, _) if rangeTyped(a.dataType) =>
+          Some(phys(a))
         case _ => None
       }
     }
@@ -1029,8 +992,9 @@ object TxTable {
     snapshotOf(spark, table, v).posd
 
   /** Per-file value-set skipping entries of version `v`: (file,
-    * physical column, distinct values). Empty for commits made without
-    * `setCols` and for files exceeding [[VsetMaxValues]].
+    * physical column, distinct values), for the value-set columns the
+    * table declared when each file was added; none for files exceeding
+    * [[VsetMaxValues]].
     */
   def valueSetsOf(spark: SparkSession, table: String,
                   v: Int): Seq[(String, String, Seq[String])] =
@@ -1043,8 +1007,8 @@ object TxTable {
     * on a 10⁶-file table this is a manifest read, not a 100 TB scan.
     *
     * Refuses LOUDLY (rather than degrade to a scan silently) when the
-    * count is underivable: a file without a recorded count (its commit
-    * ran with `countRows = false`), or outstanding KEY-form tombstones
+    * count is underivable: a file without a recorded count (added while
+    * the table declared no row counts), or outstanding KEY-form tombstones
     * (one key may match any number of rows — only OPTIMIZE/compaction
     * folds them away). Callers fall back to `read(...).count()`.
     */
@@ -1092,7 +1056,7 @@ object TxTable {
     require(missing.isEmpty,
       s"TxTable: ${missing.size} of ${files.size} files at $table v$v have no " +
       s"recorded row count (first: ${missing.headOption.getOrElse("")}) — " +
-      "commit with countRows = true to record them; falling back to a scan " +
+      "declare countRows = true to record them; falling back to a scan " +
       "is the caller's call, not a silent default")
     val posd = posDeletesOf(spark, table, v)
     val deleted: Map[String, Long] =
@@ -1312,8 +1276,7 @@ object TxTable {
     * @return (version, nRewrittenFiles, nCarriedFiles)
     */
   def deleteWhere(spark: SparkSession, table: String, colName: String,
-                  lo: Double, hi: Double,
-                  statsCols: Seq[String] = Nil): (Int, Int, Int) = {
+                  lo: Double, hi: Double): (Int, Int, Int) = {
     val v = currentVersion(spark, table)
     require(v >= 1, s"TxTable: cannot delete from non-existent table $table")
     val all = filesOf(spark, table, v)
@@ -1330,7 +1293,7 @@ object TxTable {
     val survivors = morFilter(spark, table, v,
         rawRead(spark, table, v, touch))
       .filter(col(phys).isNull || !(col(phys) >= lo && col(phys) <= hi))
-    val nv = commitAs(survivors, table, v + 1, "delete", statsCols,
+    val nv = commitAs(survivors, table, v + 1, "delete",
       carryFiles = Some(untouched), dfIsPhysical = true)
     (nv, touch.size, untouched.size)
   }
@@ -1355,8 +1318,7 @@ object TxTable {
     *         unchanged with 0 rewrites when no file can match
     */
   def updateWhere(spark: SparkSession, table: String, colName: String,
-                  lo: Double, hi: Double, assign: Map[String, Column],
-                  statsCols: Seq[String] = Nil): (Int, Int, Int) = {
+                  lo: Double, hi: Double, assign: Map[String, Column]): (Int, Int, Int) = {
     require(assign.nonEmpty, "updateWhere needs at least one assignment")
     val v = currentVersion(spark, table)
     require(v >= 1, s"TxTable: cannot update non-existent table $table")
@@ -1377,7 +1339,7 @@ object TxTable {
         s"TxTable: updateWhere target column '$name' not in $table")
       d.withColumn(p, when(pred, expr).otherwise(col(p)))
     }
-    val nv = commitAs(rewritten, table, v + 1, "update", statsCols,
+    val nv = commitAs(rewritten, table, v + 1, "update",
       carryFiles = Some(untouched), dfIsPhysical = true)
     (nv, touch.size, untouched.size)
   }
@@ -1462,14 +1424,15 @@ object TxTable {
     * existence check is manifest-bloom-pruned: only files whose bloom
     * can contain a batch key are read, and only the KEY COLUMN of
     * those (column-pruned scan) — on a bloomed table a small batch
-    * probes a handful of files, never the snapshot. Commits with
-    * `countRows`/stat/bloom options like [[commit]]; returns (version,
-    * rows actually inserted). A fully-duplicate batch is a NO-OP (no
-    * commit — Delta's empty-transaction rule), returning (v, 0).
+    * probes a handful of files, never the snapshot. The inserted files
+    * get the table's declared skipping entries; `bloomCols` and
+    * `countRows` declare more, as in [[commit]] (the way to index a
+    * table this call creates). Returns (version, rows actually
+    * inserted). A fully-duplicate batch is a NO-OP (no commit — Delta's
+    * empty-transaction rule), returning (v, 0).
     */
   def appendUnique(df: DataFrame, table: String, keyCol: String,
-                   statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-                   setCols: Seq[String] = Nil,
+                   bloomCols: Seq[String] = Nil,
                    countRows: Boolean = false): (Int, Long) = {
     val spark = df.sparkSession
     val v = currentVersion(spark, table)
@@ -1493,8 +1456,7 @@ object TxTable {
     val staged = fresh.localCheckpoint(true)
     val n = staged.count()
     if (n == 0L) return (math.max(v, 0), 0L)
-    val nv = commit(staged, table, "append", statsCols = statsCols,
-      bloomCols = bloomCols, setCols = setCols, countRows = countRows)
+    val nv = commit(staged, table, "append", bloomCols = bloomCols, countRows = countRows)
     (nv, n)
   }
 
@@ -1685,8 +1647,11 @@ object TxTable {
 
   /** Shared metadata-only publish for rename/drop: files, stats,
     * blooms, tombstones, and the ms flag carry verbatim from the head;
-    * only the schema and mapping change. Rides the same CAS as every
-    * commit — losing to a concurrent writer refuses loudly.
+    * only the schema and mapping change, and the declared index keeps
+    * the physical columns the new mapping still holds (rename keeps
+    * them all — names are physical; drop sheds the dropped one, which
+    * later files no longer hold). Rides the same CAS as every commit —
+    * losing to a concurrent writer refuses loudly.
     */
   private def metadataCommit(spark: SparkSession, table: String, op: String,
                              schema1: StructType,
@@ -1696,8 +1661,10 @@ object TxTable {
     // O(delta) between checkpoints: the manifest edit is only the new
     // schema + mapping (scalar fields) — rename/drop on a 10⁶-file
     // table writes kilobytes
+    val live = map1.map(_._2).toSet
     publishOrConflict(fs(spark, table), table, Some(head), head.copy(version = v + 1,
-      op = op, txn = None, schema = Some(schema1.toDDL), map = Some(map1)))
+      op = op, txn = None, schema = Some(schema1.toDDL), map = Some(map1),
+      index = head.index.columns(c => Some(c).filter(live))))
     v + 1
   }
 
@@ -1715,12 +1682,14 @@ object TxTable {
     * conflict triggers ONE rescan that finds the winner's txn and
     * returns it as already-applied — never a double apply.
     *
+    * `bloomCols` declares blooms as in [[commit]] (the way to index a
+    * table the first batch creates, e.g. a CDC mirror).
+    *
     * @return (version, applied) — applied=false means the batch was
     *         already committed (by this call's rescan or an earlier run)
     */
   def commitIdempotent(df: DataFrame, table: String, appId: String,
                        batchId: Long, op: String = "append",
-                       statsCols: Seq[String] = Nil,
                        bloomCols: Seq[String] = Nil): (Int, Boolean) = {
     require(appId.nonEmpty && !appId.exists(c => c == '"' || c == '\\' || c.isControl),
       s"TxTable: appId must be a plain identifier, got '$appId'")
@@ -1731,7 +1700,7 @@ object TxTable {
       case None =>
         try {
           val nv = commitAs(df, table, currentVersion(spark, table) + 1, op,
-            statsCols, txn = Some((appId, batchId)), bloomCols = bloomCols)
+            TxIndex(blooms = bloomCols), txn = Some((appId, batchId)))
           (nv, true)
         } catch {
           case e: RuntimeException if e.getMessage != null &&
@@ -1842,7 +1811,7 @@ object TxTable {
     */
   def commitChecked(df: DataFrame, table: String,
                     checks: Seq[graft.functions.Quality.Check],
-                    op: String = "append", statsCols: Seq[String] = Nil): Int = {
+                    op: String = "append"): Int = {
     import org.apache.spark.sql.functions.{col, not}
     val failed = graft.functions.Quality.audit(df, checks)
       .filter(not(col("passed"))).collect() // ≤ |checks| rows
@@ -1850,7 +1819,7 @@ object TxTable {
       s"TxTable: commit to $table refused — ${failed.length} constraint(s) failed: " +
       failed.map(r => s"${r.getString(0)}(${r.getString(1)}) metric=${r.get(2)}")
         .mkString("; "))
-    commit(df, table, op, statsCols)
+    commit(df, table, op)
   }
 
   // ------------------- WRITE-AUDIT-PUBLISH -------------------
@@ -1911,7 +1880,8 @@ object TxTable {
     * hashing ambiguity). An empty slice commits as a zero-file append
     * (version exists, carries the parent's files). Fresh/unmapped/
     * unpartitioned tables only — the stageWap preconditions, and the
-    * only shape history-building setups use.
+    * only shape history-building setups use. `statsCols` declares range
+    * stats as in [[commit]] (the way to index a table this call creates).
     */
   def commitSlices(df: DataFrame, table: String, sliceOf: Column, nSlices: Int,
                    statsCols: Seq[String] = Nil,
@@ -1953,8 +1923,8 @@ object TxTable {
         require(f.rename(p, new Path(s"$table/$rel")), s"rename failed for $p")
         rel
       }
-      commitAs(payload, table, v, "append",
-        statsCols = statsCols, preNamed = Some(named), dfIsPhysical = true)
+      commitAs(payload, table, v, "append", TxIndex(stats = statsCols),
+        preNamed = Some(named), dfIsPhysical = true)
     }
     f.delete(tmp, true)
     out
@@ -2011,9 +1981,9 @@ object TxTable {
   }
 
   /** Publish a staged batch: one append COMMIT whose data files are
-    * the staged ones (adopted by reference — zero data IO; skipping
-    * stats/blooms recompute from the staged footers/contents, the
-    * metadata-scale cost every commit pays). Rides the full commit
+    * the staged ones (adopted by reference — zero data IO; the table's
+    * declared skipping entries gather from the staged footers/contents,
+    * the metadata-scale cost every commit pays). Rides the full commit
     * machinery: schema gate against the CURRENT head (which may have
     * moved since stage), CAS + append rebase on conflicts (staged
     * files re-key to versioned names), and an exactly-once txn marker
@@ -2021,7 +1991,6 @@ object TxTable {
     * can never double-publish. Returns the published version.
     */
   def publishWap(spark: SparkSession, table: String, wapId: String,
-                 statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
                  maxAttempts: Int = 20): Int = {
     requireWapId(wapId)
     val f = fs(spark, table)
@@ -2041,8 +2010,7 @@ object TxTable {
           .schema(graft.core.ParquetFooters.schemaOf(spark, addPaths.head))
           .parquet(addPaths: _*)
         val nv = commitAs(df, table, head + 1, "append",
-          statsCols, txn = Some((appId, 0L)), bloomCols = bloomCols,
-          rebaseAppend = true, maxAttempts = maxAttempts,
+          txn = Some((appId, 0L)), rebaseAppend = true, maxAttempts = maxAttempts,
           dfIsPhysical = true, preNamed = Some(add))
         f.delete(stagedPath(table, wapId), false)
         nv
@@ -2080,7 +2048,9 @@ object TxTable {
     * Scale shape per attempt: applyChanges is one feed-keyed window +
     * one key equi-join (feed broadcasts when small — the CDC norm),
     * the commit one distributed write; the retry recomputes only when
-    * an actual conflict happened.
+    * an actual conflict happened. The merged files get the table's
+    * declared skipping entries; `statsCols` declares more, as in
+    * [[commit]].
     *
     * @return (committed version, attempts used)
     */
@@ -2100,7 +2070,7 @@ object TxTable {
       // (same rule as the full compact: fresh files re-partition by
       // the logical column; the mapping resets)
       val partLogical = partColOf(spark, table, v).map(logicalOf(colMapOf(spark, table, v), _))
-      try out = commitAs(merged, table, v + 1, "merge", statsCols,
+      try out = commitAs(merged, table, v + 1, "merge", TxIndex(stats = statsCols),
         partitionBy = partLogical)
       catch {
         case e: RuntimeException if e.getMessage != null &&
@@ -2159,11 +2129,10 @@ object TxTable {
     * semantics. Costs one footer read per file at plan time for
     * evolved tables only.
     */
-  def commitEvolve(df: DataFrame, table: String,
-                   statsCols: Seq[String] = Nil): Int = {
+  def commitEvolve(df: DataFrame, table: String): Int = {
     val spark = df.sparkSession
     val v = currentVersion(spark, table)
-    if (v == 0) return commitAs(df, table, 1, "append", statsCols)
+    if (v == 0) return commitAs(df, table, 1, "append")
     val parent = readVersion(spark, table, v).schema
     val newTypes = schemaKey(df.schema).toMap
     val missing = schemaKey(parent).filterNot { case (n, t) =>
@@ -2173,7 +2142,7 @@ object TxTable {
       s"${missing.map(p => p._1 + ":" + p._2).mkString("[", ", ", "]")} are dropped or " +
       "retyped in the new frame; evolution may only ADD columns (use op=\"overwrite\" " +
       "for a rewrite)")
-    commitAs(df, table, v + 1, "evolve", statsCols)
+    commitAs(df, table, v + 1, "evolve")
   }
 
   /** The op recorded in version `v`'s manifest. */
@@ -2537,15 +2506,15 @@ object TxTable {
     * a small file, and the nightly OPTIMIZE must not rewrite the
     * terabytes that are already fine. Content-preserving op "compact"
     * (dataChange=false — `changes()` skips it); carried files keep
-    * their skipping stats; evolved tables rewrite through mergeSchema.
+    * their skipping entries and the rebinned ones get the table's
+    * declared ones; evolved tables rewrite through mergeSchema.
     *
     * @return (version, nRewritten, nCarried) — version unchanged with
     *         nRewritten = 0 when fewer than 2 small files exist (a
     *         single small file gains nothing; Delta's no-op rule)
     */
   def compactSmall(spark: SparkSession, table: String, minBytes: Long,
-                   targetBytes: Long = 128L << 20,
-                   statsCols: Seq[String] = Nil): (Int, Int, Int) = {
+                   targetBytes: Long = 128L << 20): (Int, Int, Int) = {
     require(minBytes > 0 && targetBytes > 0,
       s"minBytes/targetBytes must be positive, got ($minBytes, $targetBytes)")
     val v = currentVersion(spark, table)
@@ -2563,7 +2532,7 @@ object TxTable {
     val packed = morFilter(spark, table, v,
         rawRead(spark, table, v, small.map(_._1)))
       .repartition(nOut)
-    val nv = commitAs(packed, table, v + 1, "compact", statsCols,
+    val nv = commitAs(packed, table, v + 1, "compact",
       carryFiles = Some(big.map(_._1)), dfIsPhysical = true)
     (nv, small.size, big.size)
   }
@@ -2895,7 +2864,8 @@ object TxTable {
     * re-materialization / backfill-one-day shape, where rewriting the
     * snapshot (or deleting then appending in two commits, with a
     * readable half-state between) is wrong at any size. Every other
-    * partition's files carry BY REFERENCE with their stats; rows of
+    * partition's files carry BY REFERENCE with their skipping entries
+    * (the new ones get the table's declared entries); rows of
     * `df` outside the partition refuse loudly BEFORE any write
     * (Delta's replaceWhere constraint — a silently mis-routed row
     * would duplicate under another partition's dir while its old
@@ -2904,8 +2874,7 @@ object TxTable {
     * @return the committed version
     */
   def overwritePartition(spark: SparkSession, table: String, df: DataFrame,
-                         value: String, statsCols: Seq[String] = Nil,
-                         countRows: Boolean = false): Int = {
+                         value: String): Int = {
     val v = currentVersion(spark, table)
     require(v >= 1, s"TxTable: cannot replace a partition of non-existent $table")
     val pc = partColOf(spark, table, v).getOrElse(sys.error(
@@ -2922,7 +2891,6 @@ object TxTable {
     require(bad == 0L, s"TxTable: overwritePartition($value): $bad rows " +
       s"violate $logicalPc = '$value' — replaceWhere writes exactly one partition")
     val keep = filesOf(spark, table, v).filterNot(partValueOf(pc, _).contains(value))
-    commitAs(df, table, v + 1, "update", statsCols,
-      carryFiles = Some(keep), countRows = countRows)
+    commitAs(df, table, v + 1, "update", carryFiles = Some(keep))
   }
 }

@@ -572,4 +572,46 @@ class EvalOpsSpec extends SparkSpec {
     k3 shouldBe n3.toLong
     c3 shouldBe varied.length.toLong
   }
+
+  // ---- Krippendorff's alpha ----
+
+  test("krippendorffAlpha matches the textbook nominal example") {
+    // Krippendorff's standard example (Hayes & Krippendorff '07,
+    // nominal, with missing data): units rated by up to 3 raters.
+    // units: 1:{a,a}, 2:{b,b,b}, 3:{b,b}, 4:{b,b,b}, 5:{b,b},
+    // 6:{c,c,b}, 7:{d,d,d}, 8:{a,a}, 9:{e,e}, 10:{d,d}, 11 single
+    val rows = Seq(
+      ("1", "a"), ("1", "a"),
+      ("2", "b"), ("2", "b"), ("2", "b"),
+      ("3", "b"), ("3", "b"),
+      ("4", "b"), ("4", "b"), ("4", "b"),
+      ("5", "b"), ("5", "b"),
+      ("6", "c"), ("6", "c"), ("6", "b"),
+      ("7", "d"), ("7", "d"), ("7", "d"),
+      ("8", "a"), ("8", "a"),
+      ("9", "e"), ("9", "e"),
+      ("10", "d"), ("10", "d"),
+      ("11", "a")) // unpairable — must drop
+    val r = Eval.krippendorffAlpha(rows.toDF("u", "v"), "u", "v").head()
+    r.getLong(0) shouldBe 10L  // pairable units
+    r.getLong(1) shouldBe 24L  // pairable ratings
+    // direct computation of the same formula
+    val byU = rows.groupBy(_._1).filter(_._2.size >= 2)
+    val doSum = byU.values.map { rs =>
+      val m = rs.size.toDouble
+      rs.groupBy(_._2).values.map { g =>
+        val k = g.size.toDouble
+        BigDecimal(k * (m - k) / (m - 1.0)).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+      }.sum
+    }.sum.toDouble
+    val nc = byU.values.flatten.groupBy(_._2).view.mapValues(_.size.toLong).toMap
+    val n = nc.values.sum.toDouble
+    val de = n * n - nc.values.map(c => c.toDouble * c).sum
+    val expected = 1.0 - (n - 1.0) * doSum / de
+    r.getDouble(2) shouldBe (expected +- 1e-8)
+    // perfect agreement → alpha 1
+    val perfect = Seq(("1", "a"), ("1", "a"), ("2", "b"), ("2", "b"))
+    Eval.krippendorffAlpha(perfect.toDF("u", "v"), "u", "v").head()
+      .getDouble(2) shouldBe (1.0 +- 1e-9)
+  }
 }

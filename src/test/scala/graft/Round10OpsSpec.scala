@@ -344,7 +344,7 @@ class Round10OpsSpec extends SparkSpec {
     TxTable.commit(df, table, statsCols = Seq("id"))
     val files1 = TxTable.filesOf(spark, table, 1)
     val (v2, nTouched, nCarried) = TxTable.updateWhere(spark, table, "id", 1.0, 2.0,
-      Map("x" -> (col("x") * 10)), statsCols = Seq("id"))
+      Map("x" -> (col("x") * 10)))
     v2 shouldBe 2
     nTouched + nCarried shouldBe files1.size
     nTouched should be >= 1
@@ -529,7 +529,7 @@ class Round10OpsSpec extends SparkSpec {
   // --- r10: write-audit-publish ---
   test("WAP: staged batches are invisible, publish is metadata-only and exactly-once, abandon leaves no trace") {
     val table = freshTable()
-    TxTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), table)
+    TxTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), table, statsCols = Seq("id"))
     val staged = TxTable.stageWap(Seq((3L, "c"), (4L, "d")).toDF("id", "s"), table, "g1")
     staged should not be empty
     all(staged) should startWith("data/w_g1_")
@@ -542,7 +542,7 @@ class Round10OpsSpec extends SparkSpec {
     // vacuum never reaps a live staged batch
     TxTable.vacuum(spark, table, minAgeMs = 0).intersect(staged) shouldBe empty
     // publish: metadata-only adoption (same file names), stats recomputed
-    val v2 = TxTable.publishWap(spark, table, "g1", statsCols = Seq("id"))
+    val v2 = TxTable.publishWap(spark, table, "g1")
     v2 shouldBe 2
     TxTable.filesOf(spark, table, 2).intersect(staged) shouldBe staged
     TxTable.read(spark, table).count() shouldBe 4L
@@ -681,9 +681,9 @@ class Round10OpsSpec extends SparkSpec {
     assert(e.getMessage.contains("tombstone"))
     // OPTIMIZE folds both forms away; recounted files restore the path
     TxTable.compact(spark, table)
-    // full compact rewrites without countRows → missing counts refuse
-    val e2 = intercept[IllegalArgumentException](TxTable.metaCount(spark, table))
-    assert(e2.getMessage.contains("no"))
+    // the compacted files carry the declared row counts
+    TxTable.metaCount(spark, table) shouldBe 448L
+    TxTable.metaCount(spark, table) shouldBe TxTable.read(spark, table).count()
   }
 
   test("metaCountByPartition matches the scan per partition value") {

@@ -247,8 +247,7 @@ class Round7bOpsSpec extends SparkSpec {
     TxTable.commit(Seq((10L, "x"), (11L, "y")).toDF("id", "s").coalesce(1),
       table, statsCols = Seq("id"))
     val beforeFiles = TxTable.filesOf(spark, table, 2)
-    val (v, nRw, nCar) = TxTable.deleteWhere(spark, table, "id", 1.0, 1.0,
-      statsCols = Seq("id"))
+    val (v, nRw, nCar) = TxTable.deleteWhere(spark, table, "id", 1.0, 1.0)
     v shouldBe 3
     nRw shouldBe 1
     nCar shouldBe 1
@@ -540,8 +539,7 @@ class Round7bOpsSpec extends SparkSpec {
         table, statsCols = Seq("id"))
     }
     val beforeFiles = TxTable.filesOf(spark, table, 4)
-    val (v, nRw, nCar) = TxTable.compactSmall(spark, table, minBytes = 4096,
-      statsCols = Seq("id"))
+    val (v, nRw, nCar) = TxTable.compactSmall(spark, table, minBytes = 4096)
     v shouldBe 5; nRw shouldBe 3; nCar shouldBe 1
     val after = TxTable.filesOf(spark, table, 5)
     // the big file is the SAME relative path (carried, not rewritten)

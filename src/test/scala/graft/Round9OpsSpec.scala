@@ -215,7 +215,7 @@ class Round9OpsSpec extends SparkSpec {
     val (v2, nDel) = TxTable.deleteWhereMor(spark, morT, "id", 100.0, 140.0, "id")
     v2 shouldBe 2
     nDel shouldBe 41L
-    TxTable.deleteWhere(spark, cowT, "id", 100.0, 140.0, Seq("id"))._1 shouldBe 2
+    TxTable.deleteWhere(spark, cowT, "id", 100.0, 140.0)._1 shouldBe 2
     // ZERO data files rewritten: the manifest carries v1's files verbatim
     TxTable.filesOf(spark, morT, 2) shouldBe filesBefore
     TxTable.tombEntriesOf(spark, morT, 2) should not be empty

@@ -494,7 +494,7 @@ class TxTableSpec extends SparkSpec {
 
   test("manifest codec: render then parse is the identity; minimal manifests parse with defaults") {
     import org.scalacheck.{Gen, Prop, Test}
-    import graft.sources.{TxDelta, TxManifest}
+    import graft.sources.{TxDelta, TxIndex, TxManifest}
     def check(p: Prop): Unit = {
       val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(200).withMaxSize(6)
         .withInitialSeed(org.scalacheck.rng.Seed(421L)), p)
@@ -529,8 +529,10 @@ class TxTableSpec extends SparkSpec {
       vsets <- Gen.listOf(Gen.zip(str, str, Gen.listOf(str)))
       posd <- Gen.listOf(str)
       rows <- Gen.listOf(Gen.zip(str, anyLong))
+      index <- Gen.zip(Gen.listOf(str), Gen.listOf(str), Gen.listOf(str), Gen.listOf(str),
+        Gen.oneOf(true, false)).map { case (st, nl, bl, vs, rc) => TxIndex(st, nl, bl, vs, rc) }
     } yield TxManifest(version, op, commitMs, txn, ms, part, schema, delta, files, stats,
-      blooms, tombs, map, vsets, posd, rows)
+      blooms, tombs, map, vsets, posd, rows, index)
     // through UTF-8 bytes, as the committer writes and the reader reads
     def utf8(s: String): String = new String(s.getBytes("UTF-8"), "UTF-8")
     check(Prop.forAll(manifests)(m => TxManifest.parse(utf8(TxManifest.render(m))) == m))
@@ -631,5 +633,183 @@ class TxTableSpec extends SparkSpec {
     TxTable.deleteWhere(spark, table, "d", 12.0, 13.0)._2 shouldBe 2
     TxTable.read(spark, table).select(col("d").cast("string")).collect().map(_.getString(0)) shouldBe
       Array("56.78")
+  }
+
+  test("decimal columns record no min/max; other declared stats columns still do") {
+    val table = freshTable()
+    Seq("12.34", "56.78").foreach(d => TxTable.commit(Seq((1L, d)).toDF("id", "d")
+      .select(col("id"), col("d").cast("decimal(7,2)").as("d")).coalesce(1), table,
+      statsCols = Seq("d", "id")))
+    TxTable.statsOf(spark, table, 2).map(_._2).distinct shouldBe Seq("id")
+  }
+
+  test("every writer gives the files it adds the skipping entries the table declared") {
+    import graft.sources.TxManifest
+    // the entry kinds each head file carries, per declared column
+    def kinds(snap: TxManifest, f: String, range: String, bloom: String, set: String,
+              nul: String): Set[String] = Map(
+      "range" -> snap.stats.exists(e => e._1 == f && e._2 == range),
+      "nulls" -> snap.stats.exists(e => e._1 == f && e._2 == s"$nul#nulls"),
+      "rows" -> snap.rows.exists(_._1 == f),
+      "bloom" -> snap.blooms.exists(e => e._1 == f && e._2 == bloom),
+      "vset" -> snap.vsets.exists(e => e._1 == f && e._2 == set)).collect { case (k, true) => k }.toSet
+    val all = Set("range", "nulls", "rows", "bloom", "vset")
+    def indexed(table: String, writer: String, range: String, bloom: String, set: String,
+                nul: String): Unit = {
+      val v = TxTable.currentVersion(spark, table)
+      val snap = TxTable.snapshotOf(spark, table, v)
+      withClue(s"after $writer (v$v): ") {
+        snap.files should not be empty
+        snap.files.map(f => f -> kinds(snap, f, range, bloom, set, nul)) shouldBe
+          snap.files.map(_ -> all)
+      }
+    }
+    def rows(ids: Seq[Long]) = ids.map(i => (i, i % 3, if (i % 4 == 0) None else Some(i * 1.5)))
+      .toDF("event_id", "user_id", "value").coalesce(1)
+    val flat = freshTable()
+    def check(writer: String): Unit = indexed(flat, writer, "event_id", "event_id", "user_id", "value")
+    TxTable.commit(rows(1L to 4L), flat, statsCols = Seq("event_id"), bloomCols = Seq("event_id"),
+      setCols = Seq("user_id"), nullCols = Seq("value"), countRows = true)
+    check("commit")
+    TxTable.commit(rows(5L to 6L), flat)
+    check("append")
+    TxTable.commit(rows(1L to 8L), flat, op = "overwrite")
+    check("overwrite")
+    TxTable.appendUnique(rows(9L to 10L), flat, "event_id")
+    check("appendUnique")
+    TxTable.commitIdempotent(rows(11L to 12L), flat, "app", 0L)
+    check("commitIdempotent")
+    TxTable.commitChecked(rows(13L to 14L), flat, Seq(graft.functions.Quality.NonNegative("event_id")))
+    check("commitChecked")
+    TxTable.stageWap(rows(15L to 16L), flat, "w")
+    TxTable.publishWap(spark, flat, "w")
+    check("publishWap")
+    TxTable.commitSlices(rows(17L to 20L), flat, col("event_id") % 2, 2)
+    check("commitSlices")
+    val events = java.nio.file.Files.createTempDirectory("graft_tx_spec_events_").toString + "/in"
+    rows(21L to 24L).withColumn("ts", timestamp_micros(col("event_id"))).write.parquet(events)
+    graft.streaming.Events.streamIntoTx(spark, events, flat, "ingest", runs = 1)
+    check("streaming ingest")
+    TxTable.mergeInto(spark, flat, Seq((5L, 1L, "U", 0L, 50.0), (30L, 1L, "I", 1L, 3.0))
+      .toDF("event_id", "seq", "op", "user_id", "value"), "event_id", "seq", "op")
+    check("mergeInto")
+    TxTable.commit(rows(31L to 32L), flat)
+    TxTable.deleteWhere(spark, flat, "event_id", 31.0, 31.0)._2 shouldBe 1
+    check("deleteWhere")
+    TxTable.updateWhere(spark, flat, "event_id", 32.0, 32.0, Map("value" -> lit(1.0)))._2 shouldBe 1
+    check("updateWhere")
+    TxTable.compactSmall(spark, flat, minBytes = 1L << 30)._2 should be >= 2
+    check("compactSmall")
+    TxTable.commit(rows(40L to 41L), flat)
+    TxTable.compact(spark, flat)
+    check("compact")
+    TxTable.commitEvolve(rows(100L to 101L).withColumn("note", lit("n")), flat)
+    check("commitEvolve")
+    // a rename keeps the declaration (physical names): pruning works
+    // under the new name, and files added after it carry every entry
+    TxTable.renameColumn(spark, flat, "event_id", "key")
+    val v = TxTable.currentVersion(spark, flat)
+    val files = TxTable.filesOf(spark, flat, v)
+    files.size shouldBe 2
+    TxTable.prunedFiles(spark, flat, v, "key", 100.0, 101.0) shouldBe files.takeRight(1)
+    TxTable.prunedFilesByKey(spark, flat, v, "key", "100") shouldBe files.takeRight(1)
+    TxTable.readWhereKey(spark, flat, "key", "100").count() shouldBe 1L
+    TxTable.commit(rows(200L to 201L).withColumnRenamed("event_id", "key").withColumn("note", lit("n")),
+      flat)
+    check("append after rename")
+    // a drop removes the column from the declaration; the next append,
+    // whose files no longer hold it, succeeds and carries the rest
+    TxTable.dropColumn(spark, flat, "user_id")
+    TxTable.snapshotOf(spark, flat, TxTable.currentVersion(spark, flat)).index.sets shouldBe empty
+    TxTable.commit(rows(300L to 301L).drop("user_id").withColumnRenamed("event_id", "key")
+      .withColumn("note", lit("n")), flat)
+    val head = TxTable.snapshotOf(spark, flat, TxTable.currentVersion(spark, flat))
+    kinds(head, head.files.last, "event_id", "event_id", "user_id", "value") shouldBe all - "vset"
+    TxTable.read(spark, flat).count() shouldBe TxTable.metaCount(spark, flat)
+    // the partition-replacing writers, on a partitioned table
+    val part = freshTable()
+    def prows(p: String, ids: Seq[Long]) =
+      ids.map(i => (i, p, s"s${i % 2}", if (i % 4 == 0) None else Some(1.0)))
+        .toDF("id", "p", "s", "x").coalesce(1)
+    def pcheck(writer: String): Unit = indexed(part, writer, "id", "id", "s", "x")
+    TxTable.commit(prows("a", 1L to 4L).union(prows("b", 5L to 8L)), part, partitionBy = Some("p"),
+      statsCols = Seq("id"), bloomCols = Seq("id"), setCols = Seq("s"), nullCols = Seq("x"),
+      countRows = true)
+    pcheck("partitioned commit")
+    TxTable.overwritePartition(spark, part, prows("a", 9L to 12L), "a")
+    pcheck("overwritePartition")
+    TxTable.commit(prows("b", 13L to 14L), part)
+    TxTable.compactPartition(spark, part, "b")._2 shouldBe 2
+    pcheck("compactPartition")
+    TxTable.prunedFilesByKey(spark, part, TxTable.currentVersion(spark, part), "id", "13").size shouldBe 1
+  }
+
+  test("overwritePartition replaces one partition atomically and refuses stray rows") {
+    val table = freshTable()
+    val df = Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0))
+      .toDF("id", "p", "x")
+    TxTable.commit(df, table, partitionBy = Some("p"))
+    val v2 = TxTable.overwritePartition(spark, table,
+      Seq((9L, "a", 90.0)).toDF("id", "p", "x"), "a")
+    v2 shouldBe 2
+    TxTable.read(spark, table).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[Double]("x"))).sorted shouldBe
+      Seq((3L, 30.0), (9L, 90.0))
+    // partition b's file carried by reference
+    TxTable.filesOf(spark, table, 2)
+      .count(TxTable.filesOf(spark, table, 1).contains) shouldBe 1
+    // a row outside the partition refuses BEFORE committing
+    val ex = intercept[Exception] {
+      TxTable.overwritePartition(spark, table,
+        Seq((7L, "b", 70.0)).toDF("id", "p", "x"), "a")
+    }
+    ex.getMessage should include("violate")
+    TxTable.currentVersion(spark, table) shouldBe 2
+    // time travel still sees the pre-replace partition
+    TxTable.readVersion(spark, table, 1).count() shouldBe 3L
+  }
+
+  test("overwritePartition refuses unpartitioned and hidden-transform layouts") {
+    val flat = freshTable()
+    TxTable.commit(Seq((1L, "a", 1.0)).toDF("id", "p", "x"), flat)
+    val ex = intercept[Exception] {
+      TxTable.overwritePartition(spark, flat,
+        Seq((1L, "a", 1.0)).toDF("id", "p", "x"), "a")
+    }
+    ex.getMessage should include("not hive-partitioned")
+  }
+
+  test("null-count skipping is conservative: untracked and mixed files always kept") {
+    val table = freshTable()
+    // v1: UNTRACKED (committed before nullCols is declared) — must stay
+    // a candidate for both; v2: tracked, no nulls; v3: tracked, all
+    // null; v4: tracked, mixed
+    TxTable.commit(Seq((5L, Some(5.0))).toDF("id", "x").coalesce(1), table)
+    TxTable.commit(Seq((1L, Some(1.0))).toDF("id", "x").coalesce(1), table,
+      nullCols = Seq("x"), countRows = true)
+    TxTable.commit(Seq((2L, None: Option[Double])).toDF("id", "x").coalesce(1),
+      table, nullCols = Seq("x"), countRows = true)
+    TxTable.commit(Seq((3L, Some(3.0)), (4L, None)).toDF("id", "x").coalesce(1),
+      table, nullCols = Seq("x"), countRows = true)
+    val v = TxTable.currentVersion(spark, table)
+    TxTable.prunedFilesByNull(spark, table, v, "x", true).size shouldBe 3 // v1,v3,v4
+    TxTable.prunedFilesByNull(spark, table, v, "x", false).size shouldBe 3 // v1,v2,v4
+    TxTable.readWhereNull(spark, table, "x", true).select("id").collect()
+      .map(_.getLong(0)).sorted shouldBe Seq(2L, 4L)
+    TxTable.readWhereNull(spark, table, "x", false).select("id").collect()
+      .map(_.getLong(0)).sorted shouldBe Seq(1L, 3L, 5L)
+  }
+
+  test("null counts carry through compaction-free ops and survive clone") {
+    val table = freshTable()
+    TxTable.commit(Seq((1L, None: Option[Double])).toDF("id", "x").coalesce(1),
+      table, nullCols = Seq("x"), countRows = true)
+    TxTable.commit(Seq((2L, Some(2.0))).toDF("id", "x").coalesce(1), table,
+      nullCols = Seq("x"), countRows = true)
+    val clone = freshTable()
+    TxTable.cloneShallow(spark, table, clone)
+    // the clone's borrowed files keep their null stats → same pruning
+    TxTable.prunedFilesByNull(spark, clone, 1, "x", true).size shouldBe 1
+    TxTable.readWhereNull(spark, clone, "x", false).count() shouldBe 1L
   }
 }
