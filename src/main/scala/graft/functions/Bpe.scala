@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing.rebalance
+
 /** Byte-pair-encoding tokenizer (SURVEY.md §2 #38's tokenizer-faithful
   * variant): a REAL merges-table BPE, not a whitespace/regex estimate,
   * so packing capacities (q45/q62) can be denominated in tokens an
@@ -173,10 +175,9 @@ object Bpe {
   def bpeCount(df: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val merges = Merges
-    df.select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .repartition(n, col(idCol)).as[(Long, String)]
+    rebalance(df.select(col(idCol).cast("long"), col(textCol).cast("string")), idCol)
+      .as[(Long, String)]
       .mapPartitions { it =>
         val memo = scala.collection.mutable.Map.empty[String, Int]
         it.map { case (id, text) =>

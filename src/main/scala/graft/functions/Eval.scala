@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing.rebalance
+
 /** Model-evaluation / label-quality metrics over scored corpora —
   * the read-out side of the training-data pipeline: once documents
   * carry model scores (quality, toxicity, relevance, a classifier
@@ -26,21 +28,6 @@ import org.apache.spark.sql.functions._
 object Eval {
 
   private def d(c: Column): Column = c.cast("double")
-
-  /** Replicate-expand stages (bootstrap B×, permutation reps×) are
-    * CPU-per-row work whose input arrives as few scan splits (one
-    * small parquet file = one task): without a rebalance the whole
-    * B·rows hash/agg pipeline runs on the scan's parallelism — one
-    * core, measured at sf0.1 (8 tasks total, wall ≈ single-thread CPU
-    * time). The Dedup/Multimodal rebalance pattern: one cheap shuffle
-    * of the RAW (1×) rows, pinned partition count (AQE cannot coalesce
-    * it), hash-keyed so the spread is even — always ≤1/B of the expand
-    * stage's bytes, so it is never the wrong trade at any scale.
-    */
-  private def rebalance(df: DataFrame, keyCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    df.repartition(n, col(keyCol))
-  }
 
   /** ROC AUC per group, exactly, via the rank-sum identity
     * AUC = U⁺/(n⁺·n⁻) (Hanley–McNeil 1982): the probability a random
@@ -531,7 +518,7 @@ object Eval {
     */
   def miMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, s"need at least 2 columns, got $cols")
-    val sent = " null"
+    val sent = "\u0000null"
     def cv(c: String): Column = coalesce(col(c).cast("string"), lit(sent))
     val pairs = for {
       i <- cols.indices; j <- cols.indices if i < j

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing
+import graft.core.Sizing.rebalance
 import graft.functions.{TextFunctions => T}
 
 /** CCNet-style perplexity quality filtering (the standard LLM-data
@@ -17,11 +19,12 @@ import graft.functions.{TextFunctions => T}
   * Scale shape: the LM (bigram counts + context counts) is a derived
   * aggregate persisted as a MODEL ARTIFACT (same budget class as the
   * IVF centroids); its size is counted and the scoring joins are
-  * broadcast only under a row budget, else plain shuffled joins — the
-  * q25 size-gate pattern, so a huge seed degrades to extra shuffles
-  * instead of a driver OOM. Scoring itself is one pass over the corpus:
-  * pinned rebalance → bigram explode (map-side) → two gated joins →
-  * partial-agg per doc on the partitioning the rebalance installed.
+  * broadcast only within the driver budget ([[graft.core.Sizing]]),
+  * else plain shuffled joins, so a huge seed degrades to extra
+  * shuffles instead of a driver OOM. Scoring itself is one pass over
+  * the corpus: pinned rebalance → bigram explode (map-side) → two
+  * gated joins → partial-agg per doc on the partitioning the rebalance
+  * installed.
   *
   * Determinism across engines: each bigram's log term is quantized to
   * DECIMAL(20,6) BEFORE summation — decimal addition is exact and
@@ -32,10 +35,7 @@ import graft.functions.{TextFunctions => T}
 object NgramLm {
 
   def perplexity(docs: DataFrame, lmDocs: DataFrame, k: Double = 0.5,
-                 textCol: String = "text", idCol: String = "doc_id",
-                 broadcastMaxRows: Long = 2000000L): DataFrame = {
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
+                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     // ---- the LM artifact (persisted: counted once, joined twice) ----
     val seedBg = lmDocs
       .select(explode(T.boundNGrams(col(textCol), 2)).as("bg"))
@@ -43,17 +43,16 @@ object NgramLm {
       .withColumn("w1", substring_index(col("bg"), " ", 1))
       .persist()
     val ctx = seedBg.groupBy("w1").agg(sum("c2").as("c1")).persist()
-    val nBigrams = seedBg.count()
+    val gated = Sizing.broadcastIfFits(docs.sparkSession, seedBg.count())
     val vocab = lmDocs.select(explode(T.tokens(col(textCol))).as("w")).distinct().count()
-    val bgT = if (nBigrams <= broadcastMaxRows) broadcast(seedBg.select("bg", "c2"))
-              else seedBg.select("bg", "c2")
-    val ctxT = if (nBigrams <= broadcastMaxRows) broadcast(ctx) else ctx
+    val bgT = gated(seedBg.select("bg", "c2"))
+    val ctxT = gated(ctx)
 
     // ---- one scoring pass over the corpus ----
     // tokens pre-exchange (Dedup.minhashPairs pattern): materialized
     // through the shuffle so the bigram lambda reads an O(1) attribute
-    val spine = docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w"))
-      .repartition(n, col("doc_id"))
+    val spine = rebalance(
+        docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w")), "doc_id")
       .select(col("doc_id"), T.wordNGrams(col("w"), 2).as("bgs"))
     val terms = spine.select(col("doc_id"), explode(col("bgs")).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -95,7 +94,7 @@ object NgramLm {
     *
     * Scale shape: the LM is THREE partial-agg count tables (tri, bi,
     * uni — each one map-side-combining shuffle over the seed), all
-    * joined under the same size-gated broadcast rule as [[perplexity]]
+    * joined under the same driver-budget broadcast rule as [[perplexity]]
     * (a huge seed degrades to shuffled joins, never a driver OOM);
     * scoring is one pass over the corpus — pinned rebalance → trigram
     * explode (tokens materialized across the exchange, the q85 lambda
@@ -108,10 +107,7 @@ object NgramLm {
     * the mean exits through round(·, 4).
     */
   def stupidBackoff(docs: DataFrame, lmDocs: DataFrame, alpha: Double = 0.4,
-                    textCol: String = "text", idCol: String = "doc_id",
-                    broadcastMaxRows: Long = 2000000L): DataFrame = {
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
+                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     // ---- the LM artifact: three count tables + two scalars ----
     val tri = lmDocs.select(explode(T.boundNGrams(col(textCol), 3)).as("tg"))
       .groupBy("tg").agg(count(lit(1)).as("c3")).persist()
@@ -119,14 +115,13 @@ object NgramLm {
       .groupBy("bg").agg(count(lit(1)).as("c2")).persist()
     val uni = lmDocs.select(explode(T.tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1")).persist()
-    val nTri = tri.count()
+    val gated = Sizing.broadcastIfFits(docs.sparkSession, tri.count())
     val nTok = lmDocs.select(sum(size(T.tokens(col(textCol))))).head.getLong(0)
     val vocab = uni.count()
-    def gated(df: DataFrame) = if (nTri <= broadcastMaxRows) broadcast(df) else df
 
     // ---- one scoring pass over the corpus ----
-    val spine = docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w"))
-      .repartition(n, col("doc_id"))
+    val spine = rebalance(
+        docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w")), "doc_id")
       .select(col("doc_id"), T.wordNGrams(col("w"), 3).as("tgs"))
     val parts = spine.select(col("doc_id"), explode(col("tgs")).as("tg"))
       .withColumn("ctx2", substring_index(col("tg"), " ", 2))
@@ -202,7 +197,6 @@ object NgramLm {
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
     val spark = raw.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val B = nBuckets
     def bucket(g: org.apache.spark.sql.Column) =
       pmod(Hashing.portableHash(g), lit(B.toLong))
@@ -228,8 +222,8 @@ object NgramLm {
         (log((col("pc") + lit(1.0)) / (col("np") + lit(B.toDouble))) -
          log((col("qc") + lit(1.0)) / (col("nq") + lit(B.toDouble))))
           .cast("decimal(20,6)").as("lam"))
-    val spine = raw.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w"))
-      .repartition(n, col("doc_id"))
+    val spine = rebalance(
+        raw.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w")), "doc_id")
       .select(col("doc_id"), concat(col("w"), T.wordNGrams(col("w"), 2)).as("gs"))
     val scored = spine.select(col("doc_id"), explode(col("gs")).as("g"))
       .select(col("doc_id"), bucket(col("g")).as("b"))
@@ -261,8 +255,8 @@ object NgramLm {
     * Scale shape: the LM artifact is one partial-agg bigram count
     * table plus three derived aggregates of it (context totals c1 +
     * distinct-continuation counts per w1, distinct-predecessor counts
-    * per w2, the global bigram-type count) — all size-gated broadcasts
-    * under [[perplexity]]'s row budget, shuffled joins beyond it.
+    * per w2, the global bigram-type count) — all broadcast within the
+    * driver budget, shuffled joins beyond it.
     * Scoring is the same one corpus pass: pinned rebalance → bigram
     * explode → three gated lookup joins → per-doc partial agg.
     *
@@ -272,9 +266,7 @@ object NgramLm {
     * round(·, 4).
     */
   def kneserNey(docs: DataFrame, lmDocs: DataFrame, discount: Double = 0.75,
-                textCol: String = "text", idCol: String = "doc_id",
-                broadcastMaxRows: Long = 2000000L): DataFrame = {
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+                textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     // ---- the LM artifact ----
     val seedBg = lmDocs
       .select(explode(T.boundNGrams(col(textCol), 2)).as("bg"))
@@ -287,11 +279,10 @@ object NgramLm {
       .agg(sum("c2").as("c1"), count(lit(1)).as("n1fwd")).persist()
     val cont = seedBg.groupBy("w2").agg(count(lit(1)).as("n1rev"))
     val nBigramTypes = seedBg.count()
-    def gated(df: DataFrame) =
-      if (nBigramTypes <= broadcastMaxRows) broadcast(df) else df
+    val gated = Sizing.broadcastIfFits(docs.sparkSession, nBigramTypes)
     // ---- one scoring pass over the corpus ----
-    val spine = docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w"))
-      .repartition(n, col("doc_id"))
+    val spine = rebalance(
+        docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w")), "doc_id")
       .select(col("doc_id"), T.wordNGrams(col("w"), 2).as("bgs"))
     val d = lit(discount)
     val terms = spine.select(col("doc_id"), explode(col("bgs")).as("bg"))

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing
+import graft.core.Sizing.rebalance
+
 /** One-pass corpus profiling: per-group AND grand-total statistics via
   * ROLLUP — row counts, metric totals, and EXACT percentiles. The
   * dataset report every curation pipeline publishes (docs and length
@@ -63,9 +66,9 @@ object Profile {
     *
     * Spark design: thresholds are ONE percentile agg (partial state =
     * distinct-score map per group) joined back — a model artifact the
-    * size of the group count, BROADCAST only under `broadcastMaxRows`
-    * with a plain shuffled join past it (the q25 size-gate pattern;
-    * domains are usually thousands, but nothing guarantees it).
+    * size of the group count, BROADCAST only within the driver budget
+    * ([[graft.core.Sizing]]) with a plain shuffled join past it
+    * (domains are usually thousands, but nothing guarantees it).
     * Deliberately NOT a partition-wide window: an unbounded-frame
     * window buffers each group in one task, the agg+join form
     * combines map-side. Score and threshold are both quantized to
@@ -75,7 +78,6 @@ object Profile {
     */
   def adaptiveFilter(df: DataFrame, groupCol: String, scoreCol: String,
                      p: Double = 0.25,
-                     broadcastMaxRows: Long = 2000000L,
                      exact: Boolean = true, accuracy: Int = 10000): DataFrame = {
     require(p >= 0.0 && p <= 1.0, "p must be in [0, 1]")
     // exact=false: constant-state sketch thresholds (the stats rule) —
@@ -86,8 +88,7 @@ object Profile {
     val thr = df.groupBy(col(groupCol))
       .agg(pc.cast("decimal(18,6)").as("thr"))
       .persist()
-    val nGroups = thr.count()
-    val thrT = if (nGroups <= broadcastMaxRows) broadcast(thr) else thr
+    val thrT = Sizing.broadcastIfFits(df.sparkSession, thr.count())(thr)
     df.join(thrT, Seq(groupCol))
       .filter(col(scoreCol).cast("decimal(18,6)") >= col("thr"))
   }
@@ -952,8 +953,7 @@ object Profile {
     // agg and cumulative window both run in place: the alternative is
     // exchanging the (pair-scaled) cell table twice. No sort here —
     // a guard WINDOW would add one; the broadcast join needs none.
-    val nPart = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val guarded = slim.repartition(nPart, col(keyCol))
+    val guarded = rebalance(slim, keyCol)
       .join(broadcast(offenders), Seq(keyCol), "left")
       .withColumn("_vg",
         when(col("_kn").isNotNull, raise_error(format_string(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing
+import graft.core.Sizing.rebalance
 import graft.functions.{TextFunctions => T}
 
 /** Corpus term statistics: per-document top-m TF-IDF terms — the
@@ -13,9 +15,9 @@ import graft.functions.{TextFunctions => T}
   * Scale shape: term frequencies are one partial-agg shuffle off the
   * pinned rebalance; document frequencies a second partial agg keyed on
   * the term (Zipf-hot terms collapse map-side). The IDF table is a
-  * model artifact — persisted, counted, and BROADCAST ONLY UNDER a row
-  * budget with a plain shuffled join past it (the q25 size-gate
-  * pattern; distinct terms grow with the corpus). Top-m per document is
+  * model artifact — persisted, counted, and BROADCAST ONLY WITHIN the
+  * driver budget ([[graft.core.Sizing]]) with a plain shuffled join
+  * past it (distinct terms grow with the corpus). Top-m per document is
   * a row_number window partitioned by doc — group size is a document's
   * vocabulary, never corpus-scaled, and the rn <= m filter gets
   * WindowGroupLimit pushdown.
@@ -29,21 +31,18 @@ import graft.functions.{TextFunctions => T}
 object TermStats {
 
   def tfidfTopTerms(docs: DataFrame, m: Int = 5,
-                    textCol: String = "text", idCol: String = "doc_id",
-                    broadcastMaxRows: Long = 2000000L): DataFrame = {
+                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(m > 0, "m must be positive")
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val nDocs = docs.count()
 
-    val tf = docs.repartition(n, col(idCol))
+    val tf = rebalance(docs, idCol)
       .select(col(idCol).as("doc_id"), explode(T.tokens(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val idf = tf.groupBy("term").agg(count(lit(1)).as("df"))
       .withColumn("idf",
         log((lit(nDocs) + 1.0) / (col("df") + 1.0)).cast("decimal(20,6)"))
       .persist()
-    val nTerms = idf.count()
-    val idfT = if (nTerms <= broadcastMaxRows) broadcast(idf) else idf
+    val idfT = Sizing.broadcastIfFits(docs.sparkSession, idf.count())(idf)
 
     val w = Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("term"))
@@ -64,8 +63,8 @@ object TermStats {
     * aggs off one tokenized pass (Zipf heads collapse map-side);
     * corpus totals ride a single two-column agg action (no second
     * scan per total). The bigram→unigram probability join follows the
-    * q25 size-gate: the vocabulary broadcasts only under a row
-    * budget, else plain shuffled joins. minCount prunes the long tail
+    * driver budget: the vocabulary broadcasts only within it, else
+    * plain shuffled joins. minCount prunes the long tail
     * BEFORE the join (PMI on hapax pairs is noise anyway), and the
     * global top-k ranking gets WindowGroupLimit pushdown, so the
     * single-task final sort sees ≤ k rows per map partition.
@@ -76,14 +75,11 @@ object TermStats {
     * break identically everywhere.
     */
   def pmiCollocations(docs: DataFrame, minCount: Int = 5, topK: Int = 100,
-                      textCol: String = "text", idCol: String = "doc_id",
-                      broadcastMaxRows: Long = 2000000L): DataFrame = {
+                      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(minCount > 0 && topK > 0, "minCount and topK must be positive")
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // tokens pre-exchange: materialized through the shuffle so the
     // bigram lambda reads an O(1) attribute, not a re-split per element
-    val toks = docs.select(col(idCol), T.tokens(col(textCol)).as("w"))
-      .repartition(n, col(idCol))
+    val toks = rebalance(docs.select(col(idCol), T.tokens(col(textCol)).as("w")), idCol)
       .select("w")
     val totals = toks.agg(
       sum(size(col("w"))).as("nu"),
@@ -92,7 +88,7 @@ object TermStats {
 
     val uni = toks.select(explode(col("w")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c")).persist()
-    val uniT = if (uni.count() <= broadcastMaxRows) broadcast(uni) else uni
+    val uniT = Sizing.broadcastIfFits(docs.sparkSession, uni.count())(uni)
     val bi = toks.filter(size(col("w")) >= 2)
       .select(explode(T.wordNGrams(col("w"), 2)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("cab"))
@@ -134,11 +130,10 @@ object TermStats {
   def noveltyScore(docs: DataFrame, n: Int = 3,
                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(n > 0, "n must be positive")
-    val nPart = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // tokens pre-exchange: the post-exchange projections otherwise
     // collapse into one, re-splitting the text per gram reference
-    val grams = docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w"))
-      .repartition(nPart, col("doc_id"))
+    val grams = rebalance(
+        docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w")), "doc_id")
       .filter(size(col("w")) >= n)
       .select(col("doc_id"), explode(array_distinct(T.wordNGrams(col("w"), n))).as("g"))
     val perDoc = grams.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
@@ -181,14 +176,13 @@ object TermStats {
   def bm25Rank(docs: DataFrame, queryTerms: Seq[String], topK: Int = 10,
                textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(queryTerms.nonEmpty && topK > 0, "need query terms and topK > 0")
-    val nPart = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val totals = docs.agg(
       sum(size(T.tokens(col(textCol)))).as("nt"), count(lit(1)).as("nd")).head()
     val (nTok, nDocs) = (totals.getLong(0), totals.getLong(1))
     val avgdl = nTok.toDouble / nDocs.toDouble
 
-    val toks = docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w"))
-      .repartition(nPart, col("doc_id"))
+    val toks = rebalance(
+        docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w")), "doc_id")
       .select(col("doc_id"), col("w"), size(col("w")).cast("long").as("dl"))
     val tf = toks.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
       .filter(col("term").isin(queryTerms: _*))
@@ -287,9 +281,7 @@ object TermStats {
   def zipfFit(docs: DataFrame, topN: Int = 200,
               textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(topN >= 2, s"topN must be >= 2, got $topN")
-    val nPart = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val counts = docs.select(col(idCol), T.tokens(col(textCol)).as("w"))
-      .repartition(nPart, col(idCol))
+    val counts = rebalance(docs.select(col(idCol), T.tokens(col(textCol)).as("w")), idCol)
       .select(explode(col("w")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
     val ranked = counts
@@ -334,9 +326,7 @@ object TermStats {
                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(probes.nonEmpty && probes.forall(_ >= 1), s"bad probes $probes")
     val spark = docs.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val counts = docs.select(col(idCol), T.tokens(col(textCol)).as("w"))
-      .repartition(nPart, col(idCol))
+    val counts = rebalance(docs.select(col(idCol), T.tokens(col(textCol)).as("w")), idCol)
       .select(explode(col("w")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
     val wRank = Window.orderBy(col("c").desc, col("t"))
@@ -382,9 +372,8 @@ object TermStats {
     */
   def tfidfSimilarPairs(docs: DataFrame, minCos: Double = 0.5, dfMax: Long = 100,
                         textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val nPart = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val nDocs = docs.count()
-    val tf = docs.repartition(nPart, col(idCol))
+    val tf = rebalance(docs, idCol)
       .select(col(idCol).as("doc_id"), explode(T.tokens(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val idf = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -410,55 +399,6 @@ object TermStats {
         (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))))
       .filter(col("cos") >= minCos)
       .select("doc_a", "doc_b", "cos")
-  }
-
-  /** Frequency vocabulary + id-encoding: build the (token → id) table
-    * a word-level model consumes (id 1..V ordered by count desc, token
-    * asc; 0 reserved for UNK) and re-emit every document as its
-    * ordered id sequence — the text→tensor boundary of a training
-    * pipeline, downstream of cleaning and upstream of [[graft.operators.Packing]].
-    *
-    * Scale shape: tokenization + position tagging are map-side
-    * (posexplode); the vocabulary is ONE term-keyed partial-agg
-    * shuffle (Zipf-hot tokens collapse map-side) pruned by `minCount`
-    * BEFORE ranking, so the global row_number window sorts the
-    * ARTIFACT (|vocab|, bounded by minCount), never the corpus — same
-    * artifact class as the IVF centroids, and like the IDF table it
-    * re-joins the exploded corpus broadcast ONLY UNDER a row budget
-    * with a plain shuffled join past it. Reassembly is one groupBy per
-    * doc; in-doc order is restored by array_sort over (pos, id)
-    * structs — positions are unique per doc, so the sort is total and
-    * the emitted sequence deterministic on any engine.
-    *
-    * Exactness: counts, ranks, and ids are integers end-to-end; ties
-    * in frequency break on the token string. Empty-token splits are
-    * dropped; a document with no tokens emits nothing (it has no
-    * sequence), consistently on every engine.
-    *
-    * Output: (doc_id, n_tokens, n_unk, ids array<long>).
-    */
-  def vocabEncode(docs: DataFrame, minCount: Int = 5,
-                  textCol: String = "text", idCol: String = "doc_id",
-                  broadcastMaxRows: Long = 2000000L): DataFrame = {
-    require(minCount >= 1, "minCount must be >= 1")
-    val nPart = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val tok = docs.repartition(nPart, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        posexplode(filter(T.tokens(col(textCol)), t => t =!= "")).as(Seq("pos", "term")))
-    val vocab = tok.groupBy("term").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= minCount)
-      .withColumn("id", row_number().over(
-        Window.orderBy(col("n").desc, col("term"))).cast("long"))
-      .select("term", "id")
-      .persist()
-    val vocabT = if (vocab.count() <= broadcastMaxRows) broadcast(vocab) else vocab
-    tok.join(vocabT, Seq("term"), "left")
-      .withColumn("id", coalesce(col("id"), lit(0L)))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("id") === 0L, 1L).otherwise(0L)).as("n_unk"),
-        transform(array_sort(collect_list(struct(col("pos"), col("id")))),
-          x => x.getField("id")).as("ids"))
   }
 
   /** Good–Turing frequency re-estimation (Good '53; Gale & Sampson

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing
+import graft.core.Sizing.rebalance
 import graft.functions.{Hashing, TextFunctions => T}
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2
@@ -32,24 +34,6 @@ object Dedup {
     df.withColumn("_bn", row_number().over(
         Window.partitionBy(bucketCols.map(col): _*).orderBy(col(idCol))))
       .filter(col("_bn") <= cap).drop("_bn")
-
-  /** CPU-heavy per-document stages (shingling, hashing, vector math)
-    * must not inherit the scan's parallelism: a corpus that arrives as
-    * few/small files (or few row groups) would run the dominant stage
-    * on a handful of cores. One cheap shuffle of the raw rows,
-    * hash-partitioned on the id, spreads that work across the cluster
-    * AND satisfies the downstream per-doc groupBy's distribution, so
-    * the signature aggregation needs no second shuffle.
-    *
-    * The partition count is pinned explicitly: a bare
-    * `repartition(col)` is a coalescible shuffle, which AQE happily
-    * merges back to one partition on small byte sizes — defeating the
-    * point (the cost here is CPU per row, not bytes).
-    */
-  private def rebalance(df: DataFrame, idCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    df.repartition(n, col(idCol))
-  }
 
   /** Exact dedup (#29): hash-groupBy on normalized text; keeper is the
     * min doc id. One shuffle on the md5 key; partial agg map-side.
@@ -291,15 +275,14 @@ object Dedup {
     * (postings/dfMax at 100 TB is still billions), so the broadcast is
     * SIZE-GATED: the frequent set is counted first (one cheap action
     * over the df aggregate the plan computes anyway) and the hint is
-    * applied only under `frequentBroadcastRows`; past the budget the
-    * anti join degrades to a plain shuffled left_anti — one extra
-    * shuffle of the postings, correct at any scale, instead of a
-    * forced driver OOM.
+    * applied only within the driver budget ([[graft.core.Sizing]]);
+    * past it the anti join degrades to a plain shuffled left_anti —
+    * one extra shuffle of the postings, correct at any scale, instead
+    * of a forced driver OOM.
     */
   def ngramJaccard(docs: DataFrame, dfMax: Int = 20, topK: Int = 100,
-                   textCol: String = "text", idCol: String = "doc_id",
-                   frequentBroadcastRows: Long = 2000000L): DataFrame = {
-    ngramPairCounts(docs, dfMax, textCol, idCol, frequentBroadcastRows)
+                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+    ngramPairCounts(docs, dfMax, textCol, idCol)
       .withColumn("jaccard",
         col("common").cast("double") / (col("na") + col("nb") - col("common")))
       .select("doc_a", "doc_b", "common", "jaccard")
@@ -311,8 +294,7 @@ object Dedup {
     * df-filtered rare-gram inverted index (doc_a < doc_b).
     */
   private def ngramPairCounts(docs: DataFrame, dfMax: Int,
-                              textCol: String, idCol: String,
-                              frequentBroadcastRows: Long): DataFrame = {
+                              textCol: String, idCol: String): DataFrame = {
     // tokens pre-exchange (see minhashPairs): post-exchange projections
     // collapse into one, re-splitting the text per gram reference
     val post = rebalance(
@@ -328,8 +310,7 @@ object Dedup {
     val frequent = post.groupBy("g").agg(count(lit(1)).as("df"))
       .filter(col("df") > dfMax).select("g")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nFrequent = frequent.count()
-    val anti = if (nFrequent <= frequentBroadcastRows) broadcast(frequent) else frequent
+    val anti = Sizing.broadcastIfFits(docs.sparkSession, frequent.count())(frequent)
     // Per-doc rare-gram count rides along as a window count: on the
     // broadcast path the postings are still hash-partitioned on doc_id
     // (rebalance), so the window needs only a partition-local sort — no
@@ -369,10 +350,9 @@ object Dedup {
     */
   def containmentJoin(docs: DataFrame, tNum: Int = 1, tDen: Int = 2,
                       dfMax: Int = 20, topK: Int = 100,
-                      textCol: String = "text", idCol: String = "doc_id",
-                      frequentBroadcastRows: Long = 2000000L): DataFrame = {
+                      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(tNum >= 0 && tDen > 0 && tNum <= tDen, s"threshold $tNum/$tDen not in [0,1]")
-    ngramPairCounts(docs, dfMax, textCol, idCol, frequentBroadcastRows)
+    ngramPairCounts(docs, dfMax, textCol, idCol)
       .filter(col("common") * tDen >= least(col("na"), col("nb")) * tNum)
       .withColumn("containment",
         col("common").cast("double") / least(col("na"), col("nb")))
@@ -400,19 +380,19 @@ object Dedup {
     * pair list is persisted up front — it is the small derived artifact
     * (candidate pairs), never the corpus.
     *
-    * ADAPTIVE SMALL-GRAPH PATH: when the edge list fits comfortably on
-    * the driver (`localThreshold`, default 100k edges ≈ a couple of
-    * MB — the same budget class as the IVF centroid artifact), the
-    * O(log d) distributed rounds cost ~12 scheduled jobs of pure
-    * overhead; a driver-side union-find solves the same graph exactly
-    * in microseconds. Both paths produce identical labels (property-
-    * tested against each other); the distributed path is what runs at
-    * 100 TB, where candidate caps still bound the list but not to
-    * driver size.
+    * ADAPTIVE SMALL-GRAPH PATH: when the edge list fits the driver
+    * budget and has no NULL endpoint (the graph kernels' switch,
+    * `Graph.localRows`), the O(log d) distributed rounds cost ~12
+    * scheduled jobs of pure overhead; a driver-side union-find solves
+    * the same graph exactly in microseconds. Both paths produce
+    * identical labels (property-tested against each other); the
+    * distributed path is what runs at 100 TB, where candidate caps
+    * still bound the list but not to driver size, and it defines what
+    * a NULL endpoint means.
     * Returns (node, component) for every node appearing in `pairs`.
     */
   def components(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
-                 maxIter: Int = 25, localThreshold: Long = 100000L): DataFrame = {
+                 maxIter: Int = 25): DataFrame = {
     val spark = pairs.sparkSession
     val p = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b")).persist()
     // Size the loop's shuffles to the PAIR LIST, not the session default:
@@ -425,14 +405,15 @@ object Dedup {
     // conf is restored after; the loop is the only consumer in between
     // (the same set/restore pattern as the streaming test harness).
     val nEdges = p.count()
-    if (nEdges <= localThreshold) {
-      val edges = p.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val local = Graph.localRows(p, "a", "b", p, nEdges)
+    if (local.isDefined) {
+      val edges = local.get.map(r => (r.getLong(0), r.getLong(1)))
       p.unpersist()
       val parent = scala.collection.mutable.Map[Long, Long]()
       // ITERATIVE find: union-by-min (no rank) can build an O(n)-deep
       // parent chain when edges arrive in descending order, and the
       // final relabel pass walks every chain — a recursive find would
-      // be partition-order-dependent StackOverflow at localThreshold
+      // be partition-order-dependent StackOverflow at driver-budget
       // depth. Walk to the root in a loop, then compress in a second.
       def find(x0: Long): Long = {
         var x = x0
@@ -1153,7 +1134,7 @@ object Dedup {
     * doc-internal repeated line from inflating df. The boilerplate set
     * (lines over the threshold) is the Zipf head — tiny by the same
     * argument as [[ngramPairCounts]]'s frequent set — and is joined
-    * back LEFT_ANTI under the same size gate: broadcast within budget,
+    * back LEFT_ANTI under the same driver budget: broadcast within it,
     * shuffled anti past it (correct at any scale, one extra shuffle).
     * Reassembly is a partition-local sort_array over (pos, line) — the
     * exploded lines are still hash-partitioned by doc_id from the
@@ -1163,8 +1144,7 @@ object Dedup {
     */
   def stripBoilerplateLines(docs: DataFrame, dfNum: Int = 1, dfDen: Int = 2,
                             textCol: String = "text", idCol: String = "doc_id",
-                            srcCol: String = "source",
-                            frequentBroadcastRows: Long = 4000000L): DataFrame = {
+                            srcCol: String = "source"): DataFrame = {
     require(dfNum >= 1 && dfDen >= dfNum, s"threshold $dfNum/$dfDen not in (0,1]")
     val lines = rebalance(
         docs.select(col(idCol).as("doc_id"), col(srcCol).as("src"),
@@ -1181,7 +1161,7 @@ object Dedup {
       .filter(col("df") * dfDen >= col("n_docs") * dfNum)
       .select("src", "lh")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val anti = if (boiler.count() <= frequentBroadcastRows) broadcast(boiler) else boiler
+    val anti = Sizing.broadcastIfFits(docs.sparkSession, boiler.count())(boiler)
     lines.join(anti, Seq("src", "lh"), "left_anti")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("pos"), col("line")))).as("kept"))

@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Sizing
+
 /** Iterative graph computation done Spark-relational: PageRank as
   * repeated join + partial-agg rounds over an edge list — the
   * importance/centrality pass over a similarity graph (which documents
@@ -29,45 +31,40 @@ object Graph {
   //
   // Every operator below consumes a DERIVED pair list (bucket-capped
   // candidate pairs) that is orders of magnitude smaller than the
-  // corpus. When that list fits the driver comfortably, the
-  // distributed peel/wedge rounds are pure scheduling overhead: at
+  // corpus. When that list fits the driver budget ([[graft.core.Sizing]]),
+  // the distributed peel/wedge rounds are pure scheduling overhead: at
   // sf0.1, kTruss ran 108 jobs (~30 peel rounds × 3-4 actions) and
   // triangleCounts 57 jobs/1205 tasks for an 11k-edge graph a single
   // core closes in milliseconds. The kernels are integer fixpoints
   // (counts, supports, peels) with at most one mirrored double
   // expression at the very end, so the local form reproduces the
-  // distributed outputs EXACTLY (property-tested both ways).
-  //
-  // Gate: conf "graft.graph.localEdgeGate" (edges; default 2e6 ≈
-  // 32 MB of id pairs — the broadcast-side budget class, far under the
-  // 8 GB broadcast cap; "0" disables — the scale posture stays: above
-  // the gate, for non-LONG ids, or with a NULL endpoint, the
-  // distributed rounds run unchanged, and every local kernel below
-  // does strictly less work than the distributed plan materializes as
-  // rows). Each kernel gates on the row count it actually collects
+  // distributed outputs EXACTLY (property-tested both ways). For
+  // non-LONG ids or a NULL endpoint the distributed rounds run
+  // unchanged. Each kernel gates on the row count it actually collects
   // (symmetrized for the wedge kernels, canonical undirected for
-  // modularity and kTruss), so the budget is uniform per collect.
-  // Integer arithmetic stays exact at this gate — louvain's largest
-  // products (m2·e_ic ≤ gate²) are long-exact up to a ~3e9 gate;
-  // assortativity's cubic moment sums bind FIRST and that kernel caps
-  // its own local path at 3e6 independently of the conf.
+  // modularity and kTruss). Integer arithmetic stays exact at the
+  // default budget — louvain's largest products (m2·e_ic ≤ budget²)
+  // are long-exact up to a ~3e9 budget; assortativity's cubic moment
+  // sums bind FIRST and that kernel caps its own local path at 3e6
+  // whatever the budget.
   // -----------------------------------------------------------------
 
-  /** The one driver-or-cluster switch: the collected rows of `edges`
-    * when the exact local mirror may run, None to run the distributed
-    * plan. Local needs a positive gate (the conf, lowered to `cap` by a
-    * kernel whose local arithmetic has a tighter exactness bound), LONG
-    * `aCol`/`bCol` in `ids`, the row count `n` within the gate (`n` is
-    * evaluated only after the first two checks pass, so a disabled gate
-    * issues no count), and no NULL in any collected row: the
-    * distributed joins define what a NULL endpoint means, and a map
-    * keyed on Long cannot mirror it.
+  /** The one driver-or-cluster switch of the pair-list kernels (here
+    * and [[Dedup.components]]): the collected rows of `edges` when the
+    * exact local mirror may run, None to run the distributed plan.
+    * Local needs LONG `aCol`/`bCol` in `ids`, the row count `n` within
+    * the driver budget and within `cap` (lowered by a kernel whose
+    * local arithmetic has a tighter exactness bound; `n` is evaluated
+    * only after the type check passes and while the budget is open, so
+    * a closed budget issues no count), and no NULL in any collected
+    * row: the distributed joins define what a NULL endpoint means, and
+    * a map keyed on Long cannot mirror it.
     */
-  private def localRows(ids: DataFrame, aCol: String, bCol: String, edges: DataFrame,
-                        n: => Long, cap: Long = Long.MaxValue): Option[Array[Row]] = {
-    val gate = math.min(
-      ids.sparkSession.conf.get("graft.graph.localEdgeGate", "2000000").toLong, cap)
-    if (gate <= 0 || !longCols(ids, aCol, bCol) || n > gate) None
+  private[operators] def localRows(ids: DataFrame, aCol: String, bCol: String,
+                                   edges: DataFrame, n: => Long,
+                                   cap: Long = Long.MaxValue): Option[Array[Row]] = {
+    lazy val rows = n
+    if (!longCols(ids, aCol, bCol) || !Sizing.fits(ids.sparkSession, rows) || rows > cap) None
     else Some(edges.collect()).filterNot(_.exists(_.anyNull))
   }
 
@@ -494,7 +491,7 @@ object Graph {
     */
   def triangleCounts(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val edges = symEdges(pairs, aCol, bCol)
-    // the gate count materializes the persist either way (the
+    // the budget count materializes the persist either way (the
     // distributed branch reuses it for free)
     localPairs(pairs, aCol, bCol, edges, edges.count()) match {
       case Some(es) =>
@@ -771,7 +768,7 @@ object Graph {
     require(m2 > 0, "louvainMove: empty edge list")
     // local: the gain argmax is exact integer arithmetic — every
     // product m2·e_ic and k_i·d'_c is ≤ m2², i.e. ≤ 4e12 at the default
-    // 2e6 gate (long-exact up to a ~3e9 gate), so the local scores
+    // 2e6 driver budget (long-exact up to a ~3e9 budget), so the local scores
     // equal the DECIMAL(38,0) plan's values identically
     localPairs(pairs, aCol, bCol, edges, m2) match {
       case Some(es) =>
@@ -903,7 +900,7 @@ object Graph {
     val local = (if (labelsLong) localPairs(pairs, aCol, bCol, e, m) else None).flatMap { es =>
       // only graph nodes' labels are needed: the node set is already in
       // memory, so it semi-joins the label table as a broadcast local
-      // relation — the collect stays inside the gate budget even when
+      // relation — the collect stays inside the driver budget even when
       // the label table itself is corpus-sized
       val nodeSet = new java.util.HashSet[java.lang.Long]()
       es.foreach { case (a, b) => nodeSet.add(a); nodeSet.add(b); () }
@@ -914,7 +911,7 @@ object Graph {
       // that, so duplicate labels fall back to the distributed branch
       // instead of silently diverging. The duplicate census runs
       // CLUSTER-SIDE (one aggregated row per graph node), so the
-      // driver collect is bounded by the edge gate even when the label
+      // driver collect is bounded by the driver budget even when the label
       // table itself is pathologically duplicated (one row per event).
       val labRows = lab.join(broadcast(nodesDf), col("_ln") === col("_n"))
         .groupBy(col("_ln"))
@@ -1101,7 +1098,7 @@ object Graph {
     // Σ deg(src)² over directed edges, is ≤ m·(m/2)², so plain long
     // sums equal the distributed DECIMAL(38,0) sums exactly only while
     // m³/4 < 2⁶³, i.e. m ≤ ~3.3e6. The local path therefore caps at
-    // 3e6 INDEPENDENTLY of the user-settable gate: a larger conf value
+    // 3e6 INDEPENDENTLY of the driver budget: a larger conf value
     // must widen the other kernels without ever letting these longs
     // wrap.
     localPairs(pairs, aCol, bCol, edges, edges.count(), cap = 3000000L) match {

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Sizing.rebalance
+
 /** Multimodal binary-column plumbing (SURVEY.md §2 #40): image/audio/
   * video payloads travel as opaque `binary` columns with a typed
   * metadata struct; decode/feature-extract runs batched inside
@@ -28,16 +30,6 @@ import org.apache.spark.sql.types._
   *    codec exists) would plug into.
   */
 object Multimodal {
-
-  /** Media encode/decode is CPU-per-row work: a corpus arriving as few
-    * files (or few row groups) must not pin the codec stage to a few
-    * cores. Pinned-count repartition (AQE cannot coalesce it) before
-    * the first mapPartitions; decode chains in the same stage.
-    */
-  private def rebalance(df: DataFrame, idCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    df.repartition(n, col(idCol))
-  }
 
   val decodedSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),

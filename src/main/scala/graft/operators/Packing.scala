@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing.rebalance
 import graft.functions.{TextFunctions => T}
 
 /** Sequence packing for LLM training (SURVEY.md §2 #46): assign each
@@ -140,10 +141,8 @@ object Packing {
                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(chunkTokens >= 1 && strideTokens >= 1 && strideTokens <= chunkTokens,
       s"need 1 <= strideTokens($strideTokens) <= chunkTokens($chunkTokens)")
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val base = docs
-      .select(col(idCol).as("doc_id"), graft.functions.TextFunctions.tokens(col(textCol)).as("w"))
-      .repartition(n, col("doc_id"))
+    val base = rebalance(
+        docs.select(col(idCol).as("doc_id"), T.tokens(col(textCol)).as("w")), "doc_id")
       .withColumn("n", size(col("w")))
       .filter(col("n") >= 1)
     val nch = floor((greatest(col("n") - chunkTokens, lit(0)) + lit(strideTokens - 1))

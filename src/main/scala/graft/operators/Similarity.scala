@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Sizing.rebalance
 import graft.functions.{Hashing, VectorFunctions => V}
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -12,11 +13,6 @@ import graft.functions.{Hashing, VectorFunctions => V}
   * shuffle of the corpus itself.
   */
 object Similarity {
-
-  private def rebalance(df: DataFrame, idCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    df.repartition(n, col(idCol))
-  }
 
   /** (cos, -cell) structs per centroid; array_max picks best cos, ties
     * broken toward the smaller cell id — all inside codegen.

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{Agg, Tafra}
+import graft.core.Sizing.rebalance
 import graft.sources.CsvSource
 import Helpers._
 
@@ -511,15 +512,11 @@ object FrameQueries {
     // cluster on doc_id so no further shuffle is required.
     Query("q44_text_repetition", (s, dir) => {
       import graft.functions.{TextFunctions => T}
-      // pinned partition count: a bare repartition(col) is an
-      // AQE-coalescible shuffle that collapses back to few partitions on
-      // small byte sizes, starving the CPU-heavy tokenize/explode stage
-      val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      // tokens pre-exchange: materialized through the shuffle so the
-      // bigram lambda reads an O(1) attribute, not a re-split per element
-      val toks = t(s, dir, "documents").df
-        .select(col("doc_id"), T.tokens(col("text")).as("w"))
-        .repartition(nPart, col("doc_id"))
+      // tokens pre-exchange: materialized through the pinned shuffle so
+      // the bigram lambda reads an O(1) attribute, not a re-split per
+      // element
+      val toks = rebalance(
+        t(s, dir, "documents").df.select(col("doc_id"), T.tokens(col("text")).as("w")), "doc_id")
       val uni = toks.select(col("doc_id"), explode(col("w")).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
         .groupBy("doc_id").agg(max("c").as("top_word"), sum("c").as("n_tok"),
@@ -770,10 +767,8 @@ load();</script><style>p { color: red }</style></head><body><h1>Doc &amp; entry<
     // single-row-group scan.
     Query("q85_winnow", (s, dir) => {
       import graft.functions.{TextFunctions => T}
-      val nPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      t(s, dir, "documents").df
-        .select(col("doc_id"), T.tokens(col("text")).as("w"))
-        .repartition(nPart, col("doc_id"))
+      rebalance(t(s, dir, "documents").df.select(col("doc_id"), T.tokens(col("text")).as("w")),
+          "doc_id")
         .select(col("doc_id"), explode(T.winnow(col("w"), 4, 4)).as("packed"))
         .select(col("doc_id"),
           shiftright(col("packed"), 20).as("fp"),

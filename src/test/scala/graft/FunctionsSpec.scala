@@ -275,7 +275,7 @@ class FunctionsSpec extends SparkSpec {
     }
     out(3L) shouldBe ((0L, 0L, -1.0)) // retained, unmeasured (null score)
     // the shuffled fallback (over-budget LM) scores identically
-    val fb = NgramLm.perplexity(docs, seed, broadcastMaxRows = -1L).collect()
+    val fb = withDriverRows(0)(NgramLm.perplexity(docs, seed).collect())
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1.0 else r.getDouble(3)))).toMap
     fb shouldBe out
@@ -332,7 +332,7 @@ class FunctionsSpec extends SparkSpec {
     // in-distribution text scores better than the floor-heavy doc
     out(0L)._3 should be < out(2L)._3
     // the shuffled fallback (over-budget LM) scores identically
-    val fb = NgramLm.stupidBackoff(docs, seed, broadcastMaxRows = -1L).collect()
+    val fb = withDriverRows(0)(NgramLm.stupidBackoff(docs, seed).collect())
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1.0 else r.getDouble(3)))).toMap
     fb shouldBe out
@@ -357,7 +357,7 @@ class FunctionsSpec extends SparkSpec {
     // doc3: date 0.693 > cherry 0
     out((3L, 1)) shouldBe (("date", 1L))
     // shuffled fallback path scores identically
-    canon(TermStats.tfidfTopTerms(docs, m = 2, broadcastMaxRows = -1L)) shouldBe
+    withDriverRows(0)(canon(TermStats.tfidfTopTerms(docs, m = 2))) shouldBe
       canon(TermStats.tfidfTopTerms(docs, m = 2))
   }
 
@@ -445,7 +445,7 @@ class FunctionsSpec extends SparkSpec {
     out.keySet.filter(_ > 100L) shouldBe (101L to 104L).toSet
     out(101L) shouldBe 5.0
     // shuffled fallback (gate forced off) selects the identical set
-    canon(Profile.adaptiveFilter(df, "source", "score", 0.25, broadcastMaxRows = -1L)) shouldBe
+    withDriverRows(0)(canon(Profile.adaptiveFilter(df, "source", "score", 0.25))) shouldBe
       canon(Profile.adaptiveFilter(df, "source", "score", 0.25))
   }
 

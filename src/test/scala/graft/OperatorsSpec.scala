@@ -121,11 +121,19 @@ class OperatorsSpec extends SparkSpec {
     // both the local union-find and the distributed propagation path
     Dedup.components(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe expected
-    Dedup.components(pairs, localThreshold = 0L).collect()
+    withDriverRows(0)(Dedup.components(pairs).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe expected
     val keep = Dedup.keepList(pairs).collect()
       .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     keep.filter(_._2).keySet shouldBe Set(1L, 5L)
+    // a NULL endpoint: the driver union-find cannot key on it, so the
+    // default budget falls back to the distributed plan, which defines
+    // what it means — the same rows as with the budget closed
+    val withNull = Seq((1L, Option(2L)), (2L, None), (5L, Option(6L))).toDF("doc_a", "doc_b")
+    val nullRows = Seq(Seq("1", "1"), Seq("2", "1"), Seq("5", "5"), Seq("6", "5"),
+      Seq("null", "null"))
+    canon(Dedup.components(withNull)) shouldBe nullRows
+    withDriverRows(0)(canon(Dedup.components(withNull))) shouldBe nullRows
   }
 
   /** Embeddings: v2 = v1 (dup), v3 ⟂ v1, v4 ≈ v1. */
@@ -570,7 +578,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("ngramJaccard size gate: shuffled-anti fallback matches the broadcast path exactly") {
     val bcast = Dedup.ngramJaccard(docs)
-    val fallback = Dedup.ngramJaccard(docs, frequentBroadcastRows = -1L)
+    val fallback = withDriverRows(0)(Dedup.ngramJaccard(docs))
     def antiLines(df: DataFrame): String = df.queryExecution.executedPlan.toString
       .linesIterator.filter(_.contains("LeftAnti")).mkString("\n")
     // under budget the df-filter anti join is FORCE-broadcast; over
@@ -580,7 +588,7 @@ class OperatorsSpec extends SparkSpec {
     antiLines(bcast) should include("BroadcastHashJoin")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val fb = antiLines(Dedup.ngramJaccard(docs, frequentBroadcastRows = -1L))
+      val fb = withDriverRows(0)(antiLines(Dedup.ngramJaccard(docs)))
       fb should not be empty
       (fb should not).include("BroadcastHashJoin")
       canon(fallback) shouldBe canon(bcast)
@@ -591,7 +599,7 @@ class OperatorsSpec extends SparkSpec {
     // edges arrive in DESCENDING order: (n-1,n),(n-2,n-1),... — with
     // union-by-min and no rank this builds one O(n)-deep parent chain,
     // the shape that made a recursive find a partition-order-dependent
-    // StackOverflow at localThreshold depth
+    // StackOverflow at driver-budget depth
     val n = 80000L
     val edges = spark.range(1L, n)
       .selectExpr(s"$n - id as doc_a", s"$n - id + 1 as doc_b")

@@ -895,12 +895,12 @@ class PlanSpec extends SparkSpec {
     // and the final plan is the local result frame. The distributed
     // rounds — the 100 TB path — keep the map-side combine contract:
     // pin the gate off to assert it.
-    spark.conf.set("graft.graph.localEdgeGate", "0")
+    spark.conf.set("graft.driverRows", "0")
     try {
       val p = plan("q288_hits")
       p should include("partial_sum")
       (p should not).include("CartesianProduct")
-    } finally spark.conf.unset("graft.graph.localEdgeGate")
+    } finally spark.conf.unset("graft.driverRows")
   }
 
   test("q296 effect sizes: pair fan-out joins the BROADCAST pair table, no corpus self-join") {

@@ -77,8 +77,8 @@ class PropertySpec extends SparkSpec {
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
         local shouldBe expected
         // ...and the distributed label-propagation path must agree
-        val dist = Dedup.components(edges.toDF("doc_a", "doc_b"), localThreshold = 0L)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val dist = withDriverRows(0)(Dedup.components(edges.toDF("doc_a", "doc_b")).collect())
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
         dist shouldBe expected
       }
     }

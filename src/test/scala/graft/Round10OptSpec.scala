@@ -24,14 +24,8 @@ class Round10OptSpec extends SparkSpec {
       .mkString("|")).sorted.toSeq
 
   private def bothPaths(op: => org.apache.spark.sql.DataFrame)
-      : (Seq[String], Seq[String]) = {
-    spark.conf.set("graft.graph.localEdgeGate", "200000")
-    val local = canonRows(op)
-    spark.conf.set("graft.graph.localEdgeGate", "0")
-    val dist = try canonRows(op)
-    finally spark.conf.set("graft.graph.localEdgeGate", "200000")
-    (local, dist)
-  }
+      : (Seq[String], Seq[String]) =
+    (canonRows(op), withDriverRows(0)(canonRows(op)))
 
   test("local triangleCounts equals the distributed wedge plan (schema + rows)") {
     for (seed <- 1 to 3) {
@@ -41,11 +35,8 @@ class Round10OptSpec extends SparkSpec {
     }
     // schema identity (names + types) on one instance of each path
     val pairs = randomPairs(9, 20, 60)
-    spark.conf.set("graft.graph.localEdgeGate", "200000")
     val sLocal = Graph.triangleCounts(pairs, "a", "b").schema
-    spark.conf.set("graft.graph.localEdgeGate", "0")
-    val sDist = try Graph.triangleCounts(pairs, "a", "b").schema
-    finally spark.conf.set("graft.graph.localEdgeGate", "200000")
+    val sDist = withDriverRows(0)(Graph.triangleCounts(pairs, "a", "b").schema)
     sLocal.map(f => (f.name, f.dataType)) shouldBe sDist.map(f => (f.name, f.dataType))
   }
 

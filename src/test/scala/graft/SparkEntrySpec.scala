@@ -125,16 +125,25 @@ class SparkEntrySpec extends SparkSpec {
     Bench.parseBenchQueries(line) shouldBe Map("q1_a" -> 1.25, "q2_b" -> 2.25)
   }
 
-  test("every graph query answers the same rows with the local edge gate at its default and at 0") {
-    // the local graph mirrors are what the oracle hashes at this scale;
-    // gate 0 forces every distributed plan over the same pipeline inputs
-    for (q <- queries.GraphQueries.all) withClue(s"${q.name}: ") {
-      spark.conf.unset("graft.graph.localEdgeGate")
-      val local = canon(q.build(spark, sfDir))
-      spark.conf.set("graft.graph.localEdgeGate", "0")
-      val dist = try canon(q.build(spark, sfDir))
-      finally spark.conf.unset("graft.graph.localEdgeGate")
-      dist shouldBe local
+  /** The queries that reach a driver-budget gate ([[graft.core.Sizing]])
+    * outside the graph family: the broadcast-or-shuffle joins of the
+    * dedup, LM, term-stats and filter kernels, and components' local
+    * union-find.
+    */
+  private val budgetGated = Seq("q25_dedup_ngram", "q41_dedup_components", "q58_semantic_dedup",
+    "q65_lm_perplexity", "q67_tfidf_terms", "q75_adaptive_filter", "q81_pmi_collocations",
+    "q123_containment", "q178_boilerplate", "q179_golden_records", "q181_dedup_keep_best",
+    "q232_stupid_backoff", "q337_kneser_ney")
+
+  test("driver-budget queries answer the same rows at the default budget and at 0") {
+    // the driver-side paths are what the oracle hashes at this scale;
+    // budget 0 forces every broadcast-free / distributed plan over the
+    // same pipeline inputs
+    val gated = queries.GraphQueries.all.map(q => q.name -> q.build) ++
+      budgetGated.map(n => n -> SparkEntry.queries(n))
+    for ((name, build) <- gated) withClue(s"$name: ") {
+      val local = canon(build(spark, sfDir))
+      withDriverRows(0)(canon(build(spark, sfDir))) shouldBe local
     }
   }
 

@@ -19,4 +19,13 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     df.collect().toSeq.map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
 
   def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  /** `body` with the driver budget `graft.driverRows` set to `rows`
+    * (0 closes every driver-size gate), then the conf unset so later
+    * suites in the shared session see the default.
+    */
+  def withDriverRows[T](rows: Long)(body: => T): T = {
+    spark.conf.set("graft.driverRows", rows.toString)
+    try body finally spark.conf.unset("graft.driverRows")
+  }
 }
