@@ -400,7 +400,7 @@ object Dedup {
     // than the corpus (candidate caps/topK bound it), and each of the
     // O(log d) rounds schedules ~3 shuffling jobs — at 32 partitions a
     // 100-edge list pays hundreds of empty tasks per query. One partition
-    // per ~100k edges (floor 1) keeps tiny lists at 1-2 tasks per job and
+    // per ~100k edges (floor 4, below) keeps tiny lists at a few tasks per job and
     // grows back to full parallelism for a billion-edge list. Session
     // conf is restored after; the loop is the only consumer in between
     // (the same set/restore pattern as the streaming test harness).
