@@ -486,18 +486,18 @@ object StreamQueries {
          UNION ALL SELECT CAST(0 AS INT), CAST(3 AS BIGINT), CAST(NULL AS DOUBLE)"""),
 
     // §2#62ab (r9) CDC stream ACROSS a merge-on-read delete: the
-    // tx-changes source replays a mordelete version as exactly the
-    // tombstoned rows (touching only the files the sidecar references),
+    // tx-changes source replays a posdelete version as exactly the
+    // deleted rows (touching only the files the sidecar references),
     // and a later re-append of deleted keys streams normally — the
-    // per-file tombstone scope holds in the stream too. Closes the
-    // MoR-delete ↔ streaming-source seam end-to-end.
+    // per-file deletion-vector scope holds in the stream too. Closes
+    // the MoR-delete ↔ streaming-source seam end-to-end.
     Query("q327_tx_stream_mor", (s, dir) => {
       val table = sidePath("graft_txsm", dir)
       sources.TxTable.drop(s, table)
       val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
       sources.TxTable.commit(ord.repartitionByRange(4, col("o_orderkey")), table,
         statsCols = Seq("o_orderkey"))
-      sources.TxTable.deleteWhereMor(s, table, "o_orderkey", 1.0, 300.0, "o_orderkey")
+      sources.TxTable.deleteWherePos(s, table, "o_orderkey", 1.0, 300.0)
       sources.TxTable.commit(ord.filter(col("o_orderkey") <= 100), table,
         statsCols = Seq("o_orderkey"))
       sources.TxChangesStream.replayAll(s, table)
@@ -507,18 +507,19 @@ object StreamQueries {
     },
       """WITH v1 AS (
            SELECT o_orderkey, o_totalprice,
-             regexp_extract(filename, '[^/]*$') AS fn
-           FROM read_parquet('/tmp/graft_txsm___SFTAG__/data/v1_*.parquet', filename=true)),
-         tomb AS (
-           SELECT _gf, _gk
-           FROM read_parquet('/tmp/graft_txsm___SFTAG__/data/v2_t*.parquet'))
+             regexp_extract(filename, '[^/]*$') AS fn, file_row_number AS ri
+           FROM read_parquet('/tmp/graft_txsm___SFTAG__/data/v1_*.parquet',
+                             filename=true, file_row_number=true)),
+         vec AS (
+           SELECT _gf, _gp
+           FROM read_parquet('/tmp/graft_txsm___SFTAG__/data/v2_p*.parquet'))
          SELECT 'insert' AS change, CAST(1 AS INT) AS version, COUNT(*) AS n_rows,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
          FROM v1
          UNION ALL
          SELECT 'delete', CAST(2 AS INT), COUNT(*),
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-         FROM v1 d SEMI JOIN tomb t ON d.fn = t._gf AND d.o_orderkey = t._gk
+         FROM v1 d SEMI JOIN vec t ON d.fn = t._gf AND d.ri = t._gp
          UNION ALL
          SELECT 'insert', CAST(3 AS INT), COUNT(*),
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
@@ -526,10 +527,10 @@ object StreamQueries {
 
     // §2#62ad (r9) streaming MIRROR with delete propagation: pipeTo's
     // missing half — the downstream table tracks the upstream exactly,
-    // inserts AND row deletions, at delta cost (deletes tombstone via
-    // the bloom-accelerated key-set MoR path; versions apply in order
-    // under per-version txn markers, so crash replay never
-    // re-tombstones re-inserted keys). The oracle computes BOTH
+    // inserts AND row deletions, at delta cost (deletes apply via the
+    // bloom-accelerated key-set MoR path; versions apply in order
+    // under per-version txn markers, so crash replay never re-deletes
+    // re-inserted keys). The oracle computes BOTH
     // sections from the SOURCE's raw files — if mirroring diverged,
     // the Spark-side dst section would hash-mismatch.
     Query("q329_tx_mirror", (s, dir) => {
@@ -543,7 +544,7 @@ object StreamQueries {
       def part(p: String) = ord.filter(col("o_orderpriority") === p)
       sources.TxTable.commit(part("1-URGENT"), src, statsCols = Seq("o_orderkey")) // v1
       sources.TxTable.commit(part("2-HIGH"), src)                                  // v2
-      sources.TxTable.deleteWhereMor(s, src, "o_orderkey", 1.0, 400.0, "o_orderkey") // v3
+      sources.TxTable.deleteWherePos(s, src, "o_orderkey", 1.0, 400.0)               // v3
       sources.TxTable.commit(part("5-LOW"), src)                                   // v4
       // no trigger rate limit: the per-version loop inside the mirror
       // already applies versions in order, so one micro-batch drains
@@ -561,17 +562,17 @@ object StreamQueries {
     },
       """WITH phys AS (
            SELECT o_orderkey, o_totalprice, o_orderpriority,
-             regexp_extract(filename, '[^/]*$') AS fn
+             regexp_extract(filename, '[^/]*$') AS fn, file_row_number AS ri
            FROM read_parquet(['/tmp/graft_txmis___SFTAG__/data/v1_*.parquet',
                               '/tmp/graft_txmis___SFTAG__/data/v2_*.parquet',
                               '/tmp/graft_txmis___SFTAG__/data/v4_*.parquet'],
-                             filename=true)),
-         tomb AS (
-           SELECT _gf, _gk
-           FROM read_parquet('/tmp/graft_txmis___SFTAG__/data/v3_t*.parquet')),
+                             filename=true, file_row_number=true)),
+         vec AS (
+           SELECT _gf, _gp
+           FROM read_parquet('/tmp/graft_txmis___SFTAG__/data/v3_p*.parquet')),
          cur AS (
            SELECT d.o_orderkey, d.o_totalprice, d.o_orderpriority FROM phys d
-           ANTI JOIN tomb t ON d.fn = t._gf AND d.o_orderkey = t._gk)
+           ANTI JOIN vec t ON d.fn = t._gf AND d.ri = t._gp)
          SELECT 'src' AS side, o_orderpriority, COUNT(*) AS n_rows,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
          FROM cur GROUP BY 2

@@ -456,12 +456,14 @@ object TxQueries {
     },
       OracleGen.bandIndexLookupSql()),
 
-    // §2#62m (r9) MERGE-ON-READ delete: the tombstone-sidecar DELETE —
-    // zero data files rewritten at delete time (the manifest carries
-    // v1's files verbatim; an auditor checks `files v2 == files v1`),
-    // reads anti-join the (file, key) sidecar, and OPTIMIZE folds the
-    // tombstones into fresh files. The oracle reconstructs the MoR
-    // view with the same anti-join over the raw sidecar parquet.
+    // §2#62m (r9) MERGE-ON-READ delete by KEY SET (`deleteKeysMor`, the
+    // CDC-apply entry point; q331 checks the range one) — zero data
+    // files rewritten at delete time (the manifest carries v1's files
+    // verbatim; an auditor checks `files v2 == files v1`), reads
+    // anti-join the (file, row ordinal) sidecar, and OPTIMIZE folds the
+    // vectors into fresh files. The oracle reconstructs the MoR view
+    // with the same anti-join over the raw sidecar parquet, through
+    // DuckDB's file_row_number.
     Query("q324_tx_mor_delete", (s, dir) => {
       val table = sidePath("graft_txmor", dir)
       sources.TxTable.drop(s, table)
@@ -469,12 +471,12 @@ object TxQueries {
       sources.TxTable.commit(ord.repartitionByRange(4, col("o_orderkey")), table,
         statsCols = Seq("o_orderkey"))
       val files1 = sources.TxTable.filesOf(s, table, 1)
-      val (v2, nDel) = sources.TxTable.deleteWhereMor(
-        s, table, "o_orderkey", 1.0, 500.0, "o_orderkey")
-      val nTombFiles = sources.TxTable.tombEntriesOf(s, table, v2).size
+      val (v2, nDel) = sources.TxTable.deleteKeysMor(s, table, "o_orderkey",
+        ord.filter(col("o_orderkey").between(1, 500)).select("o_orderkey"))
+      val nVecFiles = sources.TxTable.posDeletesOf(s, table, v2).size
       val zeroRewrite = sources.TxTable.filesOf(s, table, v2) == files1
       val v3 = sources.TxTable.compact(s, table)
-      val tombsAfter = sources.TxTable.tombEntriesOf(s, table, v3).size
+      val vecsAfter = sources.TxTable.posDeletesOf(s, table, v3).size
       def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
         df.agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -483,8 +485,8 @@ object TxQueries {
       val meta = s.createDataFrame(Seq(
           ("meta", "zero_rewrite", if (zeroRewrite) 1L else 0L),
           ("meta", "n_deleted", nDel),
-          ("meta", "n_tomb_files", nTombFiles.toLong),
-          ("meta", "tombs_after_compact", tombsAfter.toLong)))
+          ("meta", "n_tomb_files", nVecFiles.toLong),
+          ("meta", "tombs_after_compact", vecsAfter.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
       summarize(sources.TxTable.readVersion(s, table, 1), "v1_full")
@@ -494,14 +496,15 @@ object TxQueries {
     },
       """WITH v1 AS (
            SELECT o_orderkey, o_totalprice,
-             regexp_extract(filename, '[^/]*$') AS fn
-           FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v1_*.parquet', filename=true)),
-         tomb AS (
-           SELECT _gf, _gk
-           FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v2_t*.parquet')),
+             regexp_extract(filename, '[^/]*$') AS fn, file_row_number AS ri
+           FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v1_*.parquet',
+                             filename=true, file_row_number=true)),
+         vec AS (
+           SELECT _gf, _gp
+           FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v2_p*.parquet')),
          mor AS (
            SELECT d.o_orderkey, d.o_totalprice FROM v1 d
-           ANTI JOIN tomb t ON d.fn = t._gf AND d.o_orderkey = t._gk)
+           ANTI JOIN vec t ON d.fn = t._gf AND d.ri = t._gp)
          SELECT 'table' AS section, 'v1_full' AS label, COUNT(*) AS n_rows,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
          FROM v1
@@ -512,10 +515,10 @@ object TxQueries {
          FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v3_*.parquet')
          UNION ALL SELECT 'meta', 'zero_rewrite', CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)
          UNION ALL SELECT 'meta', 'n_deleted',
-           (SELECT COUNT(*) FROM tomb), CAST(NULL AS DOUBLE)
+           (SELECT COUNT(*) FROM vec), CAST(NULL AS DOUBLE)
          UNION ALL SELECT 'meta', 'n_tomb_files',
            (SELECT COUNT(DISTINCT filename)
-            FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v2_t*.parquet', filename=true)),
+            FROM read_parquet('/tmp/graft_txmor___SFTAG__/data/v2_p*.parquet', filename=true)),
            CAST(NULL AS DOUBLE)
          UNION ALL SELECT 'meta', 'tombs_after_compact', CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)"""),
 

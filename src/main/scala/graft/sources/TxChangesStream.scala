@@ -287,7 +287,7 @@ object TxChangesStream {
     * row deletions, at delta cost. Each micro-batch applies its
     * versions IN ORDER (a version is the atomic unit of the source, so
     * cross-version insert/delete sequencing — delete-then-reinsert,
-    * overwrite replace — lands correctly): deletes tombstone the
+    * overwrite replace — lands correctly): deletes apply to the
     * mirror via the key-set merge-on-read path
     * ([[TxTable.deleteKeysMor]], bloom-accelerated when the mirror
     * indexes the key), inserts land via the idempotent committer.
@@ -302,9 +302,9 @@ object TxChangesStream {
     *
     * Exactly-once under crash-anywhere replay: each unit of work is
     * gated on a ([[mirrorMarker]], batchId) txn marker — recorded by
-    * BOTH the insert commit and the delete's mordelete manifest, so a
+    * BOTH the insert commit and the delete's posdelete manifest, so a
     * replayed batch (same batchId → same census → same runs) skips
-    * every already-applied unit instead of re-tombstoning rows a
+    * every already-applied unit instead of re-deleting rows a
     * later version re-inserted; an un-marked (crashed-before-publish)
     * unit re-applies idempotently. Markers are strings — no version
     * magnitude limit.

@@ -44,8 +44,8 @@ private[graft] final case class TxIndex(
   * [[TxTable]] writes. RESOLVED (`delta = None`) it is the version's
   * whole state; the DELTA form (`delta = Some(…)`) keeps `files` and
   * the per-file entries of the ADDED files only, while the scalar
-  * fields, `tombs` and `posd` are always whole, so their readers never
-  * walk the chain. File names are relative to the table root, or
+  * fields and `posd` are always whole, so their readers never walk the
+  * chain. File names are relative to the table root, or
   * absolute for files a shallow clone borrows.
   *
   * @param commitMs commit time (epoch ms), strictly increasing with
@@ -59,17 +59,15 @@ private[graft] final case class TxIndex(
   *                 '<col>#nulls' with lo = hi = the count
   * @param blooms   per-file bloom index (file, physical column, m bits,
   *                 k hashes, base64 bitset)
-  * @param tombs    merge-on-read tombstone sidecars (sidecar, PHYSICAL
-  *                 key column); each holds (_gf = data-file name, _gk =
-  *                 key) pairs the snapshot read anti-joins away
   * @param map      column mapping (logical, physical) per live column,
   *                 in schema order; None = identity. Physical names
   *                 never change once a file is written, so rename and
   *                 drop edit only this list
   * @param vsets    per-file distinct value sets (file, physical column,
   *                 values), at most [[TxTable.VsetMaxValues]] each
-  * @param posd     positional deletion-vector sidecars, each holding
-  *                 (_gf = data-file name, _gp = row ordinal) pairs
+  * @param posd     merge-on-read deletion-vector sidecars, each holding
+  *                 (_gf = data-file name, _gp = row ordinal) pairs the
+  *                 snapshot read anti-joins away
   * @param rows     per-file row counts (Delta's numRecords)
   * @param index    the declared skipping index (PHYSICAL names, like
   *                 `part`), applied to every file a commit adds
@@ -86,7 +84,6 @@ private[graft] final case class TxManifest(
     files: Seq[String] = Nil,
     stats: Seq[(String, String, Double, Double)] = Nil,
     blooms: Seq[(String, String, Int, Int, String)] = Nil,
-    tombs: Seq[(String, String)] = Nil,
     map: Option[Seq[(String, String)]] = None,
     vsets: Seq[(String, String, Seq[String])] = Nil,
     posd: Seq[String] = Nil,
@@ -94,8 +91,8 @@ private[graft] final case class TxManifest(
     index: TxIndex = TxIndex()) {
 
   /** This state narrowed to `keep` (a subsequence of `files`): the
-    * other files' per-file entries drop; tombstones and deletion
-    * vectors, which name sidecars rather than data files, stay.
+    * other files' per-file entries drop; deletion vectors, which name
+    * sidecars rather than data files, stay.
     */
   def carrying(keep: Seq[String]): TxManifest = {
     val k = keep.toSet
@@ -114,7 +111,6 @@ private[graft] final case class TxManifest(
   def mapFiles(fn: String => String): TxManifest =
     copy(files = files.map(fn), stats = stats.map(e => e.copy(_1 = fn(e._1))),
       blooms = blooms.map(e => e.copy(_1 = fn(e._1))),
-      tombs = tombs.map(e => e.copy(_1 = fn(e._1))),
       vsets = vsets.map(e => e.copy(_1 = fn(e._1))), posd = posd.map(fn),
       rows = rows.map(e => e.copy(_1 = fn(e._1))))
 
@@ -198,9 +194,6 @@ private[graft] object TxManifest {
       g.writeNumberField("m", mBits); g.writeNumberField("k", k)
       g.writeStringField("b", b)
     }
-    entries(g, "tomb", m.tombs) { case (f, k) =>
-      g.writeStringField("f", f); g.writeStringField("k", k)
-    }
     m.map.foreach { mp =>
       g.writeArrayFieldStart("map")
       mp.foreach { case (n, p) =>
@@ -273,10 +266,14 @@ private[graft] object TxManifest {
 
   /** Absent optional fields take their defaults, so minimal manifests
     * (`{"version":2,"op":"append","n_files":0,"files":[]}`) parse, and a
-    * manifest without `index` declares no skipping index.
+    * manifest without `index` declares no skipping index. A manifest
+    * still carrying key-form `tomb` deletes refuses: reading past them
+    * would resurrect the rows they delete.
     */
   def parse(txt: String): TxManifest = {
     val n = tree(txt)
+    if (n.has("tomb")) malformed("it records key-form 'tomb' deletes, which this " +
+      "build no longer reads; compact the table with the previous build first")
     val delta = Option(n.get("base")).map(_ =>
       TxDelta(long(n, "base").toInt, textList(n, "rm"), long(n, "n_files").toInt))
     if (delta.isEmpty && !n.has("files")) malformed("neither 'files' nor 'base'")
@@ -293,7 +290,6 @@ private[graft] object TxManifest {
       stats = list(n, "stats")(e => (str(e, "f"), str(e, "c"), bound(e, "lo"), bound(e, "hi"))),
       blooms = list(n, "bloom")(e =>
         (str(e, "f"), str(e, "c"), long(e, "m").toInt, long(e, "k").toInt, str(e, "b"))),
-      tombs = list(n, "tomb")(e => (str(e, "f"), str(e, "k"))),
       map = Option(n.get("map")).map(_ => list(n, "map")(e => (str(e, "n"), str(e, "p")))),
       vsets = list(n, "vset")(e => (str(e, "f"), str(e, "c"), textList(e, "v"))),
       posd = list(n, "posd")(e => str(e, "f")),

@@ -308,9 +308,9 @@ object TxTable {
     * carry nothing) writes the self-contained FULL form, bounding every
     * reader's reconstruction walk. [[publishNext]] makes that choice
     * for every writer. Scalar fields (version, op, commit_ms, txn, ms,
-    * part, schema, map, index) and the tombstone and deletion-vector lists
-    * (bounded by deletes-since-OPTIMIZE, not by file count) are whole
-    * in BOTH forms, so their accessors read one manifest.
+    * part, schema, map, index) and the deletion-vector list (bounded
+    * by deletes-since-OPTIMIZE, not by file count) are whole in BOTH
+    * forms, so their accessors read one manifest.
     */
   val CheckpointEvery: Int = 10
 
@@ -602,8 +602,8 @@ object TxTable {
     // driver-side metadata op; the distributed write is NOT redone —
     // the Delta rule: an AddFile-only commit is conflict-free), and
     // publishes again. Everything parent-derived (carried files/stats/
-    // blooms/tombs, the ms flag, the declaration, the monotonic
-    // timestamp) recomputes per attempt.
+    // blooms/deletion vectors, the ms flag, the declaration, the
+    // monotonic timestamp) recomputes per attempt.
     var target = v
     var attempt = 0
     var out = -1
@@ -621,10 +621,10 @@ object TxTable {
         if (op == "append" || op == "evolve") parent.fold(Seq.empty[String])(_.files)
         else Seq.empty)
       // the parent's state for the carried files: their skipping
-      // entries and row counts, plus the merge-on-read tombstones and
-      // deletion vectors (they reference carried file names). A
-      // snapshot-replacing commit sheds them all (the rewrite read them
-      // through readVersion / the MoR filters).
+      // entries and row counts, plus the merge-on-read deletion vectors
+      // (they reference carried file names). A snapshot-replacing
+      // commit sheds them all (the rewrite read through them in
+      // readVersion / morFilter).
       val kept = parent.filter(_ => carried.nonEmpty)
         .fold(TxManifest(target, op))(_.carrying(carried))
       val next = kept.plus(gathered.get._2).copy(version = target, op = op, txn = txn,
@@ -765,8 +765,8 @@ object TxTable {
   /** Snapshot read of version `v` — exactly its manifest's files, as
     * an explicit path list (no directory listing, no extra files),
     * through the snapshot semantics: mergeSchema for evolved
-    * snapshots, merge-on-read tombstone anti-join, logical projection
-    * under a column mapping.
+    * snapshots, merge-on-read deletion-vector anti-join, logical
+    * projection under a column mapping.
     */
   def readVersion(spark: SparkSession, table: String, v: Int): DataFrame = {
     val files = filesOf(spark, table, v)
@@ -978,15 +978,8 @@ object TxTable {
                                   v: Int): Seq[(String, String, Int, Int, String)] =
     snapshotOf(spark, table, v).blooms
 
-  /** Merge-on-read tombstone sidecars recorded in version `v`'s
-    * manifest: (tombstone file, physical key column). Empty for
-    * snapshots with no outstanding MoR deletes.
-    */
-  def tombEntriesOf(spark: SparkSession, table: String, v: Int): Seq[(String, String)] =
-    snapshotOf(spark, table, v).tombs
-
-  /** Positional deletion-vector sidecars of version `v`'s snapshot.
-    * Empty for snapshots with no outstanding positional deletes.
+  /** Merge-on-read deletion-vector sidecars of version `v`'s snapshot.
+    * Empty for snapshots with no outstanding merge-on-read deletes.
     */
   def posDeletesOf(spark: SparkSession, table: String, v: Int): Seq[String] =
     snapshotOf(spark, table, v).posd
@@ -1002,15 +995,13 @@ object TxTable {
 
   /** METADATA-ONLY `COUNT(*)` (the Delta/Iceberg log-answered count):
     * sum of the manifest-recorded per-file row counts minus the
-    * outstanding positional-deletion-vector pairs (each pair is
-    * EXACTLY one row, so the adjustment is exact). ZERO data-file IO —
-    * on a 10⁶-file table this is a manifest read, not a 100 TB scan.
+    * outstanding deletion-vector pairs (each pair is EXACTLY one row,
+    * so the adjustment is exact). ZERO data-file IO — on a 10⁶-file
+    * table this is a manifest read, not a 100 TB scan.
     *
-    * Refuses LOUDLY (rather than degrade to a scan silently) when the
-    * count is underivable: a file without a recorded count (added while
-    * the table declared no row counts), or outstanding KEY-form tombstones
-    * (one key may match any number of rows — only OPTIMIZE/compaction
-    * folds them away). Callers fall back to `read(...).count()`.
+    * Refuses LOUDLY (rather than degrade to a scan silently) when a
+    * file has no recorded count (added while the table declared no row
+    * counts). Callers fall back to `read(...).count()`.
     */
   def metaCount(spark: SparkSession, table: String, version: Int = -1): Long = {
     val v = if (version > 0) version else currentVersion(spark, table)
@@ -1045,11 +1036,6 @@ object TxTable {
     */
   private def metaFileCounts(spark: SparkSession, table: String,
                              v: Int): Seq[(String, Long)] = {
-    val tombs = tombEntriesOf(spark, table, v)
-    require(tombs.isEmpty,
-      s"TxTable: $table v$v has ${tombs.size} outstanding key-form tombstone " +
-      "sidecar(s) — a key may match any number of rows, so the metadata count " +
-      "is underivable; OPTIMIZE (compact) folds them away, or count by scan")
     val files = filesOf(spark, table, v)
     val counts = snapshotOf(spark, table, v).rows.toMap
     val missing = files.filterNot(counts.contains)
@@ -1061,14 +1047,9 @@ object TxTable {
     val posd = posDeletesOf(spark, table, v)
     val deleted: Map[String, Long] =
       if (posd.isEmpty) Map.empty
-      else {
-        val posPaths = posd.map(rel => dataPath(table, rel))
-        spark.read
-          .schema(graft.core.ParquetFooters.schemaOf(spark, posPaths.head))
-          .parquet(posPaths: _*)
-          .groupBy(col("_gf")).agg(count(lit(1)).as("_n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
+      else posPairs(spark, table, posd)
+        .groupBy(col("_graft_pf")).agg(count(lit(1)).as("_n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     files.map { rel =>
       val base = rel.substring(rel.lastIndexOf('/') + 1)
       rel -> (counts(rel) - deleted.getOrElse(base, 0L))
@@ -1084,36 +1065,11 @@ object TxTable {
     manifestOf(spark, table, v).map
 
   /** Physical name of a logical column under a mapping (identity when
-    * unmapped). Data files, skipping stats, blooms, and tombstone keys
-    * all live in PHYSICAL names; user-facing arguments are LOGICAL.
+    * unmapped). Data files, skipping stats and blooms all live in
+    * PHYSICAL names; user-facing arguments are LOGICAL.
     */
   private def physOf(map: Option[Seq[(String, String)]], name: String): String =
     map.flatMap(_.collectFirst { case (n, p) if n == name => p }).getOrElse(name)
-
-  /** The snapshot-semantics read every path shares: tombstone
-    * anti-join (merge-on-read deletes, scoped per (file, key) so
-    * appends are unaffected), then the logical projection (column
-    * mapping). Tombstone sidecars are kilobyte-scale parquet — the
-    * planner broadcasts them off file statistics; a table without
-    * tombs/mapping pays exactly nothing here.
-    */
-  private def tombFilter(spark: SparkSession, table: String,
-                         tombs: Seq[(String, String)], base: DataFrame): DataFrame =
-    if (tombs.isEmpty) base
-    else {
-      val withF = base.withColumn("_graft_tomb_file",
-        element_at(split(col("_metadata.file_path"), "/"), -1))
-      tombs.groupBy(_._2).toSeq.sortBy(_._1).foldLeft(withF) {
-        case (acc, (k, es)) =>
-          val sidePaths = es.map(e => dataPath(table, e._1)).distinct
-          val keys = spark.read
-            .schema(graft.core.ParquetFooters.schemaOf(spark, sidePaths.head))
-            .parquet(sidePaths: _*)
-            .select(col("_gf").as("_graft_tf"), col("_gk").as("_graft_tk"))
-          acc.join(keys, acc("_graft_tomb_file") === col("_graft_tf") &&
-            acc(k) === col("_graft_tk"), "left_anti")
-      }.drop("_graft_tomb_file")
-    }
 
   /** PHYSICAL partition column of version `v`'s layout, if the
     * snapshot was committed with `partitionBy` (hive-style
@@ -1126,8 +1082,8 @@ object TxTable {
   /** The raw per-file reader every physical path shares: mergeSchema
     * for evolved snapshots; for a PARTITIONED layout the hive
     * `basePath` so the partition column re-derives from the directory
-    * names. No tomb filter, no logical projection — those layer on in
-    * [[snapshotRead]].
+    * names. No merge-on-read filter, no logical projection — those
+    * layer on in [[snapshotRead]].
     */
   private def rawRead(spark: SparkSession, table: String, v: Int,
                       files: Seq[String]): DataFrame = {
@@ -1164,54 +1120,62 @@ object TxTable {
     }
   }
 
-  /** Positional deletion-vector anti-join: drop every (file, row
-    * ordinal) pair a posd sidecar records. The ordinal is parquet's
-    * stable in-file row index (`_metadata.row_index`), so the filter
-    * is schema-independent — no key column, a long-equality test per
-    * row — and composes with any column mapping or evolution.
-    */
-  private def posFilter(spark: SparkSession, table: String,
-                        posd: Seq[String], base: DataFrame): DataFrame =
-    if (posd.isEmpty) base
-    else {
-      val posPaths = posd.map(rel => dataPath(table, rel))
-      val pairs = spark.read
-        .schema(graft.core.ParquetFooters.schemaOf(spark, posPaths.head))
-        .parquet(posPaths: _*)
-        .select(col("_gf").as("_graft_pf"), col("_gp").as("_graft_pp"))
-      val withF = base
-        .withColumn("_graft_pos_file",
-          element_at(split(col("_metadata.file_path"), "/"), -1))
-        .withColumn("_graft_pos_ri", col("_metadata.row_index"))
-      withF.join(pairs, withF("_graft_pos_file") === col("_graft_pf") &&
-          withF("_graft_pos_ri") === col("_graft_pp"), "left_anti")
-        .drop("_graft_pos_file", "_graft_pos_ri")
-    }
-
-  /** BOTH merge-on-read filters of version `v` — key tombstones and
-    * positional deletion vectors — over a raw per-file frame. Every
+  /** The merge-on-read filter of version `v` over a raw per-file frame:
+    * an anti-join that drops every (file, row ordinal) pair its
+    * deletion-vector sidecars record. The ordinal is parquet's stable
+    * in-file row index (`_metadata.row_index`), so the filter is
+    * schema-independent — no key column, a long-equality test per row —
+    * and composes with any column mapping or evolution. Sidecars are
+    * kilobyte-scale parquet, so the planner broadcasts them off file
+    * statistics; a snapshot without deletes pays nothing. Every
     * physical read (snapshot, delete candidates, compaction rewrites,
-    * CDC inserts) goes through this so no path can resurrect deleted
-    * rows in either form.
+    * CDC inserts) goes through this so no path resurrects deleted rows.
     */
   private def morFilter(spark: SparkSession, table: String, v: Int,
-                        base: DataFrame): DataFrame =
-    posFilter(spark, table, posDeletesOf(spark, table, v),
-      tombFilter(spark, table, tombEntriesOf(spark, table, v), base))
+                        base: DataFrame): DataFrame = {
+    val posd = posDeletesOf(spark, table, v)
+    if (posd.isEmpty) base else byPosition(base, posPairs(spark, table, posd), "left_anti")
+  }
+
+  /** The (file name `_graft_pf`, row ordinal `_graft_pp`) pairs that
+    * deletion-vector sidecars `posd` record.
+    */
+  private def posPairs(spark: SparkSession, table: String, posd: Seq[String]): DataFrame = {
+    val paths = posd.map(rel => dataPath(table, rel))
+    spark.read
+      .schema(graft.core.ParquetFooters.schemaOf(spark, paths.head))
+      .parquet(paths: _*)
+      .select(col("_gf").as("_graft_pf"), col("_gp").as("_graft_pp"))
+  }
+
+  /** The rows of raw per-file frame `base` whose (file, row ordinal) is
+    * in [[posPairs]] frame `pairs` (`how` = "left_semi") or is not
+    * ("left_anti").
+    */
+  private def byPosition(base: DataFrame, pairs: DataFrame, how: String): DataFrame = {
+    val withF = base.withColumn("_graft_pos_file", fileName)
+      .withColumn("_graft_pos_ri", col("_metadata.row_index"))
+    withF.join(pairs, withF("_graft_pos_file") === col("_graft_pf") &&
+        withF("_graft_pos_ri") === col("_graft_pp"), how)
+      .drop("_graft_pos_file", "_graft_pos_ri")
+  }
+
+  /** The data-file name of each row of a raw per-file read. */
+  private def fileName: Column = element_at(split(col("_metadata.file_path"), "/"), -1)
 
   /** One snapshot read over an explicit subset of version `v`'s files:
     * mergeSchema for evolved snapshots, partition-column re-derivation
-    * for partitioned layouts, tombstone + deletion-vector anti-joins,
-    * logical projection. Shared by [[readVersion]] and the pruned
+    * for partitioned layouts, the deletion-vector anti-join, logical
+    * projection. Shared by [[readVersion]] and the pruned
     * readers so no path can resurrect merge-on-read-deleted rows or
     * leak physical names.
     */
   private def snapshotRead(spark: SparkSession, table: String, v: Int,
                            files: Seq[String]): DataFrame = {
     val base = rawRead(spark, table, v, files)
-    val unTombed = morFilter(spark, table, v, base)
-    val mapped = colMapOf(spark, table, v).fold(unTombed)(m =>
-      unTombed.select(m.map { case (n, p) => col(p).as(n) }: _*))
+    val live = morFilter(spark, table, v, base)
+    val mapped = colMapOf(spark, table, v).fold(live)(m =>
+      live.select(m.map { case (n, p) => col(p).as(n) }: _*))
     // partitioned layout: conform column ORDER to the recorded schema
     // (path-derived partition columns surface last on a hive read)
     if (partColOf(spark, table, v).isEmpty) mapped
@@ -1288,8 +1252,9 @@ object TxTable {
     // (a bare NOT(between) would silently drop null-keyed rows).
     // Evolved tables rewrite through mergeSchema so late-added columns
     // survive the rewrite. The candidate read applies existing MoR
-    // tombstones — a rewrite gives rows NEW file names, which would
-    // break the per-(file, key) tombstone scope and resurrect them.
+    // deletion vectors — a rewrite gives rows NEW file names and
+    // ordinals, outside the per-(file, ordinal) scope, which would
+    // resurrect them.
     val survivors = morFilter(spark, table, v,
         rawRead(spark, table, v, touch))
       .filter(col(phys).isNull || !(col(phys) >= lo && col(phys) <= hi))
@@ -1306,10 +1271,10 @@ object TxTable {
     * SQL UPDATE semantics: rows where the predicate is NULL keep their
     * original values; non-matching rows in rewritten files copy
     * through unchanged. The rewrite reads through the merge-on-read
-    * filters (a rewritten row gets a NEW file name, which would
-    * otherwise un-scope its tombstones) and commits as op "update" —
-    * [[changes]] surfaces the churn as delete-of-candidates +
-    * insert-of-rewrites (the Iceberg CDC rule for CoW updates).
+    * filter (a rewritten row gets a NEW file name and ordinal, which
+    * would otherwise un-scope its deletion vectors) and commits as op
+    * "update" — [[changes]] surfaces the churn as delete-of-candidates
+    * + insert-of-rewrites (the Iceberg CDC rule for CoW updates).
     *
     * `assign` maps column names to replacement expressions evaluated
     * on the matched rows (referencing any column of the row).
@@ -1342,53 +1307,6 @@ object TxTable {
     val nv = commitAs(rewritten, table, v + 1, "update",
       carryFiles = Some(untouched), dfIsPhysical = true)
     (nv, touch.size, untouched.size)
-  }
-
-  /** Row-level DELETE, MERGE-ON-READ (the Delta deletion-vector shape
-    * at (file, key) granularity): ZERO data files are rewritten — the
-    * delete writes a tombstone SIDECAR of (data-file, key) pairs for
-    * the rows the predicate matched, and every snapshot read
-    * anti-joins the sidecar before projecting. The write-amplification
-    * asymmetry vs [[deleteWhere]] (copy-on-write): a point delete on a
-    * 100 TB table costs one stats-pruned candidate scan plus a
-    * kilobyte-scale sidecar write; reads pay one broadcast anti-join
-    * until OPTIMIZE folds the tombstones away ([[compact]] reads
-    * through the MoR view and sheds the sidecars; [[compactSmall]]
-    * applies them to whatever it rewrites and carries them for the
-    * rest). Semantics match the CoW path: NULL-predicate rows are
-    * kept; rows already tombstoned are not re-recorded (the candidate
-    * scan reads through existing tombs); appends after the delete are
-    * UNAFFECTED (tombstones are per-file, never a key blocklist). NULL
-    * keys in matched rows refuse loudly in-plan — an unidentifiable
-    * row cannot be tombstoned; use copy-on-write. `keyCol` must
-    * identify rows within a file (a non-unique key deletes every
-    * same-key row of the matched files).
-    *
-    * @return (version, nTombstonedPairs) — the current version with 0
-    *         when no candidate row matches (Delta's no-op rule)
-    */
-  def deleteWhereMor(spark: SparkSession, table: String, colName: String,
-                     lo: Double, hi: Double, keyCol: String): (Int, Long) = {
-    val v = currentVersion(spark, table)
-    require(v >= 1, s"TxTable: cannot delete from non-existent table $table")
-    val map = colMapOf(spark, table, v)
-    val phys = physOf(map, colName)
-    val physKey = physOf(map, keyCol)
-    val touch = prunedFiles(spark, table, v, colName, lo, hi)
-    if (touch.isEmpty) return (v, 0L)
-    val matched = morFilter(spark, table, v,
-        rawRead(spark, table, v, touch))
-      .filter(col(phys) >= lo && col(phys) <= hi)
-    val kt = matched.schema(physKey).dataType
-    val guardedKey = when(col(physKey).isNotNull, col(physKey))
-      .otherwise(raise_error(lit("TxTable.deleteWhereMor: NULL key in a matched " +
-        "row — keyCol must identify every row; use deleteWhere (copy-on-write)"))
-        .cast(kt))
-    val keys = matched.select(
-      element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf"),
-      guardedKey.as("_gk")).distinct()
-    publishSidecar(spark, table, v, "mordelete", 't', keys, None)((head, named) =>
-      head.copy(tombs = head.tombs ++ named.map(rel => (rel, physKey))))
   }
 
   /** The file subset of version `v` whose per-file bloom (on physical
@@ -1461,22 +1379,23 @@ object TxTable {
   }
 
   /** Key-SET merge-on-read delete — the CDC-apply form of
-    * [[deleteWhereMor]]: tombstone every row of the current snapshot
-    * whose `keyCol` appears in `keys` (one column, same type). The
-    * scan is BLOOM-ACCELERATED when the table indexes `keyCol` and the
-    * batch is small (each key probes the per-file blooms driver-side —
-    * a needle-batch delete reads the handful of admitting files, not
-    * the snapshot); otherwise one semi-join pass over the snapshot,
-    * the standard index-less CDC-apply cost. Naturally IDEMPOTENT:
-    * already-tombstoned rows never re-match (the scan reads through
-    * existing tombs), so a replayed delete batch is a no-op — and an
+    * [[deleteWherePos]]: delete every row of the current snapshot
+    * whose `keyCol` appears in `keys` (one column, same type), as
+    * deletion-vector pairs. The scan is BLOOM-ACCELERATED when the
+    * table indexes `keyCol` and the batch is small (each key probes
+    * the per-file blooms driver-side — a needle-batch delete reads the
+    * handful of admitting files, not the snapshot); otherwise one
+    * semi-join pass over the snapshot, the standard index-less
+    * CDC-apply cost. NULL keys match nothing. Naturally IDEMPOTENT:
+    * already-deleted rows never re-match (the scan reads through
+    * existing vectors), so a replayed delete batch is a no-op — and an
     * optional `txn` marker records (appId, batchId) in the manifest
     * for [[txnVersionOf]]-gated exactly-once composition (the
-    * streaming mirror uses it to never re-tombstone rows a later
-    * version re-inserted).
+    * streaming mirror uses it to never re-delete rows a later version
+    * re-inserted).
     *
-    * @return (version, nTombstonedPairs) — current version with 0 on
-    *         an empty match
+    * @return (version, nDeletedRows) — current version with 0 on an
+    *         empty match
     */
   def deleteKeysMor(spark: SparkSession, table: String, keyCol: String,
                     keys: DataFrame,
@@ -1486,45 +1405,43 @@ object TxTable {
     require(keys.columns.length == 1,
       s"TxTable.deleteKeysMor: keys must be a single-column frame, got " +
       keys.columns.mkString(", "))
-    val map = colMapOf(spark, table, v)
-    val physKey = physOf(map, keyCol)
+    val physKey = physOf(colMapOf(spark, table, v), keyCol)
     val candidates = bloomCandidateFiles(spark, table, v, physKey, keys)
     if (candidates.isEmpty) return (v, 0L)
-    val cand = morFilter(spark, table, v,
-      rawRead(spark, table, v, candidates))
-    val dk = keys.toDF("_graft_dk").distinct()
-    val matched = cand.join(dk, cand(physKey) === col("_graft_dk"), "left_semi")
-    val pairs = matched.select(
-      element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf"),
-      col(physKey).as("_gk")).distinct()
-    publishSidecar(spark, table, v, "mordelete", 't', pairs, txn)((head, named) =>
-      head.copy(tombs = head.tombs ++ named.map(rel => (rel, physKey))))
+    val cand = morFilter(spark, table, v, rawRead(spark, table, v, candidates))
+    val dk = keys.toDF("_graft_dk")
+    publishSidecar(spark, table, v,
+      cand.join(dk, cand(physKey) === col("_graft_dk"), "left_semi"), txn)
   }
 
-  /** Shared sidecar-publish tail of the merge-on-read deletes: write
-    * `pairs` as sidecar files (`data/v<N>_<kind><i>_<nonce>` —
-    * versioned names ride the same vacuum protocol as data files, and
-    * the in-flight skip covers a racing delete's sidecars), then
-    * publish a manifest-only `op` version: `edit` records the sidecars
-    * on the head's state, and every data file, stat, bloom, value set,
-    * mapping and prior sidecar carries verbatim (the "zero files
-    * rewritten" property an auditor checks; the O(delta) form between
-    * checkpoints). Empty match → no commit (Delta's no-op rule).
+  /** Shared publish tail of the merge-on-read deletes: write the (file
+    * name `_gf`, row ordinal `_gp`) pair of every `matched` row — a
+    * raw per-file read, read through [[morFilter]] so already-deleted
+    * rows never re-record — as deletion-vector sidecar files
+    * (`data/v<N>_p<i>_<nonce>` — versioned names ride the same vacuum
+    * protocol as data files, and the in-flight skip covers a racing
+    * delete's sidecars), then publish a manifest-only "posdelete"
+    * version that adds them to the head's `posd`: every data file,
+    * stat, bloom, value set, mapping and prior sidecar carries verbatim
+    * (the "zero files rewritten" property an auditor checks; the
+    * O(delta) form between checkpoints). Empty match → no commit
+    * (Delta's no-op rule).
     *
     * @return (version, nPairs) — the head with 0 on an empty match
     */
-  private def publishSidecar(spark: SparkSession, table: String, v: Int, op: String,
-                             kind: Char, pairs: DataFrame, txn: Option[(String, Long)])(
-                             edit: (TxManifest, Seq[String]) => TxManifest): (Int, Long) = {
+  private def publishSidecar(spark: SparkSession, table: String, v: Int,
+                             matched: DataFrame,
+                             txn: Option[(String, Long)]): (Int, Long) = {
     val f = fs(spark, table)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(s"$table/_tmp_v${v + 1}_$nonce")
-    pairs.write.mode("overwrite").parquet(tmp.toString)
+    matched.select(fileName.as("_gf"), col("_metadata.row_index").as("_gp"))
+      .write.mode("overwrite").parquet(tmp.toString)
     val parts = f.listStatus(tmp).map(_.getPath)
       .filter(_.getName.startsWith("part-")).sortBy(_.getName)
     f.mkdirs(new Path(s"$table/data"))
     val named = parts.zipWithIndex.map { case (p, i) =>
-      val rel = s"data/v${v + 1}_$kind${i}_$nonce.parquet"
+      val rel = s"data/v${v + 1}_p${i}_$nonce.parquet"
       require(f.rename(p, new Path(s"$table/$rel")), s"rename failed for $p")
       rel
     }.toSeq
@@ -1537,8 +1454,8 @@ object TxTable {
       return (v, 0L)
     }
     val head = withSchema(snapshotOf(spark, table, v), readVersion(spark, table, v))
-    publishOrConflict(f, table, Some(head),
-      edit(head, named).copy(version = v + 1, op = op, txn = txn))
+    publishOrConflict(f, table, Some(head), head.copy(version = v + 1, op = "posdelete",
+      txn = txn, posd = head.posd ++ named))
     (v + 1, nPairs)
   }
 
@@ -1549,17 +1466,22 @@ object TxTable {
     if (m.schema.isDefined) m
     else m.copy(schema = scala.util.Try(read.schema.toDDL).toOption)
 
-  /** Row-level DELETE via POSITIONAL DELETION VECTORS (the
-    * Delta/Iceberg deletion-vector shape): like [[deleteWhereMor]],
-    * ZERO data files rewrite — but the sidecar records (data-file, row
-    * ORDINAL) pairs instead of key values, so the form is
-    * SCHEMA-INDEPENDENT (no key column required, NULL keys are fine,
-    * composes with any mapping/evolution) and the read-side anti-join
-    * compares a long ordinal instead of a possibly-wide key — the
-    * cheap test on tables whose natural key is a wide string. Same
-    * semantics otherwise: NULL-predicate rows kept, already-deleted
-    * rows never re-recorded, appends unaffected, OPTIMIZE folds the
-    * vectors away.
+  /** Row-level DELETE, MERGE-ON-READ via DELETION VECTORS (the
+    * Delta/Iceberg deletion-vector shape): ZERO data files are
+    * rewritten — the delete writes a sidecar of (data-file, row
+    * ORDINAL) pairs for the rows with `lo ≤ col ≤ hi`, and every
+    * snapshot read anti-joins the sidecar before projecting. The
+    * write-amplification asymmetry vs [[deleteWhere]] (copy-on-write):
+    * a point delete on a 100 TB table costs one stats-pruned candidate
+    * scan plus a kilobyte-scale sidecar write; reads pay one broadcast
+    * anti-join on a long ordinal until OPTIMIZE folds the vectors away
+    * ([[compact]] reads through the filter and sheds the sidecars;
+    * [[compactSmall]] applies them to whatever it rewrites and carries
+    * them for the rest). The form is SCHEMA-INDEPENDENT: no key column,
+    * NULL keys are fine, and it composes with any mapping or evolution.
+    * Semantics match the CoW path: NULL-predicate rows are kept, rows
+    * already deleted are not re-recorded, appends after the delete are
+    * UNAFFECTED (vectors are per-file, never a key blocklist).
     *
     * @return (version, nDeletedRows) — the current version with 0 when
     *         no candidate row matches (Delta's no-op rule)
@@ -1571,18 +1493,14 @@ object TxTable {
     val phys = physOf(colMapOf(spark, table, v), colName)
     val touch = prunedFiles(spark, table, v, colName, lo, hi)
     if (touch.isEmpty) return (v, 0L)
-    val matched = morFilter(spark, table, v, rawRead(spark, table, v, touch))
-      .filter(col(phys) >= lo && col(phys) <= hi)
-    val pairs = matched.select(
-      element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf"),
-      col("_metadata.row_index").as("_gp"))
-    publishSidecar(spark, table, v, "posdelete", 'p', pairs, None)((head, named) =>
-      head.copy(posd = head.posd ++ named))
+    publishSidecar(spark, table, v,
+      morFilter(spark, table, v, rawRead(spark, table, v, touch))
+        .filter(col(phys) >= lo && col(phys) <= hi), None)
   }
 
   /** Metadata-only column RENAME (the Delta column-mapping rename):
     * publishes a new version whose manifest carries every file, stat,
-    * bloom, and tombstone verbatim and only rewrites the (logical →
+    * bloom, and deletion vector verbatim and only rewrites the (logical →
     * physical) mapping plus the recorded schema — ZERO data IO at any
     * table size. Old and new files both store the column under its
     * original PHYSICAL name; reads project physical → logical; later
@@ -1630,13 +1548,7 @@ object TxTable {
     require(schema.size >= 2, s"TxTable: cannot drop the last column of $table")
     val map0 = colMapOf(spark, table, v)
       .getOrElse(schema.fieldNames.toSeq.map(n => (n, n)))
-    // an ACTIVE tombstone key is load-bearing: the snapshot read
-    // anti-joins on it, so dropping it would break every read until
-    // OPTIMIZE folds the tombs — refuse with the remedy named
     val phys = physOf(Some(map0), name)
-    require(!tombEntriesOf(spark, table, v).exists(_._2 == phys),
-      s"TxTable: column '$name' is an active merge-on-read tombstone key at " +
-      s"$table v$v — run compact() (OPTIMIZE folds the tombstones) before dropping it")
     require(!partColOf(spark, table, v).flatMap(hiddenSpecOf).exists(_._2 == phys),
       s"TxTable: column '$name' is the source of $table's hidden partition " +
       "layout — rewrite the layout (op=\"overwrite\" with a new partitionBy) first")
@@ -1646,7 +1558,7 @@ object TxTable {
   }
 
   /** Shared metadata-only publish for rename/drop: files, stats,
-    * blooms, tombstones, and the ms flag carry verbatim from the head;
+    * blooms, deletion vectors, and the ms flag carry verbatim from the head;
     * only the schema and mapping change, and the declared index keeps
     * the physical columns the new mapping still holds (rename keeps
     * them all — names are physical; drop sheds the dropped one, which
@@ -1749,7 +1661,7 @@ object TxTable {
     require(manifestPath(table, toV).getFileSystem(
         spark.sparkContext.hadoopConfiguration).exists(manifestPath(table, toV)),
       s"TxTable: cannot restore $table to expired/unknown version $toV")
-    // Stats, blooms, TOMBSTONES, and the COLUMN MAPPING restore with
+    // Stats, blooms, DELETION VECTORS, and the COLUMN MAPPING restore with
     // their files: the restored snapshot must read bit-identically to
     // the target, merge-on-read deletes and renames included
     val target = withSchema(snapshotOf(spark, table, toV), readVersion(spark, table, toV))
@@ -1762,7 +1674,7 @@ object TxTable {
     * a METADATA-ONLY copy — `dst`'s v1 manifest records `src`'s
     * resolved snapshot (at `version`, default head) with every data
     * file referenced by ABSOLUTE path and every stat/bloom/value-set/
-    * tombstone/deletion-vector/row-count/mapping entry carried
+    * deletion-vector/row-count/mapping entry carried
     * verbatim. ZERO data IO at any table size: cloning a 100 TB table
     * is one manifest write. The clone then evolves INDEPENDENTLY —
     * appends/deletes/compactions land in `dst`'s own directory and
@@ -2215,7 +2127,7 @@ object TxTable {
     require(toV <= currentVersion(spark, table), s"TxTable: no version $toV at $table")
     // each step's rows surface through the SNAPSHOT SEMANTICS of the
     // version where they are visible (inserts: v; deletes: v-1):
-    // tombstone-filtered so merge-on-read-deleted rows neither
+    // deletion-vector-filtered so merge-on-read-deleted rows neither
     // re-insert nor re-delete, and projected through that version's
     // column mapping so consumers always see logical names
     def projectVia(atV: Int)(dfr: DataFrame): DataFrame =
@@ -2233,62 +2145,26 @@ object TxTable {
       opOf(spark, table, v) match {
         // byte rewrite / metadata-only: no row change (dataChange=false)
         case "compact" | "rename" | "drop" => Seq.empty
-        // merge-on-read delete: the delta is exactly the NEW tombstone
-        // (file, key) pairs resolved against the files they reference —
-        // the read touches ONLY those files, never the snapshot
+        // merge-on-read delete: the delta is exactly the NEW
+        // deletion-vector pairs resolved against the files they
+        // reference — the read touches ONLY those files, never the
+        // snapshot
         case "posdelete" =>
-          // the delta is exactly the NEW deletion-vector pairs,
-          // resolved against the files they reference
           val newPosd = posDeletesOf(spark, table, v)
             .diff(posDeletesOf(spark, table, v - 1))
           if (newPosd.isEmpty) Seq.empty
           else {
-            val posPaths = newPosd.map(rel => dataPath(table, rel))
-            val pairs = spark.read
-              .schema(graft.core.ParquetFooters.schemaOf(spark, posPaths.head))
-              .parquet(posPaths: _*)
-              .select(col("_gf").as("_graft_pf"), col("_gp").as("_graft_pp"))
+            val pairs = posPairs(spark, table, newPosd)
             val touched = pairs.select("_graft_pf").distinct()
               .collect().map(_.getString(0)).toSeq // file NAMES: metadata-scale
             if (touched.isEmpty) Seq.empty
-            else {
-              val relOf = filesOf(spark, table, v)
-                .map(r => r.substring(r.lastIndexOf('/') + 1) -> r).toMap
-              val raw = rawRead(spark, table, v, touched.map(relOf))
-                .withColumn("_graft_fn",
-                  element_at(split(col("_metadata.file_path"), "/"), -1))
-                .withColumn("_graft_ri", col("_metadata.row_index"))
-              Seq(dropHidden(projectVia(v)(
-                raw.join(pairs, raw("_graft_fn") === col("_graft_pf") &&
-                  raw("_graft_ri") === col("_graft_pp"), "left_semi")
-                  .drop("_graft_fn", "_graft_ri")))
-                .withColumn("_change", lit("delete"))
-                .withColumn("_version", lit(v)))
-            }
-          }
-        case "mordelete" =>
-          val newTombs = tombEntriesOf(spark, table, v)
-            .diff(tombEntriesOf(spark, table, v - 1))
-          newTombs.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (k, es) =>
-            val sidePaths = es.map(e => dataPath(table, e._1)).distinct
-            val keys = spark.read
-              .schema(graft.core.ParquetFooters.schemaOf(spark, sidePaths.head))
-              .parquet(sidePaths: _*)
-              .select(col("_gf").as("_graft_tf"), col("_gk").as("_graft_tk"))
-            val touched = keys.select("_graft_tf").distinct()
-              .collect().map(_.getString(0)).toSeq // file NAMES: metadata-scale
-            if (touched.isEmpty) None
             else {
               // resolve sidecar file NAMES to manifest-relative paths
               // (partitioned layouts nest files under <col>=<val>/)
               val relOf = filesOf(spark, table, v)
                 .map(r => r.substring(r.lastIndexOf('/') + 1) -> r).toMap
               val raw = rawRead(spark, table, v, touched.map(relOf))
-                .withColumn("_graft_fn",
-                  element_at(split(col("_metadata.file_path"), "/"), -1))
-              Some(dropHidden(projectVia(v)(
-                raw.join(keys, raw("_graft_fn") === col("_graft_tf") &&
-                  raw(k) === col("_graft_tk"), "left_semi").drop("_graft_fn")))
+              Seq(dropHidden(projectVia(v)(byPosition(raw, pairs, "left_semi")))
                 .withColumn("_change", lit("delete"))
                 .withColumn("_version", lit(v)))
             }
@@ -2526,9 +2402,9 @@ object TxTable {
     if (small.size < 2) return (v, 0, sized.size)
     val smallBytes = small.map(_._2).sum
     val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
-    // the rewrite APPLIES merge-on-read tombstones (rebinned rows get
-    // new file names, outside the per-file tombstone scope); tombs for
-    // the carried files ride the carry rule in commitAs
+    // the rewrite APPLIES merge-on-read deletion vectors (rebinned rows
+    // get new file names and ordinals, outside the per-file scope);
+    // vectors for the carried files ride the carry rule in commitAs
     val packed = morFilter(spark, table, v,
         rawRead(spark, table, v, small.map(_._1)))
       .repartition(nOut)
@@ -2565,7 +2441,7 @@ object TxTable {
     val f = fs(spark, table)
     val dataDir = new Path(s"$table/data")
     if (!f.exists(dataDir)) return Seq.empty
-    // tombstone sidecars are referenced files too — vacuuming a live
+    // deletion-vector sidecars are referenced files too — vacuuming a live
     // sidecar would resurrect its deleted rows; WAP-staged files are
     // referenced by their staged record until published or abandoned
     val stagedDir = new Path(s"$table/_staged")
@@ -2578,9 +2454,8 @@ object TxTable {
             .getOrElse(Seq.empty)
         }
     val referenced = (liveVersions(spark, table)
-      .flatMap(v => filesOf(spark, table, v) ++
-        tombEntriesOf(spark, table, v).map(_._1) ++
-        posDeletesOf(spark, table, v)) ++ staged).toSet
+      .flatMap(v => filesOf(spark, table, v) ++ posDeletesOf(spark, table, v)) ++
+      staged).toSet
     // one level of partition directories (data/<col>=<val>/file)
     f.listStatus(dataDir).toSeq.flatMap { st =>
       if (st.isDirectory)
@@ -2674,10 +2549,8 @@ object TxTable {
       v <= cut && v < floor && v < pinnedFloor && !pinned.contains(v))
     if (expire.isEmpty) return (Seq.empty, Seq.empty)
     val keptFiles = keep.flatMap(v => filesOf(spark, table, v) ++
-      tombEntriesOf(spark, table, v).map(_._1) ++
       posDeletesOf(spark, table, v)).toSet
     val deadFiles = expire.flatMap(v => filesOf(spark, table, v) ++
-      tombEntriesOf(spark, table, v).map(_._1) ++
       posDeletesOf(spark, table, v))
       .distinct.filterNot(keptFiles).sorted
     // Order matters for crash safety: drop manifests FIRST so no
@@ -2833,7 +2706,7 @@ object TxTable {
     * into main's own manifest; files the branch wrote itself are
     * borrowed by absolute path (main's compact later materializes
     * them, exactly the clone contract). Stats, blooms, value sets,
-    * tombstones, deletion vectors, row counts, and the column mapping
+    * deletion vectors, row counts, and the column mapping
     * carry with their files, so the fast-forwarded snapshot reads
     * bit-identically to the branch head.
     */

@@ -6,7 +6,7 @@ import graft.sources.TxTable
 
 /** Round-10 lakehouse-substrate hardening: bloom probe/build parity,
   * value-set escaping, manifest delta-log, partitioned layout,
-  * positional deletion vectors, mirror marker widening.
+  * mirror marker widening.
   */
 class Round10OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -285,54 +285,10 @@ class Round10OpsSpec extends SparkSpec {
     canon(TxTable.read(spark, table)) shouldBe
       canon(Seq((1L, "A", 1.0), (3L, "A", 3.0), (9L, "B", 9.0))
         .toDF("id", "cat", "price"))
-    // the folded tombstone is gone from the compacted partition's read
+    // the folded deletion vector is gone from the compacted partition's read
     TxTable.readPartition(spark, table, "A").count() shouldBe 2L
     // CDC: the compact replays as nothing
     TxTable.changes(spark, table, nv - 1, nv).count() shouldBe 0L
-  }
-
-  // --- directive r9#5: positional deletion vectors — the (file, row
-  // ordinal) sidecar form. Result-equal to the key-tombstone form on
-  // the same inputs, zero files rewritten, schema-independent (no key
-  // column), CDC replays the delete, OPTIMIZE folds the vectors.
-  test("positional deletion vectors: equal to the key form, zero rewrite, CDC + fold") {
-    import org.apache.spark.sql.functions.{col => c}
-    val keyT = freshTable()
-    val posT = freshTable()
-    val df = (1L to 100L).map(i => (i, s"s$i")).toDF("id", "s")
-      .repartition(4, c("id"))
-    Seq(keyT, posT).foreach(t => TxTable.commit(df, t, statsCols = Seq("id")))
-    val (kv, kn) = TxTable.deleteWhereMor(spark, keyT, "id", 10.0, 40.0, "id")
-    val (pv, pn) = TxTable.deleteWherePos(spark, posT, "id", 10.0, 40.0)
-    pn shouldBe kn
-    // zero files rewritten in both forms
-    TxTable.filesOf(spark, posT, pv) shouldBe TxTable.filesOf(spark, posT, 1)
-    canon(TxTable.readVersion(spark, posT, pv)) shouldBe
-      canon(TxTable.readVersion(spark, keyT, kv))
-    // already-deleted rows never re-record (idempotent no-op)
-    TxTable.deleteWherePos(spark, posT, "id", 10.0, 40.0)._2 shouldBe 0L
-    // a second, overlapping positional delete stacks correctly
-    TxTable.deleteWherePos(spark, posT, "id", 30.0, 50.0)._2 shouldBe 10L
-    TxTable.read(spark, posT).count() shouldBe 59L
-    // CDC: the posdelete version replays as exactly the deleted rows
-    val cdc = TxTable.changes(spark, posT, 1, 2)
-    cdc.filter(c("_change") === "delete").count() shouldBe 31L
-    cdc.count() shouldBe 31L
-    // appends after the delete are unaffected; re-inserted ordinals
-    // in NEW files never collide with old vectors (per-file scope)
-    TxTable.commit(Seq((10L, "re10")).toDF("id", "s"), posT,
-      statsCols = Seq("id"))
-    TxTable.read(spark, posT).filter(c("id") === 10L).count() shouldBe 1L
-    // OPTIMIZE folds the vectors away: content preserved, posd gone
-    val cv = TxTable.compact(spark, posT)
-    TxTable.posDeletesOf(spark, posT, cv) shouldBe empty
-    TxTable.read(spark, posT).count() shouldBe 60L
-    // sidecars are REFERENCED files for vacuum while their manifests
-    // live (vacuuming one would resurrect rows in time travel)
-    val sidecars = TxTable.posDeletesOf(spark, posT, 3)
-    sidecars should not be empty
-    TxTable.vacuum(spark, posT, minAgeMs = 0)
-      .intersect(sidecars) shouldBe empty
   }
 
   // --- r10: copy-on-write row-level UPDATE ---
@@ -640,7 +596,7 @@ class Round10OpsSpec extends SparkSpec {
     TxTable.commit((1L to 20L).map(i => (i, s"r$i")).toDF("id", "s"), src)
     TxTable.deleteKeysMor(spark, src, "id", Seq(7L, 9L).toDF("id"))
     TxTable.cloneShallow(spark, src, dst)
-    // tombstones rode the clone: deleted rows stay deleted in dst
+    // deletion vectors rode the clone: deleted rows stay deleted in dst
     TxTable.read(spark, dst).collect().map(_.getLong(0)).sorted shouldBe
       (1L to 20L).filterNot(Set(7L, 9L)).toArray
     // a compact MATERIALIZES the clone: borrowed files rewrite into
@@ -658,32 +614,6 @@ class Round10OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TxTable.cloneShallow(spark, part, freshTable())
     }
-  }
-
-  // --- r10: metadata-only COUNT(*) from manifest row counts ---
-  test("metaCount answers from the manifest and stays exact under posd deletes") {
-    val table = freshTable()
-    TxTable.commit((1L to 500L).map(i => (i, i % 7)).toDF("id", "g")
-      .repartition(3, col("id")), table, statsCols = Seq("id"), countRows = true)
-    TxTable.metaCount(spark, table) shouldBe 500L
-    // append with counts: counts extend
-    TxTable.commit((501L to 600L).map(i => (i, i % 7)).toDF("id", "g"),
-      table, countRows = true)
-    TxTable.metaCount(spark, table) shouldBe 600L
-    // positional delete: each vector pair decrements exactly one row
-    val (_, nDel) = TxTable.deleteWherePos(spark, table, "id", 100.0, 250.0)
-    nDel shouldBe 151L
-    TxTable.metaCount(spark, table) shouldBe 449L
-    TxTable.read(spark, table).count() shouldBe 449L
-    // a key-form tombstone makes the count underivable → loud refusal
-    TxTable.deleteKeysMor(spark, table, "id", Seq(300L).toDF("id"))
-    val e = intercept[RuntimeException](TxTable.metaCount(spark, table))
-    assert(e.getMessage.contains("tombstone"))
-    // OPTIMIZE folds both forms away; recounted files restore the path
-    TxTable.compact(spark, table)
-    // the compacted files carry the declared row counts
-    TxTable.metaCount(spark, table) shouldBe 448L
-    TxTable.metaCount(spark, table) shouldBe TxTable.read(spark, table).count()
   }
 
   test("metaCountByPartition matches the scan per partition value") {

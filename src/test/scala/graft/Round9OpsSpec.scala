@@ -6,7 +6,7 @@ import graft.sources.{TxChangesStream, TxTable}
 
 /** Round-9 additions: manifest parser scoping (stats+bloom together),
   * CDC source crash hardening, O(1) head discovery, optimistic append
-  * rebase, merge-on-read delete, column-mapping schema evolution,
+  * rebase, key-set merge-on-read delete, column-mapping schema evolution,
   * AvailableNow draining, triangle-frame reuse.
   */
 class Round9OpsSpec extends SparkSpec {
@@ -202,89 +202,6 @@ class Round9OpsSpec extends SparkSpec {
     TxTable.read(spark, table).count() shouldBe 3L
   }
 
-  test("merge-on-read delete: zero data files rewritten, read hash-equals copy-on-write, OPTIMIZE folds the tombstones") {
-    val morT = freshTable("mor")
-    val cowT = freshTable("cow")
-    val rows = (1L to 400L).map(i => (i, i * 1.5, s"s$i"))
-    // 4-file layout, range-clustered on id so the delete prunes
-    val df = rows.toDF("id", "x", "s").repartitionByRange(4, col("id"))
-    TxTable.commit(df, morT, statsCols = Seq("id")) shouldBe 1
-    TxTable.commit(df, cowT, statsCols = Seq("id")) shouldBe 1
-    val filesBefore = TxTable.filesOf(spark, morT, 1)
-    // MoR delete of a point range; CoW of the same range on the twin
-    val (v2, nDel) = TxTable.deleteWhereMor(spark, morT, "id", 100.0, 140.0, "id")
-    v2 shouldBe 2
-    nDel shouldBe 41L
-    TxTable.deleteWhere(spark, cowT, "id", 100.0, 140.0)._1 shouldBe 2
-    // ZERO data files rewritten: the manifest carries v1's files verbatim
-    TxTable.filesOf(spark, morT, 2) shouldBe filesBefore
-    TxTable.tombEntriesOf(spark, morT, 2) should not be empty
-    TxTable.opOf(spark, morT, 2) shouldBe "mordelete"
-    // the MoR read equals the CoW result exactly
-    canon(TxTable.read(spark, morT)) shouldBe canon(TxTable.read(spark, cowT))
-    // snapshot isolation: v1 still sees every row
-    TxTable.readVersion(spark, morT, 1).count() shouldBe 400L
-    // pruned readers go through the tombstones too
-    TxTable.readWhere(spark, morT, "id", 90.0, 150.0)
-      .collect().map(_.getLong(0)).sorted shouldBe ((90L to 99L) ++ (141L to 150L))
-    // a second MoR delete stacks; already-deleted rows are NOT re-recorded
-    val (v3, nDel2) = TxTable.deleteWhereMor(spark, morT, "id", 120.0, 160.0, "id")
-    v3 shouldBe 3
-    nDel2 shouldBe 20L // 141..160 — 120..140 were already tombstoned
-    TxTable.read(spark, morT).count() shouldBe 400L - 61L
-    // changes() reads the MoR delete as deletes of exactly those rows,
-    // touching only the files the tombstones reference
-    val delta = TxTable.changes(spark, morT, 2, 3)
-    delta.select("_change").distinct().collect().map(_.getString(0)) shouldBe Array("delete")
-    delta.select("id").collect().map(_.getLong(0)).sorted shouldBe (141L to 160L)
-    // appends AFTER the delete are unaffected (per-file scope, not a blocklist)
-    TxTable.commit(Seq((130L, 1.0, "again")).toDF("id", "x", "s"), morT,
-      statsCols = Seq("id")) shouldBe 4
-    TxTable.read(spark, morT).filter(col("id") === 130L).count() shouldBe 1L
-    // OPTIMIZE folds the tombstones away: content identical, sidecars gone
-    val before = canon(TxTable.read(spark, morT))
-    val v5 = TxTable.compact(spark, morT)
-    TxTable.tombEntriesOf(spark, morT, v5) shouldBe empty
-    canon(TxTable.read(spark, morT)) shouldBe before
-    // vacuum never reclaims a LIVE sidecar; expiry reclaims dead ones
-    TxTable.vacuum(spark, morT, 0L)
-    TxTable.readVersion(spark, morT, 3).count() shouldBe 400L - 61L
-    val (expired, dead) = TxTable.expireVersions(spark, morT, 1)
-    expired shouldBe (1 to 4)
-    dead.exists(_.contains("_t")) shouldBe true // sidecars reclaimed with history
-    canon(TxTable.read(spark, morT)) shouldBe before
-  }
-
-  test("dropping an active tombstone key refuses with the OPTIMIZE remedy; folding unblocks it") {
-    val table = freshTable("mordrop")
-    TxTable.commit(Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("id", "x", "s"),
-      table, statsCols = Seq("x")) shouldBe 1
-    TxTable.deleteWhereMor(spark, table, "x", 15.0, 25.0, "id")._2 shouldBe 1L
-    val e = intercept[IllegalArgumentException] {
-      TxTable.dropColumn(spark, table, "id")
-    }
-    e.getMessage should include("tombstone key")
-    TxTable.compact(spark, table) // folds the tombs
-    TxTable.dropColumn(spark, table, "id") should be > 2
-    TxTable.read(spark, table).columns shouldBe Array("x", "s")
-    TxTable.read(spark, table).count() shouldBe 1L
-  }
-
-  test("MoR delete refuses NULL keys loudly and no-ops when stats prune everything") {
-    val table = freshTable("mornull")
-    val df = Seq((Some(1L), 10.0), (None, 20.0), (Some(3L), 30.0))
-      .toDF("id", "x")
-    TxTable.commit(df, table, statsCols = Seq("x")) shouldBe 1
-    // matched range covers the NULL-keyed row → in-plan refusal
-    val e = intercept[Exception] {
-      TxTable.deleteWhereMor(spark, table, "x", 15.0, 25.0, "id")
-    }
-    e.getMessage should include("NULL key")
-    TxTable.currentVersion(spark, table) shouldBe 1
-    // a range outside every file's stats is a no-op at the current version
-    TxTable.deleteWhereMor(spark, table, "x", 1e6, 2e6, "id") shouldBe ((1, 0L))
-  }
-
   test("rename/drop are metadata-only: zero data IO, old files project through the mapping, appends write physical names") {
     val table = freshTable("map")
     val v1 = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "tag", "score")
@@ -435,7 +352,7 @@ class Round9OpsSpec extends SparkSpec {
     TxTable.commit((1L to 6L).map(i => (i, s"a$i")).toDF("id", "s"), src,
       statsCols = Seq("id")) shouldBe 1
     TxTable.commit(Seq((7L, "a7")).toDF("id", "s"), src) shouldBe 2
-    TxTable.deleteWhereMor(spark, src, "id", 2.0, 3.0, "id")._2 shouldBe 2L // v3
+    TxTable.deleteWherePos(spark, src, "id", 2.0, 3.0)._2 shouldBe 2L // v3
     TxTable.commit(Seq((2L, "re2")).toDF("id", "s"), src) shouldBe 4 // re-insert a deleted key
     TxChangesStream.pipeToMirror(spark, src, dst, "id", "mir_spec", ckpt,
       maxVersionsPerTrigger = Some(1), bloomCols = Seq("id"))

@@ -524,7 +524,6 @@ class TxTableSpec extends SparkSpec {
       stats <- Gen.listOf(Gen.zip(str, str, bound, bound))
       blooms <- Gen.listOf(Gen.zip(str, str, Gen.choose(0, Int.MaxValue),
         Gen.choose(0, Int.MaxValue), str))
-      tombs <- Gen.listOf(Gen.zip(str, str))
       map <- Gen.option(Gen.listOf(Gen.zip(str, str)))
       vsets <- Gen.listOf(Gen.zip(str, str, Gen.listOf(str)))
       posd <- Gen.listOf(str)
@@ -532,7 +531,7 @@ class TxTableSpec extends SparkSpec {
       index <- Gen.zip(Gen.listOf(str), Gen.listOf(str), Gen.listOf(str), Gen.listOf(str),
         Gen.oneOf(true, false)).map { case (st, nl, bl, vs, rc) => TxIndex(st, nl, bl, vs, rc) }
     } yield TxManifest(version, op, commitMs, txn, ms, part, schema, delta, files, stats,
-      blooms, tombs, map, vsets, posd, rows, index)
+      blooms, map, vsets, posd, rows, index)
     // through UTF-8 bytes, as the committer writes and the reader reads
     def utf8(s: String): String = new String(s.getBytes("UTF-8"), "UTF-8")
     check(Prop.forAll(manifests)(m => TxManifest.parse(utf8(TxManifest.render(m))) == m))
@@ -811,5 +810,185 @@ class TxTableSpec extends SparkSpec {
     // the clone's borrowed files keep their null stats → same pruning
     TxTable.prunedFilesByNull(spark, clone, 1, "x", true).size shouldBe 1
     TxTable.readWhereNull(spark, clone, "x", false).count() shouldBe 1L
+  }
+
+  // --- merge-on-read deletes: every MoR delete records (file, row
+  // ordinal) deletion vectors, whether it is addressed by a range
+  // (deleteWherePos) or by a key set (deleteKeysMor).
+
+  test("merge-on-read delete: zero data files rewritten, read hash-equals copy-on-write, OPTIMIZE folds the tombstones") {
+    val morT = freshTable()
+    val cowT = freshTable()
+    val rows = (1L to 400L).map(i => (i, i * 1.5, s"s$i"))
+    // 4-file layout, range-clustered on id so the delete prunes
+    val df = rows.toDF("id", "x", "s").repartitionByRange(4, col("id"))
+    TxTable.commit(df, morT, statsCols = Seq("id")) shouldBe 1
+    TxTable.commit(df, cowT, statsCols = Seq("id")) shouldBe 1
+    val filesBefore = TxTable.filesOf(spark, morT, 1)
+    // MoR delete of a point range; CoW of the same range on the twin
+    val (v2, nDel) = TxTable.deleteWherePos(spark, morT, "id", 100.0, 140.0)
+    v2 shouldBe 2
+    nDel shouldBe 41L
+    TxTable.deleteWhere(spark, cowT, "id", 100.0, 140.0)._1 shouldBe 2
+    // ZERO data files rewritten: the manifest carries v1's files verbatim
+    TxTable.filesOf(spark, morT, 2) shouldBe filesBefore
+    TxTable.posDeletesOf(spark, morT, 2) should not be empty
+    TxTable.opOf(spark, morT, 2) shouldBe "posdelete"
+    // the MoR read equals the CoW result exactly
+    canon(TxTable.read(spark, morT)) shouldBe canon(TxTable.read(spark, cowT))
+    // snapshot isolation: v1 still sees every row
+    TxTable.readVersion(spark, morT, 1).count() shouldBe 400L
+    // pruned readers go through the deletion vectors too
+    TxTable.readWhere(spark, morT, "id", 90.0, 150.0)
+      .collect().map(_.getLong(0)).sorted shouldBe ((90L to 99L) ++ (141L to 150L))
+    // a second MoR delete stacks; already-deleted rows are NOT re-recorded
+    val (v3, nDel2) = TxTable.deleteWherePos(spark, morT, "id", 120.0, 160.0)
+    v3 shouldBe 3
+    nDel2 shouldBe 20L // 141..160 — 120..140 were already deleted
+    TxTable.read(spark, morT).count() shouldBe 400L - 61L
+    // changes() reads the MoR delete as deletes of exactly those rows,
+    // touching only the files the deletion vectors reference
+    val delta = TxTable.changes(spark, morT, 2, 3)
+    delta.select("_change").distinct().collect().map(_.getString(0)) shouldBe Array("delete")
+    delta.select("id").collect().map(_.getLong(0)).sorted shouldBe (141L to 160L)
+    // appends AFTER the delete are unaffected (per-file scope, not a blocklist)
+    TxTable.commit(Seq((130L, 1.0, "again")).toDF("id", "x", "s"), morT,
+      statsCols = Seq("id")) shouldBe 4
+    TxTable.read(spark, morT).filter(col("id") === 130L).count() shouldBe 1L
+    // OPTIMIZE folds the deletion vectors away: content identical, sidecars gone
+    val before = canon(TxTable.read(spark, morT))
+    val v5 = TxTable.compact(spark, morT)
+    TxTable.posDeletesOf(spark, morT, v5) shouldBe empty
+    canon(TxTable.read(spark, morT)) shouldBe before
+    // vacuum never reclaims a LIVE sidecar; expiry reclaims dead ones
+    TxTable.vacuum(spark, morT, 0L)
+    TxTable.readVersion(spark, morT, 3).count() shouldBe 400L - 61L
+    val (expired, dead) = TxTable.expireVersions(spark, morT, 1)
+    expired shouldBe (1 to 4)
+    dead.exists(_.contains("_p")) shouldBe true // sidecars reclaimed with history
+    canon(TxTable.read(spark, morT)) shouldBe before
+  }
+
+  test("drop the matched-on column right after a MoR delete, and the deleted rows stay deleted") {
+    val table = freshTable()
+    TxTable.commit(Seq((1L, 10.0, "a"), (2L, 20.0, "b"), (3L, 30.0, "c"))
+      .toDF("id", "x", "s"), table, statsCols = Seq("x")) shouldBe 1
+    // key-set delete matched on id, then id dropped with no compaction
+    TxTable.deleteKeysMor(spark, table, "id", Seq(2L).toDF("id"))._2 shouldBe 1L
+    TxTable.dropColumn(spark, table, "id") shouldBe 3
+    TxTable.read(spark, table).columns shouldBe Array("x", "s")
+    canon(TxTable.read(spark, table)) shouldBe
+      canon(Seq((10.0, "a"), (30.0, "c")).toDF("x", "s"))
+    // range delete matched on x, then x dropped the same way
+    TxTable.deleteWherePos(spark, table, "x", 25.0, 35.0)._2 shouldBe 1L
+    TxTable.dropColumn(spark, table, "x") shouldBe 5
+    canon(TxTable.read(spark, table)) shouldBe canon(Seq("a").toDF("s"))
+    // time travel still sees the pre-delete rows under their old columns
+    TxTable.readVersion(spark, table, 1).count() shouldBe 3L
+  }
+
+  test("the NULL-keyed matched row is deleted, exactly as copy-on-write deleteWhere does; MoR delete no-ops when stats prune everything") {
+    val table = freshTable()
+    val cowT = freshTable()
+    val df = Seq((Some(1L), 10.0), (None, 20.0), (Some(3L), 30.0))
+      .toDF("id", "x")
+    TxTable.commit(df, table, statsCols = Seq("x")) shouldBe 1
+    TxTable.commit(df, cowT, statsCols = Seq("x")) shouldBe 1
+    // a range outside every file's stats is a no-op at the current version
+    TxTable.deleteWherePos(spark, table, "x", 1e6, 2e6) shouldBe ((1, 0L))
+    TxTable.currentVersion(spark, table) shouldBe 1
+    // the matched range covers the NULL-keyed row: it is deleted
+    TxTable.deleteWherePos(spark, table, "x", 15.0, 25.0) shouldBe ((2, 1L))
+    TxTable.deleteWhere(spark, cowT, "x", 15.0, 25.0)._1 shouldBe 2
+    canon(TxTable.read(spark, table)) shouldBe canon(TxTable.read(spark, cowT))
+    TxTable.read(spark, table).collect().map(_.getLong(0)).sorted shouldBe Array(1L, 3L)
+  }
+
+  // Positional deletion vectors: the (file, row ordinal) sidecar form.
+  // Result-equal to copy-on-write on the same inputs, zero files
+  // rewritten, schema-independent (no key column), CDC replays the
+  // delete, OPTIMIZE folds the vectors.
+  test("positional deletion vectors: equal to copy-on-write, zero rewrite, CDC + fold") {
+    import org.apache.spark.sql.functions.{col => c}
+    val cowT = freshTable()
+    val posT = freshTable()
+    val df = (1L to 100L).map(i => (i, s"s$i")).toDF("id", "s")
+      .repartition(4, c("id"))
+    Seq(cowT, posT).foreach(t => TxTable.commit(df, t, statsCols = Seq("id")))
+    val (cv0, _, _) = TxTable.deleteWhere(spark, cowT, "id", 10.0, 40.0)
+    val (pv, pn) = TxTable.deleteWherePos(spark, posT, "id", 10.0, 40.0)
+    pn shouldBe 31L
+    // zero files rewritten by the positional form
+    TxTable.filesOf(spark, posT, pv) shouldBe TxTable.filesOf(spark, posT, 1)
+    canon(TxTable.readVersion(spark, posT, pv)) shouldBe
+      canon(TxTable.readVersion(spark, cowT, cv0))
+    // already-deleted rows never re-record (idempotent no-op)
+    TxTable.deleteWherePos(spark, posT, "id", 10.0, 40.0)._2 shouldBe 0L
+    // a second, overlapping positional delete stacks correctly
+    TxTable.deleteWherePos(spark, posT, "id", 30.0, 50.0)._2 shouldBe 10L
+    TxTable.read(spark, posT).count() shouldBe 59L
+    // CDC: the posdelete version replays as exactly the deleted rows
+    val cdc = TxTable.changes(spark, posT, 1, 2)
+    cdc.filter(c("_change") === "delete").count() shouldBe 31L
+    cdc.count() shouldBe 31L
+    // appends after the delete are unaffected; re-inserted ordinals
+    // in NEW files never collide with old vectors (per-file scope)
+    TxTable.commit(Seq((10L, "re10")).toDF("id", "s"), posT,
+      statsCols = Seq("id"))
+    TxTable.read(spark, posT).filter(c("id") === 10L).count() shouldBe 1L
+    // OPTIMIZE folds the vectors away: content preserved, posd gone
+    val cv = TxTable.compact(spark, posT)
+    TxTable.posDeletesOf(spark, posT, cv) shouldBe empty
+    TxTable.read(spark, posT).count() shouldBe 60L
+    // sidecars are REFERENCED files for vacuum while their manifests
+    // live (vacuuming one would resurrect rows in time travel)
+    val sidecars = TxTable.posDeletesOf(spark, posT, 3)
+    sidecars should not be empty
+    TxTable.vacuum(spark, posT, minAgeMs = 0)
+      .intersect(sidecars) shouldBe empty
+  }
+
+  // --- r10: metadata-only COUNT(*) from manifest row counts ---
+  test("metaCount answers from the manifest and stays exact under posd deletes") {
+    val table = freshTable()
+    TxTable.commit((1L to 500L).map(i => (i, i % 7)).toDF("id", "g")
+      .repartition(3, col("id")), table, statsCols = Seq("id"), countRows = true)
+    TxTable.metaCount(spark, table) shouldBe 500L
+    // append with counts: counts extend
+    TxTable.commit((501L to 600L).map(i => (i, i % 7)).toDF("id", "g"),
+      table, countRows = true)
+    TxTable.metaCount(spark, table) shouldBe 600L
+    // positional delete: each vector pair decrements exactly one row
+    val (_, nDel) = TxTable.deleteWherePos(spark, table, "id", 100.0, 250.0)
+    nDel shouldBe 151L
+    TxTable.metaCount(spark, table) shouldBe 449L
+    TxTable.read(spark, table).count() shouldBe 449L
+    // a key-set delete records vector pairs too: the count stays derivable
+    TxTable.deleteKeysMor(spark, table, "id", Seq(300L).toDF("id"))
+    TxTable.metaCount(spark, table) shouldBe 448L
+    // OPTIMIZE folds the vectors away; recounted files keep the path
+    TxTable.compact(spark, table)
+    // the compacted files carry the declared row counts
+    TxTable.metaCount(spark, table) shouldBe 448L
+    TxTable.metaCount(spark, table) shouldBe TxTable.read(spark, table).count()
+  }
+
+  test("a manifest still carrying key-form tomb deletes refuses with a named error") {
+    val table = freshTable()
+    TxTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), table) shouldBe 1
+    val file = TxTable.filesOf(spark, table, 1).head
+    // the v2 an older build's key-set delete published
+    val legacy = s"""{"version":2,"op":"mordelete","n_files":1,"files":["$file"],""" +
+      """"tomb":[{"f":"data/v2_t0_0a1b2c3d.parquet","k":"id"}]}"""
+    val fw = new java.io.FileWriter(s"$table/_manifests/v2.json")
+    fw.write(legacy); fw.close()
+    val e = intercept[IllegalArgumentException](TxTable.read(spark, table))
+    e.getMessage should include("malformed manifest")
+    e.getMessage should include("'tomb'")
+    e.getMessage should include("compact the table with the previous build")
+    intercept[IllegalArgumentException](graft.sources.TxManifest.parse(legacy)).getMessage shouldBe
+      e.getMessage
+    // the versions before it still read
+    TxTable.readVersion(spark, table, 1).count() shouldBe 2L
   }
 }
