@@ -497,7 +497,7 @@ object StreamQueries {
       val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
       sources.TxTable.commit(ord.repartitionByRange(4, col("o_orderkey")), table,
         statsCols = Seq("o_orderkey"))
-      sources.TxTable.deleteWherePos(s, table, "o_orderkey", 1.0, 300.0)
+      sources.TxTable.deleteWherePos(s, table, col("o_orderkey").between(1.0, 300.0))
       sources.TxTable.commit(ord.filter(col("o_orderkey") <= 100), table,
         statsCols = Seq("o_orderkey"))
       sources.TxChangesStream.replayAll(s, table)
@@ -544,7 +544,7 @@ object StreamQueries {
       def part(p: String) = ord.filter(col("o_orderpriority") === p)
       sources.TxTable.commit(part("1-URGENT"), src, statsCols = Seq("o_orderkey")) // v1
       sources.TxTable.commit(part("2-HIGH"), src)                                  // v2
-      sources.TxTable.deleteWherePos(s, src, "o_orderkey", 1.0, 400.0)               // v3
+      sources.TxTable.deleteWherePos(s, src, col("o_orderkey").between(1.0, 400.0))               // v3
       sources.TxTable.commit(part("5-LOW"), src)                                   // v4
       // no trigger rate limit: the per-version loop inside the mirror
       // already applies versions in order, so one micro-batch drains

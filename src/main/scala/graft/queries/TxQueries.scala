@@ -64,7 +64,7 @@ object TxQueries {
         df.agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
           .select(lit(tag).as("section"), col("n_rows"), col("sum_price"))
-      summarize(sources.TxTable.readWhere(s, table, "o_orderkey", 1000.0, 3000.0), "pruned")
+      summarize(sources.TxTable.scan(s, table, col("o_orderkey").between(1000.0, 3000.0)), "pruned")
         .unionByName(summarize(sources.TxTable.read(s, table)
           .filter(col("o_orderkey").between(1000, 3000)), "snapshot"))
     },
@@ -94,9 +94,9 @@ object TxQueries {
         df.agg(count(lit(1)).as("n_rows"),
             sum(dec(col("l_quantity"))).cast("double").as("sum_qty"))
           .select(lit(tag).as("section"), col("n_rows"), col("sum_qty"))
-      summarize(sources.TxTable.readWhere(s, table, "l_orderkey", 1000.0, 3000.0), "by_okey")
+      summarize(sources.TxTable.scan(s, table, col("l_orderkey").between(1000.0, 3000.0)), "by_okey")
         .unionByName(
-          summarize(sources.TxTable.readWhere(s, table, "l_partkey", 10.0, 60.0), "by_pkey"))
+          summarize(sources.TxTable.scan(s, table, col("l_partkey").between(10.0, 60.0)), "by_pkey"))
     },
       // both sections recompute from the base table — the z-ordered
       // pruned reads must be row-exact
@@ -129,7 +129,7 @@ object TxQueries {
       val lo = 1.0
       val hi = (width / 2).toDouble
       val (v, nRewritten, nCarried) =
-        sources.TxTable.deleteWhere(s, table, "o_orderkey", lo, hi)
+        sources.TxTable.deleteWhere(s, table, col("o_orderkey").between(lo, hi))
       def summarize(df: org.apache.spark.sql.DataFrame, section: String, label: String) =
         df.agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -369,7 +369,7 @@ object TxQueries {
         .repartition(8, col("o_orderkey")) // unclustered: range stats useless
       sources.TxTable.commit(ord, table, bloomCols = Seq("o_orderkey"))
       def probe(tag: String, key: String) = {
-        val kept = sources.TxTable.prunedFilesByKey(s, table, 1, "o_orderkey", key)
+        val kept = sources.TxTable.keptFiles(s, table, 1, col("o_orderkey").cast("string") === key)
         sources.TxTable.readWhereKey(s, table, "o_orderkey", key)
           .agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -558,7 +558,7 @@ object TxQueries {
         .withColumn("sum_val", lit(null).cast("double"))
       agg(cur, "current", "price")
         .unionByName(agg(sources.TxTable.readVersion(s, table, 1), "v1", "o_totalprice"))
-        .unionByName(agg(sources.TxTable.readWhere(s, table, "o_orderkey", 100.0, 2000.0),
+        .unionByName(agg(sources.TxTable.scan(s, table, col("o_orderkey").between(100.0, 2000.0)),
           "pruned", "price"))
         .unionByName(meta)
     },
@@ -594,13 +594,13 @@ object TxQueries {
       sources.TxTable.commit(ord.repartition(5, col("o_orderpriority")), table,
         setCols = Seq("o_orderpriority"))
       val probe = "3-MEDIUM"
-      val kept = sources.TxTable.prunedFilesByValue(s, table, 1, "o_orderpriority", probe)
+      val kept = sources.TxTable.keptFiles(s, table, 1, col("o_orderpriority") === probe)
       val total = sources.TxTable.filesOf(s, table, 1)
-      val rows = sources.TxTable.readWhereValue(s, table, "o_orderpriority", probe)
+      val rows = sources.TxTable.scan(s, table, col("o_orderpriority") === probe)
         .agg(count(lit(1)).as("n_rows"),
           sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
         .select(lit("rows").as("section"), col("n_rows"), col("sum_price"))
-      val absent = sources.TxTable.readWhereValue(s, table, "o_orderpriority", "9-NONE")
+      val absent = sources.TxTable.scan(s, table, col("o_orderpriority") === "9-NONE")
         .agg(count(lit(1)).as("n_rows"))
         .select(lit("absent").as("section"), col("n_rows"),
           lit(null).cast("double").as("sum_price"))
@@ -641,7 +641,7 @@ object TxQueries {
         partitionBy = Some("o_orderpriority"))
       val probe = "3-MEDIUM"
       val total = sources.TxTable.filesOf(s, table, 1)
-      val mine = sources.TxTable.prunedFilesByValue(s, table, 1, "o_orderpriority", probe)
+      val mine = sources.TxTable.keptFiles(s, table, 1, col("o_orderpriority") === probe)
       val rows = sources.TxTable.readPartition(s, table, probe)
         .agg(count(lit(1)).as("n_rows"),
           sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -684,7 +684,7 @@ object TxQueries {
       sources.TxTable.commit(ord.repartitionByRange(4, col("o_orderkey")), table,
         statsCols = Seq("o_orderkey"))
       val files1 = sources.TxTable.filesOf(s, table, 1)
-      val (v2, nDel) = sources.TxTable.deleteWherePos(s, table, "o_orderkey", 1.0, 500.0)
+      val (v2, nDel) = sources.TxTable.deleteWherePos(s, table, col("o_orderkey").between(1.0, 500.0))
       val nVecFiles = sources.TxTable.posDeletesOf(s, table, v2).size
       val zeroRewrite = sources.TxTable.filesOf(s, table, v2) == files1
       val v3 = sources.TxTable.compact(s, table)
@@ -751,7 +751,7 @@ object TxQueries {
       val bump = (dec(col("o_totalprice")) *
         lit(new java.math.BigDecimal("1.1"))).cast("double")
       val (v2, nTouched, nCarried) = sources.TxTable.updateWhere(s, table,
-        "o_orderkey", 1.0, 500.0, Map("o_totalprice" -> bump))
+        col("o_orderkey").between(1.0, 500.0), Map("o_totalprice" -> bump))
       def summarize(df: DataFrame, label: String) =
         df.agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -977,7 +977,7 @@ object TxQueries {
         ord.filter(col("o_orderkey") % 4 === 3).coalesce(1), src,
         statsCols = Seq("o_orderkey"))
       val owned = sources.TxTable.filesOf(s, dst, v2).count(!_.startsWith("/"))
-      val kept = sources.TxTable.prunedFiles(s, dst, v2, "o_orderkey", 1.0, 300.0)
+      val kept = sources.TxTable.keptFiles(s, dst, v2, col("o_orderkey").between(1.0, 300.0))
       def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
         df.agg(count(lit(1)).as("n_rows"),
             sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
@@ -992,7 +992,7 @@ object TxQueries {
       summarize(sources.TxTable.read(s, dst), "clone")
         .unionByName(summarize(sources.TxTable.read(s, src), "source"))
         .unionByName(summarize(
-          sources.TxTable.readWhere(s, dst, "o_orderkey", 1.0, 300.0), "clone_range"))
+          sources.TxTable.scan(s, dst, col("o_orderkey").between(1.0, 300.0)), "clone_range"))
         .unionByName(meta)
     },
       // clone/source content derives from orders (logical truth); the
@@ -1041,7 +1041,7 @@ object TxQueries {
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
       sources.TxTable.commit(ord, table, statsCols = Seq("o_orderkey"),
         partitionBy = Some("o_orderpriority"), countRows = true)
-      sources.TxTable.deleteWherePos(s, table, "o_orderkey", 1.0, 400.0)
+      sources.TxTable.deleteWherePos(s, table, col("o_orderkey").between(1.0, 400.0))
       val metaRows = sources.TxTable.metaCountByPartition(s, table)
       val total = sources.TxTable.metaCount(s, table)
       val meta = s.createDataFrame(
@@ -1275,13 +1275,13 @@ object TxQueries {
         ord.filter(col("o_orderkey") % 7 === 0).coalesce(1),
         table, nullCols = Seq("price"), countRows = true)
       val v = sources.TxTable.currentVersion(s, table)
-      val keptNull = sources.TxTable.prunedFilesByNull(s, table, v, "price", true)
-      val keptVal = sources.TxTable.prunedFilesByNull(s, table, v, "price", false)
-      val nulls = sources.TxTable.readWhereNull(s, table, "price", true)
+      val keptNull = sources.TxTable.keptFiles(s, table, v, col("price").isNull)
+      val keptVal = sources.TxTable.keptFiles(s, table, v, col("price").isNotNull)
+      val nulls = sources.TxTable.scan(s, table, col("price").isNull)
         .agg(count(lit(1)).as("n_rows"))
         .select(lit("read").as("section"), lit("is_null").as("label"),
           col("n_rows"), lit(null).cast("double").as("sum_price"))
-      val vals = sources.TxTable.readWhereNull(s, table, "price", false)
+      val vals = sources.TxTable.scan(s, table, col("price").isNotNull)
         .agg(count(lit(1)).as("n_rows"),
           sum(dec(col("price"))).cast("double").as("sum_price"))
         .select(lit("read").as("section"), lit("not_null").as("label"),

@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
 /** Minimal transactional snapshot layer over parquet — the
@@ -814,16 +816,16 @@ object TxTable {
     * analyzed against the snapshot's logical schema (so comparisons
     * carry Spark's own types and implicit casts) and walked once; a file
     * is skipped only when a stat recorded for it refutes an `And`
-    * conjunct:
-    *  - `=` on the string form (a string column, or any column cast to
-    *    string, against a constant): value set, bloom, and the
-    *    identity-partition directory;
-    *  - `>=`, `>`, `<=`, `<` (so `between`) on a [[rangeTyped]] column
-    *    against a numeric constant: [min, max];
+    * conjunct, or refutes both branches of an `Or`:
+    *  - `=` and `IN` on the string form (a string column, or any column
+    *    cast to string, against constants): value set, bloom, and the
+    *    identity-partition directory, each admitting any probe;
+    *  - `=`, `IN`, `>=`, `>`, `<=`, `<` (so `between`) on a
+    *    [[rangeTyped]] column against numeric constants: [min, max];
     *  - `IS NULL` / `IS NOT NULL`: null count, and row count for the
     *    all-null test (positional deletes only remove rows).
     * Any other node, an unresolvable predicate and a missing stat keep
-    * the file. The probe is the constant as the analyzed predicate
+    * the file. A probe is a constant as the analyzed predicate
     * compares it, a string from Spark's own cast-to-string — what the
     * executor-built value sets and blooms hashed (a driver-side
     * toString diverges for e.g. timestamps, and a diverged probe is a
@@ -833,9 +835,9 @@ object TxTable {
                                predicate: Column): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
     val snap = snapshotOf(spark, table, v)
     if (snap.files.isEmpty) return Nil
-    val schema = snap.schema.map(StructType.fromDDL).getOrElse(readVersion(spark, table, v).schema)
     def phys(a: AttributeReference): String = physOf(snap.map, a.name)
     object Const {
       def unapply(e: Expression): Option[Any] =
@@ -867,19 +869,35 @@ object TxTable {
       val rows = snap.rows.toMap
       fl => counts.get(fl).forall(n => if (wantNull) n > 0 else rows.get(fl).forall(n < _))
     }
-    def stringEq(c: String, s: String): String => Boolean = {
+    def stringIn(c: String, probes: Seq[String]): String => Boolean = {
       val sets = snap.vsets.collect { case (fl, `c`, vs) => fl -> vs }.toMap
-      val bloom = bloomAdmits(snap, c, Seq(s))
+      val bloom = bloomAdmits(snap, c, probes)
       val part = snap.part.filter(_ == c)
-      fl => sets.get(fl).forall(_.contains(s)) && bloom(fl) &&
-        part.forall(partValueOf(_, fl).forall(_ == s))
+      val probe = probes.toSet
+      fl => sets.get(fl).forall(_.exists(probe)) && bloom(fl) &&
+        part.forall(partValueOf(_, fl).forall(probe))
+    }
+    def numIn(c: String, probes: Seq[Double]): String => Boolean =
+      range(c)((lo, hi) => probes.exists(x => !(hi < x) && !(lo > x)))
+    val keepAll: String => Boolean = _ => true
+    // `e` equal to any of the constants `ps`; a NULL constant never matches
+    def anyOf(e: Expression, ps: Seq[Any]): String => Boolean = e match {
+      case StrCol(c) if ps.forall(p => p == null || p.isInstanceOf[UTF8String]) =>
+        stringIn(c, ps.collect { case u: UTF8String => u.toString })
+      case NumCol(c) if ps.forall(p => p == null || p.isInstanceOf[java.lang.Number]) =>
+        numIn(c, ps.collect { case x: java.lang.Number => x.doubleValue })
+      case _ => keepAll
     }
     def allows(e: Expression): String => Boolean = e match {
       case And(l, r) =>
         val (a, b) = (allows(l), allows(r))
         fl => a(fl) && b(fl)
-      case EqualTo(StrCol(c), Const(s: org.apache.spark.unsafe.types.UTF8String)) =>
-        stringEq(c, s.toString)
+      case Or(l, r) =>
+        val (a, b) = (allows(l), allows(r))
+        fl => a(fl) || b(fl)
+      case EqualTo(l, Const(x)) => anyOf(l, Seq(x))
+      case In(l, list) if list.forall(_.foldable) =>
+        scala.util.Try(list.map(_.eval())).toOption.fold(keepAll)(anyOf(l, _))
       case GreaterThanOrEqual(NumCol(c), Const(x: java.lang.Number)) =>
         range(c)((_, hi) => !(hi < x.doubleValue))
       case GreaterThan(NumCol(c), Const(x: java.lang.Number)) =>
@@ -890,13 +908,26 @@ object TxTable {
         range(c)((lo, _) => !(lo >= x.doubleValue))
       case IsNull(a: AttributeReference) => nulls(phys(a), wantNull = true)
       case IsNotNull(a: AttributeReference) => nulls(phys(a), wantNull = false)
-      case _ => _ => true
+      case _ => keepAll
     }
-    scala.util.Try(spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        schema).filter(predicate).queryExecution.analyzed).toOption match {
-      case Some(org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _)) =>
-        snap.files.filter(allows(cond))
-      case _ => snap.files
+    scala.util.Try(analyzed(spark, table, v, predicate).head).toOption
+      .fold(snap.files)(cond => snap.files.filter(allows(cond)))
+  }
+
+  /** `predicate` and `exprs`, in logical names, analyzed against version
+    * `v`'s logical schema: Spark's own resolution, types and implicit
+    * casts, and Spark's AnalysisException for a name the snapshot lacks.
+    * The head is the predicate's condition, the tail `exprs` in order.
+    */
+  private def analyzed(spark: SparkSession, table: String, v: Int, predicate: Column,
+                       exprs: Seq[Column] = Nil): Seq[Expression] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    val schema = manifestSchema(spark, table, v).getOrElse(readVersion(spark, table, v).schema)
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      .filter(predicate).select(exprs: _*).queryExecution.analyzed match {
+      case Project(list, Filter(cond, _)) =>
+        cond +: list.map { case Alias(e, _) => e; case e => e }
+      case plan => sys.error(s"TxTable: unexpected predicate plan $plan")
     }
   }
 
@@ -916,56 +947,14 @@ object TxTable {
        else snapshotRead(spark, table, v, first)).limit(0)
     }
 
-  /** The named skipping readers: each is [[scan]] of one predicate, and
-    * its `prunedFiles*` twin is [[keptFiles]] of the same predicate.
-    *  - `readWhere`: `lo ≤ col ≤ hi` on min/max — with a range-clustered
-    *    layout (repartitionByRange / z-order before commit) the Delta
-    *    data-skipping read;
-    *  - `readWhereValue`, `readWhereKey`: `col = value` on the string
-    *    rendering — value sets prune categorical columns exactly, blooms
-    *    let a needle-in-100-TB id lookup read only the files that admit
-    *    the key (never a false negative);
-    *  - `readWhereNull`: IS NULL (`wantNull`) or IS NOT NULL on null
-    *    counts — a completeness audit reads the incomplete files.
+  /** Point read on the string rendering: [[scan]] of
+    * `cast(colName as string) = value` — value sets, blooms and the
+    * partition directory prune it (a needle-in-100-TB id lookup reads
+    * only the files that admit the key, never a false negative).
     */
-  def readWhere(spark: SparkSession, table: String, colName: String,
-                lo: Double, hi: Double, version: Int = -1): DataFrame =
-    scan(spark, table, col(colName).between(lo, hi), version)
-
-  def prunedFiles(spark: SparkSession, table: String, v: Int,
-                  colName: String, lo: Double, hi: Double): Seq[String] =
-    keptFiles(spark, table, v, col(colName).between(lo, hi))
-
-  def readWhereValue(spark: SparkSession, table: String, colName: String,
-                     value: String, version: Int = -1): DataFrame =
-    scan(spark, table, equalsString(colName, value), version)
-
-  def prunedFilesByValue(spark: SparkSession, table: String, v: Int,
-                         colName: String, value: String): Seq[String] =
-    keptFiles(spark, table, v, equalsString(colName, value))
-
   def readWhereKey(spark: SparkSession, table: String, colName: String,
                    value: String, version: Int = -1): DataFrame =
-    scan(spark, table, equalsString(colName, value), version)
-
-  def prunedFilesByKey(spark: SparkSession, table: String, v: Int,
-                       colName: String, value: String): Seq[String] =
-    keptFiles(spark, table, v, equalsString(colName, value))
-
-  def readWhereNull(spark: SparkSession, table: String, colName: String,
-                    wantNull: Boolean, version: Int = -1): DataFrame =
-    scan(spark, table, nullTest(colName, wantNull), version)
-
-  def prunedFilesByNull(spark: SparkSession, table: String, v: Int,
-                        colName: String, wantNull: Boolean): Seq[String] =
-    keptFiles(spark, table, v, nullTest(colName, wantNull))
-
-  /** `col = value` on the string rendering value sets and blooms record. */
-  private def equalsString(colName: String, value: String): Column =
-    col(colName).cast("string") === value
-
-  private def nullTest(colName: String, wantNull: Boolean): Column =
-    if (wantNull) col(colName).isNull else col(colName).isNotNull
+    scan(spark, table, col(colName).cast("string") === value, version)
 
   /** Per-file bloom entries of version `v`: (file, column, m, k,
     * base64 bits). m/k ride each entry so the GEOMETRY can evolve —
@@ -1204,8 +1193,8 @@ object TxTable {
   }
 
   /** Whether a file's bloom on physical column `c` can hold any of
-    * `probes` — the one bloom test, shared by [[keptFiles]]' `=` atom
-    * and the key-set writes ([[bloomCandidateFiles]]). Each probe is
+    * `probes` — the one bloom test, behind [[keptFiles]]' `=` and `IN`
+    * atoms (the key-set writes reach it through them). Each probe is
     * hashed ONCE per recorded bloom geometry (md5 is the expensive part;
     * per-(file, probe) hashing would be files × probes digests), so the
     * per-file test is pure bit tests. A file without a bloom on `c` is
@@ -1222,116 +1211,124 @@ object TxTable {
     }
   }
 
-  /** Row-level DELETE, copy-on-write (the Delta default path): files
-    * whose manifest stats say they CANNOT contain `lo ≤ col ≤ hi`
-    * are carried into the new version untouched (same relative
-    * paths — zero IO, zero write amplification on them); only the
-    * [[prunedFiles]] candidates are read, filtered to the survivors,
-    * and rewritten. With a range-clustered layout the rewrite set is
-    * the matching files, not the table — at 100 TB a point delete
-    * rewrites megabytes. Old files stay for time travel until
-    * vacuumed; `changes()` reads the version as remove+add of the
-    * rewritten subset only.
+  /** Row-level DELETE, copy-on-write (the Delta default path) of the
+    * rows where `predicate` is TRUE (a NULL keeps the row, as in SQL).
+    * Files [[keptFiles]] skips are carried into the new version
+    * untouched (same relative paths — zero IO, zero write amplification
+    * on them); only the candidates are read, filtered to the survivors,
+    * and rewritten — at 100 TB a point delete rewrites megabytes. Old
+    * files stay for time travel until vacuumed; `changes()` reads the
+    * version as remove+add of the rewritten subset only.
     *
-    * A delete whose range prunes to ZERO candidate files is a no-op
-    * and commits nothing (Delta's behavior) — returns the current
-    * version with 0 rewritten.
-    *
-    * @return (version, nRewrittenFiles, nCarriedFiles)
+    * @return (version, nRewrittenFiles, nCarriedFiles) — version
+    *         unchanged with 0 rewrites when no file can match (Delta's
+    *         no-op rule: nothing is committed)
     */
-  def deleteWhere(spark: SparkSession, table: String, colName: String,
-                  lo: Double, hi: Double): (Int, Int, Int) = {
-    val v = currentVersion(spark, table)
-    require(v >= 1, s"TxTable: cannot delete from non-existent table $table")
-    val all = filesOf(spark, table, v)
-    val touch = prunedFiles(spark, table, v, colName, lo, hi)
-    val untouched = all.filterNot(touch.toSet)
-    if (touch.isEmpty) return (v, 0, all.size)
-    val phys = physOf(colMapOf(spark, table, v), colName)
-    // SQL DELETE semantics: rows where the predicate is NULL are KEPT
-    // (a bare NOT(between) would silently drop null-keyed rows).
-    // Evolved tables rewrite through mergeSchema so late-added columns
-    // survive the rewrite. The candidate read applies existing MoR
-    // deletion vectors — a rewrite gives rows NEW file names and
-    // ordinals, outside the per-(file, ordinal) scope, which would
-    // resurrect them.
-    val survivors = morFilter(spark, table, v,
-        rawRead(spark, table, v, touch))
-      .filter(col(phys).isNull || !(col(phys) >= lo && col(phys) <= hi))
-    val nv = commitAs(survivors, table, v + 1, "delete",
-      carryFiles = Some(untouched), dfIsPhysical = true)
-    (nv, touch.size, untouched.size)
-  }
+  def deleteWhere(spark: SparkSession, table: String, predicate: Column): (Int, Int, Int) =
+    copyOnWrite(spark, table, predicate, "delete", Nil)((rows, hit, _, _) => rows.filter(!hit))
 
   /** Row-level UPDATE, COPY-ON-WRITE (the Delta/Iceberg CoW UPDATE
-    * shape): rewrite ONLY the files whose stats admit a predicate
+    * shape): rewrite ONLY the files whose stats admit a `predicate`
     * match, applying `assign` to the matching rows and carrying every
     * other file by reference — a point update on a 100 TB table costs
     * one stats-pruned candidate rewrite, never a snapshot rewrite.
     * SQL UPDATE semantics: rows where the predicate is NULL keep their
     * original values; non-matching rows in rewritten files copy
-    * through unchanged. The rewrite reads through the merge-on-read
-    * filter (a rewritten row gets a NEW file name and ordinal, which
-    * would otherwise un-scope its deletion vectors) and commits as op
-    * "update" — [[changes]] surfaces the churn as delete-of-candidates
-    * + insert-of-rewrites (the Iceberg CDC rule for CoW updates).
+    * through unchanged. Commits as op "update" — [[changes]] surfaces
+    * the churn as delete-of-candidates + insert-of-rewrites (the
+    * Iceberg CDC rule for CoW updates).
     *
-    * `assign` maps column names to replacement expressions evaluated
-    * on the matched rows (referencing any column of the row).
+    * `assign` maps column names to replacement expressions evaluated on
+    * the matched row as it was before the update. Targets, expressions
+    * and the predicate are all in logical names.
     *
     * @return (version, nRewrittenFiles, nCarriedFiles) — version
     *         unchanged with 0 rewrites when no file can match
     */
-  def updateWhere(spark: SparkSession, table: String, colName: String,
-                  lo: Double, hi: Double, assign: Map[String, Column]): (Int, Int, Int) = {
+  def updateWhere(spark: SparkSession, table: String, predicate: Column,
+                  assign: Map[String, Column]): (Int, Int, Int) = {
     require(assign.nonEmpty, "updateWhere needs at least one assignment")
-    val v = currentVersion(spark, table)
-    require(v >= 1, s"TxTable: cannot update non-existent table $table")
-    val all = filesOf(spark, table, v)
-    val touch = prunedFiles(spark, table, v, colName, lo, hi)
-    val untouched = all.filterNot(touch.toSet)
-    if (touch.isEmpty) return (v, 0, all.size)
-    val map = colMapOf(spark, table, v)
-    val phys = physOf(map, colName)
-    val pred = col(phys).isNotNull && col(phys) >= lo && col(phys) <= hi
-    val base = morFilter(spark, table, v, rawRead(spark, table, v, touch))
-    // assignment TARGETS are logical names resolved through the column
-    // mapping; assignment EXPRESSIONS evaluate against the physical
-    // rewrite frame (identical to logical for unmapped tables)
-    val rewritten = assign.foldLeft(base) { case (d, (name, expr)) =>
-      val p = physOf(map, name)
-      require(base.columns.contains(p),
-        s"TxTable: updateWhere target column '$name' not in $table")
-      d.withColumn(p, when(pred, expr).otherwise(col(p)))
+    val (names, exprs) = assign.toSeq.unzip
+    copyOnWrite(spark, table, predicate, "update", exprs) { (rows, hit, bound, phys) =>
+      val out = rows.queryExecution.analyzed.output
+      val byTarget = names.map { n =>
+        val p = phys(n)
+        require(out.exists(_.name == p), s"TxTable: updateWhere target column '$n' not in $table")
+        p
+      }.zip(bound).toMap
+      rows.select(out.map { a =>
+        val c = ColumnBridge.column(a)
+        byTarget.get(a.name).fold(c)(e => when(hit, e).otherwise(c).as(a.name))
+      }: _*)
     }
-    val nv = commitAs(rewritten, table, v + 1, "update",
-      carryFiles = Some(untouched), dfIsPhysical = true)
-    (nv, touch.size, untouched.size)
   }
 
-  /** The file subset of version `v` whose per-file bloom (on physical
-    * column `physKey`) can contain ANY of `keys` ([[bloomAdmits]]) —
-    * the shared candidate-pruning step of the key-addressed writes
-    * ([[deleteKeysMor]], [[appendUnique]]). Falls back to ALL files
-    * when the column has no blooms or the probe exceeds the bounded
-    * driver collect (big batches amortize a full semi-join scan
-    * anyway). Probe strings are rendered by SPARK's cast-to-string —
-    * the same rendering the executor-built blooms hashed (a
-    * driver-side String.valueOf diverges for e.g. timestamps, and a
-    * diverged probe is a bloom FALSE NEGATIVE: files wrongly pruned,
-    * rows silently missed). NULL keys never match an equality join and
-    * the blooms were built null-filtered — dropped from the probe.
+  /** The copy-on-write body of [[deleteWhere]] and [[updateWhere]]: the
+    * head's [[matched]] candidates of `predicate`, rewritten by `step`
+    * (their live physical rows, the match test, `exprs` bound to them,
+    * the logical → physical name map) and committed as `op` with every
+    * other file carried.
+    */
+  private def copyOnWrite(spark: SparkSession, table: String, predicate: Column, op: String,
+                          exprs: Seq[Column])(
+      step: (DataFrame, Column, Seq[Column], String => String) => DataFrame): (Int, Int, Int) = {
+    val v = currentVersion(spark, table)
+    require(v >= 1, s"TxTable: cannot $op non-existent table $table")
+    val all = filesOf(spark, table, v)
+    matched(spark, table, v, predicate, exprs).fold((v, 0, all.size)) {
+      case (touch, rows, hit, bound) =>
+        val untouched = all.filterNot(touch.toSet)
+        val nv = commitAs(step(rows, hit, bound, physOf(colMapOf(spark, table, v), _)),
+          table, v + 1, op,
+          carryFiles = Some(untouched), dfIsPhysical = true)
+        (nv, touch.size, untouched.size)
+    }
+  }
+
+  /** What a predicate writer touches at version `v`: the files
+    * [[keptFiles]] keeps, their live rows (a raw per-file read through
+    * [[morFilter]]: physical names, `_metadata` reachable, no deleted
+    * row resurrected by a rewrite), the match test (NULL as false) and
+    * `exprs`, the last two [[analyzed]] in logical names first — a name
+    * the snapshot lacks throws before anything is written — then bound
+    * to the rows' physical columns. None when no file can match.
+    */
+  private def matched(spark: SparkSession, table: String, v: Int, predicate: Column,
+                      exprs: Seq[Column]): Option[(Seq[String], DataFrame, Column, Seq[Column])] = {
+    val logical = analyzed(spark, table, v, predicate, exprs)
+    val touch = keptFiles(spark, table, v, predicate)
+    if (touch.isEmpty) return None
+    val rows = morFilter(spark, table, v, rawRead(spark, table, v, touch))
+    val map = colMapOf(spark, table, v)
+    val out = rows.queryExecution.analyzed.output
+    val bound = logical.map(e => ColumnBridge.column(e.transform {
+      case a: AttributeReference => out.find(_.name == physOf(map, a.name)).getOrElse(a)
+    }))
+    Some((touch, rows, coalesce(bound.head, lit(false)), bound.tail))
+  }
+
+  /** The files of version `v` that can hold ANY of `keys` in logical
+    * column `keyCol` — the shared candidate-pruning step of the
+    * key-addressed writes ([[deleteKeysMor]], [[appendUnique]]):
+    * [[keptFiles]] of `cast(keyCol as string) IN (keys)`, so blooms,
+    * value sets and the partition directory prune it. ALL files, with
+    * no collect, when the column has no bloom and no value set; all
+    * files too when the probe exceeds the bounded driver collect (big
+    * batches amortize a full semi-join scan anyway). NULL keys never
+    * match an equality join — dropped from the probe.
     */
   private def bloomCandidateFiles(spark: SparkSession, table: String, v: Int,
-                                  physKey: String, keys: DataFrame): Seq[String] = {
+                                  keyCol: String, keys: DataFrame): Seq[String] = {
     val snap = snapshotOf(spark, table, v)
-    if (!snap.blooms.exists(_._2 == physKey)) return snap.files
+    val physKey = physOf(snap.map, keyCol)
+    if (!snap.blooms.exists(_._2 == physKey) && !snap.vsets.exists(_._2 == physKey))
+      return snap.files
     val probe = keys
       .select(keys.col(keys.columns.head).cast("string").as("_graft_pk"))
       .filter(col("_graft_pk").isNotNull)
       .limit(10001).collect().map(_.getString(0))
     if (probe.length > 10000) snap.files
-    else snap.files.filter(bloomAdmits(snap, physKey, probe.toSeq))
+    else keptFiles(spark, table, v, col(keyCol).cast("string").isin(probe.toIndexedSeq: _*))
   }
 
   /** UNIQUE-KEY-ENFORCED APPEND (INSERT ... ON CONFLICT DO NOTHING /
@@ -1358,9 +1355,7 @@ object TxTable {
     val fresh =
       if (v < 1) batch
       else {
-        val physKey = physOf(colMapOf(spark, table, v), keyCol)
-        val cand = bloomCandidateFiles(spark, table, v, physKey,
-          batch.select(keyCol))
+        val cand = bloomCandidateFiles(spark, table, v, keyCol, batch.select(keyCol))
         if (cand.isEmpty) batch
         else {
           val existing = snapshotRead(spark, table, v, cand)
@@ -1406,7 +1401,7 @@ object TxTable {
       s"TxTable.deleteKeysMor: keys must be a single-column frame, got " +
       keys.columns.mkString(", "))
     val physKey = physOf(colMapOf(spark, table, v), keyCol)
-    val candidates = bloomCandidateFiles(spark, table, v, physKey, keys)
+    val candidates = bloomCandidateFiles(spark, table, v, keyCol, keys)
     if (candidates.isEmpty) return (v, 0L)
     val cand = morFilter(spark, table, v, rawRead(spark, table, v, candidates))
     val dk = keys.toDF("_graft_dk")
@@ -1469,7 +1464,7 @@ object TxTable {
   /** Row-level DELETE, MERGE-ON-READ via DELETION VECTORS (the
     * Delta/Iceberg deletion-vector shape): ZERO data files are
     * rewritten — the delete writes a sidecar of (data-file, row
-    * ORDINAL) pairs for the rows with `lo ≤ col ≤ hi`, and every
+    * ORDINAL) pairs for the rows where `predicate` is TRUE, and every
     * snapshot read anti-joins the sidecar before projecting. The
     * write-amplification asymmetry vs [[deleteWhere]] (copy-on-write):
     * a point delete on a 100 TB table costs one stats-pruned candidate
@@ -1486,16 +1481,12 @@ object TxTable {
     * @return (version, nDeletedRows) — the current version with 0 when
     *         no candidate row matches (Delta's no-op rule)
     */
-  def deleteWherePos(spark: SparkSession, table: String, colName: String,
-                     lo: Double, hi: Double): (Int, Long) = {
+  def deleteWherePos(spark: SparkSession, table: String, predicate: Column): (Int, Long) = {
     val v = currentVersion(spark, table)
     require(v >= 1, s"TxTable: cannot delete from non-existent table $table")
-    val phys = physOf(colMapOf(spark, table, v), colName)
-    val touch = prunedFiles(spark, table, v, colName, lo, hi)
-    if (touch.isEmpty) return (v, 0L)
-    publishSidecar(spark, table, v,
-      morFilter(spark, table, v, rawRead(spark, table, v, touch))
-        .filter(col(phys) >= lo && col(phys) <= hi), None)
+    matched(spark, table, v, predicate, Nil).fold((v, 0L)) { case (_, rows, hit, _) =>
+      publishSidecar(spark, table, v, rows.filter(hit), None)
+    }
   }
 
   /** Metadata-only column RENAME (the Delta column-mapping rename):
@@ -2338,10 +2329,10 @@ object TxTable {
     val v = if (version > 0) version else currentVersion(spark, table)
     val pc = partColOf(spark, table, v).getOrElse(
       sys.error(s"TxTable: $table v$v has no partitioned layout — commit with " +
-        "partitionBy, or use readWhereValue (value-set skipping)"))
+        "partitionBy, or use scan (value-set skipping)"))
     require(hiddenSpecOf(pc).isEmpty,
       s"TxTable: $table uses the hidden layout '$pc' — use readHiddenPoint")
-    scan(spark, table, equalsString(logicalOf(colMapOf(spark, table, v), pc), value), v)
+    scan(spark, table, col(logicalOf(colMapOf(spark, table, v), pc)).cast("string") === value, v)
   }
 
   /** PER-PARTITION OPTIMIZE: rewrite ONLY one partition's files into

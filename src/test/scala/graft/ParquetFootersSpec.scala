@@ -67,7 +67,7 @@ class ParquetFootersSpec extends SparkSpec {
     sources.TxTable.deleteKeysMor(spark, table, "k",
       Seq(2L).toDF("k"))                           // key-set delete sidecar
     sources.TxTable.deleteWherePos(spark, table,
-      "x", 35.0, 45.0)                             // range delete sidecar
+      col("x").between(35.0, 45.0))                // range delete sidecar
     val got = canon(sources.TxTable.read(spark, table))
     got shouldBe canon(Seq((1L, "a", 10.0), (3L, "c", 30.0)).toDF("k", "v", "x"))
     sources.TxTable.drop(spark, table)

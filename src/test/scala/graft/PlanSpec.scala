@@ -993,7 +993,7 @@ class PlanSpec extends SparkSpec {
     val df = (1L to 200L).map(i => (i, i * 2.0)).toDF("id", "x")
       .repartitionByRange(2, col("id"))
     TxTable.commit(df, table, statsCols = Seq("id"))
-    TxTable.deleteWherePos(spark, table, "id", 1.0, 20.0)
+    TxTable.deleteWherePos(spark, table, col("id").between(1.0, 20.0))
     val p = TxTable.read(spark, table).queryExecution.executedPlan.toString
     p should include("BroadcastHashJoin")
     p should include("LeftAnti")

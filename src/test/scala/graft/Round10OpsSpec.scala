@@ -73,11 +73,11 @@ class Round10OpsSpec extends SparkSpec {
     vsets.head._3.sorted shouldBe nasty.sorted
     // exact pruning: present values keep the file, absent values prune
     nasty.foreach { v =>
-      TxTable.prunedFilesByValue(spark, table, 1, "cat", v).size shouldBe 1
-      TxTable.readWhereValue(spark, table, "cat", v).count() shouldBe 1L
+      TxTable.keptFiles(spark, table, 1, col("cat") === v).size shouldBe 1
+      TxTable.scan(spark, table, col("cat") === v).count() shouldBe 1L
     }
-    TxTable.prunedFilesByValue(spark, table, 1, "cat", "a") shouldBe empty
-    TxTable.prunedFilesByValue(spark, table, 1, "cat", "b") shouldBe empty
+    TxTable.keptFiles(spark, table, 1, col("cat") === "a") shouldBe empty
+    TxTable.keptFiles(spark, table, 1, col("cat") === "b") shouldBe empty
   }
 
   // --- directive r9#2: the mirror txn marker is a STRING carrying the
@@ -177,7 +177,7 @@ class Round10OpsSpec extends SparkSpec {
     }
     // skipping still exact through the chain: the id=7 probe keeps
     // only files whose bloom admits it, and the read returns the row
-    val kept = TxTable.prunedFilesByKey(spark, table, 11, "id", "7")
+    val kept = TxTable.keptFiles(spark, table, 11, col("id").cast("string") === "7")
     kept should contain (TxTable.filesOf(spark, table, 7).diff(
       TxTable.filesOf(spark, table, 6)).head)
     TxTable.readWhereKey(spark, table, "id", "7").count() shouldBe 1L
@@ -299,7 +299,7 @@ class Round10OpsSpec extends SparkSpec {
       .toDF("id", "x").repartitionByRange(2, col("id"))
     TxTable.commit(df, table, statsCols = Seq("id"))
     val files1 = TxTable.filesOf(spark, table, 1)
-    val (v2, nTouched, nCarried) = TxTable.updateWhere(spark, table, "id", 1.0, 2.0,
+    val (v2, nTouched, nCarried) = TxTable.updateWhere(spark, table, col("id").between(1.0, 2.0),
       Map("x" -> (col("x") * 10)))
     v2 shouldBe 2
     nTouched + nCarried shouldBe files1.size
@@ -317,7 +317,7 @@ class Round10OpsSpec extends SparkSpec {
     val ins = cdc.filter(col("_change") === "insert").count()
     dels shouldBe ins // CoW update preserves row count
     // a predicate pruning to zero candidates is a version-less no-op
-    TxTable.updateWhere(spark, table, "id", 1000.0, 2000.0,
+    TxTable.updateWhere(spark, table, col("id").between(1000.0, 2000.0),
       Map("x" -> lit(0.0)))._1 shouldBe 2
   }
 
@@ -585,9 +585,9 @@ class Round10OpsSpec extends SparkSpec {
     TxTable.read(spark, src).agg(max("id")).head.getLong(0) shouldBe 201L
     // carried stats prune across the table boundary: a range read of
     // the clone keeps only the files that can hold [1, 10]
-    val kept = TxTable.prunedFiles(spark, dst, 2, "id", 1.0, 10.0)
+    val kept = TxTable.keptFiles(spark, dst, 2, col("id").between(1.0, 10.0))
     assert(kept.size < TxTable.filesOf(spark, dst, 2).size)
-    TxTable.readWhere(spark, dst, "id", 1.0, 10.0).count() shouldBe 10L
+    TxTable.scan(spark, dst, col("id").between(1.0, 10.0)).count() shouldBe 10L
   }
 
   test("cloneShallow carries merge-on-read deletes and refuses bad targets") {

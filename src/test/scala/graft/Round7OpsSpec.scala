@@ -307,13 +307,13 @@ class Round7OpsSpec extends SparkSpec {
     TxTable.commit(df, table, statsCols = Seq("k"))
     val allFiles = TxTable.filesOf(spark, table, 1)
     TxTable.statsOf(spark, table, 1).map(_._2).distinct shouldBe Seq("k")
-    val kept = TxTable.prunedFiles(spark, table, 1, "k", 100.0, 200.0)
+    val kept = TxTable.keptFiles(spark, table, 1, col("k").between(100.0, 200.0))
     kept.size should be < allFiles.size // pruning actually happened
-    val got = TxTable.readWhere(spark, table, "k", 100.0, 200.0)
+    val got = TxTable.scan(spark, table, col("k").between(100.0, 200.0))
     canon(got) shouldBe canon(
       TxTable.read(spark, table).filter(col("k") >= 100 && col("k") <= 200))
     // a column without recorded stats never prunes
-    TxTable.prunedFiles(spark, table, 1, "v", 0.0, 1.0).size shouldBe allFiles.size
+    TxTable.keptFiles(spark, table, 1, col("v").between(0.0, 1.0)).size shouldBe allFiles.size
     TxTable.drop(spark, table)
   }
 
@@ -327,9 +327,9 @@ class Round7OpsSpec extends SparkSpec {
     TxTable.commit(part(501, 1001), table, statsCols = Seq("k"))
     val stats = TxTable.statsOf(spark, table, 2)
     stats.map(_._1).toSet shouldBe TxTable.filesOf(spark, table, 2).toSet // every file covered
-    val kept = TxTable.prunedFiles(spark, table, 2, "k", 1.0, 50.0)
+    val kept = TxTable.keptFiles(spark, table, 2, col("k").between(1.0, 50.0))
     kept.size should be < TxTable.filesOf(spark, table, 2).size
-    TxTable.readWhere(spark, table, "k", 1.0, 50.0).count() shouldBe 50L
+    TxTable.scan(spark, table, col("k").between(1.0, 50.0)).count() shouldBe 50L
     TxTable.drop(spark, table)
   }
 
@@ -393,12 +393,12 @@ class Round7OpsSpec extends SparkSpec {
       graft.functions.Layout.zorderLayout(li, "l_orderkey", "l_partkey", 16),
       table, statsCols = Seq("l_orderkey", "l_partkey"))
     val total = TxTable.filesOf(spark, table, 1).size
-    TxTable.prunedFiles(spark, table, 1, "l_orderkey", 1000.0, 3000.0).size should be < total
-    TxTable.prunedFiles(spark, table, 1, "l_partkey", 10.0, 60.0).size should be < total
+    TxTable.keptFiles(spark, table, 1, col("l_orderkey").between(1000.0, 3000.0)).size should be < total
+    TxTable.keptFiles(spark, table, 1, col("l_partkey").between(10.0, 60.0)).size should be < total
     // and the pruned reads stay row-exact on both dims
-    TxTable.readWhere(spark, table, "l_orderkey", 1000.0, 3000.0).count() shouldBe
+    TxTable.scan(spark, table, col("l_orderkey").between(1000.0, 3000.0)).count() shouldBe
       li.filter(col("l_orderkey").between(1000, 3000)).count()
-    TxTable.readWhere(spark, table, "l_partkey", 10.0, 60.0).count() shouldBe
+    TxTable.scan(spark, table, col("l_partkey").between(10.0, 60.0)).count() shouldBe
       li.filter(col("l_partkey").between(10, 60)).count()
     TxTable.drop(spark, table)
   }

@@ -247,7 +247,7 @@ class Round7bOpsSpec extends SparkSpec {
     TxTable.commit(Seq((10L, "x"), (11L, "y")).toDF("id", "s").coalesce(1),
       table, statsCols = Seq("id"))
     val beforeFiles = TxTable.filesOf(spark, table, 2)
-    val (v, nRw, nCar) = TxTable.deleteWhere(spark, table, "id", 1.0, 1.0)
+    val (v, nRw, nCar) = TxTable.deleteWhere(spark, table, col("id").between(1.0, 1.0))
     v shouldBe 3
     nRw shouldBe 1
     nCar shouldBe 1
@@ -271,7 +271,7 @@ class Round7bOpsSpec extends SparkSpec {
     val table = freshTable()
     TxTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1),
       table, statsCols = Seq("id"))
-    val (v, nRw, _) = TxTable.deleteWhere(spark, table, "id", 100.0, 200.0)
+    val (v, nRw, _) = TxTable.deleteWhere(spark, table, col("id").between(100.0, 200.0))
     v shouldBe 1
     nRw shouldBe 0
     TxTable.currentVersion(spark, table) shouldBe 1
@@ -280,7 +280,7 @@ class Round7bOpsSpec extends SparkSpec {
     TxTable.commit(
       Seq((Some(1L), "a"), (None, "n"), (Some(2L), "b")).toDF("id", "s").coalesce(1),
       table = t2, statsCols = Seq("id"))
-    TxTable.deleteWhere(spark, t2, "id", 1.0, 1.0)
+    TxTable.deleteWhere(spark, t2, col("id").between(1.0, 1.0))
     TxTable.read(spark, t2).collect().map(_.getString(1)).sorted shouldBe
       Array("b", "n")
   }
@@ -346,7 +346,7 @@ class Round7bOpsSpec extends SparkSpec {
     TxTable.commit(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "price").coalesce(1),
       table, statsCols = Seq("id"))
     TxTable.commitEvolve(Seq((3L, 30.0, "x")).toDF("id", "price", "tag"), table)
-    TxTable.deleteWhere(spark, table, "id", 2.0, 2.0)
+    TxTable.deleteWhere(spark, table, col("id").between(2.0, 2.0))
     val out = TxTable.read(spark, table)
     out.columns.sorted shouldBe Array("id", "price", "tag")
     out.collect().map(_.getLong(0)).sorted shouldBe Seq(1L, 3L)

@@ -20,7 +20,7 @@ class Round8OpsSpec extends SparkSpec {
     val a = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")
     TxTable.commit(a, table, statsCols = Seq("id")) shouldBe 1
     // range covers every row of every candidate file → zero survivors
-    val (v, rewritten, carried) = TxTable.deleteWhere(spark, table, "id", 0.0, 100.0)
+    val (v, rewritten, carried) = TxTable.deleteWhere(spark, table, col("id").between(0.0, 100.0))
     v shouldBe 2
     carried shouldBe 0
     val empty = TxTable.read(spark, table)
@@ -53,9 +53,9 @@ class Round8OpsSpec extends SparkSpec {
     assert(hi >= (big + 10L).toDouble)
     // a point query at the true min must keep its file and return the
     // row — with inward-rounded stats the file was silently skipped
-    TxTable.prunedFiles(spark, table, 1, "id",
-      big.toDouble, big.toDouble) should not be empty
-    TxTable.readWhere(spark, table, "id", big.toDouble, big.toDouble)
+    TxTable.keptFiles(spark, table, 1,
+      col("id").between(big.toDouble, big.toDouble)) should not be empty
+    TxTable.scan(spark, table, col("id").between(big.toDouble, big.toDouble))
       .collect().map(_.getLong(0)) shouldBe Array(big)
   }
 
@@ -259,7 +259,7 @@ class Round8OpsSpec extends SparkSpec {
     val nFiles = TxTable.filesOf(spark, table, 1).size
     nFiles shouldBe 8
     for (key <- Seq(1L, 77L, 200L)) {
-      val kept = TxTable.prunedFilesByKey(spark, table, 1, "id", key.toString)
+      val kept = TxTable.keptFiles(spark, table, 1, col("id").cast("string") === key.toString)
       kept.size should be >= 1
       val got = TxTable.readWhereKey(spark, table, "id", key.toString).collect()
       got.map(_.getLong(0)).toSeq shouldBe Seq(key)
@@ -268,7 +268,8 @@ class Round8OpsSpec extends SparkSpec {
     // files across a probe set (some probes may false-positive a file,
     // but the total kept must be far below 8 per probe on average)
     val probes = (1001L to 1020L).map(_.toString)
-    val keptTotal = probes.map(k => TxTable.prunedFilesByKey(spark, table, 1, "id", k).size).sum
+    val keptTotal =
+      probes.map(k => TxTable.keptFiles(spark, table, 1, col("id").cast("string") === k).size).sum
     probes.foreach(k => TxTable.readWhereKey(spark, table, "id", k).count() shouldBe 0L)
     assert(keptTotal < probes.size * nFiles / 2,
       s"bloom pruned almost nothing: kept $keptTotal of ${probes.size * nFiles}")

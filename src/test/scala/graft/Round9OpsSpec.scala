@@ -49,9 +49,9 @@ class Round9OpsSpec extends SparkSpec {
       TxTable.readWhereKey(spark, table, "key", key)
         .collect().map(_.getString(2)) shouldBe Array(key)
     }
-    TxTable.prunedFilesByKey(spark, table, 2, "key", "definitely_absent") shouldBe empty
+    TxTable.keptFiles(spark, table, 2, col("key").cast("string") === "definitely_absent") shouldBe empty
     // and the range stats still prune
-    TxTable.readWhere(spark, table, "x", 25.0, 35.0)
+    TxTable.scan(spark, table, col("x").between(25.0, 35.0))
       .collect().map(_.getLong(0)) shouldBe Array(3L)
   }
 
@@ -189,7 +189,7 @@ class Round9OpsSpec extends SparkSpec {
     TxTable.committerOverride = Some(new FailFirst)
     try {
       val e = intercept[RuntimeException] {
-        TxTable.deleteWhere(spark, table, "x", 0.0, 10.0)
+        TxTable.deleteWhere(spark, table, col("x").between(0.0, 10.0))
       }
       e.getMessage should include("conflict")
       TxTable.currentVersion(spark, table) shouldBe 1 // nothing landed
@@ -227,7 +227,7 @@ class Round9OpsSpec extends SparkSpec {
     }
     e.getMessage should include("schema mismatch")
     // stats-pruned reads translate logical→physical
-    TxTable.readWhere(spark, table, "quality", 25.0, 35.0)
+    TxTable.scan(spark, table, col("quality").between(25.0, 35.0))
       .collect().map(_.getLong(0)) shouldBe Array(3L)
     // time travel to v1 shows the ORIGINAL logical schema
     TxTable.readVersion(spark, table, 1).columns shouldBe Array("id", "tag", "score")
@@ -280,26 +280,26 @@ class Round9OpsSpec extends SparkSpec {
       setCols = Seq("src")) shouldBe 2 // sets carry with their files
     // exact pruning: only files recording the probe value are read
     TxTable.filesOf(spark, table, 2).size shouldBe 2
-    TxTable.prunedFilesByValue(spark, table, 2, "src", "web").size shouldBe 1
-    TxTable.prunedFilesByValue(spark, table, 2, "src", "iot").size shouldBe 1
-    TxTable.prunedFilesByValue(spark, table, 2, "src", "nope") shouldBe empty
-    TxTable.readWhereValue(spark, table, "src", "web")
+    TxTable.keptFiles(spark, table, 2, col("src") === "web").size shouldBe 1
+    TxTable.keptFiles(spark, table, 2, col("src") === "iot").size shouldBe 1
+    TxTable.keptFiles(spark, table, 2, col("src") === "nope") shouldBe empty
+    TxTable.scan(spark, table, col("src") === "web")
       .collect().map(_.getLong(0)).sorted shouldBe Array(1L, 2L)
-    TxTable.readWhereValue(spark, table, "src", "iot")
+    TxTable.scan(spark, table, col("src") === "iot")
       .collect().map(_.getLong(0)) shouldBe Array(4L)
-    TxTable.readWhereValue(spark, table, "src", "nope").count() shouldBe 0L
+    TxTable.scan(spark, table, col("src") === "nope").count() shouldBe 0L
     // rename: probes stay LOGICAL, sets live under the frozen physical name
     TxTable.renameColumn(spark, table, "src", "channel") shouldBe 3
-    TxTable.readWhereValue(spark, table, "channel", "app")
+    TxTable.scan(spark, table, col("channel") === "app")
       .collect().map(_.getLong(0)) shouldBe Array(3L)
-    TxTable.prunedFilesByValue(spark, table, 3, "channel", "app").size shouldBe 1
+    TxTable.keptFiles(spark, table, 3, col("channel") === "app").size shouldBe 1
     // a file over the cardinality cap records nothing — always kept
     val wide = freshTable("vsetwide")
     val many = (1 to (TxTable.VsetMaxValues + 5)).map(i => (i.toLong, s"v$i"))
       .toDF("id", "src").coalesce(1)
     TxTable.commit(many, wide, setCols = Seq("src")) shouldBe 1
     TxTable.valueSetsOf(spark, wide, 1) shouldBe empty
-    TxTable.prunedFilesByValue(spark, wide, 1, "src", "anything") shouldBe
+    TxTable.keptFiles(spark, wide, 1, col("src") === "anything") shouldBe
       TxTable.filesOf(spark, wide, 1) // conservative: kept
   }
 
@@ -352,7 +352,7 @@ class Round9OpsSpec extends SparkSpec {
     TxTable.commit((1L to 6L).map(i => (i, s"a$i")).toDF("id", "s"), src,
       statsCols = Seq("id")) shouldBe 1
     TxTable.commit(Seq((7L, "a7")).toDF("id", "s"), src) shouldBe 2
-    TxTable.deleteWherePos(spark, src, "id", 2.0, 3.0)._2 shouldBe 2L // v3
+    TxTable.deleteWherePos(spark, src, col("id").between(2.0, 3.0))._2 shouldBe 2L // v3
     TxTable.commit(Seq((2L, "re2")).toDF("id", "s"), src) shouldBe 4 // re-insert a deleted key
     TxChangesStream.pipeToMirror(spark, src, dst, "id", "mir_spec", ckpt,
       maxVersionsPerTrigger = Some(1), bloomCols = Seq("id"))

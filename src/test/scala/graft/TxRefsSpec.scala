@@ -53,7 +53,7 @@ class TxRefsSpec extends SparkSpec {
     files.count(!_.startsWith("/")) shouldBe 1
     files.count(_.startsWith("/")) shouldBe 1
     // carried stats still prune on the fast-forwarded snapshot
-    TxTable.readWhere(spark, table, "id", 2.0, 2.0).count() shouldBe 1L
+    TxTable.scan(spark, table, col("id").between(2.0, 2.0)).count() shouldBe 1L
   }
 
   test("fastForward refuses a diverged main and carries MoR deletes when legal") {

@@ -463,7 +463,8 @@ class TxTableSpec extends SparkSpec {
     val k = "k\"q"
     TxTable.commit(Seq((1L, "alpha")).toDF("id", k).coalesce(1), table, bloomCols = Seq(k))
     TxTable.commit(Seq((2L, "beta")).toDF("id", k).coalesce(1), table, bloomCols = Seq(k))
-    TxTable.prunedFilesByKey(spark, table, 2, k, "alpha") shouldBe TxTable.filesOf(spark, table, 1)
+    TxTable.keptFiles(spark, table, 2, col(k).cast("string") === "alpha") shouldBe
+      TxTable.filesOf(spark, table, 1)
     TxTable.readWhereKey(spark, table, k, "alpha").collect().map(_.getLong(0)) shouldBe Array(1L)
   }
 
@@ -484,7 +485,7 @@ class TxTableSpec extends SparkSpec {
     Seq(Seq((1L, 1.0), (2L, inf)), Seq((3L, ninf), (4L, 0.0)), Seq((5L, Double.NaN), (6L, 5.0)))
       .foreach(rows => TxTable.commit(rows.toDF("id", "x").coalesce(1), table, statsCols = Seq("x")))
     def ids(lo: Double, hi: Double): Seq[Long] =
-      TxTable.readWhere(spark, table, "x", lo, hi).collect().map(_.getLong(0)).sorted.toSeq
+      TxTable.scan(spark, table, col("x").between(lo, hi)).collect().map(_.getLong(0)).sorted.toSeq
     ids(1e300, inf) shouldBe Seq(2L)
     ids(ninf, -1e300) shouldBe Seq(3L)
     ids(4.0, 6.0) shouldBe Seq(6L)
@@ -568,19 +569,19 @@ class TxTableSpec extends SparkSpec {
         setCols = Seq("cat"), nullCols = Seq("x"), countRows = true)
     }
     TxTable.renameColumn(spark, flat, "cat", "kind") shouldBe 4
-    TxTable.prunedFilesByKey(spark, flat, 4, "id", "99") shouldBe empty
+    TxTable.keptFiles(spark, flat, 4, col("id").cast("string") === "99") shouldBe empty
     val part = freshTable()
     TxTable.commit(Seq((1L, "A", 1.0), (2L, "B", 2.0), (3L, "a:b", 3.0)).toDF("id", "cat", "price"),
       part, partitionBy = Some("cat"), statsCols = Seq("id"))
     // an escaped directory name still matches its value
     TxTable.readPartition(spark, part, "a:b").select("id").collect().map(_.getLong(0)) shouldBe Array(3L)
     Seq(
-      ("value", flat, TxTable.readWhereValue(spark, flat, "kind", "c9")),
+      ("value", flat, TxTable.scan(spark, flat, col("kind") === "c9")),
       ("key", flat, TxTable.readWhereKey(spark, flat, "id", "99")),
-      ("range", flat, TxTable.readWhere(spark, flat, "id", 500.0, 600.0)),
-      ("null", flat, TxTable.readWhereNull(spark, flat, "x", wantNull = true)),
+      ("range", flat, TxTable.scan(spark, flat, col("id").between(500.0, 600.0))),
+      ("null", flat, TxTable.scan(spark, flat, col("x").isNull)),
       ("partition", part, TxTable.readPartition(spark, part, "Z")),
-      ("partitioned range", part, TxTable.readWhere(spark, part, "id", 500.0, 600.0))
+      ("partitioned range", part, TxTable.scan(spark, part, col("id").between(500.0, 600.0)))
     ).foreach { case (probe, table, df) =>
       withClue(s"$probe probe: ") {
         val snapshot = TxTable.read(spark, table)
@@ -602,8 +603,8 @@ class TxTableSpec extends SparkSpec {
           countRows = true)
     }
     val files = TxTable.filesOf(spark, table, 4)
-    val byValue = TxTable.prunedFilesByValue(spark, table, 4, "k", "x")
-    val byNull = TxTable.prunedFilesByNull(spark, table, 4, "v", wantNull = true)
+    val byValue = TxTable.keptFiles(spark, table, 4, col("k") === "x")
+    val byNull = TxTable.keptFiles(spark, table, 4, col("v").isNull)
     byValue shouldBe Seq(files(0), files(1))
     byNull shouldBe Seq(files(0), files(2))
     val both = col("k") === "x" && col("v").isNull
@@ -623,13 +624,153 @@ class TxTableSpec extends SparkSpec {
       }
   }
 
+  test("IN and OR prune by every stat kind; an unknown OR branch keeps every file; scan equals the full filter") {
+    val table = freshTable()
+    // file i: ids 10i..10i+9, one category, a bloomed per-row tag, NULL v on even ids of files 0 and 2
+    (0 until 4).foreach { i =>
+      TxTable.commit((10L * i until 10L * i + 10).map(id =>
+          (id, Seq("a", "b", "c", "d")(i), s"t$id", if (i % 2 == 0 && id % 2 == 0) None else Some(1.0)))
+        .toDF("id", "k", "tag", "v").coalesce(1), table, statsCols = Seq("id"), setCols = Seq("k"),
+        bloomCols = Seq("tag"), nullCols = Seq("v"), countRows = true)
+    }
+    val files = TxTable.filesOf(spark, table, 4)
+    val nonEmpty = udf((s: String) => s.nonEmpty)
+    Seq(
+      col("k").isin("a", "c") -> Seq(0, 2),             // value sets
+      col("tag").isin("t5", "t33") -> Seq(0, 3),        // blooms
+      col("id").isin(3L, 25L) -> Seq(0, 2),             // min/max
+      (col("id") === 15L) -> Seq(1),                    // min/max, one probe
+      (col("k") === "b" || col("v").isNull) -> Seq(0, 1, 2), // value set OR null count
+      (col("k") === "a" || nonEmpty(col("k"))) -> Seq(0, 1, 2, 3)
+    ).foreach { case (pred, want) =>
+      withClue(s"$pred: ") {
+        TxTable.keptFiles(spark, table, 4, pred) shouldBe want.map(files)
+        TxTable.scan(spark, table, pred).select("id").collect().map(_.getLong(0)).sorted shouldBe
+          TxTable.read(spark, table).filter(pred).select("id").collect().map(_.getLong(0)).sorted
+      }
+    }
+  }
+
+  /** Runs `write` with every data file of `table` outside `kept` moved
+    * aside, so a writer that opens one fails.
+    */
+  private def withOnly[T](table: String, kept: Seq[String])(write: => T): T = {
+    import java.nio.file.{Files, Path, Paths}
+    def aside(p: Path): Path = p.resolveSibling(p.getFileName.toString + ".aside")
+    val away = TxTable.filesOf(spark, table, TxTable.currentVersion(spark, table))
+      .filterNot(kept.toSet).map(rel => Paths.get(s"$table/$rel"))
+    away.foreach(p => Files.move(p, aside(p)))
+    try write finally away.foreach(p => Files.move(aside(p), p))
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("the predicate writers delete and update by k = 'x' and by v IS NULL, touching only the files keptFiles keeps") {
+    def seed(): String = {
+      val table = freshTable()
+      Seq(Seq((0L, Some("x"), None), (1L, None, Some(1.0))),
+          Seq((2L, Some("x"), Some(2.0)), (3L, Some("x"), Some(3.0))),
+          Seq((4L, Some("y"), None), (5L, None, Some(5.0))),
+          Seq((6L, Some("y"), Some(6.0)), (7L, Some("y"), Some(7.0)))).foreach { rows =>
+        TxTable.commit(rows.toDF("id", "k", "v").coalesce(1), table, setCols = Seq("k"),
+          bloomCols = Seq("k"), nullCols = Seq("v"), countRows = true)
+      }
+      table
+    }
+    // (predicate, rows it leaves undecided: the NULL-k rows for k = 'x')
+    Seq((col("k") === "x") -> 2, col("v").isNull -> 0).foreach { case (pred, nUndecided) =>
+      val hit = coalesce(pred, lit(false))
+      Seq[(String, String => Any, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        ("deleteWhere", TxTable.deleteWhere(spark, _, pred), _.filter(!hit)),
+        ("updateWhere", TxTable.updateWhere(spark, _, pred, Map("v" -> lit(-1.0))),
+          _.withColumn("v", when(hit, lit(-1.0)).otherwise(col("v")))),
+        ("deleteWherePos", TxTable.deleteWherePos(spark, _, pred), _.filter(!hit))
+      ).foreach { case (writer, write, reference) =>
+        withClue(s"$writer by $pred: ") {
+          val table = seed()
+          val all = TxTable.filesOf(spark, table, 4)
+          val kept = TxTable.keptFiles(spark, table, 4, pred)
+          kept.size should be < all.size
+          val before = TxTable.read(spark, table)
+          val want = sortedRows(reference(before))
+          val undecided = sortedRows(before.filter(pred.isNull))
+          withOnly(table, kept)(write(table))
+          TxTable.currentVersion(spark, table) shouldBe 5
+          val touched =
+            if (writer == "deleteWherePos") spark.read
+              .parquet(TxTable.posDeletesOf(spark, table, 5).map(rel => s"$table/$rel"): _*)
+              .select("_gf").distinct().collect().map(_.getString(0)).sorted.toSeq
+            else all.diff(TxTable.filesOf(spark, table, 5)).map(_.split('/').last)
+          touched shouldBe kept.map(_.split('/').last).sorted
+          sortedRows(TxTable.read(spark, table)) shouldBe want
+          // rows where the predicate is NULL are kept, unchanged
+          sortedRows(TxTable.read(spark, table).filter(pred.isNull)) shouldBe undecided
+          undecided.size shouldBe nUndecided
+        }
+      }
+    }
+  }
+
+  test("the predicate writers take logical names on a column-mapped and on an identity-partitioned table") {
+    val mapped = freshTable()
+    Seq(Seq((1L, "x", Some(1.0)), (2L, "y", None)), Seq((3L, "y", Some(3.0)), (4L, "y", Some(4.0))))
+      .foreach(rows => TxTable.commit(rows.toDF("id", "k", "v").coalesce(1), mapped,
+        statsCols = Seq("id"), setCols = Seq("k"), nullCols = Seq("v"), countRows = true))
+    // logical 'kind' is physical k, and logical 'k' is physical v
+    TxTable.renameColumn(spark, mapped, "k", "kind") shouldBe 3
+    TxTable.renameColumn(spark, mapped, "v", "k") shouldBe 4
+    TxTable.keptFiles(spark, mapped, 4, col("kind") === "x").size shouldBe 1
+    TxTable.keptFiles(spark, mapped, 4, col("k").isNull).size shouldBe 1
+    TxTable.deleteWherePos(spark, mapped, col("k").isNull) shouldBe ((5, 1L))
+    TxTable.updateWhere(spark, mapped, col("kind") === "y", Map("k" -> col("k") * 10)) shouldBe ((6, 2, 0))
+    val keptX = TxTable.keptFiles(spark, mapped, 6, col("kind") === "x")
+    TxTable.deleteWhere(spark, mapped, col("kind") === "x")._2 shouldBe keptX.size
+    TxTable.read(spark, mapped).columns.toSeq shouldBe Seq("id", "kind", "k")
+    sortedRows(TxTable.read(spark, mapped)) shouldBe Seq("[3,y,30.0]", "[4,y,40.0]")
+
+    val part = freshTable()
+    TxTable.commit(Seq((1L, "eu", 1.0), (2L, "eu", 2.0), (3L, "us", 3.0), (4L, "us", 4.0), (5L, "ap", 5.0))
+      .toDF("id", "region", "x").coalesce(1), part, partitionBy = Some("region"), statsCols = Seq("id"))
+    TxTable.filesOf(spark, part, 1).size shouldBe 3
+    TxTable.deleteWhere(spark, part, col("region") === "eu" && col("id") === 2L) shouldBe ((2, 1, 2))
+    // every assignment reads the row as it was before the update
+    TxTable.updateWhere(spark, part, col("region") === "us",
+      Map("id" -> col("id") * 10, "x" -> (col("x") + col("id") + 100))) shouldBe ((3, 1, 2))
+    TxTable.deleteWherePos(spark, part, col("region").isin("ap")) shouldBe ((4, 1L))
+    TxTable.read(spark, part).columns.toSeq shouldBe Seq("id", "region", "x")
+    sortedRows(TxTable.read(spark, part)) shouldBe Seq("[1,eu,1.0]", "[30,us,106.0]", "[40,us,108.0]")
+  }
+
+  test("a writer predicate naming a missing column fails with Spark's AnalysisException before anything is written") {
+    val table = freshTable()
+    TxTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1), table, statsCols = Seq("id"))
+    // 's' stays the physical name, but no logical column is called that any more
+    TxTable.renameColumn(spark, table, "s", "label") shouldBe 2
+    import scala.jdk.CollectionConverters._
+    def dataFiles: Seq[String] = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$table/data"))
+      .iterator().asScala.map(_.toString).toSeq.sorted
+    val files0 = dataFiles
+    Seq[() => Any](
+      () => TxTable.deleteWhere(spark, table, col("s") === "a"),
+      () => TxTable.updateWhere(spark, table, col("nope") === 1, Map("id" -> lit(0L))),
+      () => TxTable.updateWhere(spark, table, col("id") === 1L, Map("label" -> upper(col("s")))),
+      () => TxTable.deleteWherePos(spark, table, col("nope").isNull)
+    ).foreach { write =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](write())
+      e.getCondition should startWith("UNRESOLVED_COLUMN")
+      TxTable.currentVersion(spark, table) shouldBe 2
+      dataFiles shouldBe files0
+    }
+  }
+
   test("a range on a decimal column, whose footer stats are unscaled, never skips a file") {
     val table = freshTable()
     Seq("12.34", "56.78").foreach(d => TxTable.commit(Seq((1L, d)).toDF("id", "d")
       .select(col("id"), col("d").cast("decimal(7,2)").as("d")).coalesce(1), table,
       statsCols = Seq("d")))
-    TxTable.prunedFiles(spark, table, 2, "d", 12.0, 13.0).size shouldBe 2
-    TxTable.deleteWhere(spark, table, "d", 12.0, 13.0)._2 shouldBe 2
+    TxTable.keptFiles(spark, table, 2, col("d").between(12.0, 13.0)).size shouldBe 2
+    TxTable.deleteWhere(spark, table, col("d").between(12.0, 13.0))._2 shouldBe 2
     TxTable.read(spark, table).select(col("d").cast("string")).collect().map(_.getString(0)) shouldBe
       Array("56.78")
   }
@@ -693,9 +834,10 @@ class TxTableSpec extends SparkSpec {
       .toDF("event_id", "seq", "op", "user_id", "value"), "event_id", "seq", "op")
     check("mergeInto")
     TxTable.commit(rows(31L to 32L), flat)
-    TxTable.deleteWhere(spark, flat, "event_id", 31.0, 31.0)._2 shouldBe 1
+    TxTable.deleteWhere(spark, flat, col("event_id").between(31.0, 31.0))._2 shouldBe 1
     check("deleteWhere")
-    TxTable.updateWhere(spark, flat, "event_id", 32.0, 32.0, Map("value" -> lit(1.0)))._2 shouldBe 1
+    TxTable.updateWhere(spark, flat, col("event_id").between(32.0, 32.0),
+      Map("value" -> lit(1.0)))._2 shouldBe 1
     check("updateWhere")
     TxTable.compactSmall(spark, flat, minBytes = 1L << 30)._2 should be >= 2
     check("compactSmall")
@@ -710,8 +852,8 @@ class TxTableSpec extends SparkSpec {
     val v = TxTable.currentVersion(spark, flat)
     val files = TxTable.filesOf(spark, flat, v)
     files.size shouldBe 2
-    TxTable.prunedFiles(spark, flat, v, "key", 100.0, 101.0) shouldBe files.takeRight(1)
-    TxTable.prunedFilesByKey(spark, flat, v, "key", "100") shouldBe files.takeRight(1)
+    TxTable.keptFiles(spark, flat, v, col("key").between(100.0, 101.0)) shouldBe files.takeRight(1)
+    TxTable.keptFiles(spark, flat, v, col("key").cast("string") === "100") shouldBe files.takeRight(1)
     TxTable.readWhereKey(spark, flat, "key", "100").count() shouldBe 1L
     TxTable.commit(rows(200L to 201L).withColumnRenamed("event_id", "key").withColumn("note", lit("n")),
       flat)
@@ -740,7 +882,8 @@ class TxTableSpec extends SparkSpec {
     TxTable.commit(prows("b", 13L to 14L), part)
     TxTable.compactPartition(spark, part, "b")._2 shouldBe 2
     pcheck("compactPartition")
-    TxTable.prunedFilesByKey(spark, part, TxTable.currentVersion(spark, part), "id", "13").size shouldBe 1
+    TxTable.keptFiles(spark, part, TxTable.currentVersion(spark, part),
+      col("id").cast("string") === "13").size shouldBe 1
   }
 
   test("overwritePartition replaces one partition atomically and refuses stray rows") {
@@ -791,11 +934,11 @@ class TxTableSpec extends SparkSpec {
     TxTable.commit(Seq((3L, Some(3.0)), (4L, None)).toDF("id", "x").coalesce(1),
       table, nullCols = Seq("x"), countRows = true)
     val v = TxTable.currentVersion(spark, table)
-    TxTable.prunedFilesByNull(spark, table, v, "x", true).size shouldBe 3 // v1,v3,v4
-    TxTable.prunedFilesByNull(spark, table, v, "x", false).size shouldBe 3 // v1,v2,v4
-    TxTable.readWhereNull(spark, table, "x", true).select("id").collect()
+    TxTable.keptFiles(spark, table, v, col("x").isNull).size shouldBe 3 // v1,v3,v4
+    TxTable.keptFiles(spark, table, v, col("x").isNotNull).size shouldBe 3 // v1,v2,v4
+    TxTable.scan(spark, table, col("x").isNull).select("id").collect()
       .map(_.getLong(0)).sorted shouldBe Seq(2L, 4L)
-    TxTable.readWhereNull(spark, table, "x", false).select("id").collect()
+    TxTable.scan(spark, table, col("x").isNotNull).select("id").collect()
       .map(_.getLong(0)).sorted shouldBe Seq(1L, 3L, 5L)
   }
 
@@ -808,8 +951,8 @@ class TxTableSpec extends SparkSpec {
     val clone = freshTable()
     TxTable.cloneShallow(spark, table, clone)
     // the clone's borrowed files keep their null stats → same pruning
-    TxTable.prunedFilesByNull(spark, clone, 1, "x", true).size shouldBe 1
-    TxTable.readWhereNull(spark, clone, "x", false).count() shouldBe 1L
+    TxTable.keptFiles(spark, clone, 1, col("x").isNull).size shouldBe 1
+    TxTable.scan(spark, clone, col("x").isNotNull).count() shouldBe 1L
   }
 
   // --- merge-on-read deletes: every MoR delete records (file, row
@@ -826,10 +969,10 @@ class TxTableSpec extends SparkSpec {
     TxTable.commit(df, cowT, statsCols = Seq("id")) shouldBe 1
     val filesBefore = TxTable.filesOf(spark, morT, 1)
     // MoR delete of a point range; CoW of the same range on the twin
-    val (v2, nDel) = TxTable.deleteWherePos(spark, morT, "id", 100.0, 140.0)
+    val (v2, nDel) = TxTable.deleteWherePos(spark, morT, col("id").between(100.0, 140.0))
     v2 shouldBe 2
     nDel shouldBe 41L
-    TxTable.deleteWhere(spark, cowT, "id", 100.0, 140.0)._1 shouldBe 2
+    TxTable.deleteWhere(spark, cowT, col("id").between(100.0, 140.0))._1 shouldBe 2
     // ZERO data files rewritten: the manifest carries v1's files verbatim
     TxTable.filesOf(spark, morT, 2) shouldBe filesBefore
     TxTable.posDeletesOf(spark, morT, 2) should not be empty
@@ -839,10 +982,10 @@ class TxTableSpec extends SparkSpec {
     // snapshot isolation: v1 still sees every row
     TxTable.readVersion(spark, morT, 1).count() shouldBe 400L
     // pruned readers go through the deletion vectors too
-    TxTable.readWhere(spark, morT, "id", 90.0, 150.0)
+    TxTable.scan(spark, morT, col("id").between(90.0, 150.0))
       .collect().map(_.getLong(0)).sorted shouldBe ((90L to 99L) ++ (141L to 150L))
     // a second MoR delete stacks; already-deleted rows are NOT re-recorded
-    val (v3, nDel2) = TxTable.deleteWherePos(spark, morT, "id", 120.0, 160.0)
+    val (v3, nDel2) = TxTable.deleteWherePos(spark, morT, col("id").between(120.0, 160.0))
     v3 shouldBe 3
     nDel2 shouldBe 20L // 141..160 — 120..140 were already deleted
     TxTable.read(spark, morT).count() shouldBe 400L - 61L
@@ -880,7 +1023,7 @@ class TxTableSpec extends SparkSpec {
     canon(TxTable.read(spark, table)) shouldBe
       canon(Seq((10.0, "a"), (30.0, "c")).toDF("x", "s"))
     // range delete matched on x, then x dropped the same way
-    TxTable.deleteWherePos(spark, table, "x", 25.0, 35.0)._2 shouldBe 1L
+    TxTable.deleteWherePos(spark, table, col("x").between(25.0, 35.0))._2 shouldBe 1L
     TxTable.dropColumn(spark, table, "x") shouldBe 5
     canon(TxTable.read(spark, table)) shouldBe canon(Seq("a").toDF("s"))
     // time travel still sees the pre-delete rows under their old columns
@@ -895,11 +1038,11 @@ class TxTableSpec extends SparkSpec {
     TxTable.commit(df, table, statsCols = Seq("x")) shouldBe 1
     TxTable.commit(df, cowT, statsCols = Seq("x")) shouldBe 1
     // a range outside every file's stats is a no-op at the current version
-    TxTable.deleteWherePos(spark, table, "x", 1e6, 2e6) shouldBe ((1, 0L))
+    TxTable.deleteWherePos(spark, table, col("x").between(1e6, 2e6)) shouldBe ((1, 0L))
     TxTable.currentVersion(spark, table) shouldBe 1
     // the matched range covers the NULL-keyed row: it is deleted
-    TxTable.deleteWherePos(spark, table, "x", 15.0, 25.0) shouldBe ((2, 1L))
-    TxTable.deleteWhere(spark, cowT, "x", 15.0, 25.0)._1 shouldBe 2
+    TxTable.deleteWherePos(spark, table, col("x").between(15.0, 25.0)) shouldBe ((2, 1L))
+    TxTable.deleteWhere(spark, cowT, col("x").between(15.0, 25.0))._1 shouldBe 2
     canon(TxTable.read(spark, table)) shouldBe canon(TxTable.read(spark, cowT))
     TxTable.read(spark, table).collect().map(_.getLong(0)).sorted shouldBe Array(1L, 3L)
   }
@@ -915,17 +1058,17 @@ class TxTableSpec extends SparkSpec {
     val df = (1L to 100L).map(i => (i, s"s$i")).toDF("id", "s")
       .repartition(4, c("id"))
     Seq(cowT, posT).foreach(t => TxTable.commit(df, t, statsCols = Seq("id")))
-    val (cv0, _, _) = TxTable.deleteWhere(spark, cowT, "id", 10.0, 40.0)
-    val (pv, pn) = TxTable.deleteWherePos(spark, posT, "id", 10.0, 40.0)
+    val (cv0, _, _) = TxTable.deleteWhere(spark, cowT, col("id").between(10.0, 40.0))
+    val (pv, pn) = TxTable.deleteWherePos(spark, posT, col("id").between(10.0, 40.0))
     pn shouldBe 31L
     // zero files rewritten by the positional form
     TxTable.filesOf(spark, posT, pv) shouldBe TxTable.filesOf(spark, posT, 1)
     canon(TxTable.readVersion(spark, posT, pv)) shouldBe
       canon(TxTable.readVersion(spark, cowT, cv0))
     // already-deleted rows never re-record (idempotent no-op)
-    TxTable.deleteWherePos(spark, posT, "id", 10.0, 40.0)._2 shouldBe 0L
+    TxTable.deleteWherePos(spark, posT, col("id").between(10.0, 40.0))._2 shouldBe 0L
     // a second, overlapping positional delete stacks correctly
-    TxTable.deleteWherePos(spark, posT, "id", 30.0, 50.0)._2 shouldBe 10L
+    TxTable.deleteWherePos(spark, posT, col("id").between(30.0, 50.0))._2 shouldBe 10L
     TxTable.read(spark, posT).count() shouldBe 59L
     // CDC: the posdelete version replays as exactly the deleted rows
     val cdc = TxTable.changes(spark, posT, 1, 2)
@@ -959,7 +1102,7 @@ class TxTableSpec extends SparkSpec {
       table, countRows = true)
     TxTable.metaCount(spark, table) shouldBe 600L
     // positional delete: each vector pair decrements exactly one row
-    val (_, nDel) = TxTable.deleteWherePos(spark, table, "id", 100.0, 250.0)
+    val (_, nDel) = TxTable.deleteWherePos(spark, table, col("id").between(100.0, 250.0))
     nDel shouldBe 151L
     TxTable.metaCount(spark, table) shouldBe 449L
     TxTable.read(spark, table).count() shouldBe 449L
