@@ -34,8 +34,8 @@ object Eval {
     * positive outranks a random negative, ties counted half. This is
     * the per-group, [0,1]-normalized form of [[Profile.mannWhitneyU]]
     * and shares its half-unit integer rank arithmetic: per distinct
-    * score, twice-the-average-tie-rank is the exact integer
-    * 2·cumBefore + t + 1, so 2·R⁺ and 2·U⁺ = 2·R⁺ − n⁺(n⁺+1) are
+    * non-NULL score, twice-the-average-tie-rank is the exact integer
+    * [[Ranks.midRank2]], so 2·R⁺ and 2·U⁺ = 2·R⁺ − n⁺(n⁺+1) are
     * exact (DECIMAL(38,0) against overflow), and
     * auc = 2U⁺/(2·2·n⁺·n⁻)… i.e. u2/(2·n⁺·n⁻) evaluates once in
     * doubles, rounded at 1e-9. Groups missing a class emit NULL auc.
@@ -56,12 +56,10 @@ object Eval {
       .groupBy(col("_g"), col("_v"))
       .agg(count(when(col("_p"), 1)).as("_cp"),
            count(when(!col("_p"), 1)).as("_cn"))
-    val w = Window.partitionBy(col("_g")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     val t = col("_cp") + col("_cn")
-    val avgRank2 = lit(2L) * coalesce(sum(t).over(w), lit(0L)) + t + 1L
-    val agg = hist
-      .withColumn("_r2p", (col("_cp").cast("decimal(19,0)") * avgRank2).cast("decimal(38,0)"))
+    val agg = Ranks.running(hist, Seq("_g"), Seq(col("_v")), Seq("_cum" -> t))
+      .withColumn("_r2p", (col("_cp").cast("decimal(19,0)")
+        * Ranks.midRank2(col("_cum"), t)).cast("decimal(38,0)"))
       .groupBy(col("_g"))
       .agg(sum("_cp").as("n_pos"), sum("_cn").as("n_neg"),
            sum("_r2p").cast("decimal(38,0)").as("_r2sum"))
@@ -323,11 +321,8 @@ object Eval {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"), count(when(col("_p"), 1)).as("n_pos"),
            max(col("_n")).as("_nt"), max(col("_npos")).as("_npt"))
-    val wc = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bucketed
-      .withColumn("_cn", sum(col("n")).over(wc))
-      .withColumn("_cp", sum(col("n_pos")).over(wc))
+    Ranks.running(bucketed, Nil, Seq(col("bucket")),
+        Seq("_cn" -> col("n"), "_cp" -> col("n_pos")))
       .select(col("bucket"), col("n"), col("n_pos"),
         round(d(col("n_pos")) / d(col("n")), 9).as("rate"),
         when(col("_npt") > 0,
@@ -383,12 +378,9 @@ object Eval {
           col("_g").cast("string"), col("_kn").cast("string"))).cast("decimal(38,0)"))
         .otherwise(col("_sy0")))
       .drop("_kn", "_sy0")
-    val wCum = Window.partitionBy("_g").orderBy("_x")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pref = guarded
-      .withColumn("_i", row_number().over(Window.partitionBy("_g").orderBy("_x")))
-      .withColumn("_s", sum(col("_sy")).over(wCum))
-      .withColumn("_cw", sum(col("_w")).over(wCum))
+    // _i = the cell's 1-based position in x order (x is unique per group)
+    val pref = Ranks.running(guarded, Seq("_g"), Seq(col("_x")),
+      Seq("_i" -> lit(1L), "_s" -> col("_sy"), "_cw" -> col("_w")))
     val lft = pref.select(col("_g"), col("_i").as("_j"),
       (col("_s") - col("_sy")).as("_sjm"), (col("_cw") - col("_w")).as("_wjm"))
     val rgt = pref.select(col("_g"), col("_i").as("_k"),
@@ -481,16 +473,12 @@ object Eval {
       .withColumn("_mean",
         (col("_sv").cast("double") / col("_sm").cast("double")) / unitScale.toDouble)
     // exact rank selection over the B replicate means per group
-    val wc = Window.partitionBy(col("_g")).orderBy(col("_mean"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wt = Window.partitionBy(col("_g"))
-    val ranked = means
-      .withColumn("_cum", count(lit(1)).over(wc))
-      .withColumn("_nb", count(lit(1)).over(wt))
-    val lo = ranked.filter(col("_cum") * lit(2L * alphaDen) >= col("_nb") * alphaNum)
-      .groupBy(col("_g")).agg(min(col("_mean")).as("_lo"))
-    val hi = ranked.filter(col("_cum") * lit(2L * alphaDen) >= col("_nb") * (2L * alphaDen - alphaNum))
-      .groupBy(col("_g")).agg(min(col("_mean")).as("_hi"))
+    val ranked = Ranks.running(means, Seq("_g"), Seq(col("_mean")),
+      Seq("_cum" -> lit(1L)), totals = Seq("_nb" -> lit(1L)))
+    def ciAt(num: Long, name: String) = ranked.groupBy(col("_g"))
+      .agg(Ranks.pick(col("_mean"), col("_cum"), col("_nb"), num, 2L * alphaDen).as(name))
+    val lo = ciAt(alphaNum, "_lo")
+    val hi = ciAt(2L * alphaDen - alphaNum, "_hi")
     val overall = base.groupBy(col("_g"))
       .agg(count(lit(1)).as("n"), sum(col("_v").cast("decimal(38,0)")).as("_s"))
       .withColumn("mean",
@@ -570,11 +558,8 @@ object Eval {
       .groupBy(col("_g"), col("_v"))
       .agg(count(when(col("_p"), 1)).as("_cp"),
            count(when(!col("_p"), 1)).as("_cn"))
-    val w = Window.partitionBy(col("_g")).orderBy(col("_v").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist
-      .withColumn("_ctp", sum(col("_cp")).over(w))
-      .withColumn("_cnn", sum(col("_cp") + col("_cn")).over(w))
+    Ranks.running(hist, Seq("_g"), Seq(col("_v").desc),
+        Seq("_ctp" -> col("_cp"), "_cnn" -> (col("_cp") + col("_cn"))))
       .withColumn("_term",
         (d(col("_cp")) * (d(col("_ctp")) / d(col("_cnn")))).cast("decimal(20,9)"))
       .groupBy(col("_g"))
@@ -794,7 +779,7 @@ object Eval {
                   unitScale: Long = 1000000L): DataFrame = {
     val q = df.select(col(groupCol).cast("string").as("_g"),
       floor(col(valueCol).cast("double") * unitScale + lit(0.5)).cast("long").as("_v"))
-    val cells = q.groupBy("_g", "_v").agg(count(lit(1)).as("_c"))
+    val cells = q.filter(col("_v").isNotNull).groupBy("_g", "_v").agg(count(lit(1)).as("_c"))
     def dd(c: Column) = c.cast("decimal(19,0)")
     val mom = cells.groupBy("_g").agg(
       sum("_c").as("_n"),
@@ -809,11 +794,8 @@ object Eval {
       .groupBy("_ga", "_gb", "_v")
       .agg(sum(when(col("_g") === col("_ga"), col("_c")).otherwise(0L)).as("_ta"),
         sum(col("_c")).as("_t"))
-    val wv = Window.partitionBy("_ga", "_gb").orderBy("_v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ra = pc
-      .withColumn("_r2",
-        lit(2L) * coalesce(sum(col("_t")).over(wv), lit(0L)) + col("_t") + 1L)
+    val ra = Ranks.running(pc, Seq("_ga", "_gb"), Seq(col("_v")), Seq("_cum" -> col("_t")))
+      .withColumn("_r2", Ranks.midRank2(col("_cum"), col("_t")))
       .groupBy("_ga", "_gb")
       .agg(sum((dd(col("_ta")) * col("_r2")).cast("decimal(38,0)")).as("_r2a"))
     val momA = mom.select(col("_g").as("_ga"), col("_n").as("_na"),

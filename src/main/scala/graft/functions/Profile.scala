@@ -275,11 +275,8 @@ object Profile {
                      outCol: String = "pct"): DataFrame = {
     val counts = df.groupBy(col(groupCol), col(valueCol))
       .agg(count(lit(1)).as("_c"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = counts
-      .withColumn("_cum", sum(col("_c")).over(w))
-      .withColumn("_n", sum(col("_c")).over(Window.partitionBy(col(groupCol))))
+    val cum = Ranks.running(counts, Seq(groupCol), Seq(col(valueCol)),
+        Seq("_cum" -> col("_c")), totals = Seq("_n" -> col("_c")))
       .select(col(groupCol), col(valueCol),
         (col("_cum").cast("double") / col("_n")).as(outCol))
     df.join(cum, Seq(groupCol, valueCol))
@@ -352,7 +349,8 @@ object Profile {
     * interpolating between weighted steps has no standard any two
     * engines agree on, so the step function IS the contract).
     *
-    * The cumulative walk runs over the per-(group, value) HISTOGRAM
+    * The cumulative walk ([[Ranks.running]], selected by
+    * [[Ranks.pick]]) runs over the per-(group, value) HISTOGRAM
     * (partial agg collapses rows map-side — the percentileRank state
     * shape); the crossing threshold compares integer weight sums
     * cross-multiplied against the rational p = pNum/pDen (no float
@@ -363,16 +361,11 @@ object Profile {
     require(pNum >= 0 && pNum <= pDen && pDen > 0, s"bad rational p=$pNum/$pDen")
     val hist = df.groupBy(col(groupCol), col(valueCol).as("v"))
       .agg(sum(col(weightCol)).as("_w"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy(col(groupCol))
-    hist
-      .withColumn("_cum", sum(col("_w")).over(w))
-      .withColumn("_tot", sum(col("_w")).over(tot))
-      // first value whose inclusive prefix reaches p·W: cum·pDen >= W·pNum
-      .filter(col("_cum") * pDen >= col("_tot") * pNum)
+    Ranks.running(hist, Seq(groupCol), Seq(col("v")),
+        Seq("_cum" -> col("_w")), totals = Seq("_tot" -> col("_w")))
       .groupBy(col(groupCol))
-      .agg(min(col("v")).as("wpct"), max(col("_tot")).as("total_weight"))
+      .agg(Ranks.pick(col("v"), col("_cum"), col("_tot"), pNum, pDen).as("wpct"),
+           max(col("_tot")).as("total_weight"))
   }
 
   /** Robust scaling (median/IQR standardization) per group: scaled =
@@ -399,16 +392,11 @@ object Profile {
     val vq = floor(col(valueCol) * 1000000L + 0.5).cast("long")
     val hist = df.select(col(groupCol), vq.as("_v"))
       .groupBy(col(groupCol), col("_v")).agg(count(lit(1)).as("_c"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy(col(groupCol))
-    val cum = hist
-      .withColumn("_cum", sum(col("_c")).over(w))
-      .withColumn("_n", sum(col("_c")).over(tot))
-    val stats = cum.groupBy(col(groupCol)).agg(
-      min(when(col("_cum") * 4 >= col("_n"), col("_v"))).as("_q1"),
-      min(when(col("_cum") * 2 >= col("_n"), col("_v"))).as("_med"),
-      min(when(col("_cum") * 4 >= col("_n") * 3, col("_v"))).as("_q3"))
+    val cum = Ranks.running(hist, Seq(groupCol), Seq(col("_v")),
+      Seq("_cum" -> col("_c")), totals = Seq("_n" -> col("_c")))
+    def q(num: Long, den: Long) = Ranks.pick(col("_v"), col("_cum"), col("_n"), num, den)
+    val stats = cum.groupBy(col(groupCol))
+      .agg(q(1, 4).as("_q1"), q(1, 2).as("_med"), q(3, 4).as("_q3"))
     df.join(broadcast(stats), Seq(groupCol))
       .withColumn(outCol, when(col("_q3") > col("_q1"),
         round((vq - col("_med")).cast("double") /
@@ -495,16 +483,18 @@ object Profile {
     *
     * Exactness: the entire rank computation is integer arithmetic in
     * HALF-units — per distinct value, twice-the-average-tie-rank is
-    * 2·cumBefore + t + 1 (always an integer), so 2·R_a and
+    * [[Ranks.midRank2]] (always an integer), so 2·R_a and
     * 2·U_a = 2·R_a − n_a(n_a+1) are exact longs; the tie-corrected
     * normal approximation (σ² = n_a·n_b/12·((N+1) − Σ(t³−t)/(N(N−1))))
     * evaluates in doubles from those exact integers in one
     * oracle-mirrored op order, z rounds at 1e-6. All-tied cohorts
-    * (zero variance) emit NULL z.
+    * (zero variance) emit NULL z. NULL values take no rank and are not
+    * counted.
     *
     * Scale shape: one partial agg to the joint value HISTOGRAM
     * (distinct-value-sized, the weightedPercentile state), one
-    * cumulative window over it, one scalar agg — rows never shuffle.
+    * [[Ranks.running]] window over it, one scalar agg — rows never
+    * shuffle.
     *
     * Output: (n_a, n_b, u2_a = 2·U_a exact, u_a, z).
     */
@@ -516,13 +506,10 @@ object Profile {
       .groupBy(col("_v"))
       .agg(count(when(col("_g") === a, 1)).as("_ca"),
            count(when(col("_g") === b, 1)).as("_cb"))
-    val w = Window.orderBy(col("_v")).rowsBetween(Window.unboundedPreceding, -1)
     val t = col("_ca") + col("_cb")
-    val avgRank2 = lit(2L) * coalesce(sum(col("_ca") + col("_cb")).over(w), lit(0L)) + t + 1L
-    val sums = hist
-      .withColumn("_r2a", col("_ca") * avgRank2)
-      .withColumn("_tie",
-        (t.cast("decimal(12,0)") * t * t - t).cast("decimal(38,0)"))
+    val sums = Ranks.running(hist, Nil, Seq(col("_v")), Seq("_cum" -> t))
+      .withColumn("_r2a", col("_ca") * Ranks.midRank2(col("_cum"), t))
+      .withColumn("_tie", Ranks.tieTerm(t))
       .agg(sum("_ca").as("n_a"), sum("_cb").as("n_b"),
            sum("_r2a").as("_r2sum"), sum("_tie").cast("decimal(38,0)").as("_ties"))
     def d(c: Column) = c.cast("double")
@@ -546,9 +533,9 @@ object Profile {
     *
     * rho = Pearson on the tie-averaged ranks, computed EXACTLY: twice-
     * the-average-rank per distinct value is the integer
-    * 2·cumBefore + t + 1 (the [[mannWhitneyU]] half-unit rule; Pearson
-    * is scale-invariant so doubling both axes changes nothing), ranks
-    * join back to rows by (group, value), and the six-sum closed form
+    * [[Ranks.midRank2]] (Pearson is scale-invariant so doubling both
+    * axes changes nothing) over the rows where both axes are non-NULL,
+    * ranks join back to rows by (group, value), and the six-sum closed form
     * runs as DECIMAL(38,0) over exact integers (the [[linReg]]
     * pattern) with one double evaluation in oracle-mirrored order,
     * rounded at 1e-9. Degenerate groups (n < 2 or a constant axis)
@@ -565,15 +552,14 @@ object Profile {
     def q(c: String, s: Long) =
       floor(col(c).cast("double") * s + lit(0.5)).cast("long")
     val base = df.select(col(groupCol),
-      q(xCol, unitScaleX).as("_x"), q(yCol, unitScaleY).as("_y"))
+        q(xCol, unitScaleX).as("_x"), q(yCol, unitScaleY).as("_y"))
+      .filter(col("_x").isNotNull && col("_y").isNotNull) // both axes rank the same pairs
     def rank2(valCol: String, out: String): DataFrame = {
       val h = base.groupBy(col(groupCol), col(valCol))
         .agg(count(lit(1)).as("_t"))
-      val w = Window.partitionBy(col(groupCol)).orderBy(col(valCol))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      h.withColumn(out,
-        lit(2L) * coalesce(sum(col("_t")).over(w), lit(0L)) + col("_t") + 1L)
-        .drop("_t")
+      Ranks.running(h, Seq(groupCol), Seq(col(valCol)), Seq("_cum" -> col("_t")))
+        .select(col(groupCol), col(valCol),
+          Ranks.midRank2(col("_cum"), col("_t")).as(out))
     }
     val ranked = base
       .join(rank2("_x", "_rx"), Seq(groupCol, "_x"))
@@ -659,15 +645,11 @@ object Profile {
     val vq = floor(col(valueCol).cast("double") * 1000000L + lit(0.5)).cast("long")
     val hist = df.select(col(groupCol), vq.as("_v"))
       .groupBy(col(groupCol), col("_v")).agg(count(lit(1)).as("_c"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy(col(groupCol))
-    val cum = hist
-      .withColumn("_cum", sum(col("_c")).over(w))
-      .withColumn("_n", sum(col("_c")).over(tot))
+    val cum = Ranks.running(hist, Seq(groupCol), Seq(col("_v")),
+      Seq("_cum" -> col("_c")), totals = Seq("_n" -> col("_c")))
     val bounds = cum.groupBy(col(groupCol)).agg(
-      min(when(col("_cum") * loDen >= col("_n") * loNum, col("_v"))).as("_lo"),
-      min(when(col("_cum") * hiDen >= col("_n") * hiNum, col("_v"))).as("_hi"))
+      Ranks.pick(col("_v"), col("_cum"), col("_n"), loNum, loDen).as("_lo"),
+      Ranks.pick(col("_v"), col("_cum"), col("_n"), hiNum, hiDen).as("_hi"))
     cum.join(bounds, Seq(groupCol))
       .filter(col("_v") > col("_lo") && col("_v") < col("_hi"))
       .groupBy(col(groupCol))
@@ -707,6 +689,7 @@ object Profile {
     require(alphaNum > 0 && alphaNum < alphaDen, s"alpha=$alphaNum/$alphaDen out of (0,1)")
     val vq = floor(col(valueCol).cast("double") * unitScale + lit(0.5)).cast("long")
     val base = df.select(col(groupCol), vq.as("_q"), calCol.as("_cal"))
+      .filter(col("_q").isNotNull)
     val calStats = base.filter(col("_cal"))
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("_nc"), sum(col("_q").cast("decimal(38,0)")).as("_sq"))
@@ -717,18 +700,13 @@ object Profile {
       .select(col(groupCol), col("_nc"), res(col("_q")).as("_r"))
     val hist = calRes.groupBy(col(groupCol), col("_nc"), col("_r"))
       .agg(count(lit(1)).as("_c"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("_r"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // conformal rank k = ceil((n+1)(den−num)/den), clamped to n
+    // conformal rank k = ceil((n+1)(den−num)/den), clamped to n; the
+    // k-th smallest residual is the first whose prefix reaches k
     val k = expr(s"((_nc + 1) * ${alphaDen - alphaNum} + ${alphaDen - 1}) div $alphaDen")
-    val qhat = hist
-      .withColumn("_cum", sum(col("_c")).over(w))
-      .withColumn("_k", least(k, col("_nc")))
-      .withColumn("_clamped", k > col("_nc"))
-      .filter(col("_cum") >= col("_k"))
+    val qhat = Ranks.running(hist, Seq(groupCol), Seq(col("_r")), Seq("_cum" -> col("_c")))
       .groupBy(col(groupCol))
-      .agg(min(col("_r")).as("_rhat"), first(col("_nc")).as("n_cal"),
-           first(col("_clamped")).as("rank_clamped"))
+      .agg(Ranks.pick(col("_r"), col("_cum"), least(k, col("_nc")), 1L, 1L).as("_rhat"),
+           first(col("_nc")).as("n_cal"), first(k > col("_nc")).as("rank_clamped"))
     val test = base.filter(!col("_cal")).join(broadcast(calStats), Seq(groupCol))
       .join(broadcast(qhat), Seq(groupCol))
       .withColumn("_cov", res(col("_q")) <= col("_rhat"))
@@ -976,14 +954,12 @@ object Profile {
     // reaches rank (n_pairs+1) div 2 — identical selection to a
     // row_number over the sorted pair list, without ever sorting it.
     val hist = pairs.groupBy(col(keyCol), col("_sq")).agg(count(lit(1)).as("_c"))
-    val wcum = Window.partitionBy(keyCol).orderBy(col("_sq"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist
-      .withColumn("_cum", sum(col("_c")).over(wcum))
-      .withColumn("n_pairs", sum(col("_c")).over(Window.partitionBy(keyCol)))
-      .filter(col("_cum") >= expr("(n_pairs + 1) div 2"))
+    // rank (n+1) div 2 is reached exactly when 2·cum >= n
+    Ranks.running(hist, Seq(keyCol), Seq(col("_sq")),
+        Seq("_cum" -> col("_c")), totals = Seq("n_pairs" -> col("_c")))
       .groupBy(col(keyCol))
-      .agg(max(col("n_pairs")).as("n_pairs"), min(col("_sq")).as("slope_q"))
+      .agg(max(col("n_pairs")).as("n_pairs"),
+           Ranks.pick(col("_sq"), col("_cum"), col("n_pairs"), 1L, 2L).as("slope_q"))
       .withColumn("slope", round(col("slope_q").cast("double") / 1000.0, 9))
       .select(col(keyCol), col("n_pairs"), col("slope_q"), col("slope"))
   }
@@ -1170,18 +1146,14 @@ object Profile {
     */
   def ksDistance(df: DataFrame, groupCol: String, a: String, b: String,
                  valueCol: String): DataFrame = {
-    val twoS = df.filter(col(groupCol).isin(a, b))
+    val twoS = df.filter(col(groupCol).isin(a, b) && col(valueCol).isNotNull)
     val hist = twoS.groupBy(col(valueCol).as("v"))
       .agg(count(when(col(groupCol) === a, 1)).as("_ca"),
            count(when(col(groupCol) === b, 1)).as("_cb"))
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = twoS.agg(
       count(when(col(groupCol) === a, 1)).as("_na"),
       count(when(col(groupCol) === b, 1)).as("_nb"))
-    hist
-      .withColumn("_cuma", sum(col("_ca")).over(w))
-      .withColumn("_cumb", sum(col("_cb")).over(w))
+    Ranks.running(hist, Nil, Seq(col("v")), Seq("_cuma" -> col("_ca"), "_cumb" -> col("_cb")))
       .crossJoin(broadcast(tot))
       .withColumn("_d", abs(col("_cuma").cast("double") / col("_na").cast("double")
         - col("_cumb").cast("double") / col("_nb").cast("double")))
@@ -1345,14 +1317,10 @@ object Profile {
     val vq = floor(col(valueCol).cast("double") * unitScale + lit(0.5)).cast("long")
     val base = df.select(col(groupCol).as("_g"), vq.as("_v0"))
     val hist = base.groupBy(col("_g"), col("_v0")).agg(count(lit(1)).as("_c"))
-    val w = Window.partitionBy(col("_g")).orderBy(col("_v0"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy(col("_g"))
-    val med = hist
-      .withColumn("_cum", sum(col("_c")).over(w))
-      .withColumn("_n", sum(col("_c")).over(tot))
+    val med = Ranks.running(hist, Seq("_g"), Seq(col("_v0")),
+        Seq("_cum" -> col("_c")), totals = Seq("_n" -> col("_c")))
       .groupBy(col("_g"))
-      .agg(min(when(col("_cum") * 2 >= col("_n"), col("_v0"))).as("_med"))
+      .agg(Ranks.pick(col("_v0"), col("_cum"), col("_n"), 1L, 2L).as("_med"))
     val devs = base.join(broadcast(med), Seq("_g"))
       .select(col("_g"), abs(col("_v0") - col("_med")).as("_v"))
     val row = anovaOnQuantized(devs)
@@ -1435,9 +1403,9 @@ object Profile {
     * SSW and mask real location shifts).
     *
     * Exactness: the mannWhitneyU half-unit rule throughout — per
-    * distinct value, twice-the-average-tie-rank is the exact integer
-    * 2·cumBefore + t + 1 from ONE cumulative window over the joint
-    * value histogram (UNPARTITIONED but distinct-value-sized, the
+    * distinct non-NULL value, twice-the-average-tie-rank is the exact
+    * integer [[Ranks.midRank2]] from ONE [[Ranks.running]] window over
+    * the joint value histogram (UNPARTITIONED but distinct-value-sized, the
     * documented §5 histogram exemption); per-group 2R_g sums are
     * DECIMAL(38,0); each (2R_g)²/(4n_g) term is one double division
     * quantized DECIMAL(38,6) pre-sum; H, the tie correction
@@ -1456,13 +1424,9 @@ object Profile {
     val cells = df.select(col(groupCol).as("_g"), vq.as("_v"))
       .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
     val vhist = cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
-    val w = Window.orderBy(col("_v")).rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = vhist
-      .withColumn("_r2",
-        lit(2L) * coalesce(sum(col("_t")).over(w), lit(0L)) + col("_t") + 1L)
-      .withColumn("_tie",
-        (col("_t").cast("decimal(12,0)") * col("_t") * col("_t") - col("_t"))
-          .cast("decimal(38,0)"))
+    val ranked = Ranks.running(vhist, Nil, Seq(col("_v")), Seq("_cum" -> col("_t")))
+      .withColumn("_r2", Ranks.midRank2(col("_cum"), col("_t")))
+      .withColumn("_tie", Ranks.tieTerm(col("_t")))
     val byGroup = cells.join(ranked, Seq("_v"))
       .groupBy(col("_g"))
       .agg(sum(col("_c")).as("_n"),
@@ -1519,19 +1483,14 @@ object Profile {
           col("_kn").cast("string"))).cast("long"))
           .otherwise(col("_v")).as("_v"))
     val vhist = base.groupBy(col("_v")).agg(count(lit(1)).as("_t"))
-    val wv = Window.orderBy(col("_v")).rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = vhist.withColumn("_r2",
-      lit(2L) * coalesce(sum(col("_t")).over(wv), lit(0L)) + col("_t") + 1L)
-    val wo = Window.orderBy(col("_o"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy()
-    val u = base.join(ranked, Seq("_v"))
-      .withColumn("_s2", sum(col("_r2")).over(wo))     // 2·Σ_{i≤t} r_i, exact
-      .withColumn("_ti", count(lit(1)).over(wo))
-      .withColumn("_n", count(lit(1)).over(wAll))
+    val ranked = Ranks.running(vhist, Nil, Seq(col("_v")), Seq("_cum" -> col("_t")))
+      .select(col("_v"), Ranks.midRank2(col("_cum"), col("_t")).as("_r2"))
+    // in time order: _s2 = 2·Σ_{i≤t} r_i (exact), _ti = t, _n = N
+    val u = Ranks.running(base.join(ranked, Seq("_v")), Nil, Seq(col("_o")),
+        Seq("_s2" -> col("_r2"), "_ti" -> lit(1L)), totals = Seq("_n" -> lit(1L)))
       .withColumn("_u", col("_s2") - col("_ti") * (col("_n") + 1L))
     def d(c: String) = col(c).cast("double")
-    u.withColumn("_k", max(abs(col("_u"))).over(wAll))
+    u.withColumn("_k", max(abs(col("_u"))).over(Window.partitionBy()))
       .filter(abs(col("_u")) === col("_k"))
       .groupBy(col("_n").as("n"), col("_k").as("k_stat"))
       .agg(min(col("_o")).as("t_star"))
@@ -1973,6 +1932,7 @@ object Profile {
     require(margin >= 3, s"margin must be >= 3 (p = 2 per segment), got $margin")
     val base = df.select(col(orderCol).as("_o"),
       floor(col(valueCol).cast("double") * unitScale + lit(0.5)).cast("long").as("_y"))
+      .filter(col("_o").isNotNull)
       .withColumn("_x", col("_o").cast("long"))
     def dd(c: Column) = c.cast("decimal(38,0)")
     val tot = base.agg(count(lit(1)).as("_tn"),
@@ -1980,15 +1940,10 @@ object Profile {
       sum(dd(col("_x")) * dd(col("_x"))).as("_tsxx"),
       sum(dd(col("_x")) * dd(col("_y"))).as("_tsxy"),
       sum(dd(col("_y")) * dd(col("_y"))).as("_tsyy"))
-    val w = Window.orderBy(col("_o"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pre = base
-      .withColumn("_pn", count(lit(1)).over(w))
-      .withColumn("_psx", sum(dd(col("_x"))).over(w))
-      .withColumn("_psy", sum(dd(col("_y"))).over(w))
-      .withColumn("_psxx", sum(dd(col("_x")) * dd(col("_x"))).over(w))
-      .withColumn("_psxy", sum(dd(col("_x")) * dd(col("_y"))).over(w))
-      .withColumn("_psyy", sum(dd(col("_y")) * dd(col("_y"))).over(w))
+    val pre = Ranks.running(base, Nil, Seq(col("_o")), Seq(
+        "_pn" -> lit(1L), "_psx" -> dd(col("_x")), "_psy" -> dd(col("_y")),
+        "_psxx" -> dd(col("_x")) * dd(col("_x")), "_psxy" -> dd(col("_x")) * dd(col("_y")),
+        "_psyy" -> dd(col("_y")) * dd(col("_y"))))
       .crossJoin(broadcast(tot))
     def dbl(c: Column) = c.cast("double")
     // SSE of the least-squares line on a segment, from its exact
@@ -2039,7 +1994,7 @@ object Profile {
     * the Bonferroni m = k(k−1)/2 reported for the caller's α/m cut.
     *
     * Rank arithmetic is the exact half-unit integer family (q216):
-    * 2·avgRank = 2·cumBefore + t + 1 per DISTINCT value, per-group
+    * 2·avgRank = [[Ranks.midRank2]] per DISTINCT non-NULL value, per-group
     * rank sums fold as exact DECIMAL(38,0) products, the window walks
     * distinct values only; every z is one mirrored double of exact
     * integers.
@@ -2050,22 +2005,18 @@ object Profile {
       floor(col(valueCol).cast("double") * unitScale + lit(0.5)).cast("long")
         .as("_v"))
     val hist = base.groupBy("_v").agg(count(lit(1)).as("_t"))
-    val w = Window.orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = hist
-      .withColumn("_cum", sum(col("_t")).over(w))
-      .withColumn("_hr2", lit(2L) * (col("_cum") - col("_t")) + col("_t") + 1L)
+    val ranked = Ranks.running(hist, Nil, Seq(col("_v")), Seq("_cum" -> col("_t")))
+      .withColumn("_hr2", Ranks.midRank2(col("_cum"), col("_t")))
     val perGroup = base.groupBy("_g", "_v").agg(count(lit(1)).as("_c"))
       .join(ranked.select(col("_v"), col("_hr2")), Seq("_v"))
       .groupBy("_g")
       .agg(sum("_c").as("_n"),
         sum((col("_c").cast("decimal(38,0)") * col("_hr2")).cast("decimal(38,0)"))
           .as("_sr2"))
-    // N/ties and the group count fold in ONE driver action (the hist
-    // and perGroup exchanges are shared subtrees) instead of two
-    val scalars = hist.agg(sum("_t").as("_nn"),
-      sum((col("_t").cast("decimal(38,0)") * col("_t") * col("_t") - col("_t"))
-        .cast("decimal(38,0)")).as("_ties"))
+    // N/ties (over the ranked, NULL-free values) and the group count
+    // fold in ONE driver action (the ranked and perGroup subtrees are
+    // shared) instead of two
+    val scalars = ranked.agg(sum("_t").as("_nn"), sum(Ranks.tieTerm(col("_t"))).as("_ties"))
       .crossJoin(perGroup.agg(count(lit(1)).as("_k"))).head()
     val n = scalars.getLong(0)
     require(n >= 2, s"dunnTest needs >= 2 rows, got $n")

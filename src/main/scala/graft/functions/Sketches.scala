@@ -271,18 +271,12 @@ object Sketches {
   def quantileOf(state: DataFrame, keys: Seq[String], pNum: Long, pDen: Long,
                  unitScale: Long = 1000000L): DataFrame = {
     require(pNum >= 0 && pNum <= pDen && pDen > 0, s"bad rational p=$pNum/$pDen")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy(col("bin"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val tot = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    state
-      .withColumn("_cum", sum(col("cnt")).over(w))
-      .withColumn("_n", sum(col("cnt")).over(tot))
-      .filter(col("_cum") * pDen >= col("_n") * pNum)
+    Ranks.running(state, keys, Seq(col("bin")),
+        Seq("_cum" -> col("cnt")), totals = Seq("_n" -> col("cnt")))
       .groupBy(keys.map(col): _*)
       .agg(max(col("_n")).as("n"),
-        (min(col("bin")).cast("double") / unitScale).as("q_est"))
+        (Ranks.pick(col("bin"), col("_cum"), col("_n"), pNum, pDen).cast("double")
+          / unitScale).as("q_est"))
   }
 
   /** KMV (bottom-k / K-Minimum-Values) distinct sketch (Bar-Yossef et

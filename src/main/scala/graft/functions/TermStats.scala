@@ -329,12 +329,10 @@ object TermStats {
     val counts = rebalance(docs.select(col(idCol), T.tokens(col(textCol)).as("w")), idCol)
       .select(explode(col("w")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
-    val wRank = Window.orderBy(col("c").desc, col("t"))
-    val wCum = wRank.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = counts.agg(sum("c").as("_tot"), count(lit(1)).as("_v"))
-    val ranked = counts
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .withColumn("_cum", sum(col("c")).over(wCum))
+    // rank = the term's 1-based position in (count desc, term) order
+    val ranked = Ranks.running(counts, Nil, Seq(col("c").desc, col("t")),
+        Seq("rank" -> lit(1L), "_cum" -> col("c")))
       .crossJoin(broadcast(tot))
     import spark.implicits._
     val probesDf = probes.toDF("k")

@@ -14,6 +14,14 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The value a sort column orders by: `c.desc` → `c`; an undirected
+    * column is returned as is.
+    */
+  def sortKey(c: Column): Column = c.node match {
+    case s: org.apache.spark.sql.internal.SortOrder => new Column(s.child)
+    case _ => c
+  }
+
   /** Re-tag a (lazily planned) batch frame as a STREAMING frame — what
     * a DSv1 `Source.getBatch` must return (MicroBatchExecution asserts
     * `isStreaming`). The same bridge FileStreamSource uses internally

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Physical-plan assertions (SURVEY.md §5): the scale properties we
   * claim — pushdown, pruning, broadcast, partial aggregation, top-k
   * pushdown, codegen'd custom expressions — verified on the REAL
@@ -1161,5 +1165,39 @@ class PlanSpec extends SparkSpec {
     val p = plan("q375_dunn")
     p should include("partial_count") // histogram cells combine map-side
     p should include("BroadcastNestedLoopJoin") // k x k pair table
+  }
+
+  // ---- rank / quantile family: window and exchange census ----
+
+  private object Census extends AdaptiveSparkPlanHelper
+
+  /** (Window operators, unpartitioned Window operators, Exchange
+    * operators) in a query's pre-execution physical plan.
+    */
+  private def census(name: String): (Int, Int, Int) = {
+    val p = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+    val windows = Census.collect(p) { case w: WindowExec => w }
+    (windows.size, windows.count(_.partitionSpec.isEmpty),
+      Census.collect(p) { case e: Exchange => e }.size)
+  }
+
+  test("rank/quantile family: every query keeps its window, unpartitioned-window and exchange counts") {
+    // the queries served by the running-sum kernel (functions.Ranks);
+    // an unpartitioned Window runs in one task and is what Spark's
+    // "No Partition Defined" warning reports
+    val expected = Seq(
+      "q91_percentile_rank" -> (2, 0, 3), "q151_weighted_median" -> (2, 0, 2),
+      "q205_robust_scale" -> (2, 0, 3), "q221_trimmed_mean" -> (2, 0, 5),
+      "q222_conformal" -> (1, 0, 8), "q204_theil_sen" -> (2, 0, 4),
+      "q141_ks_drift" -> (1, 1, 4), "q266_levene" -> (2, 0, 5),
+      "q215_mannwhitney" -> (1, 1, 2), "q216_spearman" -> (2, 0, 7),
+      "q265_kruskal" -> (1, 1, 11), "q269_pettitt" -> (4, 4, 12),
+      "q361_sup_chow" -> (6, 6, 5), "q375_dunn" -> (2, 2, 11),
+      "q235_grouped_auc" -> (1, 0, 2), "q239_lift_table" -> (3, 2, 10),
+      "q246_isotonic" -> (4, 0, 17), "q248_bootstrap_ci" -> (4, 0, 10),
+      "q273_pr_auc" -> (2, 0, 2), "q296_effect_sizes" -> (1, 0, 13),
+      "q227_quantile_state" -> (4, 0, 7), "q228_stream_quantile" -> (2, 0, 1),
+      "q257_stream_quantile_hourly" -> (4, 0, 3), "q279_vocab_coverage" -> (1, 1, 8))
+    expected.map { case (q, _) => q -> census(q) } shouldBe expected
   }
 }

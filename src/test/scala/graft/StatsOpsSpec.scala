@@ -171,6 +171,30 @@ class StatsOpsSpec extends SparkSpec {
     ra.getLong(2) + rb.getLong(2) shouldBe 2L * ra.getLong(0) * ra.getLong(1)
   }
 
+  // ---- NULL values in the rank and quantile family ----
+
+  test("a NULL value takes no rank: rank statistics equal those of the frame without its NULL rows") {
+    import graft.functions.Eval
+    val full = Seq(
+      ("a", Some(1.0), 3.0, true), ("a", Some(2.0), 1.0, false), ("a", None, 2.0, true),
+      ("a", Some(4.0), 4.0, false), ("a", Some(2.0), 5.0, true),
+      ("b", Some(3.0), 2.0, false), ("b", None, 5.0, true), ("b", Some(5.0), 1.0, true),
+      ("b", Some(2.0), 3.0, false), ("b", Some(6.0), 4.0, false),
+      ("c", Some(6.0), 1.0, true), ("c", Some(7.0), 3.0, false), ("c", None, 2.0, false),
+      ("c", Some(1.0), 4.0, true)).toDF("g", "v", "y", "label")
+    val kept = full.filter(col("v").isNotNull)
+    def same(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      canon(f(full)) shouldBe canon(f(kept))
+    same(Profile.mannWhitneyU(_, "g", "a", "b", "v"))
+    same(Profile.kruskalWallis(_, "g", "v"))
+    same(Profile.dunnTest(_, "g", "v"))
+    same(Profile.spearman(_, "g", "v", "y"))
+    same(Eval.groupedAuc(_, "g", "label", "v"))
+    same(Profile.percentileRank(_, "g", "v"))
+    // a row-level transform keeps every input row; compare the valued ones
+    same(Profile.robustScale(_, "g", "v").filter(col("v").isNotNull))
+  }
+
   // ---- spearman ----
 
   test("spearman is 1/-1 on monotone data, outlier-immune, NULL on constant axes") {
