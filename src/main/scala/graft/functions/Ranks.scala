@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+
+import scala.collection.immutable.ListMap
 
 /** The one running-sum kernel behind the exact rank, quantile and
   * cumulative statistics. Each caller builds its own histogram (or
@@ -11,8 +13,8 @@ import org.apache.spark.sql.graft.ColumnBridge
   * the three decisions they share:
   *
   *  - the running sum: one rows-frame window `PARTITION BY keys ORDER BY
-  *    order ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW` per
-  *    requested sum, after dropping the rows whose ordering value is
+  *    order ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW` for all
+  *    requested sums, after dropping the rows whose ordering value is
   *    NULL (Spark sorts NULLs first, so a kept NULL would take the
   *    lowest rank and inflate every count after it);
   *  - the half-unit mid-rank: a tie block of `t` rows whose inclusive
@@ -42,8 +44,13 @@ private[graft] object Ranks {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.partitionBy(keys.map(col): _*)
-    val cum = sums.foldLeft(kept) { case (d, (name, v)) => d.withColumn(name, sum(v).over(w)) }
-    totals.foldLeft(cum) { case (d, (name, v)) => d.withColumn(name, sum(v).over(all)) }
+    // one projection per window spec: a computed input projected
+    // between two window operators would keep CollapseWindow from
+    // fusing them into one
+    def over(d: DataFrame, cols: Seq[(String, Column)], spec: WindowSpec) =
+      if (cols.isEmpty) d
+      else d.withColumns(ListMap(cols.map { case (name, v) => name -> sum(v).over(spec) }: _*))
+    over(over(kept, sums, w), totals, all)
   }
 
   /** Twice the average rank of a tie block of `t` rows whose inclusive

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import Helpers._
@@ -10,6 +10,22 @@ import Helpers._
   * `sources.BinaryDir`.
   */
 object TxQueries {
+
+  /** The table summary most queries here report: `n_rows` (`count(1)`)
+    * and `sum_price`, the exact DECIMAL(18,4) sum of `o_totalprice` as a
+    * double, after one column per `tags` entry (name -> value). A Column
+    * value groups the rows, one summary row per group; any other value
+    * is a literal, and with literals only the summary is one row, also
+    * of an empty frame.
+    */
+  private def priceSummary(df: DataFrame, tags: (String, Any)*): DataFrame =
+    df.groupBy(tags.collect { case (n, c: Column) => c.as(n) }: _*)
+      .agg(count(lit(1)).as("n_rows"),
+        sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
+      .select(tags.map {
+        case (n, _: Column) => col(n)
+        case (n, x) => lit(x).as(n)
+      } ++ Seq(col("n_rows"), col("sum_price")): _*)
 
   val all: Seq[Query] = Seq(
 
@@ -60,13 +76,10 @@ object TxQueries {
         .select(col("o_orderkey"), col("o_totalprice"))
         .repartitionByRange(8, col("o_orderkey"))
       sources.TxTable.commit(ord, table, statsCols = Seq("o_orderkey"))
-      def summarize(df: org.apache.spark.sql.DataFrame, tag: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(tag).as("section"), col("n_rows"), col("sum_price"))
-      summarize(sources.TxTable.scan(s, table, col("o_orderkey").between(1000.0, 3000.0)), "pruned")
-        .unionByName(summarize(sources.TxTable.read(s, table)
-          .filter(col("o_orderkey").between(1000, 3000)), "snapshot"))
+      priceSummary(sources.TxTable.scan(s, table, col("o_orderkey").between(1000.0, 3000.0)),
+          "section" -> "pruned")
+        .unionByName(priceSummary(sources.TxTable.read(s, table)
+          .filter(col("o_orderkey").between(1000, 3000)), "section" -> "snapshot"))
     },
       // the pruned read must return EXACTLY the full snapshot's filtered
       // rows — both sections recompute from the base table
@@ -130,22 +143,15 @@ object TxQueries {
       val hi = (width / 2).toDouble
       val (v, nRewritten, nCarried) =
         sources.TxTable.deleteWhere(s, table, col("o_orderkey").between(lo, hi))
-      def summarize(df: org.apache.spark.sql.DataFrame, section: String, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(section).as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val snap = summarize(sources.TxTable.readVersion(s, table, v), "snapshot", "after_delete")
+      val snap = priceSummary(sources.TxTable.readVersion(s, table, v),
+        "section" -> "snapshot", "label" -> "after_delete")
       val files = s.createDataFrame(Seq(
           ("files", "rewritten", nRewritten.toLong),
           ("files", "carried", nCarried.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
-      val cdc = sources.TxTable.changes(s, table, v - 1, v)
-        .groupBy(concat(col("_change"), lit("@"), col("_version")).as("label"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("cdc").as("section"), col("label"), col("n_rows"), col("sum_price"))
+      val cdc = priceSummary(sources.TxTable.changes(s, table, v - 1, v),
+        "section" -> "cdc", "label" -> concat(col("_change"), lit("@"), col("_version")))
       snap.unionByName(files).unionByName(cdc)
     },
       // the bucket layout, prune counts, snapshot, and CDC churn all
@@ -244,12 +250,10 @@ object TxQueries {
           sum(col("o_year").cast("decimal(19,0)")).cast("double").as("sum_year"))
         .select(lit("v3").as("section"), lit("all").as("label"), col("n_rows"),
           col("sum_price"), col("n_year"), col("sum_year"))
-      val v1 = sources.TxTable.readVersion(s, table, 1)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("v1").as("section"), lit("all").as("label"), col("n_rows"),
-          col("sum_price"), lit(null).cast("long").as("n_year"),
-          lit(null).cast("double").as("sum_year"))
+      val v1 = priceSummary(sources.TxTable.readVersion(s, table, 1),
+          "section" -> "v1", "label" -> "all")
+        .withColumn("n_year", lit(null).cast("long"))
+        .withColumn("sum_year", lit(null).cast("double"))
       v3.unionByName(v1)
     },
       // v3 reads through mergeSchema: pre-evolution rows count NULL
@@ -268,8 +272,9 @@ object TxQueries {
          FROM orders WHERE o_orderpriority = '1-URGENT'"""),
 
     // §2#62u (r7) incremental OPTIMIZE: one well-sized commit + three
-    // micro-batch-sized appends, then compactSmall rewrites ONLY the
-    // three small files (the big one carries by reference) — the
+    // micro-batch-sized appends, then `compact(minBytes = 4096)`
+    // rewrites ONLY the three small files (the big one carries by
+    // reference) — the
     // nightly-OPTIMIZE-after-streaming-ingest story; content and the
     // version/file accounting both gated.
     Query("q302_tx_compact_small", (s, dir) => {
@@ -282,12 +287,9 @@ object TxQueries {
         when(pmod(col("o_orderkey"), lit(1500)).isin(1, 2, 3),
           pmod(col("o_orderkey"), lit(1500))).otherwise(lit(0)), 4,
         statsCols = Seq("o_orderkey"))
-      val (v, nRw, nCar) = sources.TxTable.compactSmall(s, table, minBytes = 4096)
-      val content = sources.TxTable.readVersion(s, table, v)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("content").as("section"), lit("after").as("label"),
-          col("n_rows"), col("sum_price"))
+      val (v, nRw, nCar) = sources.TxTable.compact(s, table, minBytes = 4096)
+      val content = priceSummary(sources.TxTable.readVersion(s, table, v),
+        "section" -> "content", "label" -> "after")
       val meta = s.createDataFrame(Seq(
           ("meta", "rewritten", nRw.toLong),
           ("meta", "carried", nCar.toLong),
@@ -321,10 +323,7 @@ object TxQueries {
         functions.Quality.NonNegative("o_totalprice"))
       sources.TxTable.commitChecked(urgent, table, checks)
       val snap = sources.TxTable.read(s, table)
-      val agg = snap.agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("table").as("section"), lit("all").as("label"),
-          col("n_rows"), col("sum_price"))
+      val agg = priceSummary(snap, "section" -> "table", "label" -> "all")
       val verdicts = functions.Quality.audit(snap, checks)
         .select(lit("check").as("section"),
           concat(col("check"), lit("@"), col("column")).as("label"),
@@ -370,11 +369,8 @@ object TxQueries {
       sources.TxTable.commit(ord, table, bloomCols = Seq("o_orderkey"))
       def probe(tag: String, key: String) = {
         val kept = sources.TxTable.keptFiles(s, table, 1, col("o_orderkey").cast("string") === key)
-        sources.TxTable.readWhereKey(s, table, "o_orderkey", key)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(tag).as("label"), lit(kept.size.toLong).as("n_files_kept"),
-            col("n_rows"), col("sum_price"))
+        priceSummary(sources.TxTable.readWhereKey(s, table, "o_orderkey", key),
+          "label" -> tag, "n_files_kept" -> kept.size.toLong)
       }
       probe("present", "1").unionByName(probe("absent", "-7"))
     },
@@ -396,18 +392,12 @@ object TxQueries {
       sources.TxTable.commit(part("2-HIGH"), table)
       sources.TxTable.commit(part("5-LOW"), table, op = "overwrite") // the bad write
       val rv = sources.TxTable.restore(s, table, 2)
-      def summarize(df: org.apache.spark.sql.DataFrame, section: String, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(section).as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val now = summarize(sources.TxTable.read(s, table), "table", "restored")
-      val v3 = summarize(sources.TxTable.readVersion(s, table, 3), "table", "pre_restore")
-      val cdc = sources.TxTable.changes(s, table, 3, 4)
-        .groupBy(concat(col("_change"), lit("@"), col("_version")).as("label"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("cdc").as("section"), col("label"), col("n_rows"), col("sum_price"))
+      val now = priceSummary(sources.TxTable.read(s, table),
+        "section" -> "table", "label" -> "restored")
+      val v3 = priceSummary(sources.TxTable.readVersion(s, table, 3),
+        "section" -> "table", "label" -> "pre_restore")
+      val cdc = priceSummary(sources.TxTable.changes(s, table, 3, 4),
+        "section" -> "cdc", "label" -> concat(col("_change"), lit("@"), col("_version")))
       val zeroCopy = sources.TxTable.filesOf(s, table, rv).toSet ==
         sources.TxTable.filesOf(s, table, 2).toSet
       val meta = s.createDataFrame(Seq(
@@ -475,13 +465,8 @@ object TxQueries {
         ord.filter(col("o_orderkey").between(1, 500)).select("o_orderkey"))
       val nVecFiles = sources.TxTable.posDeletesOf(s, table, v2).size
       val zeroRewrite = sources.TxTable.filesOf(s, table, v2) == files1
-      val v3 = sources.TxTable.compact(s, table)
+      val v3 = sources.TxTable.compact(s, table)._1
       val vecsAfter = sources.TxTable.posDeletesOf(s, table, v3).size
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
       val meta = s.createDataFrame(Seq(
           ("meta", "zero_rewrite", if (zeroRewrite) 1L else 0L),
           ("meta", "n_deleted", nDel),
@@ -489,9 +474,12 @@ object TxQueries {
           ("meta", "tombs_after_compact", vecsAfter.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readVersion(s, table, 1), "v1_full")
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v2), "v2_mor"))
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v3), "v3_compacted"))
+      priceSummary(sources.TxTable.readVersion(s, table, 1),
+        "section" -> "table", "label" -> "v1_full")
+        .unionByName(priceSummary(sources.TxTable.readVersion(s, table, v2),
+            "section" -> "table", "label" -> "v2_mor"))
+        .unionByName(priceSummary(sources.TxTable.readVersion(s, table, v3),
+            "section" -> "table", "label" -> "v3_compacted"))
         .unionByName(meta)
     },
       """WITH v1 AS (
@@ -596,10 +584,8 @@ object TxQueries {
       val probe = "3-MEDIUM"
       val kept = sources.TxTable.keptFiles(s, table, 1, col("o_orderpriority") === probe)
       val total = sources.TxTable.filesOf(s, table, 1)
-      val rows = sources.TxTable.scan(s, table, col("o_orderpriority") === probe)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("rows").as("section"), col("n_rows"), col("sum_price"))
+      val rows = priceSummary(sources.TxTable.scan(s, table, col("o_orderpriority") === probe),
+        "section" -> "rows")
       val absent = sources.TxTable.scan(s, table, col("o_orderpriority") === "9-NONE")
         .agg(count(lit(1)).as("n_rows"))
         .select(lit("absent").as("section"), col("n_rows"),
@@ -642,11 +628,9 @@ object TxQueries {
       val probe = "3-MEDIUM"
       val total = sources.TxTable.filesOf(s, table, 1)
       val mine = sources.TxTable.keptFiles(s, table, 1, col("o_orderpriority") === probe)
-      val rows = sources.TxTable.readPartition(s, table, probe)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("rows").as("section"), col("n_rows"), col("sum_price"))
-      val absent = sources.TxTable.readPartition(s, table, "9-NONE")
+      val rows = priceSummary(sources.TxTable.scan(s, table, col("o_orderpriority") === probe),
+        "section" -> "rows")
+      val absent = sources.TxTable.scan(s, table, col("o_orderpriority") === "9-NONE")
         .agg(count(lit(1)).as("n_rows"))
         .select(lit("absent").as("section"), col("n_rows"),
           lit(null).cast("double").as("sum_price"))
@@ -687,13 +671,8 @@ object TxQueries {
       val (v2, nDel) = sources.TxTable.deleteWherePos(s, table, col("o_orderkey").between(1.0, 500.0))
       val nVecFiles = sources.TxTable.posDeletesOf(s, table, v2).size
       val zeroRewrite = sources.TxTable.filesOf(s, table, v2) == files1
-      val v3 = sources.TxTable.compact(s, table)
+      val v3 = sources.TxTable.compact(s, table)._1
       val vecsAfter = sources.TxTable.posDeletesOf(s, table, v3).size
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
       val meta = s.createDataFrame(Seq(
           ("meta", "zero_rewrite", if (zeroRewrite) 1L else 0L),
           ("meta", "n_deleted", nDel),
@@ -701,9 +680,12 @@ object TxQueries {
           ("meta", "vecs_after_compact", vecsAfter.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readVersion(s, table, 1), "v1_full")
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v2), "v2_pos"))
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v3), "v3_compacted"))
+      priceSummary(sources.TxTable.readVersion(s, table, 1),
+        "section" -> "table", "label" -> "v1_full")
+        .unionByName(priceSummary(sources.TxTable.readVersion(s, table, v2),
+            "section" -> "table", "label" -> "v2_pos"))
+        .unionByName(priceSummary(sources.TxTable.readVersion(s, table, v3),
+            "section" -> "table", "label" -> "v3_compacted"))
         .unionByName(meta)
     },
       """WITH v1 AS (
@@ -752,23 +734,17 @@ object TxQueries {
         lit(new java.math.BigDecimal("1.1"))).cast("double")
       val (v2, nTouched, nCarried) = sources.TxTable.updateWhere(s, table,
         col("o_orderkey").between(1.0, 500.0), Map("o_totalprice" -> bump))
-      def summarize(df: DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val cdc = sources.TxTable.changes(s, table, 1, v2)
-        .groupBy(col("_change").as("label"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("cdc").as("section"), col("label"), col("n_rows"), col("sum_price"))
+      val cdc = priceSummary(sources.TxTable.changes(s, table, 1, v2),
+        "section" -> "cdc", "label" -> col("_change"))
       val meta = s.createDataFrame(Seq(
           ("meta", "n_touched", nTouched.toLong),
           ("meta", "n_carried", nCarried.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readVersion(s, table, 1), "v1_full")
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v2), "v2_updated"))
+      priceSummary(sources.TxTable.readVersion(s, table, 1),
+        "section" -> "table", "label" -> "v1_full")
+        .unionByName(priceSummary(sources.TxTable.readVersion(s, table, v2),
+            "section" -> "table", "label" -> "v2_updated"))
         .unionByName(cdc).unionByName(meta)
     },
       """WITH v1 AS (
@@ -813,14 +789,10 @@ object TxQueries {
       val ord = t(s, dir, "orders").df.select(col("o_orderkey"), col("o_totalprice"))
       sources.TxTable.commit(ord.repartition(2, col("o_orderkey")), table,
         partitionBy = Some("_gpt-bucket16-o_orderkey"))
-      val rows = sources.TxTable.readHiddenPoint(s, table, "137")
-        .filter(col("o_orderkey") === 137L)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("rows").as("section"), col("n_rows"), col("sum_price"))
-      val bucket = sources.TxTable.hiddenValueOf("_gpt-bucket16-o_orderkey", "137")
+      val probe = col("o_orderkey").cast("string") === "137"
+      val rows = priceSummary(sources.TxTable.scan(s, table, probe), "section" -> "rows")
       val total = sources.TxTable.filesOf(s, table, 1)
-      val mine = total.filter(_.startsWith(s"data/_gpt-bucket16-o_orderkey=$bucket/"))
+      val mine = sources.TxTable.keptFiles(s, table, 1, probe)
       val meta = s.createDataFrame(Seq(
           ("kept_files", mine.size.toLong),
           ("total_files", total.size.toLong)))
@@ -919,19 +891,16 @@ object TxQueries {
         .filter(col("o_orderkey").isNull).count()
       val abandoned = if (badNulls > 0L)
         sources.TxTable.abandonWap(s, table, "bad").size else 0
-      def summarize(df: DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
       val meta = s.createDataFrame(Seq(
           ("meta", "pre_publish_rows", preRows),
           ("meta", "published_version", v2.toLong),
           ("meta", "bad_abandoned_files", abandoned.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readVersion(s, table, 1), "v1_base")
-        .unionByName(summarize(sources.TxTable.readVersion(s, table, v2), "v2_published"))
+      priceSummary(sources.TxTable.readVersion(s, table, 1),
+        "section" -> "table", "label" -> "v1_base")
+        .unionByName(priceSummary(sources.TxTable.readVersion(s, table, v2),
+            "section" -> "table", "label" -> "v2_published"))
         .unionByName(meta)
     },
       """WITH v1 AS (
@@ -978,21 +947,18 @@ object TxQueries {
         statsCols = Seq("o_orderkey"))
       val owned = sources.TxTable.filesOf(s, dst, v2).count(!_.startsWith("/"))
       val kept = sources.TxTable.keptFiles(s, dst, v2, col("o_orderkey").between(1.0, 300.0))
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
       val meta = s.createDataFrame(Seq(
           ("meta", "borrowed_files", borrowed.toLong),
           ("meta", "owned_files", owned.toLong),
           ("meta", "kept_files", kept.size.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.read(s, dst), "clone")
-        .unionByName(summarize(sources.TxTable.read(s, src), "source"))
-        .unionByName(summarize(
-          sources.TxTable.scan(s, dst, col("o_orderkey").between(1.0, 300.0)), "clone_range"))
+      priceSummary(sources.TxTable.read(s, dst), "section" -> "table", "label" -> "clone")
+        .unionByName(priceSummary(sources.TxTable.read(s, src),
+            "section" -> "table", "label" -> "source"))
+        .unionByName(priceSummary(
+          sources.TxTable.scan(s, dst, col("o_orderkey").between(1.0, 300.0)),
+          "section" -> "table", "label" -> "clone_range"))
         .unionByName(meta)
     },
       // clone/source content derives from orders (logical truth); the
@@ -1129,11 +1095,6 @@ object TxQueries {
         statsCols = Seq("o_orderkey"))
       val ff = sources.TxTable.fastForward(s, table, "dev")
       val borrowed = sources.TxTable.filesOf(s, table, ff).count(_.startsWith("/"))
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
       val meta = s.createDataFrame(Seq(
           ("meta", "ff_version", ff.toLong),
           ("meta", "branch_base", sources.TxTable.refOf(s, table, "dev")._2.toLong),
@@ -1141,9 +1102,11 @@ object TxQueries {
           ("meta", "borrowed_files", borrowed.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.read(s, table), "main")
-        .unionByName(summarize(sources.TxTable.readRef(s, table, "release"), "tag"))
-        .unionByName(summarize(sources.TxTable.readRef(s, table, "dev"), "branch"))
+      priceSummary(sources.TxTable.read(s, table), "section" -> "table", "label" -> "main")
+        .unionByName(priceSummary(sources.TxTable.readRef(s, table, "release"),
+            "section" -> "table", "label" -> "tag"))
+        .unionByName(priceSummary(sources.TxTable.readRef(s, table, "dev"),
+            "section" -> "table", "label" -> "branch"))
         .unionByName(meta)
     },
       """WITH o AS (SELECT o_orderkey AS k, o_totalprice AS p FROM orders)
@@ -1180,11 +1143,6 @@ object TxQueries {
       sources.TxTable.createTag(s, tagged, "r3", 3)
       val (expT, _) = sources.TxTable.expireVersions(s, tagged, keepLast = 2)
       val (expP, _) = sources.TxTable.expireVersions(s, plain, keepLast = 2)
-      def summarize(df: org.apache.spark.sql.DataFrame, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit("table").as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
       val meta = s.createDataFrame(Seq(
           ("meta", "n_expired_tagged", expT.size.toLong),
           ("meta", "n_expired_plain", expP.size.toLong),
@@ -1192,9 +1150,12 @@ object TxQueries {
             sources.TxTable.refOf(s, tagged, "r3")._2.toLong)))
         .toDF("section", "label", "n_rows")
         .withColumn("sum_price", lit(null).cast("double"))
-      summarize(sources.TxTable.readRef(s, tagged, "r3"), "tag_v3")
-        .unionByName(summarize(sources.TxTable.read(s, tagged), "tagged_head"))
-        .unionByName(summarize(sources.TxTable.read(s, plain), "plain_head"))
+      priceSummary(sources.TxTable.readRef(s, tagged, "r3"),
+        "section" -> "table", "label" -> "tag_v3")
+        .unionByName(priceSummary(sources.TxTable.read(s, tagged),
+            "section" -> "table", "label" -> "tagged_head"))
+        .unionByName(priceSummary(sources.TxTable.read(s, plain),
+            "section" -> "table", "label" -> "plain_head"))
         .unionByName(meta)
     },
       """WITH o AS (SELECT o_orderkey AS k, o_totalprice AS p FROM orders)
@@ -1225,12 +1186,8 @@ object TxQueries {
           col("o_orderkey") % 2 === 0).coalesce(1), "1-URGENT")
       val carried = sources.TxTable.filesOf(s, table, v2)
         .count(f => filesBefore.contains(f))
-      val content = sources.TxTable.read(s, table)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("part").as("section"), col("o_orderpriority").as("label"),
-          col("n_rows"), col("sum_price"))
+      val content = priceSummary(sources.TxTable.read(s, table),
+        "section" -> "part", "label" -> col("o_orderpriority"))
       val meta = s.createDataFrame(Seq(
           ("meta", "version", v2.toLong),
           ("meta", "carried_files", carried.toLong),
@@ -1400,18 +1357,11 @@ object TxQueries {
         s"unexpected merge outcome: v=$v2 attempts=$attempts")
       val merged = operators.Upsert.applyChanges(
         sources.TxTable.readVersion(s, table, 1), feed, "o_orderkey", "seq", "op")
-      def summarize(df: org.apache.spark.sql.DataFrame, section: String, label: String) =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(section).as("section"), lit(label).as("label"),
-            col("n_rows"), col("sum_price"))
-      val expect = summarize(merged, "merge", "expected")
-      val snap = summarize(sources.TxTable.readVersion(s, table, 2), "snapshot", "v2")
-      val cdc = sources.TxTable.changes(s, table, 1, 2)
-        .groupBy(concat(col("_change"), lit("@"), col("_version")).as("label"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .select(lit("cdc").as("section"), col("label"), col("n_rows"), col("sum_price"))
+      val expect = priceSummary(merged, "section" -> "merge", "label" -> "expected")
+      val snap = priceSummary(sources.TxTable.readVersion(s, table, 2),
+        "section" -> "snapshot", "label" -> "v2")
+      val cdc = priceSummary(sources.TxTable.changes(s, table, 1, 2),
+        "section" -> "cdc", "label" -> concat(col("_change"), lit("@"), col("_version")))
       val diff = operators.Upsert.diffSnapshots(
           sources.TxTable.readVersion(s, table, 1),
           sources.TxTable.readVersion(s, table, 2), "o_orderkey")
@@ -1472,10 +1422,7 @@ object TxQueries {
       sources.TxTable.commit(ord.filter(col("o_orderpriority") === "2-HIGH"), table)
       sources.TxTable.commit(ord.filter(col("o_orderpriority") === "5-LOW"), table, "overwrite")
       def probe(tag: String, tsMs: Long) =
-        sources.TxTable.readAsOf(s, table, tsMs)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(tag).as("probe"), col("n_rows"), col("sum_price"))
+        priceSummary(sources.TxTable.readAsOf(s, table, tsMs), "probe" -> tag)
       val t2 = sources.TxTable.commitMsOf(s, table, 2)
       val t3 = sources.TxTable.commitMsOf(s, table, 3)
       probe("at_v2", t2)
@@ -1680,12 +1627,8 @@ object TxQueries {
       sources.TxTable.commit(ord.filter(col("o_orderpriority") === "1-URGENT"), table)
       sources.TxTable.commit(ord.filter(col("o_orderpriority") === "2-HIGH"), table)
       sources.TxTable.commit(ord.filter(col("o_orderpriority") === "5-LOW"), table, "overwrite")
-      (1 to 3).map { v =>
-        sources.TxTable.readVersion(s, table, v)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(v).as("version"), col("n_rows"), col("sum_price"))
-      }.reduce(_.unionByName(_))
+      (1 to 3).map(v => priceSummary(sources.TxTable.readVersion(s, table, v), "version" -> v))
+        .reduce(_.unionByName(_))
     },
       """SELECT CAST(1 AS INT) AS version, COUNT(*) AS n_rows,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
@@ -1717,10 +1660,8 @@ object TxQueries {
       sources.TxTable.commit(ord.filter(col("o_orderpriority") === "2-HIGH"), table)
       sources.TxTable.compact(s, table)
       sources.TxTable.commit(ord.filter(col("o_orderpriority") === "5-LOW"), table, "overwrite")
-      sources.TxTable.changes(s, table, 1, 4)
-        .groupBy(col("_version").as("version"), col("_change").as("change"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
+      priceSummary(sources.TxTable.changes(s, table, 1, 4),
+        "version" -> col("_version"), "change" -> col("_change"))
     },
       """SELECT CAST(2 AS INT) AS version, 'insert' AS change, COUNT(*) AS n_rows,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
@@ -1745,15 +1686,10 @@ object TxQueries {
       sources.TxTable.drop(s, table)
       sources.TxTable.commit(ord.repartition(8), table)
       sources.TxTable.compact(s, table)
-      (1 to 2).map { v =>
-        sources.TxTable.readVersion(s, table, v)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-          .select(lit(v).as("version"),
-            lit(sources.TxTable.opOf(s, table, v)).as("op"),
-            lit(sources.TxTable.filesOf(s, table, v).size).as("n_files"),
-            col("n_rows"), col("sum_price"))
-      }.reduce(_.unionByName(_))
+      (1 to 2).map(v => priceSummary(sources.TxTable.readVersion(s, table, v), "version" -> v,
+          "op" -> sources.TxTable.opOf(s, table, v),
+          "n_files" -> sources.TxTable.filesOf(s, table, v).size))
+        .reduce(_.unionByName(_))
     },
       """SELECT CAST(1 AS INT) AS version, 'append' AS op,
            CAST(COUNT(DISTINCT filename) AS INT) AS n_files, COUNT(*) AS n_rows,

@@ -818,8 +818,9 @@ object TxTable {
     * is skipped only when a stat recorded for it refutes an `And`
     * conjunct, or refutes both branches of an `Or`:
     *  - `=` and `IN` on the string form (a string column, or any column
-    *    cast to string, against constants): value set, bloom, and the
-    *    identity-partition directory, each admitting any probe;
+    *    cast to string, against constants): value set, bloom, the
+    *    identity-partition directory and the `bucket16` hidden-layout
+    *    directory ([[hiddenValueOf]] of a probe), each admitting any probe;
     *  - `=`, `IN`, `>=`, `>`, `<=`, `<` (so `between`) on a
     *    [[rangeTyped]] column against numeric constants: [min, max];
     *  - `IS NULL` / `IS NOT NULL`: null count, and row count for the
@@ -869,13 +870,14 @@ object TxTable {
       val rows = snap.rows.toMap
       fl => counts.get(fl).forall(n => if (wantNull) n > 0 else rows.get(fl).forall(n < _))
     }
+    // a file outside the layout is kept
     def stringIn(c: String, probes: Seq[String]): String => Boolean = {
       val sets = snap.vsets.collect { case (fl, `c`, vs) => fl -> vs }.toMap
       val bloom = bloomAdmits(snap, c, probes)
-      val part = snap.part.filter(_ == c)
       val probe = probes.toSet
+      val dirs = layoutDirs(snap, c).map { case (pc, dirOf) => pc -> probes.map(dirOf).toSet }
       fl => sets.get(fl).forall(_.exists(probe)) && bloom(fl) &&
-        part.forall(partValueOf(_, fl).forall(probe))
+        dirs.forall { case (pc, ok) => partValueOf(pc, fl).forall(ok) }
     }
     def numIn(c: String, probes: Seq[Double]): String => Boolean =
       range(c)((lo, hi) => probes.exists(x => !(hi < x) && !(lo > x)))
@@ -912,6 +914,32 @@ object TxTable {
     }
     scala.util.Try(analyzed(spark, table, v, predicate).head).toOption
       .fold(snap.files)(cond => snap.files.filter(allows(cond)))
+  }
+
+  /** The layout of `snap` that a string-form probe of physical column
+    * `c` prunes, with the directory a probe lands in: an identity layout
+    * by `c` (the probe itself) or a `bucket16` layout of `c`
+    * ([[hiddenValueOf]] of the probe). A bucket of a column whose string
+    * form holds a TIMESTAMP is none: its directory hashed that form under
+    * the session zone at commit, which the manifest does not record, so
+    * a probe rendered under another zone would skip matching files.
+    */
+  private def layoutDirs(snap: TxManifest, c: String): Seq[(String, String => String)] = {
+    import org.apache.spark.sql.types._
+    def zoned(t: DataType): Boolean = t match {
+      case TimestampType => true
+      case s: StructType => s.fields.exists(f => zoned(f.dataType))
+      case a: ArrayType => zoned(a.elementType)
+      case m: MapType => zoned(m.keyType) || zoned(m.valueType)
+      case _ => false
+    }
+    def zoneFree: Boolean = snap.schema.map(StructType.fromDDL)
+      .flatMap(_.find(_.name == logicalOf(snap.map, c))).exists(f => !zoned(f.dataType))
+    snap.part.toSeq.flatMap { pc =>
+      if (pc == c) Some(pc -> ((p: String) => p))
+      else hiddenSpecOf(pc).collect { case ("bucket16", `c`) if zoneFree =>
+        pc -> ((p: String) => hiddenValueOf(pc, p)) }
+    }
   }
 
   /** `predicate` and `exprs`, in logical names, analyzed against version
@@ -1311,17 +1339,18 @@ object TxTable {
     * column `keyCol` — the shared candidate-pruning step of the
     * key-addressed writes ([[deleteKeysMor]], [[appendUnique]]):
     * [[keptFiles]] of `cast(keyCol as string) IN (keys)`, so blooms,
-    * value sets and the partition directory prune it. ALL files, with
-    * no collect, when the column has no bloom and no value set; all
-    * files too when the probe exceeds the bounded driver collect (big
-    * batches amortize a full semi-join scan anyway). NULL keys never
-    * match an equality join — dropped from the probe.
+    * value sets and the identity or bucket layout directory prune it.
+    * ALL files, with no collect, when the column has no bloom, no value
+    * set and no layout; all files too when the probe exceeds the bounded
+    * driver collect (big batches amortize a full semi-join scan anyway).
+    * NULL keys never match an equality join — dropped from the probe.
     */
   private def bloomCandidateFiles(spark: SparkSession, table: String, v: Int,
                                   keyCol: String, keys: DataFrame): Seq[String] = {
     val snap = snapshotOf(spark, table, v)
     val physKey = physOf(snap.map, keyCol)
-    if (!snap.blooms.exists(_._2 == physKey) && !snap.vsets.exists(_._2 == physKey))
+    if (!snap.blooms.exists(_._2 == physKey) && !snap.vsets.exists(_._2 == physKey) &&
+        layoutDirs(snap, physKey).isEmpty)
       return snap.files
     val probe = keys
       .select(keys.col(keys.columns.head).cast("string").as("_graft_pk"))
@@ -1470,10 +1499,11 @@ object TxTable {
     * a point delete on a 100 TB table costs one stats-pruned candidate
     * scan plus a kilobyte-scale sidecar write; reads pay one broadcast
     * anti-join on a long ordinal until OPTIMIZE folds the vectors away
-    * ([[compact]] reads through the filter and sheds the sidecars;
-    * [[compactSmall]] applies them to whatever it rewrites and carries
-    * them for the rest). The form is SCHEMA-INDEPENDENT: no key column,
-    * NULL keys are fine, and it composes with any mapping or evolution.
+    * ([[compact]] with its defaults reads through the filter and sheds
+    * the sidecars; `compact(where, minBytes)` applies them to the files
+    * it rewrites and carries them for the rest). The form is
+    * SCHEMA-INDEPENDENT: no key column, NULL keys are fine, and it
+    * composes with any mapping or evolution.
     * Semantics match the CoW path: NULL-predicate rows are kept, rows
     * already deleted are not re-recorded, appends after the delete are
     * UNAFFECTED (vectors are per-file, never a key blocklist).
@@ -1525,8 +1555,8 @@ object TxTable {
   /** Metadata-only column DROP: the column leaves the mapping and the
     * recorded schema; its physical data stays in the immutable files
     * (reads never select it; time travel to pre-drop versions still
-    * sees it; a later full [[compact]] physically sheds it). ZERO data
-    * IO, like [[renameColumn]].
+    * sees it; a later [[compact]] with its defaults, the full rewrite,
+    * physically sheds it). ZERO data IO, like [[renameColumn]].
     */
   def dropColumn(spark: SparkSession, table: String, name: String): Int = {
     val v = currentVersion(spark, table)
@@ -1669,18 +1699,18 @@ object TxTable {
     * verbatim. ZERO data IO at any table size: cloning a 100 TB table
     * is one manifest write. The clone then evolves INDEPENDENTLY —
     * appends/deletes/compactions land in `dst`'s own directory and
-    * never touch `src` (a compact progressively MATERIALIZES the clone
-    * by rewriting borrowed files into owned ones); `src`'s later
-    * commits are invisible to the clone (it pinned a snapshot). The
-    * dev/test-branch and experiment-fork story.
+    * never touch `src` (`compact(where, minBytes)` MATERIALIZES the
+    * borrowed files it selects into owned ones; with its defaults, the
+    * whole clone); `src`'s later commits are invisible to the clone (it
+    * pinned a snapshot). The dev/test-branch and experiment-fork story.
     *
     * Caveats (Delta's own): VACUUM on `src` can delete files the clone
     * still references — retain `src` history while clones are live (or
-    * compact the clone to materialize it). `dst`'s vacuum never
+    * [[compact]] the clone to materialize it). `dst`'s vacuum never
     * touches borrowed files (it only deletes under `dst`). Cloning a
     * hive-partitioned layout is refused: the partition column derives
     * from paths under `src/data`, which a foreign basePath read cannot
-    * reproduce — compact `src` to a flat layout first.
+    * reproduce — rewrite `src` to a flat layout (op="overwrite") first.
     */
   def cloneShallow(spark: SparkSession, src: String, dst: String,
                    version: Int = -1): Int = {
@@ -1690,8 +1720,8 @@ object TxTable {
       s"TxTable: clone target $dst already exists — drop it first")
     require(partColOf(spark, src, v).isEmpty,
       s"TxTable: $src v$v has a hive-partitioned layout — a clone cannot " +
-      "re-derive path partition values across table roots; compact to a " +
-      "flat layout first")
+      "re-derive path partition values across table roots; rewrite it to a " +
+      "flat layout (op=\"overwrite\") first")
     publishOrConflict(fs(spark, dst), dst, None, snapshotOf(spark, src, v)
       .mapFiles(rel => dataPath(src, rel)).copy(version = 1, op = "clone", txn = None))
     1
@@ -2188,33 +2218,78 @@ object TxTable {
       .withColumn("_change", lit("insert")).withColumn("_version", lit(v))
   }
 
-  /** OPTIMIZE: rewrite the current snapshot into ~`targetBytes` files
-    * and publish the result as the next version (op "compact" — a
-    * content-preserving overwrite). Time travel to pre-compaction
-    * versions still works (their files are immutable and untouched)
-    * until `expireVersions` reclaims them.
+  /** OPTIMIZE: rewrite the head's files that [[keptFiles]] keeps for
+    * `where` and that are smaller than `minBytes` into ~`targetBytes`
+    * files; every other file carries by reference (zero IO). Publishes
+    * op "compact", a content-preserving version (`changes()` skips it);
+    * time travel to earlier versions still works until `expireVersions`
+    * reclaims their files. `where` selects whole FILES, never rows: a
+    * file it cannot refute is rewritten whole.
+    *  - Nothing carried (the defaults: the whole snapshot): one
+    *    distributed read→repartition→write of the snapshot, which
+    *    applies the deletion vectors, resets the column mapping (a
+    *    dropped column's data is shed) and keeps the layout by its
+    *    logical column.
+    *  - Something carried (a partition by `cast(p as string) = value`, a
+    *    range of a stats column, the small files after streaming
+    *    ingest by `minBytes`): the selected files are read raw through
+    *    their deletion vectors and re-binned under the parent's physical
+    *    names and layout; carried files keep their skipping entries and
+    *    vectors, and the rebinned ones get the table's declared entries.
+    * The file count is derived from the selected files' bytes, so the
+    * work is selection-sized, never history-sized.
     *
-    * The rewrite is the standard small-file remedy at scale: the data
-    * plane is one distributed read→repartition→write of the CURRENT
-    * snapshot only (never history), and the file count is derived from
-    * the manifest's own byte accounting, so a 100 TB table compacts in
-    * snapshot-sized work with the usual exchange. Returns the new
-    * version.
+    * @return (version, nRewritten, nCarried) — the head unchanged with
+    *         0 rewrites when the rewrite would only rename files: fewer
+    *         than 2 selected files, none borrowed from a clone source
+    *         and none with a deletion vector, and, when nothing is
+    *         carried, no column mapping (Delta's no-op rule: a single
+    *         file gains nothing)
     */
-  def compact(spark: SparkSession, table: String, targetBytes: Long = 128L << 20): Int = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
+  def compact(spark: SparkSession, table: String, where: Column = lit(true),
+              minBytes: Long = Long.MaxValue,
+              targetBytes: Long = 128L << 20): (Int, Int, Int) = {
+    require(minBytes > 0 && targetBytes > 0,
+      s"minBytes/targetBytes must be positive, got ($minBytes, $targetBytes)")
     val v = currentVersion(spark, table)
     require(v >= 1, s"TxTable: nothing to compact at $table")
     val f = fs(spark, table)
-    val totalBytes = filesOf(spark, table, v)
-      .map(rel => f.getFileStatus(new Path(dataPath(table, rel))).getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    // a partitioned layout survives the full rewrite: the fresh files
-    // re-partition by the LOGICAL column (the mapping resets, so
-    // logical == physical afterwards — same rule as the column map)
-    val partLogical = partColOf(spark, table, v).map(logicalOf(colMapOf(spark, table, v), _))
-    commitAs(readVersion(spark, table, v).repartition(nOut), table, v + 1,
-      "compact", partitionBy = partLogical)
+    val all = filesOf(spark, table, v)
+    // the default keeps every file; any other `where` is analyzed first,
+    // so a name the snapshot lacks throws before anything is rewritten
+    val kept =
+      if (where == lit(true)) all.toSet
+      else { analyzed(spark, table, v, where); keptFiles(spark, table, v, where).toSet }
+    val (mine, bytes) = all.filter(kept)
+      .map(rel => rel -> f.getFileStatus(new Path(dataPath(table, rel))).getLen)
+      .filter(_._2 < minBytes).unzip
+    val others = all.filterNot(mine.toSet)
+    val map = colMapOf(spark, table, v)
+    // a borrowed (shallow-clone) file is never a no-op: the rewrite
+    // materializes it under this table
+    if (mine.size < 2 && !mine.exists(_.startsWith("/")) && !hasVectors(spark, table, v, mine) &&
+        (others.nonEmpty || map.isEmpty))
+      return (v, 0, all.size)
+    val nOut = math.max(1L, (bytes.sum + targetBytes - 1) / targetBytes).toInt
+    val nv =
+      if (others.isEmpty)
+        // a partitioned layout survives the full rewrite: the fresh files
+        // re-partition by the LOGICAL column (the mapping resets, so
+        // logical == physical afterwards — same rule as the column map)
+        commitAs(readVersion(spark, table, v).repartition(nOut), table, v + 1,
+          "compact", partitionBy = partColOf(spark, table, v).map(logicalOf(map, _)))
+      else
+        commitAs(morFilter(spark, table, v, rawRead(spark, table, v, mine)).repartition(nOut),
+          table, v + 1, "compact", carryFiles = Some(others), dfIsPhysical = true)
+    (nv, mine.size, others.size)
+  }
+
+  /** Whether a deletion vector of version `v` names any of `files`. */
+  private def hasVectors(spark: SparkSession, table: String, v: Int,
+                         files: Seq[String]): Boolean = {
+    val posd = posDeletesOf(spark, table, v)
+    files.nonEmpty && posd.nonEmpty && !posPairs(spark, table, posd)
+      .filter(col("_graft_pf").isin(files.map(_.split('/').last): _*)).isEmpty
   }
 
   /** HIDDEN transform partitioning (Iceberg's "hidden partitioning"):
@@ -2252,8 +2327,8 @@ object TxTable {
     case _ => sys.error(s"TxTable: not a hidden partition column: $pc")
   }
 
-  /** Driver-side mirror of the transform for point pruning: the
-    * directory value a probe key lands in.
+  /** Driver-side mirror of the transform: the directory value a probe
+    * key lands in ([[keptFiles]] prunes a bucket layout by it).
     */
   private[graft] def hiddenValueOf(pc: String, key: String): String =
     hiddenSpecOf(pc) match {
@@ -2270,27 +2345,15 @@ object TxTable {
     if (h.isEmpty) df else df.drop(h.toIndexedSeq: _*)
   }
 
-  /** HIDDEN-partition point read: files of the ONE partition the
-    * probe key's transform lands in, selected from the manifest list
-    * alone — the caller applies the exact source-column predicate on
-    * the (1/N-sized) result. The bucket analogue of [[readPartition]]:
-    * the user never sees or names the layout column.
-    */
-  def readHiddenPoint(spark: SparkSession, table: String, key: String,
-                      version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else currentVersion(spark, table)
-    val pc = partColOf(spark, table, v).getOrElse(
-      sys.error(s"TxTable: $table v$v has no partitioned layout"))
-    require(hiddenSpecOf(pc).isDefined,
-      s"TxTable: $table is identity-partitioned — use readPartition")
-    val dir = hiddenValueOf(pc, key)
-    readKept(spark, table, v, filesOf(spark, table, v).filter(partValueOf(pc, _).contains(dir)))
-  }
-
   /** PARTITION-RANGE read over the directory values, inclusive both
     * ends — dir values compare lexicographically (ISO days, hex
     * nibbles), so a day-partitioned time-range read plans exactly the
-    * in-range partitions' files from the manifest alone.
+    * in-range partitions' files from the manifest alone. No row filter
+    * applies. A point read of a partition or a bucket is [[scan]] of
+    * `cast(c as string) = value`; a day range is not a [[keptFiles]]
+    * atom, because the day a timestamp probe falls on depends on the
+    * session zone at commit, which the manifest does not record (a
+    * wrong zone would skip files holding matches).
     */
   def readPartitionRange(spark: SparkSession, table: String, lo: String,
                          hi: String, version: Int = -1): DataFrame = {
@@ -2317,92 +2380,6 @@ object TxTable {
   /** Logical name of physical column `p` under a mapping. */
   private def logicalOf(map: Option[Seq[(String, String)]], p: String): String =
     map.flatMap(_.collectFirst { case (n, `p`) => n }).getOrElse(p)
-
-  /** PARTITION-PRUNED READ: [[scan]] for the identity partition
-    * column's string rendering `= value` — the partition's files, chosen
-    * from the manifest file list alone (the hive partition-pruning
-    * effect: a per-partition read plans and reads the partition's files,
-    * never the snapshot).
-    */
-  def readPartition(spark: SparkSession, table: String, value: String,
-                    version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else currentVersion(spark, table)
-    val pc = partColOf(spark, table, v).getOrElse(
-      sys.error(s"TxTable: $table v$v has no partitioned layout — commit with " +
-        "partitionBy, or use scan (value-set skipping)"))
-    require(hiddenSpecOf(pc).isEmpty,
-      s"TxTable: $table uses the hidden layout '$pc' — use readHiddenPoint")
-    scan(spark, table, col(logicalOf(colMapOf(spark, table, v), pc)).cast("string") === value, v)
-  }
-
-  /** PER-PARTITION OPTIMIZE: rewrite ONLY one partition's files into
-    * ~`targetBytes` outputs; every other partition carries by
-    * reference (zero IO). The scheduled maintenance unit for a
-    * partitioned streaming-ingest table — each partition compacts on
-    * its own cadence, and concurrent compaction of DISJOINT partitions
-    * only conflicts at the (retry-able) version CAS, never on data.
-    *
-    * @return (version, nRewritten, nCarried) — version unchanged with
-    *         nRewritten = 0 when the partition has fewer than 2 files
-    */
-  def compactPartition(spark: SparkSession, table: String, value: String,
-                       targetBytes: Long = 128L << 20): (Int, Int, Int) = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val v = currentVersion(spark, table)
-    require(v >= 1, s"TxTable: nothing to compact at $table")
-    val pc = partColOf(spark, table, v).getOrElse(
-      sys.error(s"TxTable: $table v$v has no partitioned layout"))
-    val (mine, others) = filesOf(spark, table, v).partition(partValueOf(pc, _).contains(value))
-    if (mine.size < 2) return (v, 0, others.size)
-    val f = fs(spark, table)
-    val bytes = mine.map(rel => f.getFileStatus(new Path(dataPath(table, rel))).getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val packed = morFilter(spark, table, v,
-        rawRead(spark, table, v, mine))
-      .repartition(nOut)
-    val nv = commitAs(packed, table, v + 1, "compact",
-      carryFiles = Some(others), dfIsPhysical = true)
-    (nv, mine.size, others.size)
-  }
-
-  /** Incremental OPTIMIZE (the real Delta semantic — [[compact]] is
-    * the full-snapshot rewrite): ONLY files under `minBytes` are read
-    * and re-binned into ~`targetBytes` outputs; everything already
-    * well-sized carries by reference. This is what runs on a schedule
-    * against a streaming-ingested table: each micro-batch commit left
-    * a small file, and the nightly OPTIMIZE must not rewrite the
-    * terabytes that are already fine. Content-preserving op "compact"
-    * (dataChange=false — `changes()` skips it); carried files keep
-    * their skipping entries and the rebinned ones get the table's
-    * declared ones; evolved tables rewrite through mergeSchema.
-    *
-    * @return (version, nRewritten, nCarried) — version unchanged with
-    *         nRewritten = 0 when fewer than 2 small files exist (a
-    *         single small file gains nothing; Delta's no-op rule)
-    */
-  def compactSmall(spark: SparkSession, table: String, minBytes: Long,
-                   targetBytes: Long = 128L << 20): (Int, Int, Int) = {
-    require(minBytes > 0 && targetBytes > 0,
-      s"minBytes/targetBytes must be positive, got ($minBytes, $targetBytes)")
-    val v = currentVersion(spark, table)
-    require(v >= 1, s"TxTable: nothing to compact at $table")
-    val f = fs(spark, table)
-    val sized = filesOf(spark, table, v)
-      .map(rel => rel -> f.getFileStatus(new Path(dataPath(table, rel))).getLen)
-    val (small, big) = sized.partition(_._2 < minBytes)
-    if (small.size < 2) return (v, 0, sized.size)
-    val smallBytes = small.map(_._2).sum
-    val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
-    // the rewrite APPLIES merge-on-read deletion vectors (rebinned rows
-    // get new file names and ordinals, outside the per-file scope);
-    // vectors for the carried files ride the carry rule in commitAs
-    val packed = morFilter(spark, table, v,
-        rawRead(spark, table, v, small.map(_._1)))
-      .repartition(nOut)
-    val nv = commitAs(packed, table, v + 1, "compact",
-      carryFiles = Some(big.map(_._1)), dfIsPhysical = true)
-    (nv, small.size, big.size)
-  }
 
   /** Drop the whole table (tests / rebuild-from-scratch pipelines).
     * Invalidates the table's cached snapshots — the same path may be

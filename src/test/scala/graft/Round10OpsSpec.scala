@@ -226,15 +226,15 @@ class Round10OpsSpec extends SparkSpec {
     rd.schema("cat").dataType.typeName shouldBe "string"
     canon(rd) shouldBe canon(df)
     // partition-pruned read: exactly the partition's files, manifest-only
-    val a = TxTable.readPartition(spark, table, "A")
+    val a = TxTable.scan(spark, table, col("cat") === "A")
     canon(a) shouldBe canon(df.filter(col("cat") === "A"))
-    TxTable.readPartition(spark, table, "nope").count() shouldBe 0L
+    TxTable.scan(spark, table, col("cat") === "nope").count() shouldBe 0L
     // appends INHERIT the layout without re-declaring it
     TxTable.commit(Seq((5L, "B", 50.0)).toDF("id", "cat", "price"), table,
       statsCols = Seq("id"))
     TxTable.filesOf(spark, table, 2).diff(files)
       .foreach(_ should startWith ("data/cat=B/"))
-    TxTable.readPartition(spark, table, "B").count() shouldBe 2L
+    TxTable.scan(spark, table, col("cat") === "B").count() shouldBe 2L
     // a layout change on a carrying commit refuses loudly
     val ex = intercept[IllegalArgumentException] {
       TxTable.commit(Seq((6L, "D", 60.0)).toDF("id", "cat", "price"), table,
@@ -263,7 +263,7 @@ class Round10OpsSpec extends SparkSpec {
     // the rebased file kept its partition directory
     TxTable.filesOf(spark, table, 3)
       .filter(_.contains("cat=B")).foreach(_ should include ("data/cat=B/v3_"))
-    TxTable.readPartition(spark, table, "B").count() shouldBe 1L
+    TxTable.scan(spark, table, col("cat") === "B").count() shouldBe 1L
   }
 
   // Per-partition OPTIMIZE: one partition's files rewrite, the rest
@@ -277,7 +277,7 @@ class Round10OpsSpec extends SparkSpec {
     TxTable.commit(Seq((9L, "B", 9.0)).toDF("id", "cat", "price"), table)
     val bFiles = TxTable.filesOf(spark, table, 4).filter(_.contains("cat=B"))
     TxTable.deleteKeysMor(spark, table, "id", Seq(2L).toDF("id"))._2 shouldBe 1L
-    val (nv, nRw, nCarry) = TxTable.compactPartition(spark, table, "A")
+    val (nv, nRw, nCarry) = TxTable.compact(spark, table, col("cat") === "A")
     nRw shouldBe 3
     nCarry shouldBe bFiles.size
     // carried B files are byte-identical references; A re-binned
@@ -286,7 +286,7 @@ class Round10OpsSpec extends SparkSpec {
       canon(Seq((1L, "A", 1.0), (3L, "A", 3.0), (9L, "B", 9.0))
         .toDF("id", "cat", "price"))
     // the folded deletion vector is gone from the compacted partition's read
-    TxTable.readPartition(spark, table, "A").count() shouldBe 2L
+    TxTable.scan(spark, table, col("cat") === "A").count() shouldBe 2L
     // CDC: the compact replays as nothing
     TxTable.changes(spark, table, nv - 1, nv).count() shouldBe 0L
   }
@@ -335,7 +335,7 @@ class Round10OpsSpec extends SparkSpec {
       fullyMatch regex "[0-9a-f]"
     // point read: only the probe's bucket files are planned; result
     // equals the full-scan filter
-    val probe = TxTable.readHiddenPoint(spark, table, "137")
+    val probe = TxTable.scan(spark, table, col("id").cast("string") === "137")
     probe.filter(col("id") === 137L).count() shouldBe 1L
     val bucket = TxTable.hiddenValueOf("_gpt-bucket16-id", "137")
     probe.inputFiles.foreach(f => f should include(s"_gpt-bucket16-id=$bucket"))
@@ -345,13 +345,13 @@ class Round10OpsSpec extends SparkSpec {
     val b9999 = TxTable.hiddenValueOf("_gpt-bucket16-id", "9999")
     TxTable.filesOf(spark, table, 2).diff(files1).foreach(
       _ should startWith(s"data/_gpt-bucket16-id=$b9999/"))
-    TxTable.readHiddenPoint(spark, table, "9999")
+    TxTable.scan(spark, table, col("id").cast("string") === "9999")
       .filter(col("id") === 9999L).count() shouldBe 1L
     // OPTIMIZE re-derives and preserves the hidden layout
-    val cv = TxTable.compact(spark, table)
+    val cv = TxTable.compact(spark, table)._1
     TxTable.partColOf(spark, table, cv) shouldBe Some("_gpt-bucket16-id")
     TxTable.read(spark, table).count() shouldBe 201L
-    TxTable.readHiddenPoint(spark, table, "137")
+    TxTable.scan(spark, table, col("id").cast("string") === "137")
       .filter(col("id") === 137L).count() shouldBe 1L
     // the transform SOURCE column is rename/drop-protected
     an[IllegalArgumentException] should be thrownBy
@@ -601,7 +601,7 @@ class Round10OpsSpec extends SparkSpec {
       (1L to 20L).filterNot(Set(7L, 9L)).toArray
     // a compact MATERIALIZES the clone: borrowed files rewrite into
     // dst's own directory and the content is unchanged
-    val v = TxTable.compact(spark, dst)
+    val v = TxTable.compact(spark, dst)._1
     TxTable.filesOf(spark, dst, v).foreach(f => assert(!f.startsWith("/")))
     TxTable.read(spark, dst).count() shouldBe 18L
     // refusals: existing target, partitioned source

@@ -539,7 +539,7 @@ class Round7bOpsSpec extends SparkSpec {
         table, statsCols = Seq("id"))
     }
     val beforeFiles = TxTable.filesOf(spark, table, 4)
-    val (v, nRw, nCar) = TxTable.compactSmall(spark, table, minBytes = 4096)
+    val (v, nRw, nCar) = TxTable.compact(spark, table, minBytes = 4096)
     v shouldBe 5; nRw shouldBe 3; nCar shouldBe 1
     val after = TxTable.filesOf(spark, table, 5)
     // the big file is the SAME relative path (carried, not rewritten)
@@ -553,7 +553,7 @@ class Round7bOpsSpec extends SparkSpec {
     // no-op rule: a single small file gains nothing
     val t2 = freshTable()
     TxTable.commit(Seq((1L, "a")).toDF("id", "s").coalesce(1), t2)
-    val (v2, n2, _) = TxTable.compactSmall(spark, t2, minBytes = 4096)
+    val (v2, n2, _) = TxTable.compact(spark, t2, minBytes = 4096)
     v2 shouldBe 1; n2 shouldBe 0
   }
 
@@ -631,7 +631,7 @@ class Round7bOpsSpec extends SparkSpec {
       .coalesce(1), table)
     TxTable.commitEvolve(Seq((9001L, "x", "t1")).toDF("id", "s", "tag"), table)
     TxTable.commit(Seq((9002L, "y", "t2")).toDF("id", "s", "tag"), table)
-    val (v, nRw, nCar) = TxTable.compactSmall(spark, table, minBytes = 4096)
+    val (v, nRw, nCar) = TxTable.compact(spark, table, minBytes = 4096)
     nRw shouldBe 2 // the two 1-row files
     nCar shouldBe 1
     val out = TxTable.readVersion(spark, table, v)

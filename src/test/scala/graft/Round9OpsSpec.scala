@@ -236,7 +236,7 @@ class Round9OpsSpec extends SparkSpec {
     TxTable.dropColumn(spark, table, "tag") shouldBe 4
     TxTable.filesOf(spark, table, 4) shouldBe TxTable.filesOf(spark, table, 3)
     TxTable.read(spark, table).columns shouldBe Array("id", "quality")
-    val v5 = TxTable.compact(spark, table)
+    val v5 = TxTable.compact(spark, table)._1
     spark.read.parquet(TxTable.filesOf(spark, table, v5).map(rel => s"$table/$rel"): _*)
       .columns.sorted shouldBe Array("id", "quality")
     TxTable.read(spark, table).select("quality")

@@ -94,7 +94,7 @@ class TxTableSpec extends SparkSpec {
     val table = freshTable()
     TxTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), table) shouldBe 1
     TxTable.commit(Seq((3L, "c")).toDF("id", "s"), table) shouldBe 2
-    TxTable.compact(spark, table) shouldBe 3
+    TxTable.compact(spark, table)._1 shouldBe 3
     TxTable.commit(Seq((9L, "z")).toDF("id", "s"), table, op = "overwrite") shouldBe 4
     def evs(from: Int, to: Int) = TxTable.changes(spark, table, from, to)
       .select("_version", "_change", "id").collect()
@@ -116,7 +116,7 @@ class TxTableSpec extends SparkSpec {
     val df = spark.range(1000).select(col("id"), (col("id") % 7).cast("string").as("s"))
     TxTable.commit(df.repartition(8), table) shouldBe 1
     TxTable.filesOf(spark, table, 1).size shouldBe 8
-    TxTable.compact(spark, table) shouldBe 2 // 1000 tiny rows << targetBytes → 1 file
+    TxTable.compact(spark, table)._1 shouldBe 2 // 1000 tiny rows << targetBytes → 1 file
     TxTable.filesOf(spark, table, 2).size shouldBe 1
     TxTable.opOf(spark, table, 2) shouldBe "compact"
     // content-preserving: same rows before and after
@@ -574,13 +574,13 @@ class TxTableSpec extends SparkSpec {
     TxTable.commit(Seq((1L, "A", 1.0), (2L, "B", 2.0), (3L, "a:b", 3.0)).toDF("id", "cat", "price"),
       part, partitionBy = Some("cat"), statsCols = Seq("id"))
     // an escaped directory name still matches its value
-    TxTable.readPartition(spark, part, "a:b").select("id").collect().map(_.getLong(0)) shouldBe Array(3L)
+    TxTable.scan(spark, part, col("cat") === "a:b").select("id").collect().map(_.getLong(0)) shouldBe Array(3L)
     Seq(
       ("value", flat, TxTable.scan(spark, flat, col("kind") === "c9")),
       ("key", flat, TxTable.readWhereKey(spark, flat, "id", "99")),
       ("range", flat, TxTable.scan(spark, flat, col("id").between(500.0, 600.0))),
       ("null", flat, TxTable.scan(spark, flat, col("x").isNull)),
-      ("partition", part, TxTable.readPartition(spark, part, "Z")),
+      ("partition", part, TxTable.scan(spark, part, col("cat") === "Z")),
       ("partitioned range", part, TxTable.scan(spark, part, col("id").between(500.0, 600.0)))
     ).foreach { case (probe, table, df) =>
       withClue(s"$probe probe: ") {
@@ -755,7 +755,8 @@ class TxTableSpec extends SparkSpec {
       () => TxTable.deleteWhere(spark, table, col("s") === "a"),
       () => TxTable.updateWhere(spark, table, col("nope") === 1, Map("id" -> lit(0L))),
       () => TxTable.updateWhere(spark, table, col("id") === 1L, Map("label" -> upper(col("s")))),
-      () => TxTable.deleteWherePos(spark, table, col("nope").isNull)
+      () => TxTable.deleteWherePos(spark, table, col("nope").isNull),
+      () => TxTable.compact(spark, table, col("s") === "a")
     ).foreach { write =>
       val e = intercept[org.apache.spark.sql.AnalysisException](write())
       e.getCondition should startWith("UNRESOLVED_COLUMN")
@@ -839,7 +840,7 @@ class TxTableSpec extends SparkSpec {
     TxTable.updateWhere(spark, flat, col("event_id").between(32.0, 32.0),
       Map("value" -> lit(1.0)))._2 shouldBe 1
     check("updateWhere")
-    TxTable.compactSmall(spark, flat, minBytes = 1L << 30)._2 should be >= 2
+    TxTable.compact(spark, flat, minBytes = 1L << 30)._2 should be >= 2
     check("compactSmall")
     TxTable.commit(rows(40L to 41L), flat)
     TxTable.compact(spark, flat)
@@ -880,7 +881,7 @@ class TxTableSpec extends SparkSpec {
     TxTable.overwritePartition(spark, part, prows("a", 9L to 12L), "a")
     pcheck("overwritePartition")
     TxTable.commit(prows("b", 13L to 14L), part)
-    TxTable.compactPartition(spark, part, "b")._2 shouldBe 2
+    TxTable.compact(spark, part, col("p") === "b")._2 shouldBe 2
     pcheck("compactPartition")
     TxTable.keptFiles(spark, part, TxTable.currentVersion(spark, part),
       col("id").cast("string") === "13").size shouldBe 1
@@ -919,6 +920,113 @@ class TxTableSpec extends SparkSpec {
         Seq((1L, "a", 1.0)).toDF("id", "p", "x"), "a")
     }
     ex.getMessage should include("not hive-partitioned")
+  }
+
+  test("a bucket16 layout is a keptFiles atom: point reads and the key writers touch only the probe's bucket") {
+    val table = freshTable()
+    TxTable.commit((1L to 400L).map(i => (i, i * 1.0)).toDF("id", "x").repartition(2), table,
+      partitionBy = Some("_gpt-bucket16-id"))
+    val files = TxTable.filesOf(spark, table, 1)
+    def bucket(key: Long) = TxTable.hiddenValueOf("_gpt-bucket16-id", key.toString)
+    def bucketOf(fs: Seq[String], key: Long) =
+      fs.filter(_.startsWith(s"data/_gpt-bucket16-id=${bucket(key)}/"))
+    val mine = bucketOf(files, 137L)
+    mine should not be empty
+    mine.size should be < files.size
+    val key = col("id").cast("string") === "137"
+    TxTable.keptFiles(spark, table, 1, key) shouldBe mine
+    TxTable.keptFiles(spark, table, 1, col("id").cast("string").isin("137", "9")) shouldBe
+      files.filter((mine ++ bucketOf(files, 9L)).toSet)
+    // a numeric comparison is not a string-form probe: no bucket pruning
+    TxTable.keptFiles(spark, table, 1, col("id") === 137L) shouldBe files
+    // copy-on-write delete by the key rewrites the bucket's files only
+    TxTable.deleteWhere(spark, table, key) shouldBe ((2, mine.size, files.size - mine.size))
+    TxTable.read(spark, table).count() shouldBe 399L
+    // the key-set writers read one bucket only: every other file is
+    // moved away while they run, so a read of one would fail
+    val head = TxTable.filesOf(spark, table, 2)
+    val others = head.diff(bucketOf(head, 138L))
+    others should not be empty
+    val present = (1L to 400L).find(k => k > 138L && bucket(k) == bucket(138L)).get
+    val fresh = (1000L to 2000L).find(k => bucket(k) == bucket(138L)).get
+    def away(rel: String, back: Boolean): Unit = {
+      val (at, aside) = (java.nio.file.Paths.get(s"$table/$rel"),
+        java.nio.file.Paths.get(s"$table/$rel.away"))
+      if (back) java.nio.file.Files.move(aside, at) else java.nio.file.Files.move(at, aside)
+    }
+    others.foreach(away(_, back = false))
+    try {
+      TxTable.deleteKeysMor(spark, table, "id", Seq(138L).toDF("id")) shouldBe ((3, 1L))
+      TxTable.appendUnique(Seq((present, 0.0), (fresh, 1.0)).toDF("id", "x"), table, "id") shouldBe
+        ((4, 1L))
+    } finally others.foreach(away(_, back = true))
+    TxTable.read(spark, table).count() shouldBe 399L
+    TxTable.scan(spark, table, col("id").cast("string") === fresh.toString).count() shouldBe 1L
+  }
+
+  test("a bucket layout of a TIMESTAMP column prunes nothing: its directories hashed a zone-dependent string") {
+    val table = freshTable()
+    TxTable.commit((1L to 64L).toDF("k").withColumn("ts", timestamp_seconds(col("k") * 3600L))
+      .repartition(2), table, partitionBy = Some("_gpt-bucket16-ts"))
+    val files = TxTable.filesOf(spark, table, 1)
+    val probe = col("ts").cast("string") === "1970-01-01 07:00:00"
+    TxTable.keptFiles(spark, table, 1, probe) shouldBe files
+    // the same instant rendered under another session zone still finds its row
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try {
+      TxTable.scan(spark, table, col("ts").cast("string") === "1970-01-01 12:30:00")
+        .select("k").collect().map(_.getLong(0)) shouldBe Array(7L)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
+  test("compact materializes borrowed files even when it selects only one") {
+    val src = freshTable()
+    val dst = freshTable()
+    TxTable.commit((1L to 20L).toDF("id").coalesce(1), src)
+    TxTable.cloneShallow(spark, src, dst)
+    TxTable.compact(spark, dst) shouldBe ((2, 1, 0))
+    TxTable.filesOf(spark, dst, 2).foreach(f => assert(!f.startsWith("/")))
+    TxTable.read(spark, dst).count() shouldBe 20L
+    // one borrowed file selected by `where`, one carried
+    val src2 = freshTable()
+    val dst2 = freshTable()
+    Seq(1L, 100L).foreach(i =>
+      TxTable.commit((i to i + 9L).toDF("id").coalesce(1), src2, statsCols = Seq("id")))
+    TxTable.cloneShallow(spark, src2, dst2)
+    TxTable.compact(spark, dst2, col("id") < 50L) shouldBe ((2, 1, 1))
+    TxTable.filesOf(spark, dst2, 2).count(_.startsWith("/")) shouldBe 1
+    TxTable.read(spark, dst2).count() shouldBe 20L
+  }
+
+  test("compact(where) on a stats-declared table rewrites only the kept files and carries the rest with their stats") {
+    val table = freshTable()
+    (0 until 4).foreach { i =>
+      TxTable.commit((1L to 50L).map(k => (100L * i + k, s"s$k")).toDF("id", "s").coalesce(1),
+        table, statsCols = Seq("id"), countRows = true)
+    }
+    val files = TxTable.filesOf(spark, table, 4)
+    val stats4 = TxTable.statsOf(spark, table, 4)
+    val (v, nRw, nCar) = TxTable.compact(spark, table, where = col("id").between(1.0, 150.0))
+    (v, nRw, nCar) shouldBe ((5, 2, 2))
+    val after = TxTable.filesOf(spark, table, 5)
+    after.intersect(files) shouldBe files.drop(2)
+    // the carried files keep their entries verbatim; the rebinned ones get the declared stats
+    TxTable.statsOf(spark, table, 5).filter(e => files.drop(2).contains(e._1)).toSet shouldBe
+      stats4.filter(e => files.drop(2).contains(e._1)).toSet
+    after.diff(files).foreach(f => TxTable.statsOf(spark, table, 5).exists(_._1 == f) shouldBe true)
+    TxTable.keptFiles(spark, table, 5, col("id").between(1.0, 150.0)) shouldBe after.diff(files)
+    TxTable.changes(spark, table, 4, 5).count() shouldBe 0L
+    TxTable.readVersion(spark, table, 5).collect().map(_.getLong(0)).sorted shouldBe
+      TxTable.readVersion(spark, table, 4).collect().map(_.getLong(0)).sorted
+    // one selected file without a deletion vector: a no-op
+    TxTable.compact(spark, table, where = col("id").between(201.0, 250.0)) shouldBe ((5, 0, 3))
+    // one selected file with a deletion vector: rewritten, the deleted row stays deleted
+    TxTable.deleteWherePos(spark, table, col("id").between(301.0, 301.0)) shouldBe ((6, 1L))
+    val (v7, n7, c7) = TxTable.compact(spark, table, where = col("id").between(301.0, 350.0))
+    (v7, n7, c7) shouldBe ((7, 1, 2))
+    TxTable.read(spark, table).count() shouldBe 199L
+    TxTable.metaCount(spark, table) shouldBe 199L
   }
 
   test("null-count skipping is conservative: untracked and mixed files always kept") {
@@ -1000,7 +1108,7 @@ class TxTableSpec extends SparkSpec {
     TxTable.read(spark, morT).filter(col("id") === 130L).count() shouldBe 1L
     // OPTIMIZE folds the deletion vectors away: content identical, sidecars gone
     val before = canon(TxTable.read(spark, morT))
-    val v5 = TxTable.compact(spark, morT)
+    val v5 = TxTable.compact(spark, morT)._1
     TxTable.posDeletesOf(spark, morT, v5) shouldBe empty
     canon(TxTable.read(spark, morT)) shouldBe before
     // vacuum never reclaims a LIVE sidecar; expiry reclaims dead ones
@@ -1080,7 +1188,7 @@ class TxTableSpec extends SparkSpec {
       statsCols = Seq("id"))
     TxTable.read(spark, posT).filter(c("id") === 10L).count() shouldBe 1L
     // OPTIMIZE folds the vectors away: content preserved, posd gone
-    val cv = TxTable.compact(spark, posT)
+    val cv = TxTable.compact(spark, posT)._1
     TxTable.posDeletesOf(spark, posT, cv) shouldBe empty
     TxTable.read(spark, posT).count() shouldBe 60L
     // sidecars are REFERENCED files for vacuum while their manifests
